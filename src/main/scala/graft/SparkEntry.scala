@@ -38,6 +38,23 @@ object SparkEntry {
     tbl(s, dir, "documents").select(col("doc_id"))
       .repartition(s.sparkContext.defaultParallelism)
 
+  /** Shared tail of the byte-route oracle rows: each id's (file name,
+    * container bytes) goes through the REAL ingestion route
+    * (`Ingest.toRawDoc`, `mime` as the explicit-MIME override) and
+    * `Pipeline.extractOne`, and projects to the row every byte oracle reads.
+    */
+  private def byteRoute(s: SparkSession, dir: String, mime: String = "")(
+      file: Long => (String, Array[Byte])): DataFrame = {
+    import s.implicits._
+    docIdsSpread(s, dir).as[Long].map { id =>
+      val (name, bytes) = file(id)
+      val out = Pipeline.extractOne(graft.io.Ingest.toRawDoc(name, bytes, mime))
+      require(out.failure.isEmpty, out.failure)
+      (id, out.title, out.page_count, out.spans.size,
+        out.spans.filter(_.kind == "text").map(_.text).mkString("\n"))
+    }.toDF("doc_id", "title", "page_count", "n_spans", "text_all")
+  }
+
   /** Collision-proof per-sf-dir key for staged fixture paths. String
     * hashCode is 32-bit and unsalted — with build-once markers a collision
     * between two sf dirs in one application would silently reuse the wrong
@@ -713,150 +730,95 @@ object SparkEntry {
       // body, 1-3 list items, a pipe table, a page break on even ids) →
       // Ingest.toRawDoc → Pipeline.extractOne → span stream whose every
       // field the oracle reproduces arithmetically
-      import s.implicits._
-      docIdsSpread(s, dir)
-        .as[Long].map { id =>
-          import graft.extract.DocxExtract._
-          val listItems = (0 until (1 + (id % 3)).toInt).map(k => Para(s"- item-$k"))
-          val blocks = Seq(
-            Para(s"# Heading ${id % 7}"),
-            Para(s"Body alpha ${(id * 3) % 11}")) ++ listItems ++ Seq(
-            Table(s"|Lorem|Ipsum|\n|---|---|\n|${id % 9}|${id % 8}|")) ++
-            (if (id % 2 == 0) Seq(PageBreak, Para(s"Second page text $id")) else Nil)
-          val bytes = buildDocx(s"Doc $id", blocks)
-          val out = graft.pipeline.Pipeline.extractOne(
-            graft.io.Ingest.toRawDoc(s"d$id.docx", bytes))
-          require(out.failure.isEmpty, out.failure)
-          (id, out.title, out.page_count, out.spans.size,
-            out.spans.filter(_.kind == "text").map(_.text).mkString("\n"))
-        }
-        .toDF("doc_id", "title", "page_count", "n_spans", "text_all")
+      byteRoute(s, dir) { id =>
+        import graft.extract.DocxExtract._
+        val listItems = (0 until (1 + (id % 3)).toInt).map(k => Para(s"- item-$k"))
+        val blocks = Seq(
+          Para(s"# Heading ${id % 7}"),
+          Para(s"Body alpha ${(id * 3) % 11}")) ++ listItems ++ Seq(
+          Table(s"|Lorem|Ipsum|\n|---|---|\n|${id % 9}|${id % 8}|")) ++
+          (if (id % 2 == 0) Seq(PageBreak, Para(s"Second page text $id")) else Nil)
+        (s"d$id.docx", buildDocx(s"Doc $id", blocks))
+      }
     }),
     "q_pptx" -> ((s, dir) => {
       // byte-level PPTX through the REAL ingestion route: 1-3 slides per
       // doc (title placeholder + one body paragraph each) → span stream
       // the oracle reproduces arithmetically
-      import s.implicits._
-      docIdsSpread(s, dir)
-        .as[Long].map { id =>
-          import graft.extract.OfficeExtract._
-          val n = 1 + (id % 3).toInt
-          val slides = (1 to n).map { p =>
-            Slide(s"Slide ${id % 5}-$p", Seq(s"Point alpha ${(id + p) % 7}"))
-          }
-          val bytes = buildPptx(s"Deck $id", slides)
-          val out = graft.pipeline.Pipeline.extractOne(
-            graft.io.Ingest.toRawDoc(s"d$id.pptx", bytes))
-          require(out.failure.isEmpty, out.failure)
-          (id, out.title, out.page_count, out.spans.size,
-            out.spans.filter(_.kind == "text").map(_.text).mkString("\n"))
+      byteRoute(s, dir) { id =>
+        import graft.extract.OfficeExtract._
+        val n = 1 + (id % 3).toInt
+        val slides = (1 to n).map { p =>
+          Slide(s"Slide ${id % 5}-$p", Seq(s"Point alpha ${(id + p) % 7}"))
         }
-        .toDF("doc_id", "title", "page_count", "n_spans", "text_all")
+        (s"d$id.pptx", buildPptx(s"Deck $id", slides))
+      }
     }),
     "q_xlsx" -> ((s, dir) => {
       // byte-level XLSX through the REAL ingestion route: two sheets
       // (numeric + inline-string cells, sheet names from the workbook) →
       // heading + pipe-table spans the oracle reproduces arithmetically
-      import s.implicits._
-      docIdsSpread(s, dir)
-        .as[Long].map { id =>
-          import graft.extract.OfficeExtract._
-          val sheets = Seq(
-            ("Data", Seq(
-              Seq("Name", "Value"),
-              Seq(s"item-${id % 4}", s"${id % 9}"),
-              Seq("thing", s"${id % 7}"))),
-            ("Notes", Seq(Seq(s"note-${id % 3}"))))
-          val bytes = buildXlsx(s"Book $id", sheets)
-          val out = graft.pipeline.Pipeline.extractOne(
-            graft.io.Ingest.toRawDoc(s"d$id.xlsx", bytes))
-          require(out.failure.isEmpty, out.failure)
-          (id, out.title, out.page_count, out.spans.size,
-            out.spans.filter(_.kind == "text").map(_.text).mkString("\n"))
-        }
-        .toDF("doc_id", "title", "page_count", "n_spans", "text_all")
+      byteRoute(s, dir) { id =>
+        import graft.extract.OfficeExtract._
+        val sheets = Seq(
+          ("Data", Seq(
+            Seq("Name", "Value"),
+            Seq(s"item-${id % 4}", s"${id % 9}"),
+            Seq("thing", s"${id % 7}"))),
+          ("Notes", Seq(Seq(s"note-${id % 3}"))))
+        (s"d$id.xlsx", buildXlsx(s"Book $id", sheets))
+      }
     }),
     "q_epub" -> ((s, dir) => {
       // EPUB through the REAL ingestion route: OCF container → OPF spine →
       // per-chapter HtmlExtract; 1-3 chapters per doc, each an <h1> plus a
       // body paragraph the oracle reproduces arithmetically
-      import s.implicits._
-      docIdsSpread(s, dir)
-        .as[Long].map { id =>
-          val n = 1 + (id % 3).toInt
-          val chapters = (1 to n).map { p =>
-            s"<html><body><h1>Chapter ${id % 5}-$p</h1>" +
-              s"<p>Alpha body text number ${(id + p) % 9} with enough plain words " +
-              "to pass the content density classifier easily.</p></body></html>"
-          }
-          val bytes = graft.extract.EpubExtract.buildEpub(s"Novel $id", chapters)
-          val out = graft.pipeline.Pipeline.extractOne(
-            graft.io.Ingest.toRawDoc(s"d$id.epub", bytes))
-          require(out.failure.isEmpty, out.failure)
-          (id, out.title, out.page_count, out.spans.size,
-            out.spans.filter(_.kind == "text").map(_.text).mkString("\n"))
+      byteRoute(s, dir) { id =>
+        val n = 1 + (id % 3).toInt
+        val chapters = (1 to n).map { p =>
+          s"<html><body><h1>Chapter ${id % 5}-$p</h1>" +
+            s"<p>Alpha body text number ${(id + p) % 9} with enough plain words " +
+            "to pass the content density classifier easily.</p></body></html>"
         }
-        .toDF("doc_id", "title", "page_count", "n_spans", "text_all")
+        (s"d$id.epub", graft.extract.EpubExtract.buildEpub(s"Novel $id", chapters))
+      }
     }),
     "q_odt" -> ((s, dir) => {
       // ODT through the REAL ingestion route: heading + body + list item +
       // table per doc, every field arithmetic in doc_id
-      import s.implicits._
-      docIdsSpread(s, dir)
-        .as[Long].map { id =>
-          import graft.extract.DocxExtract.{Para, Table}
-          val blocks = Seq(
-            Para(s"# Doc $id heading"),
-            Para(s"Body text ${(id * 5) % 13}"),
-            Para(s"- entry-${id % 4}"),
-            Table(s"|K|V|\n|---|---|\n|k${id % 3}|${id % 6}|"))
-          val bytes = graft.extract.OdtExtract.buildOdt(s"Odt $id", blocks)
-          val out = graft.pipeline.Pipeline.extractOne(
-            graft.io.Ingest.toRawDoc(s"d$id.odt", bytes))
-          require(out.failure.isEmpty, out.failure)
-          (id, out.title, out.page_count, out.spans.size,
-            out.spans.filter(_.kind == "text").map(_.text).mkString("\n"))
-        }
-        .toDF("doc_id", "title", "page_count", "n_spans", "text_all")
+      byteRoute(s, dir) { id =>
+        import graft.extract.DocxExtract.{Para, Table}
+        val blocks = Seq(
+          Para(s"# Doc $id heading"),
+          Para(s"Body text ${(id * 5) % 13}"),
+          Para(s"- entry-${id % 4}"),
+          Table(s"|K|V|\n|---|---|\n|k${id % 3}|${id % 6}|"))
+        (s"d$id.odt", graft.extract.OdtExtract.buildOdt(s"Odt $id", blocks))
+      }
     }),
     "q_rtf" -> ((s, dir) => {
       // RTF through the REAL ingestion route: control-word machine with a
       // decoy fonttbl, \info title, and a \page break on even ids
-      import s.implicits._
-      docIdsSpread(s, dir)
-        .as[Long].map { id =>
-          val paras = Seq(s"Rtf alpha ${id % 8}", s"Second ${(id + 3) % 5}")
-          val breaks: Set[Int] = if (id % 2 == 0) Set(1) else Set.empty
-          val rtf = graft.extract.RtfExtract.buildRtf(s"Rtf $id", paras, breaks)
-          val out = graft.pipeline.Pipeline.extractOne(
-            graft.io.Ingest.toRawDoc(s"d$id.rtf", rtf.getBytes("ISO-8859-1")))
-          require(out.failure.isEmpty, out.failure)
-          (id, out.title, out.page_count, out.spans.size,
-            out.spans.filter(_.kind == "text").map(_.text).mkString("\n"))
-        }
-        .toDF("doc_id", "title", "page_count", "n_spans", "text_all")
+      byteRoute(s, dir) { id =>
+        val paras = Seq(s"Rtf alpha ${id % 8}", s"Second ${(id + 3) % 5}")
+        val breaks: Set[Int] = if (id % 2 == 0) Set(1) else Set.empty
+        val rtf = graft.extract.RtfExtract.buildRtf(s"Rtf $id", paras, breaks)
+        (s"d$id.rtf", rtf.getBytes("ISO-8859-1"))
+      }
     }),
     "q_doc" -> ((s, dir) => {
       // legacy Word binary through the REAL ingestion route: CFB container
       // ([MS-CFB] mini stream) + [MS-DOC] piece table with BOTH piece
       // decodings (CP-1252 + UTF-16LE), SummaryInformation title, a page
       // break before paragraph 2 on id%3==0
-      import s.implicits._
-      docIdsSpread(s, dir)
-        .as[Long].map { id =>
-          val paras = Seq(
-            s"Doc legacy alpha ${id % 9}",
-            s"Mid section ${(id * 3) % 7}",
-            s"Tail words ${(id + 5) % 11}")
-          val breaks = if (id % 3 == 0) Seq(2) else Nil
-          val bytes = graft.extract.DocExtract.buildDoc(s"Word $id", paras, breaks)
-          val out = graft.pipeline.Pipeline.extractOne(
-            graft.io.Ingest.toRawDoc(s"d$id.doc", bytes))
-          require(out.failure.isEmpty, out.failure)
-          (id, out.title, out.page_count, out.spans.size,
-            out.spans.filter(_.kind == "text").map(_.text).mkString("\n"))
-        }
-        .toDF("doc_id", "title", "page_count", "n_spans", "text_all")
+      byteRoute(s, dir) { id =>
+        val paras = Seq(
+          s"Doc legacy alpha ${id % 9}",
+          s"Mid section ${(id * 3) % 7}",
+          s"Tail words ${(id + 5) % 11}")
+        val breaks = if (id % 3 == 0) Seq(2) else Nil
+        (s"d$id.doc", graft.extract.DocExtract.buildDoc(s"Word $id", paras, breaks))
+      }
     }),
     "q_ppt" -> ((s, dir) => {
       // legacy PowerPoint binary through the REAL ingestion route (explicit
@@ -864,41 +826,26 @@ object SparkEntry {
       // record tree, UTF-16 title atoms + low-byte body atoms per slide;
       // id%3==0 stores the text in SlideListWithText (the REAL-PowerPoint
       // placeholder shape) instead of inside the Slide drawings
-      import s.implicits._
-      docIdsSpread(s, dir)
-        .as[Long].map { id =>
-          val n = 1 + (id % 2).toInt
-          val slides = (1 to n).map { p =>
-            (s"Slide ${id % 6}-$p", Seq(s"Bullet ${(id + p) % 4}"))
-          }
-          val bytes = graft.extract.PptExtract.buildPpt(s"Deck $id", slides,
-            viaSlideListWithText = id % 3 == 0)
-          val out = graft.pipeline.Pipeline.extractOne(
-            graft.io.Ingest.toRawDoc(s"d$id.ppt", bytes, "application/vnd.ms-powerpoint"))
-          require(out.failure.isEmpty, out.failure)
-          (id, out.title, out.page_count, out.spans.size,
-            out.spans.filter(_.kind == "text").map(_.text).mkString("\n"))
+      byteRoute(s, dir, "application/vnd.ms-powerpoint") { id =>
+        val n = 1 + (id % 2).toInt
+        val slides = (1 to n).map { p =>
+          (s"Slide ${id % 6}-$p", Seq(s"Bullet ${(id + p) % 4}"))
         }
-        .toDF("doc_id", "title", "page_count", "n_spans", "text_all")
+        val bytes = graft.extract.PptExtract.buildPpt(s"Deck $id", slides,
+          viaSlideListWithText = id % 3 == 0)
+        (s"d$id.ppt", bytes)
+      }
     }),
     "q_ods" -> ((s, dir) => {
       // ODS through the REAL ingestion route: ODF spreadsheet content.xml
       // with repeated-blank-column filler the parser must trim; one page
       // per sheet, XLSX-shaped pipe tables
-      import s.implicits._
-      docIdsSpread(s, dir)
-        .as[Long].map { id =>
-          val sheets = Seq(
-            ("Data", Seq(Seq("K", "V"), Seq(s"k${id % 5}", s"${id % 7}"))),
-            ("Extra", Seq(Seq(s"x${id % 3}"))))
-          val bytes = graft.extract.OdsExtract.buildOds(s"Calc $id", sheets)
-          val out = graft.pipeline.Pipeline.extractOne(
-            graft.io.Ingest.toRawDoc(s"d$id.ods", bytes))
-          require(out.failure.isEmpty, out.failure)
-          (id, out.title, out.page_count, out.spans.size,
-            out.spans.filter(_.kind == "text").map(_.text).mkString("\n"))
-        }
-        .toDF("doc_id", "title", "page_count", "n_spans", "text_all")
+      byteRoute(s, dir) { id =>
+        val sheets = Seq(
+          ("Data", Seq(Seq("K", "V"), Seq(s"k${id % 5}", s"${id % 7}"))),
+          ("Extra", Seq(Seq(s"x${id % 3}"))))
+        (s"d$id.ods", graft.extract.OdsExtract.buildOds(s"Calc $id", sheets))
+      }
     }),
     "q_bib" -> ((s, dir) => {
       // BibTeX through the REAL ingestion route: brace/quote/bare field
@@ -1064,40 +1011,33 @@ object SparkEntry {
       // id%4==3 .xla (BIFF8 again, SST spilled AT the char-data boundary).
       // RK integers (negative range), doubles (integral and fractional),
       // two sheets; title from SummaryInformation / core.xml
-      import s.implicits._
       import graft.extract.XlsExtract
       import graft.extract.XlsExtract.{XlsNum, XlsRkInt, XlsStr}
-      docIdsSpread(s, dir)
-        .as[Long].map { id =>
-          val sheets = Seq(
-            ("Data", Seq(
-              Seq[XlsExtract.XlsCell](XlsStr("Name"), XlsStr("Qty"), XlsStr("Price")),
-              Seq[XlsExtract.XlsCell](XlsStr(s"item-${id % 7}"),
-                XlsRkInt((id % 13).toInt - 3), XlsNum(id % 5 + 0.5)),
-              Seq[XlsExtract.XlsCell](XlsStr(s"thing ${id % 4}"),
-                XlsRkInt((id % 9).toInt), XlsNum((id % 3).toDouble)))),
-            ("Notes", Seq(
-              Seq[XlsExtract.XlsCell](XlsStr(s"nöte ${(id * 3) % 11}")))))
-          val title = s"Ledger $id"
-          val (ext, bytes) = (id % 4) match {
-            case 0 => ("xls", XlsExtract.buildXls(title, sheets, continueSplit = true))
-            case 1 => ("xlsb", graft.extract.XlsbExtract.buildXlsb(title, sheets))
-            case 2 => ("xlam", graft.extract.OfficeExtract.buildXlsx(title,
-              sheets.map { case (n, rows) => (n, rows.map(_.map {
-                case XlsStr(v) => v
-                case XlsRkInt(v) => v.toString
-                case XlsNum(v) => XlsExtract.numText(v)
-                case XlsExtract.XlsBool(v) => if (v) "TRUE" else "FALSE"
-              })) }))
-            case _ => ("xla", XlsExtract.buildXls(title, sheets, continueAtStart = true))
-          }
-          val out = graft.pipeline.Pipeline.extractOne(
-            graft.io.Ingest.toRawDoc(s"d$id.$ext", bytes))
-          require(out.failure.isEmpty, out.failure)
-          (id, out.title, out.page_count, out.spans.size,
-            out.spans.filter(_.kind == "text").map(_.text).mkString("\n"))
+      byteRoute(s, dir) { id =>
+        val sheets = Seq(
+          ("Data", Seq(
+            Seq[XlsExtract.XlsCell](XlsStr("Name"), XlsStr("Qty"), XlsStr("Price")),
+            Seq[XlsExtract.XlsCell](XlsStr(s"item-${id % 7}"),
+              XlsRkInt((id % 13).toInt - 3), XlsNum(id % 5 + 0.5)),
+            Seq[XlsExtract.XlsCell](XlsStr(s"thing ${id % 4}"),
+              XlsRkInt((id % 9).toInt), XlsNum((id % 3).toDouble)))),
+          ("Notes", Seq(
+            Seq[XlsExtract.XlsCell](XlsStr(s"nöte ${(id * 3) % 11}")))))
+        val title = s"Ledger $id"
+        val (ext, bytes) = (id % 4) match {
+          case 0 => ("xls", XlsExtract.buildXls(title, sheets, continueSplit = true))
+          case 1 => ("xlsb", graft.extract.XlsbExtract.buildXlsb(title, sheets))
+          case 2 => ("xlam", graft.extract.OfficeExtract.buildXlsx(title,
+            sheets.map { case (n, rows) => (n, rows.map(_.map {
+              case XlsStr(v) => v
+              case XlsRkInt(v) => v.toString
+              case XlsNum(v) => XlsExtract.numText(v)
+              case XlsExtract.XlsBool(v) => if (v) "TRUE" else "FALSE"
+            })) }))
+          case _ => ("xla", XlsExtract.buildXls(title, sheets, continueAtStart = true))
         }
-        .toDF("doc_id", "title", "page_count", "n_spans", "text_all")
+        (s"d$id.$ext", bytes)
+      }
     }),
     "q_csv" -> ((s, dir) => {
       // delimited text through the REAL ingestion route — csv on even ids

@@ -22,14 +22,12 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * qualified before relativizing, so doc ids are paths relative to `dir` —
   * the reference keys results by relative path, base.py:396-398).
   *
-  * Payload-kind routing mirrors the converter-registry dispatch
-  * (registry.py:58-132): HTML → the boilerplate-strip stage; markdown/plain
-  * text → dialect detection by marker grammar; any other MIME → an
-  * `unsupported` kind whose extraction fails into the lineage failure
-  * channel (the reference's unsupported-MIME error taxonomy). Binary
-  * formats needing byte-level parsers (PDF, Office) are the documented
-  * no-PDF-byte-parsing limitation — on ingestion they surface as failure
-  * rows, never crashes.
+  * Payload-kind routing is the format table's MIME column
+  * ([[graft.extract.Formats]], the converter-registry dispatch,
+  * registry.py:58-132): markdown/plain text → dialect detection by marker
+  * grammar; any MIME without a row → an `unsupported` kind whose
+  * extraction fails into the lineage failure channel (the reference's
+  * unsupported-MIME error taxonomy).
   *
   * Note: files/directories whose names start with `_` or `.` are Spark
   * metadata conventions; they are listed here (parity with pathlib globs)
@@ -296,193 +294,17 @@ object Ingest {
     */
   def toRawDoc(relPath: String, bytes: Array[Byte], mimeOverride: String = ""): RawDoc = {
     val mime = if (mimeOverride.nonEmpty) mimeOverride else mimeOf(relPath)
-    mime match {
-      case "text/html" =>
-        RawDoc(relPath, "html", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.UTF_8), Nil, Nil,
-          source_path = relPath)
-      case "text/markdown" | "text/plain" =>
-        val text = new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-        RawDoc(relPath, detectDialect(text), mime, text, Nil, Nil, source_path = relPath)
-      case "text/x-org" =>
-        // structural org-mode dialect (Pipeline routes through OrgExtract;
-        // reference surface mime_types.py:109,157)
-        RawDoc(relPath, "org", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.UTF_8), Nil, Nil,
-          source_path = relPath)
-      case "text/x-rst" =>
-        // structural rST dialect (Pipeline routes through RstExtract)
-        RawDoc(relPath, "rst", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.UTF_8), Nil, Nil,
-          source_path = relPath)
-      case "application/x-bibtex" | "application/x-biblatex" =>
-        // BibTeX dialect (Pipeline routes through BibtexExtract; in the
-        // reference's pandoc surface, mime_types.py:91,163). biblatex
-        // (mime_types.py:89) shares the @type{key, field=value} grammar
-        RawDoc(relPath, "bibtex", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.UTF_8), Nil, Nil,
-          source_path = relPath)
-      case "application/x-research-info-systems" =>
-        // RIS line-tag bibliography (reference pandoc surface,
-        // mime_types.py:98)
-        RawDoc(relPath, "ris", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.UTF_8), Nil, Nil,
-          source_path = relPath)
-      case "application/csl+json" =>
-        // CSL-JSON bibliography (reference pandoc surface, mime_types.py:83)
-        RawDoc(relPath, "csljson", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.UTF_8), Nil, Nil,
-          source_path = relPath)
-      case "application/x-endnote+xml" =>
-        // EndNote XML bibliography (reference pandoc surface,
-        // mime_types.py:92)
-        RawDoc(relPath, "endnote", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.UTF_8), Nil, Nil,
-          source_path = relPath)
-      case "application/docbook+xml" =>
-        // DocBook XML (reference pandoc surface, mime_types.py:84)
-        RawDoc(relPath, "docbook", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.UTF_8), Nil, Nil,
-          source_path = relPath)
-      case "application/x-fictionbook+xml" =>
-        // FictionBook 2 (reference pandoc surface, mime_types.py:86)
-        RawDoc(relPath, "fb2", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.UTF_8), Nil, Nil,
-          source_path = relPath)
-      case "application/x-jats+xml" =>
-        // JATS article XML (reference pandoc surface, mime_types.py:96)
-        RawDoc(relPath, "jats", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.UTF_8), Nil, Nil,
-          source_path = relPath)
-      case "application/x-opml+xml" =>
-        // OPML outline (reference pandoc surface, mime_types.py:97)
-        RawDoc(relPath, "opml", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.UTF_8), Nil, Nil,
-          source_path = relPath)
-      case "application/x-typst" =>
-        // Typst markup (reference pandoc surface, mime_types.py:99)
-        RawDoc(relPath, "typst", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.UTF_8), Nil, Nil,
-          source_path = relPath)
-      case "text/troff" =>
-        // troff/man macros (reference pandoc surface, mime_types.py:101)
-        RawDoc(relPath, "troff", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.UTF_8), Nil, Nil,
-          source_path = relPath)
-      case "text/x-dokuwiki" =>
-        // DokuWiki markup (reference pandoc surface, mime_types.py:100)
-        RawDoc(relPath, "dokuwiki", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.UTF_8), Nil, Nil,
-          source_path = relPath)
-      case "text/x-mdoc" =>
-        // BSD mdoc macros (reference pandoc surface, mime_types.py:103)
-        RawDoc(relPath, "mdoc", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.UTF_8), Nil, Nil,
-          source_path = relPath)
-      case "text/x-pod" =>
-        // Perl POD (reference pandoc surface, mime_types.py:104)
-        RawDoc(relPath, "pod", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.UTF_8), Nil, Nil,
-          source_path = relPath)
-      case "text/x-commonmark" | "text/x-gfm" | "text/x-markdown" |
-           "text/x-markdown-extra" | "text/x-multimarkdown" =>
-        // markdown dialects in the reference's pandoc surface
-        // (mime_types.py:102-107) ARE markdown — the marker-dialect
-        // detector applies exactly as for text/markdown
-        val text = new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-        RawDoc(relPath, detectDialect(text), mime, text, Nil, Nil, source_path = relPath)
-      case "application/x-latex" =>
-        // LaTeX dialect (Pipeline routes through LatexExtract; in the
-        // reference's pandoc surface, mime_types.py:97,165)
-        RawDoc(relPath, "latex", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.UTF_8), Nil, Nil,
-          source_path = relPath)
-      case "application/x-ipynb+json" =>
-        // Jupyter notebook (Pipeline routes through IpynbExtract; in the
-        // reference's pandoc surface, mime_types.py:93,164)
-        RawDoc(relPath, "ipynb", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.UTF_8), Nil, Nil,
-          source_path = relPath)
-      case "application/pdf" =>
-        // container-level PDF route (Pipeline.extractPdfOne): Latin-1
-        // round-trips the binary payload through RawDoc's text column
-        RawDoc(relPath, "pdf_bytes", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.ISO_8859_1), Nil, Nil,
-          source_path = relPath)
-      case "application/vnd.openxmlformats-officedocument.wordprocessingml.document" =>
-        // byte-level DOCX route (Pipeline.extractDocxOne): ZIP+XML parse
-        RawDoc(relPath, "docx_bytes", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.ISO_8859_1), Nil, Nil,
-          source_path = relPath)
-      case "application/vnd.openxmlformats-officedocument.presentationml.presentation" =>
-        RawDoc(relPath, "pptx_bytes", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.ISO_8859_1), Nil, Nil,
-          source_path = relPath)
-      case "application/vnd.openxmlformats-officedocument.spreadsheetml.sheet" =>
-        RawDoc(relPath, "xlsx_bytes", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.ISO_8859_1), Nil, Nil,
-          source_path = relPath)
-      case "application/epub+zip" =>
-        RawDoc(relPath, "epub_bytes", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.ISO_8859_1), Nil, Nil,
-          source_path = relPath)
-      case "application/vnd.oasis.opendocument.text" =>
-        RawDoc(relPath, "odt_bytes", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.ISO_8859_1), Nil, Nil,
-          source_path = relPath)
-      case "application/rtf" =>
-        RawDoc(relPath, "rtf_bytes", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.ISO_8859_1), Nil, Nil,
-          source_path = relPath)
-      case "application/msword" =>
-        // legacy Word binary route (Pipeline.extractDocOne): CFB + piece table
-        RawDoc(relPath, "doc_bytes", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.ISO_8859_1), Nil, Nil,
-          source_path = relPath)
-      case "application/vnd.ms-powerpoint" =>
-        RawDoc(relPath, "ppt_bytes", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.ISO_8859_1), Nil, Nil,
-          source_path = relPath)
-      case "application/vnd.oasis.opendocument.spreadsheet" =>
-        RawDoc(relPath, "ods_bytes", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.ISO_8859_1), Nil, Nil,
-          source_path = relPath)
-      case "application/vnd.ms-excel" =>
-        // legacy Excel binary route (Pipeline.extractXlsOne): CFB + BIFF8
-        RawDoc(relPath, "xls_bytes", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.ISO_8859_1), Nil, Nil,
-          source_path = relPath)
-      case "application/vnd.ms-excel.sheet.macroEnabled.12" |
-           "application/vnd.ms-excel.addin.macroEnabled.12" =>
-        // .xlsm and .xlam are the XLSX ZIP container plus a vbaProject
-        // part the sheet parser never opens (reference EXCEL_MACRO /
-        // EXCEL_ADDON mime_types.py:21,23) — same route
-        RawDoc(relPath, "xlsx_bytes", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.ISO_8859_1), Nil, Nil,
-          source_path = relPath)
-      case "application/vnd.ms-excel.sheet.binary.macroEnabled.12" =>
-        // .xlsb: [MS-XLSB] BIFF12 records inside the OOXML ZIP
-        // (reference EXCEL_BINARY_2007, mime_types.py:22)
-        RawDoc(relPath, "xlsb_bytes", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.ISO_8859_1), Nil, Nil,
-          source_path = relPath)
-      case "application/vnd.ms-excel.template.macroEnabled.12" =>
-        // .xla: the 97-2003 add-in is a CFB/BIFF8 workbook (reference
-        // EXCEL_TEMPLATE, mime_types.py:23) — legacy BIFF8 route
-        RawDoc(relPath, "xls_bytes", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.ISO_8859_1), Nil, Nil,
-          source_path = relPath)
-      case "text/csv" | "text/tab-separated-values" =>
-        // delimited text (reference converter surface:
-        // llamaparse_provider/provider.py:57-58) → one pipe table
-        RawDoc(relPath, if (mime == "text/csv") "csv" else "tsv", mime,
-          new String(bytes, java.nio.charset.StandardCharsets.UTF_8), Nil, Nil,
-          source_path = relPath)
-      case other =>
-        // no byte-level parser for this format in-engine: surfaces as a
-        // failure row in extraction lineage (reference raises on
-        // unsupported MIME, utils.py:49-77 — here it is an error ROW)
-        RawDoc(relPath, s"unsupported:$other", other, "", Nil, Nil, source_path = relPath)
+    graft.extract.Formats.forMime(mime) match {
+      case Some(f) =>
+        val payload = f.decode(bytes)
+        // markdown MIMEs route to the provider dialect their markers show
+        val kind = if (f.kind == "md_plain") detectDialect(payload) else f.kind
+        RawDoc(relPath, kind, mime, payload, Nil, Nil, source_path = relPath)
+      case None =>
+        // no in-engine converter for this format: surfaces as a failure
+        // row in extraction lineage (reference raises on unsupported MIME,
+        // utils.py:49-77 — here it is an error ROW)
+        RawDoc(relPath, s"unsupported:$mime", mime, "", Nil, Nil, source_path = relPath)
     }
   }
 }

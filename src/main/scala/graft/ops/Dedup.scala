@@ -205,14 +205,16 @@ object Dedup {
       textCol: String = "text", idCol: String = "doc_id"): DataFrame =
     // round 5: the prefix path now carries the PPJoin POSITIONAL filter,
     // which bounds candidate emission at low thresholds too — measured
-    // (ProfJac, sf0.1 driver-row config): t=0.18 2.3s vs 3.7s count-agg,
-    // t=0.05 2.8s vs 3.6s — so it is the single production path at every
-    // threshold; the count-aggregation path remains as the independent
-    // second implementation that DedupPathsSpec checks equality against.
+    // (sf0.1, the SparkEntry row config, both paths timed through
+    // jaccardPairsVia): t=0.18 2.3s vs 3.7s count-agg, t=0.05 2.8s vs
+    // 3.6s — so it is the single production path at every threshold; the
+    // count-aggregation path remains as the independent second
+    // implementation that DedupPathsSpec checks equality against.
     jaccardPairsVia(docs, threshold, shingleN, maxDocFreq, textCol, idCol,
       usePrefix = true)
 
-  /** Path-forced variant (DedupPathsSpec equality + ProfJac profiling):
+  /** Path-forced variant (DedupPathsSpec equality; also the profiling hook
+    * behind the prefix-vs-count-agg timings above):
     * both paths produce the identical result set at ANY threshold.
     */
   private[graft] def jaccardPairsVia(docs: DataFrame, threshold: Double,

@@ -1,8 +1,7 @@
 package graft.pipeline
 
 import graft.chunk.Chunkers
-import graft.extract.{HtmlExtract, Normalize, PdfLayout}
-import graft.md.Markdown
+import graft.extract.Formats
 import graft.model._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -70,444 +69,49 @@ object Pipeline {
 
   private def extOf(mime: String): String = MimeToExt.getOrElse(mime, "bin")
 
-  /** Pure per-row extraction: route by payload kind to the matching stage.
-    * Never throws — failures surface in the `failure` column for lineage.
+  /** Pure per-row extraction: convert through the format table
+    * ([[graft.extract.Formats]]), then the one Document assembly every kind
+    * shares. Never throws — failures surface in the `failure` column for
+    * lineage: a converter's `Left` verbatim, an exception (including an
+    * unknown kind) as `"<exception class>: <message>"`.
     *
     * Document assembly mirrors converters/base.py:204-223: title = converter
-    * title (HTML <title>) else the source filename stem; sidecar media
-    * payloads decoded from the source where the source embeds them (data-URI
-    * path); cost metadata injected when the modelled provider has a price.
+    * title else the source filename stem; ingested docs carry EXPLICIT
+    * real-file provenance (RawDoc.source_path set by Ingest, keyed by
+    * relative path like the reference, base.py:396-398), table-borne docs
+    * the synthetic:// provenance and their doc_id as stem (base.py:285);
+    * cost metadata injected when the modelled provider has a price.
     */
   def extractOne(r: RawDoc): ExtractOut =
     try {
-      if (r.payload_kind == "pdf_bytes") return extractPdfOne(r)
-      if (r.payload_kind == "docx_bytes") return extractDocxOne(r)
-      if (r.payload_kind == "pptx_bytes") return extractPptxOne(r)
-      if (r.payload_kind == "xlsx_bytes") return extractXlsxOne(r)
-      if (r.payload_kind == "epub_bytes") return extractEpubOne(r)
-      if (r.payload_kind == "odt_bytes") return extractOdtOne(r)
-      if (r.payload_kind == "rtf_bytes") return extractRtfOne(r)
-      if (r.payload_kind == "doc_bytes") return extractDocOne(r)
-      if (r.payload_kind == "ppt_bytes") return extractPptOne(r)
-      if (r.payload_kind == "ods_bytes") return extractOdsOne(r)
-      if (r.payload_kind == "xls_bytes") return extractXlsOne(r)
-      if (r.payload_kind == "xlsb_bytes") return extractXlsbOne(r)
-      val (spans, images, convTitle) = r.payload_kind match {
-        case "html" =>
-          val e = HtmlExtract.extract(r.raw); (e.spans, e.images, e.title)
-        case "pdf_layout" =>
-          val l = PdfLayout.layout(r.elements); (l.spans, l.images, "")
-        case "rst" =>
-          // structural rST → markdown, then the plain-markdown span grammar
-          val n = Normalize.dialect("md_plain",
-            graft.extract.RstExtract.toMarkdown(r.raw), r.pages)
-          (n.spans, n.images, "")
-        case "org" =>
-          // structural org-mode → markdown (headlines, blocks, tables)
-          val n = Normalize.dialect("md_plain",
-            graft.extract.OrgExtract.toMarkdown(r.raw), r.pages)
-          (n.spans, n.images, "")
-        case "bibtex" =>
-          // BibTeX entries → one markdown reference-list block
-          val n = Normalize.dialect("md_plain",
-            graft.extract.BibtexExtract.toMarkdown(r.raw), r.pages)
-          (n.spans, n.images, "")
-        case "ris" =>
-          // RIS line-tag bibliography → the shared reference-list shape
-          val n = Normalize.dialect("md_plain",
-            graft.extract.RisExtract.toMarkdown(r.raw), r.pages)
-          (n.spans, n.images, "")
-        case "csljson" =>
-          // CSL-JSON bibliography → the shared reference-list shape
-          val n = Normalize.dialect("md_plain",
-            graft.extract.CslJsonExtract.toMarkdown(r.raw), r.pages)
-          (n.spans, n.images, "")
-        case "endnote" =>
-          // EndNote XML bibliography → the shared reference-list shape
-          val n = Normalize.dialect("md_plain",
-            graft.extract.EndnoteExtract.toMarkdown(r.raw), r.pages)
-          (n.spans, n.images, "")
-        case "docbook" =>
-          // DocBook XML subset → markdown (sections, lists, verbatim)
-          val n = Normalize.dialect("md_plain",
-            graft.extract.DocbookExtract.toMarkdown(r.raw), r.pages)
-          (n.spans, n.images, "")
-        case "fb2" =>
-          // FictionBook 2 subset → markdown (bodies, poems, cites)
-          val n = Normalize.dialect("md_plain",
-            graft.extract.Fb2Extract.toMarkdown(r.raw), r.pages)
-          (n.spans, n.images, "")
-        case "jats" =>
-          // JATS article subset → markdown (front matter, secs, lists)
-          val n = Normalize.dialect("md_plain",
-            graft.extract.JatsExtract.toMarkdown(r.raw), r.pages)
-          (n.spans, n.images, "")
-        case "opml" =>
-          // OPML outline → one nested markdown list
-          val n = Normalize.dialect("md_plain",
-            graft.extract.OpmlExtract.toMarkdown(r.raw), r.pages)
-          (n.spans, n.images, "")
-        case "typst" =>
-          // Typst markup subset → markdown
-          val n = Normalize.dialect("md_plain",
-            graft.extract.TypstExtract.toMarkdown(r.raw), r.pages)
-          (n.spans, n.images, "")
-        case "troff" =>
-          // man(7) macro subset → markdown
-          val n = Normalize.dialect("md_plain",
-            graft.extract.TroffExtract.toMarkdown(r.raw), r.pages)
-          (n.spans, n.images, "")
-        case "dokuwiki" =>
-          // DokuWiki syntax subset → markdown
-          val n = Normalize.dialect("md_plain",
-            graft.extract.DokuwikiExtract.toMarkdown(r.raw), r.pages)
-          (n.spans, n.images, "")
-        case "mdoc" =>
-          // mdoc(7) semantic macro subset → markdown
-          val n = Normalize.dialect("md_plain",
-            graft.extract.MdocExtract.toMarkdown(r.raw), r.pages)
-          (n.spans, n.images, "")
-        case "pod" =>
-          // perlpod subset → markdown
-          val n = Normalize.dialect("md_plain",
-            graft.extract.PodExtract.toMarkdown(r.raw), r.pages)
-          (n.spans, n.images, "")
-        case "latex" =>
-          // LaTeX subset → markdown (headings, lists, verbatim, tabular)
-          val n = Normalize.dialect("md_plain",
-            graft.extract.LatexExtract.toMarkdown(r.raw), r.pages)
-          (n.spans, n.images, "")
-        case "ipynb" =>
-          // Jupyter notebook JSON → markdown (cells + fenced outputs)
-          val n = Normalize.dialect("md_plain",
-            graft.extract.IpynbExtract.toMarkdown(r.raw), r.pages)
-          (n.spans, n.images, "")
-        case "csv" | "tsv" =>
-          // RFC 4180 delimited text → one pipe table (spreadsheet shape)
-          val md = graft.extract.CsvExtract.toTableMd(
-            r.raw, if (r.payload_kind == "csv") ',' else '\t')
-          val spans =
-            if (md.isEmpty) Nil
-            else Seq(graft.model.Span(graft.model.SpanKind.Text, md, "", 0))
-          (spans, Nil, "")
-        case k =>
-          val n = Normalize.dialect(k, r.raw, r.pages); (n.spans, n.images, "")
+      Formats.convert(r) match {
+        case Left(err) => ExtractOut(r.doc_id, Nil, r.mime_type, 0, err)
+        case Right(c) =>
+          val (sourcePath, stem) =
+            if (r.source_path.isEmpty)
+              (s"synthetic://${r.payload_kind}/${r.doc_id}.${extOf(r.mime_type)}", r.doc_id)
+            else {
+              val name = r.source_path.substring(r.source_path.lastIndexOf('/') + 1)
+              (r.source_path,
+                if (name.lastIndexOf('.') > 0) name.substring(0, name.lastIndexOf('.')) else name)
+            }
+          val metadata = KindToProvider.get(r.payload_kind)
+            .flatMap(p => graft.ops.DocOps.PricePerPage.get(p)).fold(c.metadata) { price =>
+              val cost = java.math.BigDecimal.valueOf(price)
+                .multiply(java.math.BigDecimal.valueOf(c.pageCount.toLong))
+              c.metadata ++ Map(
+                "conversion_cost_usd" -> cost.stripTrailingZeros.toPlainString,
+                "price_per_page_usd" -> java.math.BigDecimal.valueOf(price).toPlainString,
+                "pages_processed" -> c.pageCount.toString)
+            }
+          ExtractOut(r.doc_id, c.spans, r.mime_type, c.pageCount, "",
+            title = if (c.title.nonEmpty) c.title else stem,
+            source_path = sourcePath, media = c.media, metadata = metadata)
       }
-      val media = images.map { img =>
-        val bytes =
-          if (img.content_b64.nonEmpty)
-            try java.util.Base64.getDecoder.decode(img.content_b64)
-            catch { case _: IllegalArgumentException => Array.emptyByteArray }
-          else Array.emptyByteArray
-        MediaItem(img.filename, img.mime_type, bytes)
-      }
-      // ingested docs carry EXPLICIT real-file provenance (RawDoc.source_path
-      // set by Ingest, keyed by relative path like the reference,
-      // base.py:396-398); table-borne docs get the synthetic:// provenance.
-      // Title fallback = source filename stem (base.py:285).
-      val sourcePath =
-        if (r.source_path.nonEmpty) r.source_path
-        else s"synthetic://${r.payload_kind}/${r.doc_id}.${extOf(r.mime_type)}"
-      val stem =
-        if (r.source_path.isEmpty) r.doc_id
-        else {
-          val name = r.source_path.substring(r.source_path.lastIndexOf('/') + 1)
-          if (name.lastIndexOf('.') > 0) name.substring(0, name.lastIndexOf('.')) else name
-        }
-      val pageCount = Markdown.pageCount(spans)
-      val metadata: Map[String, String] =
-        KindToProvider.get(r.payload_kind)
-          .flatMap(p => graft.ops.DocOps.PricePerPage.get(p)).fold(Map.empty[String, String]) { price =>
-            val cost = java.math.BigDecimal.valueOf(price)
-              .multiply(java.math.BigDecimal.valueOf(pageCount.toLong))
-            Map(
-              "conversion_cost_usd" -> cost.stripTrailingZeros.toPlainString,
-              "price_per_page_usd" -> java.math.BigDecimal.valueOf(price).toPlainString,
-              "pages_processed" -> pageCount.toString)
-          }
-      ExtractOut(r.doc_id, spans, r.mime_type, pageCount, "",
-        title = if (convTitle.nonEmpty) convTitle else stem,
-        source_path = sourcePath, media = media, metadata = metadata)
     } catch {
       case e: Exception =>
         ExtractOut(r.doc_id, Nil, r.mime_type, 0, s"${e.getClass.getSimpleName}: ${e.getMessage}")
     }
-
-  /** Content-real extraction for ingested PDF bytes: [[graft.extract
-    * .PdfBytes]] container parse for structure (page count, Info title,
-    * dims, encryption flag) plus the [[graft.extract.PdfText]]
-    * content-stream interpreter for the page TEXT — each page emits its
-    * page_break marker followed by one text span per assembled paragraph
-    * (reading-order lines merged on leading/size steps). Byte-extractable
-    * image XObjects (JPEG/JPX passthrough, Flate→PNG) are spliced into the
-    * page's reading order at their device-space y as image spans + img-K
-    * media items (CCITT G4 scans decode too); images needing codecs the
-    * container lacks (JBIG2, G3)
-    * keep interpreter placeholders only — a media span without a payload
-    * would break the sidecar contract (documented bound, not a fake).
-    * A locked PDF is a successful row with page_count 0
-    * (the reference's basic encrypted shape); a corrupt one is a failure
-    * row; a structure-parseable file whose content streams fail to
-    * interpret degrades to the page_break skeleton with the error recorded
-    * in metadata.
-    */
-  private def extractPdfOne(r: RawDoc): ExtractOut = {
-    val bytes = r.raw.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-    graft.extract.PdfBytes.pdfInfo(bytes) match {
-      case Right(info) =>
-        val (pages: Seq[graft.extract.PdfText.PageContent], textError: String) =
-          if (info.isEncrypted || info.pageCount == 0) (Nil, "")
-          else graft.extract.PdfText.extract(bytes) match {
-            case Right(ps) => (ps, "")
-            case Left(err) => (Nil, err)
-          }
-        // media sidecar + spans: byte-extractable image XObjects (JPEG
-        // passthrough / PNG re-encode) become img-K items SPLICED into
-        // reading order by their device-space y within the page — the
-        // reference's converters interleave images at layout position
-        // (test_output.ambr:49) — so img-K numbering follows the final
-        // position-derived order, not raw encounter order; non-extractable
-        // images stay interpreter placeholders only
-        val media = scala.collection.mutable.ArrayBuffer[MediaItem]()
-        val spans = {
-          val out = scala.collection.mutable.ArrayBuffer[Span]()
-          val allLines = pages.flatMap(_.lines) // document-wide body-size basis
-          (1 to info.pageCount).foreach { i =>
-            out += Span(graft.model.SpanKind.PageBreak, s"""{"next_page":$i}""", "", out.length)
-            pages.lift(i - 1).foreach { p =>
-              val paras: Seq[(Double, Either[String, graft.extract.PdfText.ImageRef])] =
-                graft.extract.PdfText.markdownBlocksWithY(p.lines, allLines)
-                  .map { case (t, y) => (t.trim, y) }
-                  .collect { case (t, y) if t.nonEmpty => (y, Left(t)) }
-              val imgs: Seq[(Double, Either[String, graft.extract.PdfText.ImageRef])] =
-                p.images.filter(_.data.nonEmpty).map(im => (im.y, Right(im)))
-              // stable sort: at equal y, text (listed first) precedes images
-              (paras ++ imgs).sortBy(-_._1).foreach {
-                case (_, Left(text)) =>
-                  out += Span(graft.model.SpanKind.Text, text, "", out.length)
-                case (_, Right(im)) =>
-                  val ext = im.mime match {
-                    case "image/jpeg" => "jpeg"
-                    case "image/jp2" => "jp2"
-                    case _ => "png"
-                  }
-                  val filename = s"img-${media.length}.$ext"
-                  media += MediaItem(filename, im.mime, im.data)
-                  out += Span(graft.model.SpanKind.Image,
-                    filename.substring(0, filename.lastIndexOf('.')), filename, out.length)
-              }
-            }
-          }
-          out.toSeq
-        }
-        val name = r.source_path.substring(r.source_path.lastIndexOf('/') + 1)
-        val stem =
-          if (name.lastIndexOf('.') > 0) name.substring(0, name.lastIndexOf('.')) else name
-        val metadata = Map(
-          "pdf_file_size" -> info.fileSize.toString,
-          "pdf_encrypted" -> info.isEncrypted.toString) ++
-          info.pageDims.headOption.map(d => Map(
-            "pdf_width0" -> d.width.toString,
-            "pdf_height0" -> d.height.toString)).getOrElse(Map.empty) ++
-          (if (textError.nonEmpty) Map("pdf_text_error" -> textError) else Map.empty)
-        ExtractOut(r.doc_id, spans, r.mime_type, info.pageCount, "",
-          title = if (info.title.nonEmpty) info.title else stem,
-          source_path = r.source_path, media = media.toSeq, metadata = metadata)
-      case Left(err) =>
-        ExtractOut(r.doc_id, Nil, r.mime_type, 0, err)
-    }
-  }
-
-  /** Byte-level DOCX extraction ([[graft.extract.DocxExtract]]: JDK ZIP +
-    * StAX over word/document.xml) — headings/lists/tables/page-breaks in
-    * the markdown span grammar, dc:title from docProps/core.xml with the
-    * filename-stem fallback. Malformed files are failure rows.
-    */
-  private def extractDocxOne(r: RawDoc): ExtractOut = {
-    val bytes = r.raw.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-    graft.extract.DocxExtract.extract(bytes) match {
-      case Right(doc) =>
-        val spans = graft.extract.DocxExtract.toSpans(doc)
-        val name = r.source_path.substring(r.source_path.lastIndexOf('/') + 1)
-        val stem =
-          if (name.lastIndexOf('.') > 0) name.substring(0, name.lastIndexOf('.')) else name
-        ExtractOut(r.doc_id, spans, r.mime_type, doc.pageCount, "",
-          title = if (doc.title.nonEmpty) doc.title else stem,
-          source_path = r.source_path, media = doc.media,
-          metadata = Map("docx_blocks" -> doc.blocks.size.toString))
-      case Left(err) =>
-        ExtractOut(r.doc_id, Nil, r.mime_type, 0, err)
-    }
-  }
-
-  /** Byte-level PPTX extraction ([[graft.extract.OfficeExtract]]): one page
-    * per slide, title placeholders as headings. Failure rows on malformed
-    * archives, like every byte route.
-    */
-  private def extractPptxOne(r: RawDoc): ExtractOut = {
-    val bytes = r.raw.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-    graft.extract.OfficeExtract.extractPptx(bytes) match {
-      case Right(doc) =>
-        val spans = graft.extract.OfficeExtract.pptxSpans(doc)
-        ExtractOut(r.doc_id, spans, r.mime_type, doc.slides.size, "",
-          title = if (doc.title.nonEmpty) doc.title else stemOf(r.source_path),
-          source_path = r.source_path, media = doc.media,
-          metadata = Map("pptx_slides" -> doc.slides.size.toString))
-      case Left(err) => ExtractOut(r.doc_id, Nil, r.mime_type, 0, err)
-    }
-  }
-
-  /** Byte-level XLSX extraction: one page per sheet, each a heading + pipe
-    * table (shared and inline strings resolved, sparse refs padded).
-    */
-  private def extractXlsxOne(r: RawDoc): ExtractOut = {
-    val bytes = r.raw.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-    graft.extract.OfficeExtract.extractXlsx(bytes) match {
-      case Right(doc) =>
-        val spans = graft.extract.OfficeExtract.xlsxSpans(doc)
-        ExtractOut(r.doc_id, spans, r.mime_type, doc.sheets.size, "",
-          title = if (doc.title.nonEmpty) doc.title else stemOf(r.source_path),
-          source_path = r.source_path, media = Nil,
-          metadata = Map("xlsx_sheets" -> doc.sheets.size.toString))
-      case Left(err) => ExtractOut(r.doc_id, Nil, r.mime_type, 0, err)
-    }
-  }
-
-  /** Legacy Excel binary extraction ([[graft.extract.XlsExtract]]): CFB
-    * container + [MS-XLS] BIFF8 records; the XLSX sheet→pipe-table shape,
-    * title from the SummaryInformation property set.
-    */
-  private def extractXlsOne(r: RawDoc): ExtractOut = {
-    val bytes = r.raw.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-    graft.extract.XlsExtract.extract(bytes) match {
-      case Right(doc) =>
-        val spans = graft.extract.OfficeExtract.xlsxSpans(doc)
-        ExtractOut(r.doc_id, spans, r.mime_type, doc.sheets.size, "",
-          title = if (doc.title.nonEmpty) doc.title else stemOf(r.source_path),
-          source_path = r.source_path, media = Nil,
-          metadata = Map("xls_sheets" -> doc.sheets.size.toString))
-      case Left(err) => ExtractOut(r.doc_id, Nil, r.mime_type, 0, err)
-    }
-  }
-
-  /** Excel Binary 2007 extraction ([[graft.extract.XlsbExtract]]):
-    * [MS-XLSB] BIFF12 records in the OOXML ZIP → the XLSX sheet shape.
-    */
-  private def extractXlsbOne(r: RawDoc): ExtractOut = {
-    val bytes = r.raw.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-    graft.extract.XlsbExtract.extract(bytes) match {
-      case Right(doc) =>
-        val spans = graft.extract.OfficeExtract.xlsxSpans(doc)
-        ExtractOut(r.doc_id, spans, r.mime_type, doc.sheets.size, "",
-          title = if (doc.title.nonEmpty) doc.title else stemOf(r.source_path),
-          source_path = r.source_path, media = Nil,
-          metadata = Map("xlsb_sheets" -> doc.sheets.size.toString))
-      case Left(err) => ExtractOut(r.doc_id, Nil, r.mime_type, 0, err)
-    }
-  }
-
-  /** EPUB extraction ([[graft.extract.EpubExtract]]): OCF container walk,
-    * spine order, each XHTML chapter through the HtmlExtract
-    * boilerplate-strip; one page per chapter.
-    */
-  private def extractEpubOne(r: RawDoc): ExtractOut = {
-    val bytes = r.raw.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-    graft.extract.EpubExtract.extract(bytes) match {
-      case Right(doc) =>
-        ExtractOut(r.doc_id, doc.spans, r.mime_type, doc.chapters.size, "",
-          title = if (doc.title.nonEmpty) doc.title else stemOf(r.source_path),
-          source_path = r.source_path, media = doc.media,
-          metadata = Map("epub_chapters" -> doc.chapters.size.toString))
-      case Left(err) => ExtractOut(r.doc_id, Nil, r.mime_type, 0, err)
-    }
-  }
-
-  /** ODT extraction ([[graft.extract.OdtExtract]]): content.xml headings/
-    * lists/tables + Pictures media lift, dc:title from meta.xml.
-    */
-  private def extractOdtOne(r: RawDoc): ExtractOut = {
-    val bytes = r.raw.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-    graft.extract.OdtExtract.extract(bytes) match {
-      case Right(doc) =>
-        ExtractOut(r.doc_id, graft.extract.OdtExtract.toSpans(doc), r.mime_type,
-          doc.pageCount, "",
-          title = if (doc.title.nonEmpty) doc.title else stemOf(r.source_path),
-          source_path = r.source_path, media = doc.media,
-          metadata = Map("odt_blocks" -> doc.blocks.size.toString))
-      case Left(err) => ExtractOut(r.doc_id, Nil, r.mime_type, 0, err)
-    }
-  }
-
-  /** RTF extraction ([[graft.extract.RtfExtract]]): control-word state
-    * machine — paragraphs, \page breaks, \info title.
-    */
-  private def extractRtfOne(r: RawDoc): ExtractOut = {
-    val bytes = r.raw.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-    graft.extract.RtfExtract.extract(bytes) match {
-      case Right(doc) =>
-        ExtractOut(r.doc_id, graft.extract.RtfExtract.toSpans(doc), r.mime_type,
-          doc.pageCount, "",
-          title = if (doc.title.nonEmpty) doc.title else stemOf(r.source_path),
-          source_path = r.source_path, media = Nil,
-          metadata = Map("rtf_paragraphs" -> doc.paragraphs.size.toString))
-      case Left(err) => ExtractOut(r.doc_id, Nil, r.mime_type, 0, err)
-    }
-  }
-
-  /** Legacy Word binary extraction ([[graft.extract.DocExtract]]): CFB
-    * container + [MS-DOC] piece table; paragraphs and page breaks in the
-    * RTF-equivalent shape, title from the SummaryInformation property set.
-    */
-  private def extractDocOne(r: RawDoc): ExtractOut = {
-    val bytes = r.raw.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-    graft.extract.DocExtract.extract(bytes) match {
-      case Right(doc) =>
-        val spans = graft.extract.RtfExtract.toSpans(
-          graft.extract.RtfExtract.RtfDoc(doc.title, doc.paragraphs, doc.pageBreaks))
-        ExtractOut(r.doc_id, spans, r.mime_type, doc.pageCount, "",
-          title = if (doc.title.nonEmpty) doc.title else stemOf(r.source_path),
-          source_path = r.source_path, media = Nil,
-          metadata = Map("doc_paragraphs" -> doc.paragraphs.size.toString))
-      case Left(err) => ExtractOut(r.doc_id, Nil, r.mime_type, 0, err)
-    }
-  }
-
-  /** Legacy PowerPoint binary extraction ([[graft.extract.PptExtract]]):
-    * CFB + [MS-PPT] record tree; one page per Slide container.
-    */
-  private def extractPptOne(r: RawDoc): ExtractOut = {
-    val bytes = r.raw.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-    graft.extract.PptExtract.extract(bytes) match {
-      case Right(doc) =>
-        ExtractOut(r.doc_id, graft.extract.PptExtract.toSpans(doc), r.mime_type,
-          doc.slides.size, "",
-          title = if (doc.title.nonEmpty) doc.title else stemOf(r.source_path),
-          source_path = r.source_path, media = Nil,
-          metadata = Map("ppt_slides" -> doc.slides.size.toString))
-      case Left(err) => ExtractOut(r.doc_id, Nil, r.mime_type, 0, err)
-    }
-  }
-
-  /** ODS extraction ([[graft.extract.OdsExtract]]): one page per
-    * table:table sheet, each a `## name` heading + pipe table.
-    */
-  private def extractOdsOne(r: RawDoc): ExtractOut = {
-    val bytes = r.raw.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-    graft.extract.OdsExtract.extract(bytes) match {
-      case Right(doc) =>
-        ExtractOut(r.doc_id, graft.extract.OdsExtract.toSpans(doc), r.mime_type,
-          doc.sheets.size, "",
-          title = if (doc.title.nonEmpty) doc.title else stemOf(r.source_path),
-          source_path = r.source_path, media = Nil,
-          metadata = Map("ods_sheets" -> doc.sheets.size.toString))
-      case Left(err) => ExtractOut(r.doc_id, Nil, r.mime_type, 0, err)
-    }
-  }
-
-  private def stemOf(sourcePath: String): String = {
-    val name = sourcePath.substring(sourcePath.lastIndexOf('/') + 1)
-    if (name.lastIndexOf('.') > 0) name.substring(0, name.lastIndexOf('.')) else name
-  }
 
   /** The extract stage. `repartitionTo` forces uniform task sizing before the
     * heavy map — on a cluster this is the explicit shuffle that breaks up

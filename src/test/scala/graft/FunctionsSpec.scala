@@ -112,71 +112,4 @@ class FunctionsSpec extends AnyFunSuite {
     assert(byName("portable_simhash60")(Seq(arrL)).checkInputDataTypes().isSuccess)
     assert(byName("portable_hyperplane_bucket")(Seq(arrF, k)).checkInputDataTypes().isSuccess)
   }
-  test("merge_sorted_arrays: k-way merge equals flatten+sort, incl. ties and empty lists") {
-    import spark.implicits._
-    import graft.functions.MergeSorted
-    val rng = new scala.util.Random(7)
-    val docs = (0 until 40).map { d =>
-      val n = rng.nextInt(30)
-      val spans = (0 until n).map(i => (i, s"k$i", s"t-$d-$i", ""))
-      (s"doc$d", spans)
-    }
-    val flat = docs.flatMap { case (id, spans) => spans.map(sp => (id, sp._1, sp._2, sp._3, sp._4)) }
-      .toDF("doc_id", "offset", "kind", "text", "media_ref")
-    val merged = flat
-      .withColumn("salt", pmod(col("offset"), lit(5)))
-      .groupBy(col("doc_id"), col("salt"))
-      .agg(array_sort(collect_list(struct(col("offset"), col("kind"), col("text"), col("media_ref")))).as("part"))
-      .groupBy(col("doc_id"))
-      .agg(MergeSorted.mergeSortedArrays(collect_list(col("part"))).as("m"))
-      .select(col("doc_id"), transform(col("m"), s => s("offset")).as("offs"))
-      .as[(String, Seq[Int])].collect().toMap
-    docs.filter(_._2.nonEmpty).foreach { case (id, spans) =>
-      assert(merged(id) == spans.map(_._1).sorted, id)
-    }
-    // offset ties across sub-lists stay deterministic and complete
-    val ties = Seq(("t", 3, "a"), ("t", 3, "b"), ("t", 1, "c"), ("t", 3, "d"))
-      .toDF("doc_id", "offset", "kind").withColumn("text", lit("")).withColumn("media_ref", lit(""))
-    val got = ties.withColumn("salt", pmod(monotonically_increasing_id(), lit(3)))
-      .groupBy(col("doc_id"), col("salt"))
-      .agg(array_sort(collect_list(struct(col("offset"), col("kind"), col("text"), col("media_ref")))).as("part"))
-      .groupBy(col("doc_id"))
-      .agg(MergeSorted.mergeSortedArrays(collect_list(col("part"))).as("m"))
-      .select(explode(col("m")).as("s")).select(col("s.offset")).as[Int].collect().toSeq
-    assert(got == Seq(1, 3, 3, 3))
-    // Int.MaxValue offsets are selectable (no sentinel-collision crash)
-    val maxRow = Seq(("m", Int.MaxValue, "a"), ("m", 5, "b"))
-      .toDF("doc_id", "offset", "kind").withColumn("text", lit("")).withColumn("media_ref", lit(""))
-    val gotMax = maxRow.withColumn("salt", pmod(col("offset"), lit(2)))
-      .groupBy(col("doc_id"), col("salt"))
-      .agg(array_sort(collect_list(struct(col("offset"), col("kind"), col("text"), col("media_ref")))).as("part"))
-      .groupBy(col("doc_id"))
-      .agg(MergeSorted.mergeSortedArrays(collect_list(col("part"))).as("m"))
-      .select(explode(col("m")).as("s")).select(col("s.offset")).as[Int].collect().toSeq
-    assert(gotMax == Seq(5, Int.MaxValue))
-  }
-  test("merge_sorted_arrays: equal-offset ties order by full struct, matching array_sort") {
-    import spark.implicits._
-    import graft.functions.MergeSorted
-    // duplicate offsets with distinct (kind, text): the two assemble paths
-    // must produce IDENTICAL span streams, so the k-way merge breaks ties
-    // by the full struct exactly like array_sort — not by sub-list index
-    val rows = Seq(
-      ("d", 3, "zz", "t1", ""), ("d", 3, "aa", "t2", ""), ("d", 3, "mm", "t3", ""),
-      ("d", 1, "b", "x", ""), ("d", 3, "aa", "t0", "m"), ("d", 7, "c", "y", ""))
-    val flat = rows.toDF("doc_id", "offset", "kind", "text", "media_ref")
-    def seqOf(df: org.apache.spark.sql.DataFrame): Seq[(Int, String, String, String)] =
-      df.select(explode(col("sorted")).as("s"))
-        .select(col("s.offset"), col("s.kind"), col("s.text"), col("s.media_ref"))
-        .as[(Int, String, String, String)].collect().toSeq
-    val single = flat.groupBy(col("doc_id"))
-      .agg(array_sort(collect_list(struct(col("offset"), col("kind"), col("text"), col("media_ref")))).as("sorted"))
-    // force the ties into DIFFERENT salt sub-lists
-    val skew = flat.withColumn("salt", pmod(monotonically_increasing_id(), lit(3)))
-      .groupBy(col("doc_id"), col("salt"))
-      .agg(array_sort(collect_list(struct(col("offset"), col("kind"), col("text"), col("media_ref")))).as("part"))
-      .groupBy(col("doc_id"))
-      .agg(MergeSorted.mergeSortedArrays(collect_list(col("part"))).as("sorted"))
-    assert(seqOf(skew) == seqOf(single))
-  }
 }

@@ -154,8 +154,34 @@ class IngestSpec extends AnyFunSuite {
     val nonImage = graft.ops.DocOps.SupportedMimeTypes
       .filterNot(_.startsWith("image/"))
     for (mime <- nonImage) {
-      val d = Ingest.toRawDoc("f.bin", "x".getBytes("UTF-8"), mime).payload_kind
-      assert(!d.startsWith("unsupported"), s"$mime -> $d")
+      val r = Ingest.toRawDoc("f.bin", "x".getBytes("UTF-8"), mime)
+      assert(!r.payload_kind.startsWith("unsupported"), s"$mime -> ${r.payload_kind}")
+      // the routed kind has a converter: the row may fail to parse, but
+      // never as an unknown kind
+      val failure = Pipeline.extractOne(r).failure
+      assert(!failure.contains("unknown dialect"), s"$mime -> $failure")
     }
+    // every kind in the format table is reachable: by MIME through
+    // ingestion (markdown MIMEs refine by marker grammar) or from the
+    // synthetic corpus (provider dialects, pdf_layout)
+    val formats = graft.extract.Formats.All
+    val ingested = formats.flatMap(_.mimes)
+      .map(m => Ingest.toRawDoc("f.bin", "x".getBytes("UTF-8"), m).payload_kind)
+    val generated = (0L until 2000L).map(i => graft.io.SyntheticDocs.generate(42, i).raw.payload_kind)
+    val unreachable = formats.map(_.kind).toSet -- ingested -- generated
+    assert(unreachable.isEmpty, unreachable)
+  }
+
+  test("table-borne byte rows (empty source_path) assemble like text rows") {
+    // title falls back to the doc_id and provenance is synthetic://, the
+    // rule every text kind follows
+    val rtf = graft.extract.RtfExtract.buildRtf("", Seq("Body text"))
+    val r = Ingest.toRawDoc("x.rtf", rtf.getBytes("ISO-8859-1"))
+      .copy(doc_id = "doc-7", source_path = "")
+    val out = Pipeline.extractOne(r)
+    assert(out.failure == "" && out.spans.exists(_.text == "Body text"))
+    assert(out.title == "doc-7")
+    assert(out.source_path == "synthetic://rtf_bytes/doc-7.rtf")
+    assert(out.metadata == Map("rtf_paragraphs" -> "1"))
   }
 }
