@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   *
   * {{{
   * spark = SparkSession.builder().withExtensions(new GraftExtensions).…
-  * spark.sql("SELECT simhash64(shingle_hashes(lower(text), 1, 128)) FROM docs")
+  * spark.sql("SELECT portable_simhash60(md5_shingle_h60(lower(text), 1, 128)) FROM docs")
   * }}}
   *
   * One registry feeds both the extension-injection path and the post-hoc
@@ -34,16 +34,8 @@ object GraftExtensions {
     * paths.
     */
   val registry: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "simhash64" -> ((args: Seq[Expression]) => SimHash64(args.head)),
-    "minhash_sig" -> ((args: Seq[Expression]) =>
-      MinHashSig(args.head, intArg(args(1), "k"))),
-    "shingle_hashes" -> ((args: Seq[Expression]) =>
-      ShingleHashes(args.head, intArg(args(1), "n"),
-        if (args.length > 2) intArg(args(2), "maxTokens") else 0)),
     "cosine_sim" -> ((args: Seq[Expression]) => CosineSim(args.head, args(1))),
-    "hyperplane_bucket" -> ((args: Seq[Expression]) =>
-      HyperplaneBucket(args.head, intArg(args(1), "planes"))),
-    // engine-portable (md5-derived) variants — every value reproducible in
+    // engine-portable (md5-derived) sketches — every value reproducible in
     // DuckDB SQL for oracle checking
     "md5_shingle_h60" -> ((args: Seq[Expression]) =>
       Md5ShingleH60(args.head, intArg(args(1), "n"),

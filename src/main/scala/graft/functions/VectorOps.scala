@@ -69,65 +69,3 @@ object CosineSim {
   def cosineSim(a: Column, b: Column): Column =
     GraftBridge.column(CosineSim(GraftBridge.expression(a), GraftBridge.expression(b)))
 }
-
-/** Native random-hyperplane LSH bucket (sign-bit sketch): `planes` pseudo
-  * hyperplanes with components derived from splitmix64(plane, dim) — no
-  * stored model, deterministic across executors. Output: long bucket id in
-  * [0, 2^planes).
-  */
-case class HyperplaneBucket(child: Expression, planes: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"HyperplaneBucket needs array<float|double>, got ${other.sql}")
-    }
-
-  private def isFloat = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    HyperplaneBucket.compute(input.asInstanceOf[ArrayData], isFloat, planes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr =>
-      s"${ev.value} = graft.functions.HyperplaneBucket.compute($arr, $isFloat, $planes);")
-
-  override protected def withNewChildInternal(newChild: Expression): HyperplaneBucket =
-    copy(child = newChild)
-}
-
-object HyperplaneBucket {
-  private def mix(x0: Long): Long = Hashing.splitmix64(x0)
-
-  /** Hyperplane component in [-1, 1): mix(plane, dim) scaled. */
-  private def component(p: Int, d: Int): Double =
-    (mix((p.toLong << 32) ^ d.toLong) >>> 11) * 1.1102230246251565e-16 * 2.0 - 1.0
-
-  def compute(v: ArrayData, isFloat: Boolean, planes: Int): Long = {
-    val n = v.numElements()
-    var bucket = 0L
-    var p = 0
-    while (p < planes) {
-      var dot = 0.0
-      var d = 0
-      while (d < n) {
-        val x = if (isFloat) v.getFloat(d).toDouble else v.getDouble(d)
-        dot += x * component(p, d)
-        d += 1
-      }
-      if (dot >= 0) bucket |= (1L << p)
-      p += 1
-    }
-    bucket
-  }
-
-  def hyperplaneBucket(vec: Column, planes: Int): Column =
-    GraftBridge.column(HyperplaneBucket(GraftBridge.expression(vec), planes))
-}

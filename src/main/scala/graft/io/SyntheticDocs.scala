@@ -41,8 +41,16 @@ object SyntheticDocs {
 
   // -------------------------------------------------------------- rng core
 
-  /** splitmix64 (shared definition in [[graft.functions.Hashing]]). */
-  def splitmix64(x0: Long): Long = graft.functions.Hashing.splitmix64(x0)
+  /** splitmix64 finalizer (Steele et al., OOPSLA 2014, public domain): the
+    * generator's only source of randomness, so changing it changes every
+    * synthetic corpus.
+    */
+  def splitmix64(x0: Long): Long = {
+    var z = x0 + 0x9e3779b97f4a7c15L
+    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
+    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
+    z ^ (z >>> 31)
+  }
 
   final class DocRng(seed: Long) {
     private var state = seed

@@ -188,8 +188,9 @@ object Dedup {
   // ------------------------------------------------- inverted-index Jaccard
 
   /** N-gram Jaccard similarity pairs via an inverted-index join (SQL-exact,
-    * oracle-checkable): explode distinct shingles, equi-join on shingle,
-    * count common, Jaccard from per-doc distinct counts.
+    * oracle-checkable): index each doc's PPJoin prefix of its sorted
+    * distinct shingles, equi-join on shingle for candidate pairs, then
+    * verify each candidate's exact Jaccard against the full sets.
     *
     * The join key is the shingle — frequency-skewed shingles are the classic
     * hot key (a stopword-ish shingle in df docs contributes O(df²) join
@@ -202,143 +203,94 @@ object Dedup {
     */
   def jaccardPairs(docs: DataFrame, threshold: Double, shingleN: Int = 3,
       maxDocFreq: Int = 0,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    // round 5: the prefix path now carries the PPJoin POSITIONAL filter,
-    // which bounds candidate emission at low thresholds too — measured
-    // (sf0.1, the SparkEntry row config, both paths timed through
-    // jaccardPairsVia): t=0.18 2.3s vs 3.7s count-agg, t=0.05 2.8s vs
-    // 3.6s — so it is the single production path at every threshold; the
-    // count-aggregation path remains as the independent second
-    // implementation that DedupPathsSpec checks equality against.
-    jaccardPairsVia(docs, threshold, shingleN, maxDocFreq, textCol, idCol,
-      usePrefix = true)
-
-  /** Path-forced variant (DedupPathsSpec equality; also the profiling hook
-    * behind the prefix-vs-count-agg timings above):
-    * both paths produce the identical result set at ANY threshold.
-    */
-  private[graft] def jaccardPairsVia(docs: DataFrame, threshold: Double,
-      shingleN: Int, maxDocFreq: Int,
-      textCol: String, idCol: String, usePrefix: Boolean): DataFrame = {
+      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+    // round 5: the PPJoin prefix path gained the POSITIONAL filter, which
+    // bounds candidate emission at low thresholds too — measured (sf0.1,
+    // the SparkEntry row config) against a count-aggregation join (explode
+    // every shingle, self-join, count common per pair; since deleted):
+    // t=0.18 2.3s vs 3.7s, t=0.05 2.8s vs 3.6s — so it is the one path at
+    // every threshold. DedupPathsSpec checks it against naive all-pairs.
     val sh0 = docs.select(col(idCol).as("doc_id"),
       array_distinct(shingles(col(textCol), shingleN)).as("sh"))
       .filter(size(col("sh")) > 0)
-    // length filter (lossless, both paths): J(A,B) ≥ t forces
+    // length filter (lossless): J(A,B) ≥ t forces
     // t·max(|A|,|B|) ≤ min(|A|,|B|) — prunes co-occurrence rows before the
     // quadratic stage; 1e-9 guards the fp boundary. All filters below are
     // lossless for the final threshold, so the result set (and the SQL
     // oracle) is unchanged.
     def lengthOk = greatest(col("n_a"), col("n_b")) * threshold <=
       least(col("n_a"), col("n_b")) + lit(1e-9)
-    if (!usePrefix) {
-      // low thresholds: the PPJoin prefix keeps ≈(1−t) of the index — not
-      // worth the verification joins; count common shingles through one
-      // pair aggregation (plus the length filter). No array assembly: this
-      // path only needs (shingle, doc, set size) rows.
-      val inv =
-        if (maxDocFreq <= 0)
-          sh0.select(col("doc_id"), size(col("sh")).as("n_sh"),
-            explode(col("sh")).as("shingle"))
-        else {
-          val inv0 = sh0.select(col("doc_id"), explode(col("sh")).as("shingle"))
-          // shingles are distinct per doc, so count(*) per shingle == df;
-          // the hot list is small (ubiquitous shingles) → AQE broadcasts
-          // the anti-join when it fits
-          val hot = inv0.groupBy(col("shingle"))
-            .agg(count(lit(1)).as("df"))
-            .filter(col("df") > maxDocFreq)
-            .select("shingle")
-          val inv1 = inv0.join(hot, Seq("shingle"), "left_anti")
-          // per-doc set size AFTER the cap, so jaccard is exact over the
-          // capped universe (docs whose shingles were all capped drop out:
-          // they cannot contribute a pair)
-          val sizes = inv1.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-          inv1.join(sizes, Seq("doc_id"))
-        }
-      val l = inv.select(col("shingle"), col("doc_id").as("id_a"), col("n_sh").as("n_a"))
-      val r = inv.select(col("shingle"), col("doc_id").as("id_b"), col("n_sh").as("n_b"))
-      l.join(r, Seq("shingle"))
-        .filter(col("id_a") < col("id_b") && lengthOk)
-        .groupBy(col("id_a"), col("id_b"), col("n_a"), col("n_b"))
-        .agg(count(lit(1)).as("common"))
-        .withColumn("jaccard",
-          round(col("common") / (col("n_a") + col("n_b") - col("common")), 6))
-        .filter(col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    } else {
-      // canonical global order = hash order (array_sort): the PPJoin
-      // prefix filter needs every doc's shingles under ONE total order.
-      // `sets` feeds THREE consumers (prefix index + both verify sides)
-      // and Catalyst does not reuse the underlying exchange across their
-      // differing repartitionings (verified: no ReusedExchange in the
-      // plan), so it is persisted — shingling/capping runs once, not 3×.
-      // The persist is SCOPED: the (output-sized) result is materialized
-      // below and `sets` unpersisted before returning, so long-lived apps
-      // never accumulate the big intermediate. The returned DataFrame is
-      // itself persisted (it IS the materialization); callers may
-      // `.unpersist()` it when done.
-      val sets = (
-        if (maxDocFreq <= 0)
-          sh0.select(col("doc_id"), array_sort(col("sh")).as("sh"),
-            size(col("sh")).as("n_sh"))
-        else {
-          val inv0 = sh0.select(col("doc_id"), explode(col("sh")).as("shingle"))
-          val hot = inv0.groupBy(col("shingle"))
-            .agg(count(lit(1)).as("df"))
-            .filter(col("df") > maxDocFreq)
-            .select("shingle")
-          // re-assemble the CAPPED sets (exact jaccard over the capped
-          // universe; fully-capped docs drop out)
-          inv0.join(hot, Seq("shingle"), "left_anti")
-            .groupBy(col("doc_id"))
-            .agg(array_sort(collect_list(col("shingle"))).as("sh"))
-            .select(col("doc_id"), col("sh"), size(col("sh")).as("n_sh"))
-        }
-      ).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // high thresholds: PPJoin-style prefix candidates (Bayardo et al.
-      // All-Pairs / Xiao et al. PPJoin, both public): |A∩B| ≥ t·max forces
-      // a collision within each side's first |S| − ⌈t·|S|⌉ + 1 shingles
-      // under the global order — index ONLY that prefix (t=0.8 keeps ~20%,
-      // shrinking the quadratic stage ~25×), then verify the surviving
-      // pairs exactly against the full (capped) sets.
-      val prefixLen = greatest(
-        (col("n_sh") - ceil(col("n_sh") * threshold - lit(1e-9)) + 1).cast("int"), lit(1))
-      // positions ride along (posexplode): the PPJoin POSITIONAL filter —
-      // for the FIRST common shingle at 0-based positions (p_a, p_b), the
-      // overlap cannot exceed min(n_a − p_a, n_b − p_b), and J ≥ t needs
-      // overlap ≥ t/(1+t)·(n_a+n_b); a true pair's first common shingle is
-      // inside both prefixes and passes, so keeping any-passing-collision
-      // pairs is lossless (Xiao et al. PPJoin, §3.2) — this is what bounds
-      // the candidate blow-up at LOW thresholds, where the prefix alone
-      // keeps ≈(1−t) of the index
-      val inv = sets.select(col("doc_id"), col("n_sh"),
-        posexplode(slice(col("sh"), lit(1), prefixLen)).as(Seq("pos", "shingle")))
-      val l = inv.select(col("shingle"), col("doc_id").as("id_a"),
-        col("n_sh").as("n_a"), col("pos").as("pos_a"))
-      val r = inv.select(col("shingle"), col("doc_id").as("id_b"),
-        col("n_sh").as("n_b"), col("pos").as("pos_b"))
-      val positionalOk = least(col("n_a") - col("pos_a"), col("n_b") - col("pos_b")) >=
-        (col("n_a") + col("n_b")) * lit(threshold / (1 + threshold)) - lit(1e-9)
-      val candidates = l.join(r, Seq("shingle"))
-        .filter(col("id_a") < col("id_b") && lengthOk && positionalOk)
-        .select("id_a", "id_b").distinct()
-      val a = sets.select(col("doc_id").as("id_a"), col("sh").as("sh_a"), col("n_sh").as("n_a"))
-      val b = sets.select(col("doc_id").as("id_b"), col("sh").as("sh_b"), col("n_sh").as("n_b"))
-      val verified = candidates.join(a, Seq("id_a")).join(b, Seq("id_b"))
-        .withColumn("common", size(array_intersect(col("sh_a"), col("sh_b"))))
-        .withColumn("jaccard",
-          round(col("common") / (col("n_a") + col("n_b") - col("common")), 6))
-        .filter(col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-      // a REPEATED call builds a plan identical to a still-cached previous
-      // result; re-persisting it would only log a CacheManager warning —
-      // `storageLevel` (public API) consults the cache by plan, so the
-      // already-cached result is reused silently
-      if (verified.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        verified.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try { verified.count(); () } finally sets.unpersist(blocking = true)
-      verified
-    }
+    // canonical global order = hash order (array_sort): the PPJoin
+    // prefix filter needs every doc's shingles under ONE total order.
+    // `sets` feeds THREE consumers (prefix index + both verify sides)
+    // and Catalyst does not reuse the underlying exchange across their
+    // differing repartitionings (verified: no ReusedExchange in the
+    // plan), so it is persisted — shingling/capping runs once, not 3×.
+    // The persist is SCOPED: the (output-sized) result is materialized
+    // below and `sets` unpersisted before returning, so long-lived apps
+    // never accumulate the big intermediate. The returned DataFrame is
+    // itself persisted (it IS the materialization); callers may
+    // `.unpersist()` it when done.
+    val sets = (
+      if (maxDocFreq <= 0)
+        sh0.select(col("doc_id"), array_sort(col("sh")).as("sh"),
+          size(col("sh")).as("n_sh"))
+      else {
+        val inv0 = sh0.select(col("doc_id"), explode(col("sh")).as("shingle"))
+        val hot = inv0.groupBy(col("shingle"))
+          .agg(count(lit(1)).as("df"))
+          .filter(col("df") > maxDocFreq)
+          .select("shingle")
+        // re-assemble the CAPPED sets (exact jaccard over the capped
+        // universe; fully-capped docs drop out)
+        inv0.join(hot, Seq("shingle"), "left_anti")
+          .groupBy(col("doc_id"))
+          .agg(array_sort(collect_list(col("shingle"))).as("sh"))
+          .select(col("doc_id"), col("sh"), size(col("sh")).as("n_sh"))
+      }
+    ).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // PPJoin-style prefix candidates (Bayardo et al. All-Pairs / Xiao et
+    // al. PPJoin, both public): |A∩B| ≥ t·max forces a collision within
+    // each side's first |S| − ⌈t·|S|⌉ + 1 shingles under the global order — index ONLY that prefix (t=0.8 keeps ~20%,
+    // shrinking the quadratic stage ~25×), then verify the surviving
+    // pairs exactly against the full (capped) sets.
+    val prefixLen = greatest(
+      (col("n_sh") - ceil(col("n_sh") * threshold - lit(1e-9)) + 1).cast("int"), lit(1))
+    // positions ride along (posexplode): the PPJoin POSITIONAL filter —
+    // for the FIRST common shingle at 0-based positions (p_a, p_b), the
+    // overlap cannot exceed min(n_a − p_a, n_b − p_b), and J ≥ t needs
+    // overlap ≥ t/(1+t)·(n_a+n_b); a true pair's first common shingle is
+    // inside both prefixes and passes, so keeping any-passing-collision
+    // pairs is lossless (Xiao et al. PPJoin, §3.2) — this is what bounds
+    // the candidate blow-up at LOW thresholds, where the prefix alone
+    // keeps ≈(1−t) of the index
+    val inv = sets.select(col("doc_id"), col("n_sh"),
+      posexplode(slice(col("sh"), lit(1), prefixLen)).as(Seq("pos", "shingle")))
+    val l = inv.select(col("shingle"), col("doc_id").as("id_a"),
+      col("n_sh").as("n_a"), col("pos").as("pos_a"))
+    val r = inv.select(col("shingle"), col("doc_id").as("id_b"),
+      col("n_sh").as("n_b"), col("pos").as("pos_b"))
+    val positionalOk = least(col("n_a") - col("pos_a"), col("n_b") - col("pos_b")) >=
+      (col("n_a") + col("n_b")) * lit(threshold / (1 + threshold)) - lit(1e-9)
+    val candidates = l.join(r, Seq("shingle"))
+      .filter(col("id_a") < col("id_b") && lengthOk && positionalOk)
+      .select("id_a", "id_b").distinct()
+    val a = sets.select(col("doc_id").as("id_a"), col("sh").as("sh_a"), col("n_sh").as("n_a"))
+    val b = sets.select(col("doc_id").as("id_b"), col("sh").as("sh_b"), col("n_sh").as("n_b"))
+    val verified = candidates.join(a, Seq("id_a")).join(b, Seq("id_b"))
+      .withColumn("common", size(array_intersect(col("sh_a"), col("sh_b"))))
+      .withColumn("jaccard",
+        round(col("common") / (col("n_a") + col("n_b") - col("common")), 6))
+      .filter(col("jaccard") >= threshold)
+      .select("id_a", "id_b", "jaccard")
+    // a REPEATED call builds a plan identical to a still-cached previous
+    // result; re-persisting it would only log a CacheManager warning —
+    // `storageLevel` (public API) consults the cache by plan, so the
+    // already-cached result is reused silently
+    if (verified.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+      verified.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try { verified.count(); () } finally sets.unpersist(blocking = true)
+    verified
   }
 
   // -------------------------------------------------- exact-substring dedup

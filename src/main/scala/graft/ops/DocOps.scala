@@ -95,12 +95,6 @@ object DocOps {
       element_at(mimeMapCol, lower(regexp_extract(path, "\\.(\\w+)$", 1))),
       lit("application/octet-stream"))
 
-  /** MIME support filter (base.py:391-398): drop rows whose MIME is outside
-    * the supported set — a plain pushable predicate.
-    */
-  def filterSupported(df: DataFrame, supported: Set[String], mimeCol: String = "mime_type"): DataFrame =
-    df.filter(col(mimeCol).isInCollection(supported))
-
   // ------------------------------------------------ directory-scan filters
 
   /** Glob pattern → anchored regex (the pathlib/fsspec subset the reference's

@@ -43,16 +43,6 @@ object Multimodal {
       phash: Long,
       decode_error: String)
 
-  /** The real extraction sidecar as a typed media table: payload bytes from
-    * the docs table's media column (parquet column pruning — span readers
-    * never touch it).
-    */
-  def mediaTable(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    graft.pipeline.Pipeline.toMediaDF(docs).as[MediaRow]
-  }
-
   /** The decode seam: (mime, bytes) → (width, height, channels, mean_luma,
     * phash); throws on undecodable payloads (callers turn that into
     * `decode_error` rows, never task failures).

@@ -170,9 +170,10 @@ object Pipeline {
   /** Per-partition lineage rows (north rule: input snapshot id, partition id,
     * doc count, span count, failure list) — computed with a plain groupBy on
     * `spark_partition_id()` so it is one partial-aggregated shuffle, not a
-    * custom accumulator.
+    * custom accumulator. `out` needs `spans` and `failure` ("" = success)
+    * columns: extract output, or committed docs tagged with `failure = ""`.
     */
-  def lineage(out: Dataset[ExtractOut], snapshotId: Long): Dataset[LineageRow] = {
+  def lineage(out: Dataset[_], snapshotId: Long): Dataset[LineageRow] = {
     val spark = out.sparkSession
     import spark.implicits._
     out.toDF()
@@ -182,7 +183,8 @@ object Pipeline {
         count(when(col("failure") === "", 1)).as("doc_count"),
         coalesce(sum(size(col("spans"))), lit(0L)).as("span_count"),
         count(when(col("failure") =!= "", 1)).as("failure_count"),
-        slice(filter(collect_list(col("failure")), f => f =!= ""),
+        // collect_list skips nulls: successes never enter the buffer
+        slice(collect_list(when(col("failure") =!= "", col("failure"))),
           1, LineageRow.MaxFailureSample).as("failures"))
       .select(lit(snapshotId).as("snapshot_id"), col("partition_id"),
         col("doc_count"), col("span_count"), col("failure_count"), col("failures"))

@@ -153,15 +153,9 @@ object Runner {
           case Some(p) => docs.join(p.select("doc_id"), Seq("doc_id"), "left_anti")
           case None => docs
         }
-        val lineage = added
-          .withColumn("partition_id", spark_partition_id())
-          .groupBy(col("partition_id"))
-          .agg(count(lit(1)).as("doc_count"),
-            coalesce(sum(size(col("spans"))), lit(0L)).as("span_count"))
-          .select(lit(docsSnapshotId).as("snapshot_id"), col("partition_id"),
-            col("doc_count"), col("span_count"), lit(0L).as("failure_count"),
-            array().cast("array<string>").as("failures"))
-        if (!lineage.isEmpty) TableIO.commit(lineage, metricsTableDir)
+        // committed docs are all successes: failure_count 0, failures []
+        val lineage = Pipeline.lineage(added.withColumn("failure", lit("")), docsSnapshotId)
+        if (!lineage.isEmpty) TableIO.commit(lineage.toDF(), metricsTableDir)
       }
     }
   }

@@ -5,10 +5,9 @@ import graft.pipeline.Pipeline
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Both jaccardPairs execution paths — the low-threshold count aggregation
-  * and the high-threshold PPJoin prefix+verify — must equal the naive
-  * all-pairs computation exactly: the prefix and length filters are
-  * lossless for the threshold by construction.
+/** jaccardPairs (PPJoin prefix + positional + verify) must equal the naive
+  * all-pairs computation exactly at every threshold: the prefix, positional
+  * and length filters are lossless for the threshold by construction.
   */
 class DedupPathsSpec extends AnyFunSuite {
 
@@ -50,16 +49,12 @@ class DedupPathsSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
   }
 
-  private def got(threshold: Double, usePrefix: Boolean): Set[(Long, Long, Double)] =
-    Dedup.jaccardPairsVia(docs, threshold, 3, 0, "text", "doc_id", usePrefix)
+  private def got(threshold: Double): Set[(Long, Long, Double)] =
+    Dedup.jaccardPairs(docs, threshold, shingleN = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
-  test("count-aggregation path (second implementation) equals naive at all thresholds") {
-    for (t <- Seq(0.1, 0.18, 0.3, 0.49, 0.7)) assert(got(t, usePrefix = false) == naive(t), s"t=$t")
-  }
-
   test("production path (PPJoin prefix + positional + verify) equals naive, low t included") {
-    for (t <- Seq(0.05, 0.18, 0.3, 0.5, 0.7, 0.9)) assert(got(t, usePrefix = true) == naive(t), s"t=$t")
+    for (t <- Seq(0.05, 0.18, 0.3, 0.5, 0.7, 0.9)) assert(got(t) == naive(t), s"t=$t")
   }
 
   test("integer-boundary thresholds don't lose pairs to fp ceiling") {

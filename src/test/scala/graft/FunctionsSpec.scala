@@ -72,10 +72,10 @@ class FunctionsSpec extends AnyFunSuite {
     import spark.implicits._
     Seq(("a b c a b c", Seq(1.0f, 2.0f))).toDF("t", "v").createOrReplaceTempView("fx")
     val row = spark.sql(
-      """SELECT simhash64(shingle_hashes(t, 1, 0)) AS sh,
-        |       size(minhash_sig(shingle_hashes(t, 2, 0), 16)) AS k,
+      """SELECT portable_simhash60(md5_shingle_h60(t, 1, 0)) AS sh,
+        |       size(portable_minhash_sig(md5_shingle_h60(t, 2, 0), 16)) AS k,
         |       cosine_sim(v, v) AS c,
-        |       hyperplane_bucket(v, 4) AS b
+        |       portable_hyperplane_bucket(v, 4) AS b
         |FROM fx""".stripMargin).collect().head
     assert(row.getAs[Long]("sh") != 0L)
     assert(row.getAs[Int]("k") == 16)
@@ -91,8 +91,7 @@ class FunctionsSpec extends AnyFunSuite {
     new graft.functions.GraftExtensions()
       .apply(new org.apache.spark.sql.SparkSessionExtensions) // must not throw
     assert(graft.functions.GraftExtensions.registry.map(_._1).toSet ==
-      Set("simhash64", "minhash_sig", "shingle_hashes", "cosine_sim", "hyperplane_bucket",
-        "md5_shingle_h60", "portable_minhash_sig", "portable_simhash60",
+      Set("cosine_sim", "md5_shingle_h60", "portable_minhash_sig", "portable_simhash60",
         "portable_hyperplane_bucket"))
     // every builder yields a type-checking expression for a valid arg shape
     import org.apache.spark.sql.catalyst.expressions.Literal
@@ -102,11 +101,7 @@ class FunctionsSpec extends AnyFunSuite {
     val str = Literal.create("a b c", StringType)
     val k = Literal.create(4, IntegerType)
     val byName = graft.functions.GraftExtensions.registry.toMap
-    assert(byName("simhash64")(Seq(arrL)).checkInputDataTypes().isSuccess)
-    assert(byName("minhash_sig")(Seq(arrL, k)).checkInputDataTypes().isSuccess)
-    assert(byName("shingle_hashes")(Seq(str, k)).checkInputDataTypes().isSuccess)
     assert(byName("cosine_sim")(Seq(arrF, arrF)).checkInputDataTypes().isSuccess)
-    assert(byName("hyperplane_bucket")(Seq(arrF, k)).checkInputDataTypes().isSuccess)
     assert(byName("md5_shingle_h60")(Seq(str, k)).checkInputDataTypes().isSuccess)
     assert(byName("portable_minhash_sig")(Seq(arrL, k)).checkInputDataTypes().isSuccess)
     assert(byName("portable_simhash60")(Seq(arrL)).checkInputDataTypes().isSuccess)

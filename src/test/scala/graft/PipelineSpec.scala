@@ -95,6 +95,17 @@ class PipelineSpec extends AnyFunSuite {
     assert(rows.map(_.span_count).sum == gens.map(_.expected.size).sum.toLong)
     assert(rows.flatMap(_.failures).length == 1)
     assert(rows.forall(_.snapshot_id == 42L))
+    // one partition mixing successes with more failures than the sample
+    // keeps: the sample holds only non-empty messages and stops at the cap
+    val manyBad = (0 until LineageRow.MaxFailureSample + 20)
+      .map(i => bad.copy(doc_id = s"doc-bad-$i"))
+    val mixed = Pipeline.extract(spark.createDataset(gens.map(_.raw) ++ manyBad)).coalesce(1)
+    val one = Pipeline.lineage(mixed, snapshotId = 7L).collect()
+    assert(one.length == 1)
+    assert(one.head.doc_count == 50L)
+    assert(one.head.failure_count == LineageRow.MaxFailureSample + 20L)
+    assert(one.head.failures.length == LineageRow.MaxFailureSample)
+    assert(one.head.failures.forall(_.nonEmpty))
     out.unpersist()
   }
 

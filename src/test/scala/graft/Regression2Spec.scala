@@ -48,8 +48,8 @@ class Regression2Spec extends AnyFunSuite {
     }
   }
 
-  test("ShingleHashes tokenizer agrees with Java \\s on vertical-tab and form-feed") {
-    def toks(s: String) = graft.functions.ShingleHashes.compute(UTF8String.fromString(s), 1, 0).toSeq
+  test("Md5ShingleH60 tokenizer agrees with Java \\s on vertical-tab and form-feed") {
+    def toks(s: String) = graft.functions.Md5ShingleH60.compute(UTF8String.fromString(s), 1, 0).toSeq
     assert(toks("ab\fc") == toks("a b c"))
     assert(toks("ab\fc").length == 3)
   }
