@@ -1,6 +1,6 @@
 package graft
 
-import graft.io.SyntheticDocs
+import graft.io.{Ingest, SyntheticDocs}
 import graft.model._
 import graft.ops.{Dedup, DocOps, Multimodal, Similarity, TextAnalysis}
 import graft.pipeline.{Pipeline, SpanOps}
@@ -38,22 +38,28 @@ object SparkEntry {
     tbl(s, dir, "documents").select(col("doc_id"))
       .repartition(s.sparkContext.defaultParallelism)
 
-  /** Shared tail of the byte-route oracle rows: each id's (file name,
-    * container bytes) goes through the REAL ingestion route
-    * (`Ingest.toRawDoc`, `mime` as the explicit-MIME override) and
-    * `Pipeline.extractOne`, and projects to the row every byte oracle reads.
+  /** Shared envelope of the format oracle rows: each id's `RawDoc` (built
+    * by the caller through the REAL ingestion route, `Ingest.toRawDoc`)
+    * runs through `Pipeline.extractOne`, any failure row fails the query,
+    * and the span stream projects to the union of the columns the format
+    * oracles read; each row then selects its own.
     */
-  private def byteRoute(s: SparkSession, dir: String, mime: String = "")(
-      file: Long => (String, Array[Byte])): DataFrame = {
+  private def route(s: SparkSession, dir: String)(doc: Long => RawDoc): DataFrame = {
     import s.implicits._
     docIdsSpread(s, dir).as[Long].map { id =>
-      val (name, bytes) = file(id)
-      val out = Pipeline.extractOne(graft.io.Ingest.toRawDoc(name, bytes, mime))
+      val out = Pipeline.extractOne(doc(id))
       require(out.failure.isEmpty, out.failure)
-      (id, out.title, out.page_count, out.spans.size,
+      (id, out.mime_type, out.title, out.page_count, out.spans.size,
+        out.spans.map(_.kind).mkString(","),
+        out.spans.filter(_.kind == "image").map(_.media_ref).mkString(","),
         out.spans.filter(_.kind == "text").map(_.text).mkString("\n"))
-    }.toDF("doc_id", "title", "page_count", "n_spans", "text_all")
+    }.toDF("doc_id", "mime_type", "title", "page_count", "n_spans", "kinds",
+      "media_refs", "text_all")
   }
+
+  /** The columns every byte-container oracle row reads off [[route]]. */
+  private val ByteCols =
+    Seq("doc_id", "title", "page_count", "n_spans", "text_all").map(col)
 
   /** Collision-proof per-sf-dir key for staged fixture paths. String
     * hashCode is 32-bit and unsalted — with build-once markers a collision
@@ -94,6 +100,30 @@ object SparkEntry {
   private def registerCleanup(path: String): Unit =
     if (registeredCleanups.add(path))
       sys.addShutdownHook(graft.io.TableIO.deleteRecursively(new java.io.File(path)))
+
+  /** Build-once fixture dir for the rows that read staged files:
+    * `<tmp>/<prefix><dirKey>_<applicationId>`, so concurrent drivers and
+    * several sf dirs in one application never share a fixture. `build`
+    * fills the cleared dir once per application; the `_BUILT` marker is
+    * written AFTER it completes, so a half-built fixture is rebuilt. The
+    * fixture is a pure function of the sf dir, so later runs reuse it and
+    * time only the computation that reads it. The prefix is one of
+    * [[graft.io.ExpectedTables]]'s swept tmp prefixes.
+    */
+  private def buildOnce(s: SparkSession, dir: String, prefix: String)(
+      build: String => Unit): String = {
+    val base = s"${sys.props("java.io.tmpdir")}/$prefix${dirKey(dir)}_" +
+      s.sparkContext.applicationId
+    registerCleanup(base)
+    val marker = java.nio.file.Paths.get(base, "_BUILT")
+    if (!java.nio.file.Files.exists(marker)) {
+      graft.io.TableIO.deleteRecursively(new java.io.File(base))
+      java.nio.file.Files.createDirectories(marker.getParent)
+      build(base)
+      java.nio.file.Files.write(marker, Array.emptyByteArray)
+    }
+    base
+  }
 
   /** Per-doc REAL PNGs (solid color, deterministic dims w=30+id%100,
     * h=20+id%50) — the fixture for the real-codec media queries; dims are
@@ -414,20 +444,9 @@ object SparkEntry {
       // runs BEFORE the memory sink, so the driver holds three small
       // columns per doc, never the span payloads
       val ds = rawDocs(s, dir)
-      // keyed by (sf dir, application id) — like the q_ingest fixture — so
-      // an application touching several sf dirs can never cross-stage
-      val stageDir =
-        s"${sys.props("java.io.tmpdir")}/graft_stream_raw_" +
-          s"${dirKey(dir)}_${s.sparkContext.applicationId}"
-      // stage the streaming SOURCE once per application (a fresh run always
-      // re-stages): the corpus is a deterministic pure function of the sf
-      // dir, and re-materializing the identical input before each
-      // invocation only re-times the fixture write, not the streaming
-      // extraction under test — the timed computation (readStream →
-      // extractOne → sink) still runs in full
-      val staged = new java.io.File(s"$stageDir/_SUCCESS").exists()
-      if (!staged) ds.write.mode("overwrite").parquet(stageDir)
-      registerCleanup(stageDir)
+      val stageDir = buildOnce(s, dir, "graft_stream_raw_") { d =>
+        ds.write.mode("overwrite").parquet(d)
+      }
       val stream = graft.streaming.DocStream.extractStream(s, stageDir, ds.schema)
         .select(col("doc_id"), col("page_count"), size(col("spans")).as("n_spans"))
       val name = "q_stream_extract_sink"
@@ -466,40 +485,16 @@ object SparkEntry {
       // cost driver, so the fixture stays constant across SFs like the
       // pair ops.
       import s.implicits._
-      // fixture dir keyed by (sf dir, Spark application id): two concurrent
-      // Verify/Bench drivers against the same sf dir each get a private
-      // fixture — no delete-while-scanning race — and it is CLEANED before
-      // each build so stale files from older slices/naming can never be
-      // ingested; per-application dirs are removed on JVM exit
-      val base = s"${sys.props("java.io.tmpdir")}/graft_ingest_fixture_" +
-        s"${dirKey(dir)}_${s.sparkContext.applicationId}"
-      sys.addShutdownHook(graft.io.TableIO.deleteRecursively(new java.io.File(base)))
-      val baseP = java.nio.file.Paths.get(base)
-      // build the fixture once per application (the dir is keyed by app id,
-      // so a fresh run always rebuilds): the 500 .md files are a pure
-      // function of the sf dir, and rebuilding identical files before each
-      // invocation only re-times driver-side scaffolding, not the ingestion
-      // under test — the timed computation (list → filter → load → route)
-      // still reads every file from disk each run. The marker is written
-      // AFTER the build completes, so a half-built fixture is rebuilt.
-      val marker = baseP.resolve("_BUILT")
-      if (!java.nio.file.Files.exists(marker)) {
-        if (java.nio.file.Files.exists(baseP)) {
-          val files = java.nio.file.Files.list(baseP)
-          try files.forEach(p => java.nio.file.Files.deleteIfExists(p))
-          finally files.close()
-        }
-        java.nio.file.Files.createDirectories(baseP)
+      val base = buildOnce(s, dir, "graft_ingest_fixture_") { d =>
         tbl(s, dir, "documents").select(col("doc_id"), col("text"))
           .filter(col("doc_id") < 500)
           .as[(Long, String)].collect().foreach { case (id, text) =>
             java.nio.file.Files.write(
-              java.nio.file.Paths.get(base, f"d$id%06d.md"),
+              java.nio.file.Paths.get(d, f"d$id%06d.md"),
               text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
           }
-        java.nio.file.Files.write(marker, Array.emptyByteArray)
       }
-      graft.io.Ingest.fromDirectory(s, base, pattern = "*.md").toDF()
+      Ingest.fromDirectory(s, base, pattern = "*.md").toDF()
         .select(col("doc_id").as("rel_path"), col("payload_kind"),
           length(col("raw")).as("n_chars"))
     }),
@@ -730,7 +725,7 @@ object SparkEntry {
       // body, 1-3 list items, a pipe table, a page break on even ids) →
       // Ingest.toRawDoc → Pipeline.extractOne → span stream whose every
       // field the oracle reproduces arithmetically
-      byteRoute(s, dir) { id =>
+      route(s, dir) { id =>
         import graft.extract.DocxExtract._
         val listItems = (0 until (1 + (id % 3)).toInt).map(k => Para(s"- item-$k"))
         val blocks = Seq(
@@ -738,27 +733,27 @@ object SparkEntry {
           Para(s"Body alpha ${(id * 3) % 11}")) ++ listItems ++ Seq(
           Table(s"|Lorem|Ipsum|\n|---|---|\n|${id % 9}|${id % 8}|")) ++
           (if (id % 2 == 0) Seq(PageBreak, Para(s"Second page text $id")) else Nil)
-        (s"d$id.docx", buildDocx(s"Doc $id", blocks))
-      }
+        Ingest.toRawDoc(s"d$id.docx", buildDocx(s"Doc $id", blocks))
+      }.select(ByteCols: _*)
     }),
     "q_pptx" -> ((s, dir) => {
       // byte-level PPTX through the REAL ingestion route: 1-3 slides per
       // doc (title placeholder + one body paragraph each) → span stream
       // the oracle reproduces arithmetically
-      byteRoute(s, dir) { id =>
+      route(s, dir) { id =>
         import graft.extract.OfficeExtract._
         val n = 1 + (id % 3).toInt
         val slides = (1 to n).map { p =>
           Slide(s"Slide ${id % 5}-$p", Seq(s"Point alpha ${(id + p) % 7}"))
         }
-        (s"d$id.pptx", buildPptx(s"Deck $id", slides))
-      }
+        Ingest.toRawDoc(s"d$id.pptx", buildPptx(s"Deck $id", slides))
+      }.select(ByteCols: _*)
     }),
     "q_xlsx" -> ((s, dir) => {
       // byte-level XLSX through the REAL ingestion route: two sheets
       // (numeric + inline-string cells, sheet names from the workbook) →
       // heading + pipe-table spans the oracle reproduces arithmetically
-      byteRoute(s, dir) { id =>
+      route(s, dir) { id =>
         import graft.extract.OfficeExtract._
         val sheets = Seq(
           ("Data", Seq(
@@ -766,59 +761,61 @@ object SparkEntry {
             Seq(s"item-${id % 4}", s"${id % 9}"),
             Seq("thing", s"${id % 7}"))),
           ("Notes", Seq(Seq(s"note-${id % 3}"))))
-        (s"d$id.xlsx", buildXlsx(s"Book $id", sheets))
-      }
+        Ingest.toRawDoc(s"d$id.xlsx", buildXlsx(s"Book $id", sheets))
+      }.select(ByteCols: _*)
     }),
     "q_epub" -> ((s, dir) => {
       // EPUB through the REAL ingestion route: OCF container → OPF spine →
       // per-chapter HtmlExtract; 1-3 chapters per doc, each an <h1> plus a
       // body paragraph the oracle reproduces arithmetically
-      byteRoute(s, dir) { id =>
+      route(s, dir) { id =>
         val n = 1 + (id % 3).toInt
         val chapters = (1 to n).map { p =>
           s"<html><body><h1>Chapter ${id % 5}-$p</h1>" +
             s"<p>Alpha body text number ${(id + p) % 9} with enough plain words " +
             "to pass the content density classifier easily.</p></body></html>"
         }
-        (s"d$id.epub", graft.extract.EpubExtract.buildEpub(s"Novel $id", chapters))
-      }
+        Ingest.toRawDoc(s"d$id.epub",
+          graft.extract.EpubExtract.buildEpub(s"Novel $id", chapters))
+      }.select(ByteCols: _*)
     }),
     "q_odt" -> ((s, dir) => {
       // ODT through the REAL ingestion route: heading + body + list item +
       // table per doc, every field arithmetic in doc_id
-      byteRoute(s, dir) { id =>
+      route(s, dir) { id =>
         import graft.extract.DocxExtract.{Para, Table}
         val blocks = Seq(
           Para(s"# Doc $id heading"),
           Para(s"Body text ${(id * 5) % 13}"),
           Para(s"- entry-${id % 4}"),
           Table(s"|K|V|\n|---|---|\n|k${id % 3}|${id % 6}|"))
-        (s"d$id.odt", graft.extract.OdtExtract.buildOdt(s"Odt $id", blocks))
-      }
+        Ingest.toRawDoc(s"d$id.odt", graft.extract.OdtExtract.buildOdt(s"Odt $id", blocks))
+      }.select(ByteCols: _*)
     }),
     "q_rtf" -> ((s, dir) => {
       // RTF through the REAL ingestion route: control-word machine with a
       // decoy fonttbl, \info title, and a \page break on even ids
-      byteRoute(s, dir) { id =>
+      route(s, dir) { id =>
         val paras = Seq(s"Rtf alpha ${id % 8}", s"Second ${(id + 3) % 5}")
         val breaks: Set[Int] = if (id % 2 == 0) Set(1) else Set.empty
         val rtf = graft.extract.RtfExtract.buildRtf(s"Rtf $id", paras, breaks)
-        (s"d$id.rtf", rtf.getBytes("ISO-8859-1"))
-      }
+        Ingest.toRawDoc(s"d$id.rtf", rtf.getBytes("ISO-8859-1"))
+      }.select(ByteCols: _*)
     }),
     "q_doc" -> ((s, dir) => {
       // legacy Word binary through the REAL ingestion route: CFB container
       // ([MS-CFB] mini stream) + [MS-DOC] piece table with BOTH piece
       // decodings (CP-1252 + UTF-16LE), SummaryInformation title, a page
       // break before paragraph 2 on id%3==0
-      byteRoute(s, dir) { id =>
+      route(s, dir) { id =>
         val paras = Seq(
           s"Doc legacy alpha ${id % 9}",
           s"Mid section ${(id * 3) % 7}",
           s"Tail words ${(id + 5) % 11}")
         val breaks = if (id % 3 == 0) Seq(2) else Nil
-        (s"d$id.doc", graft.extract.DocExtract.buildDoc(s"Word $id", paras, breaks))
-      }
+        Ingest.toRawDoc(s"d$id.doc",
+          graft.extract.DocExtract.buildDoc(s"Word $id", paras, breaks))
+      }.select(ByteCols: _*)
     }),
     "q_ppt" -> ((s, dir) => {
       // legacy PowerPoint binary through the REAL ingestion route (explicit
@@ -826,92 +823,76 @@ object SparkEntry {
       // record tree, UTF-16 title atoms + low-byte body atoms per slide;
       // id%3==0 stores the text in SlideListWithText (the REAL-PowerPoint
       // placeholder shape) instead of inside the Slide drawings
-      byteRoute(s, dir, "application/vnd.ms-powerpoint") { id =>
+      route(s, dir) { id =>
         val n = 1 + (id % 2).toInt
         val slides = (1 to n).map { p =>
           (s"Slide ${id % 6}-$p", Seq(s"Bullet ${(id + p) % 4}"))
         }
         val bytes = graft.extract.PptExtract.buildPpt(s"Deck $id", slides,
           viaSlideListWithText = id % 3 == 0)
-        (s"d$id.ppt", bytes)
-      }
+        Ingest.toRawDoc(s"d$id.ppt", bytes, "application/vnd.ms-powerpoint")
+      }.select(ByteCols: _*)
     }),
     "q_ods" -> ((s, dir) => {
       // ODS through the REAL ingestion route: ODF spreadsheet content.xml
       // with repeated-blank-column filler the parser must trim; one page
       // per sheet, XLSX-shaped pipe tables
-      byteRoute(s, dir) { id =>
+      route(s, dir) { id =>
         val sheets = Seq(
           ("Data", Seq(Seq("K", "V"), Seq(s"k${id % 5}", s"${id % 7}"))),
           ("Extra", Seq(Seq(s"x${id % 3}"))))
-        (s"d$id.ods", graft.extract.OdsExtract.buildOds(s"Calc $id", sheets))
-      }
+        Ingest.toRawDoc(s"d$id.ods", graft.extract.OdsExtract.buildOds(s"Calc $id", sheets))
+      }.select(ByteCols: _*)
     }),
     "q_bib" -> ((s, dir) => {
       // BibTeX through the REAL ingestion route: brace/quote/bare field
       // forms, author list, case-protection braces — all arithmetic
-      import s.implicits._
-      docIdsSpread(s, dir)
-        .as[Long].map { id =>
-          val bib =
-            s"""@article{ref${id % 10}a,
-               |  author = {Author ${id % 4} and Coauthor ${(id * 3) % 5}},
-               |  title = {Study ${(id * 7) % 12} of {Things}},
-               |  journal = {Journal ${id % 3}},
-               |  year = ${1990 + (id % 30)}
-               |}
-               |@misc{ref${id % 10}b, title = "Note ${(id + 2) % 6}"}
-               |""".stripMargin
-          val out = graft.pipeline.Pipeline.extractOne(
-            graft.io.Ingest.toRawDoc(s"d$id.bib", bib.getBytes("UTF-8")))
-          require(out.failure.isEmpty, out.failure)
-          (id, out.mime_type, out.spans.size,
-            out.spans.filter(_.kind == "text").map(_.text).mkString("\n"))
-        }
-        .toDF("doc_id", "mime_type", "n_spans", "text_all")
+      route(s, dir) { id =>
+        val bib =
+          s"""@article{ref${id % 10}a,
+             |  author = {Author ${id % 4} and Coauthor ${(id * 3) % 5}},
+             |  title = {Study ${(id * 7) % 12} of {Things}},
+             |  journal = {Journal ${id % 3}},
+             |  year = ${1990 + (id % 30)}
+             |}
+             |@misc{ref${id % 10}b, title = "Note ${(id + 2) % 6}"}
+             |""".stripMargin
+        Ingest.toRawDoc(s"d$id.bib", bib.getBytes("UTF-8"))
+      }.select("doc_id", "mime_type", "n_spans", "text_all")
     }),
     "q_tex" -> ((s, dir) => {
       // LaTeX through the REAL ingestion route: title/maketitle, section,
       // inline styles, itemize, figure (interleaved IMAGE span + caption),
       // tabular → pipe table, inline math passthrough — all arithmetic
-      import s.implicits._
-      docIdsSpread(s, dir)
-        .as[Long].map { id =>
-          val tex =
-            raw"""\documentclass{article}
-                 |\title{Paper ${id % 6}}
-                 |\begin{document}
-                 |\maketitle
-                 |\section{Intro ${id % 4}}
-                 |Result is \textbf{${id % 8}} with \emph{margin} ${(id * 5) % 9}.
-                 |
-                 |\begin{itemize}
-                 |\item alpha ${id % 3}
-                 |\item beta ${(id + 1) % 3}
-                 |\end{itemize}
-                 |
-                 |\begin{figure}
-                 |\includegraphics{fig-${id % 2}.png}
-                 |\caption{Curve ${id % 7}}
-                 |\end{figure}
-                 |
-                 |\begin{tabular}{lr}
-                 |k & v \\
-                 |a & ${id % 5} \\
-                 |\end{tabular}
-                 |
-                 |Math $$x^{${id % 3}}$$ inline.
-                 |\end{document}
-                 |""".stripMargin // NB: $$ in the interpolator renders a single $
-          val out = graft.pipeline.Pipeline.extractOne(
-            graft.io.Ingest.toRawDoc(s"d$id.tex", tex.getBytes("UTF-8")))
-          require(out.failure.isEmpty, out.failure)
-          (id, out.mime_type, out.spans.size,
-            out.spans.map(_.kind).mkString(","),
-            out.spans.filter(_.kind == "image").map(_.media_ref).mkString(","),
-            out.spans.filter(_.kind == "text").map(_.text).mkString("\n"))
-        }
-        .toDF("doc_id", "mime_type", "n_spans", "kinds", "media_refs", "text_all")
+      route(s, dir) { id =>
+        val tex =
+          raw"""\documentclass{article}
+               |\title{Paper ${id % 6}}
+               |\begin{document}
+               |\maketitle
+               |\section{Intro ${id % 4}}
+               |Result is \textbf{${id % 8}} with \emph{margin} ${(id * 5) % 9}.
+               |
+               |\begin{itemize}
+               |\item alpha ${id % 3}
+               |\item beta ${(id + 1) % 3}
+               |\end{itemize}
+               |
+               |\begin{figure}
+               |\includegraphics{fig-${id % 2}.png}
+               |\caption{Curve ${id % 7}}
+               |\end{figure}
+               |
+               |\begin{tabular}{lr}
+               |k & v \\
+               |a & ${id % 5} \\
+               |\end{tabular}
+               |
+               |Math $$x^{${id % 3}}$$ inline.
+               |\end{document}
+               |""".stripMargin // NB: $$ in the interpolator renders a single $
+        Ingest.toRawDoc(s"d$id.tex", tex.getBytes("UTF-8"))
+      }.select("doc_id", "mime_type", "n_spans", "kinds", "media_refs", "text_all")
     }),
     "q_ipynb" -> ((s, dir) => {
       // Jupyter notebooks through the REAL ingestion route: nbformat-4
@@ -919,88 +900,67 @@ object SparkEntry {
       // execute_result outputs), and — on ids % 3 == 0 — an error output
       // whose traceback carries real JSON-escaped ANSI color codes that
       // the extractor must strip
-      import s.implicits._
-      docIdsSpread(s, dir)
-        .as[Long].map { id =>
-          val escJ = "\\" + "u001b" // JSON escape for ESC, as notebooks carry it
-          val err =
-            if (id % 3 == 0)
-              s""",{"output_type":"error","ename":"ValueError","evalue":"bad ${id % 4}",
-                 |   "traceback":["${escJ}[0;31mValueError${escJ}[0m: bad ${id % 4}"]}""".stripMargin
-            else ""
-          val json =
-            s"""{"nbformat":4,"nbformat_minor":5,
-               |  "metadata":{"language_info":{"name":"python"}},
-               |  "cells":[
-               |   {"cell_type":"markdown",
-               |    "source":["# Notebook ${id % 7}\\n","\\n","Analysis of run ${(id * 3) % 11}."]},
-               |   {"cell_type":"code",
-               |    "source":["x = ${id % 9}\\n","print(x * 2)"],
-               |    "outputs":[
-               |     {"output_type":"stream","name":"stdout","text":["${(id % 9) * 2}\\n"]},
-               |     {"output_type":"execute_result","data":{"text/plain":["${id % 5}"]}}$err]}]}""".stripMargin
-          val out = graft.pipeline.Pipeline.extractOne(
-            graft.io.Ingest.toRawDoc(s"d$id.ipynb", json.getBytes("UTF-8")))
-          require(out.failure.isEmpty, out.failure)
-          (id, out.mime_type, out.page_count, out.spans.size,
-            out.spans.filter(_.kind == "text").map(_.text).mkString("\n"))
-        }
-        .toDF("doc_id", "mime_type", "page_count", "n_spans", "text_all")
+      route(s, dir) { id =>
+        val escJ = "\\" + "u001b" // JSON escape for ESC, as notebooks carry it
+        val err =
+          if (id % 3 == 0)
+            s""",{"output_type":"error","ename":"ValueError","evalue":"bad ${id % 4}",
+               |   "traceback":["${escJ}[0;31mValueError${escJ}[0m: bad ${id % 4}"]}""".stripMargin
+          else ""
+        val json =
+          s"""{"nbformat":4,"nbformat_minor":5,
+             |  "metadata":{"language_info":{"name":"python"}},
+             |  "cells":[
+             |   {"cell_type":"markdown",
+             |    "source":["# Notebook ${id % 7}\\n","\\n","Analysis of run ${(id * 3) % 11}."]},
+             |   {"cell_type":"code",
+             |    "source":["x = ${id % 9}\\n","print(x * 2)"],
+             |    "outputs":[
+             |     {"output_type":"stream","name":"stdout","text":["${(id % 9) * 2}\\n"]},
+             |     {"output_type":"execute_result","data":{"text/plain":["${id % 5}"]}}$err]}]}""".stripMargin
+        Ingest.toRawDoc(s"d$id.ipynb", json.getBytes("UTF-8"))
+      }.select("doc_id", "mime_type", "page_count", "n_spans", "text_all")
     }),
     "q_rst" -> ((s, dir) => {
       // rST through the REAL ingestion route: section underlines become
       // docutils-leveled headings, a literal block fences, inline
       // ``literal`` converts — all arithmetic in doc_id
-      import s.implicits._
-      docIdsSpread(s, dir)
-        .as[Long].map { id =>
-          val rst =
-            s"""Title ${id % 5}
-               |====================
-               |
-               |Body paragraph ${(id * 2) % 9} with ``code`` inline
-               |
-               |Sub ${id % 3}
-               |--------------------
-               |
-               |Closing words ${(id + 4) % 6}
-               |""".stripMargin
-          val out = graft.pipeline.Pipeline.extractOne(
-            graft.io.Ingest.toRawDoc(s"d$id.rst", rst.getBytes("UTF-8")))
-          require(out.failure.isEmpty, out.failure)
-          (id, out.page_count, out.spans.size,
-            out.spans.filter(_.kind == "text").map(_.text).mkString("\n"))
-        }
-        .toDF("doc_id", "page_count", "n_spans", "text_all")
+      route(s, dir) { id =>
+        val rst =
+          s"""Title ${id % 5}
+             |====================
+             |
+             |Body paragraph ${(id * 2) % 9} with ``code`` inline
+             |
+             |Sub ${id % 3}
+             |--------------------
+             |
+             |Closing words ${(id + 4) % 6}
+             |""".stripMargin
+        Ingest.toRawDoc(s"d$id.rst", rst.getBytes("UTF-8"))
+      }.select("doc_id", "page_count", "n_spans", "text_all")
     }),
     "q_org" -> ((s, dir) => {
       // org-mode through the REAL ingestion route: #+TITLE keyword, star
       // headline with *bold* inline, an org table whose |---+---| rule
       // becomes the separator, and a #+BEGIN_SRC fence — arithmetic in
       // doc_id
-      import s.implicits._
-      docIdsSpread(s, dir)
-        .as[Long].map { id =>
-          val org =
-            s"""#+TITLE: Notes ${id % 5}
-               |
-               |* Section ${(id * 2) % 9} with *bold* text
-               |
-               || k | v |
-               ||---+---|
-               || a | ${id % 7} |
-               |
-               |#+BEGIN_SRC scala
-               |val n = ${id % 4}
-               |#+END_SRC
-               |""".stripMargin
-          val out = graft.pipeline.Pipeline.extractOne(
-            graft.io.Ingest.toRawDoc(s"d$id.org", org.getBytes("UTF-8")))
-          require(out.failure.isEmpty, out.failure)
-          (id, out.page_count, out.spans.size,
-            out.spans.filter(_.kind == "text").map(_.text).mkString("\n"))
-        }
-        .toDF("doc_id", "page_count", "n_spans", "text_all")
+      route(s, dir) { id =>
+        val org =
+          s"""#+TITLE: Notes ${id % 5}
+             |
+             |* Section ${(id * 2) % 9} with *bold* text
+             |
+             || k | v |
+             ||---+---|
+             || a | ${id % 7} |
+             |
+             |#+BEGIN_SRC scala
+             |val n = ${id % 4}
+             |#+END_SRC
+             |""".stripMargin
+        Ingest.toRawDoc(s"d$id.org", org.getBytes("UTF-8"))
+      }.select("doc_id", "page_count", "n_spans", "text_all")
     }),
     "q_xls" -> ((s, dir) => {
       // the FULL Excel container family through the REAL ingestion route,
@@ -1013,7 +973,7 @@ object SparkEntry {
       // two sheets; title from SummaryInformation / core.xml
       import graft.extract.XlsExtract
       import graft.extract.XlsExtract.{XlsNum, XlsRkInt, XlsStr}
-      byteRoute(s, dir) { id =>
+      route(s, dir) { id =>
         val sheets = Seq(
           ("Data", Seq(
             Seq[XlsExtract.XlsCell](XlsStr("Name"), XlsStr("Qty"), XlsStr("Price")),
@@ -1036,286 +996,216 @@ object SparkEntry {
             })) }))
           case _ => ("xla", XlsExtract.buildXls(title, sheets, continueAtStart = true))
         }
-        (s"d$id.$ext", bytes)
-      }
+        Ingest.toRawDoc(s"d$id.$ext", bytes)
+      }.select(ByteCols: _*)
     }),
     "q_csv" -> ((s, dir) => {
       // delimited text through the REAL ingestion route — csv on even ids
       // (RFC 4180 quoting: embedded delimiter, doubled quotes), tsv on odd
       // (same cells unquoted) → the SAME pipe table either way
-      import s.implicits._
-      docIdsSpread(s, dir)
-        .as[Long].map { id =>
-          val cells = Seq(
-            Seq("name", "qty", "note"),
-            Seq(s"alpha ${id % 5}", s"${id % 7}", s"x, y ${id % 3}"),
-            Seq("say \"hi\"", s"${(id * 2) % 9}", s"line${id % 4}"))
-          val (ext, text) =
-            if (id % 2 == 0) {
-              def q(c: String) =
-                if (c.contains(",") || c.contains("\""))
-                  "\"" + c.replace("\"", "\"\"") + "\""
-                else c
-              ("csv", cells.map(_.map(q).mkString(",")).mkString("", "\n", "\n"))
-            } else ("tsv", cells.map(_.mkString("\t")).mkString("", "\n", "\n"))
-          val out = graft.pipeline.Pipeline.extractOne(
-            graft.io.Ingest.toRawDoc(s"d$id.$ext", text.getBytes("UTF-8")))
-          require(out.failure.isEmpty, out.failure)
-          (id, out.mime_type, out.page_count, out.spans.size,
-            out.spans.filter(_.kind == "text").map(_.text).mkString("\n"))
-        }
-        .toDF("doc_id", "mime_type", "page_count", "n_spans", "text_all")
+      route(s, dir) { id =>
+        val cells = Seq(
+          Seq("name", "qty", "note"),
+          Seq(s"alpha ${id % 5}", s"${id % 7}", s"x, y ${id % 3}"),
+          Seq("say \"hi\"", s"${(id * 2) % 9}", s"line${id % 4}"))
+        val (ext, text) =
+          if (id % 2 == 0) {
+            def q(c: String) =
+              if (c.contains(",") || c.contains("\""))
+                "\"" + c.replace("\"", "\"\"") + "\""
+              else c
+            ("csv", cells.map(_.map(q).mkString(",")).mkString("", "\n", "\n"))
+          } else ("tsv", cells.map(_.mkString("\t")).mkString("", "\n", "\n"))
+        Ingest.toRawDoc(s"d$id.$ext", text.getBytes("UTF-8"))
+      }.select("doc_id", "mime_type", "page_count", "n_spans", "text_all")
     }),
     "q_typst" -> ((s, dir) => {
       // Typst markup through the REAL ingestion route: = headings, inline
       // *bold*/_emph_, #image → standalone image span, bullet list, raw
       // fence, #link — arithmetic in doc_id (reference pandoc surface,
       // mime_types.py:98)
-      import s.implicits._
-      docIdsSpread(s, dir)
-        .as[Long].map { id =>
-          val typ =
-            s"""= Doc ${id % 5}
-               |== Part ${(id * 2) % 7}
-               |Some *very* important _words_ ${(id + 1) % 4} here.
-               |
-               |#image("plot-${id % 3}.png")
-               |
-               |- alpha ${id % 6}
-               |- beta
-               |
-               |```scala
-               |val x = ${id % 9}
-               |```
-               |See #link("http://e.x")[docs ${id % 2}] now.
-               |""".stripMargin
-          val out = graft.pipeline.Pipeline.extractOne(
-            graft.io.Ingest.toRawDoc(s"d$id.typ", typ.getBytes("UTF-8"),
-              "application/x-typst"))
-          require(out.failure.isEmpty, out.failure)
-          (id, out.mime_type, out.spans.size,
-            out.spans.map(_.kind).mkString(","),
-            out.spans.filter(_.kind == "image").map(_.media_ref).mkString(","),
-            out.spans.filter(_.kind == "text").map(_.text).mkString("\n"))
-        }
-        .toDF("doc_id", "mime_type", "n_spans", "kinds", "media_refs", "text_all")
+      route(s, dir) { id =>
+        val typ =
+          s"""= Doc ${id % 5}
+             |== Part ${(id * 2) % 7}
+             |Some *very* important _words_ ${(id + 1) % 4} here.
+             |
+             |#image("plot-${id % 3}.png")
+             |
+             |- alpha ${id % 6}
+             |- beta
+             |
+             |```scala
+             |val x = ${id % 9}
+             |```
+             |See #link("http://e.x")[docs ${id % 2}] now.
+             |""".stripMargin
+        Ingest.toRawDoc(s"d$id.typ", typ.getBytes("UTF-8"), "application/x-typst")
+      }.select("doc_id", "mime_type", "n_spans", "kinds", "media_refs", "text_all")
     }),
     "q_man" -> ((s, dir) => {
       // manual pages through the REAL ingestion route — classic man(7)
       // macros on even ids (.TH/.SH/.TP, \fB..\fR fonts, .nf/.fi), BSD
       // mdoc(7) semantic macros on odd (.Dt/.Sh/.Nm/.Nd/.Ar/.Dl) —
       // arithmetic in doc_id (reference pandoc surface, mime_types.py:101,103)
-      import s.implicits._
-      docIdsSpread(s, dir)
-        .as[Long].map { id =>
-          val (ext, mime, src) =
-            if (id % 2 == 0)
-              ("1", "text/troff",
-                s""".TH TOOL${id % 4} 1
-                   |.SH NAME
-                   |tool${id % 4} \\- does thing ${(id * 3) % 7}
-                   |.SH DESCRIPTION
-                   |Runs with \\fBbold ${id % 5}\\fR form.
-                   |.TP
-                   |.B \\-x
-                   |Option ${(id + 2) % 6}.
-                   |.nf
-                   |code ${id % 3}
-                   |.fi
-                   |""".stripMargin)
-            else
-              ("mdoc", "text/x-mdoc",
-                s""".Dd January 1, 2024
-                   |.Dt TOOL${id % 4} 1
-                   |.Os
-                   |.Sh NAME
-                   |.Nm tool${id % 4}
-                   |.Nd does thing ${(id * 3) % 7}
-                   |.Sh DESCRIPTION
-                   |Runs with
-                   |.Ar file
-                   |operands ${id % 5}.
-                   |.Dl make ${id % 3}
-                   |""".stripMargin)
-          val out = graft.pipeline.Pipeline.extractOne(
-            graft.io.Ingest.toRawDoc(s"d$id.$ext", src.getBytes("UTF-8"), mime))
-          require(out.failure.isEmpty, out.failure)
-          (id, out.mime_type, out.spans.size,
-            out.spans.filter(_.kind == "text").map(_.text).mkString("\n"))
-        }
-        .toDF("doc_id", "mime_type", "n_spans", "text_all")
+      route(s, dir) { id =>
+        val (ext, mime, src) =
+          if (id % 2 == 0)
+            ("1", "text/troff",
+              s""".TH TOOL${id % 4} 1
+                 |.SH NAME
+                 |tool${id % 4} \\- does thing ${(id * 3) % 7}
+                 |.SH DESCRIPTION
+                 |Runs with \\fBbold ${id % 5}\\fR form.
+                 |.TP
+                 |.B \\-x
+                 |Option ${(id + 2) % 6}.
+                 |.nf
+                 |code ${id % 3}
+                 |.fi
+                 |""".stripMargin)
+          else
+            ("mdoc", "text/x-mdoc",
+              s""".Dd January 1, 2024
+                 |.Dt TOOL${id % 4} 1
+                 |.Os
+                 |.Sh NAME
+                 |.Nm tool${id % 4}
+                 |.Nd does thing ${(id * 3) % 7}
+                 |.Sh DESCRIPTION
+                 |Runs with
+                 |.Ar file
+                 |operands ${id % 5}.
+                 |.Dl make ${id % 3}
+                 |""".stripMargin)
+        Ingest.toRawDoc(s"d$id.$ext", src.getBytes("UTF-8"), mime)
+      }.select("doc_id", "mime_type", "n_spans", "text_all")
     }),
     "q_dokuwiki" -> ((s, dir) => {
       // DokuWiki syntax through the REAL ingestion route: ====== headings,
       // //italic///''mono'', [[url|label]] links, a standalone {{media}}
       // block → image span, lists, <code lang> fence — arithmetic in
       // doc_id (reference pandoc surface, mime_types.py:103)
-      import s.implicits._
-      docIdsSpread(s, dir)
-        .as[Long].map { id =>
-          val doku =
-            s"""====== Wiki ${id % 5} ======
-               |===== Part ${(id * 2) % 7} =====
-               |Some //italic ${id % 4}// and **bold** with ''mono ${id % 6}'' text.
-               |Link [[http://a|site ${id % 3}]] here.
-               |
-               |{{ img-${id % 2}.png?200 |cap}}
-               |
-               |  * one ${(id + 3) % 8}
-               |  * two
-               |
-               |<code python>
-               |print(${id % 9})
-               |</code>
-               |""".stripMargin
-          val out = graft.pipeline.Pipeline.extractOne(
-            graft.io.Ingest.toRawDoc(s"d$id.txt", doku.getBytes("UTF-8"),
-              "text/x-dokuwiki"))
-          require(out.failure.isEmpty, out.failure)
-          (id, out.mime_type, out.spans.size,
-            out.spans.map(_.kind).mkString(","),
-            out.spans.filter(_.kind == "image").map(_.media_ref).mkString(","),
-            out.spans.filter(_.kind == "text").map(_.text).mkString("\n"))
-        }
-        .toDF("doc_id", "mime_type", "n_spans", "kinds", "media_refs", "text_all")
+      route(s, dir) { id =>
+        val doku =
+          s"""====== Wiki ${id % 5} ======
+             |===== Part ${(id * 2) % 7} =====
+             |Some //italic ${id % 4}// and **bold** with ''mono ${id % 6}'' text.
+             |Link [[http://a|site ${id % 3}]] here.
+             |
+             |{{ img-${id % 2}.png?200 |cap}}
+             |
+             |  * one ${(id + 3) % 8}
+             |  * two
+             |
+             |<code python>
+             |print(${id % 9})
+             |</code>
+             |""".stripMargin
+        Ingest.toRawDoc(s"d$id.txt", doku.getBytes("UTF-8"), "text/x-dokuwiki")
+      }.select("doc_id", "mime_type", "n_spans", "kinds", "media_refs", "text_all")
     }),
     "q_pod" -> ((s, dir) => {
       // Perl POD through the REAL ingestion route: =head1/=head2, B</C<
       // inline codes, E<lt> escapes, indented verbatim → fence, =over/
       // =item bullets, =cut terminator — arithmetic in doc_id (reference
       // pandoc surface, mime_types.py:110)
-      import s.implicits._
-      docIdsSpread(s, dir)
-        .as[Long].map { id =>
-          val pod =
-            s"""=pod
-               |
-               |=head1 Tool ${id % 5}
-               |
-               |Runs B<fast ${id % 4}> with C<cmd --${id % 7}>.
-               |Compare 1 E<lt> ${(id + 2) % 9}.
-               |
-               |    $$ tool --run ${id % 3}
-               |
-               |=over 4
-               |
-               |=item *
-               |
-               |First choice ${(id * 2) % 11}.
-               |
-               |=item *
-               |
-               |Second choice.
-               |
-               |=back
-               |
-               |=head2 Options ${id % 6}
-               |
-               |=cut
-               |
-               |ignored after cut
-               |""".stripMargin
-          val out = graft.pipeline.Pipeline.extractOne(
-            graft.io.Ingest.toRawDoc(s"d$id.pod", pod.getBytes("UTF-8"),
-              "text/x-pod"))
-          require(out.failure.isEmpty, out.failure)
-          (id, out.mime_type, out.spans.size,
-            out.spans.filter(_.kind == "text").map(_.text).mkString("\n"))
-        }
-        .toDF("doc_id", "mime_type", "n_spans", "text_all")
+      route(s, dir) { id =>
+        val pod =
+          s"""=pod
+             |
+             |=head1 Tool ${id % 5}
+             |
+             |Runs B<fast ${id % 4}> with C<cmd --${id % 7}>.
+             |Compare 1 E<lt> ${(id + 2) % 9}.
+             |
+             |    $$ tool --run ${id % 3}
+             |
+             |=over 4
+             |
+             |=item *
+             |
+             |First choice ${(id * 2) % 11}.
+             |
+             |=item *
+             |
+             |Second choice.
+             |
+             |=back
+             |
+             |=head2 Options ${id % 6}
+             |
+             |=cut
+             |
+             |ignored after cut
+             |""".stripMargin
+        Ingest.toRawDoc(s"d$id.pod", pod.getBytes("UTF-8"), "text/x-pod")
+      }.select("doc_id", "mime_type", "n_spans", "text_all")
     }),
     "q_fb2" -> ((s, dir) => {
       // FictionBook 2 through the REAL ingestion route: book-title from
       // description, body/section title nesting, emphasis inline, cite →
       // blockquote, image → image span — arithmetic in doc_id (reference
       // pandoc surface, mime_types.py — application/x-fictionbook+xml)
-      import s.implicits._
-      docIdsSpread(s, dir)
-        .as[Long].map { id =>
-          val fb2 =
-            s"""<FictionBook xmlns="http://www.gribuser.ru/xml/fictionbook/2.0"
-               |             xmlns:l="http://www.w3.org/1999/xlink">
-               |<description><title-info><book-title>Book ${id % 5}</book-title></title-info></description>
-               |<body>
-               | <title><p>Volume ${(id % 3) + 1}</p></title>
-               | <section>
-               |  <title><p>Chapter ${(id * 2) % 9}</p></title>
-               |  <p>It was <emphasis>a</emphasis> night ${id % 4}.</p>
-               |  <cite><p>Quote ${(id + 5) % 7}.</p></cite>
-               |  <image l:href="#pic${id % 2}.png"/>
-               | </section>
-               |</body>
-               |</FictionBook>""".stripMargin
-          val out = graft.pipeline.Pipeline.extractOne(
-            graft.io.Ingest.toRawDoc(s"d$id.fb2", fb2.getBytes("UTF-8"),
-              "application/x-fictionbook+xml"))
-          require(out.failure.isEmpty, out.failure)
-          (id, out.mime_type, out.spans.size,
-            out.spans.map(_.kind).mkString(","),
-            out.spans.filter(_.kind == "image").map(_.media_ref).mkString(","),
-            out.spans.filter(_.kind == "text").map(_.text).mkString("\n"))
-        }
-        .toDF("doc_id", "mime_type", "n_spans", "kinds", "media_refs", "text_all")
+      route(s, dir) { id =>
+        val fb2 =
+          s"""<FictionBook xmlns="http://www.gribuser.ru/xml/fictionbook/2.0"
+             |             xmlns:l="http://www.w3.org/1999/xlink">
+             |<description><title-info><book-title>Book ${id % 5}</book-title></title-info></description>
+             |<body>
+             | <title><p>Volume ${(id % 3) + 1}</p></title>
+             | <section>
+             |  <title><p>Chapter ${(id * 2) % 9}</p></title>
+             |  <p>It was <emphasis>a</emphasis> night ${id % 4}.</p>
+             |  <cite><p>Quote ${(id + 5) % 7}.</p></cite>
+             |  <image l:href="#pic${id % 2}.png"/>
+             | </section>
+             |</body>
+             |</FictionBook>""".stripMargin
+        Ingest.toRawDoc(s"d$id.fb2", fb2.getBytes("UTF-8"), "application/x-fictionbook+xml")
+      }.select("doc_id", "mime_type", "n_spans", "kinds", "media_refs", "text_all")
     }),
     "q_jats" -> ((s, dir) => {
       // JATS article XML through the REAL ingestion route: front-matter
       // title + abstract, sec nesting, monospace inline, ordered list,
       // fig/graphic → image span + caption — arithmetic in doc_id
       // (reference pandoc surface, mime_types.py:94)
-      import s.implicits._
-      docIdsSpread(s, dir)
-        .as[Long].map { id =>
-          val jats =
-            s"""<article xmlns:xlink="http://www.w3.org/1999/xlink">
-               | <front><article-meta><title-group><article-title>Paper ${id % 6}</article-title></title-group>
-               |  <abstract><p>We study ${id % 4} things.</p></abstract></article-meta></front>
-               | <body>
-               |  <sec><title>Methods ${(id * 3) % 8}</title>
-               |   <p>Use <monospace>cmd-${id % 5}</monospace> now.</p>
-               |   <list list-type="order"><list-item><p>first ${id % 3}</p></list-item>
-               |     <list-item><p>second</p></list-item></list>
-               |  </sec>
-               |  <fig><graphic xlink:href="f${id % 2}.png"/><caption><p>Figure ${(id + 1) % 7}.</p></caption></fig>
-               | </body>
-               |</article>""".stripMargin
-          val out = graft.pipeline.Pipeline.extractOne(
-            graft.io.Ingest.toRawDoc(s"d$id.xml", jats.getBytes("UTF-8"),
-              "application/x-jats+xml"))
-          require(out.failure.isEmpty, out.failure)
-          (id, out.mime_type, out.spans.size,
-            out.spans.map(_.kind).mkString(","),
-            out.spans.filter(_.kind == "image").map(_.media_ref).mkString(","),
-            out.spans.filter(_.kind == "text").map(_.text).mkString("\n"))
-        }
-        .toDF("doc_id", "mime_type", "n_spans", "kinds", "media_refs", "text_all")
+      route(s, dir) { id =>
+        val jats =
+          s"""<article xmlns:xlink="http://www.w3.org/1999/xlink">
+             | <front><article-meta><title-group><article-title>Paper ${id % 6}</article-title></title-group>
+             |  <abstract><p>We study ${id % 4} things.</p></abstract></article-meta></front>
+             | <body>
+             |  <sec><title>Methods ${(id * 3) % 8}</title>
+             |   <p>Use <monospace>cmd-${id % 5}</monospace> now.</p>
+             |   <list list-type="order"><list-item><p>first ${id % 3}</p></list-item>
+             |     <list-item><p>second</p></list-item></list>
+             |  </sec>
+             |  <fig><graphic xlink:href="f${id % 2}.png"/><caption><p>Figure ${(id + 1) % 7}.</p></caption></fig>
+             | </body>
+             |</article>""".stripMargin
+        Ingest.toRawDoc(s"d$id.xml", jats.getBytes("UTF-8"), "application/x-jats+xml")
+      }.select("doc_id", "mime_type", "n_spans", "kinds", "media_refs", "text_all")
     }),
     "q_opml" -> ((s, dir) => {
       // OPML outlines through the REAL ingestion route: head title →
       // heading, nested outline elements → nested list, xmlUrl → link,
       // _note suffix — arithmetic in doc_id (reference pandoc surface,
       // mime_types.py:96)
-      import s.implicits._
-      docIdsSpread(s, dir)
-        .as[Long].map { id =>
-          val opml =
-            s"""<opml version="2.0">
-               | <head><title>Plans ${id % 5}</title></head>
-               | <body>
-               |  <outline text="Top ${(id * 2) % 7}">
-               |   <outline text="Sub ${id % 4}"/>
-               |   <outline text="Feed" xmlUrl="http://f/${id % 3}"/>
-               |  </outline>
-               |  <outline text="Item ${(id + 4) % 9}" _note="note ${id % 6}"/>
-               | </body>
-               |</opml>""".stripMargin
-          val out = graft.pipeline.Pipeline.extractOne(
-            graft.io.Ingest.toRawDoc(s"d$id.opml", opml.getBytes("UTF-8"),
-              "application/x-opml+xml"))
-          require(out.failure.isEmpty, out.failure)
-          (id, out.mime_type, out.spans.size,
-            out.spans.filter(_.kind == "text").map(_.text).mkString("\n"))
-        }
-        .toDF("doc_id", "mime_type", "n_spans", "text_all")
+      route(s, dir) { id =>
+        val opml =
+          s"""<opml version="2.0">
+             | <head><title>Plans ${id % 5}</title></head>
+             | <body>
+             |  <outline text="Top ${(id * 2) % 7}">
+             |   <outline text="Sub ${id % 4}"/>
+             |   <outline text="Feed" xmlUrl="http://f/${id % 3}"/>
+             |  </outline>
+             |  <outline text="Item ${(id + 4) % 9}" _note="note ${id % 6}"/>
+             | </body>
+             |</opml>""".stripMargin
+        Ingest.toRawDoc(s"d$id.opml", opml.getBytes("UTF-8"), "application/x-opml+xml")
+      }.select("doc_id", "mime_type", "n_spans", "text_all")
     }),
     "q_refs" -> ((s, dir) => {
       // the remaining bibliography dialects through the REAL ingestion
@@ -1323,87 +1213,70 @@ object SparkEntry {
       // id%3==0 RIS line-tags, ==1 CSL-JSON, ==2 EndNote XML — all
       // normalize into BibtexExtract.render's shared reference-list line,
       // differing only in the kind vocabulary and id slot
-      import s.implicits._
-      docIdsSpread(s, dir)
-        .as[Long].map { id =>
-          val y = 1980 + (id % 40)
-          val (m, j, k, p) = (id % 9, id % 4, id % 10, (id + 1) % 6)
-          val (ext, mime, src) = (id % 3) match {
-            case 0 => ("ris", "application/x-research-info-systems",
-              s"""TY  - JOUR
-                 |AU  - Knuth, Donald E.
-                 |TI  - Study $m
-                 |JO  - Journal $j
-                 |PY  - $y
-                 |ID  - r$k
-                 |ER  -
-                 |TY  - BOOK
-                 |TI  - Note $p
-                 |ER  -
-                 |""".stripMargin)
-            case 1 => ("json", "application/csl+json",
-              s"""[{"id":"r$k","type":"article-journal",
-                 |  "author":[{"family":"Knuth","given":"Donald E."}],
-                 |  "issued":{"date-parts":[[$y,1,1]]},
-                 |  "title":"Study $m","container-title":"Journal $j"},
-                 | {"type":"book","title":"Note $p"}]""".stripMargin)
-            case _ => ("xml", "application/x-endnote+xml",
-              s"""<xml><records>
-                 |<record>
-                 | <rec-number>$k</rec-number>
-                 | <ref-type name="Journal Article">17</ref-type>
-                 | <contributors><authors><author><style>Knuth, Donald E.</style></author></authors></contributors>
-                 | <titles><title><style>Study $m</style></title></titles>
-                 | <periodical><full-title><style>Journal $j</style></full-title></periodical>
-                 | <dates><year><style>$y</style></year></dates>
-                 |</record>
-                 |<record>
-                 | <ref-type name="Book">6</ref-type>
-                 | <titles><title><style>Note $p</style></title></titles>
-                 |</record>
-                 |</records></xml>""".stripMargin)
-          }
-          val out = graft.pipeline.Pipeline.extractOne(
-            graft.io.Ingest.toRawDoc(s"d$id.$ext", src.getBytes("UTF-8"), mime))
-          require(out.failure.isEmpty, out.failure)
-          (id, out.mime_type, out.spans.size,
-            out.spans.filter(_.kind == "text").map(_.text).mkString("\n"))
+      route(s, dir) { id =>
+        val y = 1980 + (id % 40)
+        val (m, j, k, p) = (id % 9, id % 4, id % 10, (id + 1) % 6)
+        val (ext, mime, src) = (id % 3) match {
+          case 0 => ("ris", "application/x-research-info-systems",
+            s"""TY  - JOUR
+               |AU  - Knuth, Donald E.
+               |TI  - Study $m
+               |JO  - Journal $j
+               |PY  - $y
+               |ID  - r$k
+               |ER  -
+               |TY  - BOOK
+               |TI  - Note $p
+               |ER  -
+               |""".stripMargin)
+          case 1 => ("json", "application/csl+json",
+            s"""[{"id":"r$k","type":"article-journal",
+               |  "author":[{"family":"Knuth","given":"Donald E."}],
+               |  "issued":{"date-parts":[[$y,1,1]]},
+               |  "title":"Study $m","container-title":"Journal $j"},
+               | {"type":"book","title":"Note $p"}]""".stripMargin)
+          case _ => ("xml", "application/x-endnote+xml",
+            s"""<xml><records>
+               |<record>
+               | <rec-number>$k</rec-number>
+               | <ref-type name="Journal Article">17</ref-type>
+               | <contributors><authors><author><style>Knuth, Donald E.</style></author></authors></contributors>
+               | <titles><title><style>Study $m</style></title></titles>
+               | <periodical><full-title><style>Journal $j</style></full-title></periodical>
+               | <dates><year><style>$y</style></year></dates>
+               |</record>
+               |<record>
+               | <ref-type name="Book">6</ref-type>
+               | <titles><title><style>Note $p</style></title></titles>
+               |</record>
+               |</records></xml>""".stripMargin)
         }
-        .toDF("doc_id", "mime_type", "n_spans", "text_all")
+        Ingest.toRawDoc(s"d$id.$ext", src.getBytes("UTF-8"), mime)
+      }.select("doc_id", "mime_type", "n_spans", "text_all")
     }),
     "q_docbook" -> ((s, dir) => {
       // DocBook XML through the REAL ingestion route: info-wrapped title,
       // section → heading, emphasis/role=bold inline, programlisting →
       // fence, itemizedlist, mediaobject/imagedata → image span —
       // arithmetic in doc_id (reference pandoc surface, mime_types.py:84)
-      import s.implicits._
-      docIdsSpread(s, dir)
-        .as[Long].map { id =>
-          val xml =
-            s"""<article>
-               |  <info><title>Guide ${id % 5}</title></info>
-               |  <section>
-               |    <title>Intro ${(id * 2) % 7}</title>
-               |    <para>Hello <emphasis>world ${id % 4}</emphasis> and
-               |      <emphasis role="bold">bold</emphasis> text.</para>
-               |    <programlisting language="scala">val x = ${id % 9}</programlisting>
-               |    <itemizedlist>
-               |      <listitem><para>first ${id % 3}</para></listitem>
-               |      <listitem><para>second</para></listitem>
-               |    </itemizedlist>
-               |    <mediaobject><imageobject><imagedata fileref="fig${id % 2}.png"/></imageobject></mediaobject>
-               |  </section>
-               |</article>""".stripMargin
-          val out = graft.pipeline.Pipeline.extractOne(
-            graft.io.Ingest.toRawDoc(s"d$id.xml", xml.getBytes("UTF-8"),
-              "application/docbook+xml"))
-          require(out.failure.isEmpty, out.failure)
-          (id, out.mime_type, out.spans.size,
-            out.spans.map(_.kind).mkString(","),
-            out.spans.filter(_.kind == "image").map(_.media_ref).mkString(","),
-            out.spans.filter(_.kind == "text").map(_.text).mkString("\n"))
-        }
-        .toDF("doc_id", "mime_type", "n_spans", "kinds", "media_refs", "text_all")
+      route(s, dir) { id =>
+        val xml =
+          s"""<article>
+             |  <info><title>Guide ${id % 5}</title></info>
+             |  <section>
+             |    <title>Intro ${(id * 2) % 7}</title>
+             |    <para>Hello <emphasis>world ${id % 4}</emphasis> and
+             |      <emphasis role="bold">bold</emphasis> text.</para>
+             |    <programlisting language="scala">val x = ${id % 9}</programlisting>
+             |    <itemizedlist>
+             |      <listitem><para>first ${id % 3}</para></listitem>
+             |      <listitem><para>second</para></listitem>
+             |    </itemizedlist>
+             |    <mediaobject><imageobject><imagedata fileref="fig${id % 2}.png"/></imageobject></mediaobject>
+             |  </section>
+             |</article>""".stripMargin
+        Ingest.toRawDoc(s"d$id.xml", xml.getBytes("UTF-8"), "application/docbook+xml")
+      }.select("doc_id", "mime_type", "n_spans", "kinds", "media_refs", "text_all")
     }),
     "q_boilerplate" -> ((s, dir) => {
       // CCNet-style corpus-level boilerplate-paragraph removal: every doc

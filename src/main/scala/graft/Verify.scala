@@ -1,6 +1,6 @@
 package graft
 import graft.io.SyntheticDocs
-import org.apache.spark.sql.SparkSession
+import graft.pipeline.Pipeline
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,13 +11,9 @@ object Verify {
     // only; the driver always passes two args and gets the full surface)
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").map(_.trim).toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    // the production session config, so the gate runs the tuned join plans
+    val spark = Pipeline.session(s"local[$cpus]", cpus, "graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Materialize the generator-truth side tables and point the oracle SQL
@@ -30,9 +26,12 @@ object Verify {
     val nDocs = SyntheticDocs.corpusSize(spark.read.parquet(s"$sfDir/documents.parquet").count())
     graft.io.ExpectedTables.materialize(spark, nDocs, expectedDir)
     sys.props("graft.expected.dir") = expectedDir
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
+    def selected(name: String) = only.isEmpty || only(name)
+    SparkEntry.queries.filter { case (name, _) => selected(name) }
       .foreach { case (name, fn) =>
+      // a query that throws before its write must leave NO output: a stale
+      // dir from an earlier run would otherwise pass the compare
+      graft.io.TableIO.deleteRecursively(new java.io.File(s"$outDir/$name"))
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -51,7 +50,9 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    // a filtered run dumps only its own oracles, so the compare counts
+    // exactly the queries that ran
+    val json = SparkEntry.oracleSql.filter { case (name, _) => selected(name) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -184,4 +184,12 @@ class IngestSpec extends AnyFunSuite {
     assert(out.source_path == "synthetic://rtf_bytes/doc-7.rtf")
     assert(out.metadata == Map("rtf_paragraphs" -> "1"))
   }
+
+  test("every SparkEntry query has a DuckDB oracle, and every oracle a query") {
+    // the local oracle gate walks the oracle keys, so a query without an
+    // oracle would drop out of the gate unseen
+    val (queries, oracles) = (SparkEntry.queries.keySet, SparkEntry.oracleSql.keySet)
+    assert(queries -- oracles == Set.empty && oracles -- queries == Set.empty)
+    assert(queries.size == 90)
+  }
 }

@@ -8,8 +8,11 @@ Usage: python3 tools/compare_oracle.py <sfDir> <verifyOutDir> [resultsJson]
 With a third argument, also writes per-query results in the driver's
 CORRECTNESS shape (rows_match/schema_match/hash_match/...) to that path —
 the committable artifact backing "all green" claims.
+
+Every oracle in oracle_sql.json is a check: an oracle whose query left no
+output dir (or an empty one) counts as NO-OUTPUT, a failure.
 """
-import sys, json, glob, duckdb, hashlib
+import sys, os, json, glob, duckdb, hashlib
 
 sf, out = sys.argv[1], sys.argv[2]
 results_path = sys.argv[3] if len(sys.argv) > 3 else None
@@ -21,8 +24,10 @@ for t in ("region nation customer supplier part orders lineitem events "
 
 oracles = json.load(open(f"{out}/oracle_sql.json"))
 fails = 0
-for name in sorted(glob.glob(f"{out}/*/")):
-    q = name.rstrip("/").split("/")[-1]
+dirs = {d.rstrip("/").split("/")[-1] for d in glob.glob(f"{out}/*/")}
+names = sorted(set(oracles) | dirs)
+for q in names:
+    name = os.path.join(out, q)
     spark_files = glob.glob(f"{name}/*.parquet")
     if not spark_files:
         print(f"{q:24s} NO-OUTPUT"); fails += 1
@@ -70,8 +75,10 @@ for name in sorted(glob.glob(f"{out}/*/")):
             print(merged.head(5))
     else:
         print(f"{q:24s} ORACLE-OK rows={sn}")
+print(f"PASSED: {len(names) - fails}/{len(names)}")
 print("FAILURES:", fails)
 if results_path:
     with open(results_path, "w") as f:
-        json.dump({"sf": sf, "failures": fails, "queries": results}, f, indent=1)
+        json.dump({"sf": sf, "passed": len(names) - fails, "total": len(names),
+                   "failures": fails, "queries": results}, f, indent=1)
 sys.exit(1 if fails else 0)
