@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines, all expressed as
@@ -390,33 +390,41 @@ object Dedup {
     * collapse a,b,c into ONE cluster even when a~c was never emitted).
     *
     * Iterative min-label propagation WITH pointer jumping: each round does
-    * (1) a one-hop neighbor-min join and (2) a label(label) shortcut join —
-    * the classic path-doubling step — so the remaining distance to the
-    * component minimum roughly HALVES per round and rounds = O(log
-    * diameter), not O(diameter). A 1000-node chain converges in ~10 rounds
-    * (ComponentsSpec locks this); near-dup cliques still finish in 2-3.
-    * The iteration runs over the EDGE-ACTIVE node set only (≤ 2·|pairs|;
-    * singletons can never change label and rejoin via one final left
-    * join), so per-round cost is two O(|active|+|edges|) shuffle joins,
-    * never O(n²) and never O(corpus).
+    * (1) a one-hop neighbor-min aggregate and (2) a label(label) shortcut
+    * join — the classic path-doubling step — so where ids grow along a
+    * path the remaining distance to the component minimum roughly HALVES
+    * per round: a 1000-node chain numbered in order converges in ~10
+    * rounds, near-dup cliques in 2-3, but a randomly numbered 200-node path
+    * needs 39 (ComponentsSpec runs both chains).
     * The alternating small-star/large-star contraction (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", SoCC'14) achieves the
-    * same bound by rewriting the edge set; the pointer-jump variant keeps
-    * the edge set constant, which is cheaper when edges >> nodes (the
-    * near-dup regime).
+    * "Connected Components in MapReduce and Beyond", SoCC'14) bounds rounds
+    * by O(log n) under any numbering by rewriting the edge set; the
+    * pointer-jump variant keeps the edge set constant, which is cheaper
+    * when edges >> nodes (the near-dup regime).
     *
-    * Each round's labels are checkpointed to break the iterative-self-join
-    * lineage blowup: RELIABLY (HDFS-durable `checkpoint`, survives executor
-    * loss mid-query) when the session has a checkpoint dir
+    * The edge list is built once and checkpointed: both directions of each
+    * pair from one scan of `pairs`, kept only when both ends are in `nodes`
+    * (an id outside `nodes` never carries a label, so it bridges nothing).
+    * The iteration runs over its EDGE-ACTIVE ends only (≤ 2·|pairs|;
+    * singletons can never change label and rejoin via one final left join),
+    * so per-round cost is O(|active|+|edges|), never O(corpus). Round 1
+    * starts from the identity, so its hop aggregates the edges alone; later
+    * hops are ONE aggregate over (neighbor labels ∪ own label), which also
+    * yields the round's previous label. Each round's labels are
+    * checkpointed to break the iterative-self-join lineage, and the
+    * checkpoint action itself counts the changed labels (an
+    * [[org.apache.spark.sql.Observation]]), so convergence costs no extra
+    * job. Checkpoints are RELIABLE (HDFS-durable `checkpoint`, survives
+    * executor loss mid-query) when the session has a checkpoint dir
     * (`sparkContext.setCheckpointDir`); `localCheckpoint` otherwise —
     * executor-local blocks, fine single-box, lossy on a cluster, so
     * cluster deployments should set the dir.
     *
     * @return (doc_id, cluster_id) for EVERY node — singletons keep their
-    *         own id, members carry the component's minimum doc_id. If
-    *         log2(diameter) exceeds `maxIters` the labels come back
-    *         partially propagated (over-segmented, never wrongly merged) —
-    *         raise `maxIters` for such graphs.
+    *         own id, members carry the component's minimum doc_id. If a
+    *         component needs more than `maxIters` rounds its labels come
+    *         back partially propagated (over-segmented, never wrongly
+    *         merged) — raise `maxIters` for such graphs.
     */
   def connectedComponents(
       nodes: DataFrame,
@@ -425,57 +433,48 @@ object Dedup {
       idCol: String = "doc_id",
       aCol: String = "id_a",
       bCol: String = "id_b"): DataFrame = {
-    val spark = nodes.sparkSession
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
+    val reliable = nodes.sparkSession.sparkContext.getCheckpointDir.isDefined
     def cp(df: DataFrame): DataFrame =
       if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(eager = true)
-    val edges = pairs.select(col(aCol).as("e_src"), col(bCol).as("e_dst"))
-      .union(pairs.select(col(bCol).as("e_src"), col(aCol).as("e_dst")))
-      .persist()
-    try {
-      // round-6 optimization (guide §2.3 — shuffle fewer bytes): only nodes
-      // INCIDENT TO AN EDGE can ever change label, so the iteration runs
-      // over the active set (bounded by 2·|pairs|), not the full node set —
-      // in the near-dup regime duplicates are a small fraction of the
-      // corpus, so every per-round join/checkpoint shrinks from O(corpus)
-      // to O(pairs). Singletons rejoin at the end with their own id, which
-      // is exactly the label the loop left them with in rounds 2-5. The
-      // semi-join keeps label semantics identical when a pair references an
-      // id absent from `nodes`: such endpoints contributed no label before
-      // and still do not.
-      val active = edges.select(col("e_src").as("doc_id")).distinct()
-        .join(nodes.select(col(idCol).as("doc_id")), Seq("doc_id"), "left_semi")
-      var labels = cp(active.select(col("doc_id"), col("doc_id").as("cluster_id")))
-      var changed = 1L
-      var iter = 0
-      while (changed > 0 && iter < maxIters) {
-        // (1) one-hop: the min label among my neighbors
-        val neigh = edges.join(labels, edges("e_dst") === labels("doc_id"))
-          .groupBy(col("e_src"))
-          .agg(min(col("cluster_id")).as("neigh_min"))
-        val hop = labels.join(neigh, labels("doc_id") === neigh("e_src"), "left")
-          .select(labels("doc_id"), col("cluster_id").as("prev"),
-            least(col("cluster_id"), coalesce(col("neigh_min"), col("cluster_id")))
-              .as("mid"))
-        // (2) pointer jump: label := label(label) — cluster_id always names
-        // a real node, so the shortcut join halves the remaining distance
-        val parents = hop.select(col("doc_id").as("p_id"), col("mid").as("p_label"))
-        val next = cp(hop.join(parents, hop("mid") === parents("p_id"), "left")
-          .select(hop("doc_id"),
-            least(col("mid"), coalesce(col("p_label"), col("mid"))).as("cluster_id"),
-            (least(col("mid"), coalesce(col("p_label"), col("mid"))) < col("prev")).as("chg")))
-        changed = next.filter(col("chg")).limit(1).count()
-        labels = next.drop("chg")
-        iter += 1
+    val ids = nodes.select(col(idCol).as("n_id"))
+    val edges = cp(pairs
+      .select(inline(array(struct(col(aCol).as("e_src"), col(bCol).as("e_dst")),
+        struct(col(bCol).as("e_src"), col(aCol).as("e_dst")))))
+      .join(ids, col("e_src") === col("n_id"), "left_semi")
+      .join(ids, col("e_dst") === col("n_id"), "left_semi"))
+    var labels = Option.empty[DataFrame] // None: the identity on active ids
+    var changed = 1L
+    var iter = 0
+    while (changed > 0 && iter < maxIters) {
+      // (1) one hop: `l` runs over my neighbors' labels and my own, `own`
+      // over my own label only; under the identity a neighbor's label is
+      // its id, so round 1 needs no join with labels
+      val rows = labels.fold(edges.select(col("e_src").as("doc_id"),
+          col("e_dst").as("l"), col("e_src").as("own"))) { ls =>
+        edges.join(ls, col("e_dst") === col("doc_id"))
+          .select(col("e_src").as("doc_id"), col("cluster_id").as("l"), lit(null).as("own"))
+          .union(ls.select(col("doc_id"), col("cluster_id").as("l"), col("cluster_id").as("own")))
       }
-      // rejoin the (untouched) singleton majority: absent from the active
-      // labels ⇒ own-id cluster, the loop's fixed point for a node with no
-      // edges
-      nodes.select(col(idCol).as("doc_id"))
-        .join(labels.withColumnRenamed("doc_id", "l_id"),
-          col("doc_id") === col("l_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
-    } finally edges.unpersist()
+      val hop = rows.groupBy("doc_id").agg(min("own").as("prev"), min("l").as("l"))
+        .select(col("doc_id"), col("prev"), least(col("prev"), col("l")).as("mid"))
+      // (2) pointer jump: label := label(label) — mid always names an active
+      // id, so the shortcut join halves the remaining distance
+      val parents = hop.select(col("doc_id").as("p_id"), col("mid").as("p_label"))
+      val round = Observation()
+      labels = Some(cp(hop.join(parents, col("mid") === col("p_id"), "left")
+        .select(col("doc_id"), col("prev"),
+          least(col("mid"), coalesce(col("p_label"), col("mid"))).as("cluster_id"))
+        .observe(round, count(when(col("cluster_id") < col("prev"), true)).as("changed"))
+        .drop("prev")))
+      changed = round.get("changed").asInstanceOf[Long]
+      iter += 1
+    }
+    // rejoin the (untouched) singleton majority: absent from the active
+    // labels ⇒ own-id cluster, the loop's fixed point for a node with no
+    // edges
+    labels.fold(ids.select(col("n_id").as("doc_id"), col("n_id").as("cluster_id"))) { ls =>
+      ids.join(ls, col("n_id") === col("doc_id"), "left")
+        .select(col("n_id").as("doc_id"), coalesce(col("cluster_id"), col("n_id")).as("cluster_id"))
+    }
   }
 }
