@@ -1,5 +1,6 @@
 package graft.extract
 
+import graft.extract.Bin.{u16le => u16, u32le => u32}
 import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
@@ -28,12 +29,6 @@ object CfbExtract {
   private val SectorSize = 512
   private val MiniSectorSize = 64
 
-  private def u16(d: Array[Byte], p: Int): Int =
-    (d(p) & 0xff) | ((d(p + 1) & 0xff) << 8)
-  private def u32(d: Array[Byte], p: Int): Long =
-    (d(p) & 0xffL) | ((d(p + 1) & 0xffL) << 8) |
-      ((d(p + 2) & 0xffL) << 16) | ((d(p + 3) & 0xffL) << 24)
-
   /** All stream entries, name → content. Left on malformed containers. */
   def readStreams(data: Array[Byte]): Either[String, Map[String, Array[Byte]]] =
     try Right(readUnsafe(data))
@@ -54,6 +49,11 @@ object CfbExtract {
     val numDifat = u32(data, 72).toInt
 
     def sectorAt(sect: Int): Int = (sect + 1) << sectorShift
+    // the header's counts are untrusted: a FAT or DIFAT chain can never
+    // hold more sectors than the file does (a self-linked DIFAT sector
+    // with numFat = 2^31 - 1 otherwise grows fatSectors until the heap dies)
+    val fileSectors = data.length >> sectorShift
+    require(numFat >= 0 && numFat <= fileSectors, s"numFat $numFat over $fileSectors sectors")
 
     // DIFAT: 109 header slots + chained DIFAT sectors
     val fatSectors = ArrayBuffer[Int]()
@@ -64,8 +64,10 @@ object CfbExtract {
       i += 1
     }
     var difat = firstDifat
-    var guard = 0
-    while (difat != EndOfChain && difat != FreeSect && guard <= numDifat) {
+    val seenDifat = mutable.Set[Int]()
+    while (difat != EndOfChain && difat != FreeSect && seenDifat.size <= numDifat) {
+      require(seenDifat.add(difat), "DIFAT cycle")
+      require(seenDifat.size <= fileSectors, "DIFAT chain longer than the file")
       val base = sectorAt(difat)
       var k = 0
       while (k < secSize / 4 - 1 && fatSectors.length < numFat) {
@@ -74,7 +76,6 @@ object CfbExtract {
         k += 1
       }
       difat = u32(data, base + secSize - 4).toInt
-      guard += 1
     }
 
     val fat = new Array[Int](fatSectors.length * (secSize / 4))
@@ -245,57 +246,43 @@ object CfbExtract {
       val s = bp; markChain(s, cnt); bp += cnt; s
     }
 
-    val out = new java.io.ByteArrayOutputStream((totalSect + 1) * SectorSize)
-    def w16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def w32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
+    val out = new Bin.Sink((totalSect + 1) * SectorSize)
     // header
-    w32(0xE011CFD0L); w32(0xE11AB1A1L)
-    out.write(new Array[Byte](16)) // CLSID
-    w16(0x003E); w16(0x0003) // minor, major (v3: 512-byte sectors)
-    w16(0xFFFE) // little-endian
-    w16(9); w16(6) // sector shift, mini shift
-    out.write(new Array[Byte](6))
-    w32(0) // num dir sectors (v3: 0)
-    w32(nFatSect.toLong)
-    w32(dirStart.toLong)
-    w32(0) // transaction signature
-    w32(MiniCutoff.toLong)
-    w32(if (nMiniFatSect > 0) miniFatStart.toLong else EndOfChain.toLong & 0xFFFFFFFFL)
-    w32(nMiniFatSect.toLong)
-    w32(EndOfChain.toLong & 0xFFFFFFFFL) // first DIFAT sector (none)
-    w32(0) // num DIFAT sectors
-    for (k <- 0 until 109)
-      w32(if (k < nFatSect) k.toLong else FreeSect.toLong & 0xFFFFFFFFL)
-    require(out.size() == 512, s"header size ${out.size()}")
+    out.u32le(0xE011CFD0L).u32le(0xE11AB1A1L)
+      .padTo(24) // CLSID
+      .u16le(0x003E).u16le(0x0003) // minor, major (v3: 512-byte sectors)
+      .u16le(0xFFFE) // little-endian
+      .u16le(9).u16le(6) // sector shift, mini shift
+      .padTo(40)
+      .u32le(0) // num dir sectors (v3: 0)
+      .u32le(nFatSect).u32le(dirStart)
+      .u32le(0) // transaction signature
+      .u32le(MiniCutoff)
+      .u32le(if (nMiniFatSect > 0) miniFatStart else EndOfChain)
+      .u32le(nMiniFatSect)
+      .u32le(EndOfChain) // first DIFAT sector (none)
+      .u32le(0) // num DIFAT sectors
+    for (k <- 0 until 109) out.u32le(if (k < nFatSect) k else FreeSect)
+    require(out.size == 512, s"header size ${out.size}")
 
     // FAT sectors
-    fat.foreach(v => w32(v.toLong & 0xFFFFFFFFL))
+    fat.foreach(v => out.u32le(v))
 
     // directory
-    val dir = new java.io.ByteArrayOutputStream(nDirSect * SectorSize)
+    val dir = new Bin.Sink(nDirSect * SectorSize)
     def entry(name: String, objType: Int, child: Int, right: Int,
         start: Int, size: Long): Unit = {
       val nb = name.getBytes(java.nio.charset.StandardCharsets.UTF_16LE)
       require(nb.length <= 62, s"name too long: $name")
-      dir.write(nb); dir.write(new Array[Byte](64 - nb.length))
-      val base = new java.io.ByteArrayOutputStream()
-      def d16(v: Int): Unit = { base.write(v & 0xff); base.write((v >> 8) & 0xff) }
-      def d32(v: Long): Unit = {
-        base.write((v & 0xff).toInt); base.write(((v >> 8) & 0xff).toInt)
-        base.write(((v >> 16) & 0xff).toInt); base.write(((v >> 24) & 0xff).toInt)
-      }
-      d16(nb.length + 2)
-      base.write(objType); base.write(1) // black
-      d32(FreeSect.toLong & 0xFFFFFFFFL) // left
-      d32(right.toLong & 0xFFFFFFFFL)
-      d32(child.toLong & 0xFFFFFFFFL)
-      base.write(new Array[Byte](16 + 4 + 16)) // CLSID, state, times
-      d32(start.toLong)
-      d32(size & 0xFFFFFFFFL); d32(size >> 32)
-      dir.write(base.toByteArray)
+      val at = dir.size
+      dir.bytes(nb).padTo(at + 64)
+        .u16le(nb.length + 2)
+        .u8(objType).u8(1) // black
+        .u32le(FreeSect) // left
+        .u32le(right).u32le(child)
+        .padTo(at + 116) // CLSID, state, times
+        .u32le(start)
+        .u32le(size).u32le(size >> 32)
     }
     entry("Root Entry", 5, if (streams.nonEmpty) 1 else FreeSect, FreeSect,
       if (nMiniStreamSect > 0) miniStreamStart else EndOfChain, miniStream.length.toLong)
@@ -309,28 +296,16 @@ object CfbExtract {
         bigIdx += 1
       }
     }
-    while (dir.size() < nDirSect * SectorSize) dir.write(0)
-    out.write(dir.toByteArray)
+    out.bytes(dir.padTo(nDirSect * SectorSize).toArray)
 
-    // mini FAT
-    if (nMiniFatSect > 0) {
-      miniFat.foreach(v => w32(v.toLong & 0xFFFFFFFFL))
-      var pad = nMiniFatSect * SectorSize - miniFat.length * 4
-      while (pad > 0) { out.write(0); pad -= 1 }
-    }
-    // mini stream
-    if (nMiniStreamSect > 0) {
-      out.write(miniStream)
-      var pad = nMiniStreamSect * SectorSize - miniStream.length
-      while (pad > 0) { out.write(0); pad -= 1 }
-    }
-    // big streams
+    // mini FAT, mini stream, then the big streams, each sector-padded
+    miniFat.foreach(v => out.u32le(v))
+    out.padTo(out.size + nMiniFatSect * SectorSize - miniFat.length * 4)
+    out.bytes(miniStream).padTo(out.size + nMiniStreamSect * SectorSize - miniStream.length)
     big.zip(bigSect).foreach { case ((_, b), cnt) =>
-      out.write(b)
-      var pad = cnt * SectorSize - b.length
-      while (pad > 0) { out.write(0); pad -= 1 }
+      out.bytes(b).padTo(out.size + cnt * SectorSize - b.length)
     }
-    out.toByteArray
+    out.toArray
   }
 
   // -------------------------------------------------------------- OLEPS
@@ -364,31 +339,25 @@ object CfbExtract {
   /** Deterministic SummaryInformation stream carrying one title property. */
   def buildSummary(title: String): Array[Byte] = {
     val tb = title.getBytes(java.nio.charset.Charset.forName("windows-1252"))
-    val out = new java.io.ByteArrayOutputStream()
-    def w16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def w32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
-    w16(0xFFFE); w16(0) // byte order, version
-    w32(0x00020006L) // system identifier (Win32, NT 2.6 convention)
-    out.write(new Array[Byte](16)) // CLSID
-    w32(1) // one property set
-    // FMTID_SummaryInformation F29F85E0-4FF9-1068-AB91-08002B27B3D9
-    w32(0xF29F85E0L); w16(0x4FF9); w16(0x1068)
-    out.write(Array(0xAB, 0x91, 0x08, 0x00, 0x2B, 0x27, 0xB3, 0xD9).map(_.toByte))
-    w32(48) // section offset
     // section: cbSection, cProps=1, (pid 2 -> offset 16), then the value:
     // u16 type VT_LPSTR + u16 pad, u32 cch (incl. NUL), CP-1252 bytes
     val strLen = tb.length + 1
     val pad = (4 - strLen % 4) % 4
-    w32((16 + 8 + strLen + pad).toLong) // section size
-    w32(1)
-    w32(2); w32(16)
-    w32(30) // VT_LPSTR (low u16) + zero padding (high u16)
-    w32(strLen.toLong)
-    out.write(tb); out.write(0)
-    for (_ <- 0 until pad) out.write(0)
-    out.toByteArray
+    new Bin.Sink()
+      .u16le(0xFFFE).u16le(0) // byte order, version
+      .u32le(0x00020006L) // system identifier (Win32, NT 2.6 convention)
+      .padTo(24) // CLSID
+      .u32le(1) // one property set
+      // FMTID_SummaryInformation F29F85E0-4FF9-1068-AB91-08002B27B3D9
+      .u32le(0xF29F85E0L).u16le(0x4FF9).u16le(0x1068)
+      .bytes(Array(0xAB, 0x91, 0x08, 0x00, 0x2B, 0x27, 0xB3, 0xD9).map(_.toByte))
+      .u32le(48) // section offset
+      .u32le(16 + 8 + strLen + pad) // section size
+      .u32le(1)
+      .u32le(2).u32le(16)
+      .u32le(30) // VT_LPSTR (low u16) + zero padding (high u16)
+      .u32le(strLen)
+      .bytes(tb).padTo(48 + 24 + strLen + pad)
+      .toArray
   }
 }

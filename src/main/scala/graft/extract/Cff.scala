@@ -1,5 +1,6 @@
 package graft.extract
 
+import graft.extract.Bin.{u8, u16be => u16}
 import scala.collection.mutable
 
 /** Embedded CFF (Compact Font Format / "Type1C") decode — the OTHER
@@ -66,28 +67,25 @@ object Cff {
       }
   }
 
-  private final class R(val d: Array[Byte]) {
-    def u8(p: Int): Int = d(p) & 0xff
-    def u16(p: Int): Int = ((d(p) & 0xff) << 8) | (d(p + 1) & 0xff)
-    def off(p: Int, size: Int): Int = {
-      var v = 0; var k = 0
-      while (k < size) { v = (v << 8) | (d(p + k) & 0xff); k += 1 }
-      v
-    }
+  /** Big-endian offset of `size` (1-4) bytes. */
+  private def off(d: Array[Byte], p: Int, size: Int): Int = {
+    var v = 0; var k = 0
+    while (k < size) { v = (v << 8) | (d(p + k) & 0xff); k += 1 }
+    v
   }
 
   /** INDEX at `p` → (entry slices, position after the INDEX). */
-  private def readIndex(r: R, p: Int): (IndexedSeq[Array[Byte]], Int) = {
-    val count = r.u16(p)
+  private def readIndex(d: Array[Byte], p: Int): (IndexedSeq[Array[Byte]], Int) = {
+    val count = u16(d, p)
     if (count == 0) return (Vector.empty, p + 2)
-    val offSize = r.u8(p + 2)
+    val offSize = u8(d, p + 2)
     require(offSize >= 1 && offSize <= 4, s"INDEX offSize $offSize")
-    val offsets = (0 to count).map(i => r.off(p + 3 + offSize * i, offSize))
+    val offsets = (0 to count).map(i => off(d, p + 3 + offSize * i, offSize))
     val dataStart = p + 3 + offSize * (count + 1) - 1 // offsets are 1-based
     val entries = (0 until count).map { i =>
       val (a, b) = (dataStart + offsets(i), dataStart + offsets(i + 1))
-      require(a >= 0 && b >= a && b <= r.d.length, "INDEX entry out of bounds")
-      java.util.Arrays.copyOfRange(r.d, a, b)
+      require(a >= 0 && b >= a && b <= d.length, "INDEX entry out of bounds")
+      java.util.Arrays.copyOfRange(d, a, b)
     }
     (entries, dataStart + offsets(count))
   }
@@ -110,11 +108,9 @@ object Cff {
       } else if (b0 >= 251 && b0 <= 254) {
         operands ::= (-(b0 - 251) * 256 - (d(p + 1) & 0xff) - 108).toDouble; p += 2
       } else if (b0 == 28) {
-        operands ::= (((d(p + 1) << 8) | (d(p + 2) & 0xff)).toShort).toDouble; p += 3
+        operands ::= u16(d, p + 1).toShort.toDouble; p += 3
       } else if (b0 == 29) {
-        operands ::= (((d(p + 1) & 0xff) << 24) | ((d(p + 2) & 0xff) << 16) |
-          ((d(p + 3) & 0xff) << 8) | (d(p + 4) & 0xff)).toDouble
-        p += 5
+        operands ::= Bin.u32be(d, p + 1).toInt.toDouble; p += 5
       } else if (b0 == 30) { // packed-BCD real: skip nibbles to terminator
         val sb = new StringBuilder
         p += 1
@@ -142,23 +138,22 @@ object Cff {
   def parse(data: Array[Byte]): Option[Embedded] =
     try parseUnsafe(data) catch { case _: Exception => None }
 
-  private def parseUnsafe(data: Array[Byte]): Option[Embedded] = {
-    if (data.length < 4) return None
-    val r = new R(data)
-    if (r.u8(0) != 1) return None // major version 1 only
-    val hdrSize = r.u8(2)
-    val (_, afterNames) = readIndex(r, hdrSize)
-    val (topDicts, afterTop) = readIndex(r, afterNames)
+  private def parseUnsafe(d: Array[Byte]): Option[Embedded] = {
+    if (d.length < 4) return None
+    if (u8(d, 0) != 1) return None // major version 1 only
+    val hdrSize = u8(d, 2)
+    val (_, afterNames) = readIndex(d, hdrSize)
+    val (topDicts, afterTop) = readIndex(d, afterNames)
     if (topDicts.isEmpty) return None
     val top = readDict(topDicts.head)
     if (top.contains(1230)) return None // /ROS: CID-keyed, charset = CIDs
-    val (stringIdx, _) = readIndex(r, afterTop)
+    val (stringIdx, _) = readIndex(d, afterTop)
     val strings = stringIdx.map(b =>
       new String(b, java.nio.charset.StandardCharsets.US_ASCII))
 
     val csOff = top.get(17).flatMap(_.headOption).map(_.toInt).getOrElse(-1)
-    if (csOff <= 0 || csOff >= data.length) return None
-    val (charStrings, _) = readIndex(r, csOff)
+    if (csOff <= 0 || csOff >= d.length) return None
+    val (charStrings, _) = readIndex(d, csOff)
     val nGlyphs = charStrings.size
     if (nGlyphs == 0) return None
 
@@ -171,17 +166,17 @@ object Cff {
         while (g < nGlyphs) { glyphSid(g) = g; g += 1 }
       case 1 | 2 => return None // predefined Expert charsets: not text fonts
       case off =>
-        if (off + 1 > data.length) return None
-        r.u8(off) match {
+        if (off + 1 > d.length) return None
+        u8(d, off) match {
           case 0 =>
             var g = 1
-            while (g < nGlyphs) { glyphSid(g) = r.u16(off + 1 + 2 * (g - 1)); g += 1 }
+            while (g < nGlyphs) { glyphSid(g) = u16(d, off + 1 + 2 * (g - 1)); g += 1 }
           case fmt @ (1 | 2) =>
             var g = 1
             var p = off + 1
             while (g < nGlyphs) {
-              val first = r.u16(p)
-              val nLeft = if (fmt == 1) r.u8(p + 2) else r.u16(p + 2)
+              val first = u16(d, p)
+              val nLeft = if (fmt == 1) u8(d, p + 2) else u16(d, p + 2)
               p += (if (fmt == 1) 3 else 4)
               var k = 0
               while (k <= nLeft && g < nGlyphs) { glyphSid(g) = first + k; g += 1; k += 1 }
@@ -195,23 +190,23 @@ object Cff {
     if (encOff == 0)
       return Some(new Embedded(Map.empty, stdEncoding = true, glyphSid, strings))
     if (encOff == 1) return None // predefined Expert encoding
-    if (encOff + 1 > data.length) return None
-    val fmtByte = r.u8(encOff)
+    if (encOff + 1 > d.length) return None
+    val fmtByte = u8(d, encOff)
     val codeToGlyph = mutable.Map[Int, Int]()
     var supStart = -1
     (fmtByte & 0x7f) match {
       case 0 =>
-        val nCodes = r.u8(encOff + 1)
+        val nCodes = u8(d, encOff + 1)
         var i = 1
-        while (i <= nCodes) { codeToGlyph(r.u8(encOff + 1 + i)) = i; i += 1 }
+        while (i <= nCodes) { codeToGlyph(u8(d, encOff + 1 + i)) = i; i += 1 }
         supStart = encOff + 2 + nCodes
       case 1 =>
-        val nRanges = r.u8(encOff + 1)
+        val nRanges = u8(d, encOff + 1)
         var g = 1
         var k = 0
         while (k < nRanges) {
-          val first = r.u8(encOff + 2 + 2 * k)
-          val nLeft = r.u8(encOff + 2 + 2 * k + 1)
+          val first = u8(d, encOff + 2 + 2 * k)
+          val nLeft = u8(d, encOff + 2 + 2 * k + 1)
           var j = 0
           while (j <= nLeft) { codeToGlyph(first + j) = g; g += 1; j += 1 }
           k += 1
@@ -219,14 +214,14 @@ object Cff {
         supStart = encOff + 2 + 2 * nRanges
       case _ => return None
     }
-    if ((fmtByte & 0x80) != 0 && supStart >= 0 && supStart < data.length) {
+    if ((fmtByte & 0x80) != 0 && supStart >= 0 && supStart < d.length) {
       // supplements: code → SID, resolved to the glyph through the charset
       val sidToGlyph = glyphSid.zipWithIndex.map { case (sid, g) => sid -> g }.toMap
-      val nSups = r.u8(supStart)
+      val nSups = u8(d, supStart)
       var k = 0
       while (k < nSups) {
-        val code = r.u8(supStart + 1 + 3 * k)
-        val sid = r.u16(supStart + 1 + 3 * k + 1)
+        val code = u8(d, supStart + 1 + 3 * k)
+        val sid = u16(d, supStart + 1 + 3 * k + 1)
         sidToGlyph.get(sid).foreach(g => codeToGlyph(code) = g)
         k += 1
       }
@@ -250,17 +245,17 @@ object Cff {
   def build(glyphs: Seq[(Int, String)], stdEncoding: Boolean = false): Array[Byte] = {
     require(glyphs.nonEmpty && glyphs.size <= 255, "fixture needs 1..255 glyphs")
     require(glyphs.forall(_._1 <= 255), "format-0 encoding is byte codes")
-    def be16(v: Int): Array[Byte] = Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def cat(parts: Seq[Array[Byte]]): Array[Byte] = {
-      val o = new java.io.ByteArrayOutputStream(); parts.foreach(o.write); o.toByteArray
-    }
     /** 1-byte-offset INDEX (fixture data is tiny). */
     def index(entries: Seq[Array[Byte]]): Array[Byte] = {
-      if (entries.isEmpty) return be16(0)
-      val offsets = entries.scanLeft(1)(_ + _.length)
-      require(offsets.last <= 255, "fixture INDEX overflows 1-byte offsets")
-      cat(Seq(be16(entries.size), Array(1.toByte)) ++
-        offsets.map(o => Array(o.toByte)) ++ entries)
+      val b = new Bin.Sink().u16be(entries.size)
+      if (entries.nonEmpty) {
+        val offsets = entries.scanLeft(1)(_ + _.length)
+        require(offsets.last <= 255, "fixture INDEX overflows 1-byte offsets")
+        b.u8(1) // offSize
+        offsets.foreach(b.u8)
+        entries.foreach(b.bytes)
+      }
+      b.toArray
     }
 
     val custom = mutable.LinkedHashMap[String, Int]() // name -> SID
@@ -276,25 +271,23 @@ object Cff {
     val gsubrIdx = index(Nil)
     val encoding =
       if (stdEncoding) Array.emptyByteArray
-      else cat(Seq(Array[Byte](0, glyphs.size.toByte)) ++
-        glyphs.map { case (code, _) => Array(code.toByte) })
-    val charset = cat(Array[Byte](0) +: sids.map(be16))
+      else (Seq(0, glyphs.size) ++ glyphs.map(_._1)).map(_.toByte).toArray
+    val charset = new Bin.Sink().u8(0) // format 0
+    sids.foreach(charset.u16be)
     val charStrings = index(Seq.fill(glyphs.size + 1)(Array[Byte](0x0e))) // endchar
 
     // Top DICT with fixed-width (op 29) offsets so the layout is stable
-    def dict(charsetOff: Int, encodingOff: Int, charStringsOff: Int): Array[Byte] = {
-      def i32(v: Int, op: Int): Array[Byte] =
-        Array(29.toByte, ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-          ((v >> 8) & 0xff).toByte, (v & 0xff).toByte, op.toByte)
-      cat(Seq(i32(charsetOff, 15), i32(encodingOff, 16), i32(charStringsOff, 17)))
-    }
+    def dict(charsetOff: Int, encodingOff: Int, charStringsOff: Int): Array[Byte] =
+      new Bin.Sink().u8(29).u32be(charsetOff).u8(15)
+        .u8(29).u32be(encodingOff).u8(16)
+        .u8(29).u32be(charStringsOff).u8(17).toArray
     val topIdx0 = index(Seq(dict(0, 0, 0))) // layout probe (fixed width)
     val encodingAt = header.length + nameIdx.length + topIdx0.length +
       stringIdx.length + gsubrIdx.length
     val charsetAt = encodingAt + encoding.length
-    val charStringsAt = charsetAt + charset.length
-    cat(Seq(header, nameIdx,
+    val charStringsAt = charsetAt + charset.size
+    Bin.cat(header, nameIdx,
       index(Seq(dict(charsetAt, if (stdEncoding) 0 else encodingAt, charStringsAt))),
-      stringIdx, gsubrIdx, encoding, charset, charStrings))
+      stringIdx, gsubrIdx, encoding, charset.toArray, charStrings)
   }
 }

@@ -1,5 +1,6 @@
 package graft.extract
 
+import graft.extract.Bin.{u16le => u16, u32le => u32}
 import scala.collection.mutable.ArrayBuffer
 
 /** Legacy Word binary (.doc) text extraction ([MS-DOC], public spec) over
@@ -23,12 +24,6 @@ object DocExtract {
   final case class WordDoc(title: String, paragraphs: Seq[String], pageBreaks: Seq[Int]) {
     def pageCount: Int = 1 + pageBreaks.size
   }
-
-  private def u16(d: Array[Byte], p: Int): Int =
-    (d(p) & 0xff) | ((d(p + 1) & 0xff) << 8)
-  private def u32(d: Array[Byte], p: Int): Long =
-    (d(p) & 0xffL) | ((d(p + 1) & 0xffL) << 8) |
-      ((d(p + 2) & 0xffL) << 16) | ((d(p + 3) & 0xffL) << 24)
 
   private val Cp1252 = java.nio.charset.Charset.forName("windows-1252")
 
@@ -145,62 +140,36 @@ object DocExtract {
     val p1Bytes = piece1.getBytes(Cp1252)
     val p2Bytes = piece2.getBytes(java.nio.charset.StandardCharsets.UTF_16LE)
 
-    val wd = new java.io.ByteArrayOutputStream()
-    val fib = new Array[Byte](textStart)
-    def put16(p: Int, v: Int): Unit = { fib(p) = (v & 0xff).toByte; fib(p + 1) = ((v >> 8) & 0xff).toByte }
-    def put32(p: Int, v: Long): Unit = {
-      fib(p) = (v & 0xff).toByte; fib(p + 1) = ((v >> 8) & 0xff).toByte
-      fib(p + 2) = ((v >> 16) & 0xff).toByte; fib(p + 3) = ((v >> 24) & 0xff).toByte
-    }
-    put16(0x00, 0xA5EC) // wIdent
-    put16(0x02, 0x00C1) // nFib (Word 97)
-    put16(0x0A, 0x0200) // fWhichTblStm = 1 -> 1Table
-    put16(0x20, 14) // csw
-    val lwBase = 0x22 + 2 * 14 + 2
-    put16(lwBase - 2, 22) // cslw
-    put32(lwBase + 12, full.length.toLong) // ccpText
-    val fcLcbBase = lwBase + 4 * 22 + 2
-    put16(fcLcbBase - 2, 93) // cbRgFcLcb (Word 97)
-    wd.write(fib)
-    wd.write(p1Bytes)
-    wd.write(p2Bytes)
-
     // 1Table: Clx = one Prc-free Pcdt
     val nPieces = 2
-    val clx = new java.io.ByteArrayOutputStream()
-    def w32(v: Long): Unit = {
-      clx.write((v & 0xff).toInt); clx.write(((v >> 8) & 0xff).toInt)
-      clx.write(((v >> 16) & 0xff).toInt); clx.write(((v >> 24) & 0xff).toInt)
-    }
-    clx.write(0x02)
-    w32((4 * (nPieces + 1) + 8 * nPieces).toLong) // lcb
-    w32(0); w32(piece1.length.toLong); w32(full.length.toLong) // CPs
-    // PCD 1: compressed -> fc = 2*byteOffset | 0x40000000
-    clx.write(0); clx.write(0)
-    w32((2L * textStart) | 0x40000000L)
-    clx.write(0); clx.write(0)
-    // PCD 2: UTF-16LE at byte offset
-    clx.write(0); clx.write(0)
-    w32(textStart.toLong + p1Bytes.length)
-    clx.write(0); clx.write(0)
-    val clxBytes = clx.toByteArray
+    val clx = new Bin.Sink().u8(0x02)
+      .u32le(4 * (nPieces + 1) + 8 * nPieces) // lcb
+      .u32le(0).u32le(piece1.length).u32le(full.length) // CPs
+      // PCD 1: compressed -> fc = 2*byteOffset | 0x40000000
+      .u16le(0).u32le((2L * textStart) | 0x40000000L).u16le(0)
+      // PCD 2: UTF-16LE at byte offset
+      .u16le(0).u32le(textStart.toLong + p1Bytes.length).u16le(0)
+      .toArray
 
-    val table = new java.io.ByteArrayOutputStream()
-    table.write(clxBytes)
-    val tableBytes = table.toByteArray
-    // fcClx = 0 (Clx at the start of 1Table)
-    val wdBytes = wd.toByteArray
-    val patched = wdBytes.clone()
-    def patch32(p: Int, v: Long): Unit = {
-      patched(p) = (v & 0xff).toByte; patched(p + 1) = ((v >> 8) & 0xff).toByte
-      patched(p + 2) = ((v >> 16) & 0xff).toByte; patched(p + 3) = ((v >> 24) & 0xff).toByte
-    }
-    patch32(fcLcbBase + 33 * 8, 0L)
-    patch32(fcLcbBase + 33 * 8 + 4, clxBytes.length.toLong)
+    // FIB, then the text at textStart
+    val lwBase = 0x22 + 2 * 14 + 2
+    val fcLcbBase = lwBase + 4 * 22 + 2
+    val wd = new Bin.Sink(textStart + p1Bytes.length + p2Bytes.length)
+      .u16le(0xA5EC) // wIdent
+      .u16le(0x00C1) // nFib (Word 97)
+      .padTo(0x0A).u16le(0x0200) // fWhichTblStm = 1 -> 1Table
+      .padTo(0x20).u16le(14) // csw
+      .padTo(lwBase - 2).u16le(22) // cslw
+      .padTo(lwBase + 12).u32le(full.length) // ccpText
+      .padTo(fcLcbBase - 2).u16le(93) // cbRgFcLcb (Word 97)
+      // fcClx = 0 (Clx at the start of 1Table), lcbClx
+      .padTo(fcLcbBase + 33 * 8).u32le(0).u32le(clx.length)
+      .padTo(textStart).bytes(p1Bytes).bytes(p2Bytes)
+      .toArray
 
     CfbExtract.build(Seq(
-      "WordDocument" -> patched,
-      "1Table" -> tableBytes,
+      "WordDocument" -> wd,
+      "1Table" -> clx,
       "\u0005SummaryInformation" -> CfbExtract.buildSummary(title)))
   }
 }

@@ -357,13 +357,6 @@ object DocxExtract {
     */
   def buildDocx(title: String, blocks: Seq[Block],
       media: Seq[(String, Array[Byte])]): Array[Byte] = {
-    def esc(s: String): String = s.flatMap {
-      case '&' => "&amp;"
-      case '<' => "&lt;"
-      case '>' => "&gt;"
-      case '"' => "&quot;"
-      case c => c.toString
-    }
     val W = "http://schemas.openxmlformats.org/wordprocessingml/2006/main"
     val body = new StringBuilder
     var picCount = 0
@@ -375,7 +368,7 @@ object DocxExtract {
         if (list) body ++= """<w:numPr><w:ilvl w:val="0"/><w:numId w:val="1"/></w:numPr>"""
         body ++= "</w:pPr>"
       }
-      body ++= s"""<w:r><w:t xml:space="preserve">${esc(text)}</w:t></w:r></w:p>"""
+      body ++= s"""<w:r><w:t xml:space="preserve">${Bin.xmlAttr(text)}</w:t></w:r></w:p>"""
     }
     blocks.foreach {
       case Para(md) =>
@@ -391,7 +384,7 @@ object DocxExtract {
         rows.foreach { row =>
           body ++= "<w:tr>"
           row.stripPrefix("|").stripSuffix("|").split("\\|", -1).foreach { c =>
-            body ++= s"""<w:tc><w:p><w:r><w:t xml:space="preserve">${esc(c)}</w:t></w:r></w:p></w:tc>"""
+            body ++= s"""<w:tc><w:p><w:r><w:t xml:space="preserve">${Bin.xmlAttr(c)}</w:t></w:r></w:p></w:tc>"""
           }
           body ++= "</w:tr>"
         }
@@ -415,7 +408,7 @@ object DocxExtract {
       }</Relationships>""".stripMargin
     val coreXml =
       s"""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
-         |<cp:coreProperties xmlns:cp="http://schemas.openxmlformats.org/package/2006/metadata/core-properties" xmlns:dc="http://purl.org/dc/elements/1.1/"><dc:title>${esc(title)}</dc:title></cp:coreProperties>""".stripMargin
+         |<cp:coreProperties xmlns:cp="http://schemas.openxmlformats.org/package/2006/metadata/core-properties" xmlns:dc="http://purl.org/dc/elements/1.1/"><dc:title>${Bin.xmlAttr(title)}</dc:title></cp:coreProperties>""".stripMargin
     // OPC requires every part's content type declared — including the
     // media extensions, or strict consumers (Word/POI) reject the package
     val mediaDefaults = media.map(_._1).distinct.map { ext =>

@@ -142,18 +142,12 @@ object EpubExtract {
     */
   def buildEpub(title: String, chapters: Seq[String],
       extraEntries: Seq[(String, Array[Byte])]): Array[Byte] = {
-    def esc(s: String): String = s.flatMap {
-      case '&' => "&amp;"
-      case '<' => "&lt;"
-      case '>' => "&gt;"
-      case c => c.toString
-    }
     val container =
       """<?xml version="1.0" encoding="UTF-8"?>
         |<container version="1.0" xmlns="urn:oasis:names:tc:opendocument:xmlns:container"><rootfiles><rootfile full-path="OEBPS/content.opf" media-type="application/oebps-package+xml"/></rootfiles></container>""".stripMargin
     val opf =
       s"""<?xml version="1.0" encoding="UTF-8"?>
-         |<package xmlns="http://www.idpf.org/2007/opf" version="3.0"><metadata xmlns:dc="http://purl.org/dc/elements/1.1/"><dc:title>${esc(title)}</dc:title></metadata><manifest>${
+         |<package xmlns="http://www.idpf.org/2007/opf" version="3.0"><metadata xmlns:dc="http://purl.org/dc/elements/1.1/"><dc:title>${Bin.xmlText(title)}</dc:title></metadata><manifest>${
         chapters.indices.map(i =>
           s"""<item id="ch$i" href="ch$i.xhtml" media-type="application/xhtml+xml"/>""").mkString
       }</manifest><spine>${

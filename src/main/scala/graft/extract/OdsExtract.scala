@@ -120,20 +120,13 @@ object OdsExtract {
     * exercise expansion when any row has a repeated blank prefix.
     */
   def buildOds(title: String, sheets: Seq[(String, Seq[Seq[String]])]): Array[Byte] = {
-    def esc(s: String): String = s.flatMap {
-      case '&' => "&amp;"
-      case '<' => "&lt;"
-      case '>' => "&gt;"
-      case '"' => "&quot;"
-      case c => c.toString
-    }
     val body = new StringBuilder
     sheets.foreach { case (name, rows) =>
-      body ++= s"""<table:table table:name="${esc(name)}">"""
+      body ++= s"""<table:table table:name="${Bin.xmlAttr(name)}">"""
       rows.foreach { cells =>
         body ++= "<table:table-row>"
         cells.foreach { c =>
-          body ++= s"""<table:table-cell office:value-type="string"><text:p>${esc(c)}</text:p></table:table-cell>"""
+          body ++= s"""<table:table-cell office:value-type="string"><text:p>${Bin.xmlAttr(c)}</text:p></table:table-cell>"""
         }
         // trailing filler the reader must trim (real ODS convention)
         body ++= """<table:table-cell table:number-columns-repeated="3"/>"""
@@ -146,7 +139,7 @@ object OdsExtract {
          |<office:document-content xmlns:office="urn:oasis:names:tc:opendocument:xmlns:office:1.0" xmlns:text="urn:oasis:names:tc:opendocument:xmlns:text:1.0" xmlns:table="urn:oasis:names:tc:opendocument:xmlns:table:1.0"><office:body><office:spreadsheet>${body.toString}</office:spreadsheet></office:body></office:document-content>""".stripMargin
     val metaXml =
       s"""<?xml version="1.0" encoding="UTF-8"?>
-         |<office:document-meta xmlns:office="urn:oasis:names:tc:opendocument:xmlns:office:1.0" xmlns:dc="http://purl.org/dc/elements/1.1/"><office:meta><dc:title>${esc(title)}</dc:title></office:meta></office:document-meta>""".stripMargin
+         |<office:document-meta xmlns:office="urn:oasis:names:tc:opendocument:xmlns:office:1.0" xmlns:dc="http://purl.org/dc/elements/1.1/"><office:meta><dc:title>${Bin.xmlAttr(title)}</dc:title></office:meta></office:document-meta>""".stripMargin
     writeZip(Seq(
       "mimetype" -> "application/vnd.oasis.opendocument.spreadsheet".getBytes("UTF-8"),
       "content.xml" -> contentXml.getBytes("UTF-8"),

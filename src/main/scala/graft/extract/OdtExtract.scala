@@ -170,29 +170,23 @@ object OdtExtract {
     */
   def buildOdt(title: String, blocks: Seq[Block],
       media: Seq[(String, Array[Byte])] = Nil): Array[Byte] = {
-    def esc(s: String): String = s.flatMap {
-      case '&' => "&amp;"
-      case '<' => "&lt;"
-      case '>' => "&gt;"
-      case c => c.toString
-    }
     val body = new StringBuilder
     var picCount = 0
     blocks.foreach {
       case Para(md) =>
         if (md.startsWith("#")) {
           val level = md.takeWhile(_ == '#').length
-          body ++= s"""<text:h text:outline-level="$level">${esc(md.dropWhile(c => c == '#' || c == ' '))}</text:h>"""
+          body ++= s"""<text:h text:outline-level="$level">${Bin.xmlText(md.dropWhile(c => c == '#' || c == ' '))}</text:h>"""
         } else if (md.startsWith("- "))
-          body ++= s"""<text:list><text:list-item><text:p>${esc(md.drop(2))}</text:p></text:list-item></text:list>"""
-        else body ++= s"""<text:p>${esc(md)}</text:p>"""
+          body ++= s"""<text:list><text:list-item><text:p>${Bin.xmlText(md.drop(2))}</text:p></text:list-item></text:list>"""
+        else body ++= s"""<text:p>${Bin.xmlText(md)}</text:p>"""
       case Table(md) =>
         val rws = md.split("\n").filterNot(_.matches("\\|(-+\\|)+"))
         body ++= """<table:table>"""
         rws.foreach { row =>
           body ++= "<table:table-row>"
           row.stripPrefix("|").stripSuffix("|").split("\\|", -1).foreach { c =>
-            body ++= s"""<table:table-cell><text:p>${esc(c)}</text:p></table:table-cell>"""
+            body ++= s"""<table:table-cell><text:p>${Bin.xmlText(c)}</text:p></table:table-cell>"""
           }
           body ++= "</table:table-row>"
         }
@@ -208,7 +202,7 @@ object OdtExtract {
          |<office:document-content xmlns:office="urn:oasis:names:tc:opendocument:xmlns:office:1.0" xmlns:text="urn:oasis:names:tc:opendocument:xmlns:text:1.0" xmlns:table="urn:oasis:names:tc:opendocument:xmlns:table:1.0" xmlns:draw="urn:oasis:names:tc:opendocument:xmlns:drawing:1.0" xmlns:xlink="http://www.w3.org/1999/xlink"><office:body><office:text>${body.toString}</office:text></office:body></office:document-content>""".stripMargin
     val metaXml =
       s"""<?xml version="1.0" encoding="UTF-8"?>
-         |<office:document-meta xmlns:office="urn:oasis:names:tc:opendocument:xmlns:office:1.0" xmlns:dc="http://purl.org/dc/elements/1.1/"><office:meta><dc:title>${esc(title)}</dc:title></office:meta></office:document-meta>""".stripMargin
+         |<office:document-meta xmlns:office="urn:oasis:names:tc:opendocument:xmlns:office:1.0" xmlns:dc="http://purl.org/dc/elements/1.1/"><office:meta><dc:title>${Bin.xmlText(title)}</dc:title></office:meta></office:document-meta>""".stripMargin
     writeZip(Seq(
       "mimetype" -> "application/vnd.oasis.opendocument.text".getBytes("UTF-8"),
       "content.xml" -> contentXml.getBytes("UTF-8"),

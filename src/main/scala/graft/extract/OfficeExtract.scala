@@ -303,13 +303,6 @@ object OfficeExtract {
     DocxExtract.writeZip(
       parts.map { case (n, c) => n -> c.getBytes(StandardCharsets.UTF_8) } ++ binParts)
 
-  private def esc(s: String): String = s.flatMap {
-    case '&' => "&amp;"
-    case '<' => "&lt;"
-    case '>' => "&gt;"
-    case '"' => "&quot;"
-    case c => c.toString
-  }
 
   /** Deterministic PPTX writer — the encode side of the q_pptx round-trip.
     * `media(k)` = (ext, payload) for the k-th image across the deck in
@@ -326,10 +319,10 @@ object OfficeExtract {
     var mediaAt = 0
     def slideXml(s: Slide): (String, String) = {
       val titleSp = if (s.title.nonEmpty)
-        s"""<p:sp><p:nvSpPr><p:nvPr><p:ph type="title"/></p:nvPr></p:nvSpPr><p:txBody><a:p><a:r><a:t>${esc(s.title)}</a:t></a:r></a:p></p:txBody></p:sp>"""
+        s"""<p:sp><p:nvSpPr><p:nvPr><p:ph type="title"/></p:nvPr></p:nvSpPr><p:txBody><a:p><a:r><a:t>${Bin.xmlAttr(s.title)}</a:t></a:r></a:p></p:txBody></p:sp>"""
       else ""
       val bodyParas = s.blocks.map(b =>
-        s"""<a:p><a:r><a:t>${esc(b)}</a:t></a:r></a:p>""").mkString
+        s"""<a:p><a:r><a:t>${Bin.xmlAttr(b)}</a:t></a:r></a:p>""").mkString
       val bodySp = if (s.blocks.nonEmpty)
         s"""<p:sp><p:nvSpPr><p:nvPr><p:ph type="body"/></p:nvPr></p:nvSpPr><p:txBody>$bodyParas</p:txBody></p:sp>"""
       else ""
@@ -365,7 +358,7 @@ object OfficeExtract {
          |<p:presentation xmlns:p="$P"/>""".stripMargin
     val core =
       s"""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
-         |<cp:coreProperties xmlns:cp="http://schemas.openxmlformats.org/package/2006/metadata/core-properties" xmlns:dc="http://purl.org/dc/elements/1.1/"><dc:title>${esc(title)}</dc:title></cp:coreProperties>""".stripMargin
+         |<cp:coreProperties xmlns:cp="http://schemas.openxmlformats.org/package/2006/metadata/core-properties" xmlns:dc="http://purl.org/dc/elements/1.1/"><dc:title>${Bin.xmlAttr(title)}</dc:title></cp:coreProperties>""".stripMargin
     val slideParts = slides.zipWithIndex.flatMap { case (s, i) =>
       val (xml, relsXml) = slideXml(s)
       Seq(s"ppt/slides/slide${i + 1}.xml" -> xml) ++
@@ -392,7 +385,7 @@ object OfficeExtract {
           if (v.forall(c => c.isDigit) && v.nonEmpty)
             s"""<c r="$ref"><v>$v</v></c>"""
           else
-            s"""<c r="$ref" t="inlineStr"><is><t>${esc(v)}</t></is></c>"""
+            s"""<c r="$ref" t="inlineStr"><is><t>${Bin.xmlAttr(v)}</t></is></c>"""
         }.mkString
         s"""<row r="${ri + 1}">$cs</row>"""
       }.mkString
@@ -403,7 +396,7 @@ object OfficeExtract {
       s"""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
          |<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships"><sheets>${
         sheets.zipWithIndex.map { case ((n, _), i) =>
-          s"""<sheet name="${esc(n)}" sheetId="${i + 1}" r:id="rId${i + 1}"/>"""
+          s"""<sheet name="${Bin.xmlAttr(n)}" sheetId="${i + 1}" r:id="rId${i + 1}"/>"""
         }.mkString
       }</sheets></workbook>""".stripMargin
     val workbookRels =
@@ -420,7 +413,7 @@ object OfficeExtract {
         |<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships"><Relationship Id="rId1" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/officeDocument" Target="xl/workbook.xml"/></Relationships>""".stripMargin
     val core =
       s"""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
-         |<cp:coreProperties xmlns:cp="http://schemas.openxmlformats.org/package/2006/metadata/core-properties" xmlns:dc="http://purl.org/dc/elements/1.1/"><dc:title>${esc(title)}</dc:title></cp:coreProperties>""".stripMargin
+         |<cp:coreProperties xmlns:cp="http://schemas.openxmlformats.org/package/2006/metadata/core-properties" xmlns:dc="http://purl.org/dc/elements/1.1/"><dc:title>${Bin.xmlAttr(title)}</dc:title></cp:coreProperties>""".stripMargin
     zipOf(Seq(
       "[Content_Types].xml" -> contentTypes,
       "_rels/.rels" -> rels,

@@ -932,29 +932,7 @@ object PdfBytes {
       author: String,
       encryptWith: Option[(String, Int)]): Array[Byte] = {
     require(pages.nonEmpty, "at least one page")
-    val out = new java.io.ByteArrayOutputStream()
-    def w(s: String): Unit = out.write(s.getBytes(StandardCharsets.ISO_8859_1))
-    val offsets = mutable.ArrayBuffer[Int]()
-    def beginObj(num: Int): Unit = { offsets += out.size(); w(s"$num 0 obj\n") }
-
-    def fmt(v: Double): String =
-      if (v == math.rint(v) && math.abs(v) < 1e15) v.toLong.toString
-      // PDF numbers have no exponent syntax (§7.3.3): plain decimal only
-      else java.math.BigDecimal.valueOf(v).stripTrailingZeros.toPlainString
-    def pdfString(s: String): String = {
-      val needsUtf16 = s.exists(_ > 0xff)
-      if (needsUtf16) {
-        val bytes = s.getBytes(StandardCharsets.UTF_16BE)
-        "<FEFF" + bytes.map(b => f"${b & 0xff}%02X").mkString + ">"
-      } else
-        "(" + s.flatMap {
-          case '(' => "\\("
-          case ')' => "\\)"
-          case '\\' => "\\\\"
-          case c => c.toString
-        } + ")"
-    }
-
+    import Bin.hex
     // encryption state when requested: r=2/3 RC4, r=4 AES-128/AESV2,
     // r=5/6 AES-256/AESV3 (V5: /UE//OE carry the wrapped 32-byte file key)
     val enc = encryptWith.map { case (userPwd, r) =>
@@ -976,12 +954,12 @@ object PdfBytes {
         (key, id0, oEntry, uEntry, perm, r, None)
       }
     }
-    def hex(b: Array[Byte]): String = "<" + b.map(x => f"${x & 0xff}%02X").mkString + ">"
+    /** PDF text string: Latin-1 as is, anything wider as UTF-16BE + BOM. */
     def textStringBytes(s: String): Array[Byte] =
       if (s.exists(_ > 0xff)) Array(0xfe.toByte, 0xff.toByte) ++ s.getBytes(StandardCharsets.UTF_16BE)
       else s.getBytes(StandardCharsets.ISO_8859_1)
     /** Info strings: encrypted under the carrier object's key (RC4, or
-      * AES-CBC when r = 4), hex-emitted.
+      * AES-CBC when r = 4), hex-emitted; unencrypted Latin-1 as literals.
       */
     def infoString(s: String, objNum: Int): String = enc match {
       case Some((key, _, _, _, _, r, _)) if r >= 5 =>
@@ -990,28 +968,24 @@ object PdfBytes {
         hex(PdfCrypt.encryptAes(key, objNum, 0, textStringBytes(s)))
       case Some((key, _, _, _, _, _, _)) =>
         hex(PdfCrypt.encryptString(key, objNum, 0, textStringBytes(s)))
-      case None => pdfString(s)
+      case None => if (s.exists(_ > 0xff)) hex(textStringBytes(s)) else Bin.pdfLiteral(s)
     }
 
-    w("%PDF-1.4\n")
+    val pdf = new Bin.PdfWriter
     val nPages = pages.length
     // object numbering: 1 = Catalog, 2 = Pages, 3..(2+n) = Page, then one
     // shared empty content stream, then Info (then Encrypt when present)
     val contentNum = 3 + nPages
     val infoNum = contentNum + 1
     val encNum = infoNum + 1
-    beginObj(1); w("<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    beginObj(2)
-    w(s"<< /Type /Pages /Count $nPages /Kids [ ${(0 until nPages).map(i => s"${3 + i} 0 R").mkString(" ")} ] >>\nendobj\n")
+    pdf.obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
+    pdf.obj(2, s"<< /Type /Pages /Count $nPages /Kids [ ${(0 until nPages).map(i => s"${3 + i} 0 R").mkString(" ")} ] >>")
     pages.zipWithIndex.foreach { case ((pw, ph), i) =>
-      beginObj(3 + i)
-      w(s"<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 ${fmt(pw)} ${fmt(ph)} ] /Contents $contentNum 0 R >>\nendobj\n")
+      pdf.obj(3 + i, s"<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 ${Bin.num(pw)} ${Bin.num(ph)} ] /Contents $contentNum 0 R >>")
     }
-    beginObj(contentNum); w("<< /Length 0 >>\nstream\n\nendstream\nendobj\n")
-    beginObj(infoNum)
-    w(s"<< /Title ${infoString(title, infoNum)} /Author ${infoString(author, infoNum)} >>\nendobj\n")
+    pdf.stream(contentNum, "<< /Length 0 >>", Array.emptyByteArray)
+    pdf.obj(infoNum, s"<< /Title ${infoString(title, infoNum)} /Author ${infoString(author, infoNum)} >>")
     enc.foreach { case (key, _, oEntry, uEntry, perm, r, v5) =>
-      beginObj(encNum)
       val vLen =
         if (r >= 5)
           "/V 5 /Length 256 /CF << /StdCF << /CFM /AESV3 /AuthEvent /DocOpen /Length 32 >> >> /StmF /StdCF /StrF /StdCF"
@@ -1022,18 +996,12 @@ object PdfBytes {
       val v5Entries = v5.map { case (oe, ue) =>
         s" /OE ${hex(oe)} /UE ${hex(ue)} /Perms ${hex(PdfCrypt.computePerms(key, perm, encryptMetadata = true))}"
       }.getOrElse("")
-      w(s"<< /Filter /Standard $vLen /R $r /O ${hex(oEntry)} /U ${hex(uEntry)} /P $perm$v5Entries >>\nendobj\n")
+      pdf.obj(encNum, s"<< /Filter /Standard $vLen /R $r /O ${hex(oEntry)} /U ${hex(uEntry)} /P $perm$v5Entries >>")
     }
-    val xrefAt = out.size()
-    val n = offsets.length + 1
-    w(s"xref\n0 $n\n")
-    w("0000000000 65535 f \n")
-    offsets.foreach(o => w(f"$o%010d 00000 n \n"))
     val encTrailer = enc match {
       case Some((_, id0, _, _, _, _, _)) => s" /Encrypt $encNum 0 R /ID [ ${hex(id0)} ${hex(id0)} ]"
       case None => ""
     }
-    w(s"trailer\n<< /Size $n /Root 1 0 R /Info $infoNum 0 R$encTrailer >>\nstartxref\n$xrefAt\n"); w("%%EOF\n")
-    out.toByteArray
+    pdf.finish(s" /Info $infoNum 0 R$encTrailer")
   }
 }

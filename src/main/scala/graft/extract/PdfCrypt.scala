@@ -55,9 +55,7 @@ object PdfCrypt {
   private def pad(password: Array[Byte]): Array[Byte] =
     (password ++ Pad).take(32)
 
-  private def le4(v: Int): Array[Byte] =
-    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
+  private def le4(v: Int): Array[Byte] = new Bin.Sink(4).u32le(v).toArray
 
   /** Algorithm 2: the file encryption key from a (user) password. */
   def fileKey(

@@ -199,25 +199,15 @@ object PdfRewrite {
       if (!renumber.contains(n)) { renumber(n) = next; next += 1 }
     }
 
-    val out = new java.io.ByteArrayOutputStream()
-    def w(s: String): Unit = out.write(s.getBytes(StandardCharsets.ISO_8859_1))
-    val offsets = mutable.ArrayBuffer[(Int, Int)]() // (newNum, offset)
-    def beginObj(num: Int): Unit = { offsets += ((num, out.size())); w(s"$num 0 obj\n") }
-
-    def fmt(v: Double): String =
-      if (v == math.rint(v) && math.abs(v) < 1e15) v.toLong.toString
-      // PDF numbers have no exponent syntax (§7.3.3): plain decimal only
-      else java.math.BigDecimal.valueOf(v).stripTrailingZeros.toPlainString
     def nameEsc(s: String): String = s.flatMap { c =>
       if (c <= ' ' || c == '#' || "()<>[]{}/%".contains(c)) f"#${c.toInt}%02X" else c.toString
     }
-    def hexStr(b: Array[Byte]): String = "<" + b.map(x => f"${x & 0xff}%02X").mkString + ">"
 
     /** Serializes a copied object; `srcNum` drives string decryption. */
     def ser(o: PObj, srcNum: Int): String = o match {
       case PNull => "null"
       case PBool(b) => if (b) "true" else "false"
-      case PNum(v) => fmt(v)
+      case PNum(v) => Bin.num(v)
       case PName(n) => "/" + nameEsc(n)
       case PStr(b) =>
         val plain = key match {
@@ -225,7 +215,7 @@ object PdfRewrite {
             PdfCrypt.decryptData(k, aes, srcNum, doc.genOf(srcNum), b)
           case _ => b // ObjStm-carried strings are already plaintext (§7.5.7)
         }
-        hexStr(plain)
+        Bin.hex(plain)
       case PRef(n, _) =>
         s"${renumber.getOrElse(n, throw new IllegalStateException(s"dangling ref $n"))} 0 R"
       case PArr(items) => items.map(ser(_, srcNum)).mkString("[ ", " ", " ]")
@@ -250,32 +240,18 @@ object PdfRewrite {
       m.toSeq.sortBy(_._1).map { case (k, v) => s"/${nameEsc(k)} ${ser(v, srcNum)}" }
         .mkString("<< ", " ", " >>")
 
-    w("%PDF-1.4\n")
-    beginObj(1)
+    val pdf = new Bin.PdfWriter
     val catMeta = keptMetadataNum.map(n => s" /Metadata ${renumber(n)} 0 R").getOrElse("")
-    w(s"<< /Type /Catalog /Pages 2 0 R$catMeta >>\nendobj\n")
-    beginObj(2)
-    w(s"<< /Type /Pages /Count ${kept.length} /Kids [ ${kept.indices.map(i => s"${3 + i} 0 R").mkString(" ")} ] >>\nendobj\n")
+    pdf.obj(1, s"<< /Type /Catalog /Pages 2 0 R$catMeta >>")
+    pdf.obj(2, s"<< /Type /Pages /Count ${kept.length} /Kids [ ${kept.indices.map(i => s"${3 + i} 0 R").mkString(" ")} ] >>")
     kept.zipWithIndex.foreach { case (p, i) =>
-      beginObj(3 + i)
       // Parent was dropped at collection; point it at the NEW pages node
-      val body = serDict(p.dict, p.num)
-      w(body.stripSuffix(" >>") + " /Parent 2 0 R >>" + "\nendobj\n")
+      pdf.obj(3 + i, serDict(p.dict, p.num).stripSuffix(" >>") + " /Parent 2 0 R >>")
     }
     needed.toSeq.sorted.foreach { n =>
-      if (renumber(n) >= 3 + kept.length) { // not a kept page (those are emitted above)
-        beginObj(renumber(n))
-        w(ser(doc.rawObject(n), n) + "\nendobj\n")
-      }
+      if (renumber(n) >= 3 + kept.length) // not a kept page (those are emitted above)
+        pdf.obj(renumber(n), ser(doc.rawObject(n), n))
     }
-    val xrefAt = out.size()
-    val total = offsets.length + 1
-    val byNum = offsets.sortBy(_._1)
-    w(s"xref\n0 $total\n")
-    w("0000000000 65535 f \n")
-    byNum.foreach { case (_, o) => w(f"$o%010d 00000 n \n") }
-    val infoEntry = infoNum.map(n => s" /Info ${renumber(n)} 0 R").getOrElse("")
-    w(s"trailer\n<< /Size $total /Root 1 0 R$infoEntry >>\nstartxref\n$xrefAt\n"); w("%%EOF\n")
-    out.toByteArray
+    pdf.finish(infoNum.map(n => s" /Info ${renumber(n)} 0 R").getOrElse(""))
   }
 }

@@ -776,98 +776,29 @@ object PdfText {
       pageImages: Seq[Seq[(Array[Byte], Int, Int)]]): Array[Byte] = {
     require(pages.nonEmpty, "at least one page")
     require(pageImages.length == pages.length, "one image list per page")
-    val out = new java.io.ByteArrayOutputStream()
-    def w(s: String): Unit = out.write(s.getBytes(StandardCharsets.ISO_8859_1))
-    val offsets = ArrayBuffer[Int]()
-    def beginObj(num: Int): Unit = { offsets += out.size(); w(s"$num 0 obj\n") }
-    def esc(s: String): String = s.flatMap {
-      case '(' => "\\("
-      case ')' => "\\)"
-      case '\\' => "\\\\"
-      case c => c.toString
-    }
-    def hexOf(s: String): String =
-      s.getBytes(StandardCharsets.ISO_8859_1).map(b => f"${b & 0xff}%02X").mkString
-
-    def contentOf(lines: Seq[String]): Array[Byte] = {
-      val sb = new StringBuilder("BT\n/F1 12 Tf\n72 720 Td\n")
-      lines.zipWithIndex.foreach { case (line, i) =>
-        if (i > 0) sb ++= "0 -16 Td\n"
+    // image objects follow the font (2n + 3), numbered in page order
+    val firstImg = pageImages.scanLeft(2 * pages.length + 4)(_ + _.length)
+    val contents = pages.zip(pageImages).map { case (lines, imgs) =>
+      val text = showLines(lines) { (line, i) =>
         i % 3 match {
-          case 0 => sb ++= s"(${esc(line)}) Tj\n"
-          case 1 => sb ++= s"<${hexOf(line)}> Tj\n"
-          case _ =>
-            // split at the LAST space; the -400 kern (4.8pt at 12pt > the
-            // 0.18-em threshold) reads back as exactly one space
-            val cut = line.lastIndexOf(' ')
-            if (cut <= 0) sb ++= s"(${esc(line)}) Tj\n"
-            else sb ++= s"[(${esc(line.substring(0, cut))}) -400 (${esc(line.substring(cut + 1))})] TJ\n"
+          case 0 => s"${Bin.pdfLiteral(line)} Tj\n"
+          case 1 => s"${Bin.hex(line.getBytes(StandardCharsets.ISO_8859_1))} Tj\n"
+          case _ => kerned(line, Bin.pdfLiteral)
         }
       }
-      sb ++= "ET\n"
-      sb.toString.getBytes(StandardCharsets.ISO_8859_1)
+      val draws = imgs.indices.map(j => s"q 200 0 0 100 72 ${420 - 110 * j} cm /Img$j Do Q\n")
+      (text +: draws).mkString.getBytes(StandardCharsets.ISO_8859_1)
     }
-
-    def deflate(b: Array[Byte]): Array[Byte] = {
-      val d = new java.util.zip.Deflater()
-      try {
-        d.setInput(b); d.finish()
-        val o = new java.io.ByteArrayOutputStream(b.length / 2 + 32)
-        val buf = new Array[Byte](8192)
-        while (!d.finished()) o.write(buf, 0, d.deflate(buf))
-        o.toByteArray
-      } finally d.end()
+    val pdf = new Bin.PdfWriter
+    val fontNum = pageTree(pdf, contents, compress, i =>
+      if (pageImages(i).isEmpty) ""
+      else s" /XObject << ${pageImages(i).indices.map(j => s"/Img$j ${firstImg(i) + j} 0 R").mkString(" ")} >>")
+    pdf.obj(fontNum, "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica /Encoding /WinAnsiEncoding >>")
+    pageImages.flatten.zipWithIndex.foreach { case ((data, iw, ih), k) =>
+      pdf.stream(fontNum + 1 + k, s"<< /Type /XObject /Subtype /Image /Width $iw /Height $ih " +
+        s"/BitsPerComponent 8 /ColorSpace /DeviceRGB /Filter /DCTDecode /Length ${data.length} >>", data)
     }
-
-    val n = pages.length
-    val contentBase = 3 + n
-    val fontNum = contentBase + n
-    // image object numbers: fontNum+1.. in page order
-    val imgNums: Seq[Seq[Int]] = {
-      var next = fontNum + 1
-      pageImages.map(_.map { _ => val k = next; next += 1; k })
-    }
-    w("%PDF-1.4\n")
-    beginObj(1); w("<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    beginObj(2)
-    w(s"<< /Type /Pages /Count $n /Kids [ ${(0 until n).map(i => s"${3 + i} 0 R").mkString(" ")} ] >>\nendobj\n")
-    pages.indices.foreach { i =>
-      beginObj(3 + i)
-      val xobjs =
-        if (imgNums(i).isEmpty) ""
-        else s" /XObject << ${imgNums(i).zipWithIndex.map { case (num, j) => s"/Img$j $num 0 R" }.mkString(" ")} >>"
-      w(s"<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 612 792 ] " +
-        s"/Resources << /Font << /F1 $fontNum 0 R >>$xobjs >> /Contents ${contentBase + i} 0 R >>\nendobj\n")
-    }
-    pages.zipWithIndex.foreach { case (lines, i) =>
-      val draws = pageImages(i).indices.map(j =>
-        s"q 200 0 0 100 72 ${420 - 110 * j} cm /Img$j Do Q\n").mkString
-      val raw = contentOf(lines) ++ draws.getBytes(StandardCharsets.ISO_8859_1)
-      val payload = if (compress) deflate(raw) else raw
-      val filter = if (compress) " /Filter /FlateDecode" else ""
-      beginObj(contentBase + i)
-      w(s"<< /Length ${payload.length}$filter >>\nstream\n")
-      out.write(payload)
-      w("\nendstream\nendobj\n")
-    }
-    beginObj(fontNum)
-    w("<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica /Encoding /WinAnsiEncoding >>\nendobj\n")
-    pageImages.zip(imgNums).foreach { case (imgs, nums) =>
-      imgs.zip(nums).foreach { case ((data, iw, ih), num) =>
-        beginObj(num)
-        w(s"<< /Type /XObject /Subtype /Image /Width $iw /Height $ih " +
-          s"/BitsPerComponent 8 /ColorSpace /DeviceRGB /Filter /DCTDecode /Length ${data.length} >>\nstream\n")
-        out.write(data)
-        w("\nendstream\nendobj\n")
-      }
-    }
-    val xrefAt = out.size()
-    val total = offsets.length + 1
-    w(s"xref\n0 $total\n")
-    w("0000000000 65535 f \n")
-    offsets.foreach(o => w(f"$o%010d 00000 n \n"))
-    w(s"trailer\n<< /Size $total /Root 1 0 R >>\nstartxref\n$xrefAt\n%%EOF\n")
-    out.toByteArray
+    pdf.finish("")
   }
 
   /** Embedded-TrueType writer variant — the encode side of the
@@ -884,21 +815,13 @@ object PdfText {
     *  - `unicodeCmap = true`: codes are the raw Latin-1 bytes and the only
     *    cmap is a (3,1) format-4 Unicode table onto arbitrary glyph ids
     *    (100 + k) — decode runs cmap → inverse-Unicode.
-    * Strings are emitted as hex (subset codes include control bytes).
+    * Strings are emitted as hex (subset codes include control bytes);
+    * odd lines as kerned TJ arrays.
     */
   def buildTextPdfTT(pages: Seq[Seq[String]], unicodeCmap: Boolean): Array[Byte] = {
-    require(pages.nonEmpty, "at least one page")
-    val distinct: Seq[Char] = pages.flatten.flatMap(_.toSeq).distinct
-    require(distinct.forall(_ < 256), "fixture charset is Latin-1")
-    val codeOf: Map[Char, Int] =
-      if (unicodeCmap) distinct.map(c => c -> c.toInt).toMap
-      else distinct.zipWithIndex.map { case (c, i) => c -> (i + 1) }.toMap
-    def aglName(c: Char): String =
-      if (c.isLetterOrDigit && c < 128) c.toString
-      else if (c == ' ') "space"
-      else if (c == '-') "hyphen"
-      else f"uni${c.toInt}%04X"
-    val ttf: Array[Byte] =
+    val distinct = fixtureChars(pages)
+    val codeOf = if (unicodeCmap) distinct.map(c => c -> c.toInt).toMap else firstUseCodes(distinct)
+    val ttf =
       if (unicodeCmap)
         TrueType.build(unicodeToGlyph =
           distinct.zipWithIndex.map { case (c, i) => c.toInt -> (100 + i) })
@@ -906,70 +829,8 @@ object PdfText {
         TrueType.build(
           codeToGlyph = distinct.map(c => codeOf(c) -> (codeOf(c) + 2)),
           glyphNames = distinct.map(c => (codeOf(c) + 2) -> aglName(c)).toMap)
-
-    val out = new java.io.ByteArrayOutputStream()
-    def w(s: String): Unit = out.write(s.getBytes(StandardCharsets.ISO_8859_1))
-    val offsets = ArrayBuffer[Int]()
-    def beginObj(num: Int): Unit = { offsets += out.size(); w(s"$num 0 obj\n") }
-    def hexOf(s: String): String = s.map(c => f"${codeOf(c)}%02X").mkString
-
-    def contentOf(lines: Seq[String]): Array[Byte] = {
-      val sb = new StringBuilder("BT\n/F1 12 Tf\n72 720 Td\n")
-      lines.zipWithIndex.foreach { case (line, i) =>
-        if (i > 0) sb ++= "0 -16 Td\n"
-        if (i % 2 == 0) sb ++= s"<${hexOf(line)}> Tj\n"
-        else {
-          val cut = line.lastIndexOf(' ')
-          if (cut <= 0) sb ++= s"<${hexOf(line)}> Tj\n"
-          else sb ++= s"[<${hexOf(line.substring(0, cut))}> -400 <${hexOf(line.substring(cut + 1))}>] TJ\n"
-        }
-      }
-      sb ++= "ET\n"
-      sb.toString.getBytes(StandardCharsets.ISO_8859_1)
-    }
-
-    val n = pages.length
-    val contentBase = 3 + n
-    val fontNum = contentBase + n
-    val fdNum = fontNum + 1
-    val ffNum = fontNum + 2
-    w("%PDF-1.4\n")
-    beginObj(1); w("<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    beginObj(2)
-    w(s"<< /Type /Pages /Count $n /Kids [ ${(0 until n).map(i => s"${3 + i} 0 R").mkString(" ")} ] >>\nendobj\n")
-    pages.indices.foreach { i =>
-      beginObj(3 + i)
-      w(s"<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 612 792 ] " +
-        s"/Resources << /Font << /F1 $fontNum 0 R >> >> /Contents ${contentBase + i} 0 R >>\nendobj\n")
-    }
-    pages.zipWithIndex.foreach { case (lines, i) =>
-      val payload = deflate(contentOf(lines))
-      beginObj(contentBase + i)
-      w(s"<< /Length ${payload.length} /Filter /FlateDecode >>\nstream\n")
-      out.write(payload)
-      w("\nendstream\nendobj\n")
-    }
-    val codes = distinct.map(codeOf).sorted
-    val (first, last) = (codes.head, codes.last)
-    val widths = (first to last).map(c => if (codes.contains(c)) "600" else "0").mkString(" ")
-    beginObj(fontNum)
-    w(s"<< /Type /Font /Subtype /TrueType /BaseFont /GRAFTA+Fixture " +
-      s"/FirstChar $first /LastChar $last /Widths [ $widths ] " +
-      s"/FontDescriptor $fdNum 0 R >>\nendobj\n")
-    beginObj(fdNum)
-    w(s"<< /Type /FontDescriptor /FontName /GRAFTA+Fixture /Flags 4 " +
-      s"/FontFile2 $ffNum 0 R >>\nendobj\n")
-    beginObj(ffNum)
-    w(s"<< /Length ${ttf.length} /Length1 ${ttf.length} >>\nstream\n")
-    out.write(ttf)
-    w("\nendstream\nendobj\n")
-    val xrefAt = out.size()
-    val total = offsets.length + 1
-    w(s"xref\n0 $total\n")
-    w("0000000000 65535 f \n")
-    offsets.foreach(o => w(f"$o%010d 00000 n \n"))
-    w(s"trailer\n<< /Size $total /Root 1 0 R >>\nstartxref\n$xrefAt\n%%EOF\n")
-    out.toByteArray
+    embeddedFontPdf(pages, codeOf, kernOddLines = true, "TrueType", "GRAFTA+Fixture", "FontFile2",
+      ttf, s" /Length1 ${ttf.length}")
   }
 
   /** Embedded-CFF writer variant — the Type1C sibling of
@@ -983,104 +844,111 @@ object PdfText {
     * runs encoding → charset → SID name → AGL. Strings are emitted as hex
     * (subset codes include control bytes).
     */
-  def buildTextPdfCFF(pages: Seq[Seq[String]]): Array[Byte] =
-    buildTextPdfProgram(pages, "cff")
+  def buildTextPdfCFF(pages: Seq[Seq[String]]): Array[Byte] = {
+    val codeOf = firstUseCodes(fixtureChars(pages))
+    val program = Cff.build(fixtureGlyphs(codeOf))
+    embeddedFontPdf(pages, codeOf, kernOddLines = false, "Type1", "GRAFTB+Fixture", "FontFile3",
+      program, " /Subtype /Type1C")
+  }
 
   /** Embedded-Type1 writer variant (/FontFile): same shape, decode runs
     * the cleartext /Encoding `dup code /name put` entries ([[Type1]]).
     */
-  def buildTextPdfT1(pages: Seq[Seq[String]]): Array[Byte] =
-    buildTextPdfProgram(pages, "t1")
-
-  private def buildTextPdfProgram(pages: Seq[Seq[String]], kind: String): Array[Byte] = {
-    require(pages.nonEmpty, "at least one page")
-    val distinct: Seq[Char] = pages.flatten.flatMap(_.toSeq).distinct
-    require(distinct.forall(_ < 256), "fixture charset is Latin-1")
-    val codeOf: Map[Char, Int] = distinct.zipWithIndex.map { case (c, i) => c -> (i + 1) }.toMap
-    def aglName(c: Char): String =
-      if (c.isLetterOrDigit && c < 128) c.toString
-      else if (c == ' ') "space"
-      else if (c == '-') "hyphen"
-      else f"uni${c.toInt}%04X"
-    val glyphs = distinct.map(c => codeOf(c) -> aglName(c))
-    // (program bytes, descriptor key, extra stream-dict entries)
-    val (program, ffKey, ffDict) = kind match {
-      case "cff" => (Cff.build(glyphs), "FontFile3", " /Subtype /Type1C")
-      case _ =>
-        val (clear, priv) = Type1.buildParts(glyphs, stdEncoding = false)
-        (clear ++ priv, "FontFile",
-          s" /Length1 ${clear.length} /Length2 ${priv.length} /Length3 0")
-    }
-
-    val out = new java.io.ByteArrayOutputStream()
-    def w(s: String): Unit = out.write(s.getBytes(StandardCharsets.ISO_8859_1))
-    val offsets = ArrayBuffer[Int]()
-    def beginObj(num: Int): Unit = { offsets += out.size(); w(s"$num 0 obj\n") }
-    def hexOf(s: String): String = s.map(c => f"${codeOf(c)}%02X").mkString
-
-    def contentOf(lines: Seq[String]): Array[Byte] = {
-      val sb = new StringBuilder("BT\n/F1 12 Tf\n72 720 Td\n")
-      lines.zipWithIndex.foreach { case (line, i) =>
-        if (i > 0) sb ++= "0 -16 Td\n"
-        sb ++= s"<${hexOf(line)}> Tj\n"
-      }
-      sb ++= "ET\n"
-      sb.toString.getBytes(StandardCharsets.ISO_8859_1)
-    }
-
-    val n = pages.length
-    val contentBase = 3 + n
-    val fontNum = contentBase + n
-    val fdNum = fontNum + 1
-    val ffNum = fontNum + 2
-    w("%PDF-1.4\n")
-    beginObj(1); w("<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    beginObj(2)
-    w(s"<< /Type /Pages /Count $n /Kids [ ${(0 until n).map(i => s"${3 + i} 0 R").mkString(" ")} ] >>\nendobj\n")
-    pages.indices.foreach { i =>
-      beginObj(3 + i)
-      w(s"<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 612 792 ] " +
-        s"/Resources << /Font << /F1 $fontNum 0 R >> >> /Contents ${contentBase + i} 0 R >>\nendobj\n")
-    }
-    pages.zipWithIndex.foreach { case (lines, i) =>
-      val payload = deflate(contentOf(lines))
-      beginObj(contentBase + i)
-      w(s"<< /Length ${payload.length} /Filter /FlateDecode >>\nstream\n")
-      out.write(payload)
-      w("\nendstream\nendobj\n")
-    }
-    val codes = distinct.map(codeOf).sorted
-    val (first, last) = (codes.head, codes.last)
-    val widths = (first to last).map(c => if (codes.contains(c)) "600" else "0").mkString(" ")
-    beginObj(fontNum)
-    w(s"<< /Type /Font /Subtype /Type1 /BaseFont /GRAFTB+Fixture " +
-      s"/FirstChar $first /LastChar $last /Widths [ $widths ] " +
-      s"/FontDescriptor $fdNum 0 R >>\nendobj\n")
-    beginObj(fdNum)
-    w(s"<< /Type /FontDescriptor /FontName /GRAFTB+Fixture /Flags 4 " +
-      s"/$ffKey $ffNum 0 R >>\nendobj\n")
-    beginObj(ffNum)
-    w(s"<< /Length ${program.length}$ffDict >>\nstream\n")
-    out.write(program)
-    w("\nendstream\nendobj\n")
-    val xrefAt = out.size()
-    val total = offsets.length + 1
-    w(s"xref\n0 $total\n")
-    w("0000000000 65535 f \n")
-    offsets.foreach(o => w(f"$o%010d 00000 n \n"))
-    w(s"trailer\n<< /Size $total /Root 1 0 R >>\nstartxref\n$xrefAt\n%%EOF\n")
-    out.toByteArray
+  def buildTextPdfT1(pages: Seq[Seq[String]]): Array[Byte] = {
+    val codeOf = firstUseCodes(fixtureChars(pages))
+    val (clear, priv) = Type1.buildParts(fixtureGlyphs(codeOf), stdEncoding = false)
+    embeddedFontPdf(pages, codeOf, kernOddLines = false, "Type1", "GRAFTB+Fixture", "FontFile",
+      clear ++ priv, s" /Length1 ${clear.length} /Length2 ${priv.length} /Length3 0")
   }
 
-  private def deflate(b: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater()
-    try {
-      d.setInput(b); d.finish()
-      val o = new java.io.ByteArrayOutputStream(b.length / 2 + 32)
-      val buf = new Array[Byte](8192)
-      while (!d.finished()) o.write(buf, 0, d.deflate(buf))
-      o.toByteArray
-    } finally d.end()
+  /** The fixture's distinct chars in first-use order (Latin-1 only). */
+  private def fixtureChars(pages: Seq[Seq[String]]): Seq[Char] = {
+    require(pages.nonEmpty, "at least one page")
+    val distinct = pages.flatten.flatMap(_.toSeq).distinct
+    require(distinct.forall(_ < 256), "fixture charset is Latin-1")
+    distinct
+  }
+  private def firstUseCodes(distinct: Seq[Char]): Map[Char, Int] =
+    distinct.zipWithIndex.map { case (c, i) => c -> (i + 1) }.toMap
+  private def aglName(c: Char): String =
+    if (c.isLetterOrDigit && c < 128) c.toString
+    else if (c == ' ') "space"
+    else if (c == '-') "hyphen"
+    else f"uni${c.toInt}%04X"
+  private def fixtureGlyphs(codeOf: Map[Char, Int]): Seq[(Int, String)] =
+    codeOf.toSeq.sortBy(_._2).map { case (c, code) => code -> aglName(c) }
+
+  /** The embedded-font fixture shape: hex-coded text through `codeOf`, a
+    * font dict with NO /Encoding and NO /ToUnicode, and its descriptor's
+    * `/<programKey>` stream holding `program` (`programDict` adds to that
+    * stream's dict after /Length).
+    */
+  private def embeddedFontPdf(
+      pages: Seq[Seq[String]],
+      codeOf: Map[Char, Int],
+      kernOddLines: Boolean,
+      subtype: String,
+      fontName: String,
+      programKey: String,
+      program: Array[Byte],
+      programDict: String): Array[Byte] = {
+    def hexOf(s: String): String = s.map(c => f"${codeOf(c)}%02X").mkString("<", "", ">")
+    val contents = pages.map(lines => showLines(lines) { (line, i) =>
+      if (kernOddLines && i % 2 == 1) kerned(line, hexOf) else s"${hexOf(line)} Tj\n"
+    }.getBytes(StandardCharsets.ISO_8859_1))
+    val pdf = new Bin.PdfWriter
+    val fontNum = pageTree(pdf, contents, compress = true, _ => "")
+    val codes = codeOf.values.toSet
+    val (first, last) = (codes.min, codes.max)
+    val widths = (first to last).map(c => if (codes.contains(c)) "600" else "0").mkString(" ")
+    pdf.obj(fontNum, s"<< /Type /Font /Subtype /$subtype /BaseFont /$fontName " +
+      s"/FirstChar $first /LastChar $last /Widths [ $widths ] /FontDescriptor ${fontNum + 1} 0 R >>")
+    pdf.obj(fontNum + 1,
+      s"<< /Type /FontDescriptor /FontName /$fontName /Flags 4 /$programKey ${fontNum + 2} 0 R >>")
+    pdf.stream(fontNum + 2, s"<< /Length ${program.length}$programDict >>", program)
+    pdf.finish("")
+  }
+
+  /** Catalog (1), page tree (2), one 612x792 page per content stream
+    * (3..n+2, contents n+3..2n+2, Flate when `compress`), every page
+    * naming object 2n+3 as font /F1 — returned for the caller to write.
+    * `resources(i)` adds to page i's /Resources dict.
+    */
+  private def pageTree(pdf: Bin.PdfWriter, contents: Seq[Array[Byte]], compress: Boolean,
+      resources: Int => String): Int = {
+    val n = contents.length
+    val fontNum = 2 * n + 3
+    pdf.obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
+    pdf.obj(2, s"<< /Type /Pages /Count $n /Kids [ ${(0 until n).map(i => s"${3 + i} 0 R").mkString(" ")} ] >>")
+    (0 until n).foreach { i =>
+      pdf.obj(3 + i, s"<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 612 792 ] " +
+        s"/Resources << /Font << /F1 $fontNum 0 R >>${resources(i)} >> /Contents ${n + 3 + i} 0 R >>")
+    }
+    contents.zipWithIndex.foreach { case (raw, i) =>
+      val payload = if (compress) Bin.deflate(raw) else raw
+      val filter = if (compress) " /Filter /FlateDecode" else ""
+      pdf.stream(n + 3 + i, s"<< /Length ${payload.length}$filter >>", payload)
+    }
+    fontNum
+  }
+
+  /** One line per entry, 16pt apart, in 12pt /F1 from (72, 720). */
+  private def showLines(lines: Seq[String])(show: (String, Int) => String): String = {
+    val sb = new StringBuilder("BT\n/F1 12 Tf\n72 720 Td\n")
+    lines.zipWithIndex.foreach { case (line, i) =>
+      if (i > 0) sb ++= "0 -16 Td\n"
+      sb ++= show(line, i)
+    }
+    (sb ++= "ET\n").toString
+  }
+
+  /** `line` as a TJ array split at its LAST space: the -400 kern (4.8pt
+    * at 12pt > the 0.18-em threshold) reads back as exactly one space.
+    */
+  private def kerned(line: String, str: String => String): String = {
+    val cut = line.lastIndexOf(' ')
+    if (cut <= 0) s"${str(line)} Tj\n"
+    else s"[${str(line.substring(0, cut))} -400 ${str(line.substring(cut + 1))}] TJ\n"
   }
 
   // ------------------------------------------------------------ paragraphs

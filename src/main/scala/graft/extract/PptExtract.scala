@@ -1,5 +1,6 @@
 package graft.extract
 
+import graft.extract.Bin.{cat, u16le => u16, u32le => u32}
 import scala.collection.mutable.ArrayBuffer
 
 /** Legacy PowerPoint binary (.ppt) text extraction ([MS-PPT], public spec)
@@ -27,12 +28,6 @@ object PptExtract {
   private val TextHeaderAtom = 0x0F9F
   private val TextCharsAtom = 0x0FA0
   private val TextBytesAtom = 0x0FA8
-
-  private def u16(d: Array[Byte], p: Int): Int =
-    (d(p) & 0xff) | ((d(p + 1) & 0xff) << 8)
-  private def u32(d: Array[Byte], p: Int): Long =
-    (d(p) & 0xffL) | ((d(p + 1) & 0xffL) << 8) |
-      ((d(p + 2) & 0xffL) << 16) | ((d(p + 3) & 0xffL) << 24)
 
   def extract(bytes: Array[Byte]): Either[String, PptDoc] =
     CfbExtract.readStreams(bytes).flatMap { streams =>
@@ -160,22 +155,11 @@ object PptExtract {
   def buildPpt(title: String, slides: Seq[(String, Seq[String])],
       viaSlideListWithText: Boolean = false): Array[Byte] = {
     require(slides.nonEmpty, "at least one slide")
-    def rec(verInst: Int, recType: Int, body: Array[Byte]): Array[Byte] = {
-      val out = new java.io.ByteArrayOutputStream(body.length + 8)
-      def w16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-      w16(verInst); w16(recType)
-      val len = body.length.toLong
-      out.write((len & 0xff).toInt); out.write(((len >> 8) & 0xff).toInt)
-      out.write(((len >> 16) & 0xff).toInt); out.write(((len >> 24) & 0xff).toInt)
-      out.write(body)
-      out.toByteArray
-    }
-    def cat(parts: Array[Byte]*): Array[Byte] = {
-      val o = new java.io.ByteArrayOutputStream(); parts.foreach(o.write); o.toByteArray
-    }
+    def rec(verInst: Int, recType: Int, body: Array[Byte]): Array[Byte] =
+      new Bin.Sink(body.length + 8).u16le(verInst).u16le(recType)
+        .u32le(body.length).bytes(body).toArray
     def headerAtom(txType: Int): Array[Byte] =
-      rec(0x0000, TextHeaderAtom, Array(
-        (txType & 0xff).toByte, ((txType >> 8) & 0xff).toByte, 0, 0))
+      rec(0x0000, TextHeaderAtom, new Bin.Sink().u32le(txType).toArray)
 
     def textRecs(st: String, blocks: Seq[String]): Array[Byte] = {
       val titleRecs =

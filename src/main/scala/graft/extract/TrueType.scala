@@ -1,5 +1,6 @@
 package graft.extract
 
+import graft.extract.Bin.{u8, u16be => u16, u32be => u32}
 import scala.collection.mutable
 
 /** Embedded TrueType font-program decode — the wild-PDF slice: subsetted
@@ -63,36 +64,25 @@ object TrueType {
   }
 
   // ------------------------------------------------------------ parser
-  private final class R(val d: Array[Byte]) {
-    def u8(p: Int): Int = d(p) & 0xff
-    def u16(p: Int): Int = ((d(p) & 0xff) << 8) | (d(p + 1) & 0xff)
-    def s16(p: Int): Int = u16(p).toShort.toInt
-    def u32(p: Int): Long =
-      ((d(p) & 0xffL) << 24) | ((d(p + 1) & 0xffL) << 16) |
-        ((d(p + 2) & 0xffL) << 8) | (d(p + 3) & 0xffL)
-    def tag(p: Int): String = new String(d, p, 4, java.nio.charset.StandardCharsets.US_ASCII)
-  }
-
   /** Never throws: a malformed program yields None (caller falls back). */
   def parse(data: Array[Byte]): Option[Embedded] =
     try parseUnsafe(data) catch { case _: Exception => None }
 
-  private def parseUnsafe(data: Array[Byte]): Option[Embedded] = {
-    val r = new R(data)
-    if (data.length < 12) return None
-    val version = r.u32(0)
+  private def parseUnsafe(d: Array[Byte]): Option[Embedded] = {
+    if (d.length < 12) return None
+    val version = u32(d, 0)
     // 0x00010000, 'true', 'OTTO' (CFF glyphs still carry cmap/post)
     if (version != 0x00010000L && version != 0x74727565L && version != 0x4f54544fL)
       return None
-    val numTables = r.u16(4)
+    val numTables = u16(d, 4)
     var cmapOff = -1; var postOff = -1
     var i = 0
     while (i < numTables) {
       val p = 12 + 16 * i
-      if (p + 16 > data.length) return None
-      r.tag(p) match {
-        case "cmap" => cmapOff = r.u32(p + 8).toInt
-        case "post" => postOff = r.u32(p + 8).toInt
+      if (p + 16 > d.length) return None
+      new String(d, p, 4, java.nio.charset.StandardCharsets.US_ASCII) match {
+        case "cmap" => cmapOff = u32(d, p + 8).toInt
+        case "post" => postOff = u32(d, p + 8).toInt
         case _ => ()
       }
       i += 1
@@ -104,14 +94,14 @@ object TrueType {
     var win30: Map[Int, Int] = null      // (3,0) symbol
     var win31: Map[Int, Int] = null      // (3,1) unicode BMP
     var uni0x: Map[Int, Int] = null      // (0,*) unicode
-    if (cmapOff >= 0 && cmapOff + 4 <= data.length) {
-      val n = r.u16(cmapOff + 2)
+    if (cmapOff >= 0 && cmapOff + 4 <= d.length) {
+      val n = u16(d, cmapOff + 2)
       var k = 0
       while (k < n) {
         val e = cmapOff + 4 + 8 * k
-        val plat = r.u16(e); val enc = r.u16(e + 2)
-        val sub = cmapOff + r.u32(e + 4).toInt
-        val m = parseCmapSubtable(r, sub)
+        val plat = u16(d, e); val enc = u16(d, e + 2)
+        val sub = cmapOff + u32(d, e + 4).toInt
+        val m = parseCmapSubtable(d, sub)
         if (m != null) {
           if (plat == 1 && enc == 0 && mac10 == null) mac10 = m
           else if (plat == 3 && enc == 0 && win30 == null) win30 = m
@@ -142,23 +132,23 @@ object TrueType {
 
     // -------- post: glyph → name
     val glyphNames: Map[Int, String] =
-      if (postOff < 0 || postOff + 34 > data.length) Map.empty
-      else r.u32(postOff) match {
+      if (postOff < 0 || postOff + 34 > d.length) Map.empty
+      else u32(d, postOff) match {
         case 0x00010000L =>
           MacGlyphNames.zipWithIndex.map { case (nm, g) => g -> nm }.toMap
         case 0x00020000L =>
-          val numGlyphs = r.u16(postOff + 32)
+          val numGlyphs = u16(d, postOff + 32)
           val idx = new Array[Int](numGlyphs)
           var g = 0
-          while (g < numGlyphs) { idx(g) = r.u16(postOff + 34 + 2 * g); g += 1 }
+          while (g < numGlyphs) { idx(g) = u16(d, postOff + 34 + 2 * g); g += 1 }
           // Pascal-string pool follows the index array
           val custom = mutable.ArrayBuffer[String]()
           var p = postOff + 34 + 2 * numGlyphs
-          while (p < data.length && custom.length < numGlyphs) {
-            val len = r.u8(p)
-            if (p + 1 + len > data.length) p = data.length
+          while (p < d.length && custom.length < numGlyphs) {
+            val len = u8(d, p)
+            if (p + 1 + len > d.length) p = d.length
             else {
-              custom += new String(data, p + 1, len,
+              custom += new String(d, p + 1, len,
                 java.nio.charset.StandardCharsets.US_ASCII)
               p += 1 + len
             }
@@ -175,21 +165,21 @@ object TrueType {
   }
 
   /** Formats 0/4/6; anything else → null (subtable skipped). */
-  private def parseCmapSubtable(r: R, off: Int): Map[Int, Int] = {
-    if (off < 0 || off + 2 > r.d.length) return null
-    r.u16(off) match {
+  private def parseCmapSubtable(d: Array[Byte], off: Int): Map[Int, Int] = {
+    if (off < 0 || off + 2 > d.length) return null
+    u16(d, off) match {
       case 0 =>
-        if (off + 6 + 256 > r.d.length) return null
-        (0 until 256).iterator.map(c => c -> r.u8(off + 6 + c))
+        if (off + 6 + 256 > d.length) return null
+        (0 until 256).iterator.map(c => c -> u8(d, off + 6 + c))
           .filter(_._2 != 0).toMap
       case 4 =>
-        val segX2 = r.u16(off + 6)
+        val segX2 = u16(d, off + 6)
         val segs = segX2 / 2
         val endP = off + 14
         val startP = endP + segX2 + 2
         val deltaP = startP + segX2
         val rangeP = deltaP + segX2
-        if (rangeP + segX2 > r.d.length) return null
+        if (rangeP + segX2 > d.length) return null
         val out = mutable.Map[Int, Int]()
         // iteration cap: a crafted font can declare thousands of
         // overlapping full-range segments (segs × 65536 ≈ 2e9 loops — a
@@ -201,10 +191,10 @@ object TrueType {
         var iters = 0
         var s = 0
         while (s < segs && iters < iterCap) {
-          val end = r.u16(endP + 2 * s)
-          val start = r.u16(startP + 2 * s)
-          val delta = r.s16(deltaP + 2 * s)
-          val ro = r.u16(rangeP + 2 * s)
+          val end = u16(d, endP + 2 * s)
+          val start = u16(d, startP + 2 * s)
+          val delta = u16(d, deltaP + 2 * s).toShort.toInt
+          val ro = u16(d, rangeP + 2 * s)
           if (start != 0xffff && start <= end) {
             var c = start
             while (c <= end && iters < iterCap) {
@@ -213,9 +203,9 @@ object TrueType {
                 if (ro == 0) (c + delta) & 0xffff
                 else {
                   val gp = rangeP + 2 * s + ro + 2 * (c - start)
-                  if (gp + 2 > r.d.length) 0
+                  if (gp + 2 > d.length) 0
                   else {
-                    val raw = r.u16(gp)
+                    val raw = u16(d, gp)
                     if (raw == 0) 0 else (raw + delta) & 0xffff
                   }
                 }
@@ -227,10 +217,10 @@ object TrueType {
         }
         out.toMap
       case 6 =>
-        val first = r.u16(off + 6)
-        val count = r.u16(off + 8)
-        if (off + 10 + 2 * count > r.d.length) return null
-        (0 until count).iterator.map(i => (first + i) -> r.u16(off + 10 + 2 * i))
+        val first = u16(d, off + 6)
+        val count = u16(d, off + 8)
+        if (off + 10 + 2 * count > d.length) return null
+        (0 until count).iterator.map(i => (first + i) -> u16(d, off + 10 + 2 * i))
           .filter(_._2 != 0).toMap
       case _ => null
     }
@@ -250,14 +240,6 @@ object TrueType {
       macCmapFormat: Int = 6): Array[Byte] = {
     require(macCmapFormat == 0 || macCmapFormat == 6, "fixture cmap format 0 or 6")
 
-    def be16(v: Int): Array[Byte] = Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def be32(v: Long): Array[Byte] = Array(
-      ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def cat(parts: Array[Byte]*): Array[Byte] = {
-      val o = new java.io.ByteArrayOutputStream(); parts.foreach(o.write); o.toByteArray
-    }
-
     val sub10: Array[Byte] =
       if (codeToGlyph.isEmpty) null
       else if (macCmapFormat == 0) {
@@ -266,15 +248,16 @@ object TrueType {
           require(c < 256 && g < 256, "format 0 is byte-to-byte")
           ids(c) = g.toByte
         }
-        cat(be16(0), be16(262), be16(0), ids)
+        new Bin.Sink().u16be(0).u16be(262).u16be(0).bytes(ids).toArray
       } else {
         val sorted = codeToGlyph.sortBy(_._1)
         val first = sorted.head._1
         val count = sorted.last._1 - first + 1
         val ids = new Array[Int](count)
         sorted.foreach { case (c, g) => ids(c - first) = g }
-        cat(be16(6), be16(10 + 2 * count), be16(0), be16(first), be16(count),
-          cat(ids.map(be16).toSeq: _*))
+        val b = new Bin.Sink().u16be(6).u16be(10 + 2 * count).u16be(0).u16be(first).u16be(count)
+        ids.foreach(b.u16be)
+        b.toArray
       }
 
     val sub31: Array[Byte] =
@@ -294,60 +277,56 @@ object TrueType {
           x * 2
         }
         val entrySel = (math.log(sr / 2.0) / math.log(2.0)).toInt
-        val body = cat(
-          cat(segs.map(s => be16(s._2)): _*), be16(0),
-          cat(segs.map(s => be16(s._1)): _*),
-          cat(segs.map(s => be16(s._3)): _*),
-          cat(segs.map(_ => be16(0)): _*))
-        cat(be16(4), be16(16 + body.length - 2), be16(0),
-          be16(segX2), be16(sr), be16(entrySel), be16(segX2 - sr), body)
+        val b = new Bin.Sink().u16be(4).u16be(16 + 8 * segCount).u16be(0)
+          .u16be(segX2).u16be(sr).u16be(entrySel).u16be(segX2 - sr)
+        segs.foreach(sg => b.u16be(sg._2)) // end codes
+        b.u16be(0) // reservedPad
+        segs.foreach(sg => b.u16be(sg._1)) // start codes
+        segs.foreach(sg => b.u16be(sg._3)) // deltas
+        segs.foreach(_ => b.u16be(0)) // idRangeOffsets
+        b.toArray
       }
 
     val subs = Seq(
       Option(sub10).map((1, 0, _)),
       Option(sub31).map((3, 1, _))).flatten
-    val cmapHeader = cat(be16(0), be16(subs.length))
+    val cmap = new Bin.Sink().u16be(0).u16be(subs.length)
     var subOff = 4 + 8 * subs.length
-    val encRecs = subs.map { case (p, e, b) =>
-      val rec = cat(be16(p), be16(e), be32(subOff.toLong))
-      subOff += b.length
-      rec
-    }
-    val cmap = cat((cmapHeader +: encRecs) ++ subs.map(_._3): _*)
+    subs.foreach { case (p, e, b) => cmap.u16be(p).u16be(e).u32be(subOff); subOff += b.length }
+    subs.foreach(sub => cmap.bytes(sub._3))
 
     val post: Array[Byte] = {
       val maxG = (glyphNames.keys ++ Seq(0)).max
       val numGlyphs = maxG + 1
       val customNames = mutable.ArrayBuffer[String]()
-      val idx = (0 until numGlyphs).map { g =>
-        glyphNames.get(g) match {
+      val b = new Bin.Sink().u32be(0x00020000L)
+        .padTo(32) // italicAngle, underline, isFixedPitch, memory hints
+        .u16be(numGlyphs)
+      (0 until numGlyphs).foreach { g =>
+        b.u16be(glyphNames.get(g) match {
           case Some(nm) =>
             val std = MacGlyphNames.indexOf(nm)
             if (std >= 0) std
             else { customNames += nm; 258 + customNames.length - 1 }
           case None => 0 // .notdef
-        }
+        })
       }
-      cat(be32(0x00020000L), be32(0), be16(0), be16(0), be32(0),
-        be32(0), be32(0), be32(0), be32(0),
-        be16(numGlyphs),
-        cat(idx.map(be16): _*),
-        cat(customNames.map { nm =>
-          val b = nm.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-          cat(Array(b.length.toByte), b)
-        }.toSeq: _*))
+      customNames.foreach { nm =>
+        val nb = nm.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+        b.u8(nb.length).bytes(nb)
+      }
+      b.toArray
     }
 
-    val tables = Seq(("cmap", cmap), ("post", post))
-    val numTables = tables.length
-    var off = 12 + 16 * numTables
-    val dir = tables.map { case (tag, b) =>
-      val entry = cat(tag.getBytes(java.nio.charset.StandardCharsets.US_ASCII),
-        be32(0), be32(off.toLong), be32(b.length.toLong))
+    val tables = Seq(("cmap", cmap.toArray), ("post", post))
+    val out = new Bin.Sink().u32be(0x00010000L).u16be(tables.length)
+      .u16be(16 * 2).u16be(1).u16be(16) // searchRange, entrySelector, rangeShift
+    var off = 12 + 16 * tables.length
+    tables.foreach { case (tag, b) =>
+      out.ascii(tag).u32be(0).u32be(off).u32be(b.length) // tag, checksum, offset, length
       off += b.length
-      entry
     }
-    cat((cat(be32(0x00010000L), be16(numTables), be16(16 * 2), be16(1), be16(16))
-      +: dir) ++ tables.map(_._2): _*)
+    tables.foreach(t => out.bytes(t._2))
+    out.toArray
   }
 }

@@ -41,8 +41,7 @@ object Type1 {
     // start with "%!" (possibly after whitespace)
     val (start, limit0) =
       if ((data(0) & 0xff) == 0x80 && data(1) == 1 && data.length >= 6) {
-        val len = (data(2) & 0xff) | ((data(3) & 0xff) << 8) |
-          ((data(4) & 0xff) << 16) | ((data(5) & 0xff) << 24)
+        val len = Bin.u32le(data, 2).toInt
         (6, math.min(6L + math.max(len, 0), data.length.toLong).toInt)
       } else (0, data.length)
     val head = new String(data, start, limit0 - start,
@@ -78,11 +77,9 @@ object Type1 {
     val (clear, priv) = buildParts(codeNames, stdEncoding)
     if (!pfb) clear ++ priv
     else {
-      def seg(t: Int, b: Array[Byte]): Array[Byte] =
-        Array(0x80.toByte, t.toByte, (b.length & 0xff).toByte,
-          ((b.length >> 8) & 0xff).toByte, ((b.length >> 16) & 0xff).toByte,
-          ((b.length >> 24) & 0xff).toByte) ++ b
-      seg(1, clear) ++ seg(2, priv) ++ Array(0x80.toByte, 3.toByte)
+      new Bin.Sink().u8(0x80).u8(1).u32le(clear.length).bytes(clear)
+        .u8(0x80).u8(2).u32le(priv.length).bytes(priv)
+        .u8(0x80).u8(3).toArray
     }
   }
 

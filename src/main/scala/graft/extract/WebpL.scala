@@ -321,16 +321,12 @@ object WebpL {
       emit(ac, p >>> 24)
     }
     val payload = Array[Byte](0x2F) ++ w.toByteArray
-    val riff = new java.io.ByteArrayOutputStream()
-    def ascii(s: String): Unit = riff.write(s.getBytes("ISO-8859-1"))
-    def u32(v: Int): Unit =
-      riff.write(Array[Byte](v.toByte, (v >>> 8).toByte, (v >>> 16).toByte, (v >>> 24).toByte))
     val chunk = payload.length
     val padded = chunk + (chunk & 1)
-    ascii("RIFF"); u32(4 + 8 + padded); ascii("WEBP"); ascii("VP8L"); u32(chunk)
-    riff.write(payload)
-    if ((chunk & 1) == 1) riff.write(0)
-    riff.toByteArray
+    new Bin.Sink(8 + 4 + 8 + padded)
+      .ascii("RIFF").u32le(4 + 8 + padded).ascii("WEBP")
+      .ascii("VP8L").u32le(chunk).bytes(payload).padTo(20 + padded)
+      .toArray
   }
 
   /** True when the bytes carry the RIFF/WEBP/VP8L container signature. */

@@ -1,5 +1,6 @@
 package graft.extract
 
+import graft.extract.Bin.{f64le => f64, u16le => u16, u32le => u32}
 import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
@@ -32,18 +33,6 @@ object XlsExtract {
   /** Written as an RK-encoded integer (the common Excel integer cell). */
   final case class XlsRkInt(v: Int) extends XlsCell
   final case class XlsBool(b: Boolean) extends XlsCell
-
-  private def u16(d: Array[Byte], p: Int): Int =
-    (d(p) & 0xff) | ((d(p + 1) & 0xff) << 8)
-  private def u32(d: Array[Byte], p: Int): Long =
-    (d(p) & 0xffL) | ((d(p + 1) & 0xffL) << 8) |
-      ((d(p + 2) & 0xffL) << 16) | ((d(p + 3) & 0xffL) << 24)
-  private def f64(d: Array[Byte], p: Int): Double = {
-    var bits = 0L
-    var k = 7
-    while (k >= 0) { bits = (bits << 8) | (d(p + k) & 0xffL); k -= 1 }
-    java.lang.Double.longBitsToDouble(bits)
-  }
 
   private val RecBof = 0x0809
   private val RecEof = 0x000A
@@ -305,29 +294,11 @@ object XlsExtract {
     require(sheets.nonEmpty, "at least one sheet")
     def rec(t: Int, body: Array[Byte]): Array[Byte] = {
       require(body.length <= 8224, "record body over BIFF8 cap")
-      val out = new Array[Byte](4 + body.length)
-      out(0) = (t & 0xff).toByte; out(1) = ((t >> 8) & 0xff).toByte
-      out(2) = (body.length & 0xff).toByte; out(3) = ((body.length >> 8) & 0xff).toByte
-      System.arraycopy(body, 0, out, 4, body.length)
-      out
-    }
-    class B {
-      val o = new java.io.ByteArrayOutputStream()
-      def w8(v: Int): B = { o.write(v & 0xff); this }
-      def w16(v: Int): B = { w8(v); w8(v >> 8) }
-      def w32(v: Long): B = { w16((v & 0xffff).toInt); w16(((v >> 16) & 0xffff).toInt) }
-      def f64(d: Double): B = {
-        val bits = java.lang.Double.doubleToLongBits(d)
-        var k = 0
-        while (k < 8) { w8(((bits >> (8 * k)) & 0xff).toInt); k += 1 }
-        this
-      }
-      def bytes(b: Array[Byte]): B = { o.write(b); this }
-      def arr: Array[Byte] = o.toByteArray
+      new Bin.Sink(4 + body.length).u16le(t).u16le(body.length).bytes(body).toArray
     }
     def bof(dt: Int): Array[Byte] =
-      rec(RecBof, new B().w16(0x0600).w16(dt).w16(0x0DBB).w16(0x07CC)
-        .w32(0xC1L).w32(0x0206L).arr)
+      rec(RecBof, new Bin.Sink().u16le(0x0600).u16le(dt).u16le(0x0DBB).u16le(0x07CC)
+        .u32le(0xC1L).u32le(0x0206L).toArray)
     val eof = rec(RecEof, Array.emptyByteArray)
 
     // SST: unique strings in first-appearance order
@@ -341,10 +312,10 @@ object XlsExtract {
     }))
     def strBytes(s: String): Array[Byte] = {
       val ascii = s.forall(c => c >= ' ' && c < 0x7f)
-      val b = new B().w16(s.length).w8(if (ascii) 0 else 1)
+      val b = new Bin.Sink().u16le(s.length).u8(if (ascii) 0 else 1)
       if (ascii) b.bytes(s.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
       else b.bytes(s.getBytes(java.nio.charset.StandardCharsets.UTF_16LE))
-      b.arr
+      b.toArray
     }
     val sstStrings = sstIndex.keys.toSeq
     val sstRecs: Array[Byte] =
@@ -360,57 +331,51 @@ object XlsExtract {
         def chars(t: String): Array[Byte] =
           if (ascii2) t.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
           else t.getBytes(java.nio.charset.StandardCharsets.UTF_16LE)
-        val head = new B().w32(cstTotal).w32(sstIndex.size.toLong)
+        val head = new Bin.Sink().u32le(cstTotal).u32le(sstIndex.size.toLong)
           .bytes(strBytes(sstStrings.head))
-          .w16(s2.length).w8(if (ascii2) 0 else 1).bytes(chars(part1))
-        val cont = new B().w8(if (ascii2) 0 else 1).bytes(chars(part2))
+          .u16le(s2.length).u8(if (ascii2) 0 else 1).bytes(chars(part1))
+        val cont = new Bin.Sink().u8(if (ascii2) 0 else 1).bytes(chars(part2))
         sstStrings.drop(2).foreach(s => cont.bytes(strBytes(s)))
-        rec(RecSst, head.arr) ++ rec(RecContinue, cont.arr)
+        rec(RecSst, head.toArray) ++ rec(RecContinue, cont.toArray)
       } else {
-        val b = new B().w32(cstTotal).w32(sstIndex.size.toLong)
+        val b = new Bin.Sink().u32le(cstTotal).u32le(sstIndex.size.toLong)
         sstStrings.foreach(s => b.bytes(strBytes(s)))
-        rec(RecSst, b.arr)
+        rec(RecSst, b.toArray)
       }
 
     val sheetBodies = sheets.map { case (_, rows) =>
-      val b = new java.io.ByteArrayOutputStream()
-      b.write(bof(0x0010))
+      val b = new Bin.Sink().bytes(bof(0x0010))
       rows.zipWithIndex.foreach { case (cols, r) =>
         cols.zipWithIndex.foreach { case (cell, c) =>
-          val base = new B().w16(r).w16(c).w16(0) // rw, col, ixfe
-          cell match {
-            case XlsStr(s) => b.write(rec(RecLabelSst, base.w32(sstIndex(s).toLong).arr))
-            case XlsNum(d) => b.write(rec(RecNumber, base.f64(d).arr))
-            case XlsRkInt(v) => b.write(rec(RecRk, base.w32(((v.toLong << 2) | 0x2L) & 0xFFFFFFFFL).arr))
-            case XlsBool(v) => b.write(rec(RecBoolErr, base.w8(if (v) 1 else 0).w8(0).arr))
-          }
+          val base = new Bin.Sink().u16le(r).u16le(c).u16le(0) // rw, col, ixfe
+          b.bytes(cell match {
+            case XlsStr(s) => rec(RecLabelSst, base.u32le(sstIndex(s).toLong).toArray)
+            case XlsNum(d) => rec(RecNumber, base.f64le(d).toArray)
+            case XlsRkInt(v) => rec(RecRk, base.u32le((v.toLong << 2) | 0x2L).toArray)
+            case XlsBool(v) => rec(RecBoolErr, base.u8(if (v) 1 else 0).u8(0).toArray)
+          })
         }
       }
-      b.write(eof)
-      b.toByteArray
+      b.bytes(eof).toArray
     }
 
     // globals: BOF + BoundSheet8* + SST + EOF, lbPlyPos patched by layout
     def boundSheet(name: String, pos: Int): Array[Byte] = {
       val ascii = name.forall(c => c >= ' ' && c < 0x7f)
-      val b = new B().w32(pos.toLong).w8(0).w8(0).w8(name.length)
-        .w8(if (ascii) 0 else 1)
+      val b = new Bin.Sink().u32le(pos.toLong).u8(0).u8(0).u8(name.length)
+        .u8(if (ascii) 0 else 1)
       if (ascii) b.bytes(name.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
       else b.bytes(name.getBytes(java.nio.charset.StandardCharsets.UTF_16LE))
-      rec(RecBoundSheet, b.arr)
+      rec(RecBoundSheet, b.toArray)
     }
     val fixedLen = bof(0x0005).length +
       sheets.map(s => boundSheet(s._1, 0).length).sum + sstRecs.length + eof.length
     val offsets = sheetBodies.scanLeft(fixedLen)(_ + _.length)
-    val wb = new java.io.ByteArrayOutputStream()
-    wb.write(bof(0x0005))
-    sheets.zipWithIndex.foreach { case ((name, _), i) => wb.write(boundSheet(name, offsets(i))) }
-    wb.write(sstRecs)
-    wb.write(eof)
-    sheetBodies.foreach(wb.write)
+    val bounds = sheets.zipWithIndex.map { case ((name, _), i) => boundSheet(name, offsets(i)) }
+    val wb = Bin.cat(Seq(bof(0x0005)) ++ bounds ++ Seq(sstRecs, eof) ++ sheetBodies: _*)
 
     CfbExtract.build(Seq(
-      "Workbook" -> wb.toByteArray,
+      "Workbook" -> wb,
       "\u0005SummaryInformation" -> CfbExtract.buildSummary(title)))
   }
 }

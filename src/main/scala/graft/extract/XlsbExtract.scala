@@ -1,5 +1,6 @@
 package graft.extract
 
+import graft.extract.Bin.{f64le => f64, u32le => u32}
 import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
@@ -48,17 +49,6 @@ object XlsbExtract {
   private val BrtBeginSst = 0x9F
   private val BrtEndSst = 0xA0
 
-  private def u16(d: Array[Byte], p: Int): Int =
-    (d(p) & 0xff) | ((d(p + 1) & 0xff) << 8)
-  private def u32(d: Array[Byte], p: Int): Long =
-    (d(p) & 0xffL) | ((d(p + 1) & 0xffL) << 8) |
-      ((d(p + 2) & 0xffL) << 16) | ((d(p + 3) & 0xffL) << 24)
-  private def f64(d: Array[Byte], p: Int): Double = {
-    var bits = 0L
-    var k = 7
-    while (k >= 0) { bits = (bits << 8) | (d(p + k) & 0xffL); k -= 1 }
-    java.lang.Double.longBitsToDouble(bits)
-  }
 
   /** XLWideString at `p`: (value, next offset). */
   private def wideStr(d: Array[Byte], p: Int): (String, Int) = {
@@ -192,39 +182,22 @@ object XlsbExtract {
   def buildXlsb(title: String, sheets: Seq[(String, Seq[Seq[XlsExtract.XlsCell]])]): Array[Byte] = {
     import XlsExtract.{XlsBool, XlsNum, XlsRkInt, XlsStr}
     require(sheets.nonEmpty, "at least one sheet")
-    class B {
-      val o = new java.io.ByteArrayOutputStream()
-      def w8(v: Int): B = { o.write(v & 0xff); this }
-      def w16(v: Int): B = { w8(v); w8(v >> 8) }
-      def w32(v: Long): B = { w16((v & 0xffff).toInt); w16(((v >> 16) & 0xffff).toInt) }
-      def f64(x: Double): B = {
-        val bits = java.lang.Double.doubleToLongBits(x)
-        var k = 0
-        while (k < 8) { w8(((bits >> (8 * k)) & 0xff).toInt); k += 1 }
-        this
-      }
-      def ws(s: String): B = { // XLWideString
-        w32(s.length.toLong)
-        o.write(s.getBytes(java.nio.charset.StandardCharsets.UTF_16LE))
-        this
-      }
-      def arr: Array[Byte] = o.toByteArray
-    }
+    def ws(b: Bin.Sink, s: String): Bin.Sink = // XLWideString
+      b.u32le(s.length).bytes(s.getBytes(java.nio.charset.StandardCharsets.UTF_16LE))
     def rec(t: Int, body: Array[Byte]): Array[Byte] = {
-      val o = new java.io.ByteArrayOutputStream()
-      if (t < 0x80) o.write(t)
-      else { o.write((t & 0x7f) | 0x80); o.write((t >> 7) & 0x7f) }
+      val o = new Bin.Sink(body.length + 4)
+      if (t < 0x80) o.u8(t) else o.u8((t & 0x7f) | 0x80).u8((t >> 7) & 0x7f)
       var len = body.length
       var more = true
       while (more) {
         val b = len & 0x7f
         len >>>= 7
         more = len != 0
-        o.write(if (more) b | 0x80 else b)
+        o.u8(if (more) b | 0x80 else b)
       }
-      o.write(body)
-      o.toByteArray
+      o.bytes(body).toArray
     }
+    val empty = Array.emptyByteArray
 
     // SST in first-appearance order
     val sstIndex = mutable.LinkedHashMap[String, Int]()
@@ -235,49 +208,32 @@ object XlsbExtract {
         if (!sstIndex.contains(s)) sstIndex(s) = sstIndex.size
       case _ => ()
     }))
-    val sstPart = {
-      val o = new java.io.ByteArrayOutputStream()
-      o.write(rec(BrtBeginSst, new B().w32(cstTotal).w32(sstIndex.size.toLong).arr))
-      sstIndex.keys.foreach(s => o.write(rec(BrtSSTItem, new B().w8(0).ws(s).arr)))
-      o.write(rec(BrtEndSst, Array.emptyByteArray))
-      o.toByteArray
-    }
+    val sstPart = Bin.cat(
+      rec(BrtBeginSst, new Bin.Sink().u32le(cstTotal).u32le(sstIndex.size).toArray) +:
+        sstIndex.keys.toSeq.map(s => rec(BrtSSTItem, ws(new Bin.Sink().u8(0), s).toArray)) :+
+        rec(BrtEndSst, empty): _*)
 
-    def cellPrefix(c: Int): B = new B().w32(c.toLong).w32(0L)
+    def cellPrefix(c: Int): Bin.Sink = new Bin.Sink().u32le(c).u32le(0)
     val sheetParts = sheets.map { case (_, rows) =>
-      val o = new java.io.ByteArrayOutputStream()
-      o.write(rec(BrtBeginSheet, Array.emptyByteArray))
-      o.write(rec(BrtBeginSheetData, Array.emptyByteArray))
+      val o = new Bin.Sink().bytes(rec(BrtBeginSheet, empty)).bytes(rec(BrtBeginSheetData, empty))
       rows.zipWithIndex.foreach { case (cols, r) =>
-        o.write(rec(BrtRowHdr, new B().w32(r.toLong).w32(0L).w16(300).arr))
+        o.bytes(rec(BrtRowHdr, new Bin.Sink().u32le(r).u32le(0).u16le(300).toArray))
         cols.zipWithIndex.foreach { case (cell, c) =>
-          cell match {
-            case XlsStr(s) =>
-              o.write(rec(BrtCellIsst, cellPrefix(c).w32(sstIndex(s).toLong).arr))
-            case XlsRkInt(v) =>
-              o.write(rec(BrtCellRk, cellPrefix(c).w32(((v.toLong << 2) | 0x2L) & 0xFFFFFFFFL).arr))
-            case XlsNum(x) => o.write(rec(BrtCellReal, cellPrefix(c).f64(x).arr))
-            case XlsBool(v) => o.write(rec(BrtCellBool, cellPrefix(c).w8(if (v) 1 else 0).arr))
-          }
+          o.bytes(cell match {
+            case XlsStr(s) => rec(BrtCellIsst, cellPrefix(c).u32le(sstIndex(s)).toArray)
+            case XlsRkInt(v) => rec(BrtCellRk, cellPrefix(c).u32le((v.toLong << 2) | 0x2L).toArray)
+            case XlsNum(x) => rec(BrtCellReal, cellPrefix(c).f64le(x).toArray)
+            case XlsBool(v) => rec(BrtCellBool, cellPrefix(c).u8(if (v) 1 else 0).toArray)
+          })
         }
       }
-      o.write(rec(BrtEndSheetData, Array.emptyByteArray))
-      o.write(rec(BrtEndSheet, Array.emptyByteArray))
-      o.toByteArray
+      o.bytes(rec(BrtEndSheetData, empty)).bytes(rec(BrtEndSheet, empty)).toArray
     }
 
-    val wbPart = {
-      val o = new java.io.ByteArrayOutputStream()
-      o.write(rec(BrtBeginBook, Array.emptyByteArray))
-      o.write(rec(BrtBeginBundleShs, Array.emptyByteArray))
-      sheets.zipWithIndex.foreach { case ((name, _), i) =>
-        o.write(rec(BrtBundleSh,
-          new B().w32(0L).w32((i + 1).toLong).ws(s"rId${i + 1}").ws(name).arr))
-      }
-      o.write(rec(BrtEndBundleShs, Array.emptyByteArray))
-      o.write(rec(BrtEndBook, Array.emptyByteArray))
-      o.toByteArray
-    }
+    val wbPart = Bin.cat(Seq(rec(BrtBeginBook, empty), rec(BrtBeginBundleShs, empty)) ++
+      sheets.zipWithIndex.map { case ((name, _), i) =>
+        rec(BrtBundleSh, ws(ws(new Bin.Sink().u32le(0).u32le(i + 1), s"rId${i + 1}"), name).toArray)
+      } ++ Seq(rec(BrtEndBundleShs, empty), rec(BrtEndBook, empty)): _*)
 
     val relsXml =
       ("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" + "\n" +
@@ -285,17 +241,10 @@ object XlsbExtract {
         sheets.indices.map(i =>
           s"""<Relationship Id="rId${i + 1}" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" Target="worksheets/sheet${i + 1}.bin"/>""").mkString +
         "</Relationships>").getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    def esc(s: String): String = s.flatMap {
-      case '&' => "&amp;"
-      case '<' => "&lt;"
-      case '>' => "&gt;"
-      case '"' => "&quot;"
-      case c => c.toString
-    }
     val corePart =
       ("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" + "\n" +
         """<cp:coreProperties xmlns:cp="http://schemas.openxmlformats.org/package/2006/metadata/core-properties" xmlns:dc="http://purl.org/dc/elements/1.1/">""" +
-        s"<dc:title>${esc(title)}</dc:title></cp:coreProperties>")
+        s"<dc:title>${Bin.xmlAttr(title)}</dc:title></cp:coreProperties>")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8)
 
     DocxExtract.writeZip(

@@ -175,28 +175,16 @@ object CcittSpec {
     * /K — shared fixture for the G3/G4 integration tests.
     */
   def buildCcittPdf(w0: Int, h0: Int, k: Int, payload: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def w(s: String): Unit = out.write(s.getBytes("ISO-8859-1"))
-    val offsets = scala.collection.mutable.ArrayBuffer[Int]()
-    def obj(n: Int): Unit = { offsets += out.size(); w(s"$n 0 obj\n") }
     val content = s"q $w0 0 0 $h0 10 20 cm /Im0 Do Q\n"
-    w("%PDF-1.4\n")
-    obj(1); w("<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    obj(2); w("<< /Type /Pages /Count 1 /Kids [ 3 0 R ] >>\nendobj\n")
-    obj(3)
-    w("<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 612 792 ] " +
-      "/Resources << /XObject << /Im0 5 0 R >> >> /Contents 4 0 R >>\nendobj\n")
-    obj(4); w(s"<< /Length ${content.length} >>\nstream\n$content\nendstream\nendobj\n")
-    obj(5)
-    w(s"<< /Type /XObject /Subtype /Image /Width $w0 /Height $h0 " +
+    val pdf = new graft.extract.Bin.PdfWriter
+    pdf.obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
+    pdf.obj(2, "<< /Type /Pages /Count 1 /Kids [ 3 0 R ] >>")
+    pdf.obj(3, "<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 612 792 ] " +
+      "/Resources << /XObject << /Im0 5 0 R >> >> /Contents 4 0 R >>")
+    pdf.stream(4, s"<< /Length ${content.length} >>", content.getBytes("ISO-8859-1"))
+    pdf.stream(5, s"<< /Type /XObject /Subtype /Image /Width $w0 /Height $h0 " +
       s"/BitsPerComponent 1 /ColorSpace /DeviceGray /Filter /CCITTFaxDecode " +
-      s"/DecodeParms << /K $k /Columns $w0 /Rows $h0 >> /Length ${payload.length} >>\nstream\n")
-    out.write(payload)
-    w("\nendstream\nendobj\n")
-    val xrefAt = out.size()
-    w(s"xref\n0 ${offsets.length + 1}\n0000000000 65535 f \n")
-    offsets.foreach(o => w(f"$o%010d 00000 n \n"))
-    w(s"trailer\n<< /Size ${offsets.length + 1} /Root 1 0 R >>\nstartxref\n$xrefAt\n%%EOF\n")
-    out.toByteArray
+      s"/DecodeParms << /K $k /Columns $w0 /Rows $h0 >> /Length ${payload.length} >>", payload)
+    pdf.finish("")
   }
 }

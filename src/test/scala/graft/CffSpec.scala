@@ -1,6 +1,6 @@
 package graft
 
-import graft.extract.{Cff, PdfText}
+import graft.extract.{Bin, Cff, PdfText}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Embedded CFF/Type1C decode ([MS — Adobe TN #5176] structures): direct
@@ -34,32 +34,35 @@ class CffSpec extends AnyFunSuite {
   }
 
   test("handcrafted format-1 charset + format-1 encoding with a supplement") {
-    def be16(v: Int) = Seq(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def index(entries: Seq[Seq[Byte]]): Seq[Byte] = {
-      if (entries.isEmpty) return be16(0)
-      val offsets = entries.scanLeft(1)(_ + _.length)
-      be16(entries.size) ++ Seq(1.toByte) ++ offsets.map(_.toByte) ++ entries.flatten
+    def index(entries: Seq[Array[Byte]]): Array[Byte] = {
+      val b = new Bin.Sink().u16be(entries.size)
+      if (entries.nonEmpty) {
+        b.u8(1) // offSize
+        entries.scanLeft(1)(_ + _.length).foreach(b.u8)
+        entries.foreach(b.bytes)
+      }
+      b.toArray
     }
-    def i32(v: Int, op: Int) = Seq(29.toByte, ((v >> 24) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 8) & 0xff).toByte, (v & 0xff).toByte, op.toByte)
-    val header = Seq[Byte](1, 0, 4, 4)
-    val nameIdx = index(Seq("X".getBytes("US-ASCII").toSeq))
-    val topLen = index(Seq(i32(0, 15) ++ i32(0, 16) ++ i32(0, 17))).length
+    def top(charsetAt: Int, encodingAt: Int, charStringsAt: Int) = index(Seq(new Bin.Sink()
+      .u8(29).u32be(charsetAt).u8(15).u8(29).u32be(encodingAt).u8(16)
+      .u8(29).u32be(charStringsAt).u8(17).toArray))
+    val header = Array[Byte](1, 0, 4, 4)
+    val nameIdx = index(Seq("X".getBytes("US-ASCII")))
     val stringIdx = index(Nil) // no custom strings
     val gsubr = index(Nil)
     // glyphs 1..3 = SIDs 34,35,36 (A,B,C) via ONE format-1 range
-    val charset = Seq[Byte](1) ++ be16(34) ++ Seq(2.toByte)
+    val charset = new Bin.Sink().u8(1).u16be(34).u8(2).toArray
     // encoding format 1 + supplements bit: one range code 65..66 -> glyphs
     // 1,2; supplement maps code 90 -> SID 36 (C, glyph 3 via the charset)
-    val encoding = Seq[Byte]((0x81).toByte, 1, 65, 1) ++
-      Seq[Byte](1, 90) ++ be16(36)
-    val charStrings = index(Seq.fill(4)(Seq(0x0e.toByte)))
-    val encodingAt = header.length + nameIdx.length + topLen + stringIdx.length + gsubr.length
+    val encoding = new Bin.Sink().u8(0x81).u8(1).u8(65).u8(1)
+      .u8(1).u8(90).u16be(36).toArray
+    val charStrings = index(Seq.fill(4)(Array(0x0e.toByte)))
+    val encodingAt = header.length + nameIdx.length + top(0, 0, 0).length +
+      stringIdx.length + gsubr.length
     val charsetAt = encodingAt + encoding.length
     val charStringsAt = charsetAt + charset.length
-    val top = index(Seq(i32(charsetAt, 15) ++ i32(encodingAt, 16) ++ i32(charStringsAt, 17)))
-    val cff = (header ++ nameIdx ++ top ++ stringIdx ++ gsubr ++
-      encoding ++ charset ++ charStrings).toArray
+    val cff = Bin.cat(header, nameIdx, top(charsetAt, encodingAt, charStringsAt), stringIdx,
+      gsubr, encoding, charset, charStrings)
     val emb = Cff.parse(cff).getOrElse(fail("parse failed"))
     assert(emb.decode(65).contains("A"))
     assert(emb.decode(66).contains("B"))

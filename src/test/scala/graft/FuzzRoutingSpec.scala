@@ -146,5 +146,21 @@ class FuzzRoutingSpec extends AnyFunSuite {
       val ms = (System.nanoTime() - t0) / 1e6
       assert(ms < 30000, s"$mime pathological case took ${ms}ms")
     }
+    // 1 KiB compound file whose DIFAT sector 0 chains to itself: with the
+    // header's numFat = numDifat = 2^31 - 1 the walk used to grow its FAT
+    // list until the heap died; with numFat = 1 it spun 2^31 hops
+    for (numFat <- Seq(0x7FFFFFFF, 1)) {
+      val cfb = new graft.extract.Bin.Sink(1024)
+        .u32le(0xE011CFD0L).u32le(0xE11AB1A1L)
+        .padTo(30).u16le(9) // sector shift
+        .padTo(44).u32le(numFat)
+        .padTo(68).u32le(0).u32le(0x7FFFFFFF) // first DIFAT sector, DIFAT count
+        .padTo(1024).toArray // every DIFAT slot 0, sector 0's next-link 0 too
+      val t0 = System.nanoTime()
+      val out = Pipeline.extractOne(Ingest.toRawDoc("cycle.doc", cfb, "application/msword"))
+      val ms = (System.nanoTime() - t0) / 1e6
+      assert(out.failure.startsWith("cfb_parse_error"), s"numFat $numFat: ${out.failure}")
+      assert(ms < 30000, s"DIFAT cycle (numFat $numFat) took ${ms}ms")
+    }
   }
 }

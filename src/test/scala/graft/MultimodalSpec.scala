@@ -89,12 +89,9 @@ class MultimodalSpec extends AnyFunSuite {
     // from-scratch codec reads only VP8L (documented non-goal), the JDK
     // ships no WebP reader — so the row must degrade, not throw
     val body = Array.fill[Byte](16)(0x5A)
-    val bos = new java.io.ByteArrayOutputStream()
-    def tag(s: String): Unit = bos.write(s.getBytes("ISO-8859-1"))
-    def le32(v: Int): Unit = (0 until 4).foreach(i => bos.write((v >>> (8 * i)) & 0xff))
-    tag("RIFF"); le32(4 + 8 + body.length); tag("WEBP")
-    tag("VP8 "); le32(body.length); bos.write(body)
-    val lossy = bos.toByteArray
+    val lossy = new graft.extract.Bin.Sink()
+      .ascii("RIFF").u32le(4 + 8 + body.length).ascii("WEBP")
+      .ascii("VP8 ").u32le(body.length).bytes(body).toArray
     assert(!graft.extract.WebpL.isVp8l(lossy))
     assert(Multimodal.imageDims(lossy).isEmpty) // min-size path: filtered
     val out = Multimodal.extractFeatures(spark.createDataset(Seq(

@@ -251,35 +251,25 @@ class PdfBytesSpec extends AnyFunSuite {
 
   test("gen>0 objects derive per-object keys from the xref generation") {
     import graft.extract.{PdfCrypt, PdfRewrite}
+    import graft.extract.Bin.hex
     val title = "generation-one title"
-    val out = new java.io.ByteArrayOutputStream
-    def w(s: String): Unit = out.write(s.getBytes("ISO-8859-1"))
-    def hex(b: Array[Byte]): String = "<" + b.map(x => f"${x & 0xff}%02X").mkString + ">"
     val pwd = Array.emptyByteArray
     val id0 = PdfCrypt.md5("gen1-test".getBytes("UTF-8"))
     val o = PdfCrypt.computeO(pwd, pwd, 3, 16)
     val perm = -44
     val key = PdfCrypt.fileKey(pwd, o, perm, id0, 3, 16)
     val u = PdfCrypt.computeU(key, id0, 3) ++ new Array[Byte](16)
-    val offsets = scala.collection.mutable.ArrayBuffer[(Int, Int)]() // (offset, gen)
-    def obj(num: Int, gen: Int, body: String): Unit = {
-      offsets += ((out.size(), gen)); w(s"$num $gen obj\n$body\nendobj\n")
-    }
-    w("%PDF-1.4\n")
-    obj(1, 0, "<< /Type /Catalog /Pages 2 0 R >>")
-    obj(2, 0, "<< /Type /Pages /Count 1 /Kids [ 3 0 R ] >>")
-    obj(3, 0, "<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 100 200 ] /Contents 4 0 R >>")
-    obj(4, 0, "<< /Length 0 >>\nstream\n\nendstream")
+    val pdf = new graft.extract.Bin.PdfWriter
+    pdf.obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
+    pdf.obj(2, "<< /Type /Pages /Count 1 /Kids [ 3 0 R ] >>")
+    pdf.obj(3, "<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 100 200 ] /Contents 4 0 R >>")
+    pdf.stream(4, "<< /Length 0 >>", Array.emptyByteArray)
     // the Info object lives at GENERATION 1: Algorithm 1 hashes (num, gen),
     // so keying it as gen 0 decrypts to garbage
     val tEnc = PdfCrypt.encryptString(key, 5, 1, title.getBytes("ISO-8859-1"))
-    obj(5, 1, s"<< /Title ${hex(tEnc)} >>")
-    obj(6, 0, s"<< /Filter /Standard /V 2 /Length 128 /R 3 /O ${hex(o)} /U ${hex(u)} /P $perm >>")
-    val xrefAt = out.size()
-    w("xref\n0 7\n0000000000 65535 f \n")
-    offsets.foreach { case (off, g) => w(f"$off%010d $g%05d n \n") }
-    w(s"trailer\n<< /Size 7 /Root 1 0 R /Info 5 1 R /Encrypt 6 0 R /ID [ ${hex(id0)} ${hex(id0)} ] >>\nstartxref\n$xrefAt\n%%EOF\n")
-    val bytes = out.toByteArray
+    pdf.obj(5, s"<< /Title ${hex(tEnc)} >>", gen = 1)
+    pdf.obj(6, s"<< /Filter /Standard /V 2 /Length 128 /R 3 /O ${hex(o)} /U ${hex(u)} /P $perm >>")
+    val bytes = pdf.finish(s" /Info 5 1 R /Encrypt 6 0 R /ID [ ${hex(id0)} ${hex(id0)} ]")
     assert(PdfBytes.pdfInfo(bytes).fold(e => fail(e), identity).title == title)
     // decryptPdf's copy path must also key the gen-1 strings correctly
     val dec = PdfRewrite.decryptPdf(bytes, "").fold(e => fail(e), identity)
@@ -290,9 +280,7 @@ class PdfBytesSpec extends AnyFunSuite {
     import graft.extract.{PdfCrypt, PdfRewrite}
     val xmp = "<x:xmpmeta GRAFT-PLAINTEXT-MARKER attr='v'/>"
     val idPayload = "IDENTITY-CRYPT-PLAINTEXT-PAYLOAD"
-    val out = new java.io.ByteArrayOutputStream
-    def w(s: String): Unit = out.write(s.getBytes("ISO-8859-1"))
-    def hex(b: Array[Byte]): String = "<" + b.map(x => f"${x & 0xff}%02X").mkString + ">"
+    import graft.extract.Bin.hex
     val pwd = Array.emptyByteArray
     val id0 = PdfCrypt.md5("plain-meta-test".getBytes("UTF-8"))
     val o = PdfCrypt.computeO(pwd, pwd, 4, 16)
@@ -301,9 +289,8 @@ class PdfBytesSpec extends AnyFunSuite {
     // ffffffff salt) — both sides must agree
     val key = PdfCrypt.fileKey(pwd, o, perm, id0, 4, 16, encryptMetadata = false)
     val u = PdfCrypt.computeU(key, id0, 4) ++ new Array[Byte](16)
-    val offsets = scala.collection.mutable.ArrayBuffer[Int]()
-    def obj(num: Int, body: String): Unit = { offsets += out.size(); w(s"$num 0 obj\n$body\nendobj\n") }
-    w("%PDF-1.4\n")
+    val pdf = new graft.extract.Bin.PdfWriter
+    import pdf.obj
     obj(1, "<< /Type /Catalog /Pages 2 0 R /Metadata 7 0 R >>")
     obj(2, "<< /Type /Pages /Count 1 /Kids [ 3 0 R ] >>")
     obj(3, "<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 100 200 ] /Contents 4 0 R /GraftX 8 0 R >>")
@@ -317,11 +304,7 @@ class PdfBytesSpec extends AnyFunSuite {
     // a /Crypt Identity-filtered stream is stored plaintext too (§7.4.10)
     obj(8, "<< /Filter /Crypt /DecodeParms << /Type /CryptFilterDecodeParms /Name /Identity >> " +
       s"/Length ${idPayload.length} >>\nstream\n$idPayload\nendstream")
-    val xrefAt = out.size()
-    w(s"xref\n0 ${offsets.length + 1}\n0000000000 65535 f \n")
-    offsets.foreach(off => w(f"$off%010d 00000 n \n"))
-    w(s"trailer\n<< /Size ${offsets.length + 1} /Root 1 0 R /Info 5 0 R /Encrypt 6 0 R /ID [ ${hex(id0)} ${hex(id0)} ] >>\nstartxref\n$xrefAt\n%%EOF\n")
-    val bytes = out.toByteArray
+    val bytes = pdf.finish(s" /Info 5 0 R /Encrypt 6 0 R /ID [ ${hex(id0)} ${hex(id0)} ]")
     val opened = PdfBytes.pdfInfo(bytes).fold(e => fail(e), identity)
     assert(!opened.isEncrypted && opened.title == "meta title")
     val dec = PdfRewrite.decryptPdf(bytes, "").fold(e => fail(e), identity)
@@ -439,13 +422,7 @@ class PdfBytesSpec extends AnyFunSuite {
   }
 
   test("legacy-filter content streams extract end-to-end (A85+Flate chain, ASCIIHex)") {
-    import graft.extract.PdfText
-    def deflate(b: Array[Byte]): Array[Byte] = {
-      val d = new java.util.zip.Deflater(); d.setInput(b); d.finish()
-      val o = new java.io.ByteArrayOutputStream; val buf = new Array[Byte](4096)
-      while (!d.finished()) o.write(buf, 0, d.deflate(buf))
-      d.end(); o.toByteArray
-    }
+    import graft.extract.{Bin, PdfText}
     def a85(data: Array[Byte]): Array[Byte] = { // same encoder as above, minimal
       val sb = new StringBuilder
       data.grouped(4).foreach { g =>
@@ -464,29 +441,18 @@ class PdfBytesSpec extends AnyFunSuite {
       (sb.toString + "~>").getBytes("ISO-8859-1")
     }
     def docWith(payload: Array[Byte], filter: String): Array[Byte] = {
-      val out = new java.io.ByteArrayOutputStream
-      def w(s: String): Unit = out.write(s.getBytes("ISO-8859-1"))
-      val offsets = scala.collection.mutable.ArrayBuffer[Int]()
-      def obj(num: Int, body: String): Unit = { offsets += out.size(); w(s"$num 0 obj\n$body\nendobj\n") }
-      w("%PDF-1.2\n")
-      obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
-      obj(2, "<< /Type /Pages /Count 1 /Kids [ 3 0 R ] >>")
-      obj(3, "<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 612 792 ] " +
+      val pdf = new Bin.PdfWriter
+      pdf.obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
+      pdf.obj(2, "<< /Type /Pages /Count 1 /Kids [ 3 0 R ] >>")
+      pdf.obj(3, "<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 612 792 ] " +
         "/Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>")
-      offsets += out.size()
-      w(s"4 0 obj\n<< /Length ${payload.length} /Filter $filter >>\nstream\n")
-      out.write(payload)
-      w("\nendstream\nendobj\n")
-      obj(5, "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica /Encoding /WinAnsiEncoding >>")
-      val xrefAt = out.size()
-      w(s"xref\n0 ${offsets.length + 1}\n0000000000 65535 f \n")
-      offsets.foreach(o => w(f"$o%010d 00000 n \n"))
-      w(s"trailer\n<< /Size ${offsets.length + 1} /Root 1 0 R >>\nstartxref\n$xrefAt\n%%EOF\n")
-      out.toByteArray
+      pdf.stream(4, s"<< /Length ${payload.length} /Filter $filter >>", payload)
+      pdf.obj(5, "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica /Encoding /WinAnsiEncoding >>")
+      pdf.finish("")
     }
     val content = "BT\n/F1 12 Tf\n72 720 Td\n(hello legacy filters) Tj\nET\n".getBytes("ISO-8859-1")
     // chained: A85 applied LAST on encode, FIRST on decode
-    val chained = docWith(a85(deflate(content)), "[ /ASCII85Decode /FlateDecode ]")
+    val chained = docWith(a85(Bin.deflate(content)), "[ /ASCII85Decode /FlateDecode ]")
     assert(PdfText.pageTexts(chained).fold(e => fail(e), identity) == Seq("hello legacy filters"))
     val hexed = docWith(
       (content.map(b => f"${b & 0xff}%02X").mkString + ">").getBytes("ISO-8859-1"),
@@ -500,19 +466,16 @@ class PdfBytesSpec extends AnyFunSuite {
     // /Filter /Crypt (Identity) stored plaintext must extract verbatim —
     // decrypt-before-filter-inspection would garble it
     import graft.extract.{PdfCrypt, PdfText}
+    import graft.extract.Bin.hex
     val content = "BT\n/F1 12 Tf\n72 720 Td\n(identity plain content) Tj\nET\n"
-    val out = new java.io.ByteArrayOutputStream
-    def w(s: String): Unit = out.write(s.getBytes("ISO-8859-1"))
-    def hex(b: Array[Byte]): String = "<" + b.map(x => f"${x & 0xff}%02X").mkString + ">"
     val pwd = Array.emptyByteArray
     val id0 = PdfCrypt.md5("crypt-id-test".getBytes("UTF-8"))
     val o = PdfCrypt.computeO(pwd, pwd, 3, 16)
     val perm = -44
     val key = PdfCrypt.fileKey(pwd, o, perm, id0, 3, 16)
     val u = PdfCrypt.computeU(key, id0, 3) ++ new Array[Byte](16)
-    val offsets = scala.collection.mutable.ArrayBuffer[Int]()
-    def obj(num: Int, body: String): Unit = { offsets += out.size(); w(s"$num 0 obj\n$body\nendobj\n") }
-    w("%PDF-1.4\n")
+    val pdf = new graft.extract.Bin.PdfWriter
+    import pdf.obj
     obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
     obj(2, "<< /Type /Pages /Count 1 /Kids [ 3 0 R ] >>")
     obj(3, "<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 612 792 ] " +
@@ -521,11 +484,8 @@ class PdfBytesSpec extends AnyFunSuite {
       s"/Length ${content.length} >>\nstream\n$content\nendstream")
     obj(5, "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica /Encoding /WinAnsiEncoding >>")
     obj(6, s"<< /Filter /Standard /V 2 /Length 128 /R 3 /O ${hex(o)} /U ${hex(u)} /P $perm >>")
-    val xrefAt = out.size()
-    w(s"xref\n0 ${offsets.length + 1}\n0000000000 65535 f \n")
-    offsets.foreach(off => w(f"$off%010d 00000 n \n"))
-    w(s"trailer\n<< /Size ${offsets.length + 1} /Root 1 0 R /Encrypt 6 0 R /ID [ ${hex(id0)} ${hex(id0)} ] >>\nstartxref\n$xrefAt\n%%EOF\n")
-    val texts = PdfText.pageTexts(out.toByteArray).fold(e => fail(e), identity)
+    val texts = PdfText.pageTexts(pdf.finish(s" /Encrypt 6 0 R /ID [ ${hex(id0)} ${hex(id0)} ]"))
+      .fold(e => fail(e), identity)
     assert(texts == Seq("identity plain content"))
   }
 

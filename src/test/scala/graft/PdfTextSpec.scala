@@ -1,6 +1,6 @@
 package graft
 
-import graft.extract.{PdfBytes, PdfText}
+import graft.extract.{Bin, PdfBytes, PdfText}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Content-stream text extraction against the reference's REAL fixture PDFs.
@@ -18,26 +18,16 @@ class PdfTextSpec extends AnyFunSuite {
     * an unresolvable private glyph name, and NO embedded font program.
     */
   private def pdfWithPrivateDifferences: Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def w(s: String): Unit = out.write(s.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
-    val offsets = scala.collection.mutable.ArrayBuffer[Int]()
-    def obj(num: Int, body: String): Unit = {
-      offsets += out.size(); w(s"$num 0 obj\n$body\nendobj\n")
-    }
-    w("%PDF-1.4\n")
-    obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
-    obj(2, "<< /Type /Pages /Count 1 /Kids [ 3 0 R ] >>")
-    obj(3, "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
+    val pdf = new Bin.PdfWriter
+    pdf.obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
+    pdf.obj(2, "<< /Type /Pages /Count 1 /Kids [ 3 0 R ] >>")
+    pdf.obj(3, "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
       "/Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>")
     val content = "BT\n/F1 12 Tf\n72 720 Td\n(AB) Tj\nET\n"
-    obj(4, s"<< /Length ${content.length} >>\nstream\n${content}endstream")
-    obj(5, "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica " +
+    pdf.obj(4, s"<< /Length ${content.length} >>\nstream\n${content}endstream")
+    pdf.obj(5, "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica " +
       "/Encoding << /BaseEncoding /WinAnsiEncoding /Differences [ 65 /gPriv7 ] >> >>")
-    val xrefAt = out.size()
-    w(s"xref\n0 ${offsets.length + 1}\n0000000000 65535 f \n")
-    offsets.foreach(o => w(f"$o%010d 00000 n \n"))
-    w(s"trailer\n<< /Size ${offsets.length + 1} /Root 1 0 R >>\nstartxref\n$xrefAt\n%%EOF\n")
-    out.toByteArray
+    pdf.finish("")
   }
 
   test("Differences with a private name and NO font program keeps U+FFFD") {
@@ -215,32 +205,17 @@ class PdfTextSpec extends AnyFunSuite {
     // hand-build a PDF whose image is Flate-compressed raw RGB
     val w0 = 4; val h0 = 3
     val px = Array.tabulate(w0 * h0 * 3)(i => ((i * 37) % 251).toByte)
-    val d = new java.util.zip.Deflater(); d.setInput(px); d.finish()
-    val bos = new java.io.ByteArrayOutputStream; val buf = new Array[Byte](256)
-    while (!d.finished()) bos.write(buf, 0, d.deflate(buf))
-    d.end()
-    val flate = bos.toByteArray
-    val out = new java.io.ByteArrayOutputStream
-    def w(s: String): Unit = out.write(s.getBytes("ISO-8859-1"))
-    val offsets = scala.collection.mutable.ArrayBuffer[Int]()
-    def obj(num: Int, body: String): Unit = { offsets += out.size(); w(s"$num 0 obj\n$body\nendobj\n") }
-    w("%PDF-1.4\n")
-    obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
-    obj(2, "<< /Type /Pages /Count 1 /Kids [ 3 0 R ] >>")
-    obj(3, "<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 100 100 ] " +
+    val flate = Bin.deflate(px)
+    val pdf = new Bin.PdfWriter
+    pdf.obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
+    pdf.obj(2, "<< /Type /Pages /Count 1 /Kids [ 3 0 R ] >>")
+    pdf.obj(3, "<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 100 100 ] " +
       "/Resources << /XObject << /I 5 0 R >> >> /Contents 4 0 R >>")
     val content = "q 50 0 0 50 10 10 cm /I Do Q"
-    obj(4, s"<< /Length ${content.length} >>\nstream\n$content\nendstream")
-    offsets += out.size()
-    w(s"5 0 obj\n<< /Type /XObject /Subtype /Image /Width $w0 /Height $h0 /BitsPerComponent 8 " +
-      s"/ColorSpace /DeviceRGB /Filter /FlateDecode /Length ${flate.length} >>\nstream\n")
-    out.write(flate)
-    w("\nendstream\nendobj\n")
-    val xrefAt = out.size()
-    w(s"xref\n0 ${offsets.length + 1}\n0000000000 65535 f \n")
-    offsets.foreach(o => w(f"$o%010d 00000 n \n"))
-    w(s"trailer\n<< /Size ${offsets.length + 1} /Root 1 0 R >>\nstartxref\n$xrefAt\n%%EOF\n")
-    val pages = PdfText.extract(out.toByteArray).fold(e => fail(e), identity)
+    pdf.obj(4, s"<< /Length ${content.length} >>\nstream\n$content\nendstream")
+    pdf.stream(5, s"<< /Type /XObject /Subtype /Image /Width $w0 /Height $h0 /BitsPerComponent 8 " +
+      s"/ColorSpace /DeviceRGB /Filter /FlateDecode /Length ${flate.length} >>", flate)
+    val pages = PdfText.extract(pdf.finish("")).fold(e => fail(e), identity)
     val img = pages.head.images.head
     assert(img.mime == "image/png" && img.data.nonEmpty)
     val decoded = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(img.data))
@@ -317,31 +292,18 @@ class PdfTextSpec extends AnyFunSuite {
       "BT /F1 12 Tf 72 650 Td (above text) Tj ET\n" +
         "BT /F1 12 Tf 72 300 Td (below text) Tj ET\n" +
         "q 200 0 0 100 72 500 cm /Img0 Do Q\n"
-    val out = new java.io.ByteArrayOutputStream()
-    def w(s: String): Unit = out.write(s.getBytes("ISO-8859-1"))
-    val offsets = scala.collection.mutable.ArrayBuffer[Int]()
-    def obj(n: Int): Unit = { offsets += out.size(); w(s"$n 0 obj\n") }
-    w("%PDF-1.4\n")
-    obj(1); w("<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    obj(2); w("<< /Type /Pages /Count 1 /Kids [ 3 0 R ] >>\nendobj\n")
-    obj(3)
-    w("<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 612 792 ] " +
+    val pdf = new Bin.PdfWriter
+    pdf.obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
+    pdf.obj(2, "<< /Type /Pages /Count 1 /Kids [ 3 0 R ] >>")
+    pdf.obj(3, "<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 612 792 ] " +
       "/Resources << /Font << /F1 5 0 R >> /XObject << /Img0 6 0 R >> >> " +
-      "/Contents 4 0 R >>\nendobj\n")
-    obj(4); w(s"<< /Length ${content.length} >>\nstream\n$content\nendstream\nendobj\n")
-    obj(5)
-    w("<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica /Encoding /WinAnsiEncoding >>\nendobj\n")
-    obj(6)
-    w(s"<< /Type /XObject /Subtype /Image /Width 64 /Height 48 /BitsPerComponent 8 " +
-      s"/ColorSpace /DeviceRGB /Filter /DCTDecode /Length ${jpeg.length} >>\nstream\n")
-    out.write(jpeg)
-    w("\nendstream\nendobj\n")
-    val xrefAt = out.size()
-    w(s"xref\n0 ${offsets.length + 1}\n0000000000 65535 f \n")
-    offsets.foreach(o => w(f"$o%010d 00000 n \n"))
-    w(s"trailer\n<< /Size ${offsets.length + 1} /Root 1 0 R >>\nstartxref\n$xrefAt\n%%EOF\n")
+      "/Contents 4 0 R >>")
+    pdf.stream(4, s"<< /Length ${content.length} >>", content.getBytes("ISO-8859-1"))
+    pdf.obj(5, "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica /Encoding /WinAnsiEncoding >>")
+    pdf.stream(6, s"<< /Type /XObject /Subtype /Image /Width 64 /Height 48 /BitsPerComponent 8 " +
+      s"/ColorSpace /DeviceRGB /Filter /DCTDecode /Length ${jpeg.length} >>", jpeg)
     val row = graft.pipeline.Pipeline.extractOne(
-      graft.io.Ingest.toRawDoc("ordered.pdf", out.toByteArray))
+      graft.io.Ingest.toRawDoc("ordered.pdf", pdf.finish("")))
     assert(row.failure.isEmpty, row.failure)
     assert(row.spans.map(s => (s.kind, s.text)) == Seq(
       ("page_break", """{"next_page":1}"""),

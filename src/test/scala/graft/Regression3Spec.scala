@@ -18,37 +18,19 @@ class Regression3Spec extends AnyFunSuite {
     * while keeping the output length exactly w*h*3 (silent corruption).
     */
   private def predictorPdf(raster: Array[Byte], w: Int, h: Int): Array[Byte] = {
-    val d = new java.util.zip.Deflater()
-    d.setInput(raster); d.finish()
-    val bos = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](256)
-    while (!d.finished()) bos.write(buf, 0, d.deflate(buf))
-    d.end()
-    val payload = bos.toByteArray
-    val out = new java.io.ByteArrayOutputStream()
-    def wr(s: String): Unit = out.write(s.getBytes("ISO-8859-1"))
-    val offsets = scala.collection.mutable.ArrayBuffer[Int]()
-    def obj(num: Int): Unit = { offsets += out.size(); wr(s"$num 0 obj\n") }
-    wr("%PDF-1.4\n")
-    obj(1); wr("<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    obj(2); wr("<< /Type /Pages /Count 1 /Kids [ 3 0 R ] >>\nendobj\n")
-    obj(3)
-    wr("<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 612 792 ] " +
-      "/Resources << /XObject << /Im0 5 0 R >> >> /Contents 4 0 R >>\nendobj\n")
+    val payload = graft.extract.Bin.deflate(raster)
+    val pdf = new graft.extract.Bin.PdfWriter
+    pdf.obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
+    pdf.obj(2, "<< /Type /Pages /Count 1 /Kids [ 3 0 R ] >>")
+    pdf.obj(3, "<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 612 792 ] " +
+      "/Resources << /XObject << /Im0 5 0 R >> >> /Contents 4 0 R >>")
     val content = s"q $w 0 0 $h 10 20 cm /Im0 Do Q\n"
-    obj(4); wr(s"<< /Length ${content.length} >>\nstream\n$content\nendstream\nendobj\n")
-    obj(5)
-    wr(s"<< /Type /XObject /Subtype /Image /Width $w /Height $h " +
+    pdf.stream(4, s"<< /Length ${content.length} >>", content.getBytes("ISO-8859-1"))
+    pdf.stream(5, s"<< /Type /XObject /Subtype /Image /Width $w /Height $h " +
       "/BitsPerComponent 8 /ColorSpace /DeviceRGB /Filter /FlateDecode " +
       s"/DecodeParms << /Predictor 15 /Colors 3 /BitsPerComponent 8 /Columns $w >> " +
-      s"/Length ${payload.length} >>\nstream\n")
-    out.write(payload)
-    wr("\nendstream\nendobj\n")
-    val xrefAt = out.size()
-    wr(s"xref\n0 ${offsets.length + 1}\n0000000000 65535 f \n")
-    offsets.foreach(o => wr(f"$o%010d 00000 n \n"))
-    wr(s"trailer\n<< /Size ${offsets.length + 1} /Root 1 0 R >>\nstartxref\n$xrefAt\n%%EOF\n")
-    out.toByteArray
+      s"/Length ${payload.length} >>", payload)
+    pdf.finish("")
   }
 
   test("pngPredict honors Colors=3: Sub/Up rows reconstruct pixel-exactly") {

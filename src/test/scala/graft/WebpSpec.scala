@@ -69,9 +69,7 @@ class WebpSpec extends AnyFunSuite {
   test("container fields: RIFF sizes, VP8L tag, dimension bits, odd pad") {
     val (px, w, h) = (Array.tabulate(33 * 9)(i => 0xFF000000 | i * 7919), 33, 9)
     val bytes = WebpL.encode(px, w, h)
-    def u32(at: Int): Int =
-      (bytes(at) & 0xFF) | ((bytes(at + 1) & 0xFF) << 8) |
-        ((bytes(at + 2) & 0xFF) << 16) | ((bytes(at + 3) & 0xFF) << 24)
+    def u32(at: Int): Int = graft.extract.Bin.u32le(bytes, at).toInt
     assert(new String(bytes, 0, 4, "ISO-8859-1") == "RIFF")
     assert(u32(4) == bytes.length - 8) // RIFF size covers everything after it
     assert(new String(bytes, 8, 8, "ISO-8859-1") == "WEBPVP8L")
