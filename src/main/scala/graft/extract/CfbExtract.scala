@@ -32,7 +32,7 @@ object CfbExtract {
   /** All stream entries, name → content. Left on malformed containers. */
   def readStreams(data: Array[Byte]): Either[String, Map[String, Array[Byte]]] =
     try Right(readUnsafe(data))
-    catch { case e: Exception => Left(s"cfb_parse_error: ${e.getClass.getSimpleName}: ${e.getMessage}") }
+    catch { case e: Exception => Left(Formats.parseError("cfb", e)) }
 
   private def readUnsafe(data: Array[Byte]): Map[String, Array[Byte]] = {
     require(data.length >= 512, "truncated header")

@@ -22,8 +22,12 @@ import scala.collection.mutable.ArrayBuffer
   *
   * Out of scope (documented): embedded media extraction (the word/media
   * payload parts), tracked changes, footnotes, text boxes. Malformed
-  * ZIP/XML is a Left — a failure row in extraction lineage, not a task
-  * failure. O(bytes) per document, safe in `mapPartitions` at scale.
+  * ZIP/XML throws; the format table's envelope turns that into a failure
+  * row, not a task failure. O(bytes) per document, safe in
+  * `mapPartitions` at scale.
+  *
+  * [[DocxDoc]] is the flow shape every word processor parses into (ODT,
+  * RTF and DOC too), and [[toSpans]] its one renderer.
   */
 object DocxExtract {
 
@@ -41,28 +45,25 @@ object DocxExtract {
     def pageCount: Int = 1 + blocks.count(_ == PageBreak)
   }
 
-  def extract(bytes: Array[Byte]): Either[String, DocxDoc] =
-    try {
-      val entries = readZip(bytes)
-      val docXml = entries.getOrElse("word/document.xml",
-        throw new IllegalStateException("no word/document.xml"))
-      val title = entries.get("docProps/core.xml").map(coreTitle).getOrElse("")
-      // embedded media: a:blip r:embed="rId" → document rels → word/media
-      // part bytes, lifted as img-K items in encounter order (the docler
-      // Image payload shape)
-      val rels = entries.get("word/_rels/document.xml.rels")
-        .map(parseRels).getOrElse(Map.empty)
-      val media = new MediaCollector
-      def resolvePic(rid: String): Option[String] =
-        rels.get(rid).flatMap { target =>
-          val path = normalizePath(
-            if (target.startsWith("/")) target.drop(1) else "word/" + target)
-          media.add(path, path, entries.get(path))
-        }
-      Right(DocxDoc(title, parseDocument(docXml, resolvePic), media.items))
-    } catch {
-      case e: Exception => Left(s"docx_parse_error: ${e.getClass.getSimpleName}: ${e.getMessage}")
-    }
+  def extract(bytes: Array[Byte]): DocxDoc = {
+    val entries = readZip(bytes)
+    val docXml = entries.getOrElse("word/document.xml",
+      throw new IllegalStateException("no word/document.xml"))
+    val title = entries.get("docProps/core.xml").map(coreTitle).getOrElse("")
+    // embedded media: a:blip r:embed="rId" → document rels → word/media
+    // part bytes, lifted as img-K items in encounter order (the docler
+    // Image payload shape)
+    val rels = entries.get("word/_rels/document.xml.rels")
+      .map(parseRels).getOrElse(Map.empty)
+    val media = new MediaCollector
+    def resolvePic(rid: String): Option[String] =
+      rels.get(rid).flatMap { target =>
+        val path = normalizePath(
+          if (target.startsWith("/")) target.drop(1) else "word/" + target)
+        media.add(path, path, entries.get(path))
+      }
+    DocxDoc(title, parseDocument(docXml, resolvePic), media.items)
+  }
 
   /** Part rels: Relationship Id → Target (part-relative path). */
   private[extract] def parseRels(xml: Array[Byte]): Map[String, String] = {
@@ -82,13 +83,14 @@ object DocxExtract {
     */
   def toSpans(doc: DocxDoc): Seq[graft.model.Span] = {
     import graft.model.{Span, SpanKind}
+    import graft.md.Markdown.pageBreakSpan
     val out = ArrayBuffer[Span]()
     var page = 1
-    out += Span(SpanKind.PageBreak, s"""{"next_page":$page}""", "", 0)
+    out += pageBreakSpan(page, 0)
     doc.blocks.foreach {
       case PageBreak =>
         page += 1
-        out += Span(SpanKind.PageBreak, s"""{"next_page":$page}""", "", out.length)
+        out += pageBreakSpan(page, out.length)
       case Para(md) => out += Span(SpanKind.Text, md, "", out.length)
       case Table(md) => out += Span(SpanKind.Text, md, "", out.length)
       case Pic(ref) =>

@@ -36,62 +36,56 @@ object EpubExtract {
       spans: Seq[graft.model.Span],
       media: Seq[graft.model.MediaItem])
 
-  def extract(bytes: Array[Byte]): Either[String, EpubDoc] =
-    try {
-      val entries = readZip(bytes)
-      val container = entries.getOrElse("META-INF/container.xml",
-        throw new IllegalStateException("no META-INF/container.xml"))
-      val opfPath = rootfileOf(container)
-      val opf = entries.getOrElse(opfPath,
-        throw new IllegalStateException(s"missing OPF $opfPath"))
-      val opfDir = {
-        val i = opfPath.lastIndexOf('/')
-        if (i >= 0) opfPath.substring(0, i + 1) else ""
-      }
-      val (title, manifest, spine) = parseOpf(opf)
-      val chapterPairs: Seq[(String, HtmlExtract.Extracted)] =
-        spine.flatMap(manifest.get).flatMap { href =>
-          val path = normalizePath(opfDir + href)
-          entries.get(path).map { xhtml =>
-            path -> HtmlExtract.extract(new String(xhtml, StandardCharsets.UTF_8))
-          }
-        }
-      if (chapterPairs.isEmpty) throw new IllegalStateException("empty spine")
-
-      import graft.model.{MediaItem, Span, SpanKind}
-      val spans = ArrayBuffer[Span]()
-      val media = ArrayBuffer[MediaItem]()
-      chapterPairs.zipWithIndex.foreach { case ((path, ch), i) =>
-        val chapterDir = {
-          val j = path.lastIndexOf('/')
-          if (j >= 0) path.substring(0, j + 1) else ""
-        }
-        // chapter-local img-K → global img-K, payload from the container
-        val rename: Map[String, String] = ch.images.zipWithIndex.map { case (im, k) =>
-          val ext = im.filename.substring(im.filename.lastIndexOf('.') + 1)
-          val global = s"img-${media.length + k}.$ext"
-          im.filename -> global
-        }.toMap
-        ch.images.zip(ch.imageSrcs).foreach { case (im, src) =>
-          val payload = entries.getOrElse(normalizePath(chapterDir + src), Array.emptyByteArray)
-          media += MediaItem(rename(im.filename), im.mime_type, payload)
-        }
-        spans += Span(SpanKind.PageBreak, s"""{"next_page":${i + 1}}""", "", spans.length)
-        ch.spans.filterNot(_.kind == SpanKind.PageBreak).foreach { sp =>
-          if (sp.kind == SpanKind.Image) {
-            val global = rename.getOrElse(sp.media_ref, sp.media_ref)
-            val id = global.substring(0, global.lastIndexOf('.'))
-            spans += Span(sp.kind, id, global, spans.length)
-          } else spans += Span(sp.kind, sp.text, sp.media_ref, spans.length)
-        }
-      }
-      Right(EpubDoc(title, chapterPairs.map(_._2), spans.toSeq, media.toSeq))
-    } catch {
-      case e: Exception => Left(s"epub_parse_error: ${e.getClass.getSimpleName}: ${e.getMessage}")
+  def extract(bytes: Array[Byte]): EpubDoc = {
+    val entries = readZip(bytes)
+    val container = entries.getOrElse("META-INF/container.xml",
+      throw new IllegalStateException("no META-INF/container.xml"))
+    val opfPath = rootfileOf(container)
+    val opf = entries.getOrElse(opfPath,
+      throw new IllegalStateException(s"missing OPF $opfPath"))
+    val opfDir = {
+      val i = opfPath.lastIndexOf('/')
+      if (i >= 0) opfPath.substring(0, i + 1) else ""
     }
+    val (title, manifest, spine) = parseOpf(opf)
+    val chapterPairs: Seq[(String, HtmlExtract.Extracted)] =
+      spine.flatMap(manifest.get).flatMap { href =>
+        val path = normalizePath(opfDir + href)
+        entries.get(path).map { xhtml =>
+          path -> HtmlExtract.extract(new String(xhtml, StandardCharsets.UTF_8))
+        }
+      }
+    if (chapterPairs.isEmpty) throw new IllegalStateException("empty spine")
 
-  /** The globally-renumbered span stream (built in [[extract]]). */
-  def toSpans(doc: EpubDoc): Seq[graft.model.Span] = doc.spans
+    import graft.model.{MediaItem, Span, SpanKind}
+    val spans = ArrayBuffer[Span]()
+    val media = ArrayBuffer[MediaItem]()
+    chapterPairs.zipWithIndex.foreach { case ((path, ch), i) =>
+      val chapterDir = {
+        val j = path.lastIndexOf('/')
+        if (j >= 0) path.substring(0, j + 1) else ""
+      }
+      // chapter-local img-K → global img-K, payload from the container
+      val rename: Map[String, String] = ch.images.zipWithIndex.map { case (im, k) =>
+        val ext = im.filename.substring(im.filename.lastIndexOf('.') + 1)
+        val global = s"img-${media.length + k}.$ext"
+        im.filename -> global
+      }.toMap
+      ch.images.zip(ch.imageSrcs).foreach { case (im, src) =>
+        val payload = entries.getOrElse(normalizePath(chapterDir + src), Array.emptyByteArray)
+        media += MediaItem(rename(im.filename), im.mime_type, payload)
+      }
+      spans += graft.md.Markdown.pageBreakSpan(i + 1, spans.length)
+      ch.spans.filterNot(_.kind == SpanKind.PageBreak).foreach { sp =>
+        if (sp.kind == SpanKind.Image) {
+          val global = rename.getOrElse(sp.media_ref, sp.media_ref)
+          val id = global.substring(0, global.lastIndexOf('.'))
+          spans += Span(sp.kind, id, global, spans.length)
+        } else spans += Span(sp.kind, sp.text, sp.media_ref, spans.length)
+      }
+    }
+    EpubDoc(title, chapterPairs.map(_._2), spans.toSeq, media.toSeq)
+  }
 
   private def rootfileOf(xml: Array[Byte]): String = {
     val r = reader(xml)

@@ -11,8 +11,15 @@ import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
   * and the converter. [[graft.io.Ingest.toRawDoc]] routes files by MIME
   * through it; [[graft.pipeline.Pipeline.extractOne]] converts through it
   * and owns the shared Document assembly around the result (title
-  * fallback, provenance, cost metadata, failure rows —
-  * converters/base.py:204-223). A closed table, not an extension point.
+  * fallback, provenance, cost metadata — converters/base.py:204-223).
+  *
+  * The table forms both ends of every row. Spans: each byte converter
+  * only parses, into one of three document shapes — flow
+  * ([[DocxExtract.DocxDoc]]), slides ([[OfficeExtract.PptxDoc]]) or sheets
+  * ([[OfficeExtract.XlsxDoc]]) — or its own stream (EPUB, PDF), and each
+  * shape has one renderer. Failures: [[convert]] is the one envelope that
+  * turns a thrown converter into a failure string. A closed table, not an
+  * extension point.
   */
 private[graft] object Formats {
 
@@ -49,10 +56,31 @@ private[graft] object Formats {
   private def dialect(kind: String, mimes: String*): Format =
     text(kind, mimes: _*)(r => normalized(Normalize.dialect(kind, r.raw, r.pages)))
 
-  /** A byte kind: its own container parse; `Left` is a failure row. */
+  /** A byte kind: its own container parse. A `Left` is a failure the
+    * converter phrased itself; a throw is phrased by [[convert]].
+    */
   private def bytes(kind: String, mimes: String*)(
       f: Array[Byte] => Either[String, Converted]): Format =
     Format(kind, mimes, binary = true, r => f(r.raw.getBytes(ISO_8859_1)))
+
+  /** Flow shape: a page_break marker per page, one span per block. */
+  private def flow(d: DocxExtract.DocxDoc, countKey: String, count: Int): Converted =
+    Converted(DocxExtract.toSpans(d), d.pageCount, d.title, d.media,
+      Map(countKey -> count.toString))
+
+  /** Legacy word processors (RTF, DOC) count their paragraphs. */
+  private def paragraphs(d: DocxExtract.DocxDoc): Int =
+    d.blocks.count(_.isInstanceOf[DocxExtract.Para])
+
+  /** Slides shape: one page per slide. */
+  private def slides(d: OfficeExtract.PptxDoc, countKey: String): Converted =
+    Converted(OfficeExtract.pptxSpans(d), d.slides.size, d.title, d.media,
+      Map(countKey -> d.slides.size.toString))
+
+  /** Sheets shape: one page per sheet. */
+  private def sheets(d: OfficeExtract.XlsxDoc, countKey: String): Converted =
+    Converted(OfficeExtract.xlsxSpans(d), d.sheets.size, d.title, Nil,
+      Map(countKey -> d.sheets.size.toString))
 
   private def normalized(n: Normalized): Converted = textDoc(n.spans, n.images, "")
 
@@ -115,53 +143,46 @@ private[graft] object Formats {
     text("tsv", "text/tab-separated-values")(delimited(_, '\t')),
     bytes("pdf_bytes", "application/pdf")(pdf),
     bytes("docx_bytes",
-      "application/vnd.openxmlformats-officedocument.wordprocessingml.document")(
-      DocxExtract.extract(_).map(d => Converted(DocxExtract.toSpans(d), d.pageCount,
-        d.title, d.media, Map("docx_blocks" -> d.blocks.size.toString)))),
+      "application/vnd.openxmlformats-officedocument.wordprocessingml.document") { b =>
+      val d = DocxExtract.extract(b); Right(flow(d, "docx_blocks", d.blocks.size))
+    },
     // one page per slide, title placeholders as headings
     bytes("pptx_bytes",
       "application/vnd.openxmlformats-officedocument.presentationml.presentation")(
-      OfficeExtract.extractPptx(_).map(d => Converted(OfficeExtract.pptxSpans(d),
-        d.slides.size, d.title, d.media, Map("pptx_slides" -> d.slides.size.toString)))),
+      b => Right(slides(OfficeExtract.extractPptx(b), "pptx_slides"))),
     // .xlsm/.xlam are the XLSX ZIP plus a vbaProject part the sheet parser
     // never opens (EXCEL_MACRO / EXCEL_ADDON, :21,23)
     bytes("xlsx_bytes", "application/vnd.openxmlformats-officedocument.spreadsheetml.sheet",
       "application/vnd.ms-excel.sheet.macroEnabled.12",
       "application/vnd.ms-excel.addin.macroEnabled.12")(
-      OfficeExtract.extractXlsx(_).map(d => Converted(OfficeExtract.xlsxSpans(d),
-        d.sheets.size, d.title, Nil, Map("xlsx_sheets" -> d.sheets.size.toString)))),
+      b => Right(sheets(OfficeExtract.extractXlsx(b), "xlsx_sheets"))),
     // spine order, each XHTML chapter through HtmlExtract; one page each
-    bytes("epub_bytes", "application/epub+zip")(
-      EpubExtract.extract(_).map(d => Converted(d.spans, d.chapters.size, d.title,
-        d.media, Map("epub_chapters" -> d.chapters.size.toString)))),
-    bytes("odt_bytes", "application/vnd.oasis.opendocument.text")(
-      OdtExtract.extract(_).map(d => Converted(OdtExtract.toSpans(d), d.pageCount,
-        d.title, d.media, Map("odt_blocks" -> d.blocks.size.toString)))),
+    bytes("epub_bytes", "application/epub+zip") { b =>
+      val d = EpubExtract.extract(b)
+      Right(Converted(d.spans, d.chapters.size, d.title, d.media,
+        Map("epub_chapters" -> d.chapters.size.toString)))
+    },
+    bytes("odt_bytes", "application/vnd.oasis.opendocument.text") { b =>
+      val d = OdtExtract.extract(b); Right(flow(d, "odt_blocks", d.blocks.size))
+    },
     bytes("rtf_bytes", "application/rtf")(
-      RtfExtract.extract(_).map(d => Converted(RtfExtract.toSpans(d), d.pageCount,
-        d.title, Nil, Map("rtf_paragraphs" -> d.paragraphs.size.toString)))),
+      RtfExtract.extract(_).map(d => flow(d, "rtf_paragraphs", paragraphs(d)))),
     // CFB + [MS-DOC] piece table, in the RTF-equivalent span shape
     bytes("doc_bytes", "application/msword")(
-      DocExtract.extract(_).map(d => Converted(
-        RtfExtract.toSpans(RtfExtract.RtfDoc(d.title, d.paragraphs, d.pageBreaks)),
-        d.pageCount, d.title, Nil, Map("doc_paragraphs" -> d.paragraphs.size.toString)))),
+      DocExtract.extract(_).map(d => flow(d, "doc_paragraphs", paragraphs(d)))),
     // CFB + [MS-PPT] record tree; one page per Slide container
     bytes("ppt_bytes", "application/vnd.ms-powerpoint")(
-      PptExtract.extract(_).map(d => Converted(PptExtract.toSpans(d), d.slides.size,
-        d.title, Nil, Map("ppt_slides" -> d.slides.size.toString)))),
+      PptExtract.extract(_).map(slides(_, "ppt_slides"))),
     bytes("ods_bytes", "application/vnd.oasis.opendocument.spreadsheet")(
-      OdsExtract.extract(_).map(d => Converted(OdsExtract.toSpans(d), d.sheets.size,
-        d.title, Nil, Map("ods_sheets" -> d.sheets.size.toString)))),
+      b => Right(sheets(OdsExtract.extract(b), "ods_sheets"))),
     // CFB + [MS-XLS] BIFF8; .xla, the 97-2003 add-in, is a BIFF8 workbook
     // too (EXCEL_TEMPLATE, :23)
     bytes("xls_bytes", "application/vnd.ms-excel",
       "application/vnd.ms-excel.template.macroEnabled.12")(
-      XlsExtract.extract(_).map(d => Converted(OfficeExtract.xlsxSpans(d),
-        d.sheets.size, d.title, Nil, Map("xls_sheets" -> d.sheets.size.toString)))),
+      XlsExtract.extract(_).map(sheets(_, "xls_sheets"))),
     // [MS-XLSB] BIFF12 records inside the OOXML ZIP (EXCEL_BINARY_2007, :22)
     bytes("xlsb_bytes", "application/vnd.ms-excel.sheet.binary.macroEnabled.12")(
-      XlsbExtract.extract(_).map(d => Converted(OfficeExtract.xlsxSpans(d),
-        d.sheets.size, d.title, Nil, Map("xlsb_sheets" -> d.sheets.size.toString)))))
+      b => Right(sheets(XlsbExtract.extract(b), "xlsb_sheets"))))
 
   private val ByKind: Map[String, Format] = All.map(f => f.kind -> f).toMap
 
@@ -169,12 +190,33 @@ private[graft] object Formats {
 
   def forMime(mime: String): Option[Format] = ByMime.get(mime)
 
-  /** Converts `r` by its kind; an unknown kind throws, like Normalize's
-    * dialect dispatch, so the assembly's catch turns it into a failure row.
+  /** Converts `r` by its kind: the one failure envelope. A converter's
+    * own `Left` passes verbatim. A throw — including an unknown kind, and a
+    * stack overflow as the backstop for any recursive parser — becomes
+    * `<fmt>_parse_error: <Class>: <msg>` for a byte kind (`fmt` = the kind
+    * without `_bytes`), and bare `<Class>: <msg>` for a text or unknown
+    * kind. Other `Error`s are not caught.
     */
-  def convert(r: RawDoc): Either[String, Converted] =
-    ByKind.getOrElse(r.payload_kind,
+  def convert(r: RawDoc): Either[String, Converted] = {
+    val format = ByKind.get(r.payload_kind)
+    try format.getOrElse(
       throw new IllegalArgumentException(s"unknown dialect: ${r.payload_kind}")).convert(r)
+    catch {
+      case e @ (_: Exception | _: StackOverflowError) =>
+        Left(format.filter(_.binary)
+          .fold(describe(e))(f => parseError(f.kind.stripSuffix("_bytes"), e)))
+    }
+  }
+
+  /** How a thrown failure reads in a row: `<Class>: <msg>`. */
+  private[graft] def describe(e: Throwable): String =
+    s"${e.getClass.getSimpleName}: ${e.getMessage}"
+
+  /** The parse-failure template, shared with the entry points that return
+    * their own `Left` (the PDF tools, the compound-file reader).
+    */
+  private[graft] def parseError(fmt: String, e: Throwable): String =
+    s"${fmt}_parse_error: ${describe(e)}"
 
   /** PDF bytes: [[PdfBytes]] container parse for structure (page count,
     * Info title, dims, encryption flag) plus the [[PdfText]] content-stream
@@ -206,7 +248,7 @@ private[graft] object Formats {
       val out = scala.collection.mutable.ArrayBuffer[Span]()
       val allLines = pages.flatMap(_.lines) // document-wide body-size basis
       (1 to info.pageCount).foreach { i =>
-        out += Span(SpanKind.PageBreak, s"""{"next_page":$i}""", "", out.length)
+        out += Markdown.pageBreakSpan(i, out.length)
         pages.lift(i - 1).foreach { p =>
           val paras: Seq[(Double, Either[String, PdfText.ImageRef])] =
             PdfText.markdownBlocksWithY(p.lines, allLines)

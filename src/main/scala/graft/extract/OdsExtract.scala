@@ -5,38 +5,30 @@ import scala.collection.mutable.ArrayBuffer
 
 /** ODS (OpenDocument Spreadsheet, ODF 1.2 — public OASIS standard)
   * extraction from raw bytes, composing [[OdtExtract]]'s container/StAX
-  * machinery with the XLSX sheet→pipe-table output shape
-  * ([[OfficeExtract.xlsxSpans]]): each `table:table` (named by
-  * `table:name`) becomes one page — a `## Name` heading plus a pipe table
-  * of its cells. `table:number-columns-repeated` expands (the blank-cell
-  * padding every real ODS carries); `office:value` is used when the cell
+  * machinery with the sheets shape ([[OfficeExtract.XlsxDoc]]): each
+  * `table:table` (named by `table:name`) becomes one page — a `## Name`
+  * heading plus a pipe table of its cells.
+  * `table:number-columns-repeated` expands (the blank-cell padding every
+  * real ODS carries); `office:value` is used when the cell
   * has no display text. Reference parity: `mime_types.py:27` maps `.ods`;
   * the spreadsheet MIME is in the SUPPORTED union (mime_types.py:169-175).
   */
 object OdsExtract {
 
   import DocxExtract.{readZip, reader, attr, collapseWs, tableMd, writeZip}
+  import OfficeExtract.{Sheet, XlsxDoc}
 
-  final case class OdsSheet(name: String, rows: Seq[Seq[String]]) {
-    // empty sheets (default Sheet2/Sheet3 in real files) render as no table
-    def toMd: String = if (rows.isEmpty) "" else tableMd(rows)
+  def extract(bytes: Array[Byte]): XlsxDoc = {
+    val entries = readZip(bytes)
+    val content = entries.getOrElse("content.xml",
+      throw new IllegalStateException("no content.xml"))
+    val title = entries.get("meta.xml").map(OdtExtract.metaTitle).getOrElse("")
+    XlsxDoc(title, parseSheets(content))
   }
-  final case class OdsDoc(title: String, sheets: Seq[OdsSheet])
 
-  def extract(bytes: Array[Byte]): Either[String, OdsDoc] =
-    try {
-      val entries = readZip(bytes)
-      val content = entries.getOrElse("content.xml",
-        throw new IllegalStateException("no content.xml"))
-      val title = entries.get("meta.xml").map(OdtExtract.metaTitleOf).getOrElse("")
-      Right(OdsDoc(title, parseSheets(content)))
-    } catch {
-      case e: Exception => Left(s"ods_parse_error: ${e.getClass.getSimpleName}: ${e.getMessage}")
-    }
-
-  private def parseSheets(xml: Array[Byte]): Seq[OdsSheet] = {
+  private def parseSheets(xml: Array[Byte]): Seq[Sheet] = {
     val r = reader(xml)
-    val sheets = ArrayBuffer[OdsSheet]()
+    val sheets = ArrayBuffer[Sheet]()
     var sheetName = ""
     var inSheet = false
     var rows = ArrayBuffer[Seq[String]]()
@@ -90,7 +82,9 @@ object OdsExtract {
                   for (_ <- 0 until rowRepeat) rows += trimmed.toSeq
               case "table" if inSheet =>
                 inSheet = false
-                sheets += OdsSheet(sheetName, rows.toSeq)
+                // empty sheets (default Sheet2/Sheet3 in real files)
+                // render as no table
+                sheets += Sheet(sheetName, if (rows.isEmpty) "" else tableMd(rows.toSeq))
               case _ => ()
             }
           case _ => ()
@@ -98,21 +92,6 @@ object OdsExtract {
       }
     } finally r.close()
     sheets.toSeq
-  }
-
-  /** Same span grammar as [[OfficeExtract.xlsxSpans]]: per sheet a
-    * page_break, `## name`, and the pipe table.
-    */
-  def toSpans(doc: OdsDoc): Seq[graft.model.Span] = {
-    import graft.model.{Span, SpanKind}
-    val out = ArrayBuffer[Span]()
-    doc.sheets.zipWithIndex.foreach { case (sheet, i) =>
-      out += Span(SpanKind.PageBreak, s"""{"next_page":${i + 1}}""", "", out.length)
-      out += Span(SpanKind.Text, "## " + sheet.name, "", out.length)
-      val md = sheet.toMd
-      if (md.nonEmpty) out += Span(SpanKind.Text, md, "", out.length)
-    }
-    out.toSeq
   }
 
   // ------------------------------------------------------------ writer

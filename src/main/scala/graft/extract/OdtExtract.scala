@@ -14,44 +14,30 @@ import scala.collection.mutable.ArrayBuffer
   * `text:list-item` (`- ` items), `table:table` (pipe tables),
   * `text:s`/`text:tab`/`text:line-break` whitespace, `draw:image`
   * Pictures payloads lifted as img-K media items, `dc:title` from
-  * meta.xml. Malformed input is a Left → failure row. O(bytes) per doc.
+  * meta.xml, all into the flow shape ([[DocxExtract.DocxDoc]]). Malformed
+  * input throws → failure row. O(bytes) per doc.
   */
 object OdtExtract {
 
   import DocxExtract.{readZip, reader, attr, collapseWs, tableMd, writeZip,
     normalizePath, MediaCollector}
-  import DocxExtract.{Block, Para, Table, Pic, PageBreak}
+  import DocxExtract.{Block, DocxDoc, Para, Table, Pic, PageBreak}
 
-  final case class OdtDoc(
-      title: String,
-      blocks: Seq[Block],
-      media: Seq[graft.model.MediaItem] = Nil) {
-    def pageCount: Int = 1 + blocks.count(_ == PageBreak)
+  def extract(bytes: Array[Byte]): DocxDoc = {
+    val entries = readZip(bytes)
+    val content = entries.getOrElse("content.xml",
+      throw new IllegalStateException("no content.xml"))
+    val title = entries.get("meta.xml").map(metaTitle).getOrElse("")
+    val media = new MediaCollector
+    def resolvePic(href: String): Option[String] = {
+      val path = normalizePath(href)
+      media.add(path, path, entries.get(path))
+    }
+    DocxDoc(title, parseContent(content, resolvePic), media.items)
   }
 
-  def extract(bytes: Array[Byte]): Either[String, OdtDoc] =
-    try {
-      val entries = readZip(bytes)
-      val content = entries.getOrElse("content.xml",
-        throw new IllegalStateException("no content.xml"))
-      val title = entries.get("meta.xml").map(metaTitle).getOrElse("")
-      val media = new MediaCollector
-      def resolvePic(href: String): Option[String] = {
-        val path = normalizePath(href)
-        media.add(path, path, entries.get(path))
-      }
-      Right(OdtDoc(title, parseContent(content, resolvePic), media.items))
-    } catch {
-      case e: Exception => Left(s"odt_parse_error: ${e.getClass.getSimpleName}: ${e.getMessage}")
-    }
-
-  def toSpans(doc: OdtDoc): Seq[graft.model.Span] =
-    DocxExtract.toSpans(DocxExtract.DocxDoc(doc.title, doc.blocks, doc.media))
-
   /** dc:title from a meta.xml part (shared with [[OdsExtract]]). */
-  private[extract] def metaTitleOf(xml: Array[Byte]): String = metaTitle(xml)
-
-  private def metaTitle(xml: Array[Byte]): String = {
+  private[extract] def metaTitle(xml: Array[Byte]): String = {
     val r = reader(xml)
     try {
       while (r.hasNext) {

@@ -24,8 +24,13 @@ import scala.collection.mutable.ArrayBuffer
   * cells correctly.
   *
   * Out of scope (documented): charts, formulas (the cached value is
-  * used), merged-cell spans, XLSX cell images. Malformed input is a Left
-  * — a failure row in lineage. O(bytes) per document.
+  * used), merged-cell spans, XLSX cell images. Malformed input throws —
+  * the format table's envelope makes it a failure row. O(bytes) per
+  * document.
+  *
+  * [[PptxDoc]] is the slides shape (PPT parses into it too) and
+  * [[XlsxDoc]] the sheets shape (ODS, XLS, XLSB); [[pptxSpans]] and
+  * [[xlsxSpans]] are their one renderers.
   */
 object OfficeExtract {
 
@@ -43,32 +48,29 @@ object OfficeExtract {
   // ------------------------------------------------------------ pptx
   private val SlideName = """ppt/slides/slide(\d+)\.xml""".r
 
-  def extractPptx(bytes: Array[Byte]): Either[String, PptxDoc] =
-    try {
-      val entries = readZip(bytes)
-      val slideKeys = entries.keys.collect { case k @ SlideName(n) => (n.toInt, k) }
-        .toSeq.sortBy(_._1)
-      if (slideKeys.isEmpty) throw new IllegalStateException("no ppt/slides/slideN.xml")
-      val title = entries.get("docProps/core.xml").map(coreTitle).getOrElse("")
-      // slide media: a:blip r:embed → the slide's OWN rels part → ppt/media
-      // payload, canonical img-K by encounter order, deduped DECK-WIDE by
-      // resolved target path (a logo on 30 slides = ONE item)
-      val media = new MediaCollector
-      val slides = slideKeys.map { case (_, k) =>
-        val rels = entries.get(s"ppt/slides/_rels/${k.substring(k.lastIndexOf('/') + 1)}.rels")
-          .map(parseRels).getOrElse(Map.empty)
-        def resolvePic(rid: String): Option[String] =
-          rels.get(rid).flatMap { target =>
-            val path = normalizePath(
-              if (target.startsWith("/")) target.drop(1) else "ppt/slides/" + target)
-            media.add(path, path, entries.get(path))
-          }
-        parseSlide(entries(k), resolvePic)
-      }
-      Right(PptxDoc(title, slides, media.items))
-    } catch {
-      case e: Exception => Left(s"pptx_parse_error: ${e.getClass.getSimpleName}: ${e.getMessage}")
+  def extractPptx(bytes: Array[Byte]): PptxDoc = {
+    val entries = readZip(bytes)
+    val slideKeys = entries.keys.collect { case k @ SlideName(n) => (n.toInt, k) }
+      .toSeq.sortBy(_._1)
+    if (slideKeys.isEmpty) throw new IllegalStateException("no ppt/slides/slideN.xml")
+    val title = entries.get("docProps/core.xml").map(coreTitle).getOrElse("")
+    // slide media: a:blip r:embed → the slide's OWN rels part → ppt/media
+    // payload, canonical img-K by encounter order, deduped DECK-WIDE by
+    // resolved target path (a logo on 30 slides = ONE item)
+    val media = new MediaCollector
+    val slides = slideKeys.map { case (_, k) =>
+      val rels = entries.get(s"ppt/slides/_rels/${k.substring(k.lastIndexOf('/') + 1)}.rels")
+        .map(parseRels).getOrElse(Map.empty)
+      def resolvePic(rid: String): Option[String] =
+        rels.get(rid).flatMap { target =>
+          val path = normalizePath(
+            if (target.startsWith("/")) target.drop(1) else "ppt/slides/" + target)
+          media.add(path, path, entries.get(path))
+        }
+      parseSlide(entries(k), resolvePic)
     }
+    PptxDoc(title, slides, media.items)
+  }
 
   private def parseSlide(
       xml: Array[Byte],
@@ -154,7 +156,7 @@ object OfficeExtract {
     import graft.model.{Span, SpanKind}
     val out = ArrayBuffer[Span]()
     doc.slides.zipWithIndex.foreach { case (slide, i) =>
-      out += Span(SpanKind.PageBreak, s"""{"next_page":${i + 1}}""", "", out.length)
+      out += graft.md.Markdown.pageBreakSpan(i + 1, out.length)
       if (slide.title.nonEmpty)
         out += Span(SpanKind.Text, "# " + slide.title, "", out.length)
       slide.blocks.foreach(b => out += Span(SpanKind.Text, b, "", out.length))
@@ -167,35 +169,32 @@ object OfficeExtract {
   }
 
   // ------------------------------------------------------------ xlsx
-  def extractXlsx(bytes: Array[Byte]): Either[String, XlsxDoc] =
-    try {
-      val entries = readZip(bytes)
-      val workbook = entries.getOrElse("xl/workbook.xml",
-        throw new IllegalStateException("no xl/workbook.xml"))
-      val shared = entries.get("xl/sharedStrings.xml").map(parseSharedStrings)
-        .getOrElse(Vector.empty)
-      val names = sheetNames(workbook)
-      val title = entries.get("docProps/core.xml").map(coreTitle).getOrElse("")
-      // sheet→part pairing goes through the workbook RELATIONSHIPS (r:id →
-      // Target): Excel does not rename parts when sheets are reordered, so
-      // positional sheetN.xml pairing silently mismatches names and data.
-      // Positional is only the fallback for rels-less minimal files.
-      val rels: Map[String, String] = entries.get("xl/_rels/workbook.xml.rels")
-        .map(parseRels).getOrElse(Map.empty)
-      val sheets = names.zipWithIndex.map { case ((name, rid), i) =>
-        val viaRels = rels.get(rid).map { t =>
-          if (t.startsWith("/")) t.drop(1) else "xl/" + t
-        }
-        val key = viaRels.getOrElse(s"xl/worksheets/sheet${i + 1}.xml")
-        val xml = entries.getOrElse(key,
-          throw new IllegalStateException(s"missing worksheet part $key"))
-        Sheet(name, parseSheet(xml, shared))
+  def extractXlsx(bytes: Array[Byte]): XlsxDoc = {
+    val entries = readZip(bytes)
+    val workbook = entries.getOrElse("xl/workbook.xml",
+      throw new IllegalStateException("no xl/workbook.xml"))
+    val shared = entries.get("xl/sharedStrings.xml").map(parseSharedStrings)
+      .getOrElse(Vector.empty)
+    val names = sheetNames(workbook)
+    val title = entries.get("docProps/core.xml").map(coreTitle).getOrElse("")
+    // sheet→part pairing goes through the workbook RELATIONSHIPS (r:id →
+    // Target): Excel does not rename parts when sheets are reordered, so
+    // positional sheetN.xml pairing silently mismatches names and data.
+    // Positional is only the fallback for rels-less minimal files.
+    val rels: Map[String, String] = entries.get("xl/_rels/workbook.xml.rels")
+      .map(parseRels).getOrElse(Map.empty)
+    val sheets = names.zipWithIndex.map { case ((name, rid), i) =>
+      val viaRels = rels.get(rid).map { t =>
+        if (t.startsWith("/")) t.drop(1) else "xl/" + t
       }
-      if (sheets.isEmpty) throw new IllegalStateException("no worksheets")
-      Right(XlsxDoc(title, sheets))
-    } catch {
-      case e: Exception => Left(s"xlsx_parse_error: ${e.getClass.getSimpleName}: ${e.getMessage}")
+      val key = viaRels.getOrElse(s"xl/worksheets/sheet${i + 1}.xml")
+      val xml = entries.getOrElse(key,
+        throw new IllegalStateException(s"missing worksheet part $key"))
+      Sheet(name, parseSheet(xml, shared))
     }
+    if (sheets.isEmpty) throw new IllegalStateException("no worksheets")
+    XlsxDoc(title, sheets)
+  }
 
   private def parseSharedStrings(xml: Array[Byte]): Vector[String] = {
     val r = reader(xml)
@@ -289,7 +288,7 @@ object OfficeExtract {
     import graft.model.{Span, SpanKind}
     val out = ArrayBuffer[Span]()
     doc.sheets.zipWithIndex.foreach { case (sheet, i) =>
-      out += Span(SpanKind.PageBreak, s"""{"next_page":${i + 1}}""", "", out.length)
+      out += graft.md.Markdown.pageBreakSpan(i + 1, out.length)
       out += Span(SpanKind.Text, "## " + sheet.name, "", out.length)
       if (sheet.tableMd.nonEmpty)
         out += Span(SpanKind.Text, sheet.tableMd, "", out.length)

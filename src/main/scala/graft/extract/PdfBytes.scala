@@ -51,10 +51,24 @@ object PdfBytes {
   private def isDelim(b: Byte) = Delim.contains(b)
 
   // ------------------------------------------------------------ lexer/parser
+  /** Deepest `[` / `<<` nesting a direct object may have. Real files stay
+    * in single digits; the cap keeps a hostile file from recursing the
+    * parser off the stack.
+    */
+  private val MaxNesting = 256
+
   /** Recursive-descent parser over the file buffer; `pos` is mutable.
-    * Shared with [[PdfText]]'s content-stream tokenizer.
+    * Shared with [[PdfText]]'s content-stream tokenizer. A parse that
+    * throws abandons the parser (its nesting count is not restored).
     */
   private[extract] final class Parser(val d: Array[Byte], var pos: Int) {
+    private var nesting = 0
+
+    private def enter(): Unit = {
+      nesting += 1
+      if (nesting > MaxNesting)
+        throw new IllegalStateException(s"objects nested deeper than $MaxNesting at $pos")
+    }
 
     def skipWs(): Unit = {
       while (pos < d.length) {
@@ -152,14 +166,17 @@ object PdfBytes {
         case '(' => literalString()
         case '[' =>
           pos += 1
+          enter()
           val items = Vector.newBuilder[PObj]
           skipWs()
           while (peek != ']') { items += obj(); skipWs() }
           pos += 1
+          nesting -= 1
           PArr(items.result())
         case '<' =>
           if (pos + 1 < d.length && d(pos + 1) == '<') {
             pos += 2
+            enter()
             val m = Map.newBuilder[String, PObj]
             skipWs()
             while (!(peek == '>' && pos + 1 < d.length && d(pos + 1) == '>')) {
@@ -168,6 +185,7 @@ object PdfBytes {
               skipWs()
             }
             pos += 2
+            nesting -= 1
             PDict(m.result())
           } else hexString()
         case _ =>
@@ -391,7 +409,7 @@ object PdfBytes {
     */
   def pdfInfo(data: Array[Byte], password: Option[String] = None): Either[String, PdfInfo] =
     try Right(parseInfo(data, password))
-    catch { case e: Exception => Left(s"pdf_parse_error: ${e.getClass.getSimpleName}: ${e.getMessage}") }
+    catch { case e: Exception => Left(Formats.parseError("pdf", e)) }
 
   private[extract] final class Doc(data: Array[Byte]) {
     /** obj num → either (file offset, generation) (Left) or
@@ -733,7 +751,36 @@ object PdfBytes {
       case PNull => Map.empty
       case other => throw new IllegalStateException(s"expected dict, got $other")
     }
+
+    /** The page-tree walk (§7.7.3): calls `f(node, page)` for every
+      * /Type /Page leaf under the catalog's /Pages, in document order.
+      * `page` is the leaf's dict with the [[Inheritable]] attributes filled
+      * in from its nearest ancestor that sets them. The walk keeps its own
+      * stack, so a deep /Kids chain cannot overflow the thread; a node
+      * reached twice is a cycle and throws.
+      */
+    private[extract] def foreachPage(f: (PObj, Map[String, PObj]) => Unit): Unit = {
+      val visited = mutable.Set[PObj]()
+      val todo = mutable.Stack[(PObj, Map[String, PObj])]((dict(trailer("Root"))("Pages"), Map.empty))
+      while (todo.nonEmpty) {
+        val (node, inherited) = todo.pop()
+        if (!visited.add(node)) throw new IllegalStateException("page tree cycle")
+        val m = dict(node)
+        val inh = inherited ++ Inheritable.flatMap(k => m.get(k).map(k -> _))
+        m.get("Type") match {
+          case Some(PName("Page")) => f(node, m ++ inh)
+          case _ =>
+            resolve(m.getOrElse("Kids", PArr(Vector.empty))) match {
+              case PArr(kids) => kids.reverseIterator.foreach(k => todo.push((k, inh)))
+              case _ => ()
+            }
+        }
+      }
+    }
   }
+
+  /** Page attributes a /Pages node passes down to its leaves (§7.7.3.4). */
+  private val Inheritable = Seq("MediaBox", "Resources", "Rotate", "CropBox")
 
   /** PDF text string → java String (§7.9.2.2): UTF-16BE with BOM, else
     * UTF-8 with BOM (PDF 2.0), else PDFDocEncoding (≈ Latin-1 for the
@@ -754,6 +801,12 @@ object PdfBytes {
   private[extract] case object UnsupportedHandler extends KeyResult
   private[extract] final case class Opened(
       key: Array[Byte], aes: Boolean, encryptMetadata: Boolean = true) extends KeyResult
+
+  /** The `Left` of the page-level entry points ([[PdfText]],
+    * [[PdfRewrite]]) for a file they cannot open.
+    */
+  private[extract] def encryptedError(k: KeyResult): String =
+    if (k == Locked) "pdf_encrypted: password required" else "pdf_encrypted: unsupported handler"
 
   /** Standard-handler RC4 (V=1/2) password resolution — the reference's
     * semantics (pdf_utils.py:205-225): a provided password verifies or
@@ -866,29 +919,16 @@ object PdfBytes {
         return PdfInfo(0, data.length.toLong, isEncrypted = true, Nil, "", "")
     }
     doc.fileCrypto = fileKey // ObjStm payloads decrypt from here on
-    val root = doc.dict(doc.trailer("Root"))
     val dims = Vector.newBuilder[PageDim]
     var count = 0
-    val visited = mutable.Set[PObj]()
-    def walk(node: PObj, inheritedMb: Option[PObj]): Unit = {
-      if (!visited.add(node)) throw new IllegalStateException("page tree cycle")
-      val m = doc.dict(node)
-      val mb = m.get("MediaBox").orElse(inheritedMb)
-      m.get("Type") match {
-        case Some(PName("Page")) =>
-          count += 1
-          val box = doc.resolve(mb.getOrElse(throw new IllegalStateException("page without MediaBox")))
-          val nums = box.asInstanceOf[PArr].items.map(v =>
-            doc.resolve(v).asInstanceOf[PNum].v)
-          dims += PageDim(math.abs(nums(2) - nums(0)), math.abs(nums(3) - nums(1)))
-        case _ =>
-          doc.resolve(m.getOrElse("Kids", PArr(Vector.empty))) match {
-            case PArr(kids) => kids.foreach(walk(_, mb))
-            case _ => ()
-          }
-      }
+    doc.foreachPage { (_, page) =>
+      count += 1
+      val box = doc.resolve(page.getOrElse("MediaBox",
+        throw new IllegalStateException("page without MediaBox")))
+      val nums = box.asInstanceOf[PArr].items.map(v =>
+        doc.resolve(v).asInstanceOf[PNum].v)
+      dims += PageDim(math.abs(nums(2) - nums(0)), math.abs(nums(3) - nums(1)))
     }
-    walk(root("Pages"), None)
     val infoRef = doc.trailer.get("Info")
     val info = infoRef.map(doc.dict).getOrElse(Map.empty)
     // strings are encrypted with the per-OBJECT key of their carrier;

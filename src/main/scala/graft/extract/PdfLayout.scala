@@ -10,7 +10,7 @@ import scala.collection.mutable.ArrayBuffer
   *
   * Matches the *output shape* of docler's local-ML PDF converters
   * (docling_provider/provider.py:117-168, marker_provider/provider.py:37-126):
-  * a leading page-1 marker, one `{"next_page":N}` marker per page, `img-K`
+  * a leading page-1 marker, one page-break marker per page, `img-K`
   * refs in encounter order. Real PDF byte parsing would need PDFBox (not in
   * the jar set); the synthetic input table carries pre-tokenized elements, and
   * this stage supplies the geometry→order logic those converters outsource to

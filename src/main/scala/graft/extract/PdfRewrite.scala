@@ -39,8 +39,7 @@ object PdfRewrite {
       val (key, encryptMeta) = PdfBytes.encryptionKey(doc, password) match {
         case NotEncrypted => (None, true)
         case Opened(k, aes, em) => (Some((k, aes)), em)
-        case Locked => return Left("pdf_encrypted: password required")
-        case UnsupportedHandler => return Left("pdf_encrypted: unsupported handler")
+        case locked => return Left(encryptedError(locked))
       }
       doc.fileCrypto = key // ObjStm payloads decrypt from here on
       val pages = collectPages(doc, forExtraction = true)
@@ -49,7 +48,7 @@ object PdfRewrite {
       val kept = keep.filter(i => i >= 0 && i < pages.length).map(pages)
       Right(emit(doc, kept, key, encryptMeta = encryptMeta))
     } catch {
-      case e: Exception => Left(s"pdf_parse_error: ${e.getClass.getSimpleName}: ${e.getMessage}")
+      case e: Exception => Left(Formats.parseError("pdf", e))
     }
 
   /** The reference's `decrypt_pdf`: unencrypted input returns the ORIGINAL
@@ -66,11 +65,10 @@ object PdfRewrite {
           doc.fileCrypto = Some((k, aes))
           Right(emit(doc, collectPages(doc, forExtraction = false), Some((k, aes)),
             includeInfo = true, encryptMeta = em))
-        case Locked => Left("pdf_encrypted: password required")
-        case UnsupportedHandler => Left("pdf_encrypted: unsupported handler")
+        case locked => Left(encryptedError(locked))
       }
     } catch {
-      case e: Exception => Left(s"pdf_parse_error: ${e.getClass.getSimpleName}: ${e.getMessage}")
+      case e: Exception => Left(Formats.parseError("pdf", e))
     }
 
   /** One kept page: its source ref (for per-object decryption keys) and the
@@ -80,7 +78,6 @@ object PdfRewrite {
     */
   private final case class SrcPage(num: Int, dict: Map[String, PObj])
 
-  private val Inheritable = Seq("MediaBox", "Resources", "Rotate", "CropBox")
   /** Page extraction drops link/structure plumbing so references cannot
     * drag EXCLUDED pages into the closure; decryption keeps every page, so
     * only the tree pointer is replaced and annotations survive (the
@@ -92,28 +89,13 @@ object PdfRewrite {
   private def collectPages(doc: Doc, forExtraction: Boolean): Vector[SrcPage] = {
     val dropped = if (forExtraction) ExtractionDropped else DecryptDropped
     val out = Vector.newBuilder[SrcPage]
-    val visited = mutable.Set[PObj]()
-    def walk(node: PObj, inherited: Map[String, PObj]): Unit = {
-      if (!visited.add(node)) throw new IllegalStateException("page tree cycle")
-      val m = doc.dict(node)
-      val inh = inherited ++ Inheritable.flatMap(k => m.get(k).map(k -> _))
-      m.get("Type") match {
-        case Some(PName("Page")) =>
-          val num = node match {
-            case PRef(n, _) => n
-            case _ => throw new IllegalStateException("page is not an indirect object")
-          }
-          val materialized = (m -- dropped) ++
-            Inheritable.flatMap(k => inh.get(k).map(k -> _))
-          out += SrcPage(num, materialized)
-        case _ =>
-          doc.resolve(m.getOrElse("Kids", PArr(Vector.empty))) match {
-            case PArr(kids) => kids.foreach(walk(_, inh))
-            case _ => ()
-          }
+    doc.foreachPage { (node, page) =>
+      val num = node match {
+        case PRef(n, _) => n
+        case _ => throw new IllegalStateException("page is not an indirect object")
       }
+      out += SrcPage(num, page -- dropped)
     }
-    walk(doc.dict(doc.trailer("Root"))("Pages"), Map.empty)
     out.result()
   }
 

@@ -79,39 +79,17 @@ object PdfText {
       encryptionKey(doc, password) match {
         case NotEncrypted => ()
         case Opened(k, aes, _) => doc.fileCrypto = Some((k, aes))
-        case Locked => return Left("pdf_encrypted: password required")
-        case UnsupportedHandler => return Left("pdf_encrypted: unsupported handler")
+        case locked => return Left(encryptedError(locked))
       }
       val fontCache = mutable.Map[Int, Font]()
       val imageCache = mutable.Map[Int, ImageRef]()
-      val root = doc.dict(doc.trailer("Root"))
       val pages = ArrayBuffer[PageContent]()
-      val visited = mutable.Set[PObj]()
-      def walk(node: PObj, inhRes: Option[PObj], inhMb: Option[PObj]): Unit = {
-        if (!visited.add(node)) throw new IllegalStateException("page tree cycle")
-        val m = doc.dict(node)
-        val res = m.get("Resources").orElse(inhRes)
-        val mb = m.get("MediaBox").orElse(inhMb)
-        m.get("Type") match {
-          case Some(PName("Page")) =>
-            val (w, h) = mb.map(doc.resolve(_)) match {
-              case Some(PArr(ns)) if ns.length == 4 =>
-                val v = ns.map(x => doc.resolve(x).asInstanceOf[PNum].v)
-                (math.abs(v(2) - v(0)), math.abs(v(3) - v(1)))
-              case _ => (612.0, 792.0)
-            }
-            pages += renderPage(doc, m, res, pages.length + 1, w, h, fontCache, imageCache)
-          case _ =>
-            doc.resolve(m.getOrElse("Kids", PArr(Vector.empty))) match {
-              case PArr(kids) => kids.foreach(walk(_, res, mb))
-              case _ => ()
-            }
-        }
+      doc.foreachPage { (_, page) =>
+        pages += renderPage(doc, page, pages.length + 1, fontCache, imageCache)
       }
-      walk(root("Pages"), None, None)
       Right(pages.toSeq)
     } catch {
-      case e: Exception => Left(s"pdf_text_error: ${e.getClass.getSimpleName}: ${e.getMessage}")
+      case e: Exception => Left("pdf_text_error: " + Formats.describe(e))
     }
 
   /** Page text in reading order, lines joined with \n — the `page_text`
@@ -344,15 +322,21 @@ object PdfText {
 
   private final case class Run(x: Double, y: Double, width: Double, size: Double, text: String)
 
+  /** One page (its dict with inherited attributes filled in); a missing or
+    * malformed MediaBox defaults to US Letter.
+    */
   private def renderPage(
       doc: Doc,
       pageDict: Map[String, PObj],
-      resources: Option[PObj],
       pageNo: Int,
-      w: Double,
-      h: Double,
       fontCache: mutable.Map[Int, Font],
       imageCache: mutable.Map[Int, ImageRef]): PageContent = {
+    val (w, h) = pageDict.get("MediaBox").map(doc.resolve(_)) match {
+      case Some(PArr(ns)) if ns.length == 4 =>
+        val v = ns.map(x => doc.resolve(x).asInstanceOf[PNum].v)
+        (math.abs(v(2) - v(0)), math.abs(v(3) - v(1)))
+      case _ => (612.0, 792.0)
+    }
     val runs = ArrayBuffer[Run]()
     val images = ArrayBuffer[ImageRef]()
     val content: Array[Byte] = pageDict.get("Contents") match {
@@ -367,7 +351,7 @@ object PdfText {
         case _ => Array.emptyByteArray
       }
     }
-    val res = resources.map(doc.dict).getOrElse(Map.empty)
+    val res = pageDict.get("Resources").map(doc.dict).getOrElse(Map.empty)
     interpret(doc, content, res, identity, runs, images, fontCache, imageCache, depth = 0)
     PageContent(pageNo, w, h, assembleLines(runs.toSeq), images.toSeq)
   }

@@ -15,12 +15,12 @@ import scala.collection.mutable.ArrayBuffer
   * a `# ` heading span, everything else body paragraphs (atom-internal \r
   * separates paragraphs). Shapes/styling records carry no text and are
   * skipped structurally. Title from the SummaryInformation property set,
-  * falling back to the first slide title.
+  * falling back to the first slide title. The deck parses into the slides
+  * shape ([[OfficeExtract.PptxDoc]]).
   */
 object PptExtract {
 
-  final case class PptSlide(title: String, blocks: Seq[String])
-  final case class PptDoc(title: String, slides: Seq[PptSlide])
+  import OfficeExtract.{PptxDoc, Slide}
 
   private val SlideContainer = 0x03EE
   private val SlideListWithText = 0x0FF0
@@ -29,119 +29,97 @@ object PptExtract {
   private val TextCharsAtom = 0x0FA0
   private val TextBytesAtom = 0x0FA8
 
-  def extract(bytes: Array[Byte]): Either[String, PptDoc] =
-    CfbExtract.readStreams(bytes).flatMap { streams =>
-      try {
-        val ppt = streams.getOrElse("PowerPoint Document",
-          throw new IllegalStateException("no PowerPoint Document stream"))
-        val slides = ArrayBuffer[PptSlide]()
-        // real PowerPoint keeps placeholder text OUTSIDE the slide
-        // drawings, in DocumentContainer > SlideListWithText, grouped by
-        // SlidePersistAtom in slide order (the drawings reference it via
-        // OutlineTextRefAtom); both carriers are read, SLWT groups filling
-        // slides whose drawing carried no text (positional mapping — the
-        // persist-id indirection is 1:1 in practice, documented subset)
-        val slwtGroups = ArrayBuffer[ArrayBuffer[(Boolean, String)]]()
+  def extract(bytes: Array[Byte]): Either[String, PptxDoc] =
+    CfbExtract.readStreams(bytes).map { streams =>
+      val ppt = streams.getOrElse("PowerPoint Document",
+        throw new IllegalStateException("no PowerPoint Document stream"))
+      val slides = ArrayBuffer[Slide]()
+      // real PowerPoint keeps placeholder text OUTSIDE the slide
+      // drawings, in DocumentContainer > SlideListWithText, grouped by
+      // SlidePersistAtom in slide order (the drawings reference it via
+      // OutlineTextRefAtom); both carriers are read, SLWT groups filling
+      // slides whose drawing carried no text (positional mapping — the
+      // persist-id indirection is 1:1 in practice, documented subset)
+      val slwtGroups = ArrayBuffer[ArrayBuffer[(Boolean, String)]]()
 
-        def decodeChars(body: Int, bodyEnd: Int): String =
-          new String(ppt, body, bodyEnd - body,
-            java.nio.charset.StandardCharsets.UTF_16LE)
-        def decodeBytes(body: Int, bodyEnd: Int): String = {
-          // low bytes of UTF-16: each byte IS the code point
-          val sb = new StringBuilder(bodyEnd - body)
-          var k = body
-          while (k < bodyEnd) { sb += (ppt(k) & 0xff).toChar; k += 1 }
-          sb.toString
-        }
-
-        // walk one container's records; `sink` gathers (isTitle, text) —
-        // null at the top level, a slide buffer inside Slide containers,
-        // and the current SLWT group inside SlideListWithText
-        def walk(start: Int, end: Int, sink: ArrayBuffer[(Boolean, String)],
-            inSlwt: Boolean): Unit = {
-          var p = start
-          var pendingTitle = false
-          while (p + 8 <= end) {
-            val verInst = u16(ppt, p)
-            val recType = u16(ppt, p + 2)
-            val len = u32(ppt, p + 4).toInt
-            val body = p + 8
-            val bodyEnd = math.min(body + len, end)
-            if (len < 0 || body > end) return // truncated record: stop
-            val isContainer = (verInst & 0xF) == 0xF
-            if (recType == SlideContainer && sink == null && !inSlwt) {
-              val texts = ArrayBuffer[(Boolean, String)]()
-              walk(body, bodyEnd, texts, inSlwt = false)
-              val title = texts.collectFirst { case (true, t) if t.nonEmpty => t }
-              val blocks = texts.collect { case (false, t) if t.nonEmpty => t }
-              slides += PptSlide(title.getOrElse(""),
-                blocks.flatMap(_.split('\r').map(DocxExtract.collapseWs).filter(_.nonEmpty)).toSeq)
-            } else if (recType == SlideListWithText && sink == null) {
-              walk(body, bodyEnd, null, inSlwt = true)
-            } else if (isContainer) {
-              walk(body, bodyEnd, sink, inSlwt)
-            } else if (inSlwt && recType == SlidePersistAtom) {
-              slwtGroups += ArrayBuffer()
-            } else if (sink != null || (inSlwt && slwtGroups.nonEmpty)) {
-              def put(isTitle: Boolean, text: String): Unit =
-                if (sink != null) sink += ((isTitle, text))
-                else slwtGroups.last += ((isTitle, text))
-              recType match {
-                case TextHeaderAtom =>
-                  val txType = if (len >= 4) u32(ppt, body).toInt else -1
-                  pendingTitle = txType == 0 || txType == 6
-                case TextCharsAtom =>
-                  put(pendingTitle, decodeChars(body, bodyEnd))
-                  pendingTitle = false
-                case TextBytesAtom =>
-                  put(pendingTitle, decodeBytes(body, bodyEnd))
-                  pendingTitle = false
-                case _ => ()
-              }
-            }
-            p = body + len
-          }
-        }
-        walk(0, ppt.length, null, inSlwt = false)
-
-        def groupSlide(g: Seq[(Boolean, String)]): PptSlide = {
-          val title = g.collectFirst { case (true, t) if t.nonEmpty => t }
-          val blocks = g.collect { case (false, t) if t.nonEmpty => t }
-          PptSlide(title.getOrElse(""),
-            blocks.flatMap(_.split('\r').map(DocxExtract.collapseWs).filter(_.nonEmpty)).toSeq)
-        }
-        if (slides.isEmpty) slwtGroups.foreach(g => slides += groupSlide(g.toSeq))
-        else slides.indices.foreach { idx =>
-          if (slides(idx).title.isEmpty && slides(idx).blocks.isEmpty &&
-              idx < slwtGroups.length)
-            slides(idx) = groupSlide(slwtGroups(idx).toSeq)
-        }
-        require(slides.nonEmpty, "no Slide containers or SlideListWithText")
-        val psTitle = streams.get("\u0005SummaryInformation")
-          .map(CfbExtract.summaryTitle).getOrElse("")
-        val title = if (psTitle.nonEmpty) psTitle
-          else slides.collectFirst { case s if s.title.nonEmpty => s.title }.getOrElse("")
-        Right(PptDoc(title, slides.toSeq))
-      } catch {
-        case e: Exception =>
-          Left(s"ppt_parse_error: ${e.getClass.getSimpleName}: ${e.getMessage}")
+      def decodeChars(body: Int, bodyEnd: Int): String =
+        new String(ppt, body, bodyEnd - body,
+          java.nio.charset.StandardCharsets.UTF_16LE)
+      def decodeBytes(body: Int, bodyEnd: Int): String = {
+        // low bytes of UTF-16: each byte IS the code point
+        val sb = new StringBuilder(bodyEnd - body)
+        var k = body
+        while (k < bodyEnd) { sb += (ppt(k) & 0xff).toChar; k += 1 }
+        sb.toString
       }
-    }
+      // one slide's (isTitle, text) atoms: the first title, body paragraphs
+      def groupSlide(g: Seq[(Boolean, String)]): Slide = {
+        val title = g.collectFirst { case (true, t) if t.nonEmpty => t }
+        val blocks = g.collect { case (false, t) if t.nonEmpty => t }
+        Slide(title.getOrElse(""),
+          blocks.flatMap(_.split('\r').map(DocxExtract.collapseWs).filter(_.nonEmpty)).toSeq)
+      }
 
-  /** Same span grammar as [[OfficeExtract.pptxSpans]]: per slide a
-    * page_break, the title as `# ` heading, then body paragraphs.
-    */
-  def toSpans(doc: PptDoc): Seq[graft.model.Span] = {
-    import graft.model.{Span, SpanKind}
-    val out = ArrayBuffer[Span]()
-    doc.slides.zipWithIndex.foreach { case (slide, i) =>
-      out += Span(SpanKind.PageBreak, s"""{"next_page":${i + 1}}""", "", out.length)
-      if (slide.title.nonEmpty)
-        out += Span(SpanKind.Text, "# " + slide.title, "", out.length)
-      slide.blocks.foreach(b => out += Span(SpanKind.Text, b, "", out.length))
+      // walk one container's records; `sink` gathers (isTitle, text) —
+      // null at the top level, a slide buffer inside Slide containers,
+      // and the current SLWT group inside SlideListWithText
+      def walk(start: Int, end: Int, sink: ArrayBuffer[(Boolean, String)],
+          inSlwt: Boolean): Unit = {
+        var p = start
+        var pendingTitle = false
+        while (p + 8 <= end) {
+          val verInst = u16(ppt, p)
+          val recType = u16(ppt, p + 2)
+          val len = u32(ppt, p + 4).toInt
+          val body = p + 8
+          val bodyEnd = math.min(body + len, end)
+          if (len < 0 || body > end) return // truncated record: stop
+          val isContainer = (verInst & 0xF) == 0xF
+          if (recType == SlideContainer && sink == null && !inSlwt) {
+            val texts = ArrayBuffer[(Boolean, String)]()
+            walk(body, bodyEnd, texts, inSlwt = false)
+            slides += groupSlide(texts.toSeq)
+          } else if (recType == SlideListWithText && sink == null) {
+            walk(body, bodyEnd, null, inSlwt = true)
+          } else if (isContainer) {
+            walk(body, bodyEnd, sink, inSlwt)
+          } else if (inSlwt && recType == SlidePersistAtom) {
+            slwtGroups += ArrayBuffer()
+          } else if (sink != null || (inSlwt && slwtGroups.nonEmpty)) {
+            def put(isTitle: Boolean, text: String): Unit =
+              if (sink != null) sink += ((isTitle, text))
+              else slwtGroups.last += ((isTitle, text))
+            recType match {
+              case TextHeaderAtom =>
+                val txType = if (len >= 4) u32(ppt, body).toInt else -1
+                pendingTitle = txType == 0 || txType == 6
+              case TextCharsAtom =>
+                put(pendingTitle, decodeChars(body, bodyEnd))
+                pendingTitle = false
+              case TextBytesAtom =>
+                put(pendingTitle, decodeBytes(body, bodyEnd))
+                pendingTitle = false
+              case _ => ()
+            }
+          }
+          p = body + len
+        }
+      }
+      walk(0, ppt.length, null, inSlwt = false)
+
+      if (slides.isEmpty) slwtGroups.foreach(g => slides += groupSlide(g.toSeq))
+      else slides.indices.foreach { idx =>
+        if (slides(idx).title.isEmpty && slides(idx).blocks.isEmpty &&
+            idx < slwtGroups.length)
+          slides(idx) = groupSlide(slwtGroups(idx).toSeq)
+      }
+      require(slides.nonEmpty, "no Slide containers or SlideListWithText")
+      val psTitle = streams.get("\u0005SummaryInformation")
+        .map(CfbExtract.summaryTitle).getOrElse("")
+      val title = if (psTitle.nonEmpty) psTitle
+        else slides.collectFirst { case s if s.title.nonEmpty => s.title }.getOrElse("")
+      PptxDoc(title, slides.toSeq)
     }
-    out.toSeq
-  }
 
   // ------------------------------------------------------------ writer
   /** Deterministic .ppt fixture: a Document container wrapping one Slide

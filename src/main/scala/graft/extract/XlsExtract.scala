@@ -65,60 +65,55 @@ object XlsExtract {
   }
 
   def extract(bytes: Array[Byte]): Either[String, OfficeExtract.XlsxDoc] =
-    CfbExtract.readStreams(bytes).flatMap { streams =>
-      try {
-        val wb = streams.getOrElse("Workbook",
-          streams.getOrElse("Book",
-            throw new IllegalStateException("no Workbook stream")))
-        if (wb.length < 4 || u16(wb, 0) != RecBof)
-          throw new IllegalStateException("Workbook stream does not start with BOF")
-        // BIFF5 keeps per-sheet data in the same stream but with a
-        // different string model; only BIFF8 (vers 0x0600) is supported
-        if (u16(wb, 4) != 0x0600)
-          throw new IllegalStateException(f"unsupported BIFF version 0x${u16(wb, 4)}%04X")
+    CfbExtract.readStreams(bytes).map { streams =>
+      val wb = streams.getOrElse("Workbook",
+        streams.getOrElse("Book",
+          throw new IllegalStateException("no Workbook stream")))
+      if (wb.length < 4 || u16(wb, 0) != RecBof)
+        throw new IllegalStateException("Workbook stream does not start with BOF")
+      // BIFF5 keeps per-sheet data in the same stream but with a
+      // different string model; only BIFF8 (vers 0x0600) is supported
+      if (u16(wb, 4) != 0x0600)
+        throw new IllegalStateException(f"unsupported BIFF version 0x${u16(wb, 4)}%04X")
 
-        // ---- globals substream: BoundSheet8 + SST (Continue-aware)
-        val bounds = ArrayBuffer[(String, Int)]() // (name, lbPlyPos)
-        var sst = Vector.empty[String]
-        var p = 0
-        var depth = 0
-        var guard = 0
-        while (p + 4 <= wb.length && (depth > 0 || guard == 0) && depth >= 0) {
-          val t = u16(wb, p); val len = u16(wb, p + 2); val body = p + 4
-          if (body + len > wb.length)
-            throw new IllegalStateException("record overruns Workbook stream")
-          t match {
-            case RecBof => depth += 1; guard = 1
-            case RecEof => depth -= 1
-            case RecBoundSheet if depth == 1 =>
-              val pos = u32(wb, body).toInt
-              val cch = wb(body + 6) & 0xff
-              val high = (wb(body + 7) & 0x01) != 0
-              val name =
-                if (high) new String(wb, body + 8, 2 * cch,
-                  java.nio.charset.StandardCharsets.UTF_16LE)
-                else new String(wb, body + 8, cch,
-                  java.nio.charset.Charset.forName("windows-1252"))
-              bounds += ((name, pos))
-            case RecSst if depth == 1 =>
-              sst = readSst(wb, p)
-            case _ => ()
-          }
-          p = body + len
+      // ---- globals substream: BoundSheet8 + SST (Continue-aware)
+      val bounds = ArrayBuffer[(String, Int)]() // (name, lbPlyPos)
+      var sst = Vector.empty[String]
+      var p = 0
+      var depth = 0
+      var guard = 0
+      while (p + 4 <= wb.length && (depth > 0 || guard == 0) && depth >= 0) {
+        val t = u16(wb, p); val len = u16(wb, p + 2); val body = p + 4
+        if (body + len > wb.length)
+          throw new IllegalStateException("record overruns Workbook stream")
+        t match {
+          case RecBof => depth += 1; guard = 1
+          case RecEof => depth -= 1
+          case RecBoundSheet if depth == 1 =>
+            val pos = u32(wb, body).toInt
+            val cch = wb(body + 6) & 0xff
+            val high = (wb(body + 7) & 0x01) != 0
+            val name =
+              if (high) new String(wb, body + 8, 2 * cch,
+                java.nio.charset.StandardCharsets.UTF_16LE)
+              else new String(wb, body + 8, cch,
+                java.nio.charset.Charset.forName("windows-1252"))
+            bounds += ((name, pos))
+          case RecSst if depth == 1 =>
+            sst = readSst(wb, p)
+          case _ => ()
         }
-        if (bounds.isEmpty) throw new IllegalStateException("no BoundSheet8 records")
-
-        val title = streams.get("\u0005SummaryInformation")
-          .map(CfbExtract.summaryTitle).getOrElse("")
-
-        val sheets = bounds.toSeq.map { case (name, pos) =>
-          OfficeExtract.Sheet(name, parseSheet(wb, pos, sst))
-        }
-        Right(OfficeExtract.XlsxDoc(title, sheets))
-      } catch {
-        case e: Exception =>
-          Left(s"xls_parse_error: ${e.getClass.getSimpleName}: ${e.getMessage}")
+        p = body + len
       }
+      if (bounds.isEmpty) throw new IllegalStateException("no BoundSheet8 records")
+
+      val title = streams.get("\u0005SummaryInformation")
+        .map(CfbExtract.summaryTitle).getOrElse("")
+
+      val sheets = bounds.toSeq.map { case (name, pos) =>
+        OfficeExtract.Sheet(name, parseSheet(wb, pos, sst))
+      }
+      OfficeExtract.XlsxDoc(title, sheets)
     }
 
   /** SST at record offset `recPos`: strings read through a Continue-aware

@@ -87,56 +87,52 @@ object XlsbExtract {
     }
   }
 
-  def extract(bytes: Array[Byte]): Either[String, OfficeExtract.XlsxDoc] =
-    try {
-      val entries = DocxExtract.readZip(bytes)
-      val wb = entries.getOrElse("xl/workbook.bin",
-        throw new IllegalStateException("no xl/workbook.bin part"))
+  def extract(bytes: Array[Byte]): OfficeExtract.XlsxDoc = {
+    val entries = DocxExtract.readZip(bytes)
+    val wb = entries.getOrElse("xl/workbook.bin",
+      throw new IllegalStateException("no xl/workbook.bin part"))
 
-      // sheet bundle: name + rId, resolved through the (XML) rels part
-      val bundles = ArrayBuffer[(String, String)]() // (name, rId)
-      records(wb) { (t, p, _) =>
-        if (t == BrtBundleSh) {
-          var q = p + 8 // hsState u32 + iTabID u32
-          val relLen = u32(wb, q).toInt
-          val relId =
-            if (relLen == -1) "" // XLNullableWideString null
-            else {
-              val (s, n) = wideStr(wb, q); q = n; s
-            }
-          if (relLen == -1) q += 4
-          val (name, _) = wideStr(wb, q)
-          bundles += ((name, relId))
-        }
+    // sheet bundle: name + rId, resolved through the (XML) rels part
+    val bundles = ArrayBuffer[(String, String)]() // (name, rId)
+    records(wb) { (t, p, _) =>
+      if (t == BrtBundleSh) {
+        var q = p + 8 // hsState u32 + iTabID u32
+        val relLen = u32(wb, q).toInt
+        val relId =
+          if (relLen == -1) "" // XLNullableWideString null
+          else {
+            val (s, n) = wideStr(wb, q); q = n; s
+          }
+        if (relLen == -1) q += 4
+        val (name, _) = wideStr(wb, q)
+        bundles += ((name, relId))
       }
-      if (bundles.isEmpty) throw new IllegalStateException("no BrtBundleSh records")
-      val rels: Map[String, String] = entries.get("xl/_rels/workbook.bin.rels")
-        .map(DocxExtract.parseRels).getOrElse(Map.empty)
-
-      // shared strings
-      val sst = ArrayBuffer[String]()
-      entries.get("xl/sharedStrings.bin").foreach { ss =>
-        records(ss) { (t, p, _) =>
-          if (t == BrtSSTItem) sst += wideStr(ss, p + 1)._1 // flags u8 first
-        }
-      }
-
-      val sheets = bundles.zipWithIndex.map { case ((name, relId), i) =>
-        val target = rels.get(relId)
-          .map(t => DocxExtract.normalizePath(if (t.startsWith("/")) t.drop(1) else "xl/" + t))
-          .getOrElse(s"xl/worksheets/sheet${i + 1}.bin") // rels-less fallback
-        val part = entries.getOrElse(target,
-          throw new IllegalStateException(s"missing sheet part $target"))
-        OfficeExtract.Sheet(name, sheetTable(part, sst.toIndexedSeq))
-      }.toSeq
-
-      val title = entries.get("docProps/core.xml")
-        .map(DocxExtract.coreTitle).getOrElse("")
-      Right(OfficeExtract.XlsxDoc(title, sheets))
-    } catch {
-      case e: Exception =>
-        Left(s"xlsb_parse_error: ${e.getClass.getSimpleName}: ${e.getMessage}")
     }
+    if (bundles.isEmpty) throw new IllegalStateException("no BrtBundleSh records")
+    val rels: Map[String, String] = entries.get("xl/_rels/workbook.bin.rels")
+      .map(DocxExtract.parseRels).getOrElse(Map.empty)
+
+    // shared strings
+    val sst = ArrayBuffer[String]()
+    entries.get("xl/sharedStrings.bin").foreach { ss =>
+      records(ss) { (t, p, _) =>
+        if (t == BrtSSTItem) sst += wideStr(ss, p + 1)._1 // flags u8 first
+      }
+    }
+
+    val sheets = bundles.zipWithIndex.map { case ((name, relId), i) =>
+      val target = rels.get(relId)
+        .map(t => DocxExtract.normalizePath(if (t.startsWith("/")) t.drop(1) else "xl/" + t))
+        .getOrElse(s"xl/worksheets/sheet${i + 1}.bin") // rels-less fallback
+      val part = entries.getOrElse(target,
+        throw new IllegalStateException(s"missing sheet part $target"))
+      OfficeExtract.Sheet(name, sheetTable(part, sst.toIndexedSeq))
+    }.toSeq
+
+    val title = entries.get("docProps/core.xml")
+      .map(DocxExtract.coreTitle).getOrElse("")
+    OfficeExtract.XlsxDoc(title, sheets)
+  }
 
   /** One worksheet part → markdown pipe table (XLSX shape). */
   private def sheetTable(d: Array[Byte], sst: IndexedSeq[String]): String = {

@@ -71,9 +71,9 @@ object Pipeline {
 
   /** Pure per-row extraction: convert through the format table
     * ([[graft.extract.Formats]]), then the one Document assembly every kind
-    * shares. Never throws — failures surface in the `failure` column for
-    * lineage: a converter's `Left` verbatim, an exception (including an
-    * unknown kind) as `"<exception class>: <message>"`.
+    * shares. Never throws: [[graft.extract.Formats.convert]] forms both the
+    * spans and every failure string (its envelope catches what a converter
+    * throws), and a failure lands in the `failure` column for lineage.
     *
     * Document assembly mirrors converters/base.py:204-223: title = converter
     * title else the source filename stem; ingested docs carry EXPLICIT
@@ -83,34 +83,29 @@ object Pipeline {
     * cost metadata injected when the modelled provider has a price.
     */
   def extractOne(r: RawDoc): ExtractOut =
-    try {
-      Formats.convert(r) match {
-        case Left(err) => ExtractOut(r.doc_id, Nil, r.mime_type, 0, err)
-        case Right(c) =>
-          val (sourcePath, stem) =
-            if (r.source_path.isEmpty)
-              (s"synthetic://${r.payload_kind}/${r.doc_id}.${extOf(r.mime_type)}", r.doc_id)
-            else {
-              val name = r.source_path.substring(r.source_path.lastIndexOf('/') + 1)
-              (r.source_path,
-                if (name.lastIndexOf('.') > 0) name.substring(0, name.lastIndexOf('.')) else name)
-            }
-          val metadata = KindToProvider.get(r.payload_kind)
-            .flatMap(p => graft.ops.DocOps.PricePerPage.get(p)).fold(c.metadata) { price =>
-              val cost = java.math.BigDecimal.valueOf(price)
-                .multiply(java.math.BigDecimal.valueOf(c.pageCount.toLong))
-              c.metadata ++ Map(
-                "conversion_cost_usd" -> cost.stripTrailingZeros.toPlainString,
-                "price_per_page_usd" -> java.math.BigDecimal.valueOf(price).toPlainString,
-                "pages_processed" -> c.pageCount.toString)
-            }
-          ExtractOut(r.doc_id, c.spans, r.mime_type, c.pageCount, "",
-            title = if (c.title.nonEmpty) c.title else stem,
-            source_path = sourcePath, media = c.media, metadata = metadata)
-      }
-    } catch {
-      case e: Exception =>
-        ExtractOut(r.doc_id, Nil, r.mime_type, 0, s"${e.getClass.getSimpleName}: ${e.getMessage}")
+    Formats.convert(r) match {
+      case Left(err) => ExtractOut(r.doc_id, Nil, r.mime_type, 0, err)
+      case Right(c) =>
+        val (sourcePath, stem) =
+          if (r.source_path.isEmpty)
+            (s"synthetic://${r.payload_kind}/${r.doc_id}.${extOf(r.mime_type)}", r.doc_id)
+          else {
+            val name = r.source_path.substring(r.source_path.lastIndexOf('/') + 1)
+            (r.source_path,
+              if (name.lastIndexOf('.') > 0) name.substring(0, name.lastIndexOf('.')) else name)
+          }
+        val metadata = KindToProvider.get(r.payload_kind)
+          .flatMap(p => graft.ops.DocOps.PricePerPage.get(p)).fold(c.metadata) { price =>
+            val cost = java.math.BigDecimal.valueOf(price)
+              .multiply(java.math.BigDecimal.valueOf(c.pageCount.toLong))
+            c.metadata ++ Map(
+              "conversion_cost_usd" -> cost.stripTrailingZeros.toPlainString,
+              "price_per_page_usd" -> java.math.BigDecimal.valueOf(price).toPlainString,
+              "pages_processed" -> c.pageCount.toString)
+          }
+        ExtractOut(r.doc_id, c.spans, r.mime_type, c.pageCount, "",
+          title = if (c.title.nonEmpty) c.title else stem,
+          source_path = sourcePath, media = c.media, metadata = metadata)
     }
 
   /** The extract stage. `repartitionTo` forces uniform task sizing before the

@@ -20,7 +20,7 @@ class DocxSpec extends AnyFunSuite {
       PageBreak,
       Para("After the break."))
     val bytes = DocxExtract.buildDocx("My Title", blocks)
-    val doc = DocxExtract.extract(bytes).fold(e => fail(e), identity)
+    val doc = DocxExtract.extract(bytes)
     assert(doc.title == "My Title")
     assert(doc.blocks == blocks)
     assert(doc.pageCount == 2)
@@ -40,7 +40,6 @@ class DocxSpec extends AnyFunSuite {
   test("XML escapes and whitespace collapse round-trip") {
     val blocks = Seq(Para("a < b & c > d \"quoted\""), Para("multi  space   text"))
     val doc = DocxExtract.extract(DocxExtract.buildDocx("T<&>", blocks))
-      .fold(e => fail(e), identity)
     assert(doc.title == "T<&>")
     assert(doc.blocks.head == Para("a < b & c > d \"quoted\""))
     // writer preserves, parser collapses runs of whitespace
@@ -55,14 +54,18 @@ class DocxSpec extends AnyFunSuite {
   }
 
   test("malformed bytes are a Left, never a throw") {
-    assert(DocxExtract.extract("not a zip".getBytes).isLeft)
-    assert(DocxExtract.extract(Array.emptyByteArray).isLeft)
+    // the converter throws; the format table's envelope phrases the row
+    def failure(bytes: Array[Byte]): String = graft.pipeline.Pipeline.extractOne(
+      graft.io.Ingest.toRawDoc("f.docx", bytes)).failure
+    val missing = "docx_parse_error: IllegalStateException: no word/document.xml"
+    assert(failure("not a zip".getBytes) == missing)
+    assert(failure(Array.emptyByteArray) == missing)
     // a valid zip with no word/document.xml
     val out = new java.io.ByteArrayOutputStream()
     val z = new java.util.zip.ZipOutputStream(out)
     z.putNextEntry(new java.util.zip.ZipEntry("other.txt"))
     z.write("x".getBytes); z.closeEntry(); z.close()
-    assert(DocxExtract.extract(out.toByteArray).isLeft)
+    assert(failure(out.toByteArray) == missing)
   }
 
   test("ingestion route: .docx → docx_bytes → content spans; junk .doc fails as a row") {
@@ -97,7 +100,7 @@ class DocxSpec extends AnyFunSuite {
       PageBreak,
       Para("after"))
     val bytes = DocxExtract.buildDocx("Pics", blocks, Seq(("png", png), ("jpeg", jpg)))
-    val doc = DocxExtract.extract(bytes).fold(e => fail(e), identity)
+    val doc = DocxExtract.extract(bytes)
     assert(doc.blocks == blocks)
     assert(doc.media.map(m => (m.media_ref, m.mime_type)) ==
       Seq(("img-0.png", "image/png"), ("img-1.jpeg", "image/jpeg")))
@@ -109,7 +112,7 @@ class DocxSpec extends AnyFunSuite {
     assert(out.spans.filter(_.kind == "image").map(s => (s.text, s.media_ref)) ==
       Seq(("img-0", "img-0.png"), ("img-1", "img-1.jpeg")))
     // the same rid referenced twice reuses one media item (cache)
-    val doc2 = DocxExtract.extract(bytes).fold(e => fail(e), identity)
+    val doc2 = DocxExtract.extract(bytes)
     assert(doc2.media.size == 2)
   }
 
@@ -123,7 +126,6 @@ class DocxSpec extends AnyFunSuite {
   test("tables: ragged rows pad to the widest; nested content stays in cells") {
     val md = "|a|b|c|\n|---|---|---|\n|1|2|3|"
     val doc = DocxExtract.extract(DocxExtract.buildDocx("t", Seq(Table(md))))
-      .fold(e => fail(e), identity)
     assert(doc.blocks == Seq(Table(md)))
   }
 }

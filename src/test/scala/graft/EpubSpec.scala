@@ -14,7 +14,7 @@ class EpubSpec extends AnyFunSuite {
 
   test("round-trip: dc:title, spine order (11 chapters), chapter content") {
     val bytes = EpubExtract.buildEpub("The Book", (1 to 11).map(chapter))
-    val doc = EpubExtract.extract(bytes).fold(e => fail(e), identity)
+    val doc = EpubExtract.extract(bytes)
     assert(doc.title == "The Book")
     assert(doc.chapters.size == 11)
     assert(doc.chapters.zipWithIndex.forall { case (ch, i) =>
@@ -24,8 +24,8 @@ class EpubSpec extends AnyFunSuite {
 
   test("toSpans: page break per chapter, re-offset stream") {
     val bytes = EpubExtract.buildEpub("b", Seq(chapter(1), chapter(2)))
-    val doc = EpubExtract.extract(bytes).fold(e => fail(e), identity)
-    val spans = EpubExtract.toSpans(doc)
+    val doc = EpubExtract.extract(bytes)
+    val spans = doc.spans
     assert(spans.map(_.offset) == spans.indices)
     assert(spans.count(_.kind == "page_break") == 2)
     assert(spans.map(_.text).containsSlice(
@@ -53,7 +53,7 @@ class EpubSpec extends AnyFunSuite {
 
   test("spine references resolve relative to the OPF directory") {
     val bytes = EpubExtract.buildEpub("t", Seq(chapter(1)))
-    assert(EpubExtract.extract(bytes).isRight)
+    assert(EpubExtract.extract(bytes).chapters.size == 1)
   }
 
   test("chapter images: payloads resolve from the container, global img-K numbering") {
@@ -64,7 +64,7 @@ class EpubSpec extends AnyFunSuite {
         s"for the density classifier.</p><img src='images/pic$n.png' alt='p$n'/></body></html>"
     val bytes = EpubExtract.buildEpub("Imgs", Seq(chWithImg(1), chWithImg(2)),
       Seq("OEBPS/images/pic1.png" -> pngA, "OEBPS/images/pic2.png" -> pngB))
-    val doc = EpubExtract.extract(bytes).fold(e => fail(e), identity)
+    val doc = EpubExtract.extract(bytes)
     // GLOBAL numbering: chapter 2's image is img-1, not a second img-0
     assert(doc.media.map(_.media_ref) == Seq("img-0.png", "img-1.png"))
     assert(doc.media(0).content.sameElements(pngA) && doc.media(1).content.sameElements(pngB))
@@ -86,14 +86,13 @@ class EpubSpec extends AnyFunSuite {
       "density classifier scoring.</p><img src='../pics/x.png'/></body></html>"
     // chapter lives at OEBPS/ch0.xhtml → ../pics/x.png = pics/x.png at root
     val bytes = EpubExtract.buildEpub("t", Seq(ch), Seq("pics/x.png" -> png))
-    val doc = EpubExtract.extract(bytes).fold(e => fail(e), identity)
+    val doc = EpubExtract.extract(bytes)
     assert(doc.media.map(_.media_ref) == Seq("img-0.png"))
     assert(doc.media.head.content.sameElements(png))
     // an unresolvable (remote) src keeps a reference-only item (empty bytes)
     val ch2 = "<html><body><p>Enough body words to keep this paragraph for the " +
       "density classifier scoring.</p><img src='http://x/y.png'/></body></html>"
     val doc2 = EpubExtract.extract(EpubExtract.buildEpub("t", Seq(ch2)))
-      .fold(e => fail(e), identity)
     assert(doc2.media.map(_.media_ref) == Seq("img-0.png"))
     assert(doc2.media.head.content.isEmpty)
   }

@@ -88,9 +88,10 @@ class FuzzRoutingSpec extends AnyFunSuite {
     }
   }
 
-  test("bit-flipped REAL containers (zip/CFB/PDF family) never escape") {
+  /** One small valid document per byte container (MIME, tag, bytes). */
+  private lazy val containers: Seq[(String, String, Array[Byte])] = {
     import graft.extract._
-    val containers: Seq[(String, String, Array[Byte])] = Seq(
+    Seq(
       ("application/pdf", "pdf",
         PdfText.buildTextPdf(Seq(Seq("Page one text"), Seq("Page two")))),
       ("application/vnd.openxmlformats-officedocument.wordprocessingml.document",
@@ -111,6 +112,9 @@ class FuzzRoutingSpec extends AnyFunSuite {
         XlsbExtract.buildXlsb("T", Seq(("S", Seq(Seq(XlsExtract.XlsStr("a"))))))),
       ("application/rtf", "rtf",
         RtfExtract.buildRtf("T", Seq("Body")).getBytes("ISO-8859-1")))
+  }
+
+  test("bit-flipped REAL containers (zip/CFB/PDF family) never escape") {
     val r = rng(0xbeef)
     for ((mime, tag, full) <- containers; trial <- 0 until 12) {
       val mutated = full.clone()
@@ -126,6 +130,87 @@ class FuzzRoutingSpec extends AnyFunSuite {
     }
   }
 
+  /** Failure rows are user-visible lineage: their exact text is pinned
+    * (recorded from the converters before the format table formed them).
+    */
+  test("failure strings are pinned for every byte kind, an unknown and a text kind") {
+    import graft.extract._
+    val all = containers ++ Seq(
+      ("application/vnd.openxmlformats-officedocument.presentationml.presentation", "pptx",
+        OfficeExtract.buildPptx("T", Seq(OfficeExtract.Slide("S", Seq("line"))))),
+      ("application/vnd.oasis.opendocument.text", "odt",
+        OdtExtract.buildOdt("T", Seq(DocxExtract.Para("Body text")))))
+    assert(all.map(_._2).distinct.size == 12)
+    // a well-formed compound file without any format's streams: the CFB
+    // kinds fail inside their own parse, past the container reader
+    val bareCfb = CfbExtract.build(Seq("x" -> "x".getBytes("UTF-8")))
+    val got: Seq[(String, String)] = all.flatMap { case (mime, tag, full) =>
+      Seq("junk" -> "junk".getBytes("UTF-8"), "empty" -> Array.emptyByteArray,
+        "half" -> full.take(full.length / 2), "cfb" -> bareCfb).map { case (input, bytes) =>
+        s"$tag/$input" ->
+          Pipeline.extractOne(Ingest.toRawDoc("f.bin", bytes, mime)).failure
+      }
+    } ++ Seq(
+      "unknown" -> Pipeline.extractOne(
+        Ingest.toRawDoc("f.bin", "x".getBytes("UTF-8"), "application/x-unknown")).failure,
+      "csljson/object" -> Pipeline.extractOne(
+        Ingest.toRawDoc("f.json", "{}".getBytes("UTF-8"), "application/csl+json")).failure)
+    val expected: Map[String, String] = Map(
+      "pdf/junk" -> "pdf_parse_error: IllegalStateException: no startxref",
+      "pdf/empty" -> "pdf_parse_error: IllegalStateException: no startxref",
+      "pdf/half" -> "pdf_parse_error: IllegalStateException: no startxref",
+      "pdf/cfb" -> "pdf_parse_error: IllegalStateException: no startxref",
+      "docx/junk" -> "docx_parse_error: IllegalStateException: no word/document.xml",
+      "docx/empty" -> "docx_parse_error: IllegalStateException: no word/document.xml",
+      "docx/half" -> "docx_parse_error: EOFException: Unexpected end of ZLIB input stream",
+      "docx/cfb" -> "docx_parse_error: IllegalStateException: no word/document.xml",
+      "xlsx/junk" -> "xlsx_parse_error: IllegalStateException: no xl/workbook.xml",
+      "xlsx/empty" -> "xlsx_parse_error: IllegalStateException: no xl/workbook.xml",
+      "xlsx/half" -> "xlsx_parse_error: EOFException: Unexpected end of ZLIB input stream",
+      "xlsx/cfb" -> "xlsx_parse_error: IllegalStateException: no xl/workbook.xml",
+      "epub/junk" -> "epub_parse_error: IllegalStateException: no META-INF/container.xml",
+      "epub/empty" -> "epub_parse_error: IllegalStateException: no META-INF/container.xml",
+      "epub/half" -> "epub_parse_error: EOFException: Unexpected end of ZLIB input stream",
+      "epub/cfb" -> "epub_parse_error: IllegalStateException: no META-INF/container.xml",
+      "ods/junk" -> "ods_parse_error: IllegalStateException: no content.xml",
+      "ods/empty" -> "ods_parse_error: IllegalStateException: no content.xml",
+      "ods/half" -> "",
+      "ods/cfb" -> "ods_parse_error: IllegalStateException: no content.xml",
+      "doc/junk" -> "cfb_parse_error: IllegalArgumentException: requirement failed: truncated header",
+      "doc/empty" -> "cfb_parse_error: IllegalArgumentException: requirement failed: truncated header",
+      "doc/half" -> "cfb_parse_error: IndexOutOfBoundsException: Range [2048, 2048 + -512) out of bounds for length 1536",
+      "doc/cfb" -> "doc_parse_error: IllegalStateException: no WordDocument stream",
+      "ppt/junk" -> "cfb_parse_error: IllegalArgumentException: requirement failed: truncated header",
+      "ppt/empty" -> "cfb_parse_error: IllegalArgumentException: requirement failed: truncated header",
+      "ppt/half" -> "cfb_parse_error: IndexOutOfBoundsException: Range [2048, 2048 + -768) out of bounds for length 1280",
+      "ppt/cfb" -> "ppt_parse_error: IllegalStateException: no PowerPoint Document stream",
+      "xls/junk" -> "cfb_parse_error: IllegalArgumentException: requirement failed: truncated header",
+      "xls/empty" -> "cfb_parse_error: IllegalArgumentException: requirement failed: truncated header",
+      "xls/half" -> "cfb_parse_error: IndexOutOfBoundsException: Range [2048, 2048 + -768) out of bounds for length 1280",
+      "xls/cfb" -> "xls_parse_error: IllegalStateException: no Workbook stream",
+      "xlsb/junk" -> "xlsb_parse_error: IllegalStateException: no xl/workbook.bin part",
+      "xlsb/empty" -> "xlsb_parse_error: IllegalStateException: no xl/workbook.bin part",
+      "xlsb/half" -> "",
+      "xlsb/cfb" -> "xlsb_parse_error: IllegalStateException: no xl/workbook.bin part",
+      "rtf/junk" -> "rtf_parse_error: not an RTF document (missing {\\rtf header)",
+      "rtf/empty" -> "rtf_parse_error: not an RTF document (missing {\\rtf header)",
+      "rtf/half" -> "",
+      "rtf/cfb" -> "rtf_parse_error: not an RTF document (missing {\\rtf header)",
+      "pptx/junk" -> "pptx_parse_error: IllegalStateException: no ppt/slides/slideN.xml",
+      "pptx/empty" -> "pptx_parse_error: IllegalStateException: no ppt/slides/slideN.xml",
+      "pptx/half" -> "pptx_parse_error: EOFException: Unexpected end of ZLIB input stream",
+      "pptx/cfb" -> "pptx_parse_error: IllegalStateException: no ppt/slides/slideN.xml",
+      "odt/junk" -> "odt_parse_error: IllegalStateException: no content.xml",
+      "odt/empty" -> "odt_parse_error: IllegalStateException: no content.xml",
+      "odt/half" -> "",
+      "odt/cfb" -> "odt_parse_error: IllegalStateException: no content.xml",
+      "unknown" -> "IllegalArgumentException: unknown dialect: unsupported:application/x-unknown",
+      "csljson/object" -> "IllegalArgumentException: csl-json: not a non-empty array")
+    val wrong = got.filter { case (id, f) => !expected.get(id).contains(f) }
+    assert(wrong.isEmpty, wrong.map { case (id, f) => s"\n  \"$id\" -> \"$f\"" }.mkString)
+    assert(got.size == expected.size)
+  }
+
   test("pathological nesting and unterminated constructs stay bounded") {
     val cases = Seq(
       ("application/docbook+xml",
@@ -139,13 +224,19 @@ class FuzzRoutingSpec extends AnyFunSuite {
       ("text/troff", ".nf\n" + "x\n" * 5000),          // unterminated .nf
       ("application/x-latex", "\\begin{itemize}\n" * 2000 + "\\item x\n"),
       ("text/x-dokuwiki", "  * x\n" * 5000),
-      ("application/x-bibtex", "@a{k, t={" + "{" * 5000 + "}"))
+      ("application/x-bibtex", "@a{k, t={" + "{" * 5000 + "}"),
+      // ASCII-only, so the UTF-8 round-trip keeps the bytes
+      ("application/pdf", new String(HostilePdfs.nestedArrays(5000), "ISO-8859-1")))
     for ((mime, text) <- cases) {
       val t0 = System.nanoTime()
       runOne(mime, text.getBytes("UTF-8"))
       val ms = (System.nanoTime() - t0) / 1e6
       assert(ms < 30000, s"$mime pathological case took ${ms}ms")
     }
+    val nested = Pipeline.extractOne(
+      Ingest.toRawDoc("nested.pdf", HostilePdfs.nestedArrays(5000)))
+    assert(nested.failure.startsWith(
+      "pdf_parse_error: IllegalStateException: objects nested deeper than 256"), nested.failure)
     // 1 KiB compound file whose DIFAT sector 0 chains to itself: with the
     // header's numFat = numDifat = 2^31 - 1 the walk used to grow its FAT
     // list until the heap died; with numFat = 1 it spun 2^31 hops
@@ -162,5 +253,21 @@ class FuzzRoutingSpec extends AnyFunSuite {
       assert(out.failure.startsWith("cfb_parse_error"), s"numFat $numFat: ${out.failure}")
       assert(ms < 30000, s"DIFAT cycle (numFat $numFat) took ${ms}ms")
     }
+  }
+
+  test("one hostile PDF in a batch is one failure row, not an aborted job") {
+    val spark = Pipeline.session("local[4]", 4, "graft-test")
+    import spark.implicits._
+    val nested = HostilePdfs.nestedArrays(5000)
+    val rows = Pipeline.extract(Seq(
+      Ingest.toRawDoc("ok.md", "# Fine\n\nbody".getBytes("UTF-8")),
+      Ingest.toRawDoc("nested.pdf", nested)).toDS()).collect()
+    assert(rows.length == 2)
+    assert(rows.count(_.failure.nonEmpty) == 1)
+    assert(rows.find(_.doc_id == "nested.pdf").exists(_.failure.startsWith("pdf_parse_error")))
+    // q_pdf_info's kernel over the same bytes
+    val info = graft.ops.Multimodal.extractPdfInfo(Seq(graft.ops.Multimodal.MediaRow(
+      "d", "nested.pdf", "application/pdf", nested)).toDS()).collect()
+    assert(info.map(_.decode_error.takeWhile(_ != ':')).toSeq == Seq("pdf_parse_error"))
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
-import graft.extract.{CfbExtract, DocExtract, OdsExtract, PptExtract, RstExtract}
+import graft.extract.{CfbExtract, DocExtract, OdsExtract, OfficeExtract, PptExtract, RstExtract}
+import graft.extract.DocxExtract.{PageBreak, Para}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-5 formats: CFB container, legacy .doc/.ppt, ODS, and rST —
@@ -40,8 +41,7 @@ class LegacyFormatsSpec extends AnyFunSuite {
     val bytes = DocExtract.buildDoc("Doc Title", paras, pageBreakBefore = Seq(2))
     val doc = DocExtract.extract(bytes).fold(e => fail(e), identity)
     assert(doc.title == "Doc Title")
-    assert(doc.paragraphs == paras)
-    assert(doc.pageBreaks == Seq(2))
+    assert(doc.blocks == paras.take(2).map(Para) ++ Seq(PageBreak) ++ paras.drop(2).map(Para))
     assert(doc.pageCount == 2)
   }
 
@@ -86,7 +86,7 @@ class LegacyFormatsSpec extends AnyFunSuite {
     val para = "before \u0013HYPERLINK \"http://x\" \\h\u0014click here\u0015 after"
     val bytes = DocExtract.buildDoc("F", Seq(para, "plain"), Nil)
     val doc = DocExtract.extract(bytes).fold(e => fail(e), identity)
-    assert(doc.paragraphs == Seq("before click here after", "plain"))
+    assert(doc.blocks == Seq(Para("before click here after"), Para("plain")))
   }
 
   test(".ppt through the REAL ingestion route (explicit MIME, like the reference's convert call)") {
@@ -146,14 +146,13 @@ class LegacyFormatsSpec extends AnyFunSuite {
         |</office:spreadsheet></office:body></office:document-content>""".stripMargin
     val bytes = zipOf("mimetype" -> "application/vnd.oasis.opendocument.spreadsheet",
       "content.xml" -> content)
-    val doc = OdsExtract.extract(bytes).fold(e => fail(e), identity)
+    val doc = OdsExtract.extract(bytes)
     assert(doc.sheets.map(_.name) == Seq("S", "Sheet2"))
-    assert(doc.sheets.head.rows == Seq(
-      Seq("merged", "", "7", "7", "tail"),
-      Seq("merged", "", "7", "7", "tail"),
-      Seq("a")))
+    assert(doc.sheets.head.tableMd ==
+      "|merged||7|7|tail|\n|---|---|---|---|---|\n|merged||7|7|tail|\n|a|||||")
     // an empty trailing sheet must not fail the document (tableMd on Nil)
-    val spans = OdsExtract.toSpans(doc)
+    assert(doc.sheets(1).tableMd == "")
+    val spans = OfficeExtract.xlsxSpans(doc)
     assert(spans.map(_.text).contains("## Sheet2"))
   }
 

@@ -15,7 +15,7 @@ class OfficeSpec extends AnyFunSuite {
       Slide("", Seq("untitled slide text")),
       Slide("Third", Nil))
     val bytes = OfficeExtract.buildPptx("My Deck", slides)
-    val doc = OfficeExtract.extractPptx(bytes).fold(e => fail(e), identity)
+    val doc = OfficeExtract.extractPptx(bytes)
     assert(doc.title == "My Deck")
     assert(doc.slides == slides)
   }
@@ -35,7 +35,6 @@ class OfficeSpec extends AnyFunSuite {
   test("pptx slide ordering is numeric, not lexicographic (slide10 after slide9)") {
     val slides = (1 to 11).map(i => Slide(s"S$i", Nil))
     val doc = OfficeExtract.extractPptx(OfficeExtract.buildPptx("t", slides))
-      .fold(e => fail(e), identity)
     assert(doc.slides.map(_.title) == (1 to 11).map(i => s"S$i"))
   }
 
@@ -47,7 +46,7 @@ class OfficeSpec extends AnyFunSuite {
       Slide("Two", Seq("text b"), Seq("img-1.png")))
     val bytes = OfficeExtract.buildPptx("Deck", slides,
       Seq(("jpeg", jpgA), ("png", pngB)))
-    val doc = OfficeExtract.extractPptx(bytes).fold(e => fail(e), identity)
+    val doc = OfficeExtract.extractPptx(bytes)
     assert(doc.slides.map(_.imageRefs) == Seq(Seq("img-0.jpeg"), Seq("img-1.png")))
     assert(doc.media.map(m => (m.media_ref, m.mime_type)) ==
       Seq(("img-0.jpeg", "image/jpeg"), ("img-1.png", "image/png")))
@@ -65,7 +64,7 @@ class OfficeSpec extends AnyFunSuite {
       ("Alpha", Seq(Seq("H1", "H2"), Seq("text val", "42"), Seq("x", "y"))),
       ("Beta", Seq(Seq("only"))))
     val bytes = OfficeExtract.buildXlsx("Book", sheets)
-    val doc = OfficeExtract.extractXlsx(bytes).fold(e => fail(e), identity)
+    val doc = OfficeExtract.extractXlsx(bytes)
     assert(doc.title == "Book")
     assert(doc.sheets.map(_.name) == Seq("Alpha", "Beta"))
     assert(doc.sheets.head.tableMd ==
@@ -88,7 +87,7 @@ class OfficeSpec extends AnyFunSuite {
     put("xl/worksheets/sheet1.xml",
       """<worksheet><sheetData><row r="1"><c r="A1" t="s"><v>0</v></c><c r="C1" t="s"><v>1</v></c></row></sheetData></worksheet>""")
     z.close()
-    val doc = OfficeExtract.extractXlsx(out.toByteArray).fold(e => fail(e), identity)
+    val doc = OfficeExtract.extractXlsx(out.toByteArray)
     assert(doc.sheets.head.tableMd == "|hello||world|\n|---|---|---|")
   }
 
@@ -111,7 +110,7 @@ class OfficeSpec extends AnyFunSuite {
     put("xl/worksheets/sheet2.xml",
       """<worksheet><sheetData><row r="1"><c r="A1" t="inlineStr"><is><t>summary-data</t></is></c></row></sheetData></worksheet>""")
     z.close()
-    val doc = OfficeExtract.extractXlsx(out.toByteArray).fold(e => fail(e), identity)
+    val doc = OfficeExtract.extractXlsx(out.toByteArray)
     assert(doc.sheets.map(s => (s.name, s.tableMd)) == Seq(
       ("Summary", "|summary-data|\n|---|"),
       ("Detail", "|detail-data|\n|---|")))

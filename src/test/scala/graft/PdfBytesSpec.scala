@@ -513,4 +513,56 @@ class PdfBytesSpec extends AnyFunSuite {
     assert(info.isEncrypted && info.pageCount == 0 && info.pageDims.isEmpty)
     assert(info.fileSize == hacked.length.toLong)
   }
+
+  test("5,000 nested arrays are a pdf_parse_error Left at every PDF entry point") {
+    import graft.extract.{PdfRewrite, PdfText}
+    val nested = HostilePdfs.nestedArrays(5000)
+    val tooDeep = "IllegalStateException: objects nested deeper than 256 at "
+    for (r <- Seq(PdfBytes.pdfInfo(nested), Graft.pdfInfo(nested),
+        PdfRewrite.extractPages(nested, Seq(0)), PdfRewrite.decryptPdf(nested, "")))
+      assert(r.left.exists(_.startsWith("pdf_parse_error: " + tooDeep)), r)
+    // the text interpreter keeps its own prefix (it feeds pdf_text_error)
+    assert(PdfText.extract(nested).left.exists(_.startsWith("pdf_text_error: " + tooDeep)))
+    // nesting under the cap still parses
+    assert(PdfBytes.pdfInfo(HostilePdfs.nestedArrays(200)).map(_.pageCount) == Right(1))
+  }
+
+  test("a 2,000-deep /Pages chain yields its one page; a /Kids cycle is a Left") {
+    import graft.extract.{PdfRewrite, PdfText}
+    val deep = HostilePdfs.deepPageTree(2000)
+    assert(PdfBytes.pdfInfo(deep).map(i => (i.pageCount, i.pageDims)) ==
+      Right((1, Seq(PdfBytes.PageDim(612.0, 792.0)))))
+    assert(PdfText.pageTexts(deep) == Right(Seq("")))
+    val sub = PdfRewrite.extractPages(deep, Seq(0)).fold(e => fail(e), identity)
+    assert(PdfBytes.pdfInfo(sub).map(i => (i.pageCount, i.pageDims)) ==
+      Right((1, Seq(PdfBytes.PageDim(612.0, 792.0)))))
+    val pdf = new graft.extract.Bin.PdfWriter
+    pdf.obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
+    pdf.obj(2, "<< /Type /Pages /Kids [ 3 0 R ] /Count 1 >>")
+    pdf.obj(3, "<< /Type /Pages /Kids [ 2 0 R ] /Count 1 >>")
+    assert(PdfBytes.pdfInfo(pdf.finish("")) ==
+      Left("pdf_parse_error: IllegalStateException: page tree cycle"))
+  }
+}
+
+/** PDFs whose structure is deeper than any real file's. */
+object HostilePdfs {
+  /** A one-page PDF whose trailer carries `depth` nested arrays. */
+  def nestedArrays(depth: Int): Array[Byte] = {
+    val pdf = new graft.extract.Bin.PdfWriter
+    pdf.obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
+    pdf.obj(2, "<< /Type /Pages /Kids [ 3 0 R ] /Count 1 >>")
+    pdf.obj(3, "<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 612 792 ] >>")
+    pdf.finish(" /Nest " + "[" * depth + "]" * depth)
+  }
+
+  /** One page under a chain of `depth` single-kid /Pages nodes. */
+  def deepPageTree(depth: Int): Array[Byte] = {
+    val pdf = new graft.extract.Bin.PdfWriter
+    pdf.obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
+    (2 until 2 + depth).foreach(n =>
+      pdf.obj(n, s"<< /Type /Pages /Kids [ ${n + 1} 0 R ] /Count 1 >>"))
+    pdf.obj(2 + depth, s"<< /Type /Page /Parent ${1 + depth} 0 R /MediaBox [ 0 0 612 792 ] >>")
+    pdf.finish("")
+  }
 }
