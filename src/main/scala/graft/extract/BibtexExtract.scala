@@ -70,7 +70,7 @@ object BibtexExtract {
       while (j < src.length && src.charAt(j).isWhitespace) j += 1
       if (j >= src.length || src.charAt(j) != '{') { i = at + 1 }
       else {
-        val close = matchBrace(src, j)
+        val close = MdShared.matchBrace(src, j)
         val body = if (close > j) src.substring(j + 1, close) else src.substring(j + 1)
         if (kind != "comment" && kind != "preamble" && kind != "string") {
           val comma = body.indexOf(',')
@@ -103,7 +103,7 @@ object BibtexExtract {
         while (k < body.length && body.charAt(k).isWhitespace) k += 1
         val (value, next) =
           if (k < body.length && body.charAt(k) == '{') {
-            val close = matchBrace(body, k)
+            val close = MdShared.matchBrace(body, k)
             if (close > k) (body.substring(k + 1, close), close + 1)
             else (body.substring(k + 1), body.length)
           } else if (k < body.length && body.charAt(k) == '"') {
@@ -129,18 +129,5 @@ object BibtexExtract {
       }
     }
     out.toMap
-  }
-
-  private def matchBrace(s: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) i += 1
-      else if (c == '{') depth += 1
-      else if (c == '}') { depth -= 1; if (depth == 0) return i }
-      i += 1
-    }
-    -1
   }
 }

@@ -13,6 +13,22 @@ import scala.collection.mutable.ArrayBuffer
   */
 private[graft] object Bin {
 
+  // ------------------------------------------------------------ budgets
+  /** Inflation caps for untrusted containers: a tiny deflate stream can
+    * expand to GiBs and kill the executor JVM — a task death, not a
+    * failure row. 256 MiB per zip entry or PDF stream and 1 GiB per
+    * container or PDF document exceed any real part; past either the
+    * reader throws `IllegalStateException`, which becomes a failure row.
+    */
+  val MaxEntryBytes: Long = 256L << 20
+  val MaxTotalBytes: Long = 1L << 30
+
+  /** Deepest nesting a recursive reader follows (PDF `[` / `<<` objects,
+    * PPT container records). Real files stay in single digits; the cap
+    * keeps a hostile file from recursing the reader off the stack.
+    */
+  val MaxNesting = 256
+
   // ------------------------------------------------------------ readers
   def u8(d: Array[Byte], p: Int): Int = d(p) & 0xff
   def u16le(d: Array[Byte], p: Int): Int = (d(p) & 0xff) | ((d(p + 1) & 0xff) << 8)

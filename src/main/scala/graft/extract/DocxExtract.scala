@@ -155,16 +155,9 @@ object DocxExtract {
   }
 
   // ------------------------------------------------------------ zip
-  /** Per-entry inflation cap: untrusted containers can zip-bomb (tiny
-    * deflate stream → GiBs), which would OOM the executor JVM — a task
-    * death, not the documented failure-ROW contract. 256 MiB/entry and
-    * 1 GiB/container comfortably exceed any real document part while
-    * bounding the worst case; past either, the IllegalStateException is
-    * caught by the extractors' error channel and becomes a failure row.
+  /** Entries inflate under [[Bin.MaxEntryBytes]] each and
+    * [[Bin.MaxTotalBytes]] in all.
     */
-  private val MaxEntryBytes: Long = 256L << 20
-  private val MaxTotalBytes: Long = 1L << 30
-
   private[extract] def readZip(bytes: Array[Byte]): Map[String, Array[Byte]] = {
     val zin = new java.util.zip.ZipInputStream(new ByteArrayInputStream(bytes))
     val out = mutable.Map[String, Array[Byte]]()
@@ -179,7 +172,7 @@ object DocxExtract {
           while (n >= 0) {
             buf.write(tmp, 0, n)
             total += n
-            if (buf.size() > MaxEntryBytes || total > MaxTotalBytes)
+            if (buf.size() > Bin.MaxEntryBytes || total > Bin.MaxTotalBytes)
               throw new IllegalStateException(
                 s"zip entry ${e.getName} exceeds inflation cap (zip bomb?)")
             n = zin.read(tmp)

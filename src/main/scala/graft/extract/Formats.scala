@@ -218,9 +218,10 @@ private[graft] object Formats {
   private[graft] def parseError(fmt: String, e: Throwable): String =
     s"${fmt}_parse_error: ${describe(e)}"
 
-  /** PDF bytes: [[PdfBytes]] container parse for structure (page count,
-    * Info title, dims, encryption flag) plus the [[PdfText]] content-stream
-    * interpreter for the page TEXT — each page emits its page_break marker
+  /** PDF bytes, opened once: [[PdfBytes.info]] walks the page tree for
+    * structure (page count, Info title, dims, encryption flag) and the
+    * [[PdfText]] content-stream interpreter reads the page TEXT from the same
+    * document and page list — each page emits its page_break marker
     * followed by one text span per assembled paragraph (reading-order lines
     * merged on leading/size steps). Byte-extractable image XObjects
     * (JPEG/JPX passthrough, Flate→PNG, CCITT G4 scans) are spliced into the
@@ -233,53 +234,55 @@ private[graft] object Formats {
     * structure-parseable file whose content streams fail to interpret
     * degrades to the page_break skeleton with the error in metadata.
     */
-  private def pdf(bytes: Array[Byte]): Either[String, Converted] =
-    PdfBytes.pdfInfo(bytes).map { info =>
-      val (pages: Seq[PdfText.PageContent], textError: String) =
-        if (info.isEncrypted || info.pageCount == 0) (Nil, "")
-        else PdfText.extract(bytes) match {
-          case Right(ps) => (ps, "")
-          case Left(err) => (Nil, err)
-        }
-      // img-K numbering follows the final position-derived order, not raw
-      // encounter order: the reference's converters interleave images at
-      // layout position (test_output.ambr:49)
-      val media = scala.collection.mutable.ArrayBuffer[MediaItem]()
-      val out = scala.collection.mutable.ArrayBuffer[Span]()
-      val allLines = pages.flatMap(_.lines) // document-wide body-size basis
-      (1 to info.pageCount).foreach { i =>
-        out += Markdown.pageBreakSpan(i, out.length)
-        pages.lift(i - 1).foreach { p =>
-          val paras: Seq[(Double, Either[String, PdfText.ImageRef])] =
-            PdfText.markdownBlocksWithY(p.lines, allLines)
-              .map { case (t, y) => (t.trim, y) }
-              .collect { case (t, y) if t.nonEmpty => (y, Left(t)) }
-          val imgs: Seq[(Double, Either[String, PdfText.ImageRef])] =
-            p.images.filter(_.data.nonEmpty).map(im => (im.y, Right(im)))
-          // stable sort: at equal y, text (listed first) precedes images
-          (paras ++ imgs).sortBy(-_._1).foreach {
-            case (_, Left(text)) =>
-              out += Span(SpanKind.Text, text, "", out.length)
-            case (_, Right(im)) =>
-              val ext = im.mime match {
-                case "image/jpeg" => "jpeg"
-                case "image/jp2" => "jp2"
-                case _ => "png"
-              }
-              val filename = s"img-${media.length}.$ext"
-              media += MediaItem(filename, im.mime, im.data)
-              out += Span(SpanKind.Image,
-                filename.substring(0, filename.lastIndexOf('.')), filename, out.length)
-          }
+  private def pdf(bytes: Array[Byte]): Either[String, Converted] = {
+    val opened = PdfBytes.open(bytes, None)
+    val (info, pageDicts) = PdfBytes.info(bytes, opened)
+    val (pages: Seq[PdfText.PageContent], textError: String) = opened match {
+      case Right(doc) => PdfText.contents(doc, pageDicts) match {
+        case Right(ps) => (ps, "")
+        case Left(err) => (Nil, err)
+      }
+      case Left(_) => (Nil, "")
+    }
+    // img-K numbering follows the final position-derived order, not raw
+    // encounter order: the reference's converters interleave images at
+    // layout position (test_output.ambr:49)
+    val media = scala.collection.mutable.ArrayBuffer[MediaItem]()
+    val out = scala.collection.mutable.ArrayBuffer[Span]()
+    val allLines = pages.flatMap(_.lines) // document-wide body-size basis
+    (1 to info.pageCount).foreach { i =>
+      out += Markdown.pageBreakSpan(i, out.length)
+      pages.lift(i - 1).foreach { p =>
+        val paras: Seq[(Double, Either[String, PdfText.ImageRef])] =
+          PdfText.markdownBlocksWithY(p.lines, allLines)
+            .map { case (t, y) => (t.trim, y) }
+            .collect { case (t, y) if t.nonEmpty => (y, Left(t)) }
+        val imgs: Seq[(Double, Either[String, PdfText.ImageRef])] =
+          p.images.filter(_.data.nonEmpty).map(im => (im.y, Right(im)))
+        // stable sort: at equal y, text (listed first) precedes images
+        (paras ++ imgs).sortBy(-_._1).foreach {
+          case (_, Left(text)) =>
+            out += Span(SpanKind.Text, text, "", out.length)
+          case (_, Right(im)) =>
+            val ext = im.mime match {
+              case "image/jpeg" => "jpeg"
+              case "image/jp2" => "jp2"
+              case _ => "png"
+            }
+            val filename = s"img-${media.length}.$ext"
+            media += MediaItem(filename, im.mime, im.data)
+            out += Span(SpanKind.Image,
+              filename.substring(0, filename.lastIndexOf('.')), filename, out.length)
         }
       }
-      val metadata = Map(
-        "pdf_file_size" -> info.fileSize.toString,
-        "pdf_encrypted" -> info.isEncrypted.toString) ++
-        info.pageDims.headOption.map(d => Map(
-          "pdf_width0" -> d.width.toString,
-          "pdf_height0" -> d.height.toString)).getOrElse(Map.empty) ++
-        (if (textError.nonEmpty) Map("pdf_text_error" -> textError) else Map.empty)
-      Converted(out.toSeq, info.pageCount, info.title, media.toSeq, metadata)
     }
+    val metadata = Map(
+      "pdf_file_size" -> info.fileSize.toString,
+      "pdf_encrypted" -> info.isEncrypted.toString) ++
+      info.pageDims.headOption.map(d => Map(
+        "pdf_width0" -> d.width.toString,
+        "pdf_height0" -> d.height.toString)).getOrElse(Map.empty) ++
+      (if (textError.nonEmpty) Map("pdf_text_error" -> textError) else Map.empty)
+    Right(Converted(out.toSeq, info.pageCount, info.title, media.toSeq, metadata))
+  }
 }

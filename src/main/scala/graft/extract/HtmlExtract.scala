@@ -77,7 +77,11 @@ object HtmlExtract {
   private def segment(html: String): (IndexedSeq[Block], String) = {
     val blocks = ArrayBuffer.empty[Block]
     var cur = new Block
+    // open tags; closing one below the top leaves a null there (trimmed
+    // once it surfaces), and `openAt` holds each name's open positions,
+    // so neither a close nor a context check scans the stack
     val tagStack = ArrayBuffer.empty[String]
+    val openAt = scala.collection.mutable.HashMap.empty[String, List[Int]].withDefaultValue(Nil)
     var linkDepth = 0
     var boilerDepth = 0
     var skipDepth = 0
@@ -113,9 +117,9 @@ object HtmlExtract {
       cur.inBoiler = boilerDepth > 0
       if (tagStack.lastOption.exists(t => t.length == 2 && t(0) == 'h' && t(1).isDigit))
         cur.headingLevel = tagStack.last(1) - '0'
-      if (tagStack.contains("li")) cur.isListItem = true
-      if (tagStack.contains("blockquote")) cur.isBlockquote = true
-      if (tagStack.contains("pre")) cur.isPre = true
+      if (openAt("li").nonEmpty) cur.isListItem = true
+      if (openAt("blockquote").nonEmpty) cur.isBlockquote = true
+      if (openAt("pre").nonEmpty) cur.isPre = true
     }
 
     def emitTable(): Unit = {
@@ -213,13 +217,21 @@ object HtmlExtract {
                       if (t == "pre") cur.isPre = true
                     case _ => ()
                   }
-                  if (!inner.endsWith("/") && !VoidTags.contains(name)) tagStack += name
+                  if (!inner.endsWith("/") && !VoidTags.contains(name)) {
+                    openAt(name) = tagStack.length :: openAt(name)
+                    tagStack += name
+                  }
                 } else {
                   // pop BEFORE flushing: flush() derives the NEW block's
                   // context (heading/list/pre/blockquote) from the stack, and
                   // text after </pre> must not inherit the closed tag's flag
-                  val idx = tagStack.lastIndexOf(name)
-                  if (idx >= 0) tagStack.remove(idx)
+                  openAt(name) match {
+                    case idx :: below =>
+                      openAt(name) = below
+                      tagStack(idx) = null
+                      while (tagStack.nonEmpty && tagStack.last == null) tagStack.remove(tagStack.length - 1)
+                    case Nil => ()
+                  }
                   name match {
                     case "a" => linkDepth = math.max(0, linkDepth - 1)
                     case "table" if tableDepth > 0 =>

@@ -81,7 +81,7 @@ object IpynbExtract {
       case "code" =>
         val src = strip(text(
           if (cell.has("source")) cell.get("source") else cell.get("input")))
-        val code = if (src.isEmpty) Nil else Seq(fence(src, lang))
+        val code = if (src.isEmpty) Nil else Seq(MdShared.fence(src, lang))
         code ++ arr(cell.get("outputs")).flatMap(outputBlock)
       case _ => Nil
     }
@@ -104,14 +104,7 @@ object IpynbExtract {
         strip((s"$ename: $evalue" +: tb).mkString("\n"))
       case _ => ""
     }
-    if (body.isEmpty) None else Some(fence(body, ""))
-  }
-
-  /** Fence a block, widening past any backtick run inside the body. */
-  private def fence(body: String, lang: String): String = {
-    val longest = "`+".r.findAllIn(body).map(_.length).maxOption.getOrElse(0)
-    val ticks = "`" * math.max(3, longest + 1)
-    s"$ticks$lang\n$body\n$ticks"
+    if (body.isEmpty) None else Some(MdShared.fence(body, ""))
   }
 
   private def strip(s: String): String =

@@ -91,26 +91,12 @@ object LatexExtract {
       // reject longer command names sharing the prefix (\titlehead etc.)
       val after = i + cmd.length
       if (after < s.length && s.charAt(after) == '{') {
-        val close = matchBrace(s, after)
+        val close = MdShared.matchBrace(s, after)
         if (close > after) return Some(s.substring(after + 1, close))
       }
       i = s.indexOf(cmd + "{", i + 1)
     }
     None
-  }
-
-  /** Index of the `}` matching the `{` at `open`, or -1. */
-  private def matchBrace(s: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) i += 1
-      else if (c == '{') depth += 1
-      else if (c == '}') { depth -= 1; if (depth == 0) return i }
-      i += 1
-    }
-    -1
   }
 
   /** End index of `\end{env}` matching the `\begin{env}` whose content
@@ -165,7 +151,7 @@ object LatexExtract {
         if (hmM.lookingAt()) {
           flush()
           val open = hmM.end - 1
-          val close = matchBrace(s, open)
+          val close = MdShared.matchBrace(s, open)
           val text = if (close > open) s.substring(open + 1, close) else ""
           out += ("#" * lv(hmM.group(1))) + " " + inline(text, lv)
           i = if (close > open) close + 1 else open + 1
@@ -181,7 +167,7 @@ object LatexExtract {
           i += "\\maketitle".length
         } else if (s.startsWith("\\title", i) && i + 6 < s.length && s.charAt(i + 6) == '{') {
           // title captured separately; drop the in-body declaration
-          val close = matchBrace(s, i + 6)
+          val close = MdShared.matchBrace(s, i + 6)
           i = if (close > 0) close + 1 else i + 7
         } else { para.append(c); i += 1 }
       } else { para.append(c); i += 1 }
@@ -214,7 +200,7 @@ object LatexExtract {
         val afterSpec = {
           val t = content.dropWhile(_.isWhitespace)
           if (t.startsWith("{")) {
-            val close = matchBrace(t, 0)
+            val close = MdShared.matchBrace(t, 0)
             if (close > 0) t.substring(close + 1) else t
           } else t
         }
@@ -281,7 +267,7 @@ object LatexExtract {
         }
         def arg1: Option[(String, Int)] =
           if (k < s.length && s.charAt(k) == '{') {
-            val close = matchBrace(s, k)
+            val close = MdShared.matchBrace(s, k)
             if (close > k) Some((s.substring(k + 1, close), close + 1)) else None
           } else None
         cmd match {
@@ -301,7 +287,7 @@ object LatexExtract {
             case Some((u, n)) =>
               val t =
                 if (n < s.length && s.charAt(n) == '{') {
-                  val close = matchBrace(s, n)
+                  val close = MdShared.matchBrace(s, n)
                   if (close > n) Some((s.substring(n + 1, close), close + 1)) else None
                 } else None
               t match {

@@ -4,7 +4,8 @@ import scala.collection.mutable.ArrayBuffer
 
 /** Markdown-rendering helpers shared across the extractor family (the
   * from-scratch pandoc-surface converters: DocBook/JATS StAX parsers and
-  * the line-oriented troff/mdoc/DokuWiki/POD/Typst/org readers).
+  * the line-oriented troff/mdoc/DokuWiki/POD/Typst/org/notebook readers,
+  * LaTeX and BibTeX).
   */
 private[extract] object MdShared {
 
@@ -16,6 +17,22 @@ private[extract] object MdShared {
     val longest = "`+".r.findAllIn(body).map(_.length).maxOption.getOrElse(0)
     val ticks = "`" * math.max(3, longest + 1)
     s"$ticks$lang\n$body\n$ticks"
+  }
+
+  /** Index of the `}` matching the `{` at `open`, or -1; a backslash
+    * escapes the next char. LaTeX and BibTeX share this grammar.
+    */
+  def matchBrace(s: String, open: Int): Int = {
+    var depth = 0
+    var i = open
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c == '\\' && i + 1 < s.length) i += 1
+      else if (c == '{') depth += 1
+      else if (c == '}') { depth -= 1; if (depth == 0) return i }
+      i += 1
+    }
+    -1
   }
 
   /** Quoted-argument tokenizer for troff request lines: space-separated,

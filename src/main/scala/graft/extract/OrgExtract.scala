@@ -62,7 +62,7 @@ object OrgExtract {
           val stop = if (end < 0) lines.length else end
           val body = lines.slice(i + 1, stop).mkString("\n")
           val tag = if (kind.equalsIgnoreCase("SRC") && lang != null) lang else ""
-          out += fence(body, tag)
+          out += MdShared.fence(body, tag)
           i = stop + 1
         case BeginBlock(kind, _) if kind.equalsIgnoreCase("QUOTE") =>
           val end = lines.indexWhere({
@@ -173,7 +173,4 @@ object OrgExtract {
     Verbatim.replaceAllIn(coded, m =>
       java.util.regex.Matcher.quoteReplacement("`" + m.group(1) + "`"))
   }
-
-  private def fence(body: String, lang: String): String =
-    MdShared.fence(body, lang)
 }

@@ -14,6 +14,13 @@ import scala.collection.mutable
   * pass-through), page-tree walk with MediaBox inheritance,
   * Info-dictionary text strings (UTF-16BE BOM else PDFDocEncoding≈Latin-1).
   *
+  * [[open]] is the only way in: it parses the xref chain and fixes the file
+  * key once. The opened [[Doc]] owns everything after that — one method
+  * decrypts strings ([[Doc.plainString]]), one decrypts stream payloads
+  * ([[Doc.plainStream]]), one reads a stream's filter chain
+  * ([[Doc.filterChain]]), and its filters stop at [[Bin.MaxEntryBytes]] per
+  * stream and [[Bin.MaxTotalBytes]] per document.
+  *
   * No raster/content decoding happens here — this is O(file) byte scanning
   * plus O(objects touched) parsing, a bounded per-row kernel safe to run in
   * `mapPartitions` over a binary column at scale. Golden-tested against the
@@ -51,12 +58,6 @@ object PdfBytes {
   private def isDelim(b: Byte) = Delim.contains(b)
 
   // ------------------------------------------------------------ lexer/parser
-  /** Deepest `[` / `<<` nesting a direct object may have. Real files stay
-    * in single digits; the cap keeps a hostile file from recursing the
-    * parser off the stack.
-    */
-  private val MaxNesting = 256
-
   /** Recursive-descent parser over the file buffer; `pos` is mutable.
     * Shared with [[PdfText]]'s content-stream tokenizer. A parse that
     * throws abandons the parser (its nesting count is not restored).
@@ -66,8 +67,8 @@ object PdfBytes {
 
     private def enter(): Unit = {
       nesting += 1
-      if (nesting > MaxNesting)
-        throw new IllegalStateException(s"objects nested deeper than $MaxNesting at $pos")
+      if (nesting > Bin.MaxNesting)
+        throw new IllegalStateException(s"objects nested deeper than ${Bin.MaxNesting} at $pos")
     }
 
     def skipWs(): Unit = {
@@ -214,11 +215,22 @@ object PdfBytes {
   }
 
   // ------------------------------------------------------------ filters
+  /** A filter's output buffer. Past [[Bin.MaxEntryBytes]] it throws, so a
+    * decompression bomb is a failure row rather than an exhausted heap.
+    */
+  private final class Bounded(initial: Int) extends java.io.ByteArrayOutputStream(initial) {
+    private def room(n: Int): Unit =
+      if (count.toLong + n > Bin.MaxEntryBytes)
+        throw new IllegalStateException(s"stream decodes past ${Bin.MaxEntryBytes} bytes")
+    override def write(b: Int): Unit = { room(1); super.write(b) }
+    override def write(b: Array[Byte], off: Int, len: Int): Unit = { room(len); super.write(b, off, len) }
+  }
+
   private def inflate(data: Array[Byte]): Array[Byte] = {
     val inf = new java.util.zip.Inflater()
     try {
       inf.setInput(data)
-      val out = new java.io.ByteArrayOutputStream(math.max(64, data.length * 4))
+      val out = new Bounded(math.max(64, data.length * 4))
       val buf = new Array[Byte](8192)
       while (!inf.finished()) {
         val n = inf.inflate(buf)
@@ -238,7 +250,7 @@ object PdfBytes {
     * streams with this.
     */
   private[graft] def lzwDecode(data: Array[Byte], earlyChange: Int = 1): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(math.max(64, data.length * 3))
+    val out = new Bounded(math.max(64, data.length * 3))
     val dict = new Array[Array[Byte]](4096)
     var dictSize = 258
     def resetDict(): Unit = {
@@ -342,7 +354,7 @@ object PdfBytes {
     * n>128 repeats the next byte 257−n times, 128 = EOD.
     */
   private[graft] def runLengthDecode(data: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(data.length * 2)
+    val out = new Bounded(data.length * 2)
     var i = 0
     while (i < data.length) {
       val n = data(i) & 0xff
@@ -408,10 +420,26 @@ object PdfBytes {
     * failure (same error-channel contract as the media codecs).
     */
   def pdfInfo(data: Array[Byte], password: Option[String] = None): Either[String, PdfInfo] =
-    try Right(parseInfo(data, password))
+    try Right(info(data, open(data, password))._1)
     catch { case e: Exception => Left(Formats.parseError("pdf", e)) }
 
-  private[extract] final class Doc(data: Array[Byte]) {
+  /** Opens `data` under `password` (None: the empty user password is
+    * tried) — the only way into a PDF. A `Left` is [[Locked]] or
+    * [[UnsupportedHandler]]; each caller phrases that its own way. A broken
+    * file or a wrong password throws.
+    */
+  private[extract] def open(data: Array[Byte], password: Option[String]): Either[KeyResult, Doc] = {
+    val doc = new Doc(data, password)
+    doc.access match {
+      case Locked | UnsupportedHandler => Left(doc.access)
+      case _ => Right(doc)
+    }
+  }
+
+  /** An opened file: its xref, its object cache and its file key, fixed
+    * when [[open]] built it.
+    */
+  private[extract] final class Doc private[PdfBytes] (data: Array[Byte], password: Option[String]) {
     /** obj num → either (file offset, generation) (Left) or
       * (objstm num, index) (Right). [[FreeEntry]] (offset -1) is the
       * free-entry tombstone: a newer revision's deletion must beat older
@@ -422,24 +450,21 @@ object PdfBytes {
     var trailer: Map[String, PObj] = Map.empty
     private val cache = mutable.Map[Int, PObj]()
 
-    /** Set (by the entry points) after password verification: stream
-      * payloads of direct objects decrypt under their carrier's key before
-      * any filter runs; xref streams are exempt (never encrypted, and
-      * parsed before the key exists anyway).
-      */
-    private[extract] var fileCrypto: Option[(Array[Byte], Boolean)] = None
-    private val objStmCarried = mutable.Set[Int]()
     /** Objects inside object streams are NOT individually encrypted
       * (§7.5.7) — string decryption must skip them.
       */
-    private[extract] def isFromObjStm(num: Int): Boolean = objStmCarried.contains(num)
+    private val objStmCarried = mutable.Set[Int]()
+    /** Decoded object-stream payloads, by stream number. */
+    private val objStms = mutable.Map[Int, Array[Byte]]()
+    /** Bytes every filter chain has produced so far (the document budget). */
+    private var decodedBytes = 0L
 
     /** The xref generation of an in-use direct object (0 for ObjStm-carried
       * objects, whose implicit generation is 0 per §7.5.7). Per-object
       * crypto keys (Algorithm 1) hash this, so a gen>0 object must not be
       * keyed as gen 0.
       */
-    private[extract] def genOf(num: Int): Int = xref.get(num) match {
+    private def genOf(num: Int): Int = xref.get(num) match {
       case Some(Left((off, g))) if off >= 0 => g
       case _ => 0
     }
@@ -460,6 +485,83 @@ object PdfBytes {
       var off = p.word().toLong
       while (off > 0) off = readXrefSection(off.toInt)
     }
+
+    /** How the file opened under `password`. It is derived from the
+      * /Encrypt dict and the trailer /ID, which are never encrypted: while
+      * it is derived it is still null, so those reads run in the clear.
+      */
+    private[PdfBytes] val access: KeyResult = encryptionKey(this, password)
+
+    private def fileKey: Option[Opened] = access match {
+      case o: Opened => Some(o)
+      case _ => None
+    }
+
+    /** Strings and streams decrypt under a file key. */
+    def encrypted: Boolean = fileKey.nonEmpty
+
+    /** The Catalog's XMP /Metadata stream when /EncryptMetadata is false:
+      * it is stored plaintext in an otherwise encrypted file (-1: none).
+      * Streams decoded while it is found see 0, the free-list head that
+      * numbers no stream, and decrypt as usual.
+      */
+    private val plainMetadata: Int = fileKey match {
+      case Some(Opened(_, _, false)) =>
+        dict(trailer.getOrElse("Root", PNull)).get("Metadata") match {
+          case Some(PRef(n, _)) => n
+          case _ => -1
+        }
+      case _ => -1
+    }
+
+    /** String `b` of object `num`, decrypted under that object's key. */
+    private[extract] def plainString(num: Int, b: Array[Byte]): Array[Byte] =
+      if (objStmCarried.contains(num)) b else decrypt(num, b)
+
+    /** The payload of stream object `num`, decrypted but still filtered.
+      * Stored plaintext even in an encrypted file: a stream whose chain
+      * names the /Crypt Identity filter (§7.4.10), and the XMP metadata
+      * when /EncryptMetadata is false.
+      */
+    private[extract] def plainStream(num: Int, s: PStream): Array[Byte] =
+      if (!encrypted || num == plainMetadata || identityCrypt(s)) s.data
+      else decrypt(num, s.data)
+
+    private def decrypt(num: Int, b: Array[Byte]): Array[Byte] = fileKey match {
+      case Some(Opened(k, aes, _)) => PdfCrypt.decryptData(k, aes, num, genOf(num), b)
+      case None => b
+    }
+
+    /** The chain's first /Crypt filter is Identity: /Name Identity, or no
+      * /Name (Identity is the §7.4.10 default).
+      */
+    private def identityCrypt(s: PStream): Boolean =
+      filterChain(s.dict.m).getOrElse(Nil).find(_._1 == "Crypt")
+        .exists(_._2.forall(_.m.get("Name").forall(resolve(_) == PName("Identity"))))
+
+    /** A stream's /Filter chain, each filter with its resolved /DecodeParms
+      * dict: a bare dict applies to a one-filter chain, an array aligns by
+      * position (§7.3.8.2). `Left` is a /Filter that is neither a name nor
+      * an array.
+      */
+    private[extract] def filterChain(m: Map[String, PObj]): Either[PObj, Seq[(String, Option[PDict])]] =
+      (resolve(m.getOrElse("Filter", PNull)) match {
+        case PName(n) => Right(Seq(n))
+        case PArr(items) => Right(items.map(resolve(_)).collect { case PName(n) => n })
+        case PNull => Right(Nil)
+        case other => Left(other)
+      }).map { filters =>
+        val parms: Seq[Option[PDict]] =
+          resolve(m.getOrElse("DecodeParms", m.getOrElse("DP", PNull))) match {
+            case d: PDict => Seq(Some(d))
+            case PArr(items) => items.map(resolve(_)).map {
+              case d: PDict => Some(d)
+              case _ => None
+            }
+            case _ => Nil
+          }
+        filters.zipWithIndex.map { case (f, i) => (f, parms.lift(i).flatten) }
+      }
 
     private def lastIndexOf(hay: Array[Byte], needle: Array[Byte]): Int = {
       var i = hay.length - needle.length
@@ -580,42 +682,16 @@ object PdfBytes {
       PStream(dict, payload)
     }
 
-    /** Applies the /Filter chain (Flate/LZW with per-filter /DecodeParms
-      * predictors, the ASCII and RunLength transports) after the file-key
-      * decryption pass — which is SKIPPED for streams whose chain names a
-      * /Crypt Identity filter: those bytes are stored plaintext (§7.4.10),
-      * so decrypting them first would corrupt them.
+    /** Decrypts the payload (when `carrierNum` names the stream's object)
+      * and applies the /Filter chain: Flate/LZW with per-filter
+      * /DecodeParms predictors, the ASCII and RunLength transports. The
+      * output counts against the document's [[Bin.MaxTotalBytes]].
       */
     private def decode(s: PStream, carrierNum: Option[Int] = None): Array[Byte] = {
-      val filters: Seq[String] = resolve(s.dict.m.getOrElse("Filter", PNull)) match {
-        case PName(n) => Seq(n)
-        case PArr(items) => items.map(resolve(_)).collect { case PName(n) => n }
-        case PNull => Nil
-        case other => throw new IllegalStateException(s"filter $other")
-      }
-      // per-filter parms: a bare dict applies to a single-filter chain, an
-      // array aligns positionally (§7.3.8.2)
-      val parms: Seq[Option[PDict]] =
-        resolve(s.dict.m.getOrElse("DecodeParms", s.dict.m.getOrElse("DP", PNull))) match {
-          case d: PDict => Seq(Some(d))
-          case PArr(items) => items.map(resolve(_)).map {
-            case d: PDict => Some(d)
-            case _ => None
-          }
-          case _ => Nil
-        }
-      def parmAt(i: Int): Option[PDict] = parms.lift(i).flatten
-      val identityCrypt = {
-        val ci = filters.indexOf("Crypt")
-        ci >= 0 && parmAt(ci).forall(
-          _.m.get("Name").map(resolve(_)).forall(_ == PName("Identity")))
-      }
-      var out = (fileCrypto, carrierNum) match {
-        case (Some((k, aes)), Some(num)) if !identityCrypt =>
-          PdfCrypt.decryptData(k, aes, num, genOf(num), s.data)
-        case _ => s.data
-      }
-      def applyPredictor(b: Array[Byte], i: Int): Array[Byte] = parmAt(i) match {
+      val chain = filterChain(s.dict.m)
+        .fold(other => throw new IllegalStateException(s"filter $other"), identity)
+      var out = carrierNum.fold(s.data)(plainStream(_, s))
+      def applyPredictor(b: Array[Byte], parms: Option[PDict]): Array[Byte] = parms match {
         case Some(d) =>
           val pred = d.m.get("Predictor").map(v => numOf(v).toInt).getOrElse(1)
           if (pred >= 10) {
@@ -631,20 +707,21 @@ object PdfBytes {
           else b
         case None => b
       }
-      filters.zipWithIndex.foreach {
-        case ("FlateDecode" | "Fl", i) => out = applyPredictor(inflate(out), i)
-        case ("LZWDecode" | "LZW", i) =>
-          val early = parmAt(i).flatMap(_.m.get("EarlyChange").map(v => numOf(v).toInt))
-            .getOrElse(1)
-          out = applyPredictor(lzwDecode(out, early), i)
+      chain.foreach {
+        case ("FlateDecode" | "Fl", p) => out = applyPredictor(inflate(out), p)
+        case ("LZWDecode" | "LZW", p) =>
+          val early = p.flatMap(_.m.get("EarlyChange").map(v => numOf(v).toInt)).getOrElse(1)
+          out = applyPredictor(lzwDecode(out, early), p)
         case ("ASCIIHexDecode" | "AHx", _) => out = asciiHexDecode(out)
         case ("ASCII85Decode" | "A85", _) => out = ascii85Decode(out)
         case ("RunLengthDecode" | "RL", _) => out = runLengthDecode(out)
-        case ("Crypt", _) => () // Identity pass-through (decryption skipped
-                                // above); StdCF data decrypts under the
-                                // file crypto like any other stream
+        case ("Crypt", _) => () // Identity is stored plaintext; StdCF data
+                                // decrypted under the file key above
         case (other, _) => throw new IllegalStateException(s"unsupported filter $other")
       }
+      decodedBytes += out.length
+      if (decodedBytes > Bin.MaxTotalBytes)
+        throw new IllegalStateException(s"document decodes past ${Bin.MaxTotalBytes} bytes")
       out
     }
 
@@ -677,7 +754,7 @@ object PdfBytes {
             case s: PStream => s
             case other => throw new IllegalStateException(s"objstm $stmNum is $other")
           }
-          val decoded = decode(stm, carrierNum = Some(stmNum))
+          val decoded = objStms.getOrElseUpdate(stmNum, decode(stm, carrierNum = Some(stmNum)))
           objStmCarried += num
           val n = numOf(stm.dict.m("N")).toInt
           val first = numOf(stm.dict.m("First")).toInt
@@ -717,8 +794,7 @@ object PdfBytes {
     private[extract] def rawObject(num: Int): PObj = loadObj(num)
 
     /** Resolves `ref` to a stream and returns its fully-decoded payload
-      * (decrypted under the stream object's own key when the file is
-      * encrypted, then de-filtered) — the content-stream read path for
+      * (decrypted, then de-filtered) — the content-stream read path for
       * [[PdfText]].
       */
     private[extract] def decodedStream(ref: PObj): Option[Array[Byte]] = resolve(ref) match {
@@ -727,23 +803,6 @@ object PdfBytes {
         Some(decode(s, carrierNum = num))
       case _ => None
     }
-
-    /** Resolves `ref` to a stream and returns its DECRYPTED but still
-      * filter-compressed payload — the image-sidecar path: a /DCTDecode
-      * stream's decrypted payload IS the JPEG file, byte-for-byte, no
-      * raster codec needed.
-      */
-    private[extract] def decryptedPayload(ref: PObj): Option[(PDict, Array[Byte])] =
-      resolve(ref) match {
-        case s: PStream =>
-          val num = ref match { case PRef(n, _) => Some(n); case _ => None }
-          val data = (fileCrypto, num) match {
-            case (Some((k, aes)), Some(n)) => PdfCrypt.decryptData(k, aes, n, genOf(n), s.data)
-            case _ => s.data
-          }
-          Some((s.dict, data))
-        case _ => None
-      }
 
     def dict(o: PObj): Map[String, PObj] = resolve(o) match {
       case PDict(m) => m
@@ -808,12 +867,12 @@ object PdfBytes {
   private[extract] def encryptedError(k: KeyResult): String =
     if (k == Locked) "pdf_encrypted: password required" else "pdf_encrypted: unsupported handler"
 
-  /** Standard-handler RC4 (V=1/2) password resolution — the reference's
-    * semantics (pdf_utils.py:205-225): a provided password verifies or
-    * THROWS "Incorrect password"; otherwise the empty user password is
-    * tried (the owner-locked case).
+  /** Standard-handler password resolution, run once by [[open]] — the
+    * reference's semantics (pdf_utils.py:205-225): a provided password
+    * verifies or THROWS "Incorrect password"; otherwise the empty user
+    * password is tried (the owner-locked case).
     */
-  private[extract] def encryptionKey(doc: Doc, password: Option[String]): KeyResult =
+  private def encryptionKey(doc: Doc, password: Option[String]): KeyResult =
     doc.trailer.get("Encrypt") match {
       case None => NotEncrypted
       case Some(encRef) =>
@@ -909,46 +968,40 @@ object PdfBytes {
         }
     }
 
-  private def parseInfo(data: Array[Byte], password: Option[String]): PdfInfo = {
-    val doc = new Doc(data)
-    val fileKey: Option[(Array[Byte], Boolean)] = encryptionKey(doc, password) match {
-      case NotEncrypted => None
-      case Opened(k, aes, _) => Some((k, aes))
-      case Locked | UnsupportedHandler =>
-        // the reference's basic encrypted shape (pdf_utils.py:217-225)
-        return PdfInfo(0, data.length.toLong, isEncrypted = true, Nil, "", "")
-    }
-    doc.fileCrypto = fileKey // ObjStm payloads decrypt from here on
-    val dims = Vector.newBuilder[PageDim]
-    var count = 0
-    doc.foreachPage { (_, page) =>
-      count += 1
-      val box = doc.resolve(page.getOrElse("MediaBox",
-        throw new IllegalStateException("page without MediaBox")))
-      val nums = box.asInstanceOf[PArr].items.map(v =>
-        doc.resolve(v).asInstanceOf[PNum].v)
-      dims += PageDim(math.abs(nums(2) - nums(0)), math.abs(nums(3) - nums(1)))
-    }
-    val infoRef = doc.trailer.get("Info")
-    val info = infoRef.map(doc.dict).getOrElse(Map.empty)
-    // strings are encrypted with the per-OBJECT key of their carrier;
-    // the generation comes from the XREF entry (authoritative), not the
-    // trailer's reference syntax
-    val infoNum = infoRef match {
-      case Some(PRef(n, _)) => n
-      case _ => 0
-    }
-    def text(key: String): String = info.get(key).map(doc.resolve(_)) match {
-      case Some(PStr(b)) =>
-        val plain = fileKey match {
-          case Some((k, aes)) if !doc.isFromObjStm(infoNum) =>
-            PdfCrypt.decryptData(k, aes, infoNum, doc.genOf(infoNum), b)
-          case _ => b // ObjStm-carried strings are already plaintext (§7.5.7)
-        }
-        decodeTextString(plain)
-      case _ => ""
-    }
-    PdfInfo(count, data.length.toLong, isEncrypted = false, dims.result(), text("Title"), text("Author"))
+  /** The info of an opened file and its page dicts in document order,
+    * from one page-tree walk. A locked file has the reference's basic
+    * encrypted shape (pdf_utils.py:217-225) and no pages.
+    */
+  private[extract] def info(
+      data: Array[Byte],
+      opened: Either[KeyResult, Doc]): (PdfInfo, Seq[Map[String, PObj]]) = opened match {
+    case Left(_) => (PdfInfo(0, data.length.toLong, isEncrypted = true, Nil, "", ""), Nil)
+    case Right(doc) =>
+      val dims = Vector.newBuilder[PageDim]
+      val pages = Vector.newBuilder[Map[String, PObj]]
+      doc.foreachPage { (_, page) =>
+        pages += page
+        val box = doc.resolve(page.getOrElse("MediaBox",
+          throw new IllegalStateException("page without MediaBox")))
+        val nums = box.asInstanceOf[PArr].items.map(v =>
+          doc.resolve(v).asInstanceOf[PNum].v)
+        dims += PageDim(math.abs(nums(2) - nums(0)), math.abs(nums(3) - nums(1)))
+      }
+      val infoRef = doc.trailer.get("Info")
+      val info = infoRef.map(doc.dict).getOrElse(Map.empty)
+      // strings decrypt under their carrier's key: a direct Info dict is
+      // keyed as object 0
+      val infoNum = infoRef match {
+        case Some(PRef(n, _)) => n
+        case _ => 0
+      }
+      def text(key: String): String = info.get(key).map(doc.resolve(_)) match {
+        case Some(PStr(b)) => decodeTextString(doc.plainString(infoNum, b))
+        case _ => ""
+      }
+      val ds = dims.result()
+      (PdfInfo(ds.length, data.length.toLong, isEncrypted = false, ds, text("Title"), text("Author")),
+        pages.result())
   }
 
   // ------------------------------------------------------------ writer

@@ -9,7 +9,8 @@ import scala.collection.mutable
   * decrypt + re-emit). Both copy the transitive object closure from their
   * roots into a fresh classic-xref document with renumbered objects;
   * Standard-handler files (RC4, AES-128/AESV2, AES-256/AESV3) are
-  * decrypted during the copy (strings and stream payloads under each
+  * decrypted during the copy by the [[PdfBytes.Doc]] that
+  * [[PdfBytes.open]] returned (strings and stream payloads under each
   * carrier object's key, or the file key for V5), so the output never
   * carries /Encrypt.
   *
@@ -34,19 +35,14 @@ object PdfRewrite {
       data: Array[Byte],
       keep: Seq[Int],
       password: Option[String] = None): Either[String, Array[Byte]] =
-    try {
-      val doc = new Doc(data)
-      val (key, encryptMeta) = PdfBytes.encryptionKey(doc, password) match {
-        case NotEncrypted => (None, true)
-        case Opened(k, aes, em) => (Some((k, aes)), em)
-        case locked => return Left(encryptedError(locked))
-      }
-      doc.fileCrypto = key // ObjStm payloads decrypt from here on
-      val pages = collectPages(doc, forExtraction = true)
-      // out-of-range indices are SILENTLY skipped — exact reference parity
-      // (pdf_utils.py:172-176: `if 0 <= i < len(reader.pages)`)
-      val kept = keep.filter(i => i >= 0 && i < pages.length).map(pages)
-      Right(emit(doc, kept, key, encryptMeta = encryptMeta))
+    try open(data, password) match {
+      case Left(locked) => Left(encryptedError(locked))
+      case Right(doc) =>
+        val pages = collectPages(doc, forExtraction = true)
+        // out-of-range indices are SILENTLY skipped — exact reference parity
+        // (pdf_utils.py:172-176: `if 0 <= i < len(reader.pages)`)
+        val kept = keep.filter(i => i >= 0 && i < pages.length).map(pages)
+        Right(emit(doc, kept))
     } catch {
       case e: Exception => Left(Formats.parseError("pdf", e))
     }
@@ -57,16 +53,11 @@ object PdfRewrite {
     * wrong password is an error.
     */
   def decryptPdf(data: Array[Byte], password: String): Either[String, Array[Byte]] =
-    try {
-      val doc = new Doc(data)
-      PdfBytes.encryptionKey(doc, if (password.isEmpty) None else Some(password)) match {
-        case NotEncrypted => Right(data)
-        case Opened(k, aes, em) =>
-          doc.fileCrypto = Some((k, aes))
-          Right(emit(doc, collectPages(doc, forExtraction = false), Some((k, aes)),
-            includeInfo = true, encryptMeta = em))
-        case locked => Left(encryptedError(locked))
-      }
+    try open(data, if (password.isEmpty) None else Some(password)) match {
+      case Left(locked) => Left(encryptedError(locked))
+      case Right(doc) if !doc.encrypted => Right(data)
+      case Right(doc) =>
+        Right(emit(doc, collectPages(doc, forExtraction = false), includeInfo = true))
     } catch {
       case e: Exception => Left(Formats.parseError("pdf", e))
     }
@@ -99,30 +90,6 @@ object PdfRewrite {
     out.result()
   }
 
-  /** True when the stream's /Filter chain includes a /Crypt filter whose
-    * /DecodeParms /Name is Identity (or absent — Identity is the §7.4.10
-    * default): such a stream's bytes are stored UNencrypted even in an
-    * encrypted document.
-    */
-  private def hasIdentityCryptFilter(doc: Doc, m: Map[String, PObj]): Boolean = {
-    val filters: Seq[String] = m.get("Filter").map(doc.resolve(_)) match {
-      case Some(PName(n)) => Seq(n)
-      case Some(PArr(items)) => items.map(doc.resolve(_)).collect { case PName(n) => n }
-      case _ => Nil
-    }
-    val cryptIdx = filters.indexOf("Crypt")
-    if (cryptIdx < 0) return false
-    val parms: Seq[PObj] = m.get("DecodeParms").orElse(m.get("DP")).map(doc.resolve(_)) match {
-      case Some(PArr(items)) => items.map(doc.resolve(_))
-      case Some(d: PDict) => Seq(d)
-      case _ => Nil
-    }
-    parms.lift(cryptIdx) match {
-      case Some(PDict(dm)) => dm.get("Name").forall(doc.resolve(_) == PName("Identity"))
-      case _ => true // no parms dict ⇒ Identity default
-    }
-  }
-
   private def refsOf(o: PObj, acc: mutable.Set[Int]): Unit = o match {
     case PRef(n, _) => acc += n
     case PArr(items) => items.foreach(refsOf(_, acc))
@@ -134,12 +101,7 @@ object PdfRewrite {
   /** Builds the output document: fresh Catalog + Pages, the kept pages, and
     * the transitive closure of everything they reference, renumbered.
     */
-  private def emit(
-      doc: Doc,
-      kept: Seq[SrcPage],
-      key: Option[(Array[Byte], Boolean)],
-      includeInfo: Boolean = false,
-      encryptMeta: Boolean = true): Array[Byte] = {
+  private def emit(doc: Doc, kept: Seq[SrcPage], includeInfo: Boolean = false): Array[Byte] = {
     // decryptPdf (includeInfo) preserves the document XMP /Metadata stream
     // through the rebuilt Catalog; page extraction matches the reference's
     // fresh-PdfWriter behavior and drops it
@@ -148,9 +110,6 @@ object PdfRewrite {
       case _ => None
     }
     val keptMetadataNum: Option[Int] = if (includeInfo) rootMetadataNum else None
-    // /EncryptMetadata false ⇒ the XMP /Metadata stream is stored PLAINTEXT
-    // in an otherwise-encrypted file — copy it verbatim
-    val plainMetadataNum: Option[Int] = if (encryptMeta) None else rootMetadataNum
     // decryptPdf preserves the (decrypted) Info dict; page extraction
     // matches the reference's fresh-PdfWriter behavior and drops it
     val infoNum: Option[Int] = if (includeInfo) doc.trailer.get("Info") match {
@@ -191,29 +150,13 @@ object PdfRewrite {
       case PBool(b) => if (b) "true" else "false"
       case PNum(v) => Bin.num(v)
       case PName(n) => "/" + nameEsc(n)
-      case PStr(b) =>
-        val plain = key match {
-          case Some((k, aes)) if !doc.isFromObjStm(srcNum) =>
-            PdfCrypt.decryptData(k, aes, srcNum, doc.genOf(srcNum), b)
-          case _ => b // ObjStm-carried strings are already plaintext (§7.5.7)
-        }
-        Bin.hex(plain)
+      case PStr(b) => Bin.hex(doc.plainString(srcNum, b))
       case PRef(n, _) =>
         s"${renumber.getOrElse(n, throw new IllegalStateException(s"dangling ref $n"))} 0 R"
       case PArr(items) => items.map(ser(_, srcNum)).mkString("[ ", " ", " ]")
       case PDict(m) => serDict(m, srcNum)
-      case PStream(PDict(m), raw) =>
-        // plaintext-in-encrypted-file carve-outs: the unencrypted XMP
-        // /Metadata stream (EncryptMetadata false) and any stream whose
-        // /Filter chain names a /Crypt filter with the Identity CF (§7.4.10
-        // — the Identity filter means "data not encrypted")
-        val storedPlain =
-          plainMetadataNum.contains(srcNum) || hasIdentityCryptFilter(doc, m)
-        val payload = key match {
-          case Some((k, aes)) if !storedPlain =>
-            PdfCrypt.decryptData(k, aes, srcNum, doc.genOf(srcNum), raw)
-          case _ => raw // streams cannot live in ObjStm, so no other skip here
-        }
+      case s @ PStream(PDict(m), _) =>
+        val payload = doc.plainStream(srcNum, s)
         val dict = m.updated("Length", PNum(payload.length.toDouble))
         serDict(dict, srcNum) + "\nstream\n" +
           new String(payload, StandardCharsets.ISO_8859_1) + "\nendstream"

@@ -43,6 +43,8 @@ import scala.collection.mutable.ArrayBuffer
   *      whitespace-only segments drop.
   * This is O(file bytes + glyphs) per document — a bounded per-row kernel
   * safe inside `mapPartitions` at 100 TB like the rest of the PDF family.
+  * Every stream it reads comes decrypted and de-filtered from the
+  * [[PdfBytes.Doc]] that [[PdfBytes.open]] returned.
   */
 object PdfText {
 
@@ -74,23 +76,38 @@ object PdfText {
     * (same error-channel contract as [[PdfBytes.pdfInfo]]).
     */
   def extract(data: Array[Byte], password: Option[String] = None): Either[String, Seq[PageContent]] =
-    try {
-      val doc = new Doc(data)
-      encryptionKey(doc, password) match {
-        case NotEncrypted => ()
-        case Opened(k, aes, _) => doc.fileCrypto = Some((k, aes))
-        case locked => return Left(encryptedError(locked))
-      }
-      val fontCache = mutable.Map[Int, Font]()
-      val imageCache = mutable.Map[Int, ImageRef]()
-      val pages = ArrayBuffer[PageContent]()
-      doc.foreachPage { (_, page) =>
-        pages += renderPage(doc, page, pages.length + 1, fontCache, imageCache)
-      }
-      Right(pages.toSeq)
+    try open(data, password) match {
+      case Left(locked) => Left(encryptedError(locked))
+      case Right(doc) =>
+        val render = renderer(doc)
+        val pages = ArrayBuffer[PageContent]()
+        doc.foreachPage((_, page) => pages += render(page, pages.length + 1))
+        Right(pages.toSeq)
     } catch {
-      case e: Exception => Left("pdf_text_error: " + Formats.describe(e))
+      case e: Exception => Left(textError(e))
     }
+
+  /** The content of an opened document's page dicts, in order (the
+    * list [[PdfBytes.info]] walked); Left as [[extract]].
+    */
+  private[extract] def contents(doc: Doc, pages: Seq[Map[String, PObj]]): Either[String, Seq[PageContent]] =
+    try {
+      val render = renderer(doc)
+      Right(pages.zipWithIndex.map { case (page, i) => render(page, i + 1) })
+    } catch {
+      case e: Exception => Left(textError(e))
+    }
+
+  private def textError(e: Exception): String = "pdf_text_error: " + Formats.describe(e)
+
+  /** Renders pages of `doc` by (page dict, 1-based number), sharing one
+    * font cache and one image cache across them.
+    */
+  private def renderer(doc: Doc): (Map[String, PObj], Int) => PageContent = {
+    val fontCache = mutable.Map[Int, Font]()
+    val imageCache = mutable.Map[Int, ImageRef]()
+    (page, pageNo) => renderPage(doc, page, pageNo, fontCache, imageCache)
+  }
 
   /** Page text in reading order, lines joined with \n — the `page_text`
     * convenience the driver row and ingestion use.
@@ -465,8 +482,8 @@ object PdfText {
             case PName("Image") =>
               val template = ref match {
                 case PRef(n, _) =>
-                  imageCache.getOrElseUpdate(n, extractImage(doc, ref, xm))
-                case _ => extractImage(doc, ref, xm)
+                  imageCache.getOrElseUpdate(n, extractImage(doc, ref, s))
+                case _ => extractImage(doc, ref, s)
               }
               images += template.copy(x = ctm(4), y = ctm(5), name = name)
             case PName("Form") =>
@@ -562,7 +579,8 @@ object PdfText {
     * PNG-encode via javax.imageio; everything else keeps an empty payload.
     * Never throws — a broken image keeps the placeholder, not a task kill.
     */
-  private def extractImage(doc: Doc, ref: PObj, xm: Map[String, PObj]): ImageRef = {
+  private def extractImage(doc: Doc, ref: PObj, s: PStream): ImageRef = {
+    val xm = s.dict.m
     def num(k: String): Int = doc.resolve(xm.getOrElse(k, PNull)) match {
       case PNum(v) => v.toInt
       case _ => 0
@@ -570,34 +588,26 @@ object PdfText {
     val w = num("Width")
     val h = num("Height")
     val bpc = num("BitsPerComponent")
-    val filters: Seq[String] = doc.resolve(xm.getOrElse("Filter", PNull)) match {
-      case PName(n) => Seq(n)
-      case PArr(items) => items.map(doc.resolve(_)).collect { case PName(n) => n }
-      case _ => Nil
-    }
+    val chain = doc.filterChain(xm).getOrElse(Nil)
     val colorSpace = doc.resolve(xm.getOrElse("ColorSpace", PNull)) match {
       case PName(n) => n
       case _ => ""
     }
+    // decrypted but still filtered: a /DCTDecode payload IS the JPEG file
+    def payload = ref match {
+      case PRef(n, _) => doc.plainStream(n, s)
+      case _ => s.data
+    }
     try {
-      filters match {
+      chain.map(_._1) match {
         case Seq("DCTDecode") | Seq("DCT") =>
-          val data = doc.decryptedPayload(ref).map(_._2).getOrElse(Array.emptyByteArray)
-          ImageRef(0, 0, "", w, h, "image/jpeg", data)
+          ImageRef(0, 0, "", w, h, "image/jpeg", payload)
         case Seq("CCITTFaxDecode") | Seq("CCF") if w > 0 && h > 0 =>
           // scanned-document images: G4 (/K < 0), pure-1D G3 (/K = 0), and
           // mixed G3 (/K > 0) all decode to a bilevel raster → PNG.
           // BlackIs1 only affects bit-PACKED output, which is skipped —
           // the decoders yield semantic black/white directly.
-          val parms: Map[String, PObj] =
-            doc.resolve(xm.getOrElse("DecodeParms", xm.getOrElse("DP", PNull))) match {
-              case PDict(mm) => mm
-              case PArr(items) if items.nonEmpty => doc.resolve(items.head) match {
-                case PDict(mm) => mm
-                case _ => Map.empty
-              }
-              case _ => Map.empty
-            }
+          val parms: Map[String, PObj] = chain.head._2.fold(Map.empty[String, PObj])(_.m)
           def pnum(k: String, dflt: Double): Double =
             parms.get(k).map(doc.resolve(_)) match {
               case Some(PNum(v)) => v
@@ -607,56 +617,43 @@ object PdfText {
           val cols = math.max(1, pnum("Columns", 1728).toInt)
           val rws = math.max(1, pnum("Rows", h.toDouble).toInt)
           val align = parms.get("EncodedByteAlign").map(doc.resolve(_)).contains(PBool(true))
-          val data = doc.decryptedPayload(ref).map(_._2).getOrElse(Array.emptyByteArray)
           val px =
-            if (k < 0) CcittG4.decode(data, cols, rws, align)
-            else CcittG4.decodeG3(data, cols, rws, k.toInt, align)
-          val img = new java.awt.image.BufferedImage(
-            cols, rws, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          val packed = new Array[Int](cols * rws)
-          var i = 0
-          while (i < packed.length) {
-            packed(i) = if (px(i) == 1) 0x000000 else 0xFFFFFF
-            i += 1
-          }
-          img.setRGB(0, 0, cols, rws, packed, 0, cols)
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "png", bos)
-          ImageRef(0, 0, "", cols, rws, "image/png", bos.toByteArray)
+            if (k < 0) CcittG4.decode(payload, cols, rws, align)
+            else CcittG4.decodeG3(payload, cols, rws, k.toInt, align)
+          png(cols, rws)(i => if (px(i) == 1) 0x000000 else 0xFFFFFF)
         case Seq("JPXDecode") =>
-          val data = doc.decryptedPayload(ref).map(_._2).getOrElse(Array.emptyByteArray)
-          ImageRef(0, 0, "", w, h, "image/jp2", data)
+          ImageRef(0, 0, "", w, h, "image/jp2", payload)
         case fs if fs.forall(f => f == "FlateDecode" || f == "Fl" || f == "LZWDecode" || f == "LZW") &&
             bpc == 8 && w > 0 && h > 0 &&
             (colorSpace == "DeviceRGB" || colorSpace == "DeviceGray") =>
           val px = doc.decodedStream(ref).getOrElse(Array.emptyByteArray)
           val ncomp = if (colorSpace == "DeviceRGB") 3 else 1
           if (px.length < w * h * ncomp) ImageRef(0, 0, "", w, h, "", Array.emptyByteArray)
-          else {
-            val img = new java.awt.image.BufferedImage(
-              w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-            // one bulk raster write — per-pixel setRGB is a synchronized
-            // call per pixel (~8.7M calls on a full-page scan)
-            val packed = new Array[Int](w * h)
-            var k = 0
-            while (k < packed.length) {
-              val i = k * ncomp
-              packed(k) =
-                if (ncomp == 3)
-                  ((px(i) & 0xff) << 16) | ((px(i + 1) & 0xff) << 8) | (px(i + 2) & 0xff)
-                else { val g = px(i) & 0xff; (g << 16) | (g << 8) | g }
-              k += 1
-            }
-            img.setRGB(0, 0, w, h, packed, 0, w)
-            val bos = new java.io.ByteArrayOutputStream()
-            javax.imageio.ImageIO.write(img, "png", bos)
-            ImageRef(0, 0, "", w, h, "image/png", bos.toByteArray)
+          else png(w, h) { k =>
+            val i = k * ncomp
+            if (ncomp == 3) ((px(i) & 0xff) << 16) | ((px(i + 1) & 0xff) << 8) | (px(i + 2) & 0xff)
+            else { val g = px(i) & 0xff; (g << 16) | (g << 8) | g }
           }
         case _ => ImageRef(0, 0, "", w, h, "", Array.emptyByteArray)
       }
     } catch {
       case _: Exception => ImageRef(0, 0, "", w, h, "", Array.emptyByteArray)
     }
+  }
+
+  /** A `w`×`h` PNG media item whose pixel k (row-major) is `rgb(k)`. One
+    * bulk raster write — per-pixel setRGB is a synchronized call per pixel
+    * (~8.7M calls on a full-page scan).
+    */
+  private def png(w: Int, h: Int)(rgb: Int => Int): ImageRef = {
+    val img = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    val packed = new Array[Int](w * h)
+    var k = 0
+    while (k < packed.length) { packed(k) = rgb(k); k += 1 }
+    img.setRGB(0, 0, w, h, packed, 0, w)
+    val bos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, "png", bos)
+    ImageRef(0, 0, "", w, h, "image/png", bos.toByteArray)
   }
 
   private def isWsByte(b: Byte): Boolean =

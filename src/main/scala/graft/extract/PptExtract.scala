@@ -64,7 +64,9 @@ object PptExtract {
       // null at the top level, a slide buffer inside Slide containers,
       // and the current SLWT group inside SlideListWithText
       def walk(start: Int, end: Int, sink: ArrayBuffer[(Boolean, String)],
-          inSlwt: Boolean): Unit = {
+          inSlwt: Boolean, depth: Int): Unit = {
+        if (depth > Bin.MaxNesting)
+          throw new IllegalStateException(s"records nested deeper than ${Bin.MaxNesting} at $start")
         var p = start
         var pendingTitle = false
         while (p + 8 <= end) {
@@ -77,12 +79,12 @@ object PptExtract {
           val isContainer = (verInst & 0xF) == 0xF
           if (recType == SlideContainer && sink == null && !inSlwt) {
             val texts = ArrayBuffer[(Boolean, String)]()
-            walk(body, bodyEnd, texts, inSlwt = false)
+            walk(body, bodyEnd, texts, inSlwt = false, depth + 1)
             slides += groupSlide(texts.toSeq)
           } else if (recType == SlideListWithText && sink == null) {
-            walk(body, bodyEnd, null, inSlwt = true)
+            walk(body, bodyEnd, null, inSlwt = true, depth + 1)
           } else if (isContainer) {
-            walk(body, bodyEnd, sink, inSlwt)
+            walk(body, bodyEnd, sink, inSlwt, depth + 1)
           } else if (inSlwt && recType == SlidePersistAtom) {
             slwtGroups += ArrayBuffer()
           } else if (sink != null || (inSlwt && slwtGroups.nonEmpty)) {
@@ -105,7 +107,7 @@ object PptExtract {
           p = body + len
         }
       }
-      walk(0, ppt.length, null, inSlwt = false)
+      walk(0, ppt.length, null, inSlwt = false, depth = 0)
 
       if (slides.isEmpty) slwtGroups.foreach(g => slides += groupSlide(g.toSeq))
       else slides.indices.foreach { idx =>

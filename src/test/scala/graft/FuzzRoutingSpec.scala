@@ -237,6 +237,28 @@ class FuzzRoutingSpec extends AnyFunSuite {
       Ingest.toRawDoc("nested.pdf", HostilePdfs.nestedArrays(5000)))
     assert(nested.failure.startsWith(
       "pdf_parse_error: IllegalStateException: objects nested deeper than 256"), nested.failure)
+    // 20,000 nested PPT container records (160 KB): a depth-capped failure
+    // row, not a stack overflow
+    val pptStream = new graft.extract.Bin.Sink(160000)
+    for (k <- 0 until 20000) pptStream.u16le(0xF).u16le(0x03E8).u32le((20000L - k - 1) * 8)
+    val deepPpt = graft.extract.CfbExtract.build(Seq("PowerPoint Document" -> pptStream.toArray))
+    // 200,000 unclosed <div>s; 200,000 opens then as many unmatched
+    // closes; 100,000 <b>s each closed under a newer <i>: linear in the
+    // tag count
+    val timed = Seq(
+      ("application/vnd.ms-powerpoint", deepPpt),
+      ("text/html", ("<html><body>" + "<div>" * 200000 + "x").getBytes("UTF-8")),
+      ("text/html", ("<html><body>" + "<div>" * 200000 + "</span>" * 200000).getBytes("UTF-8")),
+      ("text/html", ("<html><body>" + "<b>" * 100000 + "<i></b>" * 100000 + "x").getBytes("UTF-8")))
+    for ((mime, bytes) <- timed) {
+      val t0 = System.nanoTime()
+      val out = Pipeline.extractOne(Ingest.toRawDoc("f.bin", bytes, mime))
+      val ms = (System.nanoTime() - t0) / 1e6
+      assert(ms < 10000, s"$mime pathological case took ${ms}ms")
+      if (mime == "application/vnd.ms-powerpoint")
+        assert(out.failure.startsWith(
+          "ppt_parse_error: IllegalStateException: records nested deeper than 256"), out.failure)
+    }
     // 1 KiB compound file whose DIFAT sector 0 chains to itself: with the
     // header's numFat = numDifat = 2^31 - 1 the walk used to grow its FAT
     // list until the heap died; with numFat = 1 it spun 2^31 hops

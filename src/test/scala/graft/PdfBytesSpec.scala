@@ -543,6 +543,271 @@ class PdfBytesSpec extends AnyFunSuite {
     assert(PdfBytes.pdfInfo(pdf.finish("")) ==
       Left("pdf_parse_error: IllegalStateException: page tree cycle"))
   }
+
+  test("a content stream inflating past the per-stream cap is a pdf_text_error row") {
+    import graft.io.Ingest
+    import graft.pipeline.Pipeline
+    val out = Pipeline.extractOne(Ingest.toRawDoc("bomb.pdf", HostilePdfs.flateBomb))
+    assert(out.failure == "" && out.page_count == 1)
+    assert(out.metadata.get("pdf_text_error").contains(
+      "pdf_text_error: IllegalStateException: stream decodes past 268435456 bytes"), out.metadata)
+  }
+
+  test("pinned: extractOne, pdfInfo, extractPages and decryptPdf over the writer corpus") {
+    val expected = """
+      |text_flate extractOne pages=2 spans=4 media=0 failure= sha=a10de0ebda68d0dc
+      |text_flate pdfInfo/none Right(PdfInfo(2,1010,false,Vector(PageDim(612.0,792.0), PageDim(612.0,792.0)),,))
+      |text_flate extractPages/none sha=a06ed689fd6a561a len=1010
+      |text_flate decryptPdf/none sha=5c847ad5ae33dc4b len=1010
+      |text_flate pdfInfo/right Right(PdfInfo(2,1010,false,Vector(PageDim(612.0,792.0), PageDim(612.0,792.0)),,))
+      |text_flate extractPages/right sha=a06ed689fd6a561a len=1010
+      |text_flate decryptPdf/right sha=5c847ad5ae33dc4b len=1010
+      |text_flate pdfInfo/wrong Right(PdfInfo(2,1010,false,Vector(PageDim(612.0,792.0), PageDim(612.0,792.0)),,))
+      |text_flate extractPages/wrong sha=a06ed689fd6a561a len=1010
+      |text_flate decryptPdf/wrong sha=5c847ad5ae33dc4b len=1010
+      |text_raw extractOne pages=2 spans=4 media=0 failure= sha=43aaa06c96b6df95
+      |text_raw pdfInfo/none Right(PdfInfo(2,969,false,Vector(PageDim(612.0,792.0), PageDim(612.0,792.0)),,))
+      |text_raw extractPages/none sha=085c02e63d957e85 len=969
+      |text_raw decryptPdf/none sha=85b38331ca3da2f0 len=969
+      |text_raw pdfInfo/right Right(PdfInfo(2,969,false,Vector(PageDim(612.0,792.0), PageDim(612.0,792.0)),,))
+      |text_raw extractPages/right sha=085c02e63d957e85 len=969
+      |text_raw decryptPdf/right sha=85b38331ca3da2f0 len=969
+      |text_raw pdfInfo/wrong Right(PdfInfo(2,969,false,Vector(PageDim(612.0,792.0), PageDim(612.0,792.0)),,))
+      |text_raw extractPages/wrong sha=085c02e63d957e85 len=969
+      |text_raw decryptPdf/wrong sha=85b38331ca3da2f0 len=969
+      |text_images extractOne pages=2 spans=7 media=3 failure= sha=a297e3205b9ab1fd
+      |text_images pdfInfo/none Right(PdfInfo(2,1745,false,Vector(PageDim(612.0,792.0), PageDim(612.0,792.0)),,))
+      |text_images extractPages/none sha=1e792f164eaabbb3 len=1745
+      |text_images decryptPdf/none sha=16a2625476f966c7 len=1745
+      |text_images pdfInfo/right Right(PdfInfo(2,1745,false,Vector(PageDim(612.0,792.0), PageDim(612.0,792.0)),,))
+      |text_images extractPages/right sha=1e792f164eaabbb3 len=1745
+      |text_images decryptPdf/right sha=16a2625476f966c7 len=1745
+      |text_images pdfInfo/wrong Right(PdfInfo(2,1745,false,Vector(PageDim(612.0,792.0), PageDim(612.0,792.0)),,))
+      |text_images extractPages/wrong sha=1e792f164eaabbb3 len=1745
+      |text_images decryptPdf/wrong sha=16a2625476f966c7 len=1745
+      |tt_post extractOne pages=2 spans=4 media=0 failure= sha=71b68bdac5cf469c
+      |tt_post pdfInfo/none Right(PdfInfo(2,1518,false,Vector(PageDim(612.0,792.0), PageDim(612.0,792.0)),,))
+      |tt_post extractPages/none sha=0034a732cb0c32eb len=1518
+      |tt_post decryptPdf/none sha=26dae45fcd8f472c len=1518
+      |tt_post pdfInfo/right Right(PdfInfo(2,1518,false,Vector(PageDim(612.0,792.0), PageDim(612.0,792.0)),,))
+      |tt_post extractPages/right sha=0034a732cb0c32eb len=1518
+      |tt_post decryptPdf/right sha=26dae45fcd8f472c len=1518
+      |tt_post pdfInfo/wrong Right(PdfInfo(2,1518,false,Vector(PageDim(612.0,792.0), PageDim(612.0,792.0)),,))
+      |tt_post extractPages/wrong sha=0034a732cb0c32eb len=1518
+      |tt_post decryptPdf/wrong sha=26dae45fcd8f472c len=1518
+      |tt_unicode extractOne pages=2 spans=4 media=0 failure= sha=f330624a07b3588c
+      |tt_unicode pdfInfo/none Right(PdfInfo(2,1747,false,Vector(PageDim(612.0,792.0), PageDim(612.0,792.0)),,))
+      |tt_unicode extractPages/none sha=7e674ba029d65c04 len=1747
+      |tt_unicode decryptPdf/none sha=4391ef01f618b1cc len=1747
+      |tt_unicode pdfInfo/right Right(PdfInfo(2,1747,false,Vector(PageDim(612.0,792.0), PageDim(612.0,792.0)),,))
+      |tt_unicode extractPages/right sha=7e674ba029d65c04 len=1747
+      |tt_unicode decryptPdf/right sha=4391ef01f618b1cc len=1747
+      |tt_unicode pdfInfo/wrong Right(PdfInfo(2,1747,false,Vector(PageDim(612.0,792.0), PageDim(612.0,792.0)),,))
+      |tt_unicode extractPages/wrong sha=7e674ba029d65c04 len=1747
+      |tt_unicode decryptPdf/wrong sha=4391ef01f618b1cc len=1747
+      |cff extractOne pages=2 spans=4 media=0 failure= sha=26a8cdb64063cf56
+      |cff pdfInfo/none Right(PdfInfo(2,1472,false,Vector(PageDim(612.0,792.0), PageDim(612.0,792.0)),,))
+      |cff extractPages/none sha=8ffb76edab9c82f6 len=1472
+      |cff decryptPdf/none sha=0ea2ea70b3b4cdcb len=1472
+      |cff pdfInfo/right Right(PdfInfo(2,1472,false,Vector(PageDim(612.0,792.0), PageDim(612.0,792.0)),,))
+      |cff extractPages/right sha=8ffb76edab9c82f6 len=1472
+      |cff decryptPdf/right sha=0ea2ea70b3b4cdcb len=1472
+      |cff pdfInfo/wrong Right(PdfInfo(2,1472,false,Vector(PageDim(612.0,792.0), PageDim(612.0,792.0)),,))
+      |cff extractPages/wrong sha=8ffb76edab9c82f6 len=1472
+      |cff decryptPdf/wrong sha=0ea2ea70b3b4cdcb len=1472
+      |type1 extractOne pages=2 spans=4 media=0 failure= sha=29577db738d73d37
+      |type1 pdfInfo/none Right(PdfInfo(2,1839,false,Vector(PageDim(612.0,792.0), PageDim(612.0,792.0)),,))
+      |type1 extractPages/none sha=e5cf9963582689a9 len=1839
+      |type1 decryptPdf/none sha=d37cf9323db64347 len=1839
+      |type1 pdfInfo/right Right(PdfInfo(2,1839,false,Vector(PageDim(612.0,792.0), PageDim(612.0,792.0)),,))
+      |type1 extractPages/right sha=e5cf9963582689a9 len=1839
+      |type1 decryptPdf/right sha=d37cf9323db64347 len=1839
+      |type1 pdfInfo/wrong Right(PdfInfo(2,1839,false,Vector(PageDim(612.0,792.0), PageDim(612.0,792.0)),,))
+      |type1 extractPages/wrong sha=e5cf9963582689a9 len=1839
+      |type1 decryptPdf/wrong sha=d37cf9323db64347 len=1839
+      |plain extractOne pages=2 spans=2 media=0 failure= sha=3f30e2defca18ad0
+      |plain pdfInfo/none Right(PdfInfo(2,632,false,Vector(PageDim(200.0,300.0), PageDim(400.5,500.0)),Plain Title,Plain Author))
+      |plain extractPages/none sha=067b1cb1ae4e66cf len=535
+      |plain decryptPdf/none sha=9826f85c579df6de len=632
+      |plain pdfInfo/right Right(PdfInfo(2,632,false,Vector(PageDim(200.0,300.0), PageDim(400.5,500.0)),Plain Title,Plain Author))
+      |plain extractPages/right sha=067b1cb1ae4e66cf len=535
+      |plain decryptPdf/right sha=9826f85c579df6de len=632
+      |plain pdfInfo/wrong Right(PdfInfo(2,632,false,Vector(PageDim(200.0,300.0), PageDim(400.5,500.0)),Plain Title,Plain Author))
+      |plain extractPages/wrong sha=067b1cb1ae4e66cf len=535
+      |plain decryptPdf/wrong sha=9826f85c579df6de len=632
+      |r2_empty extractOne pages=2 spans=2 media=0 failure= sha=d87b8b930039296b
+      |r2_empty pdfInfo/none Right(PdfInfo(2,948,false,Vector(PageDim(200.0,300.0), PageDim(400.5,500.0)),Empty 2,Author 2))
+      |r2_empty extractPages/none sha=067b1cb1ae4e66cf len=535
+      |r2_empty decryptPdf/none sha=f2c4598108c9a81c len=639
+      |r2_empty pdfInfo/right Right(PdfInfo(2,948,false,Vector(PageDim(200.0,300.0), PageDim(400.5,500.0)),Empty 2,Author 2))
+      |r2_empty extractPages/right sha=067b1cb1ae4e66cf len=535
+      |r2_empty decryptPdf/right sha=f2c4598108c9a81c len=639
+      |r2_empty pdfInfo/wrong Left(pdf_parse_error: IllegalStateException: Incorrect password for encrypted PDF)
+      |r2_empty extractPages/wrong pdf_parse_error: IllegalStateException: Incorrect password for encrypted PDF
+      |r2_empty decryptPdf/wrong pdf_parse_error: IllegalStateException: Incorrect password for encrypted PDF
+      |r2_locked extractOne pages=0 spans=0 media=0 failure= sha=1248b2602e3a98f1
+      |r2_locked pdfInfo/none Right(PdfInfo(0,950,true,List(),,))
+      |r2_locked extractPages/none pdf_encrypted: password required
+      |r2_locked decryptPdf/none pdf_encrypted: password required
+      |r2_locked pdfInfo/right Right(PdfInfo(2,950,false,Vector(PageDim(200.0,300.0), PageDim(400.5,500.0)),Locked 2,Author 2))
+      |r2_locked extractPages/right sha=067b1cb1ae4e66cf len=535
+      |r2_locked decryptPdf/right sha=181a078c9cd490d9 len=641
+      |r2_locked pdfInfo/wrong Left(pdf_parse_error: IllegalStateException: Incorrect password for encrypted PDF)
+      |r2_locked extractPages/wrong pdf_parse_error: IllegalStateException: Incorrect password for encrypted PDF
+      |r2_locked decryptPdf/wrong pdf_parse_error: IllegalStateException: Incorrect password for encrypted PDF
+      |r3_empty extractOne pages=2 spans=2 media=0 failure= sha=ecf2cfce0a469288
+      |r3_empty pdfInfo/none Right(PdfInfo(2,960,false,Vector(PageDim(200.0,300.0), PageDim(400.5,500.0)),Empty 3,Author 3))
+      |r3_empty extractPages/none sha=067b1cb1ae4e66cf len=535
+      |r3_empty decryptPdf/none sha=088c533e75063c78 len=639
+      |r3_empty pdfInfo/right Right(PdfInfo(2,960,false,Vector(PageDim(200.0,300.0), PageDim(400.5,500.0)),Empty 3,Author 3))
+      |r3_empty extractPages/right sha=067b1cb1ae4e66cf len=535
+      |r3_empty decryptPdf/right sha=088c533e75063c78 len=639
+      |r3_empty pdfInfo/wrong Left(pdf_parse_error: IllegalStateException: Incorrect password for encrypted PDF)
+      |r3_empty extractPages/wrong pdf_parse_error: IllegalStateException: Incorrect password for encrypted PDF
+      |r3_empty decryptPdf/wrong pdf_parse_error: IllegalStateException: Incorrect password for encrypted PDF
+      |r3_locked extractOne pages=0 spans=0 media=0 failure= sha=ae427210f5cfeedf
+      |r3_locked pdfInfo/none Right(PdfInfo(0,962,true,List(),,))
+      |r3_locked extractPages/none pdf_encrypted: password required
+      |r3_locked decryptPdf/none pdf_encrypted: password required
+      |r3_locked pdfInfo/right Right(PdfInfo(2,962,false,Vector(PageDim(200.0,300.0), PageDim(400.5,500.0)),Locked 3,Author 3))
+      |r3_locked extractPages/right sha=067b1cb1ae4e66cf len=535
+      |r3_locked decryptPdf/right sha=e872f0f05579ff24 len=641
+      |r3_locked pdfInfo/wrong Left(pdf_parse_error: IllegalStateException: Incorrect password for encrypted PDF)
+      |r3_locked extractPages/wrong pdf_parse_error: IllegalStateException: Incorrect password for encrypted PDF
+      |r3_locked decryptPdf/wrong pdf_parse_error: IllegalStateException: Incorrect password for encrypted PDF
+      |r4_empty extractOne pages=2 spans=2 media=0 failure= sha=0e22747d49d61832
+      |r4_empty pdfInfo/none Right(PdfInfo(2,1150,false,Vector(PageDim(200.0,300.0), PageDim(400.5,500.0)),Empty 4,Author 4))
+      |r4_empty extractPages/none sha=067b1cb1ae4e66cf len=535
+      |r4_empty decryptPdf/none sha=dda83b594ce0ad27 len=639
+      |r4_empty pdfInfo/right Right(PdfInfo(2,1150,false,Vector(PageDim(200.0,300.0), PageDim(400.5,500.0)),Empty 4,Author 4))
+      |r4_empty extractPages/right sha=067b1cb1ae4e66cf len=535
+      |r4_empty decryptPdf/right sha=dda83b594ce0ad27 len=639
+      |r4_empty pdfInfo/wrong Left(pdf_parse_error: IllegalStateException: Incorrect password for encrypted PDF)
+      |r4_empty extractPages/wrong pdf_parse_error: IllegalStateException: Incorrect password for encrypted PDF
+      |r4_empty decryptPdf/wrong pdf_parse_error: IllegalStateException: Incorrect password for encrypted PDF
+      |r4_locked extractOne pages=0 spans=0 media=0 failure= sha=04922cf9dd1b7d3b
+      |r4_locked pdfInfo/none Right(PdfInfo(0,1150,true,List(),,))
+      |r4_locked extractPages/none pdf_encrypted: password required
+      |r4_locked decryptPdf/none pdf_encrypted: password required
+      |r4_locked pdfInfo/right Right(PdfInfo(2,1150,false,Vector(PageDim(200.0,300.0), PageDim(400.5,500.0)),Locked 4,Author 4))
+      |r4_locked extractPages/right sha=067b1cb1ae4e66cf len=535
+      |r4_locked decryptPdf/right sha=a8ab8f1b728a19ab len=641
+      |r4_locked pdfInfo/wrong Left(pdf_parse_error: IllegalStateException: Incorrect password for encrypted PDF)
+      |r4_locked extractPages/wrong pdf_parse_error: IllegalStateException: Incorrect password for encrypted PDF
+      |r4_locked decryptPdf/wrong pdf_parse_error: IllegalStateException: Incorrect password for encrypted PDF
+      |r5_empty extractOne pages=2 spans=2 media=0 failure= sha=505f20c80885caff
+      |r5_empty pdfInfo/none Right(PdfInfo(2,1399,false,Vector(PageDim(200.0,300.0), PageDim(400.5,500.0)),Empty 5,Author 5))
+      |r5_empty extractPages/none sha=067b1cb1ae4e66cf len=535
+      |r5_empty decryptPdf/none sha=48995051ad00db9c len=639
+      |r5_empty pdfInfo/right Right(PdfInfo(2,1399,false,Vector(PageDim(200.0,300.0), PageDim(400.5,500.0)),Empty 5,Author 5))
+      |r5_empty extractPages/right sha=067b1cb1ae4e66cf len=535
+      |r5_empty decryptPdf/right sha=48995051ad00db9c len=639
+      |r5_empty pdfInfo/wrong Left(pdf_parse_error: IllegalStateException: Incorrect password for encrypted PDF)
+      |r5_empty extractPages/wrong pdf_parse_error: IllegalStateException: Incorrect password for encrypted PDF
+      |r5_empty decryptPdf/wrong pdf_parse_error: IllegalStateException: Incorrect password for encrypted PDF
+      |r5_locked extractOne pages=0 spans=0 media=0 failure= sha=5d7bf14002d73290
+      |r5_locked pdfInfo/none Right(PdfInfo(0,1399,true,List(),,))
+      |r5_locked extractPages/none pdf_encrypted: password required
+      |r5_locked decryptPdf/none pdf_encrypted: password required
+      |r5_locked pdfInfo/right Right(PdfInfo(2,1399,false,Vector(PageDim(200.0,300.0), PageDim(400.5,500.0)),Locked 5,Author 5))
+      |r5_locked extractPages/right sha=067b1cb1ae4e66cf len=535
+      |r5_locked decryptPdf/right sha=fd133f263be38901 len=641
+      |r5_locked pdfInfo/wrong Left(pdf_parse_error: IllegalStateException: Incorrect password for encrypted PDF)
+      |r5_locked extractPages/wrong pdf_parse_error: IllegalStateException: Incorrect password for encrypted PDF
+      |r5_locked decryptPdf/wrong pdf_parse_error: IllegalStateException: Incorrect password for encrypted PDF
+      |r6_empty extractOne pages=2 spans=2 media=0 failure= sha=f17890235fcc62ec
+      |r6_empty pdfInfo/none Right(PdfInfo(2,1399,false,Vector(PageDim(200.0,300.0), PageDim(400.5,500.0)),Empty 6,Author 6))
+      |r6_empty extractPages/none sha=067b1cb1ae4e66cf len=535
+      |r6_empty decryptPdf/none sha=9d9a0b1cf01e0973 len=639
+      |r6_empty pdfInfo/right Right(PdfInfo(2,1399,false,Vector(PageDim(200.0,300.0), PageDim(400.5,500.0)),Empty 6,Author 6))
+      |r6_empty extractPages/right sha=067b1cb1ae4e66cf len=535
+      |r6_empty decryptPdf/right sha=9d9a0b1cf01e0973 len=639
+      |r6_empty pdfInfo/wrong Left(pdf_parse_error: IllegalStateException: Incorrect password for encrypted PDF)
+      |r6_empty extractPages/wrong pdf_parse_error: IllegalStateException: Incorrect password for encrypted PDF
+      |r6_empty decryptPdf/wrong pdf_parse_error: IllegalStateException: Incorrect password for encrypted PDF
+      |r6_locked extractOne pages=0 spans=0 media=0 failure= sha=42928922aa90014b
+      |r6_locked pdfInfo/none Right(PdfInfo(0,1399,true,List(),,))
+      |r6_locked extractPages/none pdf_encrypted: password required
+      |r6_locked decryptPdf/none pdf_encrypted: password required
+      |r6_locked pdfInfo/right Right(PdfInfo(2,1399,false,Vector(PageDim(200.0,300.0), PageDim(400.5,500.0)),Locked 6,Author 6))
+      |r6_locked extractPages/right sha=067b1cb1ae4e66cf len=535
+      |r6_locked decryptPdf/right sha=8ecfc6e1926bb43e len=641
+      |r6_locked pdfInfo/wrong Left(pdf_parse_error: IllegalStateException: Incorrect password for encrypted PDF)
+      |r6_locked extractPages/wrong pdf_parse_error: IllegalStateException: Incorrect password for encrypted PDF
+      |r6_locked decryptPdf/wrong pdf_parse_error: IllegalStateException: Incorrect password for encrypted PDF
+      |""".stripMargin.linesIterator.filter(_.nonEmpty).toSeq
+    val actual = PinnedPdfs.rows
+    val diffs = actual.zipAll(expected, "<missing>", "<missing>").collect {
+      case (a, e) if a != e => s"got  $a\nwant $e"
+    }
+    assert(diffs.isEmpty, diffs.mkString("\n", "\n", "\n") + actual.mkString("\n"))
+  }
+}
+
+/** Every PDF entry point's result over the writer-built files: the text
+  * builders (compressed, raw, with images, each embedded-font family) and
+  * the info builder (plain, and every encryption revision with an empty
+  * and with a real user password). One line per (file, call); binary
+  * results and the extraction row are sha-256 digests.
+  */
+object PinnedPdfs {
+  import graft.extract.{PdfRewrite, PdfText}
+  import graft.io.Ingest
+  import graft.pipeline.{ExtractOut, Pipeline}
+
+  private def sha(b: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(b).map(x => f"${x & 0xff}%02x").mkString
+
+  private def shaOf(s: String): String = sha(s.getBytes("UTF-8")).take(16)
+
+  /** Every `ExtractOut` field, media payloads by sha-256. */
+  def digest(o: ExtractOut): String = {
+    val canon = Seq(o.doc_id,
+      o.spans.map(s => s"${s.kind}|${s.text}|${s.media_ref}|${s.offset}").mkString("\n"),
+      o.mime_type, o.page_count.toString, o.failure, o.title, o.source_path,
+      o.media.map(m => s"${m.media_ref}|${m.mime_type}|${sha(m.content)}").mkString("\n"),
+      o.metadata.toSeq.sorted.mkString("\n")).mkString("\u0001")
+    s"pages=${o.page_count} spans=${o.spans.size} media=${o.media.size} " +
+      s"failure=${o.failure} sha=${shaOf(canon)}"
+  }
+
+  private def bytesOf(r: Either[String, Array[Byte]]): String =
+    r.fold(identity, b => s"sha=${sha(b).take(16)} len=${b.length}")
+
+  private val text = Seq(Seq("Hello World", "Second line here", "third line"), Seq("Page two text"))
+  private val pages = Seq((200.0, 300.0), (400.5, 500.0))
+
+  /** (name, bytes, user password: "" when none is needed). */
+  val files: Seq[(String, Array[Byte], String)] = {
+    val img = (n: Int) => Array.tabulate[Byte](n)(i => (i * 31 + n).toByte)
+    Seq(
+      ("text_flate", PdfText.buildTextPdf(text), ""),
+      ("text_raw", PdfText.buildTextPdf(text, compress = false), ""),
+      ("text_images", PdfText.buildTextPdf(text, compress = true,
+        Seq(Seq((img(40), 4, 3)), Seq((img(12), 2, 2), (img(7), 1, 1)))), ""),
+      ("tt_post", PdfText.buildTextPdfTT(text, unicodeCmap = false), ""),
+      ("tt_unicode", PdfText.buildTextPdfTT(text, unicodeCmap = true), ""),
+      ("cff", PdfText.buildTextPdfCFF(text), ""),
+      ("type1", PdfText.buildTextPdfT1(text), ""),
+      ("plain", PdfBytes.buildPdf(pages, "Plain Title", "Plain Author"), "")) ++
+      (2 to 6).flatMap { r =>
+        Seq(
+          (s"r${r}_empty", PdfBytes.buildPdf(pages, s"Empty $r", s"Author $r", Some(("", r))), ""),
+          (s"r${r}_locked", PdfBytes.buildPdf(pages, s"Locked $r", s"Author $r",
+            Some((s"pw-$r", r))), s"pw-$r"))
+      }
+  }
+
+  def rows: Seq[String] = files.flatMap { case (name, bytes, pw) =>
+    val passwords = Seq("none" -> None, "right" -> Some(pw), "wrong" -> Some("wrong"))
+    Seq(s"$name extractOne ${digest(Pipeline.extractOne(Ingest.toRawDoc(s"pinned/$name.pdf", bytes)))}") ++
+      passwords.flatMap { case (label, p) =>
+        Seq(
+          s"$name pdfInfo/$label ${PdfBytes.pdfInfo(bytes, p)}",
+          s"$name extractPages/$label ${bytesOf(PdfRewrite.extractPages(bytes, Seq(1, 0), p))}",
+          s"$name decryptPdf/$label ${bytesOf(PdfRewrite.decryptPdf(bytes, p.getOrElse("")))}")
+      }
+  }
 }
 
 /** PDFs whose structure is deeper than any real file's. */
@@ -554,6 +819,23 @@ object HostilePdfs {
     pdf.obj(2, "<< /Type /Pages /Kids [ 3 0 R ] /Count 1 >>")
     pdf.obj(3, "<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 612 792 ] >>")
     pdf.finish(" /Nest " + "[" * depth + "]" * depth)
+  }
+
+  /** One page whose Flate content stream inflates to 1 MiB past
+    * [[graft.extract.Bin.MaxEntryBytes]] of zeros (about 260 KB on disk).
+    */
+  lazy val flateBomb: Array[Byte] = {
+    val z = new java.io.ByteArrayOutputStream()
+    val d = new java.util.zip.DeflaterOutputStream(z)
+    val chunk = new Array[Byte](1 << 20)
+    for (_ <- 0L to (graft.extract.Bin.MaxEntryBytes >> 20)) d.write(chunk)
+    d.close()
+    val pdf = new graft.extract.Bin.PdfWriter
+    pdf.obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
+    pdf.obj(2, "<< /Type /Pages /Kids [ 3 0 R ] /Count 1 >>")
+    pdf.obj(3, "<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 612 792 ] /Contents 4 0 R >>")
+    pdf.stream(4, s"<< /Filter /FlateDecode /Length ${z.size} >>", z.toByteArray)
+    pdf.finish("")
   }
 
   /** One page under a chain of `depth` single-kid /Pages nodes. */
