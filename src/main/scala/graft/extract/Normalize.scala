@@ -175,38 +175,93 @@ object Normalize {
 
   /** DataLab/marker `{N}------` pagination (0-based N, emitted as page N+1;
     * datalab_provider/utils.py:95-108) + image rename-map 3-pass rewrite
-    * (utils.py:24-57,114-131). `imageRenames` maps the provider's original
-    * file names in first-seen order to normalized `img-K.<ext>`.
+    * (utils.py:24-57,114-131). `originalImageNames` are the provider's
+    * original file names in first-seen order — distinct, none holding a `)`,
+    * as [[extractImageNames]] returns them — and are renamed to
+    * `img-K.<ext>`.
     */
   private val MdImageRe: Regex = """!\[(.*?)\]\((.*?)\)""".r
 
   def datalab(content: String, originalImageNames: Seq[String]): Normalized = {
-    var md = rewriteDatalabBreaks(content)
+    val md = rewriteDatalabBreaks(content)
     // like the reference (datalab_provider/utils.py:127-131), the image
     // normalization passes run only when the response carried images
     if (originalImageNames.isEmpty) return Normalized(md, Nil)
-    val renames: Seq[(String, NormImage)] = originalImageNames.zipWithIndex.map {
-      case (orig, i) =>
-        val ext = orig.split('.').last.toLowerCase
-        val id = s"img-$i"
-        orig -> NormImage(id, s"$id.$ext", s"image/$ext", "")
+    val names = originalImageNames.toIndexedSeq
+    require(names.distinct.length == names.length && !names.exists(_.contains(')')),
+      "datalab image names must be distinct and hold no `)`")
+    val images = names.indices.map { i =>
+      val ext = names(i).split('.').last.toLowerCase
+      val id = s"img-$i"
+      NormImage(id, s"$id.$ext", s"image/$ext", "")
     }
     // pass 1: replace file paths inside markdown links
-    renames.foreach { case (orig, img) => md = md.replace(s"]($orig)", s"](${img.filename})") }
-    // pass 2: fix alt texts to proper ids
-    md = MdImageRe.replaceAllIn(md, m => {
+    val linked = replaceEach(md, "](", names, j => "](" + images(j).filename)
+    // pass 2: fix alt texts to proper ids — the first rename whose new or
+    // original name is the link target
+    val renameOf = new java.util.HashMap[String, NormImage]
+    names.indices.foreach { i =>
+      renameOf.putIfAbsent(images(i).filename, images(i))
+      renameOf.putIfAbsent(names(i), images(i))
+    }
+    val aliased = MdImageRe.replaceAllIn(linked, m => {
       val file = m.group(2)
-      val hit = renames.collectFirst {
-        case (orig, img) if file == img.filename || file == orig =>
-          Markdown.createImageReference(img.id, file)
-      }
-      Regex.quoteReplacement(hit.getOrElse(Markdown.createImageReference(m.group(1), file)))
+      val hit = renameOf.get(file)
+      Regex.quoteReplacement(Markdown.createImageReference(if (hit == null) m.group(1) else hit.id, file))
     })
     // pass 3: any remaining empty-alt refs
-    renames.foreach { case (_, img) =>
-      md = md.replace(s"![](${img.filename})", Markdown.createImageReference(img.id, img.filename))
+    Normalized(replaceEach(aliased, "![](", images.map(_.filename),
+      j => Markdown.createImageReference(images(j).id, images(j).filename).dropRight(1)), images)
+  }
+
+  /** `keys.indices.foldLeft(md)((s, j) => s.replace(lead + keys(j) + ")", to(j) + ")"))`
+    * in one scan, for distinct keys none of which holds a `)`. Neither `lead`
+    * nor any key holds a `)`, so every match ends at a `)` and lies after the
+    * `)` before it, and a replacement keeps that one `)`. Each `)`-closed
+    * segment is therefore rewritten on its own: by the lowest-numbered key
+    * it ends with, then by the lowest-numbered later key the result ends
+    * with, and so on — the order the sequential replaces apply, including
+    * when a name holds `](` and a replacement ends in another name. A
+    * segment is tried only at the key lengths it can hold, and rewritten in
+    * place at the end of the output, so each try costs one lead compare plus,
+    * where the lead is there, one lookup of that length.
+    */
+  private def replaceEach(md: String, lead: String, keys: IndexedSeq[String], to: Int => String): String = {
+    val index = new java.util.HashMap[String, Integer]
+    keys.indices.foreach(j => index.put(keys(j), j))
+    val lengths = keys.map(_.length).distinct.sorted.toArray
+    val out = new java.lang.StringBuilder(md.length + 16 * keys.length)
+    def leadAt(q: Int): Boolean = {
+      var k = 0
+      while (k < lead.length && out.charAt(q + k) == lead.charAt(k)) k += 1
+      k == lead.length
     }
-    Normalized(md, renames.map(_._2))
+    var from = 0
+    var close = md.indexOf(')')
+    while (close >= 0) {
+      val start = out.length
+      out.append(md, from, close)
+      var next = 0
+      var best = 0
+      while (best >= 0) {
+        best = -1
+        var bestAt = -1
+        var i = 0
+        while (i < lengths.length && out.length - lengths(i) - lead.length >= start) {
+          val q = out.length - lengths(i) - lead.length
+          if (leadAt(q)) {
+            val j = index.get(out.substring(q + lead.length))
+            if (j != null && j >= next && (best < 0 || j < best)) { best = j; bestAt = q }
+          }
+          i += 1
+        }
+        if (best >= 0) { out.setLength(bestAt); out.append(to(best)); next = best + 1 }
+      }
+      out.append(')')
+      from = close + 1
+      close = md.indexOf(')', from)
+    }
+    out.append(md, from, md.length).toString
   }
 
   // ------------------------------------------------------------ markitdown
@@ -254,22 +309,24 @@ object Normalize {
       elementsByPage: Seq[(Int, Seq[String])], // (page, element markdowns sorted by id)
       imageMimes: Seq[String] = Nil): Normalized = {
     val firstMarker = Markdown.createPageBreak(1, newlineSeparators = 1).replaceAll("^\\n+", "")
-    var md = firstMarker + initialMarkdown.replaceAll("^\\s+", "")
-    val maxPage = if (elementsByPage.isEmpty) 1 else elementsByPage.map(_._1).max
-    val byPage = elementsByPage.toMap
+    val src = firstMarker + initialMarkdown.replaceAll("^\\s+", "")
+    // every marker goes in before the search offset, so searching the source
+    // from the last anchor's end finds what searching the marked-up text
+    // would, and the output is appended once
+    val out = new java.lang.StringBuilder(src.length + 64 * elementsByPage.size)
+    var copied = 0 // src(0 until copied) is in `out`
     var insertionOffset = firstMarker.length
-    (2 to maxPage).foreach { pageNum =>
-      byPage.get(pageNum).foreach { elems =>
-        elems.find(_.nonEmpty).foreach { anchor =>
-          val idx = md.indexOf(anchor, insertionOffset)
-          if (idx >= 0) {
-            val marker = Markdown.createPageBreak(pageNum, newlineSeparators = 1)
-            md = md.substring(0, idx) + marker + md.substring(idx)
-            insertionOffset = idx + marker.length + anchor.length
-          }
+    elementsByPage.toMap.toSeq.filter(_._1 >= 2).sortBy(_._1).foreach { case (pageNum, elems) =>
+      elems.find(_.nonEmpty).foreach { anchor =>
+        val idx = src.indexOf(anchor, insertionOffset)
+        if (idx >= 0) {
+          out.append(src, copied, idx).append(Markdown.createPageBreak(pageNum, newlineSeparators = 1))
+          copied = idx
+          insertionOffset = idx + anchor.length
         }
       }
     }
+    var md = out.append(src, copied, src.length).toString
     // single-pass placeholder replacement (a replaceFirst loop would rescan
     // and recopy the document per image)
     val images = ArrayBuffer.empty[NormImage]

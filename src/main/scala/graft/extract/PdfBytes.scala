@@ -43,6 +43,17 @@ object PdfBytes {
   /** Stream dict + RAW (still-encoded) payload bytes. */
   final case class PStream(dict: PDict, data: Array[Byte]) extends PObj
 
+  /** `o` as a `T`, or an [[IllegalStateException]] naming both types. The
+    * parser's type checks go through here, not through casts: once a cast
+    * site is hot, HotSpot throws a preallocated `ClassCastException` with a
+    * null message, and the failure row would depend on JIT history.
+    */
+  private[extract] def as[T <: PObj](o: PObj)(implicit t: scala.reflect.ClassTag[T]): T = o match {
+    case v: T => v
+    case _ => throw new IllegalStateException(
+      s"expected ${t.runtimeClass.getSimpleName}, got ${o.getClass.getSimpleName.stripSuffix("$")}")
+  }
+
   final case class PageDim(width: Double, height: Double)
   final case class PdfInfo(
       pageCount: Int,
@@ -181,7 +192,7 @@ object PdfBytes {
             val m = Map.newBuilder[String, PObj]
             skipWs()
             while (!(peek == '>' && pos + 1 < d.length && d(pos + 1) == '>')) {
-              val k = obj().asInstanceOf[PName].v
+              val k = as[PName](obj()).v
               m += k -> obj()
               skipWs()
             }
@@ -595,7 +606,7 @@ object PdfBytes {
           p.skipWs()
           if (p.peek == 't') {
             p.expect("trailer")
-            localTrailer = p.obj().asInstanceOf[PDict].m
+            localTrailer = as[PDict](p.obj()).m
             localTrailer.foreach { case (k, v) => if (!trailer.contains(k)) trailer += k -> v }
             done = true
           } else {
@@ -634,11 +645,11 @@ object PdfBytes {
         val dict = stream.dict.m
         dict.foreach { case (k, v) => if (!trailer.contains(k)) trailer += k -> v }
         val decoded = decode(stream)
-        val w = dict("W").asInstanceOf[PArr].items.map(_.asInstanceOf[PNum].v.toInt)
-        val size = dict("Size").asInstanceOf[PNum].v.toInt
+        val w = as[PArr](dict("W")).items.map(as[PNum](_).v.toInt)
+        val size = as[PNum](dict("Size")).v.toInt
         val index: Seq[(Int, Int)] = dict.get("Index") match {
           case Some(PArr(items)) =>
-            items.map(_.asInstanceOf[PNum].v.toInt).grouped(2).map(g => (g(0), g(1))).toSeq
+            items.map(as[PNum](_).v.toInt).grouped(2).map(g => (g(0), g(1))).toSeq
           case _ => Seq((0, size))
         }
         val rowLen = w.sum
@@ -672,7 +683,7 @@ object PdfBytes {
 
     /** Parses `<< dict >> stream ... endstream` with the cursor after "obj". */
     private def parseStreamAt(p: Parser): PStream = {
-      val dict = p.obj().asInstanceOf[PDict]
+      val dict = as[PDict](p.obj())
       p.skipWs()
       p.expect("stream")
       if (p.peek == '\r') p.pos += 1
@@ -932,8 +943,8 @@ object PdfBytes {
             }
           case _ => return UnsupportedHandler
         }
-        val o = doc.resolve(enc("O")).asInstanceOf[PStr].bytes
-        val u = doc.resolve(enc("U")).asInstanceOf[PStr].bytes
+        val o = as[PStr](doc.resolve(enc("O"))).bytes
+        val u = as[PStr](doc.resolve(enc("U"))).bytes
         // /P is often serialized as an unsigned 32-bit value (e.g.
         // 4294967292 for -4); Double→Int SATURATES at Int.MaxValue, so go
         // through Long to get two's-complement wrapping
@@ -949,7 +960,7 @@ object PdfBytes {
         }
         val id0 = doc.trailer.get("ID").map(doc.resolve(_)) match {
           case Some(PArr(items)) if items.nonEmpty =>
-            doc.resolve(items.head).asInstanceOf[PStr].bytes
+            as[PStr](doc.resolve(items.head)).bytes
           case _ => Array.emptyByteArray
         }
         def verify(pw: Array[Byte]) =
@@ -983,8 +994,7 @@ object PdfBytes {
         pages += page
         val box = doc.resolve(page.getOrElse("MediaBox",
           throw new IllegalStateException("page without MediaBox")))
-        val nums = box.asInstanceOf[PArr].items.map(v =>
-          doc.resolve(v).asInstanceOf[PNum].v)
+        val nums = as[PArr](box).items.map(v => as[PNum](doc.resolve(v)).v)
         dims += PageDim(math.abs(nums(2) - nums(0)), math.abs(nums(3) - nums(1)))
       }
       val infoRef = doc.trailer.get("Info")

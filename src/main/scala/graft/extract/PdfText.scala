@@ -350,7 +350,7 @@ object PdfText {
       imageCache: mutable.Map[Int, ImageRef]): PageContent = {
     val (w, h) = pageDict.get("MediaBox").map(doc.resolve(_)) match {
       case Some(PArr(ns)) if ns.length == 4 =>
-        val v = ns.map(x => doc.resolve(x).asInstanceOf[PNum].v)
+        val v = ns.map(x => as[PNum](doc.resolve(x)).v)
         (math.abs(v(2) - v(0)), math.abs(v(3) - v(1)))
       case _ => (612.0, 792.0)
     }
@@ -489,7 +489,7 @@ object PdfText {
             case PName("Form") =>
               val formMatrix = doc.resolve(xm.getOrElse("Matrix", PNull)) match {
                 case PArr(ns) if ns.length == 6 =>
-                  ns.map(v => doc.resolve(v).asInstanceOf[PNum].v).toArray
+                  ns.map(v => as[PNum](doc.resolve(v)).v).toArray
                 case _ => identity
               }
               val formRes = xm.get("Resources").map(doc.dict).getOrElse(res)

@@ -3,36 +3,42 @@ package graft.functions
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, InterpretedOrdering, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Expression, InterpretedOrdering, SortOrder, UnsafeArrayData, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StructType}
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.array.ByteArrayMethods
 
-/** Sort-on-serialize struct collector: `array_sort(collect_list(s))` as ONE
-  * aggregate whose map-side partial buffers are ALREADY sorted when they
-  * cross the shuffle, and whose final step BALANCED-merges the queued
-  * pre-sorted runs in O(n log R).
+/** Sort-on-serialize struct collector: a group's structs as ONE sorted
+  * array, in one aggregate whose map-side partial buffers are ALREADY
+  * sorted when they cross the shuffle, and whose final step
+  * BALANCED-merges the queued pre-sorted runs in O(n log R).
   *
-  * Motivation (optimization guide §2.3/§2.4 — shuffle fewer bytes, remove
-  * exchanges): the round-2..5 skew-aware assemble was TWO aggregations —
-  * `groupBy(doc_id, salt)` pre-sort then `groupBy(doc_id)` k-way merge —
-  * which moves every span payload through TWO exchanges. This aggregate
-  * keeps both halves of that design (parallel map-side sorting, merge-only
-  * reduce side) inside one aggregation, so the payload crosses ONE
-  * exchange: partial buffers sort in [[serialize]] (map side, parallel
-  * across however many tasks hold the document's spans), and [[merge]]
-  * (reduce side) only ever merges pre-sorted runs. A pathologically long
-  * document still converges on a single reducer — exactly as the two-phase
-  * version's final merge did — but its sort work stays spread across the
-  * map tasks and its bytes now cross the wire once, not twice.
+  * Work placement (optimization guide §2.3/§2.4 — shuffle fewer bytes,
+  * remove exchanges): partial buffers sort in [[serialize]] (map side,
+  * parallel across however many tasks hold the group's rows) and [[merge]]
+  * (reduce side) only ever merges pre-sorted runs, so the payload crosses
+  * ONE exchange. A pathologically long group still converges on a single
+  * reducer, but its sort work stays spread across the map tasks.
   *
-  * Ordering is the full-struct interpreted ordering — field by field,
-  * the identical total order `array_sort` applies to struct elements — so
-  * the result is bit-for-bit the `array_sort(collect_list(...))` array even
-  * when offsets collide.
+  * Order: the `key` field first, then the remaining fields in struct
+  * order (naming the first field gives the full-struct order). Every field
+  * compares ascending with nulls first — the order `array_sort` gives a
+  * struct whose fields are laid out that way — so ties break exactly as
+  * `array_sort(collect_list(...))` breaks them. An int leading field is
+  * compared directly; the interpreted ordering runs only on ties.
+  *
+  * Bytes: [[update]] evaluates the child through one generated
+  * `UnsafeProjection` (a null struct is skipped); rows that arrive in order
+  * form a run without a sort; a run is shipped and returned as one
+  * `UnsafeArrayData` block ([[SortedRunsBuf.block]]), and [[deserialize]]
+  * takes zero-copy `UnsafeRow` views of that block's elements. A group that
+  * sits in one partial crosses the shuffle as the block its map side built
+  * and comes out of [[eval]] as that same block.
   */
 case class SortedStructCollect(
     child: Expression,
+    key: String,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[SortedRunsBuf] {
@@ -40,7 +46,9 @@ case class SortedStructCollect(
   override def children: Seq[Expression] = Seq(child)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StructType => TypeCheckResult.TypeCheckSuccess
+    case st: StructType if st.fieldNames.contains(key) => TypeCheckResult.TypeCheckSuccess
+    case st: StructType => TypeCheckResult.TypeCheckFailure(
+      s"sorted_struct_collect key `$key` is not a field of ${st.sql}")
     case other => TypeCheckResult.TypeCheckFailure(
       s"sorted_struct_collect needs a struct input, got ${other.sql}")
   }
@@ -52,65 +60,41 @@ case class SortedStructCollect(
   private def structType: StructType = child.dataType.asInstanceOf[StructType]
 
   // per-task-instance helpers (expressions are instantiated per task)
-  @transient private lazy val toUnsafe: UnsafeProjection =
-    UnsafeProjection.create(structType)
-  @transient private lazy val ordering: Ordering[InternalRow] =
-    InterpretedOrdering.forSchema(structType.fields.toIndexedSeq.map(_.dataType))
-      .asInstanceOf[Ordering[InternalRow]]
+  @transient private lazy val order: StructOrder =
+    new StructOrder(structType, structType.fieldIndex(key))
+  @transient private lazy val project: UnsafeProjection = UnsafeProjection.create(Seq(child))
 
-  override def createAggregationBuffer(): SortedRunsBuf = new SortedRunsBuf
+  override def createAggregationBuffer(): SortedRunsBuf = new SortedRunsBuf(order)
 
   override def update(buf: SortedRunsBuf, input: InternalRow): SortedRunsBuf = {
-    val v = child.eval(input)
-    if (v != null) {
-      // UnsafeProjection re-targets a shared buffer per call — copy() makes
-      // the row self-contained (and cheap to serialize: raw bytes)
-      buf.append(toUnsafe(v.asInstanceOf[InternalRow]).copy())
-    }
+    val row = project(input)
+    // the projection re-targets a shared buffer per call: copy() makes the
+    // struct self-contained
+    if (!row.isNullAt(0)) buf.append(row.getStruct(0, order.fields).copy())
     buf
   }
 
   // O(1): incoming runs queue up; the balanced collapse happens once, in
   // eval/serialize — NOT pairwise per merge() call, which would cost
-  // O(n·R) on a document scattered over R map partials
+  // O(n·R) on a group scattered over R map partials
   override def merge(buf: SortedRunsBuf, other: SortedRunsBuf): SortedRunsBuf = {
-    buf.absorb(other, ordering)
+    buf.absorb(other)
     buf
   }
 
-  override def eval(buf: SortedRunsBuf): Any =
-    new GenericArrayData(buf.collapsed(ordering).toArray[Any])
-
-  override def serialize(buf: SortedRunsBuf): Array[Byte] = {
-    val run = buf.collapsed(ordering) // map-side sort: partials ship pre-sorted
-    val bos = new java.io.ByteArrayOutputStream(16 + run.length * 64)
-    val out = new java.io.DataOutputStream(bos)
-    out.writeInt(run.length)
-    run.foreach { r =>
-      val bytes = r.getBytes
-      out.writeInt(bytes.length)
-      out.write(bytes)
-    }
-    bos.toByteArray
+  override def eval(buf: SortedRunsBuf): Any = {
+    val bytes = buf.block
+    val arr = new UnsafeArrayData
+    arr.pointTo(bytes, Platform.BYTE_ARRAY_OFFSET, bytes.length)
+    arr
   }
 
+  // map-side sort: partials ship pre-sorted, as one array block
+  override def serialize(buf: SortedRunsBuf): Array[Byte] = buf.block
+
   override def deserialize(bytes: Array[Byte]): SortedRunsBuf = {
-    val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val buf = new SortedRunsBuf
-    val run = new Array[UnsafeRow](n)
-    var i = 0
-    val fields = structType.length
-    while (i < n) {
-      val len = in.readInt()
-      val b = new Array[Byte](len)
-      in.readFully(b)
-      val row = new UnsafeRow(fields)
-      row.pointTo(b, len)
-      run(i) = row
-      i += 1
-    }
-    buf.addRun(run) // serialize() sorted it before writing
+    val buf = new SortedRunsBuf(order)
+    buf.addBlock(bytes) // serialize() sorted it before writing
     buf
   }
 
@@ -123,41 +107,70 @@ case class SortedStructCollect(
   override def prettyName: String = "sorted_struct_collect"
 }
 
-/** Run accumulator: `update` appends to an unsorted tail, `merge` queues
-  * whole pre-sorted runs in O(1), and `collapsed` folds everything into
-  * ONE sorted run by BALANCED pairwise merging — O(n log R) over R queued
-  * runs, never the O(n·R) a sequential fold would cost on a document
-  * scattered across many map partials.
+/** The collector's order over structs of type `st`: field number `key`
+  * first, then the other fields in struct order, each ascending with nulls
+  * first. An int key field compares without the interpreted ordering,
+  * which then breaks only ties and nulls.
   */
-final class SortedRunsBuf {
-  private val runs = scala.collection.mutable.ArrayDeque.empty[Array[UnsafeRow]]
-  private val cur = scala.collection.mutable.ArrayBuffer.empty[UnsafeRow]
+final class StructOrder(st: StructType, key: Int) {
+  val fields: Int = st.length
+  private val intLead = if (st(key).dataType == IntegerType) key else -1
+  private val full = new InterpretedOrdering(
+    (key +: st.indices.filter(_ != key)).map(i =>
+      SortOrder(BoundReference(i, st(i).dataType, nullable = true), Ascending)))
 
-  def append(r: UnsafeRow): Unit = cur += r
+  def compare(a: UnsafeRow, b: UnsafeRow): Int = {
+    if (intLead >= 0 && !a.isNullAt(intLead) && !b.isNullAt(intLead)) {
+      val c = Integer.compare(a.getInt(intLead), b.getInt(intLead))
+      if (c != 0) return c
+    }
+    full.compare(a, b)
+  }
+}
 
-  def addRun(run: Array[UnsafeRow]): Unit = if (run.nonEmpty) runs += run
+/** Run accumulator: `update` appends to a tail that stays a run while its
+  * rows arrive in order (one compare per append), `merge` queues whole
+  * pre-sorted runs in O(1), and `block` folds everything into ONE sorted
+  * run by BALANCED pairwise merging — O(n log R) over R queued runs, never
+  * the O(n·R) a sequential fold would cost on a group scattered across many
+  * map partials.
+  */
+final class SortedRunsBuf(order: StructOrder) {
+  import SortedRunsBuf.Run
 
-  /** Steal the other buffer's runs (plus its unsorted tail, sorted). */
-  def absorb(other: SortedRunsBuf, ord: Ordering[InternalRow]): Unit = {
-    other.flushCur(ord)
+  private val runs = scala.collection.mutable.ArrayDeque.empty[Run]
+  private val tail = scala.collection.mutable.ArrayBuffer.empty[UnsafeRow]
+  private var tailSorted = true
+
+  def append(r: UnsafeRow): Unit = {
+    if (tailSorted && tail.nonEmpty && order.compare(tail.last, r) > 0) tailSorted = false
+    tail += r
+  }
+
+  /** Queue a block [[block]] wrote; its rows are read only if a merge needs them. */
+  def addBlock(bytes: Array[Byte]): Unit = runs += new Run(bytes, null)
+
+  /** Steal the other buffer's runs (plus its tail, as a run). */
+  def absorb(other: SortedRunsBuf): Unit = {
+    other.flushTail()
     runs ++= other.runs
     other.runs.clear()
   }
 
-  private def flushCur(ord: Ordering[InternalRow]): Unit =
-    if (cur.nonEmpty) {
-      val arr = cur.toArray
-      java.util.Arrays.sort(arr, ord.asInstanceOf[Ordering[UnsafeRow]])
-      runs += arr
-      cur.clear()
+  private def flushTail(): Unit =
+    if (tail.nonEmpty) {
+      val arr = tail.toArray
+      if (!tailSorted) java.util.Arrays.sort(arr, (a: UnsafeRow, b: UnsafeRow) => order.compare(a, b))
+      runs += new Run(null, arr)
+      tail.clear()
+      tailSorted = true
     }
 
-  private def mergeTwo(a: Array[UnsafeRow], b: Array[UnsafeRow],
-      ord: Ordering[InternalRow]): Array[UnsafeRow] = {
+  private def mergeTwo(a: Array[UnsafeRow], b: Array[UnsafeRow]): Array[UnsafeRow] = {
     val out = new Array[UnsafeRow](a.length + b.length)
     var i = 0; var j = 0; var k = 0
     while (i < a.length && j < b.length) {
-      if (ord.compare(a(i), b(j)) <= 0) { out(k) = a(i); i += 1 }
+      if (order.compare(a(i), b(j)) <= 0) { out(k) = a(i); i += 1 }
       else { out(k) = b(j); j += 1 }
       k += 1
     }
@@ -166,26 +179,81 @@ final class SortedRunsBuf {
     out
   }
 
-  /** The single fully-sorted run; idempotent (the result is re-queued). */
-  def collapsed(ord: Ordering[InternalRow]): Array[UnsafeRow] = {
-    flushCur(ord)
-    if (runs.isEmpty) return Array.empty
+  /** The single fully-sorted run as one `UnsafeArrayData` block;
+    * idempotent (the result stays queued).
+    */
+  def block: Array[Byte] = {
+    flushTail()
+    if (runs.isEmpty) return SortedRunsBuf.toBlock(Array.empty)
     // balanced fold: always merge the two FRONT runs and re-queue the
     // result at the BACK — every row participates in ~log R merges
     while (runs.length > 1) {
       val a = runs.removeHead()
       val b = runs.removeHead()
-      runs += mergeTwo(a, b, ord)
+      runs += new Run(null, mergeTwo(a.rows(order.fields), b.rows(order.fields)))
     }
-    runs.head
+    runs.head.block
+  }
+}
+
+object SortedRunsBuf {
+  /** A sorted run: its `UnsafeArrayData` block, its rows, or both. */
+  private final class Run(private var bytes: Array[Byte], private var rs: Array[UnsafeRow]) {
+    def rows(fields: Int): Array[UnsafeRow] = {
+      if (rs == null) {
+        val arr = new UnsafeArrayData
+        arr.pointTo(bytes, Platform.BYTE_ARRAY_OFFSET, bytes.length)
+        rs = Array.tabulate(arr.numElements)(arr.getStruct(_, fields))
+      }
+      rs
+    }
+    def block: Array[Byte] = {
+      if (bytes == null) bytes = toBlock(rs)
+      bytes
+    }
+  }
+
+  /** Bytes of an `UnsafeArrayData` block holding `rowBytes` bytes of `n`
+    * word-aligned struct elements, checked against the JVM's array limit.
+    */
+  private[graft] def blockSize(n: Int, rowBytes: Long): Int = {
+    val total = UnsafeArrayData.calculateHeaderPortionInBytes(n.toLong) + 8L * n + rowBytes
+    if (total > ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH)
+      throw new IllegalStateException(s"sorted_struct_collect: a run of $n structs takes $total bytes, " +
+        s"past the ${ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH}-byte array limit")
+    total.toInt
+  }
+
+  /** The `UnsafeArrayData` layout: element count, null bits (none here),
+    * one (offset << 32 | size) word per element, then the elements' bytes.
+    */
+  private def toBlock(rows: Array[UnsafeRow]): Array[Byte] = {
+    var rowBytes = 0L
+    rows.foreach(r => rowBytes += ByteArrayMethods.roundNumberOfBytesToNearestWord(r.getSizeInBytes))
+    val bytes = new Array[Byte](blockSize(rows.length, rowBytes))
+    val base = Platform.BYTE_ARRAY_OFFSET
+    Platform.putLong(bytes, base, rows.length.toLong)
+    val slots = UnsafeArrayData.calculateHeaderPortionInBytes(rows.length)
+    var at = slots + 8 * rows.length
+    var i = 0
+    while (i < rows.length) {
+      val r = rows(i)
+      val size = r.getSizeInBytes
+      r.writeToMemory(bytes, base + at)
+      Platform.putLong(bytes, base + slots + 8L * i, (at.toLong << 32) | size)
+      at += ByteArrayMethods.roundNumberOfBytesToNearestWord(size)
+      i += 1
+    }
+    bytes
   }
 }
 
 object SortedStructCollect {
-  /** Aggregate Column: the group's structs collected and sorted under the
-    * full-struct order — `array_sort(collect_list(s))` with one exchange.
+  /** Aggregate Column: the group's structs as one array sorted by field
+    * `key`, ties broken by the other fields in struct order — with one
+    * exchange and no re-sort of rows that arrive in order.
     */
-  def sortedCollect(s: Column): Column =
-    GraftBridge.column(SortedStructCollect(GraftBridge.expression(s))
+  def sortedCollect(s: Column, key: String): Column =
+    GraftBridge.column(SortedStructCollect(GraftBridge.expression(s), key)
       .toAggregateExpression())
 }

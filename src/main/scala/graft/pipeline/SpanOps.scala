@@ -5,9 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Relational span operators over the exploded representation
-  * `(doc_id, kind, text, media_ref, offset)` — everything here is built-in
-  * Catalyst expressions (higher-order functions, windows, two-phase
-  * aggregation); no UDFs, so the whole stage stays inside whole-stage codegen.
+  * `(doc_id, kind, text, media_ref, offset)` — Catalyst expressions
+  * (windows, two-phase aggregation) and the native
+  * [[graft.functions.SortedStructCollect]] aggregate; no UDFs.
   */
 object SpanOps {
 
@@ -17,42 +17,25 @@ object SpanOps {
       .select(col("doc_id"), col("s.kind").as("kind"), col("s.text").as("text"),
         col("s.media_ref").as("media_ref"), col("s.offset").as("offset"))
 
-  /** flat spans → nested, ordered by offset: the span-assemble stage
-    * (the ordered-concat aggregation every provider performs, e.g.
-    * mistral_provider/provider.py:122-135). `array_sort(collect_list(struct))`
-    * sorts by the struct's leading `offset` field, so ordering never depends
-    * on partition iteration order.
-    */
-  def assemble(flat: DataFrame): DataFrame =
-    flat.groupBy(col("doc_id"))
-      .agg(array_sort(collect_list(struct(
-        col("offset"), col("kind"), col("text"), col("media_ref")))).as("sorted"))
-      .select(col("doc_id"), transform(col("sorted"), s =>
-        struct(s("kind").as("kind"), s("text").as("text"),
-          s("media_ref").as("media_ref"), s("offset").as("offset"))).as("spans"))
-
-  /** Skew-aware assemble for pathologically long documents: ONE aggregation
-    * whose map-side partial buffers sort before they ship and whose final
-    * step linear-merges pre-sorted runs
-    * ([[graft.functions.SortedStructCollect]]).
-    *
-    * Round-6 optimization (guide §2.3/§2.4): rounds 2-5 ran this as TWO
-    * aggregations — `groupBy(doc_id, salt)` pre-sort, then `groupBy(doc_id)`
-    * k-way merge — so every span payload crossed TWO exchanges. The
-    * sort-on-serialize aggregate keeps the same work placement (sorting
-    * parallel on the map side wherever the spans already sit, an O(n)
-    * merge per document on the reduce side) while the payload crosses ONE
-    * exchange: half the shuffle bytes, one less barrier. Plan shape:
-    * 2 Exchanges → 1 (plans/r06/pipeline_assemble_*.txt).
+  /** flat spans → nested, ordered by offset: the span-assemble stage (the
+    * ordered-concat aggregation every provider performs, e.g.
+    * mistral_provider/provider.py:122-135). ONE aggregation builds each
+    * document's spans straight in their final `(kind, text, media_ref,
+    * offset)` shape ([[graft.functions.SortedStructCollect]] keyed on
+    * `offset`): map-side partial buffers sort before they ship, the final
+    * step merges pre-sorted runs, and spans that arrive in offset order —
+    * explode emits them that way — are never re-sorted. Ties on `offset`
+    * break by kind, text, media_ref, the order
+    * `array_sort(collect_list(struct(offset, kind, text, media_ref)))`
+    * gives, so ordering never depends on partition iteration order. The
+    * payload crosses ONE exchange, and no projection runs after the
+    * aggregate.
     */
   def assembleSkewAware(flat: DataFrame): DataFrame =
     flat
       .groupBy(col("doc_id"))
       .agg(graft.functions.SortedStructCollect.sortedCollect(struct(
-        col("offset"), col("kind"), col("text"), col("media_ref"))).as("sorted"))
-      .select(col("doc_id"), transform(col("sorted"), s =>
-        struct(s("kind").as("kind"), s("text").as("text"),
-          s("media_ref").as("media_ref"), s("offset").as("offset"))).as("spans"))
+        col("kind"), col("text"), col("media_ref"), col("offset")), "offset").as("spans"))
 
   /** Renumber page_break spans 1..N per document in offset order — the
     * relational form of the providers' stateful marker renumbering

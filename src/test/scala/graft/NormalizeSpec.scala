@@ -1,6 +1,6 @@
 package graft
 
-import graft.extract.{NormImage, Normalize}
+import graft.extract.{NormImage, Normalize, Normalized}
 import graft.md.Markdown
 import graft.model.SpanKind
 import org.scalatest.funsuite.AnyFunSuite
@@ -147,5 +147,123 @@ class NormalizeSpec extends AnyFunSuite {
       val fm = AmbrGoldens.frontmatterField(g, "page_count").map(_.toInt)
       assert(fm.contains(Markdown.pageCount(Markdown.parse(g))), s"provider=$p")
     }
+  }
+
+  // ------------------------------------------- linear upstage and datalab
+
+  /** Inputs whose normalized output is pinned: synthetic `md_upstage` and
+    * `md_datalab` docs (ordinary and long), upstage anchor edge cases and
+    * datalab image names that `extractImageNames` returns, including names
+    * holding `](`, `![](` or an `img-` file name after the extension dot.
+    */
+  private object Pinned {
+    private def synthetic(kind: String, long: Boolean): Seq[graft.model.RawDoc] = {
+      val idx = if (long) (0L until 400000L by 1000L) else (1L until 3000L).filter(_ % 1000 != 0)
+      idx.iterator.filter(i => graft.io.SyntheticDocs.payloadKindFor(i) == kind)
+        .take(if (long) 3 else 60).map(i => graft.io.SyntheticDocs.generate(5, i).raw).toSeq
+    }
+    private def dialect(r: graft.model.RawDoc) = Normalize.dialect(r.payload_kind, r.raw, r.pages)
+    private def up(raw: String, anchors: (Int, Seq[String])*) = Normalize.upstage(raw, anchors)
+    // no input holds an image named only by dots (`![](.)`): such a name
+    // has no extension and fails the whole document, an open fault that is
+    // kept out of the pinned digests
+    private def dl(raw: String): Normalized = Normalize.dialect("md_datalab", raw, Nil)
+
+    private val fuzzTokens = IndexedSeq("![", "](", ")", "]", "(", "![](", "a", "b.png", "a.", "img-0.png",
+      "img-1.b", "c", " ", "\n", "{0}------", "x](y", "data:", "A.PNG", "](c)", "img-")
+    private def fuzz(seed: Int, n: Int): Seq[String] = {
+      val rnd = new scala.util.Random(seed)
+      (0 until n).map(_ => Seq.fill(rnd.nextInt(40))(fuzzTokens(rnd.nextInt(fuzzTokens.length))).mkString)
+    }
+
+    val cases: Seq[(String, () => Seq[Normalized])] = Seq(
+      "upstage synthetic" -> (() => synthetic("md_upstage", long = false).map(dialect)),
+      "upstage long" -> (() => synthetic("md_upstage", long = true).map(dialect)),
+      "upstage missing anchor" -> (() => Seq(
+        up("A\n\nB\n\nC", 2 -> Seq("B"), 3 -> Seq("Z"), 4 -> Seq("C")),
+        up("A\n\nB", 2 -> Seq("Q"), 3 -> Seq("R")))),
+      "upstage repeated anchor" -> (() => Seq(
+        up("X\n\nY\n\nX\n\nY\n\nX", 2 -> Seq("X"), 3 -> Seq("X"), 4 -> Seq("Y"), 5 -> Seq("X"), 6 -> Seq("X")),
+        up("aaaa", 2 -> Seq("aa"), 3 -> Seq("aa"), 4 -> Seq("aa")),
+        up("p\n\nq", 2 -> Seq("b"), 2 -> Seq("q")))),
+      "upstage page gaps" -> (() => Seq(
+        up("a\n\nb\n\nc\n\nd\n\ne\n\nf", 2 -> Seq("b"), 5 -> Seq("d"), 9 -> Seq("f")),
+        up("a\n\nb", 7 -> Seq("b")))),
+      "upstage empty anchors" -> (() => Seq(
+        up("a\n\nb\n\nc", 2 -> Seq("", "b"), 3 -> Seq(""), 4 -> Seq("", "", "c"), 5 -> Nil),
+        up("", 2 -> Seq("")), up("   \n\n  x", 2 -> Seq("x")))),
+      "upstage anchors in marker text" -> (() => Seq(
+        up("next_page docler -->\n\n<!-- docler", 2 -> Seq("next_page"), 3 -> Seq("docler"), 4 -> Seq("-->")),
+        Normalize.upstage("  \n\n![image](/image/placeholder)\n\nA\n\n![image](/image/placeholder) B",
+          Seq(2 -> Seq("A"), 3 -> Seq("B")), Seq("image/png", "image/svg+xml")))),
+      "datalab synthetic" -> (() => synthetic("md_datalab", long = false).map(dialect)),
+      "datalab long" -> (() => synthetic("md_datalab", long = true).map(dialect)),
+      "datalab names with ](" -> (() => Seq(
+        "![x](a.b](c) ![y](c) ![](c) ![](img-0.b](c)\n![](img-1.c)",
+        "![x](a.b![](img-1.png) ![](q.png) ![](img-1.png)",
+        "![a](p](q](r.png) ![](q](r.png) ![](r.png) ![b](x.png) ![](x.png)",
+        "![](a.png)![](a.png) ![](b.PNG) ![z](img-0.png) ![](data:x) text ](a.png) ](b.PNG)",
+        "![]() ![](a.) ![x](a](b](c) ![](c) ![](img-3.c)",
+        "{0}------\n\n![](s.png)\n\n{1}------\n\n![t](s.png) ![](img-0.png)").map(dl)),
+      "datalab fuzz" -> (() => fuzz(9, 3000).map(dl)))
+
+    def digest(ns: Seq[Normalized]): String = {
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      ns.foreach { n =>
+        md.update(n.content.getBytes("UTF-8")); md.update(0.toByte)
+        md.update(n.images.mkString("|").getBytes("UTF-8")); md.update(1.toByte)
+      }
+      md.digest().take(8).map(b => f"$b%02x").mkString
+    }
+  }
+
+  test("pinned: upstage and datalab output over synthetic docs and edge cases") {
+    // recorded on the tree before the single-scan rewrites; never edit to pass
+    val pinned = Map(
+      "datalab fuzz" -> "c0ee67925b234dd1",
+      "datalab long" -> "d7c1497f68402e5f",
+      "datalab names with ](" -> "81fb83c8e8a509e7",
+      "datalab synthetic" -> "c671481fa630f606",
+      "upstage anchors in marker text" -> "b958323ea3e87c13",
+      "upstage empty anchors" -> "2905ce2c69eec183",
+      "upstage long" -> "4ab2e3434c9de117",
+      "upstage missing anchor" -> "c4d49d8e7df764f4",
+      "upstage page gaps" -> "543680fd085d79e5",
+      "upstage repeated anchor" -> "b50f13f5935cb299",
+      "upstage synthetic" -> "49a473e129453a92")
+    val got = Pinned.cases.map { case (name, run) => name -> Pinned.digest(run()) }.toMap
+    assert(got == pinned, got.toSeq.sortBy(_._1).map { case (k, v) => s"\"$k\" -> \"$v\"" }.mkString(",\n"))
+  }
+
+  test("a 5,000-page upstage doc inserts its markers in linear time") {
+    val pages = (1 to 5000).map(p => s"Page $p opens here. " + ("lorem ipsum dolor sit amet " * 40))
+    val raw = pages.mkString("\n\n")
+    assert(raw.length > 5000000)
+    val anchors = (2 to 5000).map(p => p -> Seq(s"Page $p opens here."))
+    val t0 = System.nanoTime()
+    val n = Normalize.upstage(raw, anchors)
+    val sec = (System.nanoTime() - t0) / 1e9
+    assert(sec < 2.0, s"$sec s")
+    assert(Markdown.pageCount(n.spans) == 5000)
+  }
+
+  test("a 5,000-image datalab doc renames its images in linear time") {
+    val raw = (0 until 5000).map(i => s"Figure $i text.\n\n![](_page_${i}_figure.png)").mkString("\n\n")
+    val t0 = System.nanoTime()
+    val n = Normalize.dialect("md_datalab", raw, Nil)
+    val sec = (System.nanoTime() - t0) / 1e9
+    assert(sec < 1.0, s"$sec s")
+    assert(n.images.length == 5000)
+    assert(n.content.contains("![img-4999](img-4999.png)") && !n.content.contains("_page_"))
+  }
+
+  test("a 1 MB datalab image name made of 500,000 `](` is renamed in linear time") {
+    val name = "](" * 500000
+    val t0 = System.nanoTime()
+    val n = Normalize.dialect("md_datalab", s"![]($name)", Nil)
+    val sec = (System.nanoTime() - t0) / 1e9
+    assert(sec < 1.0, s"$sec s")
+    // the name has no dot, so all of it is the extension
+    assert(n.content == s"![img-0](img-0.$name)")
   }
 }

@@ -553,6 +553,19 @@ class PdfBytesSpec extends AnyFunSuite {
       "pdf_text_error: IllegalStateException: stream decodes past 268435456 bytes"), out.metadata)
   }
 
+  test("a non-name dict key fails with one fixed string, however hot the parser gets") {
+    import graft.io.Ingest
+    import graft.pipeline.Pipeline
+    val pdf = new graft.extract.Bin.PdfWriter
+    pdf.obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
+    pdf.obj(2, "<< /Type /Pages /Kids [ 3 0 R ] /Count 1 >>")
+    pdf.obj(3, "<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 612 792 ] 7 /X >>")
+    val raw = Ingest.toRawDoc("badkey.pdf", pdf.finish(""))
+    // enough calls for the JIT to compile the parser's type checks
+    val failures = Iterator.fill(50000)(Pipeline.extractOne(raw).failure).toSet
+    assert(failures == Set("pdf_parse_error: IllegalStateException: expected PName, got PNum"), failures)
+  }
+
   test("pinned: extractOne, pdfInfo, extractPages and decryptPdf over the writer corpus") {
     val expected = """
       |text_flate extractOne pages=2 spans=4 media=0 failure= sha=a10de0ebda68d0dc

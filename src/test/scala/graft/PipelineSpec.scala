@@ -45,7 +45,7 @@ class PipelineSpec extends AnyFunSuite {
     val gens = (0L until 120L).map(i => SyntheticDocs.generate(seed = 3, i))
     val docs = spark.createDataset(gens.map(g => Doc(g.raw.doc_id, g.expected))).toDF()
     val flat = SpanOps.explodeSpans(docs)
-    for (assembled <- Seq(SpanOps.assemble(flat), SpanOps.assembleSkewAware(flat))) {
+    for (assembled <- Seq(SortedCollectSpec.referenceAssemble(flat), SpanOps.assembleSkewAware(flat))) {
       val got = assembled.select("doc_id", "spans").as[(String, Seq[Span])]
         .collect().toMap
       val exp = gens.map(g => g.raw.doc_id -> g.expected).toMap

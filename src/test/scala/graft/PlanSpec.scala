@@ -118,6 +118,10 @@ class PlanSpec extends AnyFunSuite {
     // final aggregate pair around it
     assert("Exchange".r.findAllIn(p).size == 1, p)
     assert("ObjectHashAggregate|HashAggregate".r.findAllIn(p).size >= 2, p)
+    // the aggregate builds the final span shape: above the exchange there is
+    // only the final aggregate — no Project, no transform lambda
+    val top = p.substring(0, p.indexOf("Exchange"))
+    assert(!top.contains("Project") && !top.contains("transform") && !top.contains("lambda"), p)
   }
 
   test("ingestion: filter chain sits between the listing and the byte-read stage") {
