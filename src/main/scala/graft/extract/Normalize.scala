@@ -191,7 +191,9 @@ object Normalize {
     require(names.distinct.length == names.length && !names.exists(_.contains(')')),
       "datalab image names must be distinct and hold no `)`")
     val images = names.indices.map { i =>
-      val ext = names(i).split('.').last.toLowerCase
+      // the text after the last dot (all of a dotless name), as Python's
+      // `name.split(".")[-1]`: `a.`, `.` and `..` have an empty extension
+      val ext = names(i).substring(names(i).lastIndexOf('.') + 1).toLowerCase
       val id = s"img-$i"
       NormImage(id, s"$id.$ext", s"image/$ext", "")
     }

@@ -1,6 +1,7 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
 
@@ -75,10 +76,12 @@ object TableIO {
   }
 
   /** Make a staged write visible: manifest second, `current` pointer last
-    * (atomic rename) — the Iceberg commit order.
+    * (atomic rename) — the Iceberg commit order. `rows` is the number of rows
+    * written to `staged.dataPath`, counted by the write itself (the caller's
+    * tally or an observation on the written DataFrame); the staged data is
+    * not read back, so the manifest's `rowCount` is only as right as `rows`.
     */
-  def finalizeStaged(spark: SparkSession, staged: Staged): Snapshot = {
-    val rows = spark.read.parquet(staged.dataPath).count()
+  def finalizeStaged(staged: Staged, rows: Long): Snapshot = {
     val snap = Snapshot(staged.id, staged.parent.map(_.snapshotId).getOrElse(-1L),
       staged.parent.map(_.dataDirs).getOrElse(Nil) :+ staged.dataDirName,
       staged.parent.map(_.rowCount).getOrElse(0L) + rows,
@@ -97,12 +100,16 @@ object TableIO {
     * leftovers from a commit that crashed mid-write (data dirs / manifests
     * with ids beyond `current` — invisible by definition, since visibility
     * is the pointer flip) are removed so the rerun reuses the id cleanly
-    * instead of failing on PATH_ALREADY_EXISTS forever.
+    * instead of failing on PATH_ALREADY_EXISTS forever. The row count is an
+    * [[Observation]] on the write's own pass, so committing costs no job
+    * beyond the write.
     */
   def commit(df: DataFrame, tableDir: String): Snapshot = {
     val staged = stage(tableDir)
-    df.write.mode("errorifexists").parquet(staged.dataPath)
-    finalizeStaged(df.sparkSession, staged)
+    val written = Observation()
+    df.observe(written, count(lit(1)).as("rows"))
+      .write.mode("errorifexists").parquet(staged.dataPath)
+    finalizeStaged(staged, written.get("rows").asInstanceOf[Long])
   }
 
   private def writeManifest(tableDir: String, s: Snapshot): Unit = {

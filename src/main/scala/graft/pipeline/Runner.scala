@@ -8,15 +8,18 @@ import org.apache.spark.sql.functions._
 import scala.collection.mutable.ArrayBuffer
 
 /** The full north-rule orchestration as one callable: snapshot-aware resume →
-  * salted repartition → extract → commit docs and per-partition lineage rows
-  * under the SAME snapshot id → idempotent on rerun.
+  * doc_id hash repartition → extract → commit docs and per-partition lineage
+  * rows under the SAME snapshot id → idempotent on rerun.
   *
   * The extract output streams STRAIGHT INTO the parquet write — no
   * corpus-sized `.cache()` and no extra count actions (round-1 scale
   * finding). Per-partition lineage is tallied by the same pass through a
   * `CollectionAccumulator` (one small row per partition); the write is a
   * single result stage (extract is map-only), so each task's accumulator
-  * update is counted exactly once by Spark's per-task dedup.
+  * update is counted exactly once by Spark's per-task dedup. The docs
+  * manifest's row count is that tally's committed-doc total, so nothing reads
+  * the staged docs back, and the input is counted only when a committed
+  * snapshot exists to resume past (on a fresh table nothing is skipped).
   *
   * Commit protocol (emulated Iceberg, TableIO): the docs snapshot is staged,
   * written, then finalized (manifest + atomic `current` flip); the lineage
@@ -61,10 +64,9 @@ object Runner {
       case Some(ids) => Resume.filterProcessed(input.toDF(), ids).as[RawDoc]
       case None => input
     }
-    val inputCount = input.count()
-
-    // 2-3. extract with explicit pre-stage repartition + salting, streaming
-    // straight into the staged parquet write; lineage tallied in-flight
+    // 2-3. extract with an explicit pre-stage doc_id hash repartition,
+    // streaming straight into the staged parquet write; lineage tallied
+    // in-flight
     val par = if (repartitionTo > 0) repartitionTo
       else spark.sparkContext.defaultParallelism * 2
     val out = Pipeline.extract(pending, repartitionTo = par)
@@ -116,23 +118,24 @@ object Runner {
     val okCount = parts.map(_.doc_count).sum
     val failureCount = parts.map(_.failure_count).sum
     val pendingCount = okCount + failureCount
+    val skipped = if (processed.isEmpty) 0L else input.count() - pendingCount
     if (okCount == 0) {
       // nothing committable: either fully resumed, or only permanently
       // failing docs remain — committing an empty snapshot every rerun
       // would grow the chain unboundedly without converging
       TableIO.abortStaged(staged)
       val snap = TableIO.currentSnapshot(outTableDir).map(_.snapshotId).getOrElse(-1L)
-      return RunResult(snap, 0, 0, failureCount, inputCount - pendingCount)
+      return RunResult(snap, 0, 0, failureCount, skipped)
     }
 
-    val snap = TableIO.finalizeStaged(spark, staged)
+    val snap = TableIO.finalizeStaged(staged, okCount)
 
     // 4. commit lineage under the same snapshot id (tiny: one row/partition)
     val lineage = parts.map(_.copy(snapshot_id = snap.snapshotId))
     TableIO.commit(spark.createDataset(lineage).toDF(), metricsTableDir)
 
     RunResult(snap.snapshotId, okCount, parts.map(_.span_count).sum,
-      failureCount, inputCount - pendingCount)
+      failureCount, skipped)
   }
 
   /** Repair the docs-committed-but-lineage-missing crash window: rebuild the

@@ -31,6 +31,14 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("extract(repartitionTo = 8) sizes tasks by doc_id hash: the largest holds ≤ 1.2× the mean") {
+    import spark.implicits._
+    val raw = spark.createDataset((0L until 2000L).map(i => SyntheticDocs.generate(seed = 3, i).raw))
+    val sizes = Pipeline.extract(raw, repartitionTo = 8).toDF()
+      .groupBy(spark_partition_id()).count().collect().map(_.getLong(1))
+    assert(sizes.sum == 2000 && sizes.max <= 1.2 * 2000 / 8, sizes.sorted.mkString(","))
+  }
+
   test("extraction is deterministic under different parallelism") {
     import spark.implicits._
     val gens = (0L until 100L).map(i => SyntheticDocs.generate(seed = 11, i))
@@ -118,6 +126,25 @@ class PipelineSpec extends AnyFunSuite {
     assert(TableIO.read(spark, dir).get.count() == 3)
     assert(TableIO.readAsOf(spark, dir, 0).get.count() == 2)
     assert(TableIO.currentSnapshot(dir).get.rowCount == 3)
+  }
+
+  test("TableIO: committing an empty DataFrame returns at once and adds no rows") {
+    import spark.implicits._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val dir = tmpDir("empty-commit")
+    val one = Seq(("a", 1)).toDF("doc_id", "v")
+    TableIO.commit(one, dir)
+    // a local relation, one pruned to nothing by the optimizer, and one whose
+    // tasks run but keep no row
+    val empties = Seq(Seq.empty[(String, Int)].toDF("doc_id", "v"), one.filter(lit(false)),
+      one.filter(col("v") > 1))
+    empties.zipWithIndex.foreach { case (df, i) =>
+      val snap = Await.result(Future(TableIO.commit(df, dir)), 60.seconds)
+      assert(snap.snapshotId == i + 1 && snap.rowCount == 1)
+    }
+    assert(TableIO.read(spark, dir).get.count() == 1)
   }
 
   test("resume: kill/rerun completes idempotently via snapshot anti-join") {

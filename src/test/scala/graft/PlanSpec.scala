@@ -124,6 +124,14 @@ class PlanSpec extends AnyFunSuite {
     assert(!top.contains("Project") && !top.contains("transform") && !top.contains("lambda"), p)
   }
 
+  test("extract(repartitionTo) hash-partitions on doc_id itself, no salt column") {
+    import spark.implicits._
+    val raw = spark.createDataset((0L until 20L).map(i => graft.io.SyntheticDocs.generate(42, i).raw))
+    val p = plan(Pipeline.extract(raw, repartitionTo = 8).toDF())
+    assert(p.contains("hashpartitioning(doc_id"), p)
+    assert(!p.contains("pmod(xxhash64"), p)
+  }
+
   test("ingestion: filter chain sits between the listing and the byte-read stage") {
     val b = java.nio.file.Files.createTempDirectory("planspec-ingest")
     java.nio.file.Files.createDirectories(b.resolve("x"))
