@@ -60,33 +60,13 @@ class BibFormatsSpec extends AnyFunSuite {
   }
 
   test("EndNote XML: style-wrapped runs accumulate; periodical over secondary") {
-    val xml =
-      """<xml><records>
-        |<record>
-        | <rec-number>84</rec-number>
-        | <ref-type name="Journal Article">17</ref-type>
-        | <contributors><authors>
-        |   <author><style face="normal">Knuth, </style><style>Donald E.</style></author>
-        | </authors></contributors>
-        | <titles><title><style>Literate Programming</style></title>
-        |   <secondary-title><style>Ignored When Periodical</style></secondary-title></titles>
-        | <periodical><full-title><style>The Computer Journal</style></full-title></periodical>
-        | <dates><year><style>1984</style></year></dates>
-        |</record>
-        |<record>
-        | <ref-type name="Conference Paper">47</ref-type>
-        | <titles><title>No Style Wrapper</title>
-        |   <secondary-title>WWW</secondary-title></titles>
-        |</record>
-        |</records></xml>""".stripMargin
-    assert(EndnoteExtract.toMarkdown(xml) ==
+    assert(EndnoteExtract.toMarkdown(BibFormatsSpec.endnoteRecords) ==
       "- **84** (journal-article): Knuth, Donald E. (1984). *Literate Programming*. The Computer Journal.\n" +
       "- **ref-2** (conference-paper): *No Style Wrapper*. WWW.")
   }
 
   test("EndNote XML: no records throws") {
-    intercept[IllegalArgumentException](
-      EndnoteExtract.toMarkdown("<xml><records></records></xml>"))
+    intercept[IllegalArgumentException](EndnoteExtract.toMarkdown(BibFormatsSpec.endnoteEmpty))
   }
 
   test("real ingestion routes: explicit MIME → one list span each") {
@@ -95,9 +75,7 @@ class BibFormatsSpec extends AnyFunSuite {
         "application/x-research-info-systems", "- **ref-1** (jour): *T1*."),
       ("refs.json", """[{"id":"a","type":"book","title":"T2"}]""",
         "application/csl+json", "- **a** (book): *T2*."),
-      ("refs.xml",
-        "<xml><records><record><titles><title><style>T3</style></title></titles></record></records></xml>",
-        "application/x-endnote+xml", "- **ref-1** (entry): *T3*."))
+      ("refs.xml", BibFormatsSpec.endnoteRouted, "application/x-endnote+xml", "- **ref-1** (entry): *T3*."))
     for ((name, body, mime, expect) <- cases) {
       val out = graft.pipeline.Pipeline.extractOne(
         graft.io.Ingest.toRawDoc(name, body.getBytes("UTF-8"), mime))
@@ -117,4 +95,30 @@ class BibFormatsSpec extends AnyFunSuite {
       "application/x-research-info-systems"))
     assert(bad.failure.nonEmpty)
   }
+}
+
+object BibFormatsSpec {
+  val endnoteRecords =
+    """<xml><records>
+      |<record>
+      | <rec-number>84</rec-number>
+      | <ref-type name="Journal Article">17</ref-type>
+      | <contributors><authors>
+      |   <author><style face="normal">Knuth, </style><style>Donald E.</style></author>
+      | </authors></contributors>
+      | <titles><title><style>Literate Programming</style></title>
+      |   <secondary-title><style>Ignored When Periodical</style></secondary-title></titles>
+      | <periodical><full-title><style>The Computer Journal</style></full-title></periodical>
+      | <dates><year><style>1984</style></year></dates>
+      |</record>
+      |<record>
+      | <ref-type name="Conference Paper">47</ref-type>
+      | <titles><title>No Style Wrapper</title>
+      |   <secondary-title>WWW</secondary-title></titles>
+      |</record>
+      |</records></xml>""".stripMargin
+  val endnoteEmpty = "<xml><records></records></xml>"
+  val endnoteRouted =
+    "<xml><records><record><titles><title><style>T3</style></title></titles></record></records></xml>"
+  val endnoteInputs = Seq(endnoteRecords, endnoteEmpty, endnoteRouted)
 }

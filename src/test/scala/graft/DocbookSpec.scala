@@ -9,30 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class DocbookSpec extends AnyFunSuite {
 
   test("sections, info-wrapped title, inline markup, verbatim, lists, image") {
-    val xml =
-      """<article>
-        |  <info><title>Guide 1</title></info>
-        |  <section>
-        |    <title>Intro</title>
-        |    <para>Hello <emphasis>world</emphasis> and
-        |      <emphasis role="bold">bold</emphasis> text.</para>
-        |    <para>See <ulink url="http://x.example">the site</ulink> or
-        |      <literal>code</literal>.</para>
-        |    <programlisting language="scala">val x = 1
-        |val y = 2</programlisting>
-        |    <itemizedlist>
-        |      <listitem><para>first</para></listitem>
-        |      <listitem><para>second</para>
-        |        <orderedlist>
-        |          <listitem><para>sub one</para></listitem>
-        |          <listitem><para>sub two</para></listitem>
-        |        </orderedlist>
-        |      </listitem>
-        |    </itemizedlist>
-        |    <mediaobject><imageobject><imagedata fileref="fig.png"/></imageobject></mediaobject>
-        |  </section>
-        |</article>""".stripMargin
-    assert(DocbookExtract.toMarkdown(xml) ==
+    assert(DocbookExtract.toMarkdown(DocbookSpec.guide) ==
       """# Guide 1
         |
         |## Intro
@@ -55,40 +32,67 @@ class DocbookSpec extends AnyFunSuite {
   }
 
   test("DocBook 5 link@xlink:href; sect1 depth; heading cap at 6") {
-    val xml =
-      """<book xmlns:xlink="http://www.w3.org/1999/xlink">
-        |  <title>B</title>
-        |  <chapter><title>C</title>
-        |    <sect1><title>S1</title>
-        |      <sect2><title>S2</title>
-        |        <sect3><title>S3</title>
-        |          <sect4><title>S4</title>
-        |            <sect5><title>S5</title>
-        |              <para>Read <link xlink:href="http://y">docs</link>.</para>
-        |            </sect5></sect4></sect3></sect2></sect1></chapter>
-        |</book>""".stripMargin
-    assert(DocbookExtract.toMarkdown(xml) ==
+    assert(DocbookExtract.toMarkdown(DocbookSpec.deepBook) ==
       "# B\n\n## C\n\n### S1\n\n#### S2\n\n##### S3\n\n###### S4\n\n###### S5\n\n" +
         "Read [docs](http://y).")
   }
 
   test("screen verbatim with backticks grows the fence; CDATA passes") {
-    val xml = "<article><title>T</title>" +
-      "<screen><![CDATA[run ```x``` now]]></screen></article>"
-    assert(DocbookExtract.toMarkdown(xml) ==
+    assert(DocbookExtract.toMarkdown(DocbookSpec.cdataScreen) ==
       "# T\n\n````\nrun ```x``` now\n````")
   }
 
   test("no content throws; real ingestion route by explicit MIME") {
-    intercept[IllegalArgumentException](
-      DocbookExtract.toMarkdown("<article><section></section></article>"))
+    intercept[IllegalArgumentException](DocbookExtract.toMarkdown(DocbookSpec.empty))
 
     val out = graft.pipeline.Pipeline.extractOne(graft.io.Ingest.toRawDoc(
       "g.xml",
-      "<article><title>Doc 9</title><para>Body here.</para></article>".getBytes("UTF-8"),
+      DocbookSpec.routed.getBytes("UTF-8"),
       "application/docbook+xml"))
     assert(out.failure.isEmpty, out.failure)
     assert(out.mime_type == "application/docbook+xml")
     assert(out.spans.map(_.text) == Seq("# Doc 9", "Body here."))
   }
+}
+
+object DocbookSpec {
+  val guide =
+    """<article>
+      |  <info><title>Guide 1</title></info>
+      |  <section>
+      |    <title>Intro</title>
+      |    <para>Hello <emphasis>world</emphasis> and
+      |      <emphasis role="bold">bold</emphasis> text.</para>
+      |    <para>See <ulink url="http://x.example">the site</ulink> or
+      |      <literal>code</literal>.</para>
+      |    <programlisting language="scala">val x = 1
+      |val y = 2</programlisting>
+      |    <itemizedlist>
+      |      <listitem><para>first</para></listitem>
+      |      <listitem><para>second</para>
+      |        <orderedlist>
+      |          <listitem><para>sub one</para></listitem>
+      |          <listitem><para>sub two</para></listitem>
+      |        </orderedlist>
+      |      </listitem>
+      |    </itemizedlist>
+      |    <mediaobject><imageobject><imagedata fileref="fig.png"/></imageobject></mediaobject>
+      |  </section>
+      |</article>""".stripMargin
+  val deepBook =
+    """<book xmlns:xlink="http://www.w3.org/1999/xlink">
+      |  <title>B</title>
+      |  <chapter><title>C</title>
+      |    <sect1><title>S1</title>
+      |      <sect2><title>S2</title>
+      |        <sect3><title>S3</title>
+      |          <sect4><title>S4</title>
+      |            <sect5><title>S5</title>
+      |              <para>Read <link xlink:href="http://y">docs</link>.</para>
+      |            </sect5></sect4></sect3></sect2></sect1></chapter>
+      |</book>""".stripMargin
+  val cdataScreen = "<article><title>T</title><screen><![CDATA[run ```x``` now]]></screen></article>"
+  val empty = "<article><section></section></article>"
+  val routed = "<article><title>Doc 9</title><para>Body here.</para></article>"
+  val inputs = Seq(guide, deepBook, cdataScreen, empty, routed)
 }
