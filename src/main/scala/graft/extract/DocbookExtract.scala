@@ -1,7 +1,5 @@
 package graft.extract
 
-import scala.collection.mutable.ArrayBuffer
-
 /** DocBook XML → markdown.
   *
   * In the reference's supported surface: `application/docbook+xml` sits
@@ -32,121 +30,41 @@ import scala.collection.mutable.ArrayBuffer
   * no rendered block throws (failure row).
   */
 object DocbookExtract {
+  import XmlMarkup._
 
   private val SectionTags = Set("article", "book", "chapter", "section",
     "sect1", "sect2", "sect3", "sect4", "sect5", "appendix", "preface", "part")
-  private val CodeTags = Set("literal", "code", "command", "filename", "varname")
-  private val VerbatimTags = Set("programlisting", "screen")
   private val InfoTags = Set("info", "articleinfo", "bookinfo", "chapterinfo")
+  private val Roles: Map[String, Role] = Map(
+    "para" -> Para, "simpara" -> Para,
+    "programlisting" -> Verbatim("language"), "screen" -> Verbatim("language"),
+    "itemizedlist" -> ListOf(_ => false), "orderedlist" -> ListOf(_ => true), "listitem" -> Item,
+    "ulink" -> Link("url"), "link" -> Link("href"), "imagedata" -> Image("fileref")) ++
+    Seq("literal", "code", "command", "filename", "varname").map(_ -> Mark("`"))
 
-  def toMarkdown(src: String): String = {
-    val r = DocxExtract.reader(src.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val blocks = ArrayBuffer.empty[String]
-    val path = ArrayBuffer.empty[String]
-    val inline = new StringBuilder
+  def toMarkdown(src: String): String = new XmlMarkup("docbook", Roles) {
     var sectionDepth = 0
-    // the outermost list renders as ONE block (same shape as the LaTeX
-    // and org routes); the nesting/marker machine is shared with JATS
-    val list = new MdShared.ListBuilder
-    var linkTargets = List.empty[String]
-    var emphMarks = List.empty[String]
-    var verbatim: StringBuilder = null
-    var verbLang = ""
 
-    def flushInline(): String = {
-      val t = DocxExtract.collapseWs(inline.toString).trim
-      inline.clear()
-      t
+    // the element's parent is a section, with the info wrappers transparent
+    def sectionParent: Boolean = {
+      val i = if (path.nonEmpty && InfoTags.contains(path.last)) path.length - 2 else path.length - 1
+      i >= 0 && SectionTags.contains(path(i))
     }
-    // effective parent of a just-closed/about-to-open element, with the
-    // info wrappers transparent; `stack` must already end at the parent
-    def sectionParent(stack: ArrayBuffer[String]): Boolean = {
-      val eff = if (stack.nonEmpty && InfoTags.contains(stack.last))
-        stack.dropRight(1) else stack
-      eff.nonEmpty && SectionTags.contains(eff.last)
-    }
-    try {
-      while (r.hasNext) {
-        r.next() match {
-          case javax.xml.stream.XMLStreamConstants.START_ELEMENT =>
-            val name = r.getLocalName
-            if (verbatim == null) name match {
-              case n if SectionTags.contains(n) => sectionDepth += 1
-              case "title" if sectionParent(path) => inline.clear()
-              case "para" | "simpara" => inline.clear()
-              case n if VerbatimTags.contains(n) =>
-                verbatim = new StringBuilder
-                verbLang = DocxExtract.attr(r, "language")
-              case "itemizedlist" => list.openList(ordered = false)
-              case "orderedlist" => list.openList(ordered = true)
-              case "listitem" =>
-                inline.clear()
-                list.openItem()
-              case "emphasis" =>
-                val role = DocxExtract.attr(r, "role")
-                val m = if (role == "bold" || role == "strong") "**" else "*"
-                inline.append(m)
-                emphMarks = m :: emphMarks
-              case n if CodeTags.contains(n) => inline.append('`')
-              case "ulink" =>
-                inline.append('[')
-                linkTargets = DocxExtract.attr(r, "url") :: linkTargets
-              case "link" =>
-                inline.append('[')
-                linkTargets = DocxExtract.attr(r, "href") :: linkTargets
-              case "imagedata" =>
-                val f = DocxExtract.attr(r, "fileref")
-                if (f.nonEmpty) blocks += s"![$f]($f)"
-              case _ => ()
-            }
-            path += name
-          case javax.xml.stream.XMLStreamConstants.CHARACTERS |
-               javax.xml.stream.XMLStreamConstants.CDATA =>
-            if (verbatim != null) verbatim.append(r.getText)
-            else inline.append(r.getText)
-          case javax.xml.stream.XMLStreamConstants.END_ELEMENT =>
-            val name = r.getLocalName
-            if (path.nonEmpty) path.remove(path.length - 1)
-            if (verbatim != null) {
-              if (VerbatimTags.contains(name)) {
-                val body = verbatim.toString.stripPrefix("\n").stripTrailing()
-                blocks += MdShared.fence(body, verbLang)
-                verbatim = null
-              }
-            } else name match {
-              case n if SectionTags.contains(n) => sectionDepth -= 1
-              case "title" if sectionParent(path) =>
-                val t = flushInline()
-                if (t.nonEmpty)
-                  blocks += ("#" * math.min(math.max(sectionDepth, 1), 6)) + " " + t
-              case "para" | "simpara" =>
-                val t = flushInline()
-                if (t.nonEmpty) {
-                  if (list.inItem) list.text(t) else blocks += t
-                }
-              case "listitem" =>
-                // a bare listitem with no para still renders its text
-                val t = flushInline()
-                if (t.nonEmpty && list.itemPending) list.text(t)
-                list.closeItem()
-              case "itemizedlist" | "orderedlist" =>
-                list.closeList().foreach(blocks += _)
-              case "emphasis" =>
-                inline.append(emphMarks.headOption.getOrElse("*"))
-                emphMarks = emphMarks.drop(1)
-              case n if CodeTags.contains(n) => inline.append('`')
-              case "ulink" | "link" =>
-                val target = linkTargets.headOption.getOrElse("")
-                linkTargets = linkTargets.drop(1)
-                inline.append(s"]($target)")
-              case _ => ()
-            }
-          case _ => ()
-        }
-      }
-    } finally r.close()
-    if (blocks.isEmpty) throw new IllegalArgumentException("docbook: no content")
-    blocks.mkString("\n\n")
-  }
 
+    override def start(name: String): Unit = name match {
+      case n if SectionTags.contains(n) => sectionDepth += 1
+      case "title" if sectionParent => inline.clear()
+      case "emphasis" =>
+        val role = attr("role")
+        val m = if (role == "bold" || role == "strong") "**" else "*"
+        wrap(m, m)
+      case _ => ()
+    }
+
+    override def end(name: String): Unit = name match {
+      case n if SectionTags.contains(n) => sectionDepth -= 1
+      case "title" if sectionParent => heading(math.max(sectionDepth, 1), flush())
+      case _ => ()
+    }
+  }.run(src)
 }

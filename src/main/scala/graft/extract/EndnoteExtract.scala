@@ -21,67 +21,47 @@ import scala.collection.mutable.ArrayBuffer
   */
 object EndnoteExtract {
 
-  def toMarkdown(src: String): String = {
-    val r = DocxExtract.reader(src.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val recs = ArrayBuffer.empty[String]
-    val path = ArrayBuffer.empty[String]
-    var kind = ""
-    var key = ""
-    var title = ""
-    var venue2 = "" // secondary-title fallback
-    var venue = ""
-    var year = ""
+  def toMarkdown(src: String): String = new XmlMarkup("endnote") {
+    // the current record's non-empty fields, by element name ("kind" from ref-type)
+    val fields = scala.collection.mutable.Map.empty[String, String].withDefaultValue("")
     val authors = ArrayBuffer.empty[String]
-    val text = new StringBuilder
     def inRecord = path.contains("record")
-    def reset(): Unit = {
-      kind = ""; key = ""; title = ""; venue = ""; venue2 = ""; year = ""
-      authors.clear()
-    }
-    try {
-      while (r.hasNext) {
-        r.next() match {
-          case javax.xml.stream.XMLStreamConstants.START_ELEMENT =>
-            val name = r.getLocalName
-            path += name
-            // <style> runs wrap every field's text in the EndNote export
-            // schema — transparent: accumulate across them so
-            // <title><style>A</style><style>B</style></title> yields "AB"
-            if (name != "style") text.clear()
-            if (name == "record") reset()
-            else if (name == "ref-type" && inRecord) {
-              val n = DocxExtract.attr(r, "name")
-              if (n.nonEmpty) kind = n.toLowerCase.replace(' ', '-')
-            }
-          case javax.xml.stream.XMLStreamConstants.CHARACTERS =>
-            text.append(r.getText)
-          case javax.xml.stream.XMLStreamConstants.END_ELEMENT =>
-            val name = r.getLocalName
-            val t = text.toString.trim
-            if (inRecord && t.nonEmpty) name match {
-              case "rec-number" => key = t
-              case "author" => authors += t
-              case "title" if path.contains("titles") => if (title.isEmpty) title = t
-              case "secondary-title" => venue2 = t
-              case "full-title" if path.contains("periodical") => venue = t
-              case "year" if path.contains("dates") => year = t
-              case _ => ()
-            }
-            if (name == "record") {
-              val k = if (key.nonEmpty) key else s"ref-${recs.size + 1}"
-              recs += BibtexExtract.render(
-                if (kind.nonEmpty) kind else "entry", k,
-                Map("author" -> authors.mkString(", "), "year" -> year,
-                  "title" -> title,
-                  "journal" -> (if (venue.nonEmpty) venue else venue2)))
-            }
-            if (path.nonEmpty) path.remove(path.length - 1)
-            if (name != "style") text.clear()
-          case _ => ()
-        }
+
+    // <style> runs wrap every field's text in the EndNote export schema —
+    // transparent: accumulate across them so
+    // <title><style>A</style><style>B</style></title> yields "AB"
+    override def start(name: String): Unit = {
+      if (name != "style") inline.clear()
+      if (name == "record") {
+        fields.clear()
+        authors.clear()
+      } else if (name == "ref-type" && inRecord) {
+        val n = attr("name")
+        if (n.nonEmpty) fields("kind") = n.toLowerCase.replace(' ', '-')
       }
-    } finally r.close()
-    if (recs.isEmpty) throw new IllegalArgumentException("endnote: no records")
-    recs.mkString("\n")
-  }
+    }
+
+    override def end(name: String): Unit = {
+      val t = inline.toString.trim
+      if (inRecord && t.nonEmpty) name match {
+        case "author" => authors += t
+        case "title" if path.contains("titles") => if (!fields.contains(name)) fields(name) = t
+        case "full-title" if path.contains("periodical") => fields(name) = t
+        case "year" if path.contains("dates") => fields(name) = t
+        case "rec-number" | "secondary-title" => fields(name) = t
+        case _ => ()
+      }
+      if (name == "record")
+        blocks += BibtexExtract.render(
+          fields.getOrElse("kind", "entry"), fields.getOrElse("rec-number", s"ref-${blocks.size + 1}"),
+          Map("author" -> authors.mkString(", "), "year" -> fields("year"), "title" -> fields("title"),
+            "journal" -> fields.getOrElse("full-title", fields("secondary-title"))))
+      if (name != "style") inline.clear()
+    }
+
+    override def finish(): String = {
+      if (blocks.isEmpty) throw new IllegalArgumentException("endnote: no records")
+      blocks.mkString("\n")
+    }
+  }.run(src)
 }

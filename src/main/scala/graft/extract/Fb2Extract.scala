@@ -27,108 +27,56 @@ import scala.collection.mutable.ArrayBuffer
   * throws (failure row).
   */
 object Fb2Extract {
+  import XmlMarkup._
 
-  def toMarkdown(src: String): String = {
-    val r = DocxExtract.reader(src.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val blocks = ArrayBuffer.empty[String]
-    val path = ArrayBuffer.empty[String]
-    val inline = new StringBuilder
+  // binary payloads (base64) never reach the text
+  private val Roles: Map[String, Role] = Map(
+    "p" -> Para, "v" -> Para, "subtitle" -> Para, "text-author" -> Para, "book-title" -> Para,
+    "emphasis" -> Mark("*"), "strong" -> Mark("**"), "code" -> Mark("`"), "a" -> Link("href"),
+    "binary" -> Hidden)
+
+  def toMarkdown(src: String): String = new XmlMarkup("fb2", Roles) {
     var inBody = false
     var sectionDepth = 0
     var inTitle = false
     val titleParts = ArrayBuffer.empty[String]
     var inCite = false
     val verseLines = ArrayBuffer.empty[String]
-    var linkTargets = List.empty[String]
 
-    def flushInline(): String = {
-      val t = DocxExtract.collapseWs(inline.toString).trim
-      inline.clear()
-      t
+    override def paragraph(name: String, t: String): Unit = name match {
+      case "book-title" => heading(1, t)
+      case "subtitle" => heading(sectionDepth + 2, t)
+      case "v" => verseLines += t
+      case "text-author" => blocks += s"— $t"
+      case _ if inTitle => titleParts += t
+      case _ if inCite => blocks += s"> $t"
+      case _ => blocks += t
     }
 
-    try {
-      while (r.hasNext) {
-        r.next() match {
-          case javax.xml.stream.XMLStreamConstants.START_ELEMENT =>
-            val name = r.getLocalName
-            name match {
-              case "body" => inBody = true
-              case "section" if inBody => sectionDepth += 1
-              case "title" if inBody =>
-                inTitle = true; titleParts.clear(); inline.clear()
-              case "book-title" => inline.clear()
-              case "p" | "v" | "subtitle" | "text-author" => inline.clear()
-              case "poem" => verseLines.clear()
-              case "stanza" => verseLines.clear()
-              case "cite" => inCite = true
-              case "emphasis" => inline.append('*')
-              case "strong" => inline.append("**")
-              case "code" => inline.append('`')
-              case "a" =>
-                inline.append('[')
-                linkTargets = DocxExtract.attr(r, "href") :: linkTargets
-              case "image" =>
-                val href = DocxExtract.attr(r, "href").stripPrefix("#")
-                if (href.nonEmpty) blocks += s"![$href]($href)"
-              case _ => ()
-            }
-            path += name
-          case javax.xml.stream.XMLStreamConstants.CHARACTERS |
-               javax.xml.stream.XMLStreamConstants.CDATA =>
-            // binary payloads (base64) never reach inline: skipped by path
-            if (!path.contains("binary")) inline.append(r.getText)
-          case javax.xml.stream.XMLStreamConstants.END_ELEMENT =>
-            val name = r.getLocalName
-            if (path.nonEmpty) path.remove(path.length - 1)
-            name match {
-              case "body" => inBody = false
-              case "section" if inBody => sectionDepth -= 1
-              case "book-title" =>
-                val t = flushInline()
-                if (t.nonEmpty) blocks += s"# $t"
-              case "title" if inBody =>
-                inTitle = false
-                val t = titleParts.mkString(" ")
-                if (t.nonEmpty)
-                  blocks += ("#" * math.min(sectionDepth + 1, 6)) + " " + t
-              case "p" =>
-                val t = flushInline()
-                if (t.nonEmpty) {
-                  if (inTitle) titleParts += t
-                  else if (inCite) blocks += s"> $t"
-                  else blocks += t
-                }
-              case "subtitle" =>
-                val t = flushInline()
-                if (t.nonEmpty)
-                  blocks += ("#" * math.min(sectionDepth + 2, 6)) + " " + t
-              case "v" =>
-                val t = flushInline()
-                if (t.nonEmpty) verseLines += t
-              case "stanza" =>
-                if (verseLines.nonEmpty) {
-                  blocks += verseLines.mkString("\n")
-                  verseLines.clear()
-                }
-              case "text-author" =>
-                val t = flushInline()
-                if (t.nonEmpty) blocks += s"— $t"
-              case "cite" => inCite = false
-              case "emphasis" => inline.append('*')
-              case "strong" => inline.append("**")
-              case "code" => inline.append('`')
-              case "a" =>
-                val target = linkTargets.headOption.getOrElse("")
-                linkTargets = linkTargets.drop(1)
-                inline.append(s"]($target)")
-              case _ => ()
-            }
-          case _ => ()
+    override def start(name: String): Unit = name match {
+      case "body" => inBody = true
+      case "section" if inBody => sectionDepth += 1
+      case "title" if inBody =>
+        inTitle = true; titleParts.clear(); inline.clear()
+      case "poem" | "stanza" => verseLines.clear()
+      case "cite" => inCite = true
+      case "image" => image(attr("href").stripPrefix("#"))
+      case _ => ()
+    }
+
+    override def end(name: String): Unit = name match {
+      case "body" => inBody = false
+      case "section" if inBody => sectionDepth -= 1
+      case "title" if inBody =>
+        inTitle = false
+        heading(sectionDepth + 1, titleParts.mkString(" "))
+      case "stanza" =>
+        if (verseLines.nonEmpty) {
+          blocks += verseLines.mkString("\n")
+          verseLines.clear()
         }
-      }
-    } finally r.close()
-    if (blocks.isEmpty) throw new IllegalArgumentException("fb2: no content")
-    blocks.mkString("\n\n")
-  }
+      case "cite" => inCite = false
+      case _ => ()
+    }
+  }.run(src)
 }

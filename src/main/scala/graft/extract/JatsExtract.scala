@@ -1,7 +1,5 @@
 package graft.extract
 
-import scala.collection.mutable.ArrayBuffer
-
 /** JATS (Journal Article Tag Suite) XML → markdown.
   *
   * In the reference's supported surface: `application/x-jats+xml` sits in
@@ -27,100 +25,32 @@ import scala.collection.mutable.ArrayBuffer
   * throws (failure row).
   */
 object JatsExtract {
+  import XmlMarkup._
 
-  def toMarkdown(src: String): String = {
-    val r = DocxExtract.reader(src.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val blocks = ArrayBuffer.empty[String]
-    val path = ArrayBuffer.empty[String]
-    val inline = new StringBuilder
+  private val Roles: Map[String, Role] = Map(
+    "p" -> Para, "preformat" -> Verbatim(""),
+    "list" -> ListOf(r => DocxExtract.attr(r, "list-type") == "order"), "list-item" -> Item,
+    "italic" -> Mark("*"), "bold" -> Mark("**"), "monospace" -> Mark("`"), "code" -> Mark("`"),
+    "ext-link" -> Link("href"), "graphic" -> Image("href"), "inline-graphic" -> Image("href"))
+
+  def toMarkdown(src: String): String = new XmlMarkup("jats", Roles) {
     var secDepth = 0
     var abstractEmitted = false
-    val list = new MdShared.ListBuilder // marker machine shared with DocBook
-    var verbatim: StringBuilder = null
-    var linkTargets = List.empty[String]
 
-    def flushInline(): String = {
-      val t = DocxExtract.collapseWs(inline.toString).trim
-      inline.clear()
-      t
+    override def start(name: String): Unit = name match {
+      case "sec" => secDepth += 1
+      case "abstract" =>
+        if (!abstractEmitted) { blocks += "## Abstract"; abstractEmitted = true }
+      case "article-title" if path.contains("title-group") => inline.clear()
+      case "title" if path.lastOption.contains("sec") => inline.clear()
+      case _ => ()
     }
-    try {
-      while (r.hasNext) {
-        r.next() match {
-          case javax.xml.stream.XMLStreamConstants.START_ELEMENT =>
-            val name = r.getLocalName
-            if (verbatim == null) name match {
-              case "sec" => secDepth += 1
-              case "abstract" =>
-                if (!abstractEmitted) { blocks += "## Abstract"; abstractEmitted = true }
-              case "article-title" if path.contains("title-group") => inline.clear()
-              case "title" if path.nonEmpty && path.last == "sec" => inline.clear()
-              case "p" => inline.clear()
-              case "preformat" => verbatim = new StringBuilder
-              case "list" =>
-                list.openList(ordered = DocxExtract.attr(r, "list-type") == "order")
-              case "list-item" =>
-                inline.clear()
-                list.openItem()
-              case "italic" => inline.append('*')
-              case "bold" => inline.append("**")
-              case "monospace" | "code" => inline.append('`')
-              case "ext-link" =>
-                inline.append('[')
-                linkTargets = DocxExtract.attr(r, "href") :: linkTargets
-              case "graphic" | "inline-graphic" =>
-                val href = DocxExtract.attr(r, "href")
-                if (href.nonEmpty) blocks += s"![$href]($href)"
-              case _ => ()
-            }
-            path += name
-          case javax.xml.stream.XMLStreamConstants.CHARACTERS |
-               javax.xml.stream.XMLStreamConstants.CDATA =>
-            if (verbatim != null) verbatim.append(r.getText)
-            else inline.append(r.getText)
-          case javax.xml.stream.XMLStreamConstants.END_ELEMENT =>
-            val name = r.getLocalName
-            if (path.nonEmpty) path.remove(path.length - 1)
-            if (verbatim != null) {
-              if (name == "preformat") {
-                val body = verbatim.toString.stripPrefix("\n").stripTrailing()
-                blocks += MdShared.fence(body, "")
-                verbatim = null
-              }
-            } else name match {
-              case "sec" => secDepth -= 1
-              case "article-title" if path.contains("title-group") =>
-                val t = flushInline()
-                if (t.nonEmpty) blocks += s"# $t"
-              case "title" if path.nonEmpty && path.last == "sec" =>
-                val t = flushInline()
-                if (t.nonEmpty)
-                  blocks += ("#" * math.min(secDepth + 1, 6)) + " " + t
-              case "p" =>
-                val t = flushInline()
-                if (t.nonEmpty) {
-                  if (list.inItem) list.text(t) else blocks += t
-                }
-              case "list-item" =>
-                val t = flushInline()
-                if (t.nonEmpty && list.itemPending) list.text(t)
-                list.closeItem()
-              case "list" =>
-                list.closeList().foreach(blocks += _)
-              case "italic" => inline.append('*')
-              case "bold" => inline.append("**")
-              case "monospace" | "code" => inline.append('`')
-              case "ext-link" =>
-                val target = linkTargets.headOption.getOrElse("")
-                linkTargets = linkTargets.drop(1)
-                inline.append(s"]($target)")
-              case _ => ()
-            }
-          case _ => ()
-        }
-      }
-    } finally r.close()
-    if (blocks.isEmpty) throw new IllegalArgumentException("jats: no content")
-    blocks.mkString("\n\n")
-  }
+
+    override def end(name: String): Unit = name match {
+      case "sec" => secDepth -= 1
+      case "article-title" if path.contains("title-group") => heading(1, flush())
+      case "title" if path.lastOption.contains("sec") => heading(secDepth + 1, flush())
+      case _ => ()
+    }
+  }.run(src)
 }

@@ -3,9 +3,9 @@ package graft.extract
 import scala.collection.mutable.ArrayBuffer
 
 /** Markdown-rendering helpers shared across the extractor family (the
-  * from-scratch pandoc-surface converters: DocBook/JATS StAX parsers and
-  * the line-oriented troff/mdoc/DokuWiki/POD/Typst/org/notebook readers,
-  * LaTeX and BibTeX).
+  * from-scratch pandoc-surface converters: the [[XmlMarkup]] walker behind
+  * DocBook/FB2/JATS/OPML/EndNote and the line-oriented
+  * troff/mdoc/DokuWiki/POD/Typst/org/notebook readers, LaTeX and BibTeX).
   */
 private[extract] object MdShared {
 
@@ -60,8 +60,8 @@ private[extract] object MdShared {
     out.toList
   }
 
-  /** Nested-list line builder shared by the StAX extractors (DocBook,
-    * JATS): one frame per open list (-1 = bullet, >=0 = next ordinal),
+  /** Nested-list line builder of the [[XmlMarkup]] walker (DocBook and
+    * JATS lists): one frame per open list (-1 = bullet, >=0 = next ordinal),
     * an item-started flag per open item, two spaces of indent per level,
     * continuation paragraphs indented under their item.
     */
@@ -107,14 +107,11 @@ private[extract] object MdShared {
       }
     }
 
+    /** Any list currently open? */
+    def inList: Boolean = counters.nonEmpty
     /** Any item currently open (text should route into the list)? */
     def inItem: Boolean = itemStarted.nonEmpty
     /** Innermost item open but its marker line not yet emitted? */
     def itemPending: Boolean = itemStarted.headOption.contains(false)
-    /** Lines accumulated for an unclosed outermost list (lenient final
-      * flush for malformed documents).
-      */
-    def pendingLines: Option[String] =
-      if (lines.nonEmpty) Some(lines.mkString("\n")) else None
   }
 }

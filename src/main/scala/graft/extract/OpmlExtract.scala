@@ -23,50 +23,36 @@ import scala.collection.mutable.ArrayBuffer
   */
 object OpmlExtract {
 
-  def toMarkdown(src: String): String = {
-    val r = DocxExtract.reader(src.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val blocks = ArrayBuffer.empty[String]
+  def toMarkdown(src: String): String = new XmlMarkup("opml") {
     val lines = ArrayBuffer.empty[String]
-    val path = ArrayBuffer.empty[String]
-    val text = new StringBuilder
     var depth = 0
-    try {
-      while (r.hasNext) {
-        r.next() match {
-          case javax.xml.stream.XMLStreamConstants.START_ELEMENT =>
-            val name = r.getLocalName
-            name match {
-              case "title" if path.lastOption.contains("head") => text.clear()
-              case "outline" =>
-                val t0 = DocxExtract.attr(r, "text")
-                val t = if (t0.nonEmpty) t0 else DocxExtract.attr(r, "title")
-                val url = DocxExtract.attr(r, "xmlUrl")
-                val note = DocxExtract.attr(r, "_note")
-                val label = if (url.nonEmpty) s"[$t]($url)" else t
-                val full = if (note.nonEmpty) s"$label — $note" else label
-                if (t.nonEmpty) lines += ("  " * depth) + "- " + full
-                depth += 1
-              case _ => ()
-            }
-            path += name
-          case javax.xml.stream.XMLStreamConstants.CHARACTERS =>
-            text.append(r.getText)
-          case javax.xml.stream.XMLStreamConstants.END_ELEMENT =>
-            val name = r.getLocalName
-            if (path.nonEmpty) path.remove(path.length - 1)
-            name match {
-              case "title" if path.lastOption.contains("head") =>
-                val t = DocxExtract.collapseWs(text.toString).trim
-                if (t.nonEmpty) blocks += s"# $t"
-              case "outline" => depth -= 1
-              case _ => ()
-            }
-          case _ => ()
-        }
-      }
-    } finally r.close()
-    if (lines.nonEmpty) blocks += lines.mkString("\n")
-    if (blocks.isEmpty) throw new IllegalArgumentException("opml: no content")
-    blocks.mkString("\n\n")
-  }
+
+    override def start(name: String): Unit = name match {
+      case "title" if path.lastOption.contains("head") => inline.clear()
+      case "outline" =>
+        val t0 = attr("text")
+        val t = if (t0.nonEmpty) t0 else attr("title")
+        val url = attr("xmlUrl")
+        val note = attr("_note")
+        val label = if (url.nonEmpty) s"[$t]($url)" else t
+        val full = if (note.nonEmpty) s"$label — $note" else label
+        if (t.nonEmpty) lines += ("  " * depth) + "- " + full
+        depth += 1
+      case _ => ()
+    }
+
+    override def end(name: String): Unit = name match {
+      // read without clearing: an outer head title keeps the text of a
+      // nested one
+      case "title" if path.lastOption.contains("head") =>
+        heading(1, DocxExtract.collapseWs(inline.toString).trim)
+      case "outline" => depth -= 1
+      case _ => ()
+    }
+
+    override def finish(): String = {
+      if (lines.nonEmpty) blocks += lines.mkString("\n")
+      super.finish()
+    }
+  }.run(src)
 }

@@ -65,6 +65,11 @@ class BibFormatsSpec extends AnyFunSuite {
       "- **ref-2** (conference-paper): *No Style Wrapper*. WWW.")
   }
 
+  test("EndNote XML: CDATA text counts") {
+    assert(EndnoteExtract.toMarkdown("<xml><records><record><titles><title><style><![CDATA[A & B]]>" +
+      "</style></title></titles></record></records></xml>") == "- **ref-1** (entry): *A & B*.")
+  }
+
   test("EndNote XML: no records throws") {
     intercept[IllegalArgumentException](EndnoteExtract.toMarkdown(BibFormatsSpec.endnoteEmpty))
   }

@@ -42,6 +42,28 @@ class DocbookSpec extends AnyFunSuite {
       "# T\n\n````\nrun ```x``` now\n````")
   }
 
+  test("a listitem outside any list renders its paragraphs as blocks") {
+    val xml = "<article><para>Before</para><variablelist><varlistentry><term>T</term>" +
+      "<listitem><para>Def</para></listitem></varlistentry></variablelist></article>"
+    assert(DocbookExtract.toMarkdown(xml) == "Before\n\nDef")
+    val out = graft.pipeline.Pipeline.extractOne(graft.io.Ingest.toRawDoc(
+      "v.xml", xml.getBytes("UTF-8"), "application/docbook+xml"))
+    assert(out.failure.isEmpty, out.failure)
+    assert(out.spans.map(_.text) == Seq("Before", "Def"))
+  }
+
+  test("text before a list is flushed as a paragraph, or as item text inside an item") {
+    assert(DocbookExtract.toMarkdown("<article><para>Intro: <itemizedlist><listitem><para>one</para>" +
+      "</listitem></itemizedlist> after</para></article>") == "Intro:\n\n- one\n\nafter")
+    assert(DocbookExtract.toMarkdown("<article><itemizedlist><listitem>Lead <orderedlist><listitem>" +
+      "<para>x</para></listitem></orderedlist></listitem></itemizedlist></article>") == "- Lead\n  1. x")
+  }
+
+  test("a verbatim block ends only when the element that opened it closes") {
+    assert(DocbookExtract.toMarkdown("<article><programlisting>a<screen/>b</programlisting></article>") ==
+      "```\nab\n```")
+  }
+
   test("no content throws; real ingestion route by explicit MIME") {
     intercept[IllegalArgumentException](DocbookExtract.toMarkdown(DocbookSpec.empty))
 

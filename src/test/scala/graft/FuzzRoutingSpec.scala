@@ -212,13 +212,27 @@ class FuzzRoutingSpec extends AnyFunSuite {
   }
 
   test("pathological nesting and unterminated constructs stay bounded") {
-    val cases = Seq(
+    // 2,000 unclosed elements: the reader's depth cap fails the document
+    val deepXml = Seq(
       ("application/docbook+xml",
         "<article>" + "<section><title>x</title>" * 2000 + "</article>"),
       ("application/x-jats+xml",
         "<article><body>" + "<sec><title>s</title>" * 2000 + "</body></article>"),
       ("application/x-opml+xml",
         "<opml><body>" + "<outline text='x'>" * 2000 + "</body></opml>"),
+      ("application/x-fictionbook+xml",
+        "<FictionBook><body>" + "<section><title><p>x</p></title>" * 2000 + "</body></FictionBook>"),
+      ("application/x-endnote+xml",
+        "<xml><records>" + "<record><titles><title>t</title></titles>" * 2000 + "</records></xml>"))
+    for ((mime, text) <- deepXml) {
+      val t0 = System.nanoTime()
+      val out = Pipeline.extractOne(Ingest.toRawDoc("f.bin", text.getBytes("UTF-8"), mime))
+      val ms = (System.nanoTime() - t0) / 1e6
+      assert(ms < 30000, s"$mime pathological case took ${ms}ms")
+      assert(out.failure.startsWith("XMLStreamException: Maximum Element Depth limit (1000) Exceeded"),
+        s"$mime: ${out.failure}")
+    }
+    val cases = Seq(
       ("text/x-pod", "=over 4\n" * 3000 + "\n=item *\n\nx\n"),
       ("application/x-typst", "```\n" + "x\n" * 5000), // unterminated fence
       ("text/troff", ".nf\n" + "x\n" * 5000),          // unterminated .nf

@@ -39,6 +39,18 @@ class XmlMarkupSpec extends AnyFunSuite {
       "# Plans 3\n\n- Top A\n  - Sub A1\n  - [Feed](http://f/rss)\n- Top B — remember")
   }
 
+  test("jats: a list-item outside any list renders as blocks; text before a list is flushed") {
+    assert(JatsExtract.toMarkdown("<article><body><p>Before</p><list-item><p>Def</p></list-item>" +
+      "</body></article>") == "Before\n\nDef")
+    assert(JatsExtract.toMarkdown("<article><body><p>Intro: <list><list-item><p>one</p></list-item>" +
+      "</list> after</p></body></article>") == "Intro:\n\n- one\n\nafter")
+  }
+
+  test("opml: CDATA text counts") {
+    assert(OpmlExtract.toMarkdown("<opml><head><title><![CDATA[My & Plans]]></title></head>" +
+      """<body><outline text="x"/></body></opml>""") == "# My & Plans\n\n- x")
+  }
+
   test("pinned: docbook, fb2, jats, opml and endnote output") {
     // recorded on the five per-format StAX loops, before the shared walker;
     // never edit to pass
