@@ -129,4 +129,72 @@ class ComponentsSpec extends AnyFunSuite {
       .select("doc_id").as[Long].collect().sorted
     assert(kept.toSeq == Seq(0L, 1L, 3L, 4L))
   }
+
+  /** A random graph over local ids `0 until n`: a path, star, clique,
+    * forest or sparse random graph, plus isolated nodes, `a == b` pairs and
+    * pairs to ids outside the node set (local ids from `n` up).
+    */
+  private def randomGraph(rnd: scala.util.Random): (Int, Seq[(Int, Int)]) = {
+    val n = 1 + rnd.nextInt(40)
+    val order = rnd.shuffle((0 until n).toList).toArray
+    val core: Seq[(Int, Int)] = rnd.nextInt(5) match {
+      case 0 => (0 until n - 1).map(i => (order(i), order(i + 1)))
+      case 1 => (1 until n).map(i => (order(0), order(i)))
+      case 2 => for (i <- 0 until n; j <- i + 1 until n) yield (order(i), order(j))
+      case 3 => (1 until n).filter(_ => rnd.nextInt(4) > 0).map(i => (order(i), order(rnd.nextInt(i))))
+      case _ => Seq.fill(n)((rnd.nextInt(n), rnd.nextInt(n)))
+    }
+    val loops = Seq.fill(rnd.nextInt(3))(rnd.nextInt(n)).map(i => (i, i))
+    val outside = Seq.fill(rnd.nextInt(3))((rnd.nextInt(n), n + rnd.nextInt(3)))
+    (n, rnd.shuffle(core ++ loops ++ outside).map(e => if (rnd.nextBoolean()) e.swap else e))
+  }
+
+  /** Min-label union-find over the pairs whose both ends are nodes. */
+  private def unionFind[K](nodes: Seq[K], pairs: Seq[(K, K)], lt: (K, K) => Boolean): Map[K, K] = {
+    val parent = scala.collection.mutable.Map(nodes.map(k => k -> k): _*)
+    def find(x: K): K = if (parent(x) == x) x else { val r = find(parent(x)); parent(x) = r; r }
+    for ((a, b) <- pairs if parent.contains(a) && parent.contains(b)) {
+      val (ra, rb) = (find(a), find(b))
+      if (lt(ra, rb)) parent(rb) = ra else if (lt(rb, ra)) parent(ra) = rb
+    }
+    nodes.map(k => k -> find(k)).toMap
+  }
+
+  test("labels equal a union-find minimum on 300 random graphs, Long and String ids") {
+    // 6 batches of 50 graphs; a batch is the disjoint union of its graphs,
+    // numbered by one shuffle across the whole batch, so each call checks
+    // 50 graphs at once. String ids mix lengths and non-ASCII characters:
+    // their minimum is Spark SQL's (UTF-8 byte order), not String.compareTo.
+    val rnd = new scala.util.Random(300)
+    for (batch <- 0 until 6) {
+      val graphs = Seq.fill(50)(randomGraph(rnd))
+      val offsets = graphs.scanLeft(0)(_ + _._1 + 3)
+      val total = offsets.last
+      val ids = rnd.shuffle(Iterator.continually(rnd.nextLong() % 1000000000L).distinct
+        .take(total).toSeq).toArray
+      val nodeIdx = graphs.zip(offsets).flatMap { case ((n, _), o) => o until o + n }
+      val pairIdx = graphs.zip(offsets).flatMap { case ((_, ps), o) => ps.map { case (a, b) => (o + a, o + b) } }
+      val str = Array("k", "\u00e9", "\ud83d\ude00", "\uff5e", "K", "k0")
+      def sid(i: Int): String = str(i % str.length) + java.lang.Long.toString(ids(i), 36)
+
+      val longNodes = nodeIdx.map(ids(_))
+      val longPairs = pairIdx.map { case (a, b) => (ids(a), ids(b)) }
+      val longOut = Dedup.connectedComponents(longNodes.toDF("doc_id"), longPairs.toDF("id_a", "id_b"),
+        maxIters = 64)
+      assert(longOut.schema("cluster_id").dataType == org.apache.spark.sql.types.LongType)
+      val longGot = longOut.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(longGot == unionFind[Long](longNodes, longPairs, _ < _), s"Long ids, batch $batch")
+
+      val strNodes = nodeIdx.map(sid)
+      val strPairs = pairIdx.map { case (a, b) => (sid(a), sid(b)) }
+      val strOut = Dedup.connectedComponents(strNodes.toDF("doc_id"), strPairs.toDF("id_a", "id_b"),
+        maxIters = 64)
+      assert(strOut.schema("cluster_id").dataType == org.apache.spark.sql.types.StringType)
+      val strGot = strOut.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      val utf8Lt = (a: String, b: String) =>
+        org.apache.spark.unsafe.types.UTF8String.fromString(a)
+          .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b)) < 0
+      assert(strGot == unionFind[String](strNodes, strPairs, utf8Lt), s"String ids, batch $batch")
+    }
+  }
 }

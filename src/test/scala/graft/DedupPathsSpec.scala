@@ -65,4 +65,55 @@ class DedupPathsSpec extends AnyFunSuite {
     val pairs = Dedup.jaccardPairs(dup, 1.0, shingleN = 3).collect()
     assert(pairs.length == 1 && pairs.head.getDouble(2) == 1.0)
   }
+
+  /** Seeded near-duplicate corpus: 40-word docs over a 300-word vocabulary
+    * with planted chains of 4 (2 substitutions per step), exact triples
+    * (one member upper-cased with trailing punctuation, equal after
+    * normalization), near triples (1 substitution each), unique docs and
+    * docs under 3 words, in shuffled order under distinct random ids.
+    */
+  private def pinCorpus(seed: Long): Seq[(Long, String)] = {
+    val rnd = new scala.util.Random(seed)
+    val vocab = Array.tabulate(300)(i => s"w$i" + rnd.alphanumeric.take(3).mkString.toLowerCase)
+    def fresh(): Array[String] = Array.fill(40)(vocab(rnd.nextInt(vocab.length)))
+    def edit(w: Array[String], k: Int): Array[String] = {
+      val c = w.clone()
+      for (_ <- 0 until k) c(rnd.nextInt(c.length)) = vocab(rnd.nextInt(vocab.length))
+      c
+    }
+    val chains = Seq.fill(10)(Iterator.iterate(fresh())(edit(_, 2)).take(4).map(_.mkString(" ")).toSeq)
+    val exact = Seq.fill(8) {
+      val t = fresh().mkString(" ")
+      Seq(t, t, t.toUpperCase + "!")
+    }
+    val near = Seq.fill(8) {
+      val w = fresh()
+      Seq(w, edit(w, 1), edit(w, 1)).map(_.mkString(" "))
+    }
+    val unique = Seq.fill(60)(fresh().mkString(" "))
+    val short = Seq("", "one", "two words", "Hi!", "two words", "  ", "a b", "x")
+    val texts = rnd.shuffle(chains.flatten ++ exact.flatten ++ near.flatten ++ unique ++ short)
+    val ids = Iterator.continually(rnd.nextInt(2000000).toLong - 1000000L).distinct
+    ids.take(texts.size).toSeq.zip(texts)
+  }
+
+  /** SHA-256 of the sorted `id_a, id_b, jaccard` lines. */
+  private def pairsDigest(df: org.apache.spark.sql.DataFrame): (Int, String) = {
+    val lines = df.collect().map(r => s"${r.get(0)}\t${r.get(1)}\t${r.get(2)}").sorted
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    (lines.length, md.digest(lines.mkString("\n").getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString)
+  }
+
+  test("minhashPairs output is pinned for Long and String ids") {
+    // recorded before the one-shingle-pass rewrite of minhashPairs; the
+    // pair set, its ids and every jaccard value must not move
+    import spark.implicits._
+    val corpus = pinCorpus(14)
+    val longIds = corpus.toDF("doc_id", "text")
+    val stringIds = corpus.map { case (i, t) => (s"d$i", t) }.toDF("doc_id", "text")
+    val (nLong, hLong) = pairsDigest(Dedup.minhashPairs(longIds))
+    val (nString, hString) = pairsDigest(Dedup.minhashPairs(stringIds))
+    assert((nLong, hLong) == (79, "86d8fb1a36678b8cce4c0cd79f49e33e9dd7cf48ff3a524f87aae353936c062b"))
+    assert((nString, hString) == (79, "fdb6cdd45a121a46a0c4e6e4799a429977a86c2ae3660e2a9494108b63a84c6b"))
+  }
 }
