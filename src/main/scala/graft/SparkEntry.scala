@@ -340,8 +340,9 @@ object SparkEntry {
     "q_dedup_clusters" -> ((s, dir) => {
       // near-dup CLUSTER formation: the transitive-closure step between
       // pair generation and canonical selection (a~b, b~c collapse to one
-      // cluster even when a~c was never emitted). Min-label propagation
-      // over the same pair graph the q_minhash_pairs oracle reproduces.
+      // cluster even when a~c was never emitted). Star contraction to
+      // the minimum id over the same pair graph the q_minhash_pairs oracle
+      // reproduces.
       val slice = tbl(s, dir, "documents").filter(col("doc_id") < 500)
         .repartition(s.sparkContext.defaultParallelism)
       val pairs = Dedup.minhashPairs(slice, threshold = 0.15, k = 32, bands = 8)

@@ -1,11 +1,19 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
-/** Deduplication operators for training-data pipelines, all expressed as
-  * Catalyst plans (higher-order functions + joins) so Catalyst handles
-  * pushdown, AQE handles skew, and nothing materializes on the driver.
+/** Deduplication operators for training-data pipelines. The pair
+  * generators are Catalyst plans (higher-order functions + joins) so
+  * Catalyst handles pushdown, AQE handles skew, and nothing materializes
+  * on the driver; [[connectedComponents]] runs its rounds over an RDD of
+  * id pairs, one Spark job per round.
   *
   * Scale notes (100 TB): every variant is shuffle-bounded by design —
   * exact dedup shuffles one 64-hex key per doc; MinHash/LSH shuffles
@@ -102,6 +110,13 @@ object Dedup {
       idCol: String = "doc_id"): DataFrame = {
     require(k % bands == 0, "bands must divide k")
     val rows = k / bands
+    // one shingle pass: each doc's distinct shingle-hash set is computed
+    // once and checkpointed, and feeds both banded sides and both verify
+    // sides (as four lazy subplans they re-scanned the input and re-hashed
+    // every doc's shingles per use). MinHash is a minimum over a set, so
+    // the distinct array gives the same signature.
+    val sh = checkpoint(docs.select(col(idCol).as("doc_id"),
+      array_distinct(shingleHashes(col(textCol), shingleN)).as("sh")))
     // candidate generation carries ONLY (band keys, id): the shingle arrays
     // never ride the banded self-join (they did in a first cut — 18× slower:
     // every false candidate shipped two ~170-element string arrays).
@@ -110,12 +125,10 @@ object Dedup {
     // short-doc-heavy corpora — so they are dropped before banding, mirroring
     // the simhashPairs zero-token guard (they can never verify anyway:
     // Jaccard over an empty set is 0).
-    val banded = docs
-      .select(col(idCol).as("doc_id"),
-        shingleHashes(col(textCol), shingleN).as("toks"))
-      .filter(size(col("toks")) > 0)
+    val banded = sh
+      .filter(size(col("sh")) > 0)
       .select(col("doc_id"),
-        graft.functions.PortableMinHashSig.portableMinhashSig(col("toks"), k).as("sig"))
+        graft.functions.PortableMinHashSig.portableMinhashSig(col("sh"), k).as("sig"))
       .select(col("doc_id"),
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
           b => concat_ws("_", slice(col("sig"), b * rows + 1, lit(rows))))
@@ -128,14 +141,22 @@ object Dedup {
     // verify: join the deduped candidates back to the (hashed) shingle sets
     // once — Jaccard over h60 sets equals Jaccard over string sets up to
     // negligible 60-bit collisions
-    val sh = docs.select(col(idCol).as("doc_id"),
-      array_distinct(shingleHashes(col(textCol), shingleN)).as("sh"))
     candidates
       .join(sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
       .join(sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"), jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
+
+  /** Eager checkpoint: reliable (HDFS-durable, survives executor loss
+    * mid-query) when the session has a checkpoint dir
+    * (`sparkContext.setCheckpointDir`), `localCheckpoint` otherwise —
+    * executor-local blocks, fine single-box, lossy on a cluster, so
+    * cluster deployments should set the dir.
+    */
+  private def checkpoint(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager = true)
+    else df.localCheckpoint(eager = true)
 
   /** Exact Jaccard over two shingle arrays (set semantics). */
   def jaccard(a: Column, b: Column): Column = {
@@ -341,20 +362,6 @@ object Dedup {
         coalesce(col("dup_window_frac"), lit(0.0)))
   }
 
-  /** The ExactSubstr gate: drop documents whose duplicate-window fraction
-    * exceeds `maxDupFrac` (Lee et al. drop the duplicated SPANS; at
-    * pipeline granularity the document-level gate is the standard
-    * deployment, cf. RefinedWeb §3.3).
-    */
-  def exactSubstrFilter(
-      docs: DataFrame,
-      maxDupFrac: Double = 0.5,
-      k: Int = 8,
-      textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame =
-    withDuplicateWindowFraction(docs, k, textCol, idCol)
-      .filter(col("dup_window_frac") <= maxDupFrac)
-
   // ----------------------------------------------------- embedding near-dup
 
   /** Embedding-cosine near-duplicates above a threshold, LSH-bucketed by
@@ -389,42 +396,40 @@ object Dedup {
     * lists alone cannot drop duplicates transitively: a~b, b~c must
     * collapse a,b,c into ONE cluster even when a~c was never emitted).
     *
-    * Iterative min-label propagation WITH pointer jumping: each round does
-    * (1) a one-hop neighbor-min aggregate and (2) a label(label) shortcut
-    * join — the classic path-doubling step — so where ids grow along a
-    * path the remaining distance to the component minimum roughly HALVES
-    * per round: a 1000-node chain numbered in order converges in ~10
-    * rounds, near-dup cliques in 2-3, but a randomly numbered 200-node path
-    * needs 39 (ComponentsSpec runs both chains).
-    * The alternating small-star/large-star contraction (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", SoCC'14) bounds rounds
-    * by O(log n) under any numbering by rewriting the edge set; the
-    * pointer-jump variant keeps the edge set constant, which is cheaper
-    * when edges >> nodes (the near-dup regime).
+    * Alternating large-star / small-star contraction (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond", SoCC'14): O(log n)
+    * rounds in practice under any numbering (a randomly numbered 200-node
+    * path takes 8, a 1000-node chain 12; ComponentsSpec runs both). The
+    * edge set is rewritten each round, every edge kept as (larger,
+    * smaller) id: large-star links each node's larger neighbors to the
+    * minimum of its closed neighborhood; small-star links each node and
+    * its smaller neighbors to the minimum of those. Both preserve
+    * connectivity and never join two components; their fixed point is one
+    * star per component, centered at its minimum.
     *
-    * The edge list is built once and checkpointed: both directions of each
-    * pair from one scan of `pairs`, kept only when both ends are in `nodes`
-    * (an id outside `nodes` never carries a label, so it bridges nothing).
-    * The iteration runs over its EDGE-ACTIVE ends only (≤ 2·|pairs|;
-    * singletons can never change label and rejoin via one final left join),
-    * so per-round cost is O(|active|+|edges|), never O(corpus). Round 1
-    * starts from the identity, so its hop aggregates the edges alone; later
-    * hops are ONE aggregate over (neighbor labels ∪ own label), which also
-    * yields the round's previous label. Each round's labels are
-    * checkpointed to break the iterative-self-join lineage, and the
-    * checkpoint action itself counts the changed labels (an
-    * [[org.apache.spark.sql.Observation]]), so convergence costs no extra
-    * job. Checkpoints are RELIABLE (HDFS-durable `checkpoint`, survives
-    * executor loss mid-query) when the session has a checkpoint dir
-    * (`sparkContext.setCheckpointDir`); `localCheckpoint` otherwise —
-    * executor-local blocks, fine single-box, lossy on a cluster, so
-    * cluster deployments should set the dir.
+    * The edge list is each pair once, kept only when both ends are in
+    * `nodes` and differ (an id outside `nodes` never carries a label, so
+    * it bridges nothing). A round runs over an RDD of id pairs: each star
+    * step groups every node's deduplicated neighbors on one fixed
+    * `HashPartitioner`, and the action that checkpoints the round's edges
+    * is the round's only Spark job; it also counts the edges that changed
+    * (an accumulator), and a round that changes none ends the loop. Ids
+    * compare under Spark SQL's ordering of the id type (Long numerically,
+    * String by UTF-8 bytes), so `cluster_id` is the component's minimum
+    * under Spark SQL `min`. Per-round cost is O(|edges|), never O(corpus);
+    * a star step holds one node's neighbor list in memory, so the largest
+    * component bounds a task's memory. Checkpoints are RELIABLE
+    * (HDFS-durable) when the session has a checkpoint dir, executor-local
+    * otherwise (see [[checkpoint]]).
     *
-    * @return (doc_id, cluster_id) for EVERY node — singletons keep their
-    *         own id, members carry the component's minimum doc_id. If a
-    *         component needs more than `maxIters` rounds its labels come
-    *         back partially propagated (over-segmented, never wrongly
-    *         merged) — raise `maxIters` for such graphs.
+    * @return (doc_id, cluster_id) for EVERY node, both of the id column's
+    *         type — singletons keep their own id (one final key-only left
+    *         join re-attaches them), members carry the component's
+    *         minimum. If a component needs more than `maxIters` rounds a
+    *         WARN names the round and pending change counts, and each
+    *         label is the least id the node is linked to (never above its
+    *         own id; over-segmented, never wrongly merged) — raise
+    *         `maxIters` for such graphs.
     */
   def connectedComponents(
       nodes: DataFrame,
@@ -433,48 +438,75 @@ object Dedup {
       idCol: String = "doc_id",
       aCol: String = "id_a",
       bCol: String = "id_b"): DataFrame = {
-    val reliable = nodes.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def cp(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(eager = true)
+    val spark = nodes.sparkSession
+    val sc = spark.sparkContext
     val ids = nodes.select(col(idCol).as("n_id"))
-    val edges = cp(pairs
-      .select(inline(array(struct(col(aCol).as("e_src"), col(bCol).as("e_dst")),
-        struct(col(bCol).as("e_src"), col(aCol).as("e_dst")))))
-      .join(ids, col("e_src") === col("n_id"), "left_semi")
-      .join(ids, col("e_dst") === col("n_id"), "left_semi"))
-    var labels = Option.empty[DataFrame] // None: the identity on active ids
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIters) {
-      // (1) one hop: `l` runs over my neighbors' labels and my own, `own`
-      // over my own label only; under the identity a neighbor's label is
-      // its id, so round 1 needs no join with labels
-      val rows = labels.fold(edges.select(col("e_src").as("doc_id"),
-          col("e_dst").as("l"), col("e_src").as("own"))) { ls =>
-        edges.join(ls, col("e_dst") === col("doc_id"))
-          .select(col("e_src").as("doc_id"), col("cluster_id").as("l"), lit(null).as("own"))
-          .union(ls.select(col("doc_id"), col("cluster_id").as("l"), col("cluster_id").as("own")))
+    val idType = ids.schema.head.dataType
+    val (a, b) = (col(aCol).cast(idType), col(bCol).cast(idType))
+    val oriented = pairs.filter(col(aCol) =!= col(bCol))
+      .join(ids, col(aCol) === col("n_id"), "left_semi")
+      .join(ids, col(bCol) === col("n_id"), "left_semi")
+      .select(greatest(a, b), least(a, b))
+      .queryExecution.toRdd
+    val part = new HashPartitioner(math.max(1, oriented.getNumPartitions))
+    // rows are reused buffers: copy before keeping their values
+    var edges: RDD[(Any, Any)] = oriented.map { r =>
+      val c = r.copy()
+      (c.get(0, idType), c.get(1, idType))
+    }
+    // group each node's distinct neighbors on the one partitioner and emit
+    // new edges under Spark SQL's ordering of the id type
+    def byNode(e: RDD[(Any, Any)])(
+        step: (Ordering[Any], Any, Array[Any]) => Iterator[(Any, Any)]): RDD[(Any, Any)] =
+      e.groupByKey(part).mapPartitions { it =>
+        val ord = TypeUtils.getInterpretedOrdering(idType)
+        it.flatMap { case (u, ns) => step(ord, u, ns.toArray.distinct) }
       }
-      val hop = rows.groupBy("doc_id").agg(min("own").as("prev"), min("l").as("l"))
-        .select(col("doc_id"), col("prev"), least(col("prev"), col("l")).as("mid"))
-      // (2) pointer jump: label := label(label) — mid always names an active
-      // id, so the shortcut join halves the remaining distance
-      val parents = hop.select(col("doc_id").as("p_id"), col("mid").as("p_label"))
-      val round = Observation()
-      labels = Some(cp(hop.join(parents, col("mid") === col("p_id"), "left")
-        .select(col("doc_id"), col("prev"),
-          least(col("mid"), coalesce(col("p_label"), col("mid"))).as("cluster_id"))
-        .observe(round, count(when(col("cluster_id") < col("prev"), true)).as("changed"))
-        .drop("prev")))
-      changed = round.get("changed").asInstanceOf[Long]
-      iter += 1
+    val reliable = sc.getCheckpointDir.isDefined
+    var rounds = 0
+    var pending = -1L
+    while (pending != 0 && rounds < maxIters) {
+      val changed = sc.longAccumulator
+      val large = byNode(edges.flatMap { case (hi, lo) => Iterator(hi -> lo, lo -> hi) }) {
+        (ord, u, ns) =>
+          val m = ord.min(u, ns.min(ord))
+          val larger = ns.filter(ord.gt(_, u))
+          if (m != u) changed.add(larger.length)
+          larger.iterator.map(_ -> m)
+      }
+      // keyed by the larger end: ns are u's smaller neighbors
+      val next = byNode(large) { (ord, u, ns) =>
+        val m = ns.min(ord)
+        changed.add(ns.length - 1)
+        Iterator(u -> m) ++ ns.iterator.filter(_ != m).map(_ -> m)
+      }
+      if (reliable) {
+        next.persist(StorageLevel.MEMORY_AND_DISK)
+        next.checkpoint()
+      } else next.localCheckpoint()
+      next.count()
+      // a reliably checkpointed round can drop its cached copy once the
+      // next exists; local checkpoint blocks are the lineage itself and
+      // are freed when unreachable
+      if (reliable) edges.unpersist(blocking = false)
+      edges = next
+      pending = changed.value
+      rounds += 1
     }
-    // rejoin the (untouched) singleton majority: absent from the active
-    // labels ⇒ own-id cluster, the loop's fixed point for a node with no
-    // edges
-    labels.fold(ids.select(col("n_id").as("doc_id"), col("n_id").as("cluster_id"))) { ls =>
-      ids.join(ls, col("n_id") === col("doc_id"), "left")
-        .select(col("n_id").as("doc_id"), coalesce(col("cluster_id"), col("n_id")).as("cluster_id"))
-    }
+    if (pending > 0)
+      org.slf4j.LoggerFactory.getLogger("graft.ops.Dedup").warn(
+        s"connectedComponents stopped at maxIters: rounds = $rounds, edge changes pending = " +
+          s"$pending; labels are over-segmented")
+    val labels = byNode(edges)((ord, v, ms) => Iterator(v -> ms.min(ord)))
+      .mapPartitions { it =>
+        val toScala = CatalystTypeConverters.createToScalaConverter(idType)
+        it.map { case (v, m) => Row(toScala(v), toScala(m)) }
+      }
+    val labelled = spark.createDataFrame(labels, StructType(Seq(
+      StructField("doc_id", idType), StructField("cluster_id", idType))))
+    // rejoin the (untouched) singleton majority: absent from the labels ⇒
+    // own-id cluster
+    ids.join(labelled, col("n_id") === col("doc_id"), "left")
+      .select(col("n_id").as("doc_id"), coalesce(col("cluster_id"), col("n_id")).as("cluster_id"))
   }
 }

@@ -33,7 +33,7 @@ class ComponentsSpec extends AnyFunSuite {
     assert(got(8L) == 8L && got(9L) == 9L)
   }
 
-  test("the 10-node graph clusters in at most 24 Spark jobs") {
+  test("the 10-node graph clusters in at most 8 Spark jobs") {
     // every round is driver-synchronous: its jobs run one after another, so
     // the job count is the fixed cost of a components call on a small graph
     val (nodes, pairs) = tenNodeGraph
@@ -48,7 +48,7 @@ class ComponentsSpec extends AnyFunSuite {
       Dedup.connectedComponents(nodes, pairs).collect()
       TestBus.drain(sc)
     } finally sc.removeSparkListener(counter)
-    assert(jobs.get <= 24, s"${jobs.get} jobs for the 10-node graph")
+    assert(jobs.get <= 8, s"${jobs.get} jobs for the 10-node graph")
   }
 
   test("ids in pairs but not in nodes get no row and bridge nothing") {
@@ -61,13 +61,38 @@ class ComponentsSpec extends AnyFunSuite {
     assert(got == Map(1L -> 1L, 3L -> 3L, 2L -> 2L, 5L -> 2L))
   }
 
-  test("maxIters = 1 on a chain stops at one hop plus one jump (over-segmented)") {
-    // round 1: hop gives i -> i-1, the jump gives i -> i-2 (floored at 0)
-    val nodes = (0L to 7L).toDF("doc_id")
-    val pairs = (0L until 7L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val got = Dedup.connectedComponents(nodes, pairs, maxIters = 1)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1).map(_._2)
-    assert(got.toSeq == Seq(0L, 0L, 0L, 1L, 2L, 3L, 4L, 5L))
+  test("maxIters = 1 on two shuffled paths over-segments and never merges") {
+    // two disjoint 64-node paths, numbered by one shuffle over both: one
+    // round cannot contract either to a star. What must hold of a partial
+    // result: each path keeps several labels, no label exceeds its node's
+    // id, and no label crosses from one path to the other. The stop is
+    // logged as one WARN.
+    val perm = new scala.util.Random(64).shuffle((0L until 128L).toList).toArray
+    val paths = Seq(perm.take(64), perm.drop(64))
+    val nodes = (0L until 128L).toDF("doc_id")
+    val pairs = paths.flatMap(p => p.indices.init.map(i => (p(i), p(i + 1)))).toDF("id_a", "id_b")
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val logger = org.apache.logging.log4j.LogManager.getContext(false)
+      .asInstanceOf[org.apache.logging.log4j.core.LoggerContext].getLogger("graft.ops.Dedup")
+    val capture = new org.apache.logging.log4j.core.appender.AbstractAppender("capture", null, null,
+        true, org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
+        if (e.getLevel == org.apache.logging.log4j.Level.WARN) warnings.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    logger.addAppender(capture)
+    val got = try {
+      Dedup.connectedComponents(nodes, pairs, maxIters = 1)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    } finally logger.removeAppender(capture)
+    for ((path, other) <- Seq(paths(0) -> paths(1), paths(1) -> paths(0))) {
+      val labels = path.map(got)
+      assert(labels.distinct.length > 1, "one round must not contract a 64-node path")
+      assert(path.forall(id => got(id) <= id), "a label never exceeds its node's id")
+      assert(labels.forall(path.contains), "no label crosses to the other path")
+      assert(!labels.exists(other.contains))
+    }
+    assert(warnings.size == 1 && warnings.peek.contains("rounds = 1,"), warnings)
   }
 
   test("reversed-direction edges and high ids propagate to the minimum") {
@@ -80,8 +105,8 @@ class ComponentsSpec extends AnyFunSuite {
 
   test("adversarial chain-of-1000 converges within default maxIters (pointer jumping)") {
     // a path graph of diameter 999: plain one-hop propagation would need
-    // 999 rounds; the pointer-jump shortcut brings it under log2-ish
-    // rounds, well inside the default maxIters=25
+    // 999 rounds; star contraction needs about log2 of the length, well
+    // inside the default maxIters=25
     val n = 1000
     val nodes = (0L until n.toLong).toDF("doc_id")
     val pairs = (0L until (n - 1).toLong).map(i => (i, i + 1)).toDF("id_a", "id_b")
@@ -91,17 +116,31 @@ class ComponentsSpec extends AnyFunSuite {
     assert(got.values.forall(_ == 0L), "every chain node must reach label 0")
   }
 
-  test("a randomly numbered 200-node path converges when maxIters allows its ~40 rounds") {
-    // min-label jumping halves distances only along increasing ids, so a
-    // shuffled path needs far more than log2 rounds; the per-round plan
-    // must stay cheap to analyse however many rounds run
+  test("a randomly numbered 200-node path is exact in at most 16 rounds") {
+    // the round count must not depend on the numbering: 16 = 2·log2(200),
+    // at the default maxIters. A round is one job outside any SQL
+    // execution (the edge list and the final join run as SQL executions)
     val perm = new scala.util.Random(5).shuffle((0L until 200L).toList).toArray
     val nodes = (0L until 200L).toDF("doc_id")
     val pairs = (0 until 199).map(i => (perm(i), perm(i + 1))).toDF("id_a", "id_b")
-    val got = Dedup.connectedComponents(nodes, pairs, maxIters = 60)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val sc = spark.sparkContext
+    val rounds = new AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties == null || e.properties.getProperty("spark.sql.execution.id") == null)
+          rounds.incrementAndGet()
+    }
+    TestBus.drain(sc)
+    sc.addSparkListener(counter)
+    val got = try {
+      val out = Dedup.connectedComponents(nodes, pairs)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      TestBus.drain(sc)
+      out
+    } finally sc.removeSparkListener(counter)
     assert(got.size == 200)
     assert(got.values.forall(_ == 0L), "every path node must reach label 0")
+    assert(rounds.get >= 1 && rounds.get <= 16, s"${rounds.get} rounds")
   }
 
   test("reliable checkpoint path: with a checkpoint dir set, results are identical") {

@@ -2,7 +2,10 @@ package graft
 
 import graft.ops.{Dedup, Similarity}
 import graft.pipeline.{Pipeline, SpanOps}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape regression tests locking the scale claims: the ops that were
@@ -10,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * exchange, and pushable predicates must reach the scan. (Plan drift is a
   * regression class — see graft.Plans for the human-audit dump.)
   */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   lazy val spark = Pipeline.session("local[4]", 4, "graft-test")
 
@@ -93,6 +96,37 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan(Dedup.jaccardPairs(docs, threshold = 0.5, maxDocFreq = 10)).contains("Window"))
     // and nothing degraded to a cartesian product
     assert(!plan(Dedup.minhashPairs(docs, threshold = 0.5)).contains("CartesianProduct"))
+  }
+
+  test("minhashPairs shingles each doc once and scans its input once") {
+    // every plan one call executes (with AQE stages and reused exchanges
+    // walked once each): the shingle hash expression and the parquet scan
+    // each appear exactly once across them
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("minhash-plan").toString + "/docs"
+    (0L until 50L).map(i => (i, s"some words ${i % 10} repeated here again and again ${i % 3}"))
+      .toDF("doc_id", "text").write.parquet(dir)
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    session.listenerManager.register(listener)
+    try {
+      Dedup.minhashPairs(spark.read.parquet(dir), threshold = 0.5).collect()
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+    } finally session.listenerManager.unregister(listener)
+    val executed = plans.toArray(Array.empty[SparkPlan]).toSeq
+    assert(executed.nonEmpty)
+    // a scan lists its data filters for pruning only; the Filter above it
+    // evaluates them
+    val shingling = executed.map(p => collect(p) { case n if !n.isInstanceOf[FileSourceScanExec] =>
+      n.expressions.map(_.collect { case e: graft.functions.Md5ShingleH60 => e }.size).sum
+    }.sum).sum
+    val scans = executed.map(p => collect(p) { case s: FileSourceScanExec => s }.size).sum
+    assert((shingling, scans) == (1, 1), executed.mkString("\n"))
   }
 
   test("calibration-slice predicate is pushed into the parquet scan") {

@@ -130,16 +130,6 @@ class WebTextOpsSpec extends AnyFunSuite {
     assert(df(3) == ((4L, 4, 0.0)))
   }
 
-  test("exactSubstrFilter drops heavily-duplicated docs") {
-    val kept = graft.ops.Dedup.exactSubstrFilter(Seq(
-      (1L, "one two three four five"),
-      (2L, "one two three four five"),
-      (3L, "wholly unique text runs through here now")).toDF("doc_id", "text"),
-      maxDupFrac = 0.5, k = 4)
-      .select("doc_id").as[Long].collect().toSeq.sorted
-    assert(kept == Seq(3L))
-  }
-
   test("content-hash sampling: deterministic, monotone in threshold") {
     val docs = (0 until 200).map(i => (i.toLong, s"document body $i")).toDF("doc_id", "text")
     def ids(t: String) = TextAnalysis.sampleByContentHash(docs, t)
