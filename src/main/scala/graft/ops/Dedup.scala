@@ -92,7 +92,9 @@ object Dedup {
 
   /** MinHash LSH near-dup pairs: band the signature (bands × rowsPerBand = k),
     * bucket-join on (band index, band key), verify candidates with exact
-    * Jaccard over shingle-hash sets, keep pairs ≥ threshold.
+    * Jaccard over shingle-hash sets, keep pairs ≥ threshold. Each doc's
+    * shingle-hash set is computed in one pass and checkpointed eagerly (one
+    * Spark job when called; see [[checkpoint]]).
     *
     * Shuffle profile: explode emits `bands` rows/doc with a small (int,
     * string) key; the self-join is an equi-join on that key; verification
