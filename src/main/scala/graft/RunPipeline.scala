@@ -4,7 +4,8 @@ import graft.io.SyntheticDocs
 import graft.pipeline.{Pipeline, Runner}
 
 /** CLI for the full resumable pipeline over the deterministic corpus:
-  * `runMain graft.RunPipeline <nDocs> <outTableDir> <metricsTableDir> [cpus]`.
+  * `runMain graft.RunPipeline <nDocs> <outTableDir> <metricsTableDir> [cpus]`
+  * (`cpus` defaults to the JVM's available processors).
   * Used by the kill/rerun harness (tools/kill_rerun_test.sh) to evidence the
   * north rule's "job killed mid-run completes idempotently on rerun" with a
   * real SIGKILL instead of a simulated crash point.
@@ -14,7 +15,7 @@ object RunPipeline {
     val nDocs = args(0).toLong
     val outDir = args(1)
     val metricsDir = args(2)
-    val cpus = if (args.length > 3) args(3).toInt else 16
+    val cpus = if (args.length > 3) args(3).toInt else Runtime.getRuntime.availableProcessors
     // the kill harness needs the forked JVM's pid (its argv hides behind a
     // java @argfile, so /proc scans can't find it)
     sys.env.get("GRAFT_PID_FILE").foreach { f =>

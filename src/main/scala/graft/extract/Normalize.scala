@@ -54,17 +54,6 @@ object Normalize {
     Normalized(replaced, figureImages.take(i))
   }
 
-  /** Azure field-metadata extraction analog (azure_provider/utils.py:33-42):
-    * the first analyzed document's fields become a name → value map, each
-    * value `field["valueString"] or field.get("content", "")` — Python `or`
-    * semantics, so an empty valueString falls through to content.
-    */
-  def azureFieldMetadata(fields: Seq[(String, Map[String, String])]): Map[String, String] =
-    fields.map { case (name, field) =>
-      name -> field.get("valueString").filter(_.nonEmpty)
-        .orElse(field.get("content")).getOrElse("")
-    }.toMap
-
   // --------------------------------------------------------------- docling
   /** docling: `<!-- PageBreak -->` renumber + leading page-1 marker
     * (docling_provider/provider.py:143-153), then `<!-- image -->` placeholders

@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
 
@@ -151,6 +152,13 @@ object TableIO {
     currentSnapshot(tableDir).filter(_.dataDirs.nonEmpty).map { s =>
       spark.read.parquet(s.dataDirs.map(d => s"$tableDir/$d"): _*)
     }
+
+  /** Read the data dirs `dirs` of `tableDir` with a known `schema`: no job
+    * runs to infer it, and only the schema's columns are scanned.
+    */
+  def readDirs(spark: SparkSession, tableDir: String, dirs: Seq[String],
+      schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(dirs.map(d => s"$tableDir/$d"): _*)
 
   /** Read as of a specific snapshot id (time travel). */
   def readAsOf(spark: SparkSession, tableDir: String, snapshotId: Long): Option[DataFrame] =

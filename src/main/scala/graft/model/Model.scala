@@ -98,6 +98,26 @@ final case class LineageRow(
 object LineageRow {
   /** Max failure messages retained per partition (count stays exact). */
   final val MaxFailureSample = 100
+
+  /** One partition's lineage, tallied as its rows stream past: the only
+    * place a [[LineageRow]] is built (`Runner`'s write pass and
+    * `Pipeline.lineage` both feed one per task).
+    */
+  final class Tally(partitionId: Int) {
+    private var docs, spans, failed = 0L
+    private val sample = scala.collection.mutable.ArrayBuffer.empty[String]
+
+    /** One extract row: `failure` is "" for a success. */
+    def add(failure: String, spanCount: Int): Unit =
+      if (failure.isEmpty) { docs += 1; spans += spanCount }
+      else {
+        failed += 1
+        if (sample.size < MaxFailureSample) sample += failure
+      }
+
+    def row(snapshotId: Long): LineageRow =
+      LineageRow(snapshotId, partitionId, docs, spans, failed, sample.toSeq)
+  }
 }
 
 /** Raw (pre-extraction) document row: what the synthetic Iceberg-shaped input

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.extract.Formats
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -218,10 +219,10 @@ object Multimodal {
           MediaFeatures(r.doc_id, r.media_ref, r.mime_type,
             if (r.content == null) 0 else r.content.length, w, h, c, luma, ph, "")
         } catch {
-          case e: Exception =>
+          case e @ (_: Exception | _: StackOverflowError) =>
             MediaFeatures(r.doc_id, r.media_ref, r.mime_type,
               if (r.content == null) 0 else r.content.length,
-              0, 0, 0, 0.0, 0L, s"${e.getClass.getSimpleName}: ${e.getMessage}")
+              0, 0, 0, 0.0, 0L, Formats.describe(e))
         }
       }
     }
@@ -386,9 +387,9 @@ object Multimodal {
               resized = true, "")
           }
         } catch {
-          case e: Exception =>
+          case e @ (_: Exception | _: StackOverflowError) =>
             ResizedMedia(r.doc_id, r.media_ref, r.mime_type, r.content, 0, 0,
-              resized = false, s"${e.getClass.getSimpleName}: ${e.getMessage}")
+              resized = false, Formats.describe(e))
         }
       }
     }
@@ -510,9 +511,9 @@ object Multimodal {
           AudioFeatures(r.doc_id, r.media_ref, r.mime_type, len,
             sr, ch, bits, frames, durMs, rms, peak, "")
         } catch {
-          case e: Exception =>
+          case e @ (_: Exception | _: StackOverflowError) =>
             AudioFeatures(r.doc_id, r.media_ref, r.mime_type, len,
-              0, 0, 0, 0, 0, 0.0, 0.0, s"${e.getClass.getSimpleName}: ${e.getMessage}")
+              0, 0, 0, 0, 0, 0.0, 0.0, Formats.describe(e))
         }
       }
     }

@@ -2,9 +2,12 @@ package graft.pipeline
 
 import graft.chunk.Chunkers
 import graft.extract.Formats
+import graft.io.TableIO
 import graft.model._
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Extraction result row: the doc plus an error slot so partition lineage can
   * aggregate failures without killing the job (mirrors docler's per-file
@@ -163,27 +166,21 @@ object Pipeline {
   }
 
   /** Per-partition lineage rows (north rule: input snapshot id, partition id,
-    * doc count, span count, failure list) — computed with a plain groupBy on
-    * `spark_partition_id()` so it is one partial-aggregated shuffle, not a
-    * custom accumulator. `out` needs `spans` and `failure` ("" = success)
+    * doc count, span count, failure list): one [[LineageRow.Tally]] per
+    * partition over `(failure, size(spans))`, the same tally `Runner` keeps
+    * in its write pass, so there is no shuffle. Every partition reports one
+    * row, empty or not. `out` needs `spans` and `failure` ("" = success)
     * columns: extract output, or committed docs tagged with `failure = ""`.
     */
   def lineage(out: Dataset[_], snapshotId: Long): Dataset[LineageRow] = {
     val spark = out.sparkSession
     import spark.implicits._
-    out.toDF()
-      .withColumn("partition_id", spark_partition_id())
-      .groupBy(col("partition_id"))
-      .agg(
-        count(when(col("failure") === "", 1)).as("doc_count"),
-        coalesce(sum(size(col("spans"))), lit(0L)).as("span_count"),
-        count(when(col("failure") =!= "", 1)).as("failure_count"),
-        // collect_list skips nulls: successes never enter the buffer
-        slice(collect_list(when(col("failure") =!= "", col("failure"))),
-          1, LineageRow.MaxFailureSample).as("failures"))
-      .select(lit(snapshotId).as("snapshot_id"), col("partition_id"),
-        col("doc_count"), col("span_count"), col("failure_count"), col("failures"))
-      .as[LineageRow]
+    out.toDF().select(col("failure"), size(col("spans"))).as[(String, Int)]
+      .mapPartitions { it =>
+        val tally = new LineageRow.Tally(TaskContext.getPartitionId())
+        it.foreach { case (failure, spans) => tally.add(failure, spans) }
+        Iterator.single(tally.row(snapshotId))
+      }
   }
 }
 
@@ -196,11 +193,16 @@ object Resume {
     * doc_ids — small relative to payloads — so Catalyst broadcasts it when it
     * fits (AQE decides); at 10^12-doc scale it degrades gracefully to a
     * shuffled hash anti-join on the same key the output table is partitioned
-    * by.
+    * by. Duplicate keys on the processed side do not change an anti-join's
+    * result, so they are not removed first.
     */
   def filterProcessed(input: DataFrame, processedDocIds: DataFrame): DataFrame =
-    input.join(processedDocIds.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
+    input.join(processedDocIds.select("doc_id"), Seq("doc_id"), "left_anti")
 
+  /** The committed doc_ids, read with their declared type: no job runs to
+    * infer the table's schema.
+    */
   def processedIds(spark: SparkSession, outTableDir: String): Option[DataFrame] =
-    graft.io.TableIO.read(spark, outTableDir).map(_.select("doc_id"))
+    TableIO.currentSnapshot(outTableDir).filter(_.dataDirs.nonEmpty).map(s =>
+      TableIO.readDirs(spark, outTableDir, s.dataDirs, StructType.fromDDL("doc_id string")))
 }

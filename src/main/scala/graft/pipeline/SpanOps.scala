@@ -70,12 +70,4 @@ object SpanOps {
     withPageNumber(flat)
       .filter(col("page_no").isInCollection(pages))
       .drop("page_no")
-
-  /** Derived page_count per doc = count of page_break spans, min 1
-    * (converters/base.py:215-223 analog).
-    */
-  def pageCounts(flat: DataFrame): DataFrame =
-    flat.groupBy(col("doc_id"))
-      .agg(greatest(
-        sum(when(col("kind") === "page_break", 1).otherwise(0)), lit(1)).as("page_count"))
 }

@@ -158,13 +158,15 @@ class MultimodalSpec extends AnyFunSuite {
     assert(kept == Set("big"))
   }
 
-  test("azureFieldMetadata mirrors valueString-or-content (utils.py:33-42)") {
-    val m = graft.extract.Normalize.azureFieldMetadata(Seq(
-      "Title" -> Map("valueString" -> "Quarterly Report", "content" -> "ignored"),
-      "Author" -> Map("valueString" -> "", "content" -> "A. Writer"),
-      "Empty" -> Map.empty))
-    assert(m == Map("Title" -> "Quarterly Report", "Author" -> "A. Writer", "Empty" -> ""))
+  test("a codec that overflows its stack yields a decode_error row, not a failed task") {
+    import spark.implicits._
+    val rows = Seq(Multimodal.MediaRow("d1", "img-0.png", "image/png", "x".getBytes("UTF-8")))
+    val out = Multimodal.extractFeatures(spark.createDataset(rows), MultimodalSpec.DeepCodec)
+      .collect()
+    assert(out.map(_.decode_error).toSeq == Seq("StackOverflowError: codec recursion"))
+    assert(out.head.width == 0 && out.head.byte_len == 1)
   }
+
   test("WavCodec: real WAVE round-trip, exact integer features, honest failures") {
     import graft.ops.Multimodal
     // square wave at half scale: rms = peak = 0.5 exactly
@@ -189,5 +191,13 @@ class MultimodalSpec extends AnyFunSuite {
     val feats = Multimodal.extractAudioFeatures(rows).collect().map(f => f.doc_id -> f).toMap
     assert(feats("d1").decode_error == "" && feats("d1").rms == 0.5)
     assert(feats("d2").decode_error.nonEmpty && feats("d2").sample_rate == 0)
+  }
+}
+
+object MultimodalSpec {
+  /** A codec whose decoder recurses past the stack, as a hostile payload can. */
+  object DeepCodec extends Multimodal.MediaCodec {
+    def decode(mime: String, bytes: Array[Byte]): (Int, Int, Int, Double, Long) =
+      throw new StackOverflowError("codec recursion")
   }
 }

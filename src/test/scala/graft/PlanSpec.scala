@@ -166,6 +166,16 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(!p.contains("pmod(xxhash64"), p)
   }
 
+  test("Pipeline.lineage tallies each partition in place: no exchange") {
+    import spark.implicits._
+    val raw = spark.createDataset((0L until 30L).map(i => graft.io.SyntheticDocs.generate(42, i).raw))
+    val lineage = Pipeline.lineage(Pipeline.extract(raw), snapshotId = 0L)
+    assert(lineage.collect().map(_.doc_count).sum == 30L)
+    val p = plan(lineage.toDF()) // the executed (final) plan
+    assert(!p.contains("Exchange"), p)
+    assert(p.contains("MapPartitions"), p)
+  }
+
   test("ingestion: filter chain sits between the listing and the byte-read stage") {
     val b = java.nio.file.Files.createTempDirectory("planspec-ingest")
     java.nio.file.Files.createDirectories(b.resolve("x"))

@@ -102,6 +102,58 @@ class RegressionSpec extends AnyFunSuite {
     assert(bySnap == Map(0L -> 20L, 1L -> 20L), bySnap)
   }
 
+  test("Runner: a docs snapshot committed after three Runner snapshots gets exactly its own lineage") {
+    import spark.implicits._
+    val (outDir, metricsDir) = (tmp("rep3-out"), tmp("rep3-metrics"))
+    val gens = (0L until 40L).map(i => SyntheticDocs.generate(seed = 59, i))
+    def batch(k: Int) = gens.slice(10 * k, 10 * k + 10)
+    def spans(k: Int) = batch(k).map(_.expected.size.toLong).sum
+    (0 until 3).foreach { k =>
+      assert(Runner.run(spark.createDataset(batch(k).map(_.raw)), outDir, metricsDir).snapshotId == k)
+    }
+    // crash window: docs snapshot 3 committed, its lineage missing
+    TableIO.commit(Pipeline.toDocsDF(Pipeline.extract(spark.createDataset(batch(3).map(_.raw)))),
+      outDir)
+    val all = spark.createDataset(gens.map(_.raw))
+    val r = Runner.run(all, outDir, metricsDir)
+    assert(r.snapshotId == 3 && r.docsProcessed == 0 && r.skippedAlreadyDone == 40)
+    // the repair is metrics snapshot 3 and holds only docs snapshot 3's rows
+    val repaired = TableIO.currentSnapshot(metricsDir).get
+    assert(repaired.snapshotId == 3 && repaired.parentId == 2)
+    val added = spark.read.parquet(s"$metricsDir/${repaired.dataDirs.last}")
+      .agg(min("snapshot_id"), max("snapshot_id"), sum("doc_count"), sum("span_count"),
+        sum("failure_count")).collect().head
+    assert(added.toSeq == Seq(3L, 3L, 10L, spans(3), 0L), added)
+    val bySnap = TableIO.read(spark, metricsDir).get.groupBy("snapshot_id")
+      .agg(sum("doc_count"), sum("span_count")).collect()
+      .map(row => row.getLong(0) -> (row.getLong(1), row.getLong(2))).toMap
+    assert(bySnap == (0 until 4).map(k => k.toLong -> (10L, spans(k))).toMap, bySnap)
+
+    // the rerun after that adds nothing to either table
+    val r2 = Runner.run(all, outDir, metricsDir)
+    assert(r2.snapshotId == 3 && r2.docsProcessed == 0 && r2.skippedAlreadyDone == 40)
+    assert(TableIO.currentSnapshot(metricsDir).get == repaired)
+    assert(TableIO.currentSnapshot(outDir).get.snapshotId == 3)
+  }
+
+  test("Runner: a metrics chain out of step with the docs chain throws instead of writing") {
+    import spark.implicits._
+    val (outDir, metricsDir) = (tmp("step-out"), tmp("step-metrics"))
+    val gens = (0L until 30L).map(i => SyntheticDocs.generate(seed = 61, i).raw)
+    Runner.run(spark.createDataset(gens.take(10)), outDir, metricsDir)
+    // two docs snapshots without lineage: metrics snapshot 1 cannot hold
+    // docs snapshot 2's rows
+    Seq(gens.slice(10, 20), gens.drop(20)).foreach { b =>
+      TableIO.commit(Pipeline.toDocsDF(Pipeline.extract(spark.createDataset(b))), outDir)
+    }
+    val e = intercept[IllegalStateException](
+      Runner.run(spark.createDataset(gens), outDir, metricsDir))
+    assert(e.getMessage.contains("docs snapshot 2"), e.getMessage)
+    assert(TableIO.currentSnapshot(metricsDir).get.snapshotId == 0)
+    assert(TableIO.read(spark, metricsDir).get.count() ==
+      TableIO.currentSnapshot(metricsDir).get.rowCount)
+  }
+
   test("Runner: reruns with only permanently-failing docs do not grow the snapshot chain") {
     import spark.implicits._
     val (outDir, metricsDir) = (tmp("fail-out"), tmp("fail-metrics"))
