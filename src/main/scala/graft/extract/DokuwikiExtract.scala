@@ -47,7 +47,7 @@ object DokuwikiExtract {
     var fenceLang = ""
 
     def flushPara(): Unit = if (para.nonEmpty) {
-      blocks += para.mkString(" ")
+      blocks += para.mkString(" ").trim
       para.clear()
     }
     def flushList(): Unit = if (listLines.nonEmpty) {
@@ -89,9 +89,13 @@ object DokuwikiExtract {
         case ListItem(indent, kind, text) =>
           flushPara()
           val depth = indent.length / 2 - 1
+          if (depth >= Bin.MaxNesting)
+            throw new IllegalStateException(s"lists nested deeper than ${Bin.MaxNesting}")
+          // a new item at this depth ends any deeper list
+          counters = counters.filter(_._1 <= depth)
           val head = if (kind == "*") "- " else {
             val n = counters.getOrElse(depth, 0) + 1
-            counters = counters.filter(_._1 <= depth).updated(depth, n)
+            counters = counters.updated(depth, n)
             s"$n. "
           }
           listLines += ("  " * depth) + head + inline(text)

@@ -70,8 +70,11 @@ private[extract] object MdShared {
     private var itemStarted = List.empty[Boolean]
     private val lines = ArrayBuffer.empty[String]
 
-    def openList(ordered: Boolean): Unit =
+    def openList(ordered: Boolean): Unit = {
+      if (counters.length >= Bin.MaxNesting)
+        throw new IllegalStateException(s"lists nested deeper than ${Bin.MaxNesting}")
       counters = (if (ordered) 0 else -1) :: counters
+    }
     def openItem(): Unit = itemStarted = false :: itemStarted
     def closeItem(): Unit = itemStarted = itemStarted.drop(1)
 
@@ -80,12 +83,19 @@ private[extract] object MdShared {
       */
     def closeList(): Option[String] = {
       counters = counters.drop(1)
-      if (counters.isEmpty && lines.nonEmpty) {
+      if (counters.isEmpty) takeLines() else None
+    }
+
+    /** The pending lines as a block, leaving every list open: a block
+      * emitted mid-list goes after the items before it.
+      */
+    def takeLines(): Option[String] =
+      if (lines.isEmpty) None
+      else {
         val block = lines.mkString("\n")
         lines.clear()
         Some(block)
-      } else None
-    }
+      }
 
     /** Append item text: first text of an open item renders its marker
       * line; later text becomes a continuation line under the item.
@@ -113,5 +123,7 @@ private[extract] object MdShared {
     def inItem: Boolean = itemStarted.nonEmpty
     /** Innermost item open but its marker line not yet emitted? */
     def itemPending: Boolean = itemStarted.headOption.contains(false)
+    /** Would text continue a line of the pending block? */
+    def continues: Boolean = itemPending || lines.nonEmpty
   }
 }

@@ -16,7 +16,8 @@ import scala.collection.mutable.ArrayBuffer
   *   - `.Bl -bullet|-enum|-tag …` / `.It args` / `.El` → markdown
   *     lists (`-enum` numbered), nested two spaces per level, one block
   *     per outermost list; text lines inside an item continue that
-  *     item's line
+  *     item's line, any other block inside a list goes out after the
+  *     items before it, and an `.It` outside any `.Bl` is running text
   *   - `.Bd -literal` … `.Ed` → fenced code; `.Dl line` → one-line fence
   *   - inline semantic macros (in macro lines, callable mid-sequence):
   *     `Fl w` → `**-w**`, `Ar`/`Em`/`Pa`/`Va` → `*w*`, `Cm`/`Ic`/`Sy` →
@@ -44,14 +45,15 @@ object MdocExtract {
     var docName = ""
 
     def flushPara(): Unit = if (para.nonEmpty) {
-      blocks += para.mkString(" ")
+      blocks += para.mkString(" ").trim
       para.clear()
     }
-    def flushListIfDone(): Unit =
-      if (listKinds.isEmpty && listLines.nonEmpty) {
-        blocks += listLines.mkString("\n")
-        listLines.clear()
-      }
+    // pending list lines go out before any other block, in source order
+    def flushList(): Unit = if (listLines.nonEmpty) {
+      blocks += listLines.mkString("\n")
+      listLines.clear()
+    }
+    def flushListIfDone(): Unit = if (listKinds.isEmpty) flushList()
     // request-line tokenizer shared with man(7) — same quoting grammar
     def split(rest: String): List[String] = MdShared.troffArgs(rest)
     // render a callable-macro token sequence into inline markdown
@@ -93,6 +95,7 @@ object MdocExtract {
       val line = raw.stripSuffix("\r")
       if (fence != null) {
         if (line == ".Ed") {
+          flushList()
           blocks += MdShared.fence(fence.mkString("\n"), "")
           fence = null
         } else fence += line
@@ -104,22 +107,29 @@ object MdocExtract {
           case ("Dd" | "Os", _) => ()
           case ("Dt", a) =>
             flushPara()
-            if (a.nonEmpty)
+            if (a.nonEmpty) {
+              flushList()
               blocks += "# " + a.head + a.lift(1).map(s => s"($s)").getOrElse("")
+            }
           case ("Sh", a) =>
-            flushPara()
+            flushPara(); flushList()
             blocks += "## " + render(a)
           case ("Ss", a) =>
-            flushPara()
+            flushPara(); flushList()
             blocks += "### " + render(a)
           case ("Pp" | "Lp", _) => flushPara()
           case ("Nd", a) => appendText("— " + render(a))
           case ("Bl", a) =>
             flushPara()
+            if (listKinds.length >= Bin.MaxNesting)
+              throw new IllegalStateException(s"lists nested deeper than ${Bin.MaxNesting}")
             listKinds = (if (a.contains("-enum")) 0 else -1) :: listKinds
           case ("It", a) =>
             val depth = listKinds.length
-            if (depth > 0) {
+            // outside any .Bl the rendered arguments are running text
+            if (depth == 0) appendText(render(a))
+            else {
+              flushPara()
               val marker = listKinds.head match {
                 case n if n >= 0 =>
                   listKinds = (n + 1) :: listKinds.tail
@@ -135,7 +145,7 @@ object MdocExtract {
             flushPara()
             fence = ArrayBuffer.empty[String]
           case ("Dl" | "D1", a) =>
-            flushPara()
+            flushPara(); flushList()
             blocks += MdShared.fence(a.mkString(" "), "")
           case (m, a) if AllMacros.contains(m) =>
             appendText(render(m :: a))
@@ -147,10 +157,10 @@ object MdocExtract {
         appendText(line.trim)
       }
     }
-    if (fence != null) blocks += MdShared.fence(fence.mkString("\n"), "")
     flushPara()
     // an unclosed .Bl still renders its items
-    if (listLines.nonEmpty) blocks += listLines.mkString("\n")
+    flushList()
+    if (fence != null) blocks += MdShared.fence(fence.mkString("\n"), "")
     if (blocks.isEmpty) throw new IllegalArgumentException("mdoc: no content")
     blocks.mkString("\n\n")
   }

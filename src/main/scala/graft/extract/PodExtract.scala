@@ -12,9 +12,10 @@ import scala.collection.mutable.ArrayBuffer
   *   - `=head1`..`=head4` → `#`..`####` headings
   *   - `=over [n]` / `=item` / `=back` → markdown lists, two spaces of
   *     indent per nesting level, one block per outermost list:
-  *     `=item *` → bullet, `=item 1.`/`=item 2` → numbered (renumbered
-  *     per depth), `=item text` → `- text`; an item's body paragraphs
-  *     continue its line
+  *     `=item *` → bullet, `=item 1.`/`=item 2` → numbered (from 1 at
+  *     each `=over`), `=item text` → `- text`; an item's body text
+  *     continues its line, and any other block inside a list goes out
+  *     after the items before it
   *   - verbatim paragraphs (lines starting with whitespace) → one
   *     fenced code block per contiguous run
   *   - `=begin fmt` … `=end fmt` and `=for fmt …` skip; `=pod` resumes,
@@ -37,30 +38,30 @@ object PodExtract {
     val blocks = ArrayBuffer.empty[String]
     val para = ArrayBuffer.empty[String]
     val listLines = ArrayBuffer.empty[String]
-    var counters = Map.empty[Int, Int]
-    var overDepth = 0
-    var itemOpen = false
+    var frames = List.empty[Int] // one numbering counter per open =over
     val verbatim = ArrayBuffer.empty[String]
     var cut = false // after =cut, outside a begin/end region
     var beginFmt = "" // inside =begin … =end
     var forSkip = false // inside a =for format-specific paragraph
 
     def flushPara(): Unit = if (para.nonEmpty) {
-      val t = para.mkString(" ")
+      blocks += para.mkString(" ").trim
       para.clear()
-      if (itemOpen && listLines.nonEmpty)
-        listLines(listLines.length - 1) = listLines.last.stripTrailing() + " " + t
-      else blocks += t
+    }
+    // pending list lines go out before any other block, in source order
+    def flushList(): Unit = if (listLines.nonEmpty) {
+      blocks += listLines.mkString("\n")
+      listLines.clear()
     }
     def flushVerbatim(): Unit = if (verbatim.nonEmpty) {
+      flushList()
       blocks += MdShared.fence(verbatim.mkString("\n"), "")
       verbatim.clear()
     }
-    def flushListIfDone(): Unit = if (overDepth == 0 && listLines.nonEmpty) {
-      blocks += listLines.mkString("\n")
-      listLines.clear()
-      counters = Map.empty
-      itemOpen = false
+    def openList(): Unit = {
+      if (frames.length >= Bin.MaxNesting)
+        throw new IllegalStateException(s"lists nested deeper than ${Bin.MaxNesting}")
+      frames = 0 :: frames
     }
 
     def inline(s: String): String = {
@@ -126,30 +127,28 @@ object PodExtract {
               flushPara(); forSkip = true
             case "head1" | "head2" | "head3" | "head4" =>
               cut = false
-              flushPara()
+              flushPara(); flushList()
               blocks += ("#" * (cmd.last - '0')) + " " + inline(rest.trim)
             case "over" =>
               cut = false
               flushPara()
-              overDepth += 1
+              openList()
             case "back" =>
               flushPara()
-              overDepth = math.max(0, overDepth - 1)
-              flushListIfDone()
+              frames = frames.drop(1)
+              if (frames.isEmpty) flushList()
             case "item" =>
               cut = false
               flushPara()
-              val depth = math.max(overDepth, 1)
+              if (frames.isEmpty) openList() // an =item outside =over opens its own list
               val body = rest.trim
               val (marker, text) =
                 if (body == "*" || body.isEmpty) ("- ", "")
                 else if (body.matches("""\d+\.?""")) {
-                  val n = counters.getOrElse(depth, 0) + 1
-                  counters = counters.filter(_._1 <= depth).updated(depth, n)
-                  (s"$n. ", "")
+                  frames = (frames.head + 1) :: frames.tail
+                  (s"${frames.head}. ", "")
                 } else ("- ", inline(body))
-              listLines += ("  " * (depth - 1)) + marker + text
-              itemOpen = true
+              listLines += ("  " * (frames.length - 1)) + marker + text
             case _ => ()
           }
         case _ if beginFmt.nonEmpty || cut => ()
@@ -162,11 +161,14 @@ object PodExtract {
           verbatim += l
         case l =>
           flushVerbatim()
-          para += inline(l.trim)
+          // text continues a pending item line, one source line at a time
+          val t = inline(l.trim)
+          if (listLines.nonEmpty)
+            listLines(listLines.length - 1) = listLines.last.stripTrailing() + " " + t
+          else para += t
       }
     }
-    flushPara(); flushVerbatim()
-    if (listLines.nonEmpty) blocks += listLines.mkString("\n")
+    flushPara(); flushVerbatim(); flushList()
     if (blocks.isEmpty) throw new IllegalArgumentException("pod: no content")
     blocks.mkString("\n\n")
   }

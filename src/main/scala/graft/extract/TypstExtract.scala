@@ -85,10 +85,16 @@ object TypstExtract {
         case Bullet(indent, text) =>
           flushPara()
           val depth = indent.length / 2
+          if (depth >= Bin.MaxNesting)
+            throw new IllegalStateException(s"lists nested deeper than ${Bin.MaxNesting}")
+          // a new item at this depth ends any deeper list
+          counters = counters.filter(_._1 <= depth)
           listLines += ("  " * depth) + "- " + inline(text)
         case Numbered(indent, text) =>
           flushPara()
           val depth = indent.length / 2
+          if (depth >= Bin.MaxNesting)
+            throw new IllegalStateException(s"lists nested deeper than ${Bin.MaxNesting}")
           val n = counters.getOrElse(depth, 0) + 1
           // a new item at this depth restarts any deeper numbering
           counters = counters.filter(_._1 <= depth).updated(depth, n)

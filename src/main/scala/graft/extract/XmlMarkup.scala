@@ -49,7 +49,14 @@ private[extract] abstract class XmlMarkup(kind: String, roles: Map[String, XmlMa
   }
 
   /** Where element `name`'s non-empty text goes: the open list item, else a block. */
-  protected def paragraph(name: String, t: String): Unit = if (list.inItem) list.text(t) else blocks += t
+  protected def paragraph(name: String, t: String): Unit =
+    if (list.inItem && list.continues) list.text(t) else emit(t)
+
+  /** Add a block after any pending list lines, so blocks keep source order. */
+  protected def emit(block: String): Unit = {
+    list.takeLines().foreach(blocks += _)
+    blocks += block
+  }
 
   /** Attribute of the element being opened, by local name ("" if absent). */
   protected def attr(local: String): String = DocxExtract.attr(reader, local)
@@ -68,10 +75,10 @@ private[extract] abstract class XmlMarkup(kind: String, roles: Map[String, XmlMa
   }
 
   protected def heading(level: Int, t: String): Unit =
-    if (t.nonEmpty) blocks += ("#" * math.min(level, 6)) + " " + t
+    if (t.nonEmpty) emit(("#" * math.min(level, 6)) + " " + t)
 
   protected def image(target: String): Unit =
-    if (target.nonEmpty) blocks += s"![$target]($target)"
+    if (target.nonEmpty) emit(s"![$target]($target)")
 
   private def flushParagraph(name: String): Unit = {
     val t = flush()
@@ -94,7 +101,7 @@ private[extract] abstract class XmlMarkup(kind: String, roles: Map[String, XmlMa
           path.remove(path.length - 1)
           if (verbatim == null) close(name)
           else if (path.length == verbatimDepth) {
-            blocks += MdShared.fence(verbatim.toString.stripPrefix("\n").stripTrailing(), verbatimLang)
+            emit(MdShared.fence(verbatim.toString.stripPrefix("\n").stripTrailing(), verbatimLang))
             verbatim = null
           }
         case _ => ()

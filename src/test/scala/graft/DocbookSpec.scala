@@ -64,6 +64,16 @@ class DocbookSpec extends AnyFunSuite {
       "```\nab\n```")
   }
 
+  test("a block inside a list item goes after the items before it") {
+    assert(DocbookExtract.toMarkdown("<article><orderedlist><listitem><para>a</para>" +
+      "<programlisting>x</programlisting><para>b</para></listitem><listitem><para>c</para>" +
+      "<mediaobject><imageobject><imagedata fileref=\"f.png\"/></imageobject></mediaobject>" +
+      "</listitem></orderedlist></article>") == "1. a\n\n```\nx\n```\n\nb\n\n2. c\n\n![f.png](f.png)")
+    assert(graft.extract.JatsExtract.toMarkdown("<article><body><list><list-item><p>a</p>" +
+      "<preformat>x</preformat></list-item><list-item><p>b</p></list-item></list></body></article>") ==
+      "- a\n\n```\nx\n```\n\n- b")
+  }
+
   test("no content throws; real ingestion route by explicit MIME") {
     intercept[IllegalArgumentException](DocbookExtract.toMarkdown(DocbookSpec.empty))
 

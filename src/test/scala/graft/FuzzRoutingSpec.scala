@@ -247,6 +247,23 @@ class FuzzRoutingSpec extends AnyFunSuite {
       val ms = (System.nanoTime() - t0) / 1e6
       assert(ms < 30000, s"$mime pathological case took ${ms}ms")
     }
+    // 50,000 nested lists with 50,000 items would render each item line
+    // indented by its depth, quadratic output: every list site caps the
+    // depth at Bin.MaxNesting and fails the document instead
+    val deepLists = Seq(
+      ("text/x-mdoc", ".Bl -bullet\n" * 50000 + ".It x\n" * 50000),
+      ("text/x-pod", "=over\n\n" * 50000 + "=item *\n\nx\n\n" * 50000),
+      ("application/x-typst", " " * 600 + "- x\n"),
+      ("text/x-dokuwiki", " " * 600 + "* x\n"),
+      ("application/docbook+xml", "<article>" + "<itemizedlist>" * 300 + "</itemizedlist>" * 300 + "</article>"),
+      ("application/x-jats+xml", "<article><body>" + "<list>" * 300 + "</list>" * 300 + "</body></article>"))
+    for ((mime, text) <- deepLists) {
+      val t0 = System.nanoTime()
+      val out = Pipeline.extractOne(Ingest.toRawDoc("f.bin", text.getBytes("UTF-8"), mime))
+      val ms = (System.nanoTime() - t0) / 1e6
+      assert(ms < 30000, s"$mime deep lists took ${ms}ms")
+      assert(out.failure == "IllegalStateException: lists nested deeper than 256", s"$mime: ${out.failure}")
+    }
     val nested = Pipeline.extractOne(
       Ingest.toRawDoc("nested.pdf", HostilePdfs.nestedArrays(5000)))
     assert(nested.failure.startsWith(

@@ -7,28 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * text-markup members of the reference's pandoc surface.
   */
 class TextMarkupSpec extends AnyFunSuite {
+  import TextMarkupSpec._
 
   test("typst: headings, inline styles, lists, image, link, raw block") {
-    val typ =
-      """= Doc 3
-        |== Part 1
-        |Some *very* important _words_ here,
-        |continuing on a second line.
-        |
-        |#image("plot.png")
-        |
-        |- alpha
-        |- beta
-        |  + one
-        |  + two
-        |+ top numbered
-        |
-        |```scala
-        |val x = 1
-        |```
-        |See #link("http://e.x")[the docs] now.
-        |""".stripMargin
-    assert(TypstExtract.toMarkdown(typ) ==
+    assert(TypstExtract.toMarkdown(typstDoc) ==
       """# Doc 3
         |
         |## Part 1
@@ -51,27 +33,7 @@ class TextMarkupSpec extends AnyFunSuite {
   }
 
   test("troff: TH/SH/SS, font requests and escapes, TP tag, nf/fi") {
-    val man =
-      """.\" comment line
-        |.TH GREP 1 "2024" "GNU"
-        |.SH NAME
-        |grep \- print lines
-        |.SH "DESCRIPTION TEXT"
-        |.PP
-        |Searches with \fBbold\fR and \fIitalic\fP forms.
-        |.TP
-        |.B \-v
-        |Invert the match.
-        |.BR grep (1),
-        |more text.
-        |.nf
-        |literal code
-        |  kept
-        |.fi
-        |.SS Sub
-        |Done.
-        |""".stripMargin
-    assert(TroffExtract.toMarkdown(man) ==
+    assert(TroffExtract.toMarkdown(manDoc) ==
       "# GREP(1)\n\n## NAME\n\ngrep - print lines\n\n## DESCRIPTION TEXT\n\n" +
         "Searches with **bold** and *italic* forms.\n\n**-v**\n\n" +
         "Invert the match. **grep**(1), more text.\n\n" +
@@ -84,23 +46,7 @@ class TextMarkupSpec extends AnyFunSuite {
   }
 
   test("dokuwiki: headings, inline, links, media, lists, code block") {
-    val doku =
-      """====== Wiki 4 ======
-        |===== Section =====
-        |Some //italic// and **bold** with ''mono'' text.
-        |Link [[http://a|site A]] and bare [[http://b]].
-        |{{ image.png?200 |caption}}
-        |
-        |  * one
-        |  * two
-        |    - first
-        |    - second
-        |
-        |<code python>
-        |print(1)
-        |</code>
-        |""".stripMargin
-    assert(DokuwikiExtract.toMarkdown(doku) ==
+    assert(DokuwikiExtract.toMarkdown(dokuDoc) ==
       "# Wiki 4\n\n## Section\n\n" +
         "Some *italic* and **bold** with `mono` text. " +
         "Link [site A](http://a) and bare [http://b](http://b). " +
@@ -110,36 +56,7 @@ class TextMarkupSpec extends AnyFunSuite {
   }
 
   test("mdoc: prologue, Nm/Nd, callable macros, tag list, Bd/Dl") {
-    val mdoc =
-      """.\" comment
-        |.Dd January 1, 2024
-        |.Dt CAT 1
-        |.Os
-        |.Sh NAME
-        |.Nm cat
-        |.Nd concatenate files
-        |.Sh DESCRIPTION
-        |The
-        |.Nm
-        |utility reads
-        |.Ar file
-        |operands.
-        |.Bl -tag -width x
-        |.It Fl b
-        |Number the lines.
-        |.It Fl e
-        |Display a dollar sign.
-        |.El
-        |.Pp
-        |See
-        |.Xr less 1 ,
-        |then exit.
-        |.Bd -literal
-        |x = 1
-        |.Ed
-        |.Dl make install
-        |""".stripMargin
-    assert(MdocExtract.toMarkdown(mdoc) ==
+    assert(MdocExtract.toMarkdown(mdocDoc) ==
       "# CAT(1)\n\n## NAME\n\n**cat** — concatenate files\n\n## DESCRIPTION\n\n" +
         "The **cat** utility reads *file* operands.\n\n" +
         "- **-b** Number the lines.\n- **-e** Display a dollar sign.\n\n" +
@@ -147,45 +64,7 @@ class TextMarkupSpec extends AnyFunSuite {
   }
 
   test("pod: heads, inline codes, E escapes, verbatim, lists, cut") {
-    val pod =
-      """=pod
-        |
-        |=head1 Tool 5
-        |
-        |Runs B<fast> with I<style> and C<cmd --x>.
-        |See L<perldoc|http://p.example> or L<http://q.example>;
-        |compare 1 E<lt> 2.
-        |
-        |    $ tool --run
-        |    ok
-        |
-        |=over 4
-        |
-        |=item *
-        |
-        |First choice continues here.
-        |
-        |=item *
-        |
-        |Second choice.
-        |
-        |=back
-        |
-        |=head2 Options
-        |
-        |=over 4
-        |
-        |=item B<-v>
-        |
-        |Verbose output.
-        |
-        |=back
-        |
-        |=cut
-        |
-        |ignored text after cut
-        |""".stripMargin
-    assert(PodExtract.toMarkdown(pod) ==
+    assert(PodExtract.toMarkdown(podDoc) ==
       "# Tool 5\n\n" +
         "Runs **fast** with *style* and `cmd --x`. " +
         "See [perldoc](http://p.example) or [http://q.example](http://q.example); " +
@@ -242,6 +121,44 @@ class TextMarkupSpec extends AnyFunSuite {
       "# H\n\nReal para.")
   }
 
+  test("pod: a block inside a list item goes after the items before it") {
+    assert(PodExtract.toMarkdown("=over\n\n=item *\n\nA\n\n    code\n\n=back") ==
+      "- A\n\n```\n    code\n```")
+    assert(PodExtract.toMarkdown("=over\n\n=item *\n\nA\n\n=head1 H\n\nB") ==
+      "- A\n\n# H\n\nB")
+  }
+
+  test("mdoc: a block inside a list goes after the items before it; numbering goes on") {
+    assert(MdocExtract.toMarkdown(".Bl -bullet\n.It a\n.Bd -literal\nx\n.Ed\n.It b\n.El") ==
+      "- a\n\n```\nx\n```\n\n- b")
+    assert(MdocExtract.toMarkdown(".Bl -enum\n.It a\n.Sh S\n.It b\n.El") ==
+      "1. a\n\n## S\n\n2. b")
+  }
+
+  test("mdoc: .It outside any .Bl joins the running paragraph") {
+    assert(MdocExtract.toMarkdown(".Dt X 1\n.It a\ntext") == "# X(1)\n\na text")
+  }
+
+  test("pod: numbering restarts at each =over, as mdoc's .Bl does") {
+    val nested = Seq("=over", "=item 1.", "A", "=over", "=item 1.", "B", "=back",
+      "=over", "=item 1.", "C", "=back", "=back").mkString("\n\n")
+    assert(PodExtract.toMarkdown(nested) == "1. A\n  1. B\n  1. C")
+    assert(MdocExtract.toMarkdown(".Bl -enum\n.It A\n.Bl -enum\n.It B\n.El\n" +
+      ".Bl -enum\n.It C\n.El\n.El") == "1. A\n  1. B\n  1. C")
+  }
+
+  test("typst and dokuwiki: a shallower item ends the deeper lists") {
+    assert(TypstExtract.toMarkdown("+ a\n  + b\n- c\n  + d") == "1. a\n  1. b\n- c\n  1. d")
+    assert(DokuwikiExtract.toMarkdown("  - a\n    - b\n  * c\n    - d") ==
+      "1. a\n  1. b\n- c\n  1. d")
+  }
+
+  test("paragraphs keep no edge whitespace; an empty line adds nothing to an item") {
+    assert(DokuwikiExtract.toMarkdown("\\\\\nA") == "A")
+    assert(MdocExtract.toMarkdown(".Dt X 1\n.Ar\ntext") == "# X(1)\n\ntext")
+    assert(PodExtract.toMarkdown("=over\n\n=item *\n\nZ<>\nB\n\n=back") == "- B")
+  }
+
   test("empty inputs throw; real ingestion routes by explicit MIME") {
     intercept[IllegalArgumentException](TypstExtract.toMarkdown(""))
     intercept[IllegalArgumentException](TroffExtract.toMarkdown(".\\\" only\n"))
@@ -263,4 +180,129 @@ class TextMarkupSpec extends AnyFunSuite {
       assert(out.spans.map(_.text) == expect, mime)
     }
   }
+}
+
+object TextMarkupSpec {
+  val typstDoc =
+    """= Doc 3
+      |== Part 1
+      |Some *very* important _words_ here,
+      |continuing on a second line.
+      |
+      |#image("plot.png")
+      |
+      |- alpha
+      |- beta
+      |  + one
+      |  + two
+      |+ top numbered
+      |
+      |```scala
+      |val x = 1
+      |```
+      |See #link("http://e.x")[the docs] now.
+      |""".stripMargin
+  val manDoc =
+    """.\" comment line
+      |.TH GREP 1 "2024" "GNU"
+      |.SH NAME
+      |grep \- print lines
+      |.SH "DESCRIPTION TEXT"
+      |.PP
+      |Searches with \fBbold\fR and \fIitalic\fP forms.
+      |.TP
+      |.B \-v
+      |Invert the match.
+      |.BR grep (1),
+      |more text.
+      |.nf
+      |literal code
+      |  kept
+      |.fi
+      |.SS Sub
+      |Done.
+      |""".stripMargin
+  val dokuDoc =
+    """====== Wiki 4 ======
+      |===== Section =====
+      |Some //italic// and **bold** with ''mono'' text.
+      |Link [[http://a|site A]] and bare [[http://b]].
+      |{{ image.png?200 |caption}}
+      |
+      |  * one
+      |  * two
+      |    - first
+      |    - second
+      |
+      |<code python>
+      |print(1)
+      |</code>
+      |""".stripMargin
+  val mdocDoc =
+    """.\" comment
+      |.Dd January 1, 2024
+      |.Dt CAT 1
+      |.Os
+      |.Sh NAME
+      |.Nm cat
+      |.Nd concatenate files
+      |.Sh DESCRIPTION
+      |The
+      |.Nm
+      |utility reads
+      |.Ar file
+      |operands.
+      |.Bl -tag -width x
+      |.It Fl b
+      |Number the lines.
+      |.It Fl e
+      |Display a dollar sign.
+      |.El
+      |.Pp
+      |See
+      |.Xr less 1 ,
+      |then exit.
+      |.Bd -literal
+      |x = 1
+      |.Ed
+      |.Dl make install
+      |""".stripMargin
+  val podDoc =
+    """=pod
+      |
+      |=head1 Tool 5
+      |
+      |Runs B<fast> with I<style> and C<cmd --x>.
+      |See L<perldoc|http://p.example> or L<http://q.example>;
+      |compare 1 E<lt> 2.
+      |
+      |    $ tool --run
+      |    ok
+      |
+      |=over 4
+      |
+      |=item *
+      |
+      |First choice continues here.
+      |
+      |=item *
+      |
+      |Second choice.
+      |
+      |=back
+      |
+      |=head2 Options
+      |
+      |=over 4
+      |
+      |=item B<-v>
+      |
+      |Verbose output.
+      |
+      |=back
+      |
+      |=cut
+      |
+      |ignored text after cut
+      |""".stripMargin
 }
