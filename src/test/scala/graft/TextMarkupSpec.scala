@@ -159,6 +159,19 @@ class TextMarkupSpec extends AnyFunSuite {
     assert(PodExtract.toMarkdown("=over\n\n=item *\n\nZ<>\nB\n\n=back") == "- B")
   }
 
+  test("pinned: typst, dokuwiki, pod, troff and mdoc output") {
+    // recorded on the five per-format block loops, before the shared block
+    // builder; never edit to pass
+    val pinned = Map(
+      "dokuwiki" -> "5280f0c6f348e102",
+      "mdoc" -> "15e56dbd8d06f985",
+      "pod" -> "71689c489e472b67",
+      "troff" -> "8e6b4d2d8e668d96",
+      "typst" -> "d4f352273d465552")
+    val got = pinned.keys.map(k => k -> XmlMarkupSpec.digest(pinnedCorpus(k).map(render(k, _)))).toMap
+    assert(got == pinned, got.toSeq.sorted.map { case (k, v) => s"\"$k\" -> \"$v\"" }.mkString(",\n"))
+  }
+
   test("empty inputs throw; real ingestion routes by explicit MIME") {
     intercept[IllegalArgumentException](TypstExtract.toMarkdown(""))
     intercept[IllegalArgumentException](TroffExtract.toMarkdown(".\\\" only\n"))
@@ -305,4 +318,203 @@ object TextMarkupSpec {
       |
       |ignored text after cut
       |""".stripMargin
+
+  /** The short inputs of this spec's other tests, per kind. */
+  val shortInputs: Map[String, Seq[String]] = Map(
+    "typst" -> Seq("run foo_bar_baz now and 2*3*4 stays", """see #link("http://e.x/a_b_c")[t] ok""",
+      "real *bold* and _emph_ here", "```\n````x\n```", "", "= T6\nBody.", "+ a\n  + b\n- c\n  + d"),
+    "dokuwiki" -> Seq("<code>\n```\ninner\n```\n</code>", "see http://a//b then http://c//d",
+      "a //real// span and [[http://x//y|L]]", "\n\n", "====== W ======\nBody.",
+      "  - a\n    - b\n  * c\n    - d", "\\\\\nA"),
+    "pod" -> Seq("=head1 H\n\n    ```\n    x\n", "=head1 H\n\nIE<60>worksE<62> fine.",
+      "=head1 H\n\n=for html\n<div>raw</div>\n\nReal para.", "=cut\nhidden\n", "=head1 P\n\nBody.",
+      "=over\n\n=item *\n\nA\n\n    code\n\n=back", "=over\n\n=item *\n\nA\n\n=head1 H\n\nB",
+      Seq("=over", "=item 1.", "A", "=over", "=item 1.", "B", "=back",
+        "=over", "=item 1.", "C", "=back", "=back").mkString("\n\n"),
+      "=over\n\n=item *\n\nZ<>\nB\n\n=back"),
+    "troff" -> Seq(".SH\nSEE ALSO\nBody.\n.nf\nraw", ".nf\n```\nx\n.fi", ".TP\n.SH OPTIONS\nPlain paragraph.",
+      ".SH\n.B LOUD\nBody.", ".\\\" only\n", ".TH M 1\nBody."),
+    "mdoc" -> Seq(".Dt X 1\n.Bd -literal\n```\n.Ed", ".Dd x\n.Os\n", ".Dt D 1\nBody.",
+      ".Bl -bullet\n.It a\n.Bd -literal\nx\n.Ed\n.It b\n.El", ".Bl -enum\n.It a\n.Sh S\n.It b\n.El",
+      ".Dt X 1\n.It a\ntext", ".Bl -enum\n.It A\n.Bl -enum\n.It B\n.El\n.Bl -enum\n.It C\n.El\n.El",
+      ".Dt X 1\n.Ar\ntext"))
+
+  /** The `SparkEntry` oracle templates of the line kinds (`q_typst`,
+    * `q_dokuwiki`, `q_pod`, and both arms of `q_man`) as functions of the doc id.
+    */
+  val Templates: Map[String, Long => String] = Map(
+    "typst" -> (id =>
+      s"""= Doc ${id % 5}
+         |== Part ${(id * 2) % 7}
+         |Some *very* important _words_ ${(id + 1) % 4} here.
+         |
+         |#image("plot-${id % 3}.png")
+         |
+         |- alpha ${id % 6}
+         |- beta
+         |
+         |```scala
+         |val x = ${id % 9}
+         |```
+         |See #link("http://e.x")[docs ${id % 2}] now.
+         |""".stripMargin),
+    "troff" -> (id =>
+      s""".TH TOOL${id % 4} 1
+         |.SH NAME
+         |tool${id % 4} \\- does thing ${(id * 3) % 7}
+         |.SH DESCRIPTION
+         |Runs with \\fBbold ${id % 5}\\fR form.
+         |.TP
+         |.B \\-x
+         |Option ${(id + 2) % 6}.
+         |.nf
+         |code ${id % 3}
+         |.fi
+         |""".stripMargin),
+    "mdoc" -> (id =>
+      s""".Dd January 1, 2024
+         |.Dt TOOL${id % 4} 1
+         |.Os
+         |.Sh NAME
+         |.Nm tool${id % 4}
+         |.Nd does thing ${(id * 3) % 7}
+         |.Sh DESCRIPTION
+         |Runs with
+         |.Ar file
+         |operands ${id % 5}.
+         |.Dl make ${id % 3}
+         |""".stripMargin),
+    "dokuwiki" -> (id =>
+      s"""====== Wiki ${id % 5} ======
+         |===== Part ${(id * 2) % 7} =====
+         |Some //italic ${id % 4}// and **bold** with ''mono ${id % 6}'' text.
+         |Link [[http://a|site ${id % 3}]] here.
+         |
+         |{{ img-${id % 2}.png?200 |cap}}
+         |
+         |  * one ${(id + 3) % 8}
+         |  * two
+         |
+         |<code python>
+         |print(${id % 9})
+         |</code>
+         |""".stripMargin),
+    "pod" -> (id =>
+      s"""=pod
+         |
+         |=head1 Tool ${id % 5}
+         |
+         |Runs B<fast ${id % 4}> with C<cmd --${id % 7}>.
+         |Compare 1 E<lt> ${(id + 2) % 9}.
+         |
+         |    $$ tool --run ${id % 3}
+         |
+         |=over 4
+         |
+         |=item *
+         |
+         |First choice ${(id * 2) % 11}.
+         |
+         |=item *
+         |
+         |Second choice.
+         |
+         |=back
+         |
+         |=head2 Options ${id % 6}
+         |
+         |=cut
+         |
+         |ignored after cut
+         |""".stripMargin))
+
+  /** Each kind's line starters (every construct its grammar opens a line
+    * with), the list-building ones among them, and the words its lines carry.
+    */
+  final case class Grammar(starters: IndexedSeq[String], lists: IndexedSeq[String], words: IndexedSeq[String])
+
+  private val CommonWords = IndexedSeq("a", "Word", "x y", "é", "*", "_", "`", "```", "[", "](", "#",
+    "- ", "1.", "\t", "", "\\", "<", ">", "|", "//", "http://u/a_b", "  ")
+
+  val Grammars: Map[String, Grammar] = Map(
+    "typst" -> Grammar(IndexedSeq("= ", "== ", "======= ", "=", "- ", "-", "+ ", "+", "```", "```scala",
+      "#image(\"f.png\")", "#image(\"g.png\", width: 50%)", "#link(\"http://e\")[t]", "*b*", "_e_", ""),
+      IndexedSeq("- ", "+ ", "  - ", "  + ", "    + ", "\t+ "),
+      IndexedSeq("*bold*", "_emph_", "#link(\"u\")[t]", "#image(\"i.png\")", "2*3*4", "snake_case")),
+    "dokuwiki" -> Grammar(IndexedSeq("====== ", "===== ", "== ", "=", "  * ", "  - ", "    * ", "    - ",
+      "* ", "<code>", "<code python>", "</code>", "{{img.png}}", "{{ i.png?200 |c}}", "\\\\", "[[", ""),
+      IndexedSeq("  * ", "  - ", "    * ", "    - ", "      - "),
+      IndexedSeq("======", "==", "//i//", "**b**", "''m''", "[[http://a|t]]", "[[http://b]]",
+        "{{x.png}}", "\\\\ ", "\\\\", "}}", "]]")),
+    "pod" -> Grammar(IndexedSeq("=head1 ", "=head2 ", "=head3 ", "=head4 ", "=over", "=over 4", "=item *",
+      "=item 1.", "=item 2", "=item ", "=back", "=begin html", "=begin", "=end html", "=for html", "=cut",
+      "=pod", "=encoding utf8", "=unknown", " ", "\t", "    ", ""),
+      IndexedSeq("=over", "=item *", "=item 1.", "=item 2", "=back", ""),
+      IndexedSeq("B<b>", "I<i>", "C<c --x>", "F<f>", "S<s>", "X<x>", "Z<>", "L<t|http://u>", "L<http://v>",
+        "E<lt>", "E<gt>", "E<verbar>", "E<sol>", "E<60>", "E<124>", "B<I<n>>", "*", "1.")),
+    "troff" -> Grammar(IndexedSeq(".TH ", ".SH", ".SH ", ".SS", ".SS ", ".PP", ".LP", ".P", ".br", ".sp",
+      ".TP", ".IP", ".IP ", ".B ", ".B", ".I ", ".BR ", ".RB ", ".IR ", ".RI ", ".nf", ".fi", ".\\\" ",
+      "'\\\" ", "'br", ".XX ", "\\&.", ""),
+      IndexedSeq(".TP", ".IP ", ".B ", ""),
+      IndexedSeq("\\fB", "\\fI", "\\fR", "\\fP", "\\f1", "\\-", "\\&", "\\e", "\\\\", "\\ ", "\"q r\"",
+        "\"", "GREP", "1")),
+    "mdoc" -> Grammar(IndexedSeq(".Dd ", ".Dt ", ".Os", ".Sh ", ".Ss ", ".Pp", ".Lp", ".Nd ", ".Bl -bullet",
+      ".Bl -enum", ".Bl -tag -width x", ".It ", ".It", ".El", ".Bd -literal", ".Ed", ".Dl ", ".D1 ", ".Fl ",
+      ".Ar ", ".Em ", ".Pa ", ".Va ", ".Cm ", ".Ic ", ".Sy ", ".Li ", ".Dv ", ".Er ", ".Ev ", ".Xr ", ".Nm ",
+      ".Nm", ".No ", ".\\\" ", ".Xx ", "."),
+      IndexedSeq(".Bl -bullet", ".Bl -enum", ".It ", ".It", ".El", ""),
+      IndexedSeq("Fl", "Ar", "Nm", "Xr", "No", "Em", "Sy", "Li", "\"\"", "\"q r\"", ",", ".", ")", "cat",
+        "1", "-enum")))
+
+  /** Seeded line soups over one kind's grammar: each line a starter (a
+    * list starter one time in three) at a random indent with up to three
+    * words, or a blank line; `\n` or CRLF line ends.
+    */
+  def soups(g: Grammar, seed: Long, n: Int): Seq[String] = {
+    val rnd = new scala.util.Random(seed)
+    def pick[A](xs: IndexedSeq[A]): A = xs(rnd.nextInt(xs.length))
+    val words = g.words ++ CommonWords
+    Seq.fill(n) {
+      val sb = new StringBuilder
+      for (_ <- 0 to rnd.nextInt(20)) {
+        if (rnd.nextInt(6) > 0) {
+          rnd.nextInt(6) match {
+            case 0 => sb ++= " " * (1 + rnd.nextInt(6))
+            case 1 => sb ++= "\t"
+            case _ => ()
+          }
+          sb ++= pick(if (rnd.nextInt(3) == 0) g.lists else g.starters)
+          for (k <- 0 until rnd.nextInt(4)) sb ++= (if (k == 0 && rnd.nextBoolean()) "" else " ") ++= pick(words)
+        }
+        sb ++= (if (rnd.nextInt(4) == 0) "\r\n" else "\n")
+      }
+      sb.toString
+    }
+  }
+
+  /** `n` soups, each cut at a random point. */
+  def truncations(g: Grammar, seed: Long, n: Int): Seq[String] = {
+    val rnd = new scala.util.Random(seed)
+    soups(g, seed, n).map(s => s.substring(0, rnd.nextInt(s.length + 1)))
+  }
+
+  val Convert: Map[String, String => String] = Map(
+    "typst" -> TypstExtract.toMarkdown, "dokuwiki" -> DokuwikiExtract.toMarkdown,
+    "pod" -> PodExtract.toMarkdown, "troff" -> TroffExtract.toMarkdown, "mdoc" -> MdocExtract.toMarkdown)
+
+  /** One kind's output for one input: the markdown, or the failure as a row reads it. */
+  def render(kind: String, src: String): String =
+    try Convert(kind)(src) catch { case e: Exception => graft.extract.Formats.describe(e) }
+
+  private val mainDocs = Map("typst" -> typstDoc, "dokuwiki" -> dokuDoc, "pod" -> podDoc,
+    "troff" -> manDoc, "mdoc" -> mdocDoc)
+
+  /** The pinned corpus per kind: the oracle template for ids 0–199, the
+    * spec inputs, 2,000 soups and 500 truncations.
+    */
+  def pinnedCorpus(kind: String): Seq[String] = {
+    val seed = kind.hashCode.toLong
+    (0L until 200L).map(Templates(kind)) ++ (mainDocs(kind) +: shortInputs(kind)) ++
+      soups(Grammars(kind), seed, 2000) ++ truncations(Grammars(kind), seed + 1, 500)
+  }
 }
