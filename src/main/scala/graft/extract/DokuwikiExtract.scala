@@ -1,7 +1,5 @@
 package graft.extract
 
-import scala.collection.mutable.ArrayBuffer
-
 /** DokuWiki markup → markdown.
   *
   * In the reference's supported surface: `text/x-dokuwiki` sits in its
@@ -11,7 +9,8 @@ import scala.collection.mutable.ArrayBuffer
   *
   *   - `====== H ======` headings: six `=` is h1 down to two `=` is h5
   *   - lists: two spaces of indent per level, then `* ` (bullet) or
-  *     `- ` (ordered, renumbered 1..n per depth); one block per list
+  *     `- ` (ordered, 1..n per list; a shallower item ends the deeper
+  *     lists); one block per list
   *   - `<code lang>` … `</code>` → fenced code block
   *   - inline: `**bold**` stays, `//italic//` → `*italic*`,
   *     `''mono''` → backticks, `[[url|text]]` → `[text](url)`,
@@ -20,7 +19,7 @@ import scala.collection.mutable.ArrayBuffer
   *     line break joins with a space
   *   - blank-line separated paragraphs
   *
-  * A document rendering no block throws (failure row).
+  * Blocks, lists and the no-content failure row come from [[MdShared.Blocks]].
   */
 object DokuwikiExtract {
 
@@ -39,22 +38,7 @@ object DokuwikiExtract {
   private val Media = """\{\{\s*([^}|?]+?)(?:\?[^}|]*)?\s*(?:\|[^}]*)?\}\}""".r
 
   def toMarkdown(src: String): String = {
-    val blocks = ArrayBuffer.empty[String]
-    val para = ArrayBuffer.empty[String]
-    val listLines = ArrayBuffer.empty[String]
-    var counters = Map.empty[Int, Int]
-    var fence: ArrayBuffer[String] = null
-    var fenceLang = ""
-
-    def flushPara(): Unit = if (para.nonEmpty) {
-      blocks += para.mkString(" ").trim
-      para.clear()
-    }
-    def flushList(): Unit = if (listLines.nonEmpty) {
-      blocks += listLines.mkString("\n")
-      listLines.clear()
-      counters = Map.empty
-    }
+    val out = new MdShared.Blocks
     def q(s: String): String = java.util.regex.Matcher.quoteReplacement(s)
     def inline(s: String): String = {
       var t = s.replace("\\\\ ", " ").replaceAll("""\\\\$""", "")
@@ -72,44 +56,20 @@ object DokuwikiExtract {
 
     for (raw <- src.split("\n", -1)) {
       val line = raw.stripSuffix("\r")
-      if (fence != null) {
-        if (line.trim == "</code>") {
-          blocks += MdShared.fence(fence.mkString("\n"), fenceLang)
-          fence = null
-        } else fence += line
+      if (out.inFence) {
+        if (line.trim == "</code>") out.closeFence() else out.fenceLine(line)
       } else line match {
-        case CodeOpen(lang) =>
-          flushPara(); flushList()
-          fenceLang = Option(lang).getOrElse("")
-          fence = ArrayBuffer.empty[String]
-        case Heading(eqs, text) =>
-          flushPara(); flushList()
-          val level = math.min(7 - eqs.length, 6) // ====== → 1, == → 5
-          blocks += ("#" * level) + " " + inline(text)
-        case ListItem(indent, kind, text) =>
-          flushPara()
-          val depth = indent.length / 2 - 1
-          if (depth >= Bin.MaxNesting)
-            throw new IllegalStateException(s"lists nested deeper than ${Bin.MaxNesting}")
-          // a new item at this depth ends any deeper list
-          counters = counters.filter(_._1 <= depth)
-          val head = if (kind == "*") "- " else {
-            val n = counters.getOrElse(depth, 0) + 1
-            counters = counters.updated(depth, n)
-            s"$n. "
+        case ListItem(indent, kind, text) => out.itemAt(indent.length / 2 - 1, kind == "-", inline(text))
+        case _ =>
+          out.endList() // any other line ends the list
+          line match {
+            case CodeOpen(lang) => out.openFence(Option(lang).getOrElse(""))
+            case Heading(eqs, text) => out.heading(7 - eqs.length, inline(text)) // ====== → 1, == → 5
+            case l if l.trim.isEmpty => out.flushPara()
+            case l => out.para(inline(l))
           }
-          listLines += ("  " * depth) + head + inline(text)
-        case l if l.trim.isEmpty =>
-          flushPara(); flushList()
-        case l =>
-          flushList()
-          para += inline(l)
       }
     }
-    if (fence != null)
-      blocks += MdShared.fence(fence.mkString("\n"), fenceLang)
-    flushPara(); flushList()
-    if (blocks.isEmpty) throw new IllegalArgumentException("dokuwiki: no content")
-    blocks.mkString("\n\n")
+    out.finish("dokuwiki")
   }
 }

@@ -25,6 +25,7 @@ object EndnoteExtract {
     // the current record's non-empty fields, by element name ("kind" from ref-type)
     val fields = scala.collection.mutable.Map.empty[String, String].withDefaultValue("")
     val authors = ArrayBuffer.empty[String]
+    val records = ArrayBuffer.empty[String]
     def inRecord = path.contains("record")
 
     // <style> runs wrap every field's text in the EndNote export schema —
@@ -52,16 +53,16 @@ object EndnoteExtract {
         case _ => ()
       }
       if (name == "record")
-        blocks += BibtexExtract.render(
-          fields.getOrElse("kind", "entry"), fields.getOrElse("rec-number", s"ref-${blocks.size + 1}"),
+        records += BibtexExtract.render(
+          fields.getOrElse("kind", "entry"), fields.getOrElse("rec-number", s"ref-${records.size + 1}"),
           Map("author" -> authors.mkString(", "), "year" -> fields("year"), "title" -> fields("title"),
             "journal" -> fields.getOrElse("full-title", fields("secondary-title"))))
       if (name != "style") inline.clear()
     }
 
     override def finish(): String = {
-      if (blocks.isEmpty) throw new IllegalArgumentException("endnote: no records")
-      blocks.mkString("\n")
+      if (records.isEmpty) throw new IllegalArgumentException("endnote: no records")
+      records.mkString("\n")
     }
   }.run(src)
 }

@@ -47,10 +47,10 @@ object Fb2Extract {
       case "book-title" => heading(1, t)
       case "subtitle" => heading(sectionDepth + 2, t)
       case "v" => verseLines += t
-      case "text-author" => blocks += s"— $t"
+      case "text-author" => out.block(s"— $t")
       case _ if inTitle => titleParts += t
-      case _ if inCite => blocks += s"> $t"
-      case _ => blocks += t
+      case _ if inCite => out.block(s"> $t")
+      case _ => out.block(t)
     }
 
     override def start(name: String): Unit = name match {
@@ -72,7 +72,7 @@ object Fb2Extract {
         heading(sectionDepth + 1, titleParts.mkString(" "))
       case "stanza" =>
         if (verseLines.nonEmpty) {
-          blocks += verseLines.mkString("\n")
+          out.block(verseLines.mkString("\n"))
           verseLines.clear()
         }
       case "cite" => inCite = false

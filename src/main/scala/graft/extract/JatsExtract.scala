@@ -40,7 +40,7 @@ object JatsExtract {
     override def start(name: String): Unit = name match {
       case "sec" => secDepth += 1
       case "abstract" =>
-        if (!abstractEmitted) { emit("## Abstract"); abstractEmitted = true }
+        if (!abstractEmitted) { out.block("## Abstract"); abstractEmitted = true }
       case "article-title" if path.contains("title-group") => inline.clear()
       case "title" if path.lastOption.contains("sec") => inline.clear()
       case _ => ()

@@ -5,7 +5,9 @@ import scala.collection.mutable.ArrayBuffer
 /** Markdown-rendering helpers shared across the extractor family (the
   * from-scratch pandoc-surface converters: the [[XmlMarkup]] walker behind
   * DocBook/FB2/JATS/OPML/EndNote and the line-oriented
-  * troff/mdoc/DokuWiki/POD/Typst/org/notebook readers, LaTeX and BibTeX).
+  * troff/mdoc/DokuWiki/POD/Typst/org/notebook readers, LaTeX and BibTeX),
+  * and [[MdShared.Blocks]], the block builder of the walker and the five
+  * line converters.
   */
 private[extract] object MdShared {
 
@@ -60,70 +62,121 @@ private[extract] object MdShared {
     out.toList
   }
 
-  /** Nested-list line builder of the [[XmlMarkup]] walker (DocBook and
-    * JATS lists): one frame per open list (-1 = bullet, >=0 = next ordinal),
-    * an item-started flag per open item, two spaces of indent per level,
-    * continuation paragraphs indented under their item.
+  /** One document's markdown, block by block in source order: the
+    * running paragraph, heading, image and code blocks, and nested lists.
+    * The line converters (Typst, DokuWiki, POD, troff, mdoc) and the
+    * [[XmlMarkup]] walker keep only their grammar and build here.
+    *
+    *   - Paragraph text joins with spaces and is trimmed; while an item
+    *     line is pending, text continues that line instead.
+    *   - Any other block first emits the paragraph and the pending item
+    *     lines; the open lists stay open and keep their numbering.
+    *   - One frame per open list holds its numbering; an item line is
+    *     indented two spaces per enclosing list. A list nested deeper than
+    *     [[Bin.MaxNesting]] fails the document: the indentation would
+    *     grow quadratically.
+    *   - A fence still open at the end renders.
     */
-  final class ListBuilder {
-    private var counters = List.empty[Int]
-    private var itemStarted = List.empty[Boolean]
+  final class Blocks {
+    private final class Frame(val ordered: Boolean) { var n = 0 }
+
+    private val blocks = ArrayBuffer.empty[String]
+    private val parts = ArrayBuffer.empty[String]
     private val lines = ArrayBuffer.empty[String]
+    private var frames = List.empty[Frame]
+    private var fenceLines: ArrayBuffer[String] = _
+    private var fenceLang = ""
 
-    def openList(ordered: Boolean): Unit = {
-      if (counters.length >= Bin.MaxNesting)
+    /** Paragraph text, or the continuation of the pending item line. */
+    def para(t: String): Unit =
+      if (lines.nonEmpty) lines(lines.length - 1) = lines.last.stripTrailing() + " " + t
+      else parts += t
+
+    /** End the paragraph; `close` is appended to its text (troff's open font). */
+    def flushPara(close: String = ""): Unit = if (parts.nonEmpty) {
+      val t = (parts.mkString(" ") + close).trim
+      parts.clear()
+      blocks += t
+    }
+
+    /** A finished block, after the paragraph and the pending item lines. */
+    def block(b: String): Unit = {
+      flushPara()
+      flushLines()
+      blocks += b
+    }
+
+    def heading(level: Int, t: String): Unit = block("#" * math.min(level, 6) + " " + t)
+    def image(ref: String): Unit = block(s"![$ref]($ref)")
+    def code(body: String, lang: String): Unit = block(fence(body, lang))
+
+    def openFence(lang: String): Unit = {
+      flushPara()
+      fenceLines = ArrayBuffer.empty[String]
+      fenceLang = lang
+    }
+    def inFence: Boolean = fenceLines != null
+    def fenceLine(l: String): Unit = fenceLines += l
+    def closeFence(): Unit = if (fenceLines != null) {
+      val body = fenceLines.mkString("\n")
+      fenceLines = null
+      code(body, fenceLang)
+    }
+
+    def openList(ordered: Boolean = false): Unit = {
+      if (frames.length >= Bin.MaxNesting)
         throw new IllegalStateException(s"lists nested deeper than ${Bin.MaxNesting}")
-      counters = (if (ordered) 0 else -1) :: counters
+      flushPara()
+      frames = new Frame(ordered) :: frames
     }
-    def openItem(): Unit = itemStarted = false :: itemStarted
-    def closeItem(): Unit = itemStarted = itemStarted.drop(1)
+    /** Close the innermost list; closing the outermost emits its lines. */
+    def closeList(): Unit = {
+      frames = frames.drop(1)
+      if (frames.isEmpty) flushLines()
+    }
+    /** Close every open list. */
+    def endList(): Unit = {
+      frames = Nil
+      flushLines()
+    }
+    def inList: Boolean = frames.nonEmpty
+    /** Was the innermost list opened as numbered? */
+    def ordered: Boolean = frames.head.ordered
 
-    /** Close the innermost list; when it was the outermost and lines were
-      * accumulated, return the finished block.
+    /** An item line in the innermost list, which opens if none is. */
+    def item(numbered: Boolean, t: String): Unit = {
+      flushPara()
+      if (frames.isEmpty) openList()
+      val marker = if (numbered) { frames.head.n += 1; s"${frames.head.n}. " } else "- "
+      lines += pad + marker + t
+    }
+    /** An item at list depth `depth` (0 = outermost), the lists derived from
+      * indentation: deeper lists close, missing ones open.
       */
-    def closeList(): Option[String] = {
-      counters = counters.drop(1)
-      if (counters.isEmpty) takeLines() else None
+    def itemAt(depth: Int, numbered: Boolean, t: String): Unit = {
+      frames = frames.drop(frames.length - depth - 1)
+      while (frames.length <= depth) openList()
+      item(numbered, t)
+    }
+    /** A further paragraph of the innermost item, indented under it. */
+    def indented(t: String): Unit =
+      if (lines.nonEmpty) lines += pad + "  " + t else block(t)
+
+    // an item line's indent: two spaces per list enclosing the innermost
+    private def pad: String = "  " * (frames.length - 1)
+
+    private def flushLines(): Unit = if (lines.nonEmpty) {
+      blocks += lines.mkString("\n")
+      lines.clear()
     }
 
-    /** The pending lines as a block, leaving every list open: a block
-      * emitted mid-list goes after the items before it.
-      */
-    def takeLines(): Option[String] =
-      if (lines.isEmpty) None
-      else {
-        val block = lines.mkString("\n")
-        lines.clear()
-        Some(block)
-      }
-
-    /** Append item text: first text of an open item renders its marker
-      * line; later text becomes a continuation line under the item.
-      */
-    def text(t: String): Unit = {
-      val depth = counters.length
-      itemStarted match {
-        case false :: rest =>
-          val marker = counters.head match {
-            case n if n >= 0 =>
-              counters = (n + 1) :: counters.tail
-              s"${n + 1}. "
-            case _ => "- "
-          }
-          lines += ("  " * (depth - 1)) + marker + t
-          itemStarted = true :: rest
-        case _ =>
-          lines += ("  " * depth) + t
-      }
+    /** The document: every pending block emitted, joined by blank lines. */
+    def finish(kind: String): String = {
+      closeFence()
+      flushPara()
+      flushLines()
+      if (blocks.isEmpty) throw new IllegalArgumentException(s"$kind: no content")
+      blocks.mkString("\n\n")
     }
-
-    /** Any list currently open? */
-    def inList: Boolean = counters.nonEmpty
-    /** Any item currently open (text should route into the list)? */
-    def inItem: Boolean = itemStarted.nonEmpty
-    /** Innermost item open but its marker line not yet emitted? */
-    def itemPending: Boolean = itemStarted.headOption.contains(false)
-    /** Would text continue a line of the pending block? */
-    def continues: Boolean = itemPending || lines.nonEmpty
   }
 }

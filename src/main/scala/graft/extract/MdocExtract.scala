@@ -26,7 +26,7 @@ import scala.collection.mutable.ArrayBuffer
   *     single-character punctuation args attach without a space
   *
   * Requests outside the subset are dropped (text lines still render).
-  * A document rendering no block throws (failure row).
+  * Blocks, lists and the no-content failure row come from [[MdShared.Blocks]].
   */
 object MdocExtract {
 
@@ -37,25 +37,9 @@ object MdocExtract {
     Star ++ BoldM ++ CodeM ++ Set("Fl", "Nm", "Xr", "No")
 
   def toMarkdown(src: String): String = {
-    val blocks = ArrayBuffer.empty[String]
-    val para = ArrayBuffer.empty[String]
-    val listLines = ArrayBuffer.empty[String]
-    var listKinds = List.empty[Int] // -1 bullet/tag, >=0 next enum index
-    var fence: ArrayBuffer[String] = null
+    val out = new MdShared.Blocks
     var docName = ""
 
-    def flushPara(): Unit = if (para.nonEmpty) {
-      blocks += para.mkString(" ").trim
-      para.clear()
-    }
-    // pending list lines go out before any other block, in source order
-    def flushList(): Unit = if (listLines.nonEmpty) {
-      blocks += listLines.mkString("\n")
-      listLines.clear()
-    }
-    def flushListIfDone(): Unit = if (listKinds.isEmpty) flushList()
-    // request-line tokenizer shared with man(7) — same quoting grammar
-    def split(rest: String): List[String] = MdShared.troffArgs(rest)
     // render a callable-macro token sequence into inline markdown
     def render(toks: List[String]): String = {
       val parts = ArrayBuffer.empty[String]
@@ -86,82 +70,39 @@ object MdocExtract {
         else acc + " " + p
       }
     }
-    def appendText(t: String): Unit =
-      if (listKinds.nonEmpty && listLines.nonEmpty)
-        listLines(listLines.length - 1) = listLines.last.stripTrailing() + " " + t
-      else para += t
-
     for (raw <- src.split("\n", -1)) {
       val line = raw.stripSuffix("\r")
-      if (fence != null) {
-        if (line == ".Ed") {
-          flushList()
-          blocks += MdShared.fence(fence.mkString("\n"), "")
-          fence = null
-        } else fence += line
+      if (out.inFence) {
+        if (line == ".Ed") out.closeFence() else out.fenceLine(line)
       } else if (line.startsWith(".\\\"")) {
         () // comment
       } else if (line.startsWith(".")) {
-        val toks = split(line.drop(1))
+        // request-line tokenizer shared with man(7) — same quoting grammar
+        val toks = MdShared.troffArgs(line.drop(1))
         (toks.headOption.getOrElse(""), toks.drop(1)) match {
           case ("Dd" | "Os", _) => ()
           case ("Dt", a) =>
-            flushPara()
-            if (a.nonEmpty) {
-              flushList()
-              blocks += "# " + a.head + a.lift(1).map(s => s"($s)").getOrElse("")
-            }
-          case ("Sh", a) =>
-            flushPara(); flushList()
-            blocks += "## " + render(a)
-          case ("Ss", a) =>
-            flushPara(); flushList()
-            blocks += "### " + render(a)
-          case ("Pp" | "Lp", _) => flushPara()
-          case ("Nd", a) => appendText("— " + render(a))
-          case ("Bl", a) =>
-            flushPara()
-            if (listKinds.length >= Bin.MaxNesting)
-              throw new IllegalStateException(s"lists nested deeper than ${Bin.MaxNesting}")
-            listKinds = (if (a.contains("-enum")) 0 else -1) :: listKinds
-          case ("It", a) =>
-            val depth = listKinds.length
-            // outside any .Bl the rendered arguments are running text
-            if (depth == 0) appendText(render(a))
-            else {
-              flushPara()
-              val marker = listKinds.head match {
-                case n if n >= 0 =>
-                  listKinds = (n + 1) :: listKinds.tail
-                  s"${n + 1}. "
-                case _ => "- "
-              }
-              listLines += ("  " * (depth - 1)) + marker + render(a)
-            }
-          case ("El", _) =>
-            listKinds = listKinds.drop(1)
-            flushListIfDone()
-          case ("Bd", _) =>
-            flushPara()
-            fence = ArrayBuffer.empty[String]
-          case ("Dl" | "D1", a) =>
-            flushPara(); flushList()
-            blocks += MdShared.fence(a.mkString(" "), "")
-          case (m, a) if AllMacros.contains(m) =>
-            appendText(render(m :: a))
+            out.flushPara()
+            if (a.nonEmpty) out.heading(1, a.head + a.lift(1).map(s => s"($s)").getOrElse(""))
+          case ("Sh", a) => out.heading(2, render(a))
+          case ("Ss", a) => out.heading(3, render(a))
+          case ("Pp" | "Lp", _) => out.flushPara()
+          case ("Nd", a) => out.para("— " + render(a))
+          case ("Bl", a) => out.openList(ordered = a.contains("-enum"))
+          // outside any .Bl the rendered arguments are running text
+          case ("It", a) => if (out.inList) out.item(out.ordered, render(a)) else out.para(render(a))
+          case ("El", _) => out.closeList()
+          case ("Bd", _) => out.openFence("")
+          case ("Dl" | "D1", a) => out.code(a.mkString(" "), "")
+          case (m, a) if AllMacros.contains(m) => out.para(render(m :: a))
           case _ => () // outside the subset
         }
       } else if (line.trim.isEmpty) {
-        flushPara()
+        out.flushPara()
       } else {
-        appendText(line.trim)
+        out.para(line.trim)
       }
     }
-    flushPara()
-    // an unclosed .Bl still renders its items
-    flushList()
-    if (fence != null) blocks += MdShared.fence(fence.mkString("\n"), "")
-    if (blocks.isEmpty) throw new IllegalArgumentException("mdoc: no content")
-    blocks.mkString("\n\n")
+    out.finish("mdoc")
   }
 }

@@ -51,7 +51,7 @@ object OpmlExtract {
     }
 
     override def finish(): String = {
-      if (lines.nonEmpty) blocks += lines.mkString("\n")
+      if (lines.nonEmpty) out.block(lines.mkString("\n"))
       super.finish()
     }
   }.run(src)

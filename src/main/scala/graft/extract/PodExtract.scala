@@ -1,7 +1,5 @@
 package graft.extract
 
-import scala.collection.mutable.ArrayBuffer
-
 /** Perl POD (Plain Old Documentation) → markdown.
   *
   * In the reference's supported surface: `text/x-pod` sits in its
@@ -26,7 +24,7 @@ import scala.collection.mutable.ArrayBuffer
   *     `L<url>` → `[url](url)`, `E<lt>/E<gt>/E<verbar>/E<sol>` and
   *     decimal `E<n>` escapes resolve after all codes
   *
-  * A document rendering no block throws (failure row).
+  * Blocks, lists and the no-content failure row come from [[MdShared.Blocks]].
   */
 object PodExtract {
 
@@ -35,34 +33,10 @@ object PodExtract {
   private val Code = """([BICFSLEXZ])<([^<>]*)>""".r
 
   def toMarkdown(src: String): String = {
-    val blocks = ArrayBuffer.empty[String]
-    val para = ArrayBuffer.empty[String]
-    val listLines = ArrayBuffer.empty[String]
-    var frames = List.empty[Int] // one numbering counter per open =over
-    val verbatim = ArrayBuffer.empty[String]
+    val out = new MdShared.Blocks
     var cut = false // after =cut, outside a begin/end region
     var beginFmt = "" // inside =begin … =end
     var forSkip = false // inside a =for format-specific paragraph
-
-    def flushPara(): Unit = if (para.nonEmpty) {
-      blocks += para.mkString(" ").trim
-      para.clear()
-    }
-    // pending list lines go out before any other block, in source order
-    def flushList(): Unit = if (listLines.nonEmpty) {
-      blocks += listLines.mkString("\n")
-      listLines.clear()
-    }
-    def flushVerbatim(): Unit = if (verbatim.nonEmpty) {
-      flushList()
-      blocks += MdShared.fence(verbatim.mkString("\n"), "")
-      verbatim.clear()
-    }
-    def openList(): Unit = {
-      if (frames.length >= Bin.MaxNesting)
-        throw new IllegalStateException(s"lists nested deeper than ${Bin.MaxNesting}")
-      frames = 0 :: frames
-    }
 
     def inline(s: String): String = {
       var t = s
@@ -112,64 +86,49 @@ object PodExtract {
       val line = raw.stripSuffix("\r")
       line match {
         case Cmd(cmd, rest) =>
-          flushVerbatim()
+          out.closeFence() // a command ends a verbatim run
           forSkip = false // a command line starts a new paragraph
           cmd match {
-            case "begin" => flushPara(); beginFmt = rest.trim
+            case "begin" => out.flushPara(); beginFmt = rest.trim
             case "end" => beginFmt = ""
             case _ if beginFmt.nonEmpty => ()
-            case "cut" => flushPara(); cut = true
+            case "cut" => out.flushPara(); cut = true
             case "pod" => cut = false
-            case "encoding" => flushPara()
+            case "encoding" => out.flushPara()
             case "for" =>
               // the WHOLE =for paragraph (continuation lines up to the
               // next blank line) is format-specific and skips
-              flushPara(); forSkip = true
+              out.flushPara(); forSkip = true
             case "head1" | "head2" | "head3" | "head4" =>
               cut = false
-              flushPara(); flushList()
-              blocks += ("#" * (cmd.last - '0')) + " " + inline(rest.trim)
+              out.heading(cmd.last - '0', inline(rest.trim))
             case "over" =>
               cut = false
-              flushPara()
-              openList()
+              out.openList()
             case "back" =>
-              flushPara()
-              frames = frames.drop(1)
-              if (frames.isEmpty) flushList()
+              out.flushPara()
+              out.closeList()
             case "item" =>
               cut = false
-              flushPara()
-              if (frames.isEmpty) openList() // an =item outside =over opens its own list
               val body = rest.trim
-              val (marker, text) =
-                if (body == "*" || body.isEmpty) ("- ", "")
-                else if (body.matches("""\d+\.?""")) {
-                  frames = (frames.head + 1) :: frames.tail
-                  (s"${frames.head}. ", "")
-                } else ("- ", inline(body))
-              listLines += ("  " * (frames.length - 1)) + marker + text
+              val numbered = body.matches("""\d+\.?""")
+              // an =item outside =over opens its own list
+              out.item(numbered, if (numbered || body == "*") "" else inline(body))
             case _ => ()
           }
         case _ if beginFmt.nonEmpty || cut => ()
         case l if l.trim.isEmpty =>
           forSkip = false
-          flushPara(); flushVerbatim()
+          out.flushPara(); out.closeFence()
         case _ if forSkip => () // continuation of a =for paragraph
         case l if l.head == ' ' || l.head == '\t' =>
-          flushPara()
-          verbatim += l
+          if (!out.inFence) out.openFence("")
+          out.fenceLine(l)
         case l =>
-          flushVerbatim()
-          // text continues a pending item line, one source line at a time
-          val t = inline(l.trim)
-          if (listLines.nonEmpty)
-            listLines(listLines.length - 1) = listLines.last.stripTrailing() + " " + t
-          else para += t
+          out.closeFence()
+          out.para(inline(l.trim))
       }
     }
-    flushPara(); flushVerbatim(); flushList()
-    if (blocks.isEmpty) throw new IllegalArgumentException("pod: no content")
-    blocks.mkString("\n\n")
+    out.finish("pod")
   }
 }

@@ -1,7 +1,5 @@
 package graft.extract
 
-import scala.collection.mutable.ArrayBuffer
-
 /** troff/man markup → markdown.
   *
   * In the reference's supported surface: `text/troff` sits in its
@@ -23,29 +21,23 @@ import scala.collection.mutable.ArrayBuffer
   *     `\&` drops, `\e`/`\\` → backslash; `.\"` comments skip
   *
   * Requests outside the subset are dropped (their text lines still
-  * render). A document rendering no block throws (failure row).
+  * render). Blocks and the no-content failure row come from
+  * [[MdShared.Blocks]].
   */
 object TroffExtract {
 
   def toMarkdown(src: String): String = {
-    val blocks = ArrayBuffer.empty[String]
-    val para = ArrayBuffer.empty[String]
-    var fence: ArrayBuffer[String] = null
+    val out = new MdShared.Blocks
     var font = 'R' // current font from \f escapes, spans lines in a paragraph
     var nextLineHeading = 0 // 2 or 3 when .SH/.SS had no args
     var nextLineTag = false // after .TP
 
+    // every paragraph break closes the running font: out.flushPara(closeFont())
     def closeFont(): String = { val s = marker(font); font = 'R'; s }
     def marker(f: Char): String = f match {
       case 'B' => "**"
       case 'I' => "*"
       case _ => ""
-    }
-    def flushPara(): Unit = {
-      if (para.nonEmpty) {
-        blocks += (para.mkString(" ") + closeFont()).trim
-        para.clear()
-      } else font = 'R'
     }
     // \f escapes with a running font state; other common escapes inline
     def text(s: String): String = {
@@ -84,12 +76,12 @@ object TroffExtract {
     // request right after an argless .SH/.SS renders the heading (groff
     // takes the next input line either way)
     def emitInline(s: String): Unit = {
-      if (nextLineTag) { blocks += s; nextLineTag = false }
+      if (nextLineTag) { out.block(s); nextLineTag = false }
       else if (nextLineHeading > 0) {
-        flushPara()
-        blocks += ("#" * nextLineHeading) + " " + s
+        out.flushPara(closeFont())
+        out.heading(nextLineHeading, s)
         nextLineHeading = 0
-      } else para += s
+      } else out.para(s)
     }
     def alternate(a: Seq[String], first: String, second: String): String =
       a.zipWithIndex.map { case (w, i) =>
@@ -99,11 +91,9 @@ object TroffExtract {
 
     for (raw <- src.split("\n", -1)) {
       val line = raw.stripSuffix("\r")
-      if (fence != null) {
-        if (line == ".fi") {
-          blocks += MdShared.fence(fence.mkString("\n"), "")
-          fence = null
-        } else if (!line.startsWith(".\\\"")) fence += line
+      if (out.inFence) {
+        if (line == ".fi") out.closeFence()
+        else if (!line.startsWith(".\\\"")) out.fenceLine(line)
       } else if (line.startsWith(".\\\"") || line.startsWith("'\\\"")) {
         () // comment
       } else if (line.startsWith(".") || line.startsWith("'")) {
@@ -120,22 +110,21 @@ object TroffExtract {
         }
         req match {
           case "TH" =>
-            flushPara()
+            out.flushPara(closeFont())
             val a = args(rest)
-            if (a.nonEmpty)
-              blocks += "# " + a.head + a.lift(1).map(s => s"($s)").getOrElse("")
+            if (a.nonEmpty) out.heading(1, a.head + a.lift(1).map(s => s"($s)").getOrElse(""))
           case "SH" | "SS" =>
-            flushPara()
+            out.flushPara(closeFont())
             val level = if (req == "SH") 2 else 3
             val a = args(rest)
             if (a.isEmpty) nextLineHeading = level
-            else blocks += ("#" * level) + " " + text(a.mkString(" "))
-          case "PP" | "LP" | "P" | "br" | "sp" => flushPara()
-          case "TP" => flushPara(); nextLineTag = true
+            else out.heading(level, text(a.mkString(" ")))
+          case "PP" | "LP" | "P" | "br" | "sp" => out.flushPara(closeFont())
+          case "TP" => out.flushPara(closeFont()); nextLineTag = true
           case "IP" =>
-            flushPara()
+            out.flushPara(closeFont())
             val a = args(rest)
-            if (a.nonEmpty && a.head.nonEmpty) para += "- " + text(a.head)
+            if (a.nonEmpty && a.head.nonEmpty) out.para("- " + text(a.head))
           case "B" if rest.trim.nonEmpty => emitInline(s"**${text(rest.trim)}**")
           case "I" if rest.trim.nonEmpty => emitInline(s"*${text(rest.trim)}*")
           case "BR" => if (rest.trim.nonEmpty) emitInline(alternate(args(rest), "**", ""))
@@ -143,26 +132,24 @@ object TroffExtract {
           case "IR" => if (rest.trim.nonEmpty) emitInline(alternate(args(rest), "*", ""))
           case "RI" => if (rest.trim.nonEmpty) emitInline(alternate(args(rest), "", "*"))
           case "nf" =>
-            flushPara()
-            fence = ArrayBuffer.empty[String]
+            out.flushPara(closeFont())
+            out.openFence("")
           case _ => () // outside the subset
         }
       } else if (line.trim.isEmpty) {
-        flushPara()
+        out.flushPara(closeFont())
       } else if (nextLineHeading > 0) {
-        flushPara()
-        blocks += ("#" * nextLineHeading) + " " + text(line.trim)
+        out.flushPara(closeFont())
+        out.heading(nextLineHeading, text(line.trim))
         nextLineHeading = 0
       } else if (nextLineTag) {
-        blocks += s"**${(text(line.trim) + closeFont()).trim}**"
+        out.block(s"**${(text(line.trim) + closeFont()).trim}**")
         nextLineTag = false
       } else {
-        para += text(line.trim)
+        out.para(text(line.trim))
       }
     }
-    if (fence != null) blocks += MdShared.fence(fence.mkString("\n"), "")
-    flushPara()
-    if (blocks.isEmpty) throw new IllegalArgumentException("troff: no content")
-    blocks.mkString("\n\n")
+    out.flushPara(closeFont())
+    out.finish("troff")
   }
 }

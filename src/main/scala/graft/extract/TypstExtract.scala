@@ -1,7 +1,5 @@
 package graft.extract
 
-import scala.collection.mutable.ArrayBuffer
-
 /** Typst markup → markdown.
   *
   * In the reference's supported surface: `application/x-typst` sits in
@@ -12,7 +10,8 @@ import scala.collection.mutable.ArrayBuffer
   *   - `= H` / `== H` / … → `#`/`##`/… headings (depth = `=` count,
   *     capped at 6)
   *   - `- item` bullet and `+ item` numbered lists; two-space indent
-  *     nests; `+` items renumber 1..n per depth within one list block
+  *     nests; `+` items number 1..n per list, and a shallower item ends
+  *     the deeper lists
   *   - triple-backtick raw blocks pass through as fences (language tag
   *     kept); inline `` `raw` `` stays
   *   - inline: `*bold*` → `**bold**`, `_emph_` → `*emph*`,
@@ -21,8 +20,8 @@ import scala.collection.mutable.ArrayBuffer
   *   - blank-line separated paragraphs; single newlines inside a
   *     paragraph join with a space
   *
-  * Unknown `#function` calls pass through as text. A document rendering
-  * no block throws (failure row).
+  * Unknown `#function` calls pass through as text. Blocks, lists and the
+  * no-content failure row come from [[MdShared.Blocks]].
   */
 object TypstExtract {
 
@@ -39,22 +38,7 @@ object TypstExtract {
   private val Emph = """(?<![\w_])_(?=\S)((?:[^_\n]*?\S)?)_(?![\w_])""".r
 
   def toMarkdown(src: String): String = {
-    val blocks = ArrayBuffer.empty[String]
-    val para = ArrayBuffer.empty[String]
-    val listLines = ArrayBuffer.empty[String]
-    var counters = Map.empty[Int, Int] // numbered-list index per depth
-    var fence: ArrayBuffer[String] = null
-    var fenceLang = ""
-
-    def flushPara(): Unit = if (para.nonEmpty) {
-      blocks += para.mkString(" ")
-      para.clear()
-    }
-    def flushList(): Unit = if (listLines.nonEmpty) {
-      blocks += listLines.mkString("\n")
-      listLines.clear()
-      counters = Map.empty
-    }
+    val out = new MdShared.Blocks
     def inline(s: String): String = {
       val linked = LinkCall.replaceAllIn(s, m =>
         java.util.regex.Matcher.quoteReplacement(s"[${m.group(2)}](${m.group(1)})"))
@@ -66,50 +50,22 @@ object TypstExtract {
 
     for (raw <- src.split("\n", -1)) {
       val line = raw.stripSuffix("\r")
-      if (fence != null) {
-        if (line.trim == "```") {
-          blocks += MdShared.fence(fence.mkString("\n"), fenceLang)
-          fence = null
-        } else fence += line
-      } else if (line.startsWith("```")) {
-        flushPara(); flushList()
-        fenceLang = line.drop(3).trim
-        fence = ArrayBuffer.empty[String]
+      if (out.inFence) {
+        if (line.trim == "```") out.closeFence() else out.fenceLine(line)
       } else line match {
-        case Heading(eqs, text) =>
-          flushPara(); flushList()
-          blocks += ("#" * math.min(eqs.length, 6)) + " " + inline(text)
-        case ImageCall(ref) =>
-          flushPara(); flushList()
-          blocks += s"![$ref]($ref)"
-        case Bullet(indent, text) =>
-          flushPara()
-          val depth = indent.length / 2
-          if (depth >= Bin.MaxNesting)
-            throw new IllegalStateException(s"lists nested deeper than ${Bin.MaxNesting}")
-          // a new item at this depth ends any deeper list
-          counters = counters.filter(_._1 <= depth)
-          listLines += ("  " * depth) + "- " + inline(text)
-        case Numbered(indent, text) =>
-          flushPara()
-          val depth = indent.length / 2
-          if (depth >= Bin.MaxNesting)
-            throw new IllegalStateException(s"lists nested deeper than ${Bin.MaxNesting}")
-          val n = counters.getOrElse(depth, 0) + 1
-          // a new item at this depth restarts any deeper numbering
-          counters = counters.filter(_._1 <= depth).updated(depth, n)
-          listLines += ("  " * depth) + s"$n. " + inline(text)
-        case l if l.trim.isEmpty =>
-          flushPara(); flushList()
-        case l =>
-          flushList()
-          para += inline(l)
+        case Bullet(indent, text) => out.itemAt(indent.length / 2, numbered = false, inline(text))
+        case Numbered(indent, text) => out.itemAt(indent.length / 2, numbered = true, inline(text))
+        case _ =>
+          out.endList() // any other line ends the list
+          line match {
+            case l if l.startsWith("```") => out.openFence(l.drop(3).trim)
+            case Heading(eqs, text) => out.heading(eqs.length, inline(text))
+            case ImageCall(ref) => out.image(ref)
+            case l if l.trim.isEmpty => out.flushPara()
+            case l => out.para(inline(l))
+          }
       }
     }
-    if (fence != null) // unterminated raw block still renders
-      blocks += MdShared.fence(fence.mkString("\n"), fenceLang)
-    flushPara(); flushList()
-    if (blocks.isEmpty) throw new IllegalArgumentException("typst: no content")
-    blocks.mkString("\n\n")
+    out.finish("typst")
   }
 }

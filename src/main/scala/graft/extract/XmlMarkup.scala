@@ -5,8 +5,9 @@ import scala.collection.mutable.ArrayBuffer
 
 /** The one StAX walk behind the XML markup converters (DocBook, FB2, JATS,
   * OPML, EndNote): the reader loop, the ancestor `path`, the `inline` text
-  * buffer, one stack of closers for marks and links, verbatim fences, the
-  * nested-list builder and the `<kind>: no content` failure.
+  * buffer, one stack of closers for marks and links and verbatim text. Every
+  * block goes to `out`, the shared [[MdShared.Blocks]] builder, which keeps
+  * source order, builds the lists and throws the `<kind>: no content` failure.
   *
   * A converter's role table names the elements the walker renders; its
   * `start`/`end` hooks see every other element, with `path` holding the
@@ -17,9 +18,10 @@ import scala.collection.mutable.ArrayBuffer
   *   - `Mark(m)`: `m` around its text; `Link(attr)`: `[text](attr)`
   *   - `Verbatim(langAttr)`: all text inside as one fence, closed only by
   *     the element that opened it
-  *   - `ListOf(ordered)`/`Item`: nested lists ([[MdShared.ListBuilder]]);
-  *     text pending when a list opens is flushed as a paragraph first, and
-  *     an item outside any list renders its text as ordinary blocks
+  *   - `ListOf(ordered)`/`Item`: nested lists; an item's first text is its
+  *     marker line, later paragraphs indent under it; text pending when a
+  *     list opens is flushed as a paragraph first, and an item outside any
+  *     list renders its text as ordinary blocks
   *   - `Hidden`: its text is dropped
   *
   * Each instance serves one document (executor-thread safe under local[32]).
@@ -27,10 +29,11 @@ import scala.collection.mutable.ArrayBuffer
 private[extract] abstract class XmlMarkup(kind: String, roles: Map[String, XmlMarkup.Role] = Map.empty) {
   import XmlMarkup._
 
-  protected val blocks = ArrayBuffer.empty[String]
+  protected val out = new MdShared.Blocks
   protected val path = ArrayBuffer.empty[String]
   protected val inline = new StringBuilder
-  private val list = new MdShared.ListBuilder
+  // per open list item, innermost first: is its marker line written?
+  private var items = List.empty[Boolean]
   private var reader: XMLStreamReader = _
   // the closer of each open mark or link, with its element's depth
   private var closers = List.empty[(Int, String)]
@@ -43,19 +46,16 @@ private[extract] abstract class XmlMarkup(kind: String, roles: Map[String, XmlMa
   protected def end(name: String): Unit = ()
 
   /** The rendered document; an override may join other blocks. */
-  protected def finish(): String = {
-    if (blocks.isEmpty) throw new IllegalArgumentException(s"$kind: no content")
-    blocks.mkString("\n\n")
-  }
+  protected def finish(): String = out.finish(kind)
 
   /** Where element `name`'s non-empty text goes: the open list item, else a block. */
-  protected def paragraph(name: String, t: String): Unit =
-    if (list.inItem && list.continues) list.text(t) else emit(t)
+  protected def paragraph(name: String, t: String): Unit = if (items.nonEmpty) itemText(t) else out.block(t)
 
-  /** Add a block after any pending list lines, so blocks keep source order. */
-  protected def emit(block: String): Unit = {
-    list.takeLines().foreach(blocks += _)
-    blocks += block
+  private def itemText(t: String): Unit = items match {
+    case false :: rest =>
+      out.item(out.ordered, t)
+      items = true :: rest
+    case _ => out.indented(t)
   }
 
   /** Attribute of the element being opened, by local name ("" if absent). */
@@ -75,10 +75,10 @@ private[extract] abstract class XmlMarkup(kind: String, roles: Map[String, XmlMa
   }
 
   protected def heading(level: Int, t: String): Unit =
-    if (t.nonEmpty) emit(("#" * math.min(level, 6)) + " " + t)
+    if (t.nonEmpty) out.heading(level, t)
 
   protected def image(target: String): Unit =
-    if (target.nonEmpty) emit(s"![$target]($target)")
+    if (target.nonEmpty) out.image(target)
 
   private def flushParagraph(name: String): Unit = {
     val t = flush()
@@ -101,7 +101,7 @@ private[extract] abstract class XmlMarkup(kind: String, roles: Map[String, XmlMa
           path.remove(path.length - 1)
           if (verbatim == null) close(name)
           else if (path.length == verbatimDepth) {
-            emit(MdShared.fence(verbatim.toString.stripPrefix("\n").stripTrailing(), verbatimLang))
+            out.code(verbatim.toString.stripPrefix("\n").stripTrailing(), verbatimLang)
             verbatim = null
           }
         case _ => ()
@@ -121,10 +121,10 @@ private[extract] abstract class XmlMarkup(kind: String, roles: Map[String, XmlMa
       verbatimDepth = path.length
     case Some(ListOf(ordered)) =>
       flushParagraph(name)
-      list.openList(ordered(reader))
+      out.openList(ordered(reader))
     case Some(Item) =>
       inline.clear()
-      if (list.inList) list.openItem()
+      if (out.inList) items = false :: items
     case Some(Hidden) => hidden += 1
     case None => start(name)
   }
@@ -132,12 +132,12 @@ private[extract] abstract class XmlMarkup(kind: String, roles: Map[String, XmlMa
   private def close(name: String): Unit = {
     roles.get(name) match {
       case Some(Para) => flushParagraph(name)
-      case Some(ListOf(_)) => list.closeList().foreach(blocks += _)
-      case Some(Item) if list.inList =>
+      case Some(ListOf(_)) => out.closeList()
+      case Some(Item) if out.inList =>
         // a bare item with no paragraph still renders its text
         val t = flush()
-        if (t.nonEmpty && list.itemPending) list.text(t)
-        list.closeItem()
+        if (t.nonEmpty && items.headOption.contains(false)) itemText(t)
+        items = items.drop(1)
       case Some(Item) => flushParagraph(name)
       case Some(Hidden) => hidden -= 1
       case Some(_) => ()
