@@ -136,7 +136,12 @@ object Bench {
       }
     val pass1 = timeSuite()
     val pass2 = timeSuite()
-    val results = pass1.zip(pass2).map { case ((n, a), (_, b)) => n -> math.min(a, b) }
+    // q_ingest and q_stream_extract stage their fixture once (buildOnce), in
+    // pass 1: their keys time pass 1, staging and first-touch codegen included
+    val stagedInPass1 = Set("q_ingest", "q_stream_extract")
+    val results = pass1.zip(pass2).map { case ((n, a), (_, b)) =>
+      n -> (if (stagedInPass1(n)) a else math.min(a, b))
+    }
     spark.stop()
 
     // best docs/sec seen at `cpus` across ALL measurement sessions this run

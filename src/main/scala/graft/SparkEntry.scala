@@ -267,11 +267,8 @@ object SparkEntry {
       val batschema = tbl(s, dir, "events").schema
       val streamDir = stageAsStreamDir(s, dir, "events")
       val stream = graft.streaming.EventStream.windowedCounts(s, streamDir, batschema)
-      val name = "q_events_stream_sink"
-      val q = stream.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(name).select(
+      graft.streaming.EventStream.runOnce(stream, "q_events_stream_sink",
+        org.apache.spark.sql.streaming.OutputMode.Complete).select(
         unix_timestamp(col("window.start")).as("window_start"),
         col("event_type"), col("n"), col("total_value"))
     }),
@@ -290,11 +287,7 @@ object SparkEntry {
       val deduped = graft.streaming.DocStream.dedupStream(raw)
         .select(col("content_hash"),
           length(col("text")).cast("int").as("n_chars"))
-      val name = "q_stream_dedup_sink"
-      val q = deduped.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(name)
+      graft.streaming.EventStream.runOnce(deduped, "q_stream_dedup_sink")
     }),
     // ------------------------------------------------ text analysis
     "q_token_count" -> ((s, dir) =>
@@ -450,11 +443,7 @@ object SparkEntry {
       }
       val stream = graft.streaming.DocStream.extractStream(s, stageDir, ds.schema)
         .select(col("doc_id"), col("page_count"), size(col("spans")).as("n_spans"))
-      val name = "q_stream_extract_sink"
-      val q = stream.writeStream.outputMode("append").format("memory")
-        .queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(name)
+      graft.streaming.EventStream.runOnce(stream, "q_stream_extract_sink")
     }),
     "pipeline_lineage" -> ((s, dir) => {
       // cluster-adaptive spread (was a fixed 16 — half this box's cores);

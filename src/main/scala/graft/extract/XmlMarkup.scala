@@ -7,7 +7,7 @@ import scala.collection.mutable.ArrayBuffer
   * OPML, EndNote): the reader loop, the ancestor `path`, the `inline` text
   * buffer, one stack of closers for marks and links and verbatim text. Every
   * block goes to `out`, the shared [[MdShared.Blocks]] builder, which keeps
-  * source order, builds the lists and throws the `<kind>: no content` failure.
+  * source order, builds the lists and throws the no-content failure.
   *
   * A converter's role table names the elements the walker renders; its
   * `start`/`end` hooks see every other element, with `path` holding the

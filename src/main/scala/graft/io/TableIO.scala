@@ -159,10 +159,4 @@ object TableIO {
   def readDirs(spark: SparkSession, tableDir: String, dirs: Seq[String],
       schema: StructType): DataFrame =
     spark.read.schema(schema).parquet(dirs.map(d => s"$tableDir/$d"): _*)
-
-  /** Read as of a specific snapshot id (time travel). */
-  def readAsOf(spark: SparkSession, tableDir: String, snapshotId: Long): Option[DataFrame] =
-    readManifest(tableDir, snapshotId).filter(_.dataDirs.nonEmpty).map { s =>
-      spark.read.parquet(s.dataDirs.map(d => s"$tableDir/$d"): _*)
-    }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming shells. The reference is pure batch (no streaming
@@ -25,38 +25,13 @@ object EventStream {
         // hash-matches the batch oracle regardless of micro-batching
         round(sum(col("value").cast("decimal(18,2)")), 2).cast("double").as("total_value"))
 
-  /** Run a streaming plan synchronously against whatever is in the source
-    * directory (memory sink + processAllAvailable) — the local smoke path.
+  /** Run a streaming plan to completion over what its source holds now,
+    * into a memory sink, and return the sink table. The query stops even
+    * when the run throws.
     */
-  def runOnce(df: DataFrame, name: String,
-      mode: OutputMode = OutputMode.Append): StreamingQuery = {
-    val q = df.writeStream.outputMode(mode)
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q
-  }
-
-  final case class Ev(user_id: Long, ts: java.sql.Timestamp, value: Double)
-  final case class SessionAgg(user_id: Long, n_events: Long, total_value: Double)
-
-  /** Stateful per-user running aggregates via mapGroupsWithState — the
-    * custom-state shell (KeyValueGroupedDataset) for incremental lineage
-    * counters.
-    */
-  def statefulUserCounts(spark: SparkSession, dir: String, schema: StructType): DataFrame = {
-    import spark.implicits._
-    val events = spark.readStream.schema(schema).parquet(dir)
-      .select(col("user_id"), col("ts").cast("timestamp").as("ts"), col("value")).as[Ev]
-    events.groupByKey(_.user_id)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout()) {
-        (uid: Long, evs: Iterator[Ev], state: GroupState[SessionAgg]) =>
-          val prev = state.getOption.getOrElse(SessionAgg(uid, 0L, 0.0))
-          var n = prev.n_events
-          var tot = prev.total_value
-          evs.foreach { e => n += 1; tot += e.value }
-          val next = SessionAgg(uid, n, math.rint(tot * 100) / 100)
-          state.update(next)
-          next
-      }.toDF()
+  def runOnce(df: DataFrame, name: String, mode: OutputMode = OutputMode.Append): DataFrame = {
+    val q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
+    try q.processAllAvailable() finally q.stop()
+    df.sparkSession.table(name)
   }
 }

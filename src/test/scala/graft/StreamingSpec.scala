@@ -21,33 +21,20 @@ class StreamingSpec extends AnyFunSuite {
     val schema = spark.read.parquet(eventsDir + "/events.parquet").schema
     // Complete mode: with Append, windows still inside the watermark of the
     // final batch would be withheld from the memory sink
-    val q = EventStream.runOnce(
+    EventStream.runOnce(
       EventStream.windowedCounts(spark, eventsDir, schema), "win_counts",
       org.apache.spark.sql.streaming.OutputMode.Complete)
-    try {
-      val streamed = spark.sql(
-        "SELECT sum(n) FROM win_counts").collect().head.getLong(0)
-      val batch = spark.read.parquet(eventsDir + "/events.parquet").count()
-      assert(streamed == batch)
-      // per-window figures match the equivalent batch plan
-      import org.apache.spark.sql.functions._
-      val batchWin = spark.read.parquet(eventsDir + "/events.parquet")
-        .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
-        .agg(count(lit(1)).as("n")).count()
-      val streamWin = spark.sql("SELECT count(*) FROM win_counts").collect().head.getLong(0)
-      assert(streamWin == batchWin)
-    } finally q.stop()
-  }
-
-  test("stateful per-user aggregation accumulates counts and values") {
-    val schema = spark.read.parquet(eventsDir + "/events.parquet").schema
-    val q = EventStream.runOnce(
-      EventStream.statefulUserCounts(spark, eventsDir, schema), "user_state",
-      org.apache.spark.sql.streaming.OutputMode.Update)
-    try {
-      val total = spark.sql("SELECT sum(n_events) FROM user_state").collect().head.getLong(0)
-      assert(total == spark.read.parquet(eventsDir + "/events.parquet").count())
-    } finally q.stop()
+    val streamed = spark.sql(
+      "SELECT sum(n) FROM win_counts").collect().head.getLong(0)
+    val batch = spark.read.parquet(eventsDir + "/events.parquet").count()
+    assert(streamed == batch)
+    // per-window figures match the equivalent batch plan
+    import org.apache.spark.sql.functions._
+    val batchWin = spark.read.parquet(eventsDir + "/events.parquet")
+      .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
+      .agg(count(lit(1)).as("n")).count()
+    val streamWin = spark.sql("SELECT count(*) FROM win_counts").collect().head.getLong(0)
+    assert(streamWin == batchWin)
   }
 }
 
@@ -64,14 +51,11 @@ class DocStreamSpec extends org.scalatest.funsuite.AnyFunSuite {
     val gens = (0L until 120L).map(i => graft.io.SyntheticDocs.generate(seed = 42, i))
     spark.createDataset(gens.map(_.raw)).write.parquet(dir)
     val schema = spark.read.parquet(dir).schema
-    val q = graft.streaming.EventStream.runOnce(
+    val streamed = graft.streaming.EventStream.runOnce(
       graft.streaming.DocStream.extractStream(spark, dir, schema), "doc_stream")
-    try {
-      val streamed = spark.sql("SELECT doc_id, spans FROM doc_stream")
-        .as[(String, Seq[graft.model.Span])].collect().toMap
-      assert(streamed.size == 120)
-      gens.foreach(g => assert(streamed(g.raw.doc_id) == g.expected, g.raw.doc_id))
-    } finally q.stop()
+      .select("doc_id", "spans").as[(String, Seq[graft.model.Span])].collect().toMap
+    assert(streamed.size == 120)
+    gens.foreach(g => assert(streamed(g.raw.doc_id) == g.expected, g.raw.doc_id))
   }
 
   test("streaming exact dedup emits one row per distinct content") {
@@ -81,12 +65,9 @@ class DocStreamSpec extends org.scalatest.funsuite.AnyFunSuite {
       .toDF("doc_id", "text").write.parquet(dir)
     val schema = spark.read.parquet(dir).schema
     val src = spark.readStream.schema(schema).parquet(dir)
-    val q = graft.streaming.EventStream.runOnce(
-      graft.streaming.DocStream.dedupStream(src), "dedup_stream")
-    try {
-      val rows = spark.sql("SELECT content_hash FROM dedup_stream").collect()
-      assert(rows.length == 2)
-    } finally q.stop()
+    val rows = graft.streaming.EventStream.runOnce(
+      graft.streaming.DocStream.dedupStream(src), "dedup_stream").select("content_hash").collect()
+    assert(rows.length == 2)
   }
 }
 
@@ -102,18 +83,16 @@ class DocStream2Spec extends org.scalatest.funsuite.AnyFunSuite {
     val bad = graft.model.RawDoc("doc-bad", "no_such_dialect", "x", "", Nil, Nil)
     spark.createDataset(ok :+ bad).write.parquet(dir)
     val schema = spark.read.parquet(dir).schema
-    val qAll = graft.streaming.EventStream.runOnce(
+    graft.streaming.EventStream.runOnce(
       graft.streaming.DocStream.extractOutStream(spark, dir, schema), "extract_all")
-    val qDocs = graft.streaming.EventStream.runOnce(
+    graft.streaming.EventStream.runOnce(
       graft.streaming.DocStream.extractStream(spark, dir, schema), "extract_docs")
-    try {
-      val failures = spark.sql(
-        "SELECT doc_id, failure FROM extract_all WHERE failure <> ''").collect()
-      assert(failures.map(_.getString(0)).toSeq == Seq("doc-bad"))
-      assert(failures.head.getString(1).contains("unknown dialect"))
-      assert(spark.sql("SELECT count(*) FROM extract_all").head().getLong(0) == 11)
-      assert(spark.sql("SELECT count(*) FROM extract_docs").head().getLong(0) == 10)
-    } finally { qAll.stop(); qDocs.stop() }
+    val failures = spark.sql(
+      "SELECT doc_id, failure FROM extract_all WHERE failure <> ''").collect()
+    assert(failures.map(_.getString(0)).toSeq == Seq("doc-bad"))
+    assert(failures.head.getString(1).contains("unknown dialect"))
+    assert(spark.sql("SELECT count(*) FROM extract_all").head().getLong(0) == 11)
+    assert(spark.sql("SELECT count(*) FROM extract_docs").head().getLong(0) == 10)
   }
 
   test("watermarked dedupStream (dropDuplicatesWithinWatermark branch)") {
@@ -126,12 +105,10 @@ class DocStream2Spec extends org.scalatest.funsuite.AnyFunSuite {
     val schema = spark.read.parquet(dir).schema
     val src = spark.readStream.schema(schema).parquet(dir)
       .withColumn("ts", org.apache.spark.sql.functions.col("ts").cast("timestamp"))
-    val q = graft.streaming.EventStream.runOnce(
+    graft.streaming.EventStream.runOnce(
       graft.streaming.DocStream.dedupStream(src, tsCol = Some("ts")), "dedup_wm")
-    try {
-      assert(spark.sql("SELECT count(DISTINCT content_hash) FROM dedup_wm")
-        .head().getLong(0) == 2)
-      assert(spark.sql("SELECT count(*) FROM dedup_wm").head().getLong(0) == 2)
-    } finally q.stop()
+    assert(spark.sql("SELECT count(DISTINCT content_hash) FROM dedup_wm")
+      .head().getLong(0) == 2)
+    assert(spark.sql("SELECT count(*) FROM dedup_wm").head().getLong(0) == 2)
   }
 }
