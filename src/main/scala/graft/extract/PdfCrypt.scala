@@ -312,16 +312,4 @@ object PdfCrypt {
       new javax.crypto.spec.SecretKeySpec(fileKey, "AES"))
     c.doFinal(block)
   }
-
-  /** Decrypt-side /Perms check: returns Some(encryptMetadata) when the
-    * "adb" signature validates under the file key.
-    */
-  def validatePerms(fileKey: Array[Byte], perms: Array[Byte]): Option[Boolean] = {
-    if (perms.length < 16) return None
-    val c = javax.crypto.Cipher.getInstance("AES/ECB/NoPadding")
-    c.init(javax.crypto.Cipher.DECRYPT_MODE,
-      new javax.crypto.spec.SecretKeySpec(fileKey, "AES"))
-    val b = c.doFinal(perms.take(16))
-    if (b(9) == 'a' && b(10) == 'd' && b(11) == 'b') Some(b(8) == 'T') else None
-  }
 }

@@ -1,10 +1,15 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.{DataFrame, GraftBridge, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
+import scala.reflect.runtime.universe.TypeTag
 
 /** Iceberg-shaped table emulation: parquet data directories plus a JSON
   * snapshot-manifest chain giving atomic commits, snapshot ids for lineage
@@ -20,6 +25,9 @@ import java.nio.charset.StandardCharsets
   * and `<tableDir>/snap-<snapshotId>.json` manifests; `<tableDir>/current`
   * points at the live snapshot and is updated by atomic rename — a crashed
   * job leaves either the old or the new snapshot visible, never a torn state.
+  * A commit's data is written either by a Spark job ([[commit]]) or, for the
+  * few rows the driver already holds, by the driver itself ([[commitRows]]);
+  * both stage, write and finalize in the same order.
   */
 object TableIO {
 
@@ -111,6 +119,30 @@ object TableIO {
     df.observe(written, count(lit(1)).as("rows"))
       .write.mode("errorifexists").parquet(staged.dataPath)
     finalizeStaged(staged, written.get("rows").asInstanceOf[Long])
+  }
+
+  /** Append `rows` as a new snapshot written by the driver: one
+    * `part-00000` parquet file through Spark's own parquet writer, so no
+    * Spark job runs. For the few rows a caller already holds (a batch's
+    * lineage rows). The file is written in place: until its manifest exists
+    * the staged dir is invisible, so a crash mid-file leaves an orphan dir
+    * that the next [[stage]] sweeps, as a crash inside [[commit]] does.
+    */
+  def commitRows[T <: Product: TypeTag](spark: SparkSession, tableDir: String,
+      rows: Seq[T]): Snapshot = {
+    val staged = stage(tableDir)
+    val encoder = ExpressionEncoder[T]()
+    val toRow = encoder.createSerializer()
+    val (sqlConf, hadoopConf) = GraftBridge.sessionConfs(spark)
+    val job = Job.getInstance(hadoopConf)
+    val files = ParquetUtils.prepareWrite(sqlConf, job, encoder.schema,
+      new ParquetOptions(Map.empty[String, String], sqlConf))
+    val task = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val writer = files.newInstance(
+      s"${staged.dataPath}/part-00000${files.getFileExtension(task)}", encoder.schema, task)
+    // the parquet writer consumes each row before the serializer reuses it
+    try rows.foreach(r => writer.write(toRow(r))) finally writer.close()
+    finalizeStaged(staged, rows.size)
   }
 
   private def writeManifest(tableDir: String, s: Snapshot): Unit = {

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.md.Markdown
-import graft.model.{Chunk, Doc, Span, SpanKind}
+import graft.model.{Doc, SpanKind}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -205,11 +205,6 @@ object DocOps {
       .withColumn("numbered", format_string("%5d | %s", col("line_idx") + 1, col("line")))
       .drop("line")
 
-  /** Whole-document numbered text as one string (for LLM-prompt shaping). */
-  def addLineNumbers(text: String): String =
-    text.split("\n", -1).zipWithIndex
-      .map { case (l, i) => f"${i + 1}%5d | $l" }.mkString("\n")
-
   // ------------------------------------------------------- corrections
 
   /** A line correction (processors/ai_processor.py:27-36). */
@@ -231,28 +226,6 @@ object DocOps {
       }
     }
     (lines.mkString("\n"), done.toSet)
-  }
-
-  // ------------------------------------------------- line-range chunk
-
-  /** Materialize a chunk from a 1-based inclusive line range — the
-    * AIChunker's chunk extractor (ai_chunker/utils.py:22-41); image
-    * assignment by filename-substring, like the reference.
-    */
-  def lineRangeChunk(
-      doc: Doc,
-      startRow: Int,
-      endRow: Int,
-      chunkIdx: Int,
-      mediaFiles: Seq[String] = Nil): Chunk = {
-    val content = Markdown.render(doc.spans).stripSuffix("\n")
-    val lines = content.split("\n", -1)
-    val text = lines.slice(math.max(0, startRow - 1), math.min(lines.length, endRow)).mkString("\n")
-    val media = if (mediaFiles.nonEmpty) mediaFiles
-      else doc.spans.filter(_.kind == SpanKind.Image).map(_.media_ref)
-    Chunk(doc.doc_id, chunkIdx, text,
-      media.filter(f => f.nonEmpty && text.contains(f)),
-      start_line = startRow, end_line = endRow)
   }
 
   // ---------------------------------------------------------- export sink

@@ -25,10 +25,15 @@ import scala.jdk.CollectionConverters._
   * written, then finalized (manifest + atomic `current` flip); the lineage
   * rows carry that snapshot id and are committed to the metrics table second,
   * as the metrics snapshot with the same id — the two chains move in step.
+  * The driver already holds every lineage row (at most one per write task),
+  * so it writes the metrics snapshot's one parquet file itself
+  * (`TableIO.commitRows`): a batch runs no Spark job beyond the docs write.
   * Crash windows and their repair, both read from the manifests alone:
   *   - inside the docs write: the staged data dir is invisible (no manifest);
   *     TableIO's orphan sweep removes it and the rerun re-processes the batch.
-  *   - between the docs commit and the lineage commit: the metrics chain's
+  *   - between the docs commit and the end of the lineage commit (the
+  *     driver's lineage file half written, or written but not yet named by
+  *     a manifest or the `current` flip): the metrics chain's
   *     `current` is one behind the docs chain's, and the rerun rebuilds
   *     lineage from the data dir that docs snapshot added (failure lists are
   *     not reconstructable post-hoc — failed docs were never committed, so
@@ -103,7 +108,7 @@ object Runner {
 
     TableIO.finalizeStaged(staged, okCount)
     // 4. commit lineage under the same snapshot id (tiny: one row/partition)
-    commitLineage(spark.createDataset(parts), metricsTableDir, snapshotId)
+    commitLineage(spark, parts, metricsTableDir, snapshotId)
     RunResult(snapshotId, okCount, parts.map(_.span_count).sum, failureCount, skipped)
   }
 
@@ -121,23 +126,26 @@ object Runner {
       if (covered < docs.snapshotId) {
         val added = TableIO.readDirs(spark, outTableDir, docs.dataDirs.takeRight(1),
           Encoders.product[Doc].schema)
-        // committed docs are all successes: failure_count 0, failures []
-        commitLineage(Pipeline.lineage(added.withColumn("failure", lit("")), docs.snapshotId),
-          metricsTableDir, docs.snapshotId)
+        // committed docs are all successes: failure_count 0, failures [];
+        // at most one row per partition of one data dir
+        val rows = Pipeline.lineage(added.withColumn("failure", lit("")), docs.snapshotId).collect()
+        commitLineage(spark, rows.toSeq, metricsTableDir, docs.snapshotId)
       }
     }
 
-  /** Commit `lineage` as metrics snapshot `snapshotId`. The metrics chain's
-    * next id must be that docs snapshot id; anything else means the chains
-    * are out of step, and committing would file rows under the wrong id.
+  /** Commit `rows` as metrics snapshot `snapshotId`, written by the driver.
+    * The metrics chain's next id must be that docs snapshot id; anything
+    * else means the chains are out of step, and committing would file rows
+    * under the wrong id.
     */
   private def commitLineage(
-      lineage: Dataset[LineageRow],
+      spark: SparkSession,
+      rows: Seq[LineageRow],
       metricsTableDir: String,
       snapshotId: Long): Unit = {
     val next = TableIO.currentSnapshot(metricsTableDir).fold(0L)(_.snapshotId + 1)
     if (next != snapshotId) throw new IllegalStateException(
       s"metrics snapshot $next would hold the lineage of docs snapshot $snapshotId")
-    TableIO.commit(lineage.toDF(), metricsTableDir)
+    TableIO.commitRows(spark, metricsTableDir, rows)
   }
 }

@@ -22,23 +22,6 @@ class DocOpsSpec extends AnyFunSuite {
     assert(idx == Set(0, 1))
   }
 
-  test("addLineNumbers matches the reference format") {
-    assert(DocOps.addLineNumbers("a\nb") == "    1 | a\n    2 | b")
-  }
-
-  test("lineRangeChunk materializes 1-based inclusive ranges with images") {
-    val doc = Doc("d", Seq(
-      Span(SpanKind.Text, "alpha", "", 0),
-      Span(SpanKind.Image, "img-0", "img-0.png", 1),
-      Span(SpanKind.Text, "omega", "", 2)))
-    // rendered: alpha\n\n![img-0](img-0.png)\n\nomega  → 5 lines
-    val c = DocOps.lineRangeChunk(doc, 3, 5, 0)
-    assert(c.content == "![img-0](img-0.png)\n\nomega")
-    assert(c.media_refs == Seq("img-0.png"))
-    val c2 = DocOps.lineRangeChunk(doc, 1, 1, 1)
-    assert(c2.content == "alpha" && c2.media_refs.isEmpty)
-  }
-
   test("guessMime resolves known extensions and falls back") {
     import spark.implicits._
     val got = Seq("a/b.PDF", "x.html", "y.jpeg", "z.weird", "noext")

@@ -339,7 +339,7 @@ class PdfBytesSpec extends AnyFunSuite {
     val open = PdfBytes.buildPdf(Seq((10.0, 10.0)), "t", "a", Some(("", 6)))
     assert(!PdfBytes.pdfInfo(open).fold(e => fail(e), identity).isEncrypted)
     // distinct owner password verifies through Algorithm 12 and unwraps the
-    // same file key; Perms validates under it
+    // same file key
     val user = "u-pass".getBytes("UTF-8")
     val owner = "o-pass".getBytes("UTF-8")
     val fileKey = PdfCrypt.md5("ka".getBytes) ++ PdfCrypt.md5("kb".getBytes)
@@ -348,9 +348,6 @@ class PdfBytesSpec extends AnyFunSuite {
     assert(PdfCrypt.verifyOwnerPasswordV5(owner, o, oe, u, 6).exists(_.sameElements(fileKey)))
     assert(PdfCrypt.verifyUserPasswordV5(owner, u, ue, 6).isEmpty)
     assert(PdfCrypt.verifyOwnerPasswordV5(user, o, oe, u, 6).isEmpty)
-    val perms = PdfCrypt.computePerms(fileKey, -44, encryptMetadata = true)
-    assert(PdfCrypt.validatePerms(fileKey, perms).contains(true))
-    assert(PdfCrypt.validatePerms(fileKey.reverse, perms).isEmpty)
   }
 
   test("legacy stream filters: LZW, ASCIIHex, ASCII85, RunLength round-trip") {

@@ -1,10 +1,14 @@
 package graft
 
 import graft.io.{SyntheticDocs, TableIO}
+import graft.model.{LineageRow, RawDoc}
 import graft.pipeline.{Pipeline, Runner}
+import java.io.File
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.sum
 import org.scalatest.funsuite.AnyFunSuite
 
 class RunnerSpec extends AnyFunSuite {
@@ -26,6 +30,20 @@ class RunnerSpec extends AnyFunSuite {
       TestBus.drain(sc)
       (r, jobs.get)
     } finally sc.removeSparkListener(counter)
+  }
+
+  private def parquetFiles(dir: String): Seq[String] =
+    Option(new File(dir).listFiles()).toSeq.flatten
+      .map(_.getPath).filter(_.endsWith(".parquet")).sorted
+
+  /** snapshot id → (docs, spans, failures) sums and sorted failure samples. */
+  private def lineage(metricsDir: String): Map[Long, ((Long, Long, Long), Seq[String])] = {
+    import spark.implicits._
+    TableIO.read(spark, metricsDir).get.as[LineageRow].collect().toSeq
+      .groupBy(_.snapshot_id).map { case (id, rs) =>
+        id -> ((rs.map(_.doc_count).sum, rs.map(_.span_count).sum, rs.map(_.failure_count).sum),
+          rs.flatMap(_.failures).sorted)
+      }
   }
 
   test("run → crash → rerun completes idempotently with consistent lineage") {
@@ -92,16 +110,71 @@ class RunnerSpec extends AnyFunSuite {
     import spark.implicits._
     val (outDir, metricsDir) = (tmp("run-jobs"), tmp("run-jobs-metrics"))
     val input = spark.createDataset((0L until 40L).map(i => SyntheticDocs.generate(seed = 35, i).raw))
-    // the docs write (its repartition's map stage, then the write) and the
-    // lineage write; no input count, no read-back of either table
+    // the docs write (its repartition's map stage, then the write) and
+    // nothing else: the driver writes the lineage file itself, and there is
+    // no input count and no read-back of either table
     val (r1, fresh) = countingJobs(Runner.run(input, outDir, metricsDir))
     assert(r1.docsProcessed == 40 && r1.skippedAlreadyDone == 0)
-    assert(fresh == 3, s"$fresh jobs for a fresh-table commit")
+    assert(fresh == 2, s"$fresh jobs for a fresh-table commit")
+    val lineageFiles = parquetFiles(s"$metricsDir/data-0")
+    assert(lineageFiles.size == 1, lineageFiles)
+    val sums = spark.read.parquet(lineageFiles.head)
+      .agg(sum("doc_count"), sum("span_count"), sum("failure_count")).collect().head
+    assert(sums.toSeq == Seq(r1.docsProcessed, r1.spansWritten, r1.failures), sums)
     // resume reads neither table back (the manifests answer the repair
     // check, the doc_ids are read with their declared type) and counts the
     // input in the write's own pass
     val (r2, rerun) = countingJobs(Runner.run(input, outDir, metricsDir))
     assert(r2.docsProcessed == 0 && r2.skippedAlreadyDone == 40)
     assert(rerun <= 3, s"$rerun jobs for a no-op rerun")
+  }
+
+  test("a crash inside the driver's lineage write is repaired on rerun") {
+    import spark.implicits._
+    val good = (0L until 40L).map(i => SyntheticDocs.generate(seed = 37, i).raw)
+    val bad = RawDoc("doc-zzz-bad", "no_such_dialect", "x", "", Nil, Nil)
+    val all = spark.createDataset(good :+ bad)
+    // with and without the pointer's temp file left by a crash between its
+    // write and its rename
+    for (leftoverTmp <- Seq(false, true)) {
+      val (outDir, metricsDir) = (tmp("cut-out"), tmp("cut-metrics"))
+      // snapshot 0 records the permanently failing doc; snapshot 1 holds
+      // only successes, so the repair can rebuild its lineage exactly
+      // (failure samples of a lost lineage file are not reconstructable)
+      Runner.run(spark.createDataset(good.take(20) :+ bad), outDir, metricsDir)
+      Runner.run(spark.createDataset(good), outDir, metricsDir)
+      val uncut = lineage(metricsDir)
+      val uncutSnap = TableIO.currentSnapshot(metricsDir).get
+      assert(uncut(0L)._2.size == 1 && uncutSnap.snapshotId == 1, uncut)
+
+      // cut the metrics table back to a crash mid-way through writing
+      // snapshot 1's file: a truncated part file, no manifest, `current` at 0
+      val part = Paths.get(parquetFiles(s"$metricsDir/data-1").head)
+      val bytes = Files.readAllBytes(part)
+      Files.write(part, bytes.take(bytes.length / 2))
+      Files.delete(Paths.get(metricsDir, "snap-1.json"))
+      Files.write(Paths.get(metricsDir, "current"), "0".getBytes)
+      if (leftoverTmp) Files.write(Paths.get(metricsDir, ".current.tmp-1"), "1".getBytes)
+
+      val r1 = Runner.run(all, outDir, metricsDir)
+      assert(r1 == Runner.RunResult(1, 0, 0, 1, 40), leftoverTmp)
+      assert(lineage(metricsDir) == uncut, leftoverTmp)
+      // the repair reports one row per partition it read, so its row count
+      // is its own; the manifest still counts exactly the rows it names
+      val repaired = TableIO.currentSnapshot(metricsDir).get
+      assert((repaired.snapshotId, repaired.parentId, repaired.dataDirs) ==
+        (uncutSnap.snapshotId, uncutSnap.parentId, uncutSnap.dataDirs))
+      assert(repaired.rowCount == TableIO.read(spark, metricsDir).get.count())
+      assert(new File(metricsDir).list().toSet ==
+        Set("current", "data-0", "data-1", "snap-0.json", "snap-1.json"), leftoverTmp)
+      assert(parquetFiles(s"$metricsDir/data-1").size == 1)
+
+      // a second rerun adds nothing to either table
+      val r2 = Runner.run(all, outDir, metricsDir)
+      assert(r2 == r1)
+      assert(TableIO.currentSnapshot(metricsDir).get == repaired)
+      assert(TableIO.currentSnapshot(outDir).get.snapshotId == 1)
+      assert(lineage(metricsDir) == uncut)
+    }
   }
 }

@@ -33,22 +33,38 @@ sbt -batch "runMain graft.RunPipeline $N $OUT $METRICS" 2>&1 | grep RUN_RESULT
 echo "--- third run must be a no-op:"
 sbt -batch "runMain graft.RunPipeline $N $OUT $METRICS" 2>&1 | grep RUN_RESULT
 
-echo "--- validation (completeness, uniqueness, metrics consistency):"
+echo "--- validation (completeness, uniqueness, metrics consistency per snapshot):"
 python3 - "$OUT" "$METRICS" "$N" <<'EOF'
-import sys, glob, duckdb
+import sys, glob, json, duckdb
 out, metrics, n = sys.argv[1], sys.argv[2], int(sys.argv[3])
 con = duckdb.connect()
-import json, pathlib
-def live_dirs(table):
-    cur = int(open(f"{table}/current").read().strip())
-    snap = json.load(open(f"{table}/snap-{cur}.json"))
-    return [f"{table}/{d}/*.parquet" for d in snap["dataDirs"]]
-docs = "', '".join(live_dirs(out))
-r = con.sql(f"SELECT count(*) AS n, count(DISTINCT doc_id) AS d, sum(len(spans)) AS s FROM read_parquet(['{docs}'])").fetchone()
-m = "', '".join(live_dirs(metrics))
-mm = con.sql(f"SELECT sum(doc_count), sum(span_count) FROM read_parquet(['{m}'])").fetchone()
+def chain(table):
+    """Committed snapshots oldest first: (id, the data dir it added, its live dirs)."""
+    snaps, sid = [], int(open(f"{table}/current").read().strip())
+    while sid >= 0:
+        snap = json.load(open(f"{table}/snap-{sid}.json"))
+        snaps.append((sid, snap["dataDirs"][-1], snap["dataDirs"]))
+        sid = snap["parentId"]
+    return snaps[::-1]
+def scan(table, dirs):
+    return "read_parquet(['" + "', '".join(f"{table}/{d}/*.parquet" for d in dirs) + "'])"
+docs_chain, metrics_chain = chain(out), chain(metrics)
+docs_live, metrics_live = docs_chain[-1][2], metrics_chain[-1][2]
+# every live metrics dir holds a parquet file (a dir without one cannot be scanned)
+empty = [d for d in metrics_live if not glob.glob(f"{metrics}/{d}/*.parquet")]
+print(f"metrics dirs without a parquet file: {empty}")
+if empty:
+    print("KILL/RERUN TEST: FAIL")
+    sys.exit(1)
+r = con.sql(f"SELECT count(*), count(DISTINCT doc_id), sum(len(spans)) FROM {scan(out, docs_live)}").fetchone()
+mm = con.sql(f"SELECT sum(doc_count), sum(span_count) FROM {scan(metrics, metrics_live)}").fetchone()
 print(f"docs rows={r[0]} distinct={r[1]} spans={r[2]}; metrics docs={mm[0]} spans={mm[1]}")
-ok = (r[0] == n and r[1] == n and mm[0] == n and mm[1] == r[2])
+# each metrics snapshot's doc_count sum equals the rows its docs snapshot added
+added = {s: con.sql(f"SELECT count(*) FROM {scan(out, [d])}").fetchone()[0] for s, d, _ in docs_chain}
+counted = dict(con.sql(f"SELECT snapshot_id, sum(doc_count) FROM {scan(metrics, metrics_live)} GROUP BY 1").fetchall())
+print(f"docs rows added per snapshot: {added}; metrics doc_count per snapshot: {counted}")
+ok = (r[0] == n and r[1] == n and mm[0] == n and mm[1] == r[2]
+      and [s for s, _, _ in metrics_chain] == list(added) and counted == added)
 print("KILL/RERUN TEST:", "PASS" if ok else "FAIL")
 sys.exit(0 if ok else 1)
 EOF
