@@ -97,7 +97,7 @@ class DedupPathsSpec extends AnyFunSuite {
     ids.take(texts.size).toSeq.zip(texts)
   }
 
-  /** SHA-256 of the sorted `id_a, id_b, jaccard` lines. */
+  /** SHA-256 of the sorted `id_a, id_b, score` lines. */
   private def pairsDigest(df: org.apache.spark.sql.DataFrame): (Int, String) = {
     val lines = df.collect().map(r => s"${r.get(0)}\t${r.get(1)}\t${r.get(2)}").sorted
     val md = java.security.MessageDigest.getInstance("SHA-256")
@@ -115,5 +115,74 @@ class DedupPathsSpec extends AnyFunSuite {
     val (nString, hString) = pairsDigest(Dedup.minhashPairs(stringIds))
     assert((nLong, hLong) == (79, "86d8fb1a36678b8cce4c0cd79f49e33e9dd7cf48ff3a524f87aae353936c062b"))
     assert((nString, hString) == (79, "fdb6cdd45a121a46a0c4e6e4799a429977a86c2ae3660e2a9494108b63a84c6b"))
+  }
+
+  /** Each labelled run's (pair count, digest), compared in one assert so a
+    * mismatch prints every row.
+    */
+  private def assertPinned(runs: Seq[(String, () => org.apache.spark.sql.DataFrame)],
+      expected: Seq[(String, Int, String)]): Unit = {
+    val got = runs.map { case (label, run) =>
+      val (n, h) = pairsDigest(run())
+      (label, n, h)
+    }
+    assert(got == expected)
+  }
+
+  test("simhashPairs output is pinned at three hamming bounds, Long and String ids") {
+    // the pin corpus carries token-less docs ("", "  "), which the zero-token
+    // guard must keep out of every pair
+    import spark.implicits._
+    val corpus = pinCorpus(21)
+    val longIds = corpus.toDF("doc_id", "text")
+    val stringIds = corpus.map { case (i, t) => (s"d$i", t) }.toDF("doc_id", "text")
+    assertPinned(
+      for (h <- Seq(3, 8, 20); (ids, df) <- Seq("long" -> longIds, "string" -> stringIds))
+        yield (s"$ids h=$h", () => Dedup.simhashPairs(df, maxHamming = h)),
+      Seq(
+        ("long h=3", 38, "c5980cd90377148ac8392c9f86f12997db88de00831f5594f668dc887da06465"),
+        ("string h=3", 38, "bbd9d80cab56a5e94bebe3cbe27df657eefe08d8265cbef5dcb6ffeef17beb52"),
+        ("long h=8", 61, "8efceb916c59bbacb0a2f5ea86a4fbfff1f0c2cea8895b4e91efba84e8e0d702"),
+        ("string h=8", 61, "dd154d33e4f4114dc837e96807f2852958a547650819f03420062a430d70bfab"),
+        ("long h=20", 63, "843bb7d0b59f4353f62a281a56d363eea2191dd3ab4f9e4aaec758dcb495ce7d"),
+        ("string h=20", 63, "43187e5cd7b86259bbb9c177cc18a71fbe6159d4f9003fbb2b73726feb5b9800")))
+  }
+
+  test("embeddingNearDups output is pinned with a hot bucket and a repeated id") {
+    // 120 seeded 16-dim float vectors, 40 small perturbations of one vector
+    // (they share one sign bucket at every plane count) and one id listed
+    // twice with different vectors
+    import spark.implicits._
+    val rnd = new scala.util.Random(21)
+    def vec(): Array[Float] = Array.fill(16)(rnd.nextGaussian().toFloat)
+    val base = vec()
+    val hot = Seq.fill(40)(base.map(x => x + 0.01f * rnd.nextGaussian().toFloat))
+    val vecs = rnd.shuffle(Seq.fill(120)(vec()) ++ hot)
+    val ids = Iterator.continually(rnd.nextInt(2000000).toLong - 1000000L).distinct
+      .take(vecs.size).toSeq
+    val rows = ids.zip(vecs) :+ (ids(7) -> vec())
+    val df = rows.map { case (i, v) => (i, v.toSeq) }.toDF("vec_id", "embedding")
+    assertPinned(
+      for ((t, p) <- Seq((0.2, 6), (0.5, 8), (0.9, 2)))
+        yield (s"t=$t planes=$p", () => Dedup.embeddingNearDups(df, threshold = t, planes = p)),
+      Seq(
+        ("t=0.2 planes=6", 880, "f6b128efce9158da0c21f679687ba6dc7c2c62efcea285fc6db3e5affddc1317"),
+        ("t=0.5 planes=8", 788, "4ad574e8afea36f3eff79fdd645866533f7c333735531e6a9a8a8484d9d44591"),
+        ("t=0.9 planes=2", 780, "3933be71e172b4219bce4cc914e8bffcc345af065ffa858e7d76e270bc80facb")))
+  }
+
+  test("jaccardPairs output is pinned at three thresholds, with and without a df cap") {
+    import spark.implicits._
+    val df = pinCorpus(21).toDF("doc_id", "text")
+    assertPinned(
+      for (t <- Seq(0.3, 0.5, 0.8); cap <- Seq(0, 3))
+        yield (s"t=$t cap=$cap", () => Dedup.jaccardPairs(df, t, maxDocFreq = cap)),
+      Seq(
+        ("t=0.3 cap=0", 108, "44000d5fe3e2d2ce8fdde4ee11ee3cd17a9f4d171670881c243e6de9ffd0f691"),
+        ("t=0.3 cap=3", 79, "8ffbcdc2872b7addb45cc254395fa29209eac1062c01f747b403a89987ba4af3"),
+        ("t=0.5 cap=0", 99, "367fce62cbaa35318f5e39b9004f74789ad18c8138b28335f100534a32403224"),
+        ("t=0.5 cap=3", 57, "d5505b1e2d8dbecc25221a4c645e78e26ebf08d29be7b5e225cf5d0c198f922d"),
+        ("t=0.8 cap=0", 50, "a655f6f840cc60bb3de08f92cbf0605478940fb60fd0c479e876dd2183161351"),
+        ("t=0.8 cap=3", 44, "daf276a27a8d2df2aa0a384230e6d4b6d26072cb53efdabc3dc9bbdc97feb56b")))
   }
 }
