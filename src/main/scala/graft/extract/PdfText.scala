@@ -938,12 +938,9 @@ object PdfText {
     * size changes by more than 20%, or an x-indent jumps backward by more
     * than 2 em. Join with single spaces. This is the span-granularity the
     * extraction pipeline emits (one text span per paragraph, like the
-    * reference converters' block output).
+    * reference converters' block output). Returns (text, max line size,
+    * line count, top-line y) per paragraph block.
     */
-  def paragraphs(lines: Seq[Line]): Seq[String] =
-    paragraphsWithMeta(lines).map(_._1)
-
-  /** (text, max line size, line count, top-line y) per paragraph block. */
   private def paragraphsWithMeta(lines: Seq[Line]): Seq[(String, Double, Int, Double)] = {
     if (lines.isEmpty) return Nil
     val out = ArrayBuffer[(String, Double, Int, Double)]()
@@ -978,13 +975,9 @@ object PdfText {
     * shape the reference's converters emit: a short block (≤2 lines) whose
     * font size clears the document's median body size by ≥75% becomes a
     * `# ` heading, by ≥30% a `## ` heading. Size tiers are relative per
-    * DOCUMENT (pass the whole document's lines as `allLines`), so one
-    * oversized cover page cannot demote real body text.
-    */
-  def markdownBlocks(lines: Seq[Line], allLines: Seq[Line]): Seq[String] =
-    markdownBlocksWithY(lines, allLines).map(_._1)
-
-  /** [[markdownBlocks]] plus each block's top-line baseline y — the
+    * DOCUMENT (pass the whole document's lines as `allLines`; with none, no
+    * heading is inferred), so one oversized cover page cannot demote real
+    * body text. Each block comes with its top-line baseline y — the
     * position key the extraction pipeline uses to splice image spans into
     * reading order within the page (the reference's converters interleave
     * images at their layout position, test_output.ambr:49).

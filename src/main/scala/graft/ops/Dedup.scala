@@ -12,8 +12,11 @@ import org.apache.spark.storage.StorageLevel
 /** Deduplication operators for training-data pipelines. The pair
   * generators are Catalyst plans (higher-order functions + joins) so
   * Catalyst handles pushdown, AQE handles skew, and nothing materializes
-  * on the driver; [[connectedComponents]] runs its rounds over an RDD of
-  * id pairs, one Spark job per round.
+  * on the driver. All four ([[minhashPairs]], [[simhashPairs]],
+  * [[jaccardPairs]], [[embeddingNearDups]]) key their rows, then pair the
+  * rows that share a bucket through one self-join, [[bucketPairs]]; each
+  * keeps its own verify step. [[connectedComponents]] runs its rounds over
+  * an RDD of id pairs, one Spark job per round.
   *
   * Scale notes (100 TB): every variant is shuffle-bounded by design —
   * exact dedup shuffles one 64-hex key per doc; MinHash/LSH shuffles
@@ -91,10 +94,10 @@ object Dedup {
     graft.functions.PortableMinHashSig.portableMinhashSig(shingleHashes(text, shingleN), k)
 
   /** MinHash LSH near-dup pairs: band the signature (bands × rowsPerBand = k),
-    * bucket-join on (band index, band key), verify candidates with exact
-    * Jaccard over shingle-hash sets, keep pairs ≥ threshold. Each doc's
-    * shingle-hash set is computed in one pass and checkpointed eagerly (one
-    * Spark job when called; see [[checkpoint]]).
+    * pair docs sharing a (band index, band key) bucket ([[bucketPairs]]),
+    * verify candidates with exact Jaccard over shingle-hash sets, keep pairs
+    * ≥ threshold. Each doc's shingle-hash set is computed in one pass and
+    * checkpointed eagerly (one Spark job when called; see [[checkpoint]]).
     *
     * Shuffle profile: explode emits `bands` rows/doc with a small (int,
     * string) key; the self-join is an equi-join on that key; verification
@@ -129,17 +132,13 @@ object Dedup {
     // Jaccard over an empty set is 0).
     val banded = sh
       .filter(size(col("sh")) > 0)
-      .select(col("doc_id"),
+      .select(col("doc_id").as("id"),
         graft.functions.PortableMinHashSig.portableMinhashSig(col("sh"), k).as("sig"))
-      .select(col("doc_id"),
+      .select(col("id"),
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
           b => concat_ws("_", slice(col("sig"), b * rows + 1, lit(rows))))
         ).as(Seq("band", "band_key")))
-    val l = banded.select(col("band"), col("band_key"), col("doc_id").as("id_a"))
-    val r = banded.select(col("band"), col("band_key"), col("doc_id").as("id_b"))
-    val candidates = l.join(r, Seq("band", "band_key"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
+    val candidates = bucketPairs(banded, "band", "band_key").select("id_a", "id_b").distinct()
     // verify: join the deduped candidates back to the (hashed) shingle sets
     // once — Jaccard over h60 sets equals Jaccard over string sets up to
     // negligible 60-bit collisions
@@ -148,6 +147,19 @@ object Dedup {
       .join(sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"), jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
+  }
+
+  /** The pairs of `keyed` rows that agree on every `keys` column, once per
+    * shared bucket, with `id_a < id_b`: `id` and every other non-key column
+    * come along from both sides, suffixed `_a` and `_b`. The one bucket
+    * self-join behind every pair generator; a pair that shares several
+    * buckets appears once per bucket, so callers that need a pair set
+    * `distinct` it.
+    */
+  private def bucketPairs(keyed: DataFrame, keys: String*): DataFrame = {
+    val rest = keyed.columns.filterNot(keys.contains)
+    def side(s: String) = keyed.select(keys.map(col) ++ rest.map(c => col(c).as(s"${c}_$s")): _*)
+    side("a").join(side("b"), keys).filter(col("id_a") < col("id_b"))
   }
 
   /** Eager checkpoint: reliable (HDFS-durable, survives executor loss
@@ -179,7 +191,8 @@ object Dedup {
       graft.functions.Md5ShingleH60.md5ShingleH60(normalized(text), 1, maxTokens))
 
   /** SimHash near-dup candidates: band the 60-bit signature into four 15-bit
-    * chunks; docs sharing any chunk are candidates (catches hamming distance
+    * chunks; docs sharing any (band, chunk) bucket are candidates
+    * ([[bucketPairs]], the signature riding along; catches hamming distance
     * ≤ 3 with certainty, larger distances probabilistically); verify by full
     * hamming distance.
     */
@@ -195,13 +208,10 @@ object Dedup {
       .filter(size(col("toks")) > 0)
       .select(col("doc_id"),
         graft.functions.PortableSimHash60.portableSimhash60(col("toks")).as("sig"))
-    val banded = withSig.select(col("doc_id"), col("sig"),
+    val banded = withSig.select(col("doc_id").as("id"), col("sig"),
       posexplode(array((0 until 4).map(b =>
         shiftright(col("sig"), b * 15).bitwiseAND(lit(0x7fffL))): _*)).as(Seq("band", "chunk")))
-    val l = banded.select(col("band"), col("chunk"), col("doc_id").as("id_a"), col("sig").as("sig_a"))
-    val r = banded.select(col("band"), col("chunk"), col("doc_id").as("id_b"), col("sig").as("sig_b"))
-    l.join(r, Seq("band", "chunk"))
-      .filter(col("id_a") < col("id_b"))
+    bucketPairs(banded, "band", "chunk")
       .select(col("id_a"), col("id_b"),
         bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming"))
       .distinct()
@@ -212,8 +222,9 @@ object Dedup {
 
   /** N-gram Jaccard similarity pairs via an inverted-index join (SQL-exact,
     * oracle-checkable): index each doc's PPJoin prefix of its sorted
-    * distinct shingles, equi-join on shingle for candidate pairs, then
-    * verify each candidate's exact Jaccard against the full sets.
+    * distinct shingles, pair the docs sharing an indexed shingle
+    * ([[bucketPairs]], set sizes and positions riding along) for candidate
+    * pairs, then verify each candidate's exact Jaccard against the full sets.
     *
     * The join key is the shingle — frequency-skewed shingles are the classic
     * hot key (a stopword-ish shingle in df docs contributes O(df²) join
@@ -287,16 +298,12 @@ object Dedup {
     // pairs is lossless (Xiao et al. PPJoin, §3.2) — this is what bounds
     // the candidate blow-up at LOW thresholds, where the prefix alone
     // keeps ≈(1−t) of the index
-    val inv = sets.select(col("doc_id"), col("n_sh"),
+    val inv = sets.select(col("doc_id").as("id"), col("n_sh").as("n"),
       posexplode(slice(col("sh"), lit(1), prefixLen)).as(Seq("pos", "shingle")))
-    val l = inv.select(col("shingle"), col("doc_id").as("id_a"),
-      col("n_sh").as("n_a"), col("pos").as("pos_a"))
-    val r = inv.select(col("shingle"), col("doc_id").as("id_b"),
-      col("n_sh").as("n_b"), col("pos").as("pos_b"))
     val positionalOk = least(col("n_a") - col("pos_a"), col("n_b") - col("pos_b")) >=
       (col("n_a") + col("n_b")) * lit(threshold / (1 + threshold)) - lit(1e-9)
-    val candidates = l.join(r, Seq("shingle"))
-      .filter(col("id_a") < col("id_b") && lengthOk && positionalOk)
+    val candidates = bucketPairs(inv, "shingle")
+      .filter(lengthOk && positionalOk)
       .select("id_a", "id_b").distinct()
     val a = sets.select(col("doc_id").as("id_a"), col("sh").as("sh_a"), col("n_sh").as("n_a"))
     val b = sets.select(col("doc_id").as("id_b"), col("sh").as("sh_b"), col("n_sh").as("n_b"))
@@ -370,8 +377,9 @@ object Dedup {
     * random-hyperplane sign bits (native
     * [[graft.functions.PortableHyperplaneBucket]]: Rademacher ±1 components
     * from md5 parity — deterministic AND reproducible in the SQL oracle).
-    * Vectors sharing a sign-bucket are candidates; cosine verifies. `planes`
-    * controls the recall/cost trade.
+    * Vectors sharing a sign-bucket are candidates ([[bucketPairs]], the
+    * vectors riding along); cosine verifies. `planes` controls the
+    * recall/cost trade.
     */
   def embeddingNearDups(
       vecs: DataFrame,
@@ -382,10 +390,7 @@ object Dedup {
     val v = col(vecCol)
     val bucketed = vecs.select(col(idCol).as("id"), v.as("vec"),
       graft.functions.PortableHyperplaneBucket.portableHyperplaneBucket(v, planes).as("bucket"))
-    val l = bucketed.select(col("bucket"), col("id").as("id_a"), col("vec").as("vec_a"))
-    val r = bucketed.select(col("bucket"), col("id").as("id_b"), col("vec").as("vec_b"))
-    l.join(r, Seq("bucket"))
-      .filter(col("id_a") < col("id_b"))
+    bucketPairs(bucketed, "bucket")
       .select(col("id_a"), col("id_b"),
         Similarity.cosine(col("vec_a"), col("vec_b")).as("cosine"))
       .filter(col("cosine") >= threshold)
@@ -420,17 +425,19 @@ object Dedup {
     * String by UTF-8 bytes), so `cluster_id` is the component's minimum
     * under Spark SQL `min`. Per-round cost is O(|edges|), never O(corpus);
     * a star step holds one node's neighbor list in memory, so the largest
-    * component bounds a task's memory. Checkpoints are RELIABLE
-    * (HDFS-durable) when the session has a checkpoint dir, executor-local
-    * otherwise (see [[checkpoint]]).
+    * component bounds a task's memory. The labels come from one last star
+    * step over the edges plus a self-link per node, with no final join.
+    * Checkpoints are RELIABLE (HDFS-durable) when the session has a
+    * checkpoint dir, executor-local otherwise (see [[checkpoint]]).
     *
-    * @return (doc_id, cluster_id) for EVERY node, both of the id column's
-    *         type — singletons keep their own id (one final key-only left
-    *         join re-attaches them), members carry the component's
-    *         minimum. If a component needs more than `maxIters` rounds a
-    *         WARN names the round and pending change counts, and each
-    *         label is the least id the node is linked to (never above its
-    *         own id; over-segmented, never wrongly merged) — raise
+    * @return (doc_id, cluster_id), one row per distinct node id (an id
+    *         listed twice in `nodes` gets one row; a null id gets one
+    *         `(null, null)` row), both of the id column's type — singletons
+    *         keep their own id (their self-link), members carry the
+    *         component's minimum. If a component needs more than `maxIters`
+    *         rounds a WARN names the round and pending change counts, and
+    *         each label is the least id the node is linked to (never above
+    *         its own id; over-segmented, never wrongly merged) — raise
     *         `maxIters` for such graphs.
     */
   def connectedComponents(
@@ -445,17 +452,16 @@ object Dedup {
     val ids = nodes.select(col(idCol).as("n_id"))
     val idType = ids.schema.head.dataType
     val (a, b) = (col(aCol).cast(idType), col(bCol).cast(idType))
-    val oriented = pairs.filter(col(aCol) =!= col(bCol))
-      .join(ids, col(aCol) === col("n_id"), "left_semi")
-      .join(ids, col(bCol) === col("n_id"), "left_semi")
-      .select(greatest(a, b), least(a, b))
-      .queryExecution.toRdd
-    val part = new HashPartitioner(math.max(1, oriented.getNumPartitions))
     // rows are reused buffers: copy before keeping their values
-    var edges: RDD[(Any, Any)] = oriented.map { r =>
+    def tuples(df: DataFrame): RDD[(Any, Any)] = df.queryExecution.toRdd.map { r =>
       val c = r.copy()
       (c.get(0, idType), c.get(1, idType))
     }
+    var edges = tuples(pairs.filter(col(aCol) =!= col(bCol))
+      .join(ids, col(aCol) === col("n_id"), "left_semi")
+      .join(ids, col(bCol) === col("n_id"), "left_semi")
+      .select(greatest(a, b), least(a, b)))
+    val part = new HashPartitioner(math.max(1, edges.getNumPartitions))
     // group each node's distinct neighbors on the one partitioner and emit
     // new edges under Spark SQL's ordering of the id type
     def byNode(e: RDD[(Any, Any)])(
@@ -499,16 +505,15 @@ object Dedup {
       org.slf4j.LoggerFactory.getLogger("graft.ops.Dedup").warn(
         s"connectedComponents stopped at maxIters: rounds = $rounds, edge changes pending = " +
           s"$pending; labels are over-segmented")
-    val labels = byNode(edges)((ord, v, ms) => Iterator(v -> ms.min(ord)))
+    // a self-link per node: every node, singletons and minima included,
+    // gets the least of itself and its (smaller) links
+    val self = tuples(ids.select(col("n_id"), col("n_id")))
+    val labels = byNode(edges.union(self))((ord, v, ms) => Iterator(v -> ms.min(ord)))
       .mapPartitions { it =>
         val toScala = CatalystTypeConverters.createToScalaConverter(idType)
         it.map { case (v, m) => Row(toScala(v), toScala(m)) }
       }
-    val labelled = spark.createDataFrame(labels, StructType(Seq(
+    spark.createDataFrame(labels, StructType(Seq(
       StructField("doc_id", idType), StructField("cluster_id", idType))))
-    // rejoin the (untouched) singleton majority: absent from the labels ⇒
-    // own-id cluster
-    ids.join(labelled, col("n_id") === col("doc_id"), "left")
-      .select(col("n_id").as("doc_id"), coalesce(col("cluster_id"), col("n_id")).as("cluster_id"))
   }
 }

@@ -51,15 +51,6 @@ object Similarity {
     topKPerQuery(scored, k)
   }
 
-  /** The IVF cell-count rule: ≈√N cells keeps both the centroid model
-    * (driver-side constants) and the average cell (≈√N vectors) sub-linear.
-    * 10^6 vectors → 1000 cells; 10^10 (the 100 TB regime) → 100k, capped at
-    * `maxCells` so the inlined centroid matrix stays a few MB.
-    */
-  def nCellsFor(corpusSize: Long, maxCells: Int = 65536): Int =
-    math.max(1L, math.min(maxCells.toLong,
-      math.round(math.sqrt(corpusSize.toDouble)))).toInt
-
   /** A built IVF index: the corpus with its `cell_id` assignment CLUSTERED
     * by cell (hash-repartitioned on `cell_id`, so each probed cell's
     * vectors are contiguous in a known partition set), plus the centroid
@@ -134,12 +125,11 @@ object Similarity {
   }
 
   /** IVF (inverted-file) ANN: assign every vector to its nearest of `nCells`
-    * centroids (see [[nCellsFor]] for the ≈√N sizing rule), cluster the
-    * corpus by cell ([[ivfIndex]]), then search only within each query's
-    * `nProbe` nearest cells ([[ivfTopKWithIndex]]). At 100 TB the index is
-    * built once and persisted partitioned by `cell_id`; per-batch probe
-    * cost is bounded by probed-cell size, and the only per-batch exchange
-    * is the final top-k partial aggregation.
+    * centroids, cluster the corpus by cell ([[ivfIndex]]), then search only
+    * within each query's `nProbe` nearest cells ([[ivfTopKWithIndex]]). At
+    * 100 TB the index is built once and persisted partitioned by `cell_id`;
+    * per-batch probe cost is bounded by probed-cell size, and the only
+    * per-batch exchange is the final top-k partial aggregation.
     */
   def ivfTopK(
       corpus: DataFrame,

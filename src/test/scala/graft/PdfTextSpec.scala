@@ -139,7 +139,7 @@ class PdfTextSpec extends AnyFunSuite {
       Line(72, 670, 400, 12, "body one"),
       Line(72, 655, 400, 12, "body two"),
       Line(72, 600, 400, 12, "new para"))
-    val got = PdfText.paragraphs(lines)
+    val got = PdfText.markdownBlocksWithY(lines, Nil).map(_._1)
     assert(got == Seq("Heading", "body one body two", "new para"))
   }
 
@@ -151,7 +151,7 @@ class PdfTextSpec extends AnyFunSuite {
       Line(72, 670, 400, 12, "body line one"),
       Line(72, 655, 400, 12, "body line two"),
       Line(72, 640, 400, 12, "body line three"))
-    val got = PdfText.markdownBlocks(lines, lines)
+    val got = PdfText.markdownBlocksWithY(lines, lines).map(_._1)
     assert(got == Seq("# Big Title", "## Sub heading",
       "body line one body line two body line three"))
     // the REAL fixture: the 28pt title becomes a # heading on ingestion

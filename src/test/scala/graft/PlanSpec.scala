@@ -59,10 +59,6 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val oneShot = Similarity.ivfTopK(vecs, vecs.filter(col("vec_id") < 3),
       k = 4, nCells = 4, nProbe = 2)
     assert(probed.collect().toSet == oneShot.collect().toSet)
-    // the ≈√N sizing rule
-    assert(Similarity.nCellsFor(1000000L) == 1000)
-    assert(Similarity.nCellsFor(4L) == 2)
-    assert(Similarity.nCellsFor(Long.MaxValue) == 65536)
   }
 
   test("boilerplate removal: anti-join + aggregates, no window, no cross join") {
@@ -91,11 +87,17 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val docs = (0L until 50L).map(i => (i, s"some words $i repeated $i here again and again"))
       .toDF("doc_id", "text")
     assert(!plan(Dedup.exactSurvivors(docs)).contains("Window"))
-    assert(!plan(Dedup.minhashPairs(docs, threshold = 0.5)).contains("Window"))
-    assert(!plan(Dedup.simhashPairs(docs)).contains("Window"))
-    assert(!plan(Dedup.jaccardPairs(docs, threshold = 0.5, maxDocFreq = 10)).contains("Window"))
-    // and nothing degraded to a cartesian product
-    assert(!plan(Dedup.minhashPairs(docs, threshold = 0.5)).contains("CartesianProduct"))
+    // all four pair generators: no window sort, and nothing degraded to a
+    // cartesian product
+    val generators = Seq(
+      "minhash" -> Dedup.minhashPairs(docs, threshold = 0.5),
+      "simhash" -> Dedup.simhashPairs(docs),
+      "jaccard" -> Dedup.jaccardPairs(docs, threshold = 0.5, maxDocFreq = 10),
+      "embedding" -> Dedup.embeddingNearDups(vecs, threshold = 0.5))
+    for ((name, df) <- generators; p = plan(df)) {
+      assert(!p.contains("Window"), s"$name: $p")
+      assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"), s"$name: $p")
+    }
   }
 
   test("minhashPairs shingles each doc once and scans its input once") {
