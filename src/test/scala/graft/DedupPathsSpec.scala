@@ -185,4 +185,113 @@ class DedupPathsSpec extends AnyFunSuite {
         ("t=0.8 cap=0", 50, "a655f6f840cc60bb3de08f92cbf0605478940fb60fd0c479e876dd2183161351"),
         ("t=0.8 cap=3", 44, "daf276a27a8d2df2aa0a384230e6d4b6d26072cb53efdabc3dc9bbdc97feb56b")))
   }
+
+  /** Seeded texts for the kernel pins: words from a small vocabulary (some
+    * multi-byte) separated by runs of every whitespace byte the native
+    * tokenizer splits on, `\u000b` and `\f` included, with leading and
+    * trailing runs; docs of 150-250 words pass the 128-token cap; a null,
+    * empty and whitespace-only rows.
+    */
+  private def kernelTexts(seed: Long): Seq[String] = {
+    val rnd = new scala.util.Random(seed)
+    val vocab = Array.tabulate(40)(i => if (i % 7 == 0) s"wü$i" else s"w$i")
+    val seps = Array(" ", "\t", "\n", "\r", "\u000b", "\f", "  ", "\u000b\f", " \f\u000b\t")
+    def sep() = seps(rnd.nextInt(seps.length))
+    def doc(n: Int) = {
+      val b = new StringBuilder
+      if (rnd.nextBoolean()) b ++= sep()
+      for (i <- 0 until n) {
+        if (i > 0) b ++= sep()
+        b ++= vocab(rnd.nextInt(vocab.length))
+      }
+      if (rnd.nextBoolean()) b ++= sep()
+      b.toString
+    }
+    Seq(null, "", "   ", "\u000b\f\u000b", "one", "two words", "\fthree\u000bword\fdoc\u000b") ++
+      Seq.fill(40)(doc(rnd.nextInt(14))) ++ Seq.fill(8)(doc(150 + rnd.nextInt(100)))
+  }
+
+  // The three kernel pins below were recorded while each kernel was still a
+  // hand-written Catalyst expression; the rows must not move under any
+  // rewrite of how the kernels are invoked
+  test("shingle, MinHash and SimHash kernels are pinned") {
+    import graft.functions.{Md5ShingleH60, PortableMinHashSig}
+    import spark.implicits._
+    val df = kernelTexts(25).zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
+    def arr(label: String, c: org.apache.spark.sql.Column) =
+      (label, () => df.select(col("id"), size(c), c))
+    assertPinned(
+      (for (n <- Seq(1, 3); m <- Seq(0, 128))
+        yield arr(s"shingle n=$n max=$m", Md5ShingleH60.md5ShingleH60(col("text"), n, m))) ++
+      (for (k <- Seq(32, 128))
+        yield arr(s"minhash k=$k", PortableMinHashSig.portableMinhashSig(
+          Md5ShingleH60.md5ShingleH60(col("text"), 3), k))) :+
+      ("simhash", () => df.select(col("id"), lit("simhash"), Dedup.simhash(col("text")))),
+      Seq(
+        ("shingle n=1 max=0", 55, "dc023928f6ca726949df74796e934013ce4bb892406c27a60cc9a4da2b7436f6"),
+        ("shingle n=1 max=128", 55, "6c7deb51151b7eae1d4af426c9c49b0166d3fb4831c1cbcfa1b7984deb5b9450"),
+        ("shingle n=3 max=0", 55, "19b8c98f7c1d2be348a7b6fa4b57c05bd2cb2ae77a9c3e948d0f8a39b9322620"),
+        ("shingle n=3 max=128", 55, "e5c2f6fb0addae23388799761a9349b7382c9a8375a3ac0e1fd58fc316ae7fae"),
+        ("minhash k=32", 55, "0e17d154433f419aeea22b393687beff9211f4acfa27728eb66255085122c6d6"),
+        ("minhash k=128", 55, "e2b3a746c96d3affcb19e6e5d6275b766ba8f0a2515de27ce62e645125321b4c"),
+        ("simhash", 55, "c2ad4944ee4d96166cfca2477450f9ae55eb4237236ee0b18483c14826632107")))
+  }
+
+  /** Seeded Gaussian float vectors, 16-dim unless `dim` says otherwise. */
+  private def gaussVecs(rnd: scala.util.Random, n: Int, dim: Int = 16): Seq[Seq[Float]] =
+    Seq.fill(n)(Seq.fill(dim)(rnd.nextGaussian().toFloat))
+
+  test("hyperplane bucket and cosine kernels are pinned") {
+    import graft.functions.PortableHyperplaneBucket
+    import graft.ops.Similarity
+    import spark.implicits._
+    val rnd = new scala.util.Random(25)
+    val vs = gaussVecs(rnd, 60)
+    val zero = Seq.fill(16)(0.0f)
+    val buckets = ((vs :+ zero :+ Seq(1.0f, -2.0f, 0.5f)).map(Option(_)) :+ None)
+      .zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "v")
+    val pairs = (vs.zip(gaussVecs(rnd, 60)).map { case (a, b) => (Option(a), Option(b)) } ++ Seq(
+      (Some(zero), Some(vs(0))), (Some(zero), Some(zero)), (Some(vs(1)), Some(vs(1))),
+      (Some(vs(2)), Some(vs(3).take(10))), (Some(vs(4).take(5)), Some(vs(2))),
+      (None, Some(vs(5))), (Some(vs(6)), None)))
+      .zipWithIndex.map { case ((a, b), i) => (i.toLong, a, b) }.toDF("id", "a", "b")
+    assertPinned(
+      (for (p <- Seq(2, 6, 8)) yield (s"hyperplane planes=$p", () =>
+        buckets.select(col("id"), lit(p),
+          PortableHyperplaneBucket.portableHyperplaneBucket(col("v"), p)))) :+
+      ("cosine", () => pairs.select(col("id"), size(col("b")),
+        Similarity.cosine(col("a"), col("b")))),
+      Seq(
+        ("hyperplane planes=2", 63, "c666f7bf8f7fa1978548f62061fc03dceca3ea672ec452aab847ce5f78d9a7b3"),
+        ("hyperplane planes=6", 63, "0ca722fe9cda2a36b032a95147f50ba908ef382b84e0ce7958027ceddcbf8906"),
+        ("hyperplane planes=8", 63, "8a757ae6471b5f83affa437dc0d4d9771a2bb805dd1ee991308778de136c052b"),
+        ("cosine", 67, "e32ec8e4d7b44e0e3977f0b05c1cc616bb98df4813e8238757a5909c497b567b")))
+  }
+
+  test("IVF cells and ANN rankings are pinned") {
+    import graft.ops.Similarity
+    import spark.implicits._
+    val rnd = new scala.util.Random(26)
+    val corpus = gaussVecs(rnd, 200).zipWithIndex
+      .map { case (v, i) => (i.toLong * 7 - 300L, v) }.toDF("vec_id", "embedding")
+    val queries = corpus.filter(col("vec_id") % 5 === 0)
+    def ranked(df: org.apache.spark.sql.DataFrame) = df.select(col("query_id"),
+      concat_ws(" ", col("rank").cast("string"), col("corpus_id").cast("string")), col("cosine"))
+    assertPinned(
+      (for (n <- Seq(4, 8, 16)) yield (s"ivf cells=$n", () =>
+        Similarity.ivfIndex(corpus, n).index.select(col("corpus_id"), lit(n), col("cell_id")))) ++
+      Seq(
+        ("brute k=5", () => ranked(Similarity.bruteForceTopK(corpus, queries, k = 5))),
+        ("ivf k=5 cells=8 probe=2", () =>
+          ranked(Similarity.ivfTopK(corpus, queries, k = 5, nCells = 8, nProbe = 2))),
+        ("ivf k=5 cells=16 probe=4", () =>
+          ranked(Similarity.ivfTopK(corpus, queries, k = 5, nCells = 16, nProbe = 4)))),
+      Seq(
+        ("ivf cells=4", 200, "0cf823b2f32a3ae6439aaa588c823965314e4bdc0416527788c0effc365b7f29"),
+        ("ivf cells=8", 200, "4b20117dcbc89c1ffd7d2adafc149a64173e630bc115ce1677c9d1fc72105d18"),
+        ("ivf cells=16", 200, "90e83fb921bdf776a35ea526e34f1d76a4046df2117553eea6363af093695a53"),
+        ("brute k=5", 200, "788f4aa369e150290d17dd06aa6b0df7f65fd23e346536dc65a8039c55ab6acd"),
+        ("ivf k=5 cells=8 probe=2", 200, "de389e826a2be59b864ac6cf8992095b6c615736e35b4af7bb205fd6d23862a6"),
+        ("ivf k=5 cells=16 probe=4", 200, "7416ea2ef101018415a01c7090ebdc9f0dcf7fc608dbb0850853e80c05922fa6")))
+  }
 }
