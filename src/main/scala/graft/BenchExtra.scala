@@ -25,7 +25,8 @@ object BenchExtra {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val mode = args.headOption.getOrElse("headline")
     val spark = Pipeline.session(s"local[$cpus]", cpus, s"graft-benchextra")
     spark.sparkContext.setLogLevel("ERROR")

@@ -23,8 +23,8 @@ object PdfLayout {
   def layout(elements: Seq[PdfElement]): LaidOut = {
     val spans = ArrayBuffer.empty[Span]
     val images = ArrayBuffer.empty[NormImage]
-    // info-dictionary rows (info_title/info_author — see pageMetadata) are
-    // metadata only: they contribute no page, no span, no dimensions
+    // info-dictionary rows (info_title/info_author) are metadata only: they
+    // contribute no page and no span
     val byPage = elements.filterNot(_.kind.startsWith("info_"))
       .groupBy(_.page).toSeq.sortBy(_._1)
     if (byPage.isEmpty) return LaidOut(Nil, Nil)
@@ -104,49 +104,4 @@ object PdfLayout {
     * on one visual line still group together and sort left→right.
     */
   private def lineBucket(y: Double): Double = math.floor(y / 4.0) * 4.0
-
-  /** Per-page dimensions in points (width, height from element extents). */
-  final case class PageDims(page: Int, width: Double, height: Double)
-
-  /** Page metadata from positioned elements — the `get_pdf_info` analog
-    * (pdf_utils.py:187-256): page count + per-page dims + title + author.
-    *
-    * The PDF info dictionary (`reader.metadata.title/author`,
-    * pdf_utils.py:236-239) has a direct element-model analog: rows of kind
-    * `info_title` / `info_author` carry the dictionary values when the
-    * source had them — they are metadata-only (skipped by [[layout]] and by
-    * the dimension scan). Like the reference, `title` prefers the info
-    * dictionary; absent that it falls back to the first-page leading heading
-    * (what marker/docling surface as the doc title when the dictionary is
-    * empty). `author` comes ONLY from the info row — there is no content
-    * heuristic for authorship, and the reference has none either.
-    * Encryption remains the one documented no-analog (`is_encrypted =
-    * false`): it lives in the PDF byte trailer, and this engine does no
-    * PDF-byte parsing.
-    */
-  final case class PageMeta(
-      page_count: Int,
-      is_encrypted: Boolean,
-      page_dimensions: Seq[PageDims],
-      title: String = "",
-      author: String = "")
-
-  def pageMetadata(elements: Seq[PdfElement]): PageMeta = {
-    val (info, content) = elements.partition(_.kind.startsWith("info_"))
-    def infoVal(key: String): String =
-      info.collectFirst { case e if e.kind == s"info_$key" => e.text }.getOrElse("")
-    val dims = content.groupBy(_.page).toSeq.sortBy(_._1).map { case (p, es) =>
-      PageDims(p, es.map(e => e.x + e.w).max, es.map(e => e.y + e.h).max)
-    }
-    // heading fallback: FIRST page only — a chapter heading deep in the doc
-    // is not a document title
-    val firstPage = if (content.isEmpty) 0 else content.map(_.page).min
-    val headingTitle = content
-      .filter(e => e.page == firstPage && e.kind == "text" && e.text.startsWith("# "))
-      .sortBy(e => (e.y, e.x)).headOption
-      .map(_.text.stripPrefix("# ")).getOrElse("")
-    val title = { val t = infoVal("title"); if (t.nonEmpty) t else headingTitle }
-    PageMeta(dims.length, is_encrypted = false, dims,
-      title = title, author = infoVal("author"))
-  }
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, GraftBridge, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-/** Registers the engine's native expressions for the SQL surface:
+/** Registers the engine's kernels as SQL functions:
   *
   * {{{
   * spark = SparkSession.builder().withExtensions(new GraftExtensions).…
@@ -30,21 +30,25 @@ object GraftExtensions {
       s"$what must be an integer literal, got $other")
   }
 
-  /** name → expression builder: the single source for both registration
-    * paths.
+  /** name → expression builder, each through the same Column function the
+    * DataFrame API calls: the single source for both registration paths.
     */
-  val registry: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "cosine_sim" -> ((args: Seq[Expression]) => CosineSim(args.head, args(1))),
-    // engine-portable (md5-derived) sketches — every value reproducible in
-    // DuckDB SQL for oracle checking
-    "md5_shingle_h60" -> ((args: Seq[Expression]) =>
-      Md5ShingleH60(args.head, intArg(args(1), "n"),
-        if (args.length > 2) intArg(args(2), "maxTokens") else 0)),
-    "portable_minhash_sig" -> ((args: Seq[Expression]) =>
-      PortableMinHashSig(args.head, intArg(args(1), "k"))),
-    "portable_simhash60" -> ((args: Seq[Expression]) => PortableSimHash60(args.head)),
-    "portable_hyperplane_bucket" -> ((args: Seq[Expression]) =>
-      PortableHyperplaneBucket(args.head, intArg(args(1), "planes"))))
+  val registry: Seq[(String, Seq[Expression] => Expression)] = {
+    def c(e: Expression): Column = GraftBridge.column(e)
+    def sql(f: Seq[Expression] => Column): Seq[Expression] => Expression =
+      args => GraftBridge.expression(f(args))
+    Seq(
+      "cosine_sim" -> sql(args => graft.ops.Similarity.cosine(c(args.head), c(args(1)))),
+      // engine-portable (md5-derived) sketches — every value reproducible in
+      // DuckDB SQL for oracle checking
+      "md5_shingle_h60" -> sql(args => Md5ShingleH60.md5ShingleH60(c(args.head),
+        intArg(args(1), "n"), if (args.length > 2) intArg(args(2), "maxTokens") else 0)),
+      "portable_minhash_sig" -> sql(args =>
+        PortableMinHashSig.portableMinhashSig(c(args.head), intArg(args(1), "k"))),
+      "portable_simhash60" -> sql(args => PortableSimHash60.portableSimhash60(c(args.head))),
+      "portable_hyperplane_bucket" -> sql(args =>
+        PortableHyperplaneBucket.portableHyperplaneBucket(c(args.head), intArg(args(1), "planes"))))
+  }
 
   /** Register on an existing session (post-hoc, e.g. in tests). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =

@@ -1,12 +1,29 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType, StringType}
+import org.apache.spark.sql.GraftBridge.expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, LongType, ObjectType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+
+/** A Column that calls `kernel.compute(args…)` through Spark's
+  * `StaticInvoke`: whole-stage codegen emits one static call to the kernel,
+  * a null argument gives a null result, and an argument whose type is not
+  * its `inputTypes` entry (up to nullability) fails analysis — it is never
+  * cast, so an `array<double>` vector is rejected, not narrowed. Each
+  * kernel below is a plain `compute` on an object that returns Catalyst
+  * values; this is its only Catalyst wiring.
+  */
+private[graft] object Kernel {
+  val FloatVector: DataType = ArrayType(FloatType)
+
+  def apply(kernel: AnyRef, dataType: DataType, inputTypes: Seq[DataType],
+      args: Expression*): Column =
+    GraftBridge.column(StaticInvoke(kernel.getClass, dataType, "compute", args,
+      inputTypes.map(GraftBridge.exactType), propagateNull = true, returnNullable = false))
+}
 
 /** Engine-portable 60-bit hashing: `h60(s)` = the first 15 hex chars of
   * `md5(s)` parsed as an integer. Both Spark and DuckDB expose the identical
@@ -15,7 +32,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * correctness oracle (round-1 judge direction: rebase the sketches on
   * md5-derived lanes). 60 bits keeps the value positive in an ANSI BIGINT.
   *
-  * These are still native one-pass Catalyst expressions with codegen; MD5 on
+  * The sketch kernels are one-pass codegen'd calls ([[Kernel]]); MD5 on
   * ~30-byte shingles costs ~0.1-0.2 µs — the sketch ops stay shuffle-bound,
   * not hash-bound, at scale.
   */
@@ -72,35 +89,13 @@ object PortableHash {
   * @param n         shingle width in words (1 = token hashes)
   * @param maxTokens 0 = unlimited, else only the first maxTokens words
   */
-case class Md5ShingleH60(child: Expression, n: Int, maxTokens: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"Md5ShingleH60 needs string, got ${other.sql}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    new GenericArrayData(Md5ShingleH60.compute(input.asInstanceOf[UTF8String], n, maxTokens))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, str =>
-      s"${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.functions.Md5ShingleH60.compute($str, $n, $maxTokens));")
-
-  override protected def withNewChildInternal(newChild: Expression): Md5ShingleH60 =
-    copy(child = newChild)
-}
-
 object Md5ShingleH60 {
 
   /** One pass over the UTF-8 bytes: find word ranges (ASCII whitespace per
     * Java \s: space, \t, \n, \x0B, \f, \r), then hash each n-word window
     * (bytes joined by a single 0x20).
     */
-  def compute(str: UTF8String, n: Int, maxTokens: Int): Array[Long] = {
+  def compute(str: UTF8String, n: Int, maxTokens: Int): UnsafeArrayData = {
     val bytes = str.getBytes
     val len = bytes.length
     var starts = new Array[Int](64)
@@ -128,8 +123,7 @@ object Md5ShingleH60 {
     // scan stopped early on maxTokens, the in-progress word is word
     // maxTokens+1 and is dropped, matching the oracle's ws[1:maxTokens]
     if (wordStart >= 0 && i == len && (maxTokens == 0 || w < maxTokens)) push(wordStart, len)
-    if (w < n) return Array.emptyLongArray
-    val out = new Array[Long](w - n + 1)
+    val out = new Array[Long](math.max(0, w - n + 1))
     val buf = new java.io.ByteArrayOutputStream(64)
     var s = 0
     while (s <= w - n) {
@@ -143,11 +137,13 @@ object Md5ShingleH60 {
       out(s) = PortableHash.h60(buf.toByteArray)
       s += 1
     }
-    out
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   def md5ShingleH60(normalizedText: Column, n: Int, maxTokens: Int = 0): Column =
-    GraftBridge.column(Md5ShingleH60(GraftBridge.expression(normalizedText), n, maxTokens))
+    Kernel(this, ArrayType(LongType, containsNull = false),
+      Seq(StringType, IntegerType, IntegerType),
+      expression(normalizedText), Literal(n), Literal(maxTokens))
 }
 
 /** K-permutation MinHash signature over h60 element hashes with the portable
@@ -155,34 +151,13 @@ object Md5ShingleH60 {
   * of `(a_j·(h mod P) + b_j) mod P`. Empty input → empty array (callers
   * filter shingle-less docs before banding).
   */
-case class PortableMinHashSig(child: Expression, k: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"PortableMinHashSig needs array<bigint>, got ${other.sql}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    new GenericArrayData(PortableMinHashSig.compute(input.asInstanceOf[ArrayData], k))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr =>
-      s"${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.functions.PortableMinHashSig.compute($arr, $k));")
-
-  override protected def withNewChildInternal(newChild: Expression): PortableMinHashSig =
-    copy(child = newChild)
-}
-
 object PortableMinHashSig {
   private val paramCache =
     new java.util.concurrent.ConcurrentHashMap[Int, (Array[Long], Array[Long])]()
 
-  def compute(arr: ArrayData, k: Int): Array[Long] = {
+  def compute(arr: ArrayData, k: Int): UnsafeArrayData = {
     val n = arr.numElements()
-    if (n == 0) return Array.emptyLongArray
+    if (n == 0) return UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
     val (as, bs) = paramCache.computeIfAbsent(k, kk => PortableHash.minhashParams(kk))
     val out = Array.fill(k)(Long.MaxValue)
     var i = 0
@@ -198,37 +173,18 @@ object PortableMinHashSig {
       }
       i += 1
     }
-    out
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   def portableMinhashSig(elementHashes: Column, k: Int): Column =
-    GraftBridge.column(PortableMinHashSig(GraftBridge.expression(elementHashes), k))
+    Kernel(this, ArrayType(LongType, containsNull = false),
+      Seq(ArrayType(LongType), IntegerType), expression(elementHashes), Literal(k))
 }
 
 /** 60-bit SimHash over h60 token hashes: bit b of the signature is 1 when a
   * strict majority of tokens have bit b set (2·count > n). Empty input → 0
   * (callers filter token-less docs).
   */
-case class PortableSimHash60(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"PortableSimHash60 needs array<bigint>, got ${other.sql}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    PortableSimHash60.compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr =>
-      s"${ev.value} = graft.functions.PortableSimHash60.compute($arr);")
-
-  override protected def withNewChildInternal(newChild: Expression): PortableSimHash60 =
-    copy(child = newChild)
-}
-
 object PortableSimHash60 {
   def compute(arr: ArrayData): Long = {
     val n = arr.numElements()
@@ -255,7 +211,7 @@ object PortableSimHash60 {
   }
 
   def portableSimhash60(tokenHashes: Column): Column =
-    GraftBridge.column(PortableSimHash60(GraftBridge.expression(tokenHashes)))
+    Kernel(this, LongType, Seq(ArrayType(LongType)), expression(tokenHashes))
 }
 
 /** Random-hyperplane LSH bucket with Rademacher (±1) components from
@@ -263,33 +219,6 @@ object PortableSimHash60 {
   * double, element order 0..dim-1, matching the SQL oracle's sequential
   * `list_reduce` fold exactly (bit-for-bit). Bucket bit p = 1 iff dot > 0.
   */
-case class PortableHyperplaneBucket(child: Expression, planes: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"PortableHyperplaneBucket needs array<float|double>, got ${other.sql}")
-    }
-
-  private def isFloat = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    PortableHyperplaneBucket.compute(input.asInstanceOf[ArrayData], isFloat, planes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr =>
-      s"${ev.value} = graft.functions.PortableHyperplaneBucket.compute($arr, $isFloat, $planes);")
-
-  override protected def withNewChildInternal(newChild: Expression): PortableHyperplaneBucket =
-    copy(child = newChild)
-}
-
 object PortableHyperplaneBucket {
   // one cached primitive component MATRIX per (planes, dim): a single map
   // lookup per ROW, pure double[] reads in the hot loop (a per-element
@@ -301,7 +230,7 @@ object PortableHyperplaneBucket {
     matrixCache.computeIfAbsent((planes.toLong << 32) | dim.toLong, _ =>
       Array.tabulate(planes, dim)((p, d) => PortableHash.hyperplaneComponent(p, d)))
 
-  def compute(v: ArrayData, isFloat: Boolean, planes: Int): Long = {
+  def compute(v: ArrayData, planes: Int): Long = {
     val n = v.numElements()
     val m = matrix(planes, n)
     var bucket = 0L
@@ -311,8 +240,7 @@ object PortableHyperplaneBucket {
       var dot = 0.0
       var d = 0
       while (d < n) {
-        val x = if (isFloat) v.getFloat(d).toDouble else v.getDouble(d)
-        dot += comp(d) * x
+        dot += comp(d) * v.getFloat(d)
         d += 1
       }
       if (dot > 0) bucket |= 1L << p
@@ -322,82 +250,33 @@ object PortableHyperplaneBucket {
   }
 
   def portableHyperplaneBucket(vec: Column, planes: Int): Column =
-    GraftBridge.column(PortableHyperplaneBucket(GraftBridge.expression(vec), planes))
+    Kernel(this, LongType, Seq(Kernel.FloatVector, IntegerType),
+      expression(vec), Literal(planes))
 }
 
-/** Nearest-centroid assignment as ONE native expression: argmax over a small
-  * inlined centroid matrix of the 6-decimal-rounded cosine (identical
-  * rounding and strict-> / first-max tie-break as the
-  * `aggregate(centArray, …, cosine > acc.sim)` HOF fold it replaces — the
-  * SQL oracle's `ORDER BY round(cosine,6) DESC, cell_id` rn=1). The HOF fold
-  * pays interpreted lambda eval per (row × centroid); this is one fused
-  * codegen'd loop (the centroid matrix rides along as a referenced object).
+/** Nearest-centroid assignment in one codegen'd call: argmax over the
+  * centroid rows of the 6-decimal-rounded [[CosineSim.compute]], strict `>`
+  * so the first (lowest cell id) maximum wins — the SQL oracle's
+  * `ORDER BY round(cosine,6) DESC, cell_id` rn=1. The centroid rows ride
+  * along as one object literal of primitive float arrays.
   */
-case class NearestCentroid(child: Expression, centroids: Seq[Seq[Double]])
-    extends UnaryExpression {
-  // Seq fields give structural case-class equality (Array would be reference
-  // equality, defeating Catalyst canonicalization/CSE); compute uses the
-  // primitive matrix
-  @transient private lazy val matrix: Array[Array[Double]] =
-    centroids.map(_.toArray).toArray
-
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"NearestCentroid needs array<float|double>, got ${other.sql}")
-    }
-
-  private def isFloat = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    NearestCentroid.compute(input.asInstanceOf[ArrayData], isFloat, matrix)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cents = ctx.addReferenceObj("centroids", matrix, "double[][]")
-    nullSafeCodeGen(ctx, ev, arr =>
-      s"${ev.value} = graft.functions.NearestCentroid.compute($arr, $isFloat, $cents);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): NearestCentroid =
-    copy(child = newChild)
-}
-
 object NearestCentroid {
-  /** Same rounding as [[CosineSim.compute]] so results are bit-identical. */
-  private def cosine(v: ArrayData, isFloat: Boolean, c: Array[Double]): Double = {
-    val n = math.min(v.numElements(), c.length)
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val x = if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
-      val y = c(i)
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    val denom = math.sqrt(na) * math.sqrt(nb)
-    val r = if (denom == 0.0) 0.0 else dot / denom
-    java.math.BigDecimal.valueOf(r).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-  }
-
-  def compute(v: ArrayData, isFloat: Boolean, centroids: Array[Array[Double]]): Int = {
+  def compute(v: ArrayData, centroids: Array[UnsafeArrayData]): Int = {
     var best = -1
     var bestSim = -2.0
     var k = 0
     while (k < centroids.length) {
-      val s = cosine(v, isFloat, centroids(k))
-      if (s > bestSim) { bestSim = s; best = k } // strict >: first max wins
+      val s = CosineSim.compute(v, centroids(k))
+      if (s > bestSim) { bestSim = s; best = k }
       k += 1
     }
     best
   }
 
-  def nearestCentroid(vec: Column, centroids: Seq[Seq[Float]]): Column =
-    GraftBridge.column(NearestCentroid(GraftBridge.expression(vec),
-      centroids.map(_.map(_.toDouble))))
+  def nearestCentroid(vec: Column, centroids: Seq[Seq[Float]]): Column = {
+    val rows = centroids.map(c => UnsafeArrayData.fromPrimitiveArray(c.toArray)).toArray
+    val rowsType = ObjectType(rows.getClass)
+    Kernel(this, IntegerType, Seq(Kernel.FloatVector, rowsType), expression(vec),
+      Literal(rows, rowsType))
+  }
 }

@@ -33,7 +33,7 @@ object Dedup {
     * `trim` does not strip) makes regex `split('\s+')` emit boundary EMPTY
     * tokens that a byte-level tokenizer never sees — after the collapse all
     * three tokenizations (SQL split here, SQL split in the DuckDB oracle,
-    * and the native [[graft.functions.Md5ShingleH60]] scanner) agree on
+    * and the [[graft.functions.Md5ShingleH60]] kernel's scanner) agree on
     * every input. Token/shingle VALUES are unchanged (split on `\s+` is
     * insensitive to run lengths).
     */
@@ -80,9 +80,10 @@ object Dedup {
 
   // ---------------------------------------------------------------- minhash
 
-  /** h60 shingle hashes (engine-portable md5-derived lanes, one native pass —
-    * [[graft.functions.Md5ShingleH60]]); the DuckDB oracle reproduces every
-    * value from `md5(shingle)`, so the whole LSH chain is hash-checkable.
+  /** h60 shingle hashes (engine-portable md5-derived lanes, one codegen'd
+    * kernel pass — [[graft.functions.Md5ShingleH60]]); the DuckDB oracle
+    * reproduces every value from `md5(shingle)`, so the whole LSH chain is
+    * hash-checkable.
     */
   def shingleHashes(text: Column, n: Int = 3): Column =
     graft.functions.Md5ShingleH60.md5ShingleH60(normalized(text), n)
@@ -182,8 +183,8 @@ object Dedup {
   // ---------------------------------------------------------------- simhash
 
   /** 60-bit SimHash from word tokens (Charikar 2002 lineage, public): token
-    * h60 hashes, then the native [[graft.functions.PortableSimHash60]]
-    * expression — one pass, engine-portable (the oracle rebuilds every bit
+    * h60 hashes, then the [[graft.functions.PortableSimHash60]] kernel —
+    * one codegen'd pass, engine-portable (the oracle rebuilds every bit
     * from md5). Cost O(60·tokens), bounded by the `maxTokens` prefix.
     */
   def simhash(text: Column, maxTokens: Int = 128): Column =
@@ -374,9 +375,10 @@ object Dedup {
   // ----------------------------------------------------- embedding near-dup
 
   /** Embedding-cosine near-duplicates above a threshold, LSH-bucketed by
-    * random-hyperplane sign bits (native
-    * [[graft.functions.PortableHyperplaneBucket]]: Rademacher ±1 components
-    * from md5 parity — deterministic AND reproducible in the SQL oracle).
+    * random-hyperplane sign bits (the
+    * [[graft.functions.PortableHyperplaneBucket]] kernel: Rademacher ±1
+    * components from md5 parity — deterministic AND reproducible in the SQL
+    * oracle).
     * Vectors sharing a sign-bucket are candidates ([[bucketPairs]], the
     * vectors riding along); cosine verifies. `planes` controls the
     * recall/cost trade.

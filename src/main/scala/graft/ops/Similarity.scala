@@ -1,11 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.{CosineSim, Kernel}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 /** Approximate-nearest-neighbor search over an embedding column
-  * (`array<float>`), Spark-native. The dot product is a fused native
-  * Catalyst expression ([[graft.functions.CosineSim]]); the per-query top-k
+  * (`array<float>`), Spark-native. The dot product is one fused codegen'd
+  * kernel call ([[cosine]]); the per-query top-k
   * is a bounded [[graft.functions.TopKByScore]] aggregate (map-side partial
   * top-k, k rows per partition through the shuffle) — NOT a
   * `row_number().over(window)` that would sort the full candidate set
@@ -13,15 +15,17 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Cosine similarity between two float/double arrays, computed in double —
-    * a native fused-loop Catalyst expression with codegen, rounded to 6
-    * decimals (oracle-aligned). The pure-HOF formulation
-    * (`aggregate(zip_with(...))` for dot plus two norm passes) walks the
-    * arrays three times through interpreted lambda eval; the native loop is
-    * ~10× faster per pair.
+  /** Cosine similarity between two `array<float>` vectors, computed in
+    * double and rounded to 6 decimals (oracle-aligned): one codegen'd call
+    * to the fused [[CosineSim]] loop. The pure-HOF
+    * formulation (`aggregate(zip_with(...))` for dot plus two norm passes)
+    * walks the arrays three times through interpreted lambda eval; the
+    * fused loop is ~10× faster per pair. A null vector gives null; an
+    * `array<double>` argument fails analysis.
     */
   def cosine(a: Column, b: Column): Column =
-    graft.functions.CosineSim.cosineSim(a, b)
+    Kernel(CosineSim, DoubleType, Seq(Kernel.FloatVector, Kernel.FloatVector),
+      GraftBridge.expression(a), GraftBridge.expression(b))
 
   /** (query_id, rank, corpus_id, cosine) from scored pairs via the bounded
     * top-k aggregate: one partial-agg shuffle, no window sort.
@@ -80,10 +84,10 @@ object Similarity {
       .orderBy(col("h")).limit(nCells)
       .select(col("corpus_vec")).collect()
       .toSeq.map(_.getSeq[Float](0))
-    // nearest-centroid as ONE fused native expression (codegen'd loop over
-    // the inlined centroid matrix — the HOF-fold formulation pays interpreted
-    // lambda eval per row×centroid): strict > keeps the first (lowest
-    // cell_id) maximum, the same tie-break as (sim DESC, cell_id ASC)
+    // nearest-centroid as ONE codegen'd kernel call (a loop over the
+    // centroid rows — the HOF-fold formulation pays interpreted lambda eval
+    // per row×centroid): strict > keeps the first (lowest cell_id) maximum,
+    // the same tie-break as (sim DESC, cell_id ASC)
     val assigned = c.withColumn("cell_id",
       graft.functions.NearestCentroid.nearestCentroid(col("corpus_vec"), centroids))
     IvfIndex(assigned.repartition(col("cell_id")), centroids)

@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
 /** The full north-rule orchestration as one callable: snapshot-aware resume →
-  * doc_id hash repartition → extract → commit docs and per-partition lineage
-  * rows under the SAME snapshot id → idempotent on rerun.
+  * doc_id hash repartition into 2 × `defaultParallelism` tasks → extract →
+  * commit docs and per-partition lineage rows under the SAME snapshot id →
+  * idempotent on rerun.
   *
   * The extract output streams STRAIGHT INTO the parquet write — no
   * corpus-sized `.cache()` and no extra count actions (round-1 scale
@@ -49,11 +50,7 @@ object Runner {
       failures: Long,
       skippedAlreadyDone: Long)
 
-  def run(
-      input: Dataset[RawDoc],
-      outTableDir: String,
-      metricsTableDir: String,
-      repartitionTo: Int = 0): RunResult = {
+  def run(input: Dataset[RawDoc], outTableDir: String, metricsTableDir: String): RunResult = {
     val spark = input.sparkSession
     import spark.implicits._
 
@@ -69,12 +66,12 @@ object Runner {
     val seen = Observation()
     val pending = processed.fold(input)(ids =>
       Resume.filterProcessed(input.observe(seen, count(lit(1)).as("rows")).toDF(), ids).as[RawDoc])
-    // 2-3. extract with an explicit pre-stage doc_id hash repartition,
-    // streaming straight into the staged parquet write; lineage tallied
-    // in-flight under the snapshot id the write will commit as
-    val par = if (repartitionTo > 0) repartitionTo
-      else spark.sparkContext.defaultParallelism * 2
-    val out = Pipeline.extract(pending, repartitionTo = par)
+    // 2-3. extract with an explicit pre-stage doc_id hash repartition into
+    // 2 × defaultParallelism tasks, streaming straight into the staged
+    // parquet write; lineage tallied in-flight under the snapshot id the
+    // write will commit as
+    val out = Pipeline.extract(pending,
+      repartitionTo = spark.sparkContext.defaultParallelism * 2)
 
     val staged = TableIO.stage(outTableDir)
     val snapshotId = staged.id

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.model.RawDoc
 import graft.pipeline.Pipeline
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -16,24 +16,11 @@ import org.apache.spark.sql.types.StructType
   */
 object DocStream {
 
-  /** Full extraction stream INCLUDING the failure column — the streaming
-    * lineage channel (batch analog: the Runner's per-partition failure
-    * tally). Split it with `filter($"failure" === "")` for docs and
-    * `=!= ""` for the error sink; [[extractStream]] is the docs-only
-    * convenience.
-    */
-  def extractOutStream(spark: SparkSession, dir: String, schema: StructType): DataFrame = {
-    import spark.implicits._
-    spark.readStream.schema(schema).parquet(dir).as[RawDoc]
-      .map(Pipeline.extractOne).toDF()
-  }
-
   /** Streaming extraction: readStream over RawDoc parquet → extractOne →
-    * docs DataFrame (append mode, no state). Failed docs are dropped here —
-    * route [[extractOutStream]]'s failure rows to an error sink when the
-    * deployment needs them. A cluster deployment points this at the table's
-    * data directory and writes with exactly-once file sink semantics;
-    * extraction parallelism = source file splits.
+    * docs DataFrame (append mode, no state). Failed docs are dropped. A
+    * cluster deployment points this at the table's data directory and
+    * writes with exactly-once file sink semantics; extraction parallelism =
+    * source file splits.
     */
   def extractStream(spark: SparkSession, dir: String, schema: StructType): DataFrame = {
     import spark.implicits._

@@ -85,45 +85,12 @@ class DocOpsSpec extends AnyFunSuite {
       "only_ours" -> false, "only_golden" -> false))
   }
 
-  test("pageMetadata derives page count and dims from elements") {
-    val meta = PdfLayout.pageMetadata(Seq(
-      PdfElement(1, 0, 0, 100, 50, "text", "a"),
-      PdfElement(1, 50, 100, 100, 50, "text", "b"),
-      PdfElement(2, 0, 0, 200, 300, "text", "c")))
-    assert(meta.page_count == 2)
-    assert(!meta.is_encrypted)
-    assert(meta.page_dimensions == Seq(
-      PdfLayout.PageDims(1, 150.0, 150.0), PdfLayout.PageDims(2, 200.0, 300.0)))
-    assert(meta.title == "" && meta.author == "")
-  }
-
-  test("pageMetadata title = first-page leading heading (get_pdf_info analog)") {
-    val meta = PdfLayout.pageMetadata(Seq(
-      PdfElement(2, 0, 0, 100, 20, "text", "# Wrong: later page"),
-      PdfElement(1, 0, 40, 100, 20, "text", "# The Real Title"),
-      PdfElement(1, 0, 10, 100, 20, "text", "plain preamble text")))
-    assert(meta.title == "The Real Title")
-    // a heading deep in the doc is NOT a title when page 1 has none
-    val noTitle = PdfLayout.pageMetadata(Seq(
-      PdfElement(1, 0, 0, 100, 20, "text", "page one plain text"),
-      PdfElement(3, 0, 0, 100, 20, "text", "# Chapter 3")))
-    assert(noTitle.title == "")
-  }
-
-  test("pageMetadata info-dictionary rows: title wins over heading, author surfaces, content unaffected") {
-    val elems = Seq(
+  test("layout: info-dictionary rows add no page and leak no text") {
+    val laid = PdfLayout.layout(Seq(
       PdfElement(0, 0, 0, 0, 0, "info_title", "Dict Title"),
       PdfElement(0, 0, 0, 0, 0, "info_author", "Ada Lovelace"),
       PdfElement(1, 0, 0, 100, 20, "text", "# Heading Title"),
-      PdfElement(1, 0, 40, 100, 20, "text", "body"))
-    val meta = PdfLayout.pageMetadata(elems)
-    // metadata.title or "" (pdf_utils.py:236-239): the dictionary wins
-    assert(meta.title == "Dict Title" && meta.author == "Ada Lovelace")
-    // info rows never count as a page or distort dims
-    assert(meta.page_count == 1)
-    assert(meta.page_dimensions == Seq(PdfLayout.PageDims(1, 100.0, 60.0)))
-    // and never leak into the span stream
-    val laid = PdfLayout.layout(elems)
+      PdfElement(1, 0, 40, 100, 20, "text", "body")))
     assert(!laid.spans.exists(_.text.contains("Ada")))
     assert(laid.spans.map(_.kind) == Seq("page_break", "text", "text"))
   }

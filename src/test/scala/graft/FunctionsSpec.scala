@@ -31,6 +31,20 @@ class FunctionsSpec extends AnyFunSuite {
     assert(got(1) == 0.0) // zero-norm guard
   }
 
+  test("vector kernels take array<float> only: array<double> fails analysis, null gives null") {
+    import spark.implicits._
+    val df = Seq((Seq(1.0, 2.0), Option(Seq(1.0f, 2.0f))), (Seq(3.0), None)).toDF("d", "f")
+    val bucket = graft.functions.PortableHyperplaneBucket.portableHyperplaneBucket _
+    intercept[org.apache.spark.sql.AnalysisException](
+      df.select(Similarity.cosine(col("d"), col("f"))))
+    intercept[org.apache.spark.sql.AnalysisException](
+      df.select(Similarity.cosine(col("f"), col("d"))))
+    intercept[org.apache.spark.sql.AnalysisException](df.select(bucket(col("d"), 4)))
+    val rows = df.select(Similarity.cosine(col("f"), col("f")), bucket(col("f"), 4)).collect()
+    assert(rows(0).getDouble(0) == 1.0 && !rows(0).isNullAt(1))
+    assert(rows(1).isNullAt(0) && rows(1).isNullAt(1))
+  }
+
   test("simhash: identical text → identical hash; small edit → small hamming") {
     import spark.implicits._
     val base = "the quick brown fox jumps over the lazy dog again and again " * 4

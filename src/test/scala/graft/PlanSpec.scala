@@ -2,7 +2,8 @@ package graft
 
 import graft.ops.{Dedup, Similarity}
 import graft.pipeline.{Pipeline, SpanOps}
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.execution.{FileSourceScanExec, InputAdapter, QueryExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -125,10 +126,61 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // a scan lists its data filters for pruning only; the Filter above it
     // evaluates them
     val shingling = executed.map(p => collect(p) { case n if !n.isInstanceOf[FileSourceScanExec] =>
-      n.expressions.map(_.collect { case e: graft.functions.Md5ShingleH60 => e }.size).sum
+      n.expressions.map(_.collect {
+        case e: StaticInvoke if e.staticObject == graft.functions.Md5ShingleH60.getClass => e
+      }.size).sum
     }.sum).sum
     val scans = executed.map(p => collect(p) { case s: FileSourceScanExec => s }.size).sum
     assert((shingling, scans) == (1, 1), executed.mkString("\n"))
+  }
+
+  /** The graft kernels an executed plan calls, split into those inside a
+    * whole-stage codegen stage and those outside every stage (a scan lists
+    * its data filters for pruning only, so scans are skipped).
+    */
+  private def kernelCalls(executed: SparkPlan): (Seq[Class[_]], Seq[Class[_]]) = {
+    def kernels(n: SparkPlan) = n.expressions.flatMap(_.collect {
+      case e: StaticInvoke if e.staticObject.getName.startsWith("graft.functions.") => e.staticObject
+    })
+    def stage(n: SparkPlan): Seq[SparkPlan] =
+      n +: (if (n.isInstanceOf[InputAdapter]) Nil else n.children.flatMap(stage))
+    val inCodegen = collect(executed) { case w: WholeStageCodegenExec => stage(w.child).flatMap(kernels) }
+      .flatten
+    val all = collect(executed) { case n if !n.isInstanceOf[FileSourceScanExec] => kernels(n) }
+      .flatten
+    (inCodegen, all.diff(inCodegen))
+  }
+
+  test("dedup and ANN kernels are StaticInvoke calls inside whole-stage codegen") {
+    import graft.functions._
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("kernel-codegen").toString + "/docs"
+    (0L until 40L).map(i => (i, s"words ${i % 7} and more words ${i % 3} here",
+      Array.tabulate(8)(d => math.cos(i * 1.7 + d).toFloat).toSeq))
+      .toDF("vec_id", "text", "embedding").write.parquet(dir)
+    val df = spark.read.parquet(dir)
+    val direct = df.select(Dedup.minhashSignature(col("text")), Dedup.simhash(col("text")),
+      PortableHyperplaneBucket.portableHyperplaneBucket(col("embedding"), 4),
+      Similarity.cosine(col("embedding"), col("embedding")),
+      NearestCentroid.nearestCentroid(col("embedding"), Seq(Seq.fill(8)(1f), Seq.fill(8)(-1f))))
+    direct.collect()
+    val (inCodegen, outside) = kernelCalls(direct.queryExecution.executedPlan)
+    assert(inCodegen.toSet == Set(Md5ShingleH60, PortableMinHashSig, PortableSimHash60,
+      PortableHyperplaneBucket, CosineSim, NearestCentroid).map(_.getClass), inCodegen)
+    assert(outside.isEmpty, outside)
+    // the generated code calls each kernel directly
+    val code = org.apache.spark.sql.execution.debug.codegenStringSeq(
+      direct.queryExecution.executedPlan).map(_._2).mkString
+    for (k <- Seq("Md5ShingleH60", "PortableMinHashSig", "PortableSimHash60",
+        "PortableHyperplaneBucket", "CosineSim", "NearestCentroid"))
+      assert(code.contains(s"graft.functions.$k.compute("), k)
+    // the production operators keep every kernel call inside a stage
+    for (op <- Seq(Dedup.embeddingNearDups(df, threshold = 0.5, planes = 2),
+        Similarity.ivfTopK(df, df.filter(col("vec_id") < 3), k = 3, nCells = 4, nProbe = 2))) {
+      op.collect()
+      val (in, out) = kernelCalls(op.queryExecution.executedPlan)
+      assert(in.nonEmpty && out.isEmpty, op.queryExecution.executedPlan)
+    }
   }
 
   test("calibration-slice predicate is pushed into the parquet scan") {

@@ -204,7 +204,7 @@ object PortableProps extends org.scalacheck.Properties("Portable") {
       Gen.oneOf("alpha", "beta", "gamma", "x1", "77"))), Gen.chooseNum(1, 3)) { (words, n) =>
       val text = words.mkString(" ")
       val got = graft.functions.Md5ShingleH60.compute(
-        org.apache.spark.unsafe.types.UTF8String.fromString(text), n, 0).toSeq
+        org.apache.spark.unsafe.types.UTF8String.fromString(text), n, 0).toLongArray.toSeq
       val expect = words.sliding(n).filter(_.size == n)
         .map(w => graft.functions.PortableHash.h60(w.mkString(" "))).toSeq
       got == (if (words.size < n) Nil else expect)

@@ -49,7 +49,7 @@ class Regression2Spec extends AnyFunSuite {
   }
 
   test("Md5ShingleH60 tokenizer agrees with Java \\s on vertical-tab and form-feed") {
-    def toks(s: String) = graft.functions.Md5ShingleH60.compute(UTF8String.fromString(s), 1, 0).toSeq
+    def toks(s: String) = graft.functions.Md5ShingleH60.compute(UTF8String.fromString(s), 1, 0).toLongArray.toSeq
     assert(toks("ab\fc") == toks("a b c"))
     assert(toks("ab\fc").length == 3)
   }
@@ -157,12 +157,12 @@ class Regression2Spec extends AnyFunSuite {
     assert(PortableHash.hyperplaneComponent(0, 0) == 1.0)  // even parity → +1
     assert(PortableHash.hyperplaneComponent(1, 3) == -1.0) // odd parity → -1
     // the one-pass shingle tokenizer hashes the ' '-joined word windows
-    val hs = Md5ShingleH60.compute(UTF8String.fromString("the  quick\tbrown fox"), 3, 0).toSeq
+    val hs = Md5ShingleH60.compute(UTF8String.fromString("the  quick\tbrown fox"), 3, 0).toLongArray.toSeq
     assert(hs == Seq(PortableHash.h60("the quick brown"), PortableHash.h60("quick brown fox")))
     // maxTokens prefix
-    assert(Md5ShingleH60.compute(UTF8String.fromString("a b c d"), 1, 2).toSeq ==
+    assert(Md5ShingleH60.compute(UTF8String.fromString("a b c d"), 1, 2).toLongArray.toSeq ==
       Seq(PortableHash.h60("a"), PortableHash.h60("b")))
-    assert(Md5ShingleH60.compute(UTF8String.fromString(""), 1, 0).isEmpty)
+    assert(Md5ShingleH60.compute(UTF8String.fromString(""), 1, 0).toLongArray.isEmpty)
   }
 
   test("MIME table matches the reference's full EXT_TO_MIME_TYPE (mime_types.py:124-167)") {

@@ -71,12 +71,12 @@ class DocStreamSpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 }
 
-/** Review follow-ups: failure channel + the watermarked dedup branch. */
+/** Streaming extraction's failure drop and the watermarked dedup branch. */
 class DocStream2Spec extends org.scalatest.funsuite.AnyFunSuite {
 
   lazy val spark = graft.pipeline.Pipeline.session("local[4]", 4, "graft-test")
 
-  test("extractOutStream surfaces failed docs; extractStream drops them") {
+  test("extractStream drops failed docs") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("docstream2").toString + "/raw"
     val ok = (0L until 10L).map(i => graft.io.SyntheticDocs.generate(seed = 42, i).raw)
@@ -84,14 +84,7 @@ class DocStream2Spec extends org.scalatest.funsuite.AnyFunSuite {
     spark.createDataset(ok :+ bad).write.parquet(dir)
     val schema = spark.read.parquet(dir).schema
     graft.streaming.EventStream.runOnce(
-      graft.streaming.DocStream.extractOutStream(spark, dir, schema), "extract_all")
-    graft.streaming.EventStream.runOnce(
       graft.streaming.DocStream.extractStream(spark, dir, schema), "extract_docs")
-    val failures = spark.sql(
-      "SELECT doc_id, failure FROM extract_all WHERE failure <> ''").collect()
-    assert(failures.map(_.getString(0)).toSeq == Seq("doc-bad"))
-    assert(failures.head.getString(1).contains("unknown dialect"))
-    assert(spark.sql("SELECT count(*) FROM extract_all").head().getLong(0) == 11)
     assert(spark.sql("SELECT count(*) FROM extract_docs").head().getLong(0) == 10)
   }
 
