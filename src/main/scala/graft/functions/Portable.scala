@@ -13,8 +13,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * a null argument gives a null result, and an argument whose type is not
   * its `inputTypes` entry (up to nullability) fails analysis — it is never
   * cast, so an `array<double>` vector is rejected, not narrowed. Each
-  * kernel below is a plain `compute` on an object that returns Catalyst
-  * values; this is its only Catalyst wiring.
+  * kernel (below and `CosineSim`) is a plain `compute` on an object that
+  * returns Catalyst values; this is its only Catalyst wiring.
   */
 private[graft] object Kernel {
   val FloatVector: DataType = ArrayType(FloatType)
