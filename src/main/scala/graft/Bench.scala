@@ -3,24 +3,37 @@ package graft
 import graft.io.SyntheticDocs
 import graft.model.RawDoc
 import graft.pipeline.{Pipeline, SpanOps}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
+import scala.util.control.NonFatal
 
-/** Benchmark main. Prints ONE JSON line:
-  * {"metric":"total","value":<sec>,"unit":"sec","queries":{...},"sf":...,
-  *  "docs_per_sec":...,"scaling":{...}}
+/** Benchmark main. With no arguments it prints ONE JSON line:
+  * {"metric":"total","value":<sec>,"unit":"sec","queries":{...},"failed":[...],
+  *  "sf":...,"docs":...,"extract_sec":...,"docs_per_sec":...,
+  *  "docs_per_sec_best_across_sessions":...,"spread":{...},"scaling":{...}}
   *
-  * Headline metric: end-to-end docs/sec for extract + span-assemble reading
-  * the synthetic interleaved corpus from parquet (the Iceberg-shaped input
-  * path; generation is test scaffolding and is excluded from the timed
-  * window by materializing the corpus once).
+  * Every timed body ends in [[sink]], which reads every output column, and
+  * runs once to warm up, then [[Repeats]] times. A key is the median of
+  * those runs; `spread` holds its q1 and q3.
+  *
+  * Headline metric: end-to-end docs/sec for extract + span-assemble
+  * ([[headline]]) reading the synthetic interleaved corpus from parquet
+  * (the Iceberg-shaped input path; generation is test scaffolding and is
+  * excluded from the timed window by materializing the corpus once).
   *
   * Scaling evidence (north rule: ≥0.8 efficiency N → 4N executors): the
-  * identical job at local[8] and local[32], interleaved A/B with best-of-2
-  * per level — this box is a shared VM, so single wall-clock samples swing
-  * 2-3×; best-of approximates the unloaded machine. Set
-  * SPARK_GRAFT_SCALING=0 to skip.
+  * headline job at the core pair that [[scalingPair]] derives from the
+  * host's cores, run interleaved N, 4N, N, 4N; each level's docs/sec comes
+  * from the median of its runs. Set SPARK_GRAFT_SCALING=0 to skip it.
+  *
+  * `Bench query <name>` times one `SparkEntry` query the same way and
+  * prints its runs; `Bench explain <name>...` prints each query's
+  * formatted plan.
   */
 object Bench {
+
+  /** Timed runs per body, after one warm-up run. */
+  private val Repeats = 5
 
   /** Interleaved scaling sessions start/stop repeatedly; the RPC loops of
     * a STOPPING context log benign teardown races at ERROR (observed:
@@ -58,7 +71,7 @@ object Bench {
     * The version suffix invalidates the cache whenever the generator's
     * output changes (v2: md_docling dialect; v3: RawDoc.source_path column).
     */
-  private def corpusPath(nDocs: Long): String = {
+  private def corpusPath(spark: SparkSession, nDocs: Long): String = {
     val tmp = sys.props("java.io.tmpdir")
     val prefix = "graft_bench_corpus_"
     val version = "v3_" // v3: RawDoc gained the source_path provenance column
@@ -73,102 +86,122 @@ object Bench {
         .filter(f => f.getName.startsWith(prefix) &&
           !f.getName.startsWith(prefix + version) && f.lastModified() < cutoff)
         .foreach(graft.io.TableIO.deleteRecursively)
-      val s = mkSession(32)
-      import s.implicits._
-      s.range(nDocs).map(i => SyntheticDocs.generate(SyntheticDocs.CorpusSeed, i).raw)
+      import spark.implicits._
+      spark.range(nDocs).map(i => SyntheticDocs.generate(SyntheticDocs.CorpusSeed, i).raw)
         .write.mode("overwrite").parquet(path)
-      s.stop()
     }
     path
   }
 
-  /** One extract+assemble pass from parquet; returns (docs, seconds). */
-  private def runJob(spark: SparkSession, path: String): (Long, Double) = {
-    import spark.implicits._
-    val t0 = System.nanoTime()
-    val raw = spark.read.parquet(path).as[RawDoc]
-    val docs = Pipeline.toDocsDF(Pipeline.extract(raw))
-    val n = SpanOps.assembleSkewAware(SpanOps.explodeSpans(docs)).count()
-    (n, (System.nanoTime() - t0) / 1e9)
+  /** Runs `df` to the end, reading every output column (a `count()` lets
+    * Catalyst prune every expression the count does not need).
+    */
+  private[graft] def sink(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+
+  /** The headline job: extract + explode + skew-aware assemble. */
+  private[graft] def headline(raw: Dataset[RawDoc]): DataFrame =
+    SpanOps.assembleSkewAware(SpanOps.explodeSpans(Pipeline.toDocsDF(Pipeline.extract(raw))))
+
+  /** The N → 4N core pair for a host with `cores` cores: N = cores / 4;
+    * none below 4 cores.
+    */
+  def scalingPair(cores: Int): Option[(Int, Int)] =
+    if (cores < 4) None else Some((cores / 4, cores / 4 * 4))
+
+  /** Seconds of each of [[Repeats]] runs of `body`, after one warm-up run. */
+  private def time(body: => Unit): Seq[Double] = {
+    body
+    Seq.fill(Repeats) {
+      val t0 = System.nanoTime()
+      body
+      (System.nanoTime() - t0) / 1e9
+    }
   }
 
-  /** Best docs/sec over `reps` measured runs (after one warm-up). */
-  private def bestOf(cpus: Int, path: String, reps: Int): Double = {
-    val s = mkSession(cpus)
-    runJob(s, path) // warm-up: JIT + codegen + page cache
-    val best = (1 to reps).map { _ =>
-      val (n, sec) = runJob(s, path)
-      n / sec
-    }.max
-    s.stop()
-    best
+  /** The `p`-quantile of `xs`, interpolated between the closest ranks. */
+  private def quantile(xs: Seq[Double], p: Double): Double = {
+    val s = xs.sorted
+    val i = p * (s.size - 1)
+    val lo = i.toInt
+    s(lo) + (s(math.min(lo + 1, s.size - 1)) - s(lo)) * (i - lo)
+  }
+
+  private def median(xs: Seq[Double]): Double = quantile(xs, 0.5)
+
+  private def span(xs: Seq[Double]): String = f"[${quantile(xs, 0.25)}%.3f,${quantile(xs, 0.75)}%.3f]"
+
+  /** Seconds per headline run over the corpus at `path`. */
+  private def headlineRuns(spark: SparkSession, path: String): Seq[Double] = {
+    import spark.implicits._
+    time(sink(headline(spark.read.parquet(path).as[RawDoc])))
   }
 
   def main(args: Array[String]): Unit = {
     graft.io.ExpectedTables.sweepStale() // stale per-application tmp dirs
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    val spark = mkSession(cpus)
+    args.toList match {
+      case List("query", name) =>
+        val runs = time(sink(SparkEntry.queries(name)(spark, sfDir)))
+        spark.stop()
+        println(f"""{"query":"$name","sf":"$sfDir","cpus":$cpus,"runs":${runs.map(r => f"$r%.3f").mkString("[", ",", "]")},"median":${median(runs)}%.3f,"q1":${quantile(runs, 0.25)}%.3f,"q3":${quantile(runs, 0.75)}%.3f}""")
+      case "explain" :: names =>
+        names.foreach { name =>
+          println(s"\n======================= $name =======================")
+          println(SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(FormattedMode))
+        }
+        spark.stop()
+      case Nil => suite(spark, sfDir, cpus)
+      case other =>
+        spark.stop()
+        sys.error(s"usage: Bench [query <name> | explain <name>...], got: ${other.mkString(" ")}")
+    }
+  }
+
+  /** The headline, every `SparkEntry` query and the scaling pair; prints
+    * the JSON line and stops `spark`.
+    */
+  private def suite(spark: SparkSession, sfDir: String, cpus: Int): Unit = {
     val doScaling = sys.env.getOrElse("SPARK_GRAFT_SCALING", "1") != "0"
-
-    val spark0 = mkSession(cpus)
-    val nDocs = SyntheticDocs.corpusSize(spark0.read.parquet(s"$sfDir/documents.parquet").count())
-    spark0.stop()
-
+    val nDocs = SyntheticDocs.corpusSize(spark.read.parquet(s"$sfDir/documents.parquet").count())
     // the headline uses a fixed 960k-doc corpus so docs/sec measures work,
     // not per-job overhead (at sf0.1 the sf-sized corpus is only 20k docs)
     val scaleDocs = math.max(nDocs, 960000L)
-    val scalePath = corpusPath(scaleDocs)
+    val scalePath = corpusPath(spark, scaleDocs)
 
-    val spark = mkSession(cpus)
-    val (hn, _) = runJob(spark, scalePath) // warm-up
-    // best-of-2: single wall-clock samples on this shared VM swing 2-3×
-    val hsec = Seq(runJob(spark, scalePath)._2, runJob(spark, scalePath)._2).min
-    val hdps = hn / hsec
-
-    // best-of-2 per query: a single pass on this shared VM occasionally eats
-    // a multi-second host-contention spike (observed: a 0.4 s query sampled
-    // at 37 s once); the second pass also absorbs first-touch codegen
-    def timeSuite(): Seq[(String, Double)] =
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        name -> (System.nanoTime() - t0) / 1e9
-      }
-    val pass1 = timeSuite()
-    val pass2 = timeSuite()
-    // q_ingest and q_stream_extract stage their fixture once (buildOnce), in
-    // pass 1: their keys time pass 1, staging and first-touch codegen included
-    val stagedInPass1 = Set("q_ingest", "q_stream_extract")
-    val results = pass1.zip(pass2).map { case ((n, a), (_, b)) =>
-      n -> (if (stagedInPass1(n)) a else math.min(a, b))
+    val hsecs = headlineRuns(spark, scalePath)
+    val hsec = median(hsecs)
+    val runs = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> (try Some(time(sink(fn(spark, sfDir)))) catch {
+        case NonFatal(e) =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          None
+      })
     }
     spark.stop()
+    val results = runs.collect { case (name, Some(secs)) => name -> secs }
+    val failed = runs.collect { case (name, None) => s""""$name"""" }
 
-    // best docs/sec seen at `cpus` across ALL measurement sessions this run
-    // (headline window + scaling samples); reported as a SEPARATE field so the
-    // headline's provenance stays a single measured run
-    var bestAcross = hdps
-    val scalingJson = if (doScaling) {
-      // two N→4N pairs, interleaved to decorrelate from host drift:
-      //  2→8  measures scaling below this VM's memory-bus saturation point
-      //       (the regime that transfers to one-bus-per-executor clusters)
-      //  8→32 measures it across the saturation point (single shared bus)
-      val samples = Seq(8, 32, 2, 8, 32, 2).map(c => c -> bestOf(c, scalePath, 2))
-      def best(c: Int) = samples.collect { case (`c`, v) => v }.max
-      val (d2, d8, d32) = (best(2), best(8), best(32))
-      val eff28 = d8 / (4.0 * d2)
-      val eff832 = d32 / (4.0 * d8)
-      // the scaling sessions re-run the same job at `cpus`: track the best
-      // across sessions without overwriting the measured headline
-      if (cpus == 32) bestAcross = math.max(bestAcross, d32)
-      else if (cpus == 8) bestAcross = math.max(bestAcross, d8)
-      else if (cpus == 2) bestAcross = math.max(bestAcross, d2)
-      f"""{"docs":$scaleDocs,"pairs":[{"n_cpus":2,"n4_cpus":8,"docs_per_sec_n":$d2%.1f,"docs_per_sec_4n":$d8%.1f,"efficiency":$eff28%.3f},{"n_cpus":8,"n4_cpus":32,"docs_per_sec_n":$d8%.1f,"docs_per_sec_4n":$d32%.1f,"efficiency":$eff832%.3f}],"efficiency":$eff28%.3f}"""
-    } else "null"
+    val scalingJson = scalingPair(cpus).filter(_ => doScaling).fold("null") { case (n, n4) =>
+      // interleaved to decorrelate from host drift
+      val samples = Seq(n, n4, n, n4).map { c =>
+        val s = mkSession(c)
+        try c -> headlineRuns(s, scalePath) finally s.stop()
+      }
+      def dps(c: Int) = scaleDocs / median(samples.collect { case (`c`, secs) => secs }.flatten)
+      val (dn, d4n) = (dps(n), dps(n4))
+      val eff = d4n / (4.0 * dn)
+      f"""{"docs":$scaleDocs,"pairs":[{"n_cpus":$n,"n4_cpus":$n4,"docs_per_sec_n":$dn%.1f,"docs_per_sec_4n":$d4n%.1f,"efficiency":$eff%.3f}],"efficiency":$eff%.3f}"""
+    }
 
-    val qs = results.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
-    val total = results.map(_._2).sum + hsec
+    val qs = results.map { case (k, v) => f""""$k":${median(v)}%.3f""" }.mkString("{", ",", "}")
+    val qspread = results.map { case (k, v) => s""""$k":${span(v)}""" }.mkString("{", ",", "}")
+    val total = results.map(r => median(r._2)).sum + hsec
+    val hdps = scaleDocs / hsec
+    val dpsSpread = f"[${scaleDocs / quantile(hsecs, 0.75)}%.1f,${scaleDocs / quantile(hsecs, 0.25)}%.1f]"
     println(
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","docs":$hn,"extract_sec":$hsec%.3f,"docs_per_sec":$hdps%.1f,"docs_per_sec_best_across_sessions":$bestAcross%.1f,"scaling":$scalingJson}""")
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":${failed.mkString("[", ",", "]")},"sf":"$sfDir","docs":$scaleDocs,"extract_sec":$hsec%.3f,"docs_per_sec":$hdps%.1f,"docs_per_sec_best_across_sessions":${scaleDocs / hsecs.min}%.1f,"spread":{"extract_sec":${span(hsecs)},"docs_per_sec":$dpsSpread,"queries":$qspread},"scaling":$scalingJson}""")
   }
 }

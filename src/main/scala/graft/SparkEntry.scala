@@ -30,7 +30,7 @@ object SparkEntry {
     * first — the same treatment the pair ops have always applied (guide
     * §1.2 step 1: fix the distributed shape before the per-task work). The
     * exchange moves 8-byte ids, never payloads; `defaultParallelism` keeps
-    * it cluster-adaptive. Measured (BenchExtra, sf0.1, local[32]):
+    * it cluster-adaptive. Measured (sf0.1, local[32]):
     * q_pdf_info 2.7 s → 0.63 s, q_pdf_text 2.2 s → 0.54 s, q_xlsx 1.1 s
     * → 0.43 s — identical result sets.
     */
@@ -94,7 +94,7 @@ object SparkEntry {
   }
 
   /** One cleanup hook per staged tmp path, however many times the query
-    * runs in this JVM (Bench does best-of-2 passes over every query).
+    * runs in this JVM (Bench runs every query six times).
     */
   private val registeredCleanups = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private def registerCleanup(path: String): Unit =
@@ -1446,14 +1446,11 @@ object SparkEntry {
     }),
     "q_audio_features" -> ((s, dir) => {
       // REAL WAV round-trip: deterministic integer-PCM per doc → WAVE
-      // encode (javax.sound) → container+signal decode → features whose
-      // integer accumulators the oracle reproduces exactly (Multimodal
-      // .WavCodec scaladoc).
-      // NOT docIdsSpread: javax.sound's AudioSystem provider registry is a
-      // JVM-global synchronized lookup, so 32 concurrent tasks contend —
-      // measured 0.88 s single-task vs 1.76 s spread (BenchExtra, sf0.1)
+      // encode → container+signal decode → features whose integer
+      // accumulators the oracle reproduces exactly (Multimodal.WavCodec
+      // scaladoc).
       import s.implicits._
-      val media = tbl(s, dir, "documents").select(col("doc_id"))
+      val media = docIdsSpread(s, dir)
         .as[Long].map { id =>
           val n = (400 + (id % 10) * 40).toInt
           val samples = Array.tabulate(n)(i =>

@@ -11,7 +11,8 @@ object Verify {
     // only; the driver always passes two args and gets the full surface)
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").map(_.trim).toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     // the production session config, so the gate runs the tuned join plans
     val spark = Pipeline.session(s"local[$cpus]", cpus, "graft-verify")
     spark.sparkContext.setLogLevel("WARN")

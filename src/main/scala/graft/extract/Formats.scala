@@ -48,7 +48,7 @@ private[graft] object Formats {
 
   /** A structural markup kind: `toMarkdown` then the plain-markdown grammar. */
   private def markup(kind: String, mimes: String*)(toMarkdown: String => String): Format =
-    text(kind, mimes: _*)(r => normalized(Normalize.dialect("md_plain", toMarkdown(r.raw), r.pages)))
+    text(kind, mimes: _*)(r => textDoc(Markdown.parse(toMarkdown(r.raw)), Nil, ""))
 
   /** A provider markdown dialect (Normalize's marker rewrites). Ingestion
     * reaches these through [[graft.io.Ingest.detectDialect]], never by MIME.

@@ -374,7 +374,7 @@ object Normalize {
         // figure bytes come from the service in the reference
         // (azure_provider/provider.py:107-134); in-table payloads carry the
         // blocks inline, so synthesize one img-K.png sidecar per block
-        val nFigs = "(?s)<figure>.*?</figure>".r.findAllIn(raw).length
+        val nFigs = FigureRe.findAllIn(raw).length
         azure(raw, (0 until nFigs).map(i => NormImage(s"img-$i", s"img-$i.png", "image/png", "")))
       case "md_datalab" => datalab(raw, extractImageNames(raw))
       case "md_slides" => slides(raw)

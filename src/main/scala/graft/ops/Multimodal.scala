@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.extract.Formats
+import graft.extract.{Bin, Formats}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -411,11 +411,13 @@ object Multimodal {
       peak: Double,
       decode_error: String)
 
-  /** REAL audio parsing via the JDK's `javax.sound.sampled` (WAV/AIFF/AU,
-    * PCM): container header → format facts, PCM frames → integer-exact
-    * signal features. This retires the round-2 "audio stubbed" limitation
-    * for the formats the JDK ships parsers for (compressed codecs — MP3,
-    * AAC, Opus — remain honestly out: no codec libs in this container).
+  /** REAL audio parsing: a plain RIFF/WAVE reader for 16-bit PCM
+    * (a `fmt ` chunk with format tag 1, then a `data` chunk): container
+    * header → format facts, PCM frames → integer-exact signal features.
+    * Compressed codecs (MP3, AAC, Opus) and other containers (AIFF, AU)
+    * stay honestly out. Every chunk size is checked against the bytes
+    * present before it is read, and samples are read in place, so a
+    * hostile header never allocates.
     *
     * Features are computed from EXACT integer accumulators (sum of squared
     * samples as a Long, max |sample| as an Int) and only converted to
@@ -431,69 +433,82 @@ object Multimodal {
     def decode(bytes: Array[Byte], maxFrames: Int = 1 << 22):
         (Int, Int, Int, Int, Int, Double, Double) = {
       if (bytes == null || bytes.isEmpty) throw new IllegalArgumentException("empty payload")
-      val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      try {
-        val fmt = in.getFormat
-        if (fmt.getEncoding != javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED ||
-            fmt.getSampleSizeInBits != 16)
-          throw new IllegalArgumentException(
-            s"unsupported encoding ${fmt.getEncoding}/${fmt.getSampleSizeInBits}-bit (PCM_SIGNED 16 only)")
-        val channels = fmt.getChannels
-        val sampleRate = math.round(fmt.getSampleRate)
-        val totalFrames = in.getFrameLength.toInt
-        val frameBytes = fmt.getFrameSize
-        val scanFrames = math.min(totalFrames, maxFrames)
-        val buf = new Array[Byte](scanFrames * frameBytes)
-        var off = 0
-        while (off < buf.length) {
-          val r = in.read(buf, off, buf.length - off)
-          if (r < 0) throw new IllegalArgumentException(
-            s"truncated PCM payload at frame ${off / frameBytes}/$scanFrames")
-          off += r
-        }
-        var sumSq = 0L
-        var maxAbs = 0
-        var i = 0
-        val big = fmt.isBigEndian
-        while (i + 1 < buf.length) {
-          val s =
-            if (big) ((buf(i) << 8) | (buf(i + 1) & 0xff)).toShort.toInt
-            else ((buf(i + 1) << 8) | (buf(i) & 0xff)).toShort.toInt
-          sumSq += s.toLong * s.toLong
-          val a = math.abs(s)
-          if (a > maxAbs) maxAbs = a
-          i += 2
-        }
-        val nSamples = buf.length / 2
-        val rms =
-          if (nSamples == 0) 0.0
-          else math.rint(math.sqrt(sumSq.toDouble / (nSamples.toDouble * 1073741824.0)) * 10000) / 10000
-        val peak = math.rint(maxAbs.toDouble / 32768.0 * 10000) / 10000
-        val durationMs = math.round(totalFrames.toDouble / sampleRate * 1000).toInt
-        (sampleRate, channels, 16, totalFrames, durationMs, rms, peak)
-      } finally in.close()
+      def id(p: Int) = new String(bytes, p, 4, java.nio.charset.StandardCharsets.ISO_8859_1)
+      if (bytes.length < 12 || id(0) != "RIFF" || id(8) != "WAVE")
+        throw new IllegalArgumentException("not a RIFF/WAVE container")
+      // walk the chunks up to `data`, keeping the payload offset of `fmt `
+      var fmt = -1
+      var p = 12
+      while (p + 8 <= bytes.length && id(p) != "data") {
+        val size = Bin.u32le(bytes, p + 4)
+        if (size > bytes.length - p - 8 || (id(p) == "fmt " && size < 16))
+          throw new IllegalArgumentException(s"truncated '${id(p)}' chunk")
+        if (id(p) == "fmt ") fmt = p + 8
+        p += 8 + size.toInt + (size & 1).toInt
+      }
+      if (p + 8 > bytes.length) throw new IllegalArgumentException("no data chunk")
+      if (fmt < 0) throw new IllegalArgumentException("no fmt chunk before the data chunk")
+      val tag = Bin.u16le(bytes, fmt)
+      val bits = Bin.u16le(bytes, fmt + 14)
+      if (tag != 1 || bits != 16)
+        throw new IllegalArgumentException(
+          s"unsupported encoding ${encoding(tag, bits)}/$bits-bit (PCM_SIGNED 16 only)")
+      val channels = Bin.u16le(bytes, fmt + 2)
+      val sampleRate = Bin.u32le(bytes, fmt + 4)
+      if (channels == 0 || sampleRate == 0 || sampleRate > Int.MaxValue)
+        throw new IllegalArgumentException(s"bad fmt chunk: $channels channels at $sampleRate Hz")
+      val frameBytes = channels * 2
+      val dataSize = Bin.u32le(bytes, p + 4)
+      val totalFrames = (dataSize / frameBytes).toInt
+      val scanFrames = math.min(totalFrames, maxFrames)
+      val start = p + 8
+      val present = bytes.length - start
+      if (dataSize > present)
+        throw new IllegalArgumentException(
+          s"truncated PCM payload at frame ${present / frameBytes}/$scanFrames")
+      val end = start + scanFrames * frameBytes
+      var sumSq = 0L
+      var maxAbs = 0
+      var i = start
+      while (i < end) {
+        val s = Bin.u16le(bytes, i).toShort.toInt
+        sumSq += s.toLong * s.toLong
+        val a = math.abs(s)
+        if (a > maxAbs) maxAbs = a
+        i += 2
+      }
+      val nSamples = (end - start) / 2
+      val rms =
+        if (nSamples == 0) 0.0
+        else math.rint(math.sqrt(sumSq.toDouble / (nSamples.toDouble * 1073741824.0)) * 10000) / 10000
+      val peak = math.rint(maxAbs.toDouble / 32768.0 * 10000) / 10000
+      val durationMs = math.round(totalFrames.toDouble / sampleRate * 1000).toInt
+      (sampleRate.toInt, channels, 16, totalFrames, durationMs, rms, peak)
+    }
+
+    /** The encoding a WAVE format tag names, for the unsupported-encoding
+      * message.
+      */
+    private def encoding(tag: Int, bits: Int): String = tag match {
+      case 1 => if (bits <= 8) "PCM_UNSIGNED" else "PCM_SIGNED"
+      case 3 => "PCM_FLOAT"
+      case 6 => "ALAW"
+      case 7 => "ULAW"
+      case t => s"format tag $t"
     }
 
     /** Encode 16-bit signed PCM mono samples as a WAVE container (the
       * test-fixture inverse of [[decode]]).
       */
     def encodeWav(samples: Array[Short], sampleRate: Int): Array[Byte] = {
-      val fmt = new javax.sound.sampled.AudioFormat(
-        sampleRate.toFloat, 16, 1, /* signed = */ true, /* bigEndian = */ false)
-      val pcm = new Array[Byte](samples.length * 2)
-      var i = 0
-      while (i < samples.length) {
-        pcm(i * 2) = (samples(i) & 0xff).toByte
-        pcm(i * 2 + 1) = ((samples(i) >> 8) & 0xff).toByte
-        i += 1
-      }
-      val stream = new javax.sound.sampled.AudioInputStream(
-        new java.io.ByteArrayInputStream(pcm), fmt, samples.length.toLong)
-      val bos = new java.io.ByteArrayOutputStream(pcm.length + 64)
-      javax.sound.sampled.AudioSystem.write(stream,
-        javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-      bos.toByteArray
+      val data = samples.length * 2L
+      val out = new Bin.Sink(44 + samples.length * 2)
+        .ascii("RIFF").u32le(36 + data).ascii("WAVE")
+        .ascii("fmt ").u32le(16).u16le(1).u16le(1).u32le(sampleRate).u32le(sampleRate * 2L)
+        .u16le(2).u16le(16)
+        .ascii("data").u32le(data)
+      samples.foreach(s => out.u16le(s))
+      out.toArray
     }
   }
 

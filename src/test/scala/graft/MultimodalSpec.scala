@@ -1,5 +1,6 @@
 package graft
 
+import graft.extract.Bin
 import graft.ops.Multimodal
 import graft.pipeline.Pipeline
 import org.scalatest.funsuite.AnyFunSuite
@@ -191,6 +192,54 @@ class MultimodalSpec extends AnyFunSuite {
     val feats = Multimodal.extractAudioFeatures(rows).collect().map(f => f.doc_id -> f).toMap
     assert(feats("d1").decode_error == "" && feats("d1").rms == 0.5)
     assert(feats("d2").decode_error.nonEmpty && feats("d2").sample_rate == 0)
+  }
+
+  test("WavCodec agrees with javax.sound both ways on seeded PCM") {
+    import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
+    for ((seed, n, rate) <- Seq((1, 0, 8000), (2, 1, 8000), (3, 401, 8000), (4, 1000, 44100), (5, 4096, 22050))) {
+      val rnd = new scala.util.Random(seed)
+      val samples = Array.tabulate(n)(i =>
+        if (i == 0) Short.MinValue else if (i == 1) Short.MaxValue else (rnd.nextInt(65536) - 32768).toShort)
+      val pcm = samples.flatMap(s => Array((s & 0xff).toByte, ((s >> 8) & 0xff).toByte))
+      val bos = new java.io.ByteArrayOutputStream()
+      AudioSystem.write(new AudioInputStream(new java.io.ByteArrayInputStream(pcm),
+        new AudioFormat(rate.toFloat, 16, 1, true, false), n.toLong), AudioFileFormat.Type.WAVE, bos)
+      val ours = Multimodal.WavCodec.encodeWav(samples, rate)
+      assert(Multimodal.WavCodec.decode(bos.toByteArray) == Multimodal.WavCodec.decode(ours), s"seed $seed")
+      val back = AudioSystem.getAudioInputStream(new java.io.ByteArrayInputStream(ours))
+      try {
+        val f = back.getFormat
+        assert((f.getEncoding, f.getSampleRate, f.getSampleSizeInBits, f.getChannels, f.isBigEndian) ==
+          ((AudioFormat.Encoding.PCM_SIGNED, rate.toFloat, 16, 1, false)), s"seed $seed")
+        assert(back.getFrameLength == n && back.readAllBytes().sameElements(pcm), s"seed $seed")
+      } finally back.close()
+    }
+  }
+
+  test("WavCodec: hostile WAVE headers become decode_error rows") {
+    val spark0 = spark
+    import spark0.implicits._
+    val wav = Multimodal.WavCodec.encodeWav(Array.tabulate(40)(i => (i * 500).toShort), 8000)
+    def patched(at: Int, bytes: Int*): Array[Byte] = {
+      val b = wav.clone()
+      bytes.zipWithIndex.foreach { case (v, i) => b(at + i) = v.toByte }
+      b
+    }
+    val noFmt = Bin.cat("RIFF".getBytes("US-ASCII"), Array[Byte](20, 0, 0, 0),
+      "WAVEdata".getBytes("US-ASCII"), Array[Byte](8, 0, 0, 0), new Array[Byte](8))
+    val cases = Seq(
+      "huge" -> (patched(40, 0xff, 0xff, 0xff, 0x7f), "truncated PCM payload at frame 40/4194304"),
+      "nofmt" -> (noFmt, "no fmt chunk before the data chunk"),
+      "float" -> (patched(20, 3, 0), "unsupported encoding PCM_FLOAT/16-bit (PCM_SIGNED 16 only)"),
+      "8bit" -> (patched(32, 1, 0, 8, 0), "unsupported encoding PCM_UNSIGNED/8-bit (PCM_SIGNED 16 only)"))
+    val rows = spark.createDataset(cases.map { case (id, (bytes, _)) =>
+      Multimodal.MediaRow(id, "a.wav", "audio/x-wav", bytes)
+    })
+    val out = Multimodal.extractAudioFeatures(rows).collect().map(f => f.doc_id -> f).toMap
+    for ((id, (_, msg)) <- cases) {
+      assert(out(id).decode_error == s"IllegalArgumentException: $msg")
+      assert(out(id).sample_rate == 0 && out(id).n_frames == 0, id)
+    }
   }
 }
 

@@ -3,7 +3,9 @@ package graft
 import graft.ops.{Dedup, Similarity}
 import graft.pipeline.{Pipeline, SpanOps}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-import org.apache.spark.sql.execution.{FileSourceScanExec, InputAdapter, QueryExecution, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, InputAdapter, QueryExecution, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -12,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Plan-shape regression tests locking the scale claims: the ops that were
   * rewritten away from window sorts must never silently regrow a Window
   * exchange, and pushable predicates must reach the scan. (Plan drift is a
-  * regression class — see graft.Plans for the human-audit dump.)
+  * regression class — `Bench explain <query>` prints the human-audit dump.)
   */
 class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
@@ -101,14 +103,8 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("minhashPairs shingles each doc once and scans its input once") {
-    // every plan one call executes (with AQE stages and reused exchanges
-    // walked once each): the shingle hash expression and the parquet scan
-    // each appear exactly once across them
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("minhash-plan").toString + "/docs"
-    (0L until 50L).map(i => (i, s"some words ${i % 10} repeated here again and again ${i % 3}"))
-      .toDF("doc_id", "text").write.parquet(dir)
+  /** Every plan `body` executes, as a query-execution listener sees them. */
+  private def executedPlans(body: => Unit): Seq[SparkPlan] = {
     val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
     val listener = new QueryExecutionListener {
@@ -118,10 +114,46 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     org.apache.spark.TestBus.drain(spark.sparkContext)
     session.listenerManager.register(listener)
     try {
-      Dedup.minhashPairs(spark.read.parquet(dir), threshold = 0.5).collect()
+      body
       org.apache.spark.TestBus.drain(spark.sparkContext)
     } finally session.listenerManager.unregister(listener)
-    val executed = plans.toArray(Array.empty[SparkPlan]).toSeq
+    plans.toArray(Array.empty[SparkPlan]).toSeq
+  }
+
+  test("Bench.sink runs the operator each query is named for; count() prunes the aggregate") {
+    import spark.implicits._
+    val dir = "/root/testdata/sf0.001"
+    def nodes(plans: Seq[SparkPlan]): Seq[SparkPlan] = plans.flatMap(p => collect(p) { case n => n })
+    def assembles(plans: Seq[SparkPlan]): Boolean = nodes(plans).exists(_.expressions.exists(
+      _.exists(_.isInstanceOf[graft.functions.SortedStructCollect])))
+    def sunk(name: String): Seq[SparkPlan] = executedPlans(Bench.sink(SparkEntry.queries(name)(spark, dir)))
+
+    val raw = spark.createDataset((0L until 50L).map(i => graft.io.SyntheticDocs.generate(42, i).raw))
+    val headline = executedPlans(Bench.sink(Bench.headline(raw)))
+    assert(assembles(headline), headline.mkString("\n"))
+    val assemble = sunk("pipeline_assemble")
+    assert(assembles(assemble), assemble.mkString("\n"))
+    for (name <- Seq("pipeline_renumber", "q_events_window")) {
+      val p = sunk(name)
+      assert(nodes(p).exists(_.isInstanceOf[WindowExec]), s"$name: ${p.mkString("\n")}")
+    }
+    val dup = nodes(sunk("q_dupwindows"))
+    assert(dup.exists(_.isInstanceOf[BaseJoinExec]) && dup.exists(_.isInstanceOf[GenerateExec]),
+      dup.mkString("\n"))
+    // the control: the same query under count() never runs the aggregate
+    val counted = executedPlans(SparkEntry.queries("pipeline_assemble")(spark, dir).count())
+    assert(counted.nonEmpty && !assembles(counted), counted.mkString("\n"))
+  }
+
+  test("minhashPairs shingles each doc once and scans its input once") {
+    // every plan one call executes (with AQE stages and reused exchanges
+    // walked once each): the shingle hash expression and the parquet scan
+    // each appear exactly once across them
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("minhash-plan").toString + "/docs"
+    (0L until 50L).map(i => (i, s"some words ${i % 10} repeated here again and again ${i % 3}"))
+      .toDF("doc_id", "text").write.parquet(dir)
+    val executed = executedPlans(Dedup.minhashPairs(spark.read.parquet(dir), threshold = 0.5).collect())
     assert(executed.nonEmpty)
     // a scan lists its data filters for pruning only; the Filter above it
     // evaluates them

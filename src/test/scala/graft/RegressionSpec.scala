@@ -195,4 +195,11 @@ class RegressionSpec extends AnyFunSuite {
       java.nio.file.Paths.get("src/main/scala/graft/Bench.scala")))
     assert(src.contains("\"docs\":$scaleDocs"))
   }
+
+  test("Bench.scalingPair: N = cores / 4 and 4N = 4 × N; none below 4 cores") {
+    assert(Bench.scalingPair(2).isEmpty)
+    assert(Bench.scalingPair(4).contains((1, 4)))
+    assert(Bench.scalingPair(8).contains((2, 8)))
+    assert(Bench.scalingPair(32).contains((8, 32)))
+  }
 }
